@@ -612,20 +612,17 @@ object Ann {
   }
 
   /** Repair interrupted-vacuum residue (r19, ADVICE r18): a crash in
-   * [[vacuumIvfIndex]]'s two-rename window (cell → bak, then
-   * tmp → cell) leaves `cell=N` missing — and partition discovery
-   * would silently SKIP the missing cell while a rerun's sidecar
-   * drop made the loss permanent. Every residue state restores
-   * deterministically, because tmp is always COMPLETE once the bak
-   * rename has happened (the scrub write finishes before any
-   * rename): cell present → the swap finished or never started, drop
-   * leftovers; cell absent + tmp + bak → finish the swap (tmp wins —
-   * it is the scrubbed cell); cell absent + bak only → undo (the
-   * still-present tombstone sidecar keeps masking, so serving the
-   * unscrubbed bak is correct). Returns the number of cells
-   * repaired. Idempotent; called on vacuum/delete entry, and the
-   * indexed read paths refuse to serve an index with residue
-   * ([[requireNoVacuumResidue]]) rather than silently skip a cell. */
+   * [[vacuumIvfIndex]]'s per-cell swap leaves `cell=N` missing — and
+   * partition discovery would silently SKIP the missing cell while a
+   * rerun's sidecar drop made the loss permanent. Each cell with
+   * `.vacuum_tmp_N`/`.vacuum_bak_N` residue is recovered by the
+   * [[graft.sinks.Commit]] residue rule: a missing cell rolls forward
+   * to the scrubbed tmp, or back to the unscrubbed bak (the
+   * still-present tombstone sidecar keeps masking, so serving it is
+   * correct). Returns the number of cells restored. Idempotent;
+   * called on vacuum/delete entry, and the indexed read paths refuse
+   * to serve an index with residue ([[requireNoVacuumResidue]])
+   * rather than silently skip a cell. */
   def recoverIvfIndex(spark: org.apache.spark.sql.SparkSession,
       path: String): Int = {
     val root = new org.apache.hadoop.fs.Path(path)
@@ -638,31 +635,18 @@ object Ann {
       case n if n.startsWith(".vacuum_tmp_") => n.stripPrefix(".vacuum_tmp_")
       case n if n.startsWith(".vacuum_bak_") => n.stripPrefix(".vacuum_bak_")
     }.distinct.sorted
-    var repaired = 0
-    cells.foreach { c =>
-      val cell = new org.apache.hadoop.fs.Path(s"$path/cell=$c")
-      val tmp = new org.apache.hadoop.fs.Path(s"$path/.vacuum_tmp_$c")
-      val bak = new org.apache.hadoop.fs.Path(s"$path/.vacuum_bak_$c")
-      if (f.exists(cell)) { // swap finished or never started
-        f.delete(tmp, true): Unit
-        f.delete(bak, true): Unit
-      } else if (f.exists(tmp) && f.exists(bak)) { // mid-swap: finish it
-        require(f.rename(tmp, cell),
-          s"ivf recover: failed to swap scrubbed cell=$c back in")
-        f.delete(bak, true): Unit
-        repaired += 1
-      } else if (f.exists(bak)) { // tmp gone (or never bak'd): undo
-        require(f.rename(bak, cell),
-          s"ivf recover: failed to restore cell=$c from backup")
-        repaired += 1
-      } else if (f.exists(tmp)) { // unreachable by protocol; best-effort
-        require(f.rename(tmp, cell),
-          s"ivf recover: failed to restore cell=$c from tmp")
-        repaired += 1
-      }
+    import graft.sinks.Commit.Outcome.{RolledBack, RolledForward}
+    cells.count { c =>
+      val (cell, tmp, bak) = vacuumTriple(path, c)
+      Seq(RolledForward, RolledBack).contains(graft.sinks.Commit.recover(f, cell, tmp, bak))
     }
-    repaired
   }
+
+  /** A cell and its fixed [[graft.sinks.Commit]] residue pair. */
+  private def vacuumTriple(path: String, cell: String) = (
+    new org.apache.hadoop.fs.Path(s"$path/cell=$cell"),
+    new org.apache.hadoop.fs.Path(s"$path/.vacuum_tmp_$cell"),
+    new org.apache.hadoop.fs.Path(s"$path/.vacuum_bak_$cell"))
 
   /** Refuse to serve an index whose last vacuum crashed mid-swap: a
    * missing `cell=N` would otherwise be silently absent from
@@ -707,12 +691,10 @@ object Ann {
     // r19: scrub every doomed cell in ONE Spark job staged under
     // `.vacuum_stage` (guide §1.2 — the per-cell loop paid one full
     // read+write job per cell; a vacuum that dooms k cells was k
-    // sequential jobs of mostly fixed overhead). The crash protocol
-    // is unchanged: the staging dir is residue-swept on entry
-    // ([[recoverIvfIndex]]), each cell still swaps through its own
-    // complete-before-swap `.vacuum_tmp_<c>` (a rename of the fully
-    // written staging partition, so tmp is complete by construction),
-    // and the sidecar drops LAST.
+    // sequential jobs of mostly fixed overhead). The staging dir is
+    // residue-swept on entry ([[recoverIvfIndex]]); each cell's fully
+    // written staging partition moves to its `.vacuum_tmp_<c>` and
+    // swaps in through graft.sinks.Commit, and the sidecar drops LAST.
     val stage = new org.apache.hadoop.fs.Path(s"$path/.vacuum_stage")
     f.delete(stage, true): Unit
     if (doomedCells.nonEmpty) {
@@ -723,21 +705,12 @@ object Ann {
         .write.partitionBy("cell").parquet(stage.toString)
     }
     doomedCells.foreach { cell =>
-      val cellPath = new org.apache.hadoop.fs.Path(s"$path/cell=$cell")
-      val tmp = new org.apache.hadoop.fs.Path(s"$path/.vacuum_tmp_$cell")
-      val bak = new org.apache.hadoop.fs.Path(s"$path/.vacuum_bak_$cell")
-      f.delete(tmp, true): Unit
+      val (cellPath, tmp, bak) = vacuumTriple(path, cell.toString)
       val staged = new org.apache.hadoop.fs.Path(s"$path/.vacuum_stage/cell=$cell")
-      if (f.exists(staged)) require(f.rename(staged, tmp),
-        s"ivf vacuum: failed to stage scrubbed cell=$cell")
+      if (f.exists(staged)) graft.sinks.Commit.move(f, staged, tmp)
       else // every row of the cell was tombstoned: scrubbed cell is empty
         require(f.mkdirs(tmp), s"ivf vacuum: failed to stage empty cell=$cell")
-      f.delete(bak, true): Unit
-      require(f.rename(cellPath, bak),
-        s"ivf vacuum: failed to move cell=$cell aside")
-      require(f.rename(tmp, cellPath),
-        s"ivf vacuum: failed to swap in scrubbed cell=$cell")
-      f.delete(bak, true): Unit
+      graft.sinks.Commit.replace(f, cellPath, tmp, bak)
     }
     f.delete(stage, true): Unit
     require(f.delete(new org.apache.hadoop.fs.Path(s"$path/_graft_tombstones"),

@@ -18,11 +18,13 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
  *    version + 1. The version dir is invisible to readers until the
  *    manifest names it, so a crashed publish leaves dead files, never
  *    a torn read;
- *  - the manifest flip is ONE rename of a freshly-written pointer
- *    file (`MANIFEST.tmp.<N>` → `MANIFEST`), atomic on HDFS/local
- *    filesystems — object stores emulate rename, so deploy the root
- *    on a rename-atomic filesystem or front it with a coordination
- *    service (the IngestLedger caveat, same wording by design);
+ *  - the manifest flip writes a fresh pointer file and swaps it in
+ *    through [[Commit]]; a reader caught between its two renames sees
+ *    no manifest (version 0), never a torn version, and every writer
+ *    verb recovers the flip before it reads the head. Object stores
+ *    emulate rename, so deploy the root on a rename-atomic filesystem
+ *    or front it with a coordination service (the IngestLedger
+ *    caveat, same wording by design);
  *  - the manifest's content is just the version number: everything
  *    else (the table list, schemas) is self-describing from the
  *    version directory, so there is no metadata to drift.
@@ -41,8 +43,44 @@ object Snapshot {
     new org.apache.hadoop.fs.Path(root)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private def manifestPath(root: String) =
-    new org.apache.hadoop.fs.Path(s"$root/MANIFEST")
+  /** A pointer file holding one version number (`MANIFEST`,
+   * `TAG.<name>`) and its fixed [[Commit]] residue pair. */
+  private final case class Pointer(root: String, file: String) {
+    private def p(n: String) = new org.apache.hadoop.fs.Path(s"$root/$n")
+    val (target, tmp, bak) = (p(file), p(s"$file.tmp"), p(s"$file.bak"))
+    def recover(f: org.apache.hadoop.fs.FileSystem): Unit =
+      Commit.recover(f, target, tmp, bak): Unit
+    /** Write-then-replace: a reader never sees a half-written pointer. */
+    def flip(f: org.apache.hadoop.fs.FileSystem, version: Long): Unit = {
+      val out = f.create(tmp, true)
+      try out.write(version.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      finally out.close()
+      Commit.replace(f, target, tmp, bak)
+    }
+  }
+
+  private def manifest(root: String) = Pointer(root, "MANIFEST")
+
+  private def readPointer(f: org.apache.hadoop.fs.FileSystem,
+      p: org.apache.hadoop.fs.Path): Long = {
+    val in = f.open(p)
+    try new String(org.apache.commons.io.IOUtils.toByteArray(in),
+      java.nio.charset.StandardCharsets.UTF_8).trim.toLong
+    finally in.close()
+  }
+
+  /** Tag names under `root`; a tag name has no dot, its residue does. */
+  private def refNames(f: org.apache.hadoop.fs.FileSystem, root: String): Seq[String] =
+    f.listStatus(new org.apache.hadoop.fs.Path(root)).map(_.getPath.getName)
+      .collect { case n if n.startsWith("TAG.") && !n.drop(4).contains(".") => n.drop(4) }
+      .toSeq
+
+  /** The head for a verb about to write: a crashed flip recovered
+   * first, so the next publish never reclaims (and clears) v1. */
+  private def headVersion(spark: SparkSession, root: String): Long = {
+    manifest(root).recover(fs(spark, root))
+    currentVersion(spark, root)
+  }
 
   /** Remove the ENTIRE dead orphan dir this publish is about to
    * reuse. A crashed or gate-aborted predecessor (A24's abort path
@@ -62,17 +100,8 @@ object Snapshot {
   /** Version the manifest currently names, or 0 if never published. */
   def currentVersion(spark: SparkSession, root: String): Long = {
     val f = fs(spark, root)
-    val mp = manifestPath(root)
-    if (!f.exists(mp)) 0L
-    else {
-      val in = f.open(mp)
-      try {
-        val s = new String(
-          org.apache.commons.io.IOUtils.toByteArray(in),
-          java.nio.charset.StandardCharsets.UTF_8).trim
-        s.toLong
-      } finally in.close()
-    }
+    val mp = manifest(root).target
+    if (!f.exists(mp)) 0L else readPointer(f, mp)
   }
 
   /** Per-version commit metadata (`v<N>/_COMMIT`, A37): one
@@ -136,11 +165,10 @@ object Snapshot {
 
   /** Atomically CLAIM version `next` before any data write (r19,
    * VERDICT r18 #2 — multi-writer fencing): an exclusive create of
-   * `_CLAIM.v<next>` (atomic on every Hadoop FS, like the TAG.tmp
-   * rename discipline). Publishes are SERIALIZED per namespace — two
-   * publishers racing to the same `v<next>` would interleave
-   * Overwrite writes into one dir and flip a torn version with no
-   * error anywhere; the claim makes the loser fail HERE, loudly,
+   * `_CLAIM.v<next>` (atomic on every Hadoop FS). Publishes are
+   * SERIALIZED per namespace — two publishers racing to the same
+   * `v<next>` would interleave Overwrite writes into one dir and flip
+   * a torn version with no error anywhere; the claim makes the loser fail HERE, loudly,
    * before it has written a byte. Claims for versions the manifest
    * already names are stale by construction (that publish completed;
    * only its claim cleanup crashed) and are swept on entry. A claim
@@ -188,7 +216,7 @@ object Snapshot {
    * claim was released. */
   def releaseClaim(spark: SparkSession, root: String): Boolean = {
     val f = fs(spark, root)
-    val next = currentVersion(spark, root) + 1
+    val next = headVersion(spark, root) + 1
     val p = new org.apache.hadoop.fs.Path(s"$root/_CLAIM.v$next")
     f.delete(p, false)
   }
@@ -213,12 +241,12 @@ object Snapshot {
     tables.keys.foreach(n => require(n.matches("[A-Za-z0-9_]+"),
       s"snapshot publish: unsafe table name '$n'"))
     val f = fs(spark, root)
-    val next = currentVersion(spark, root) + 1
+    val next = headVersion(spark, root) + 1
     claimVersion(f, root, next)
     clearDeadOrphan(f, root, next)
     writeTablesConcurrently(s"$root/v$next", tables)
     writeCommitMeta(f, root, next, "publish", tables.keys.toSeq, "")
-    flipManifest(f, root, next)
+    manifest(root).flip(f, next)
     releaseVersionClaim(f, root, next)
     next
   }
@@ -288,24 +316,6 @@ object Snapshot {
         seq.map { case (name, df) =>
           name -> (() => df.write.mode(SaveMode.Overwrite).parquet(s"$dir/$name"))
         }): Unit
-  }
-
-  // pointer flip: write-then-rename, never write-in-place (a reader
-  // must not observe a half-written manifest)
-  private def flipManifest(f: org.apache.hadoop.fs.FileSystem,
-      root: String, next: Long): Unit = {
-    val tmp = new org.apache.hadoop.fs.Path(s"$root/MANIFEST.tmp.$next")
-    val out = f.create(tmp, true)
-    try out.write(next.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    if (!f.rename(tmp, manifestPath(root))) {
-      // HDFS/local rename-over-existing: delete-then-rename window is
-      // acceptable for the single-publisher deployment; fail loudly if
-      // even that cannot complete
-      f.delete(manifestPath(root), false)
-      require(f.rename(tmp, manifestPath(root)),
-        s"snapshot publish: manifest flip failed for v$next")
-    }
   }
 
   /** Per-version link sidecar (`v<N>/_LINKS`): `table<TAB>version`
@@ -387,7 +397,7 @@ object Snapshot {
       spark: SparkSession,
       root: String,
       changed: Map[String, DataFrame]): (Long, Map[String, Long]) =
-    publishLinkedFrom(spark, root, currentVersion(spark, root), changed)
+    publishLinkedFrom(spark, root, headVersion(spark, root), changed)
 
   /** [[publishLinked]] generalized to carry forward from an ARBITRARY
    * published version instead of the head — the primitive that makes
@@ -410,7 +420,7 @@ object Snapshot {
     changed.keys.foreach(n => require(n.matches("[A-Za-z0-9_]+"),
       s"snapshot publish: unsafe table name '$n'"))
     val f = fs(spark, root)
-    val cur = currentVersion(spark, root)
+    val cur = headVersion(spark, root)
     require(base >= 0L && base <= cur,
       s"snapshot publishLinkedFrom: base v$base not published (head is v$cur)")
     val next = cur + 1
@@ -435,7 +445,7 @@ object Snapshot {
       finally out.close()
     }
     writeCommitMeta(f, root, next, "linked", changed.keys.toSeq, ref)
-    flipManifest(f, root, next)
+    manifest(root).flip(f, next)
     releaseVersionClaim(f, root, next)
     (next, carried)
   }
@@ -512,7 +522,7 @@ object Snapshot {
     (written.keys ++ links.keys).foreach(n => require(n.matches("[A-Za-z0-9_]+"),
       s"snapshot publish: unsafe table name '$n'"))
     val f = fs(spark, root)
-    val cur = currentVersion(spark, root)
+    val cur = headVersion(spark, root)
     links.foreach { case (t, h) =>
       require(h >= 1 && h <= cur,
         s"snapshot publishMixed: home v$h for '$t' not published (head is v$cur)")
@@ -533,7 +543,7 @@ object Snapshot {
       finally out.close()
     }
     writeCommitMeta(f, root, next, op, written.keys.toSeq, ref)
-    flipManifest(f, root, next)
+    manifest(root).flip(f, next)
     releaseVersionClaim(f, root, next)
     next
   }
@@ -748,7 +758,7 @@ object Snapshot {
     import spark.implicits._
     val fsrc = fs(spark, srcRoot)
     val fdst = fs(spark, dstRoot)
-    require(!fdst.exists(manifestPath(dstRoot)),
+    require(!fdst.exists(manifest(dstRoot).target),
       s"snapshot replicate: destination $dstRoot already published")
     val cur = currentVersion(spark, srcRoot)
     require(cur > 0, s"snapshot replicate: nothing published under $srcRoot")
@@ -807,10 +817,8 @@ object Snapshot {
       s"snapshot replicate: checksum mismatch on " +
         report.filterNot(_._4).map(r => s"v${r._1}/${r._2}").mkString(", ") +
         " — replica NOT published")
-    fsrc.listStatus(new org.apache.hadoop.fs.Path(srcRoot))
-      .map(_.getPath.getName).filter(_.startsWith("TAG."))
-      .foreach(copySmall)
-    flipManifest(fdst, dstRoot, cur)
+    refNames(fsrc, srcRoot).foreach(n => copySmall(s"TAG.$n"))
+    manifest(dstRoot).flip(fdst, cur)
     report.toDF("version", "table_name", "n_rows", "checksum_match")
   }
 
@@ -849,7 +857,7 @@ object Snapshot {
         s"publishChecked: rule references a table not being published: $c")
     }
     val f = fs(spark, root)
-    val next = currentVersion(spark, root) + 1
+    val next = headVersion(spark, root) + 1
     claimVersion(f, root, next)
     clearDeadOrphan(f, root, next)
     writeTablesConcurrently(s"$root/v$next", tables)
@@ -866,7 +874,7 @@ object Snapshot {
     // the commit record lands even on the abort path: the orphan dir
     // documents what was attempted (A37 / the A31 orphan-visibility rule)
     writeCommitMeta(f, root, next, "checked", tables.keys.toSeq, "")
-    if (ok) flipManifest(f, root, next)
+    if (ok) manifest(root).flip(f, next)
     // the claim releases on BOTH outcomes: the attempt is finished
     // (abort leaves the orphan visible, the A31 rule — not claimed)
     releaseVersionClaim(f, root, next)
@@ -937,19 +945,18 @@ object Snapshot {
    * one recursive delete per expired version; no data is read. */
   def vacuum(spark: SparkSession, root: String, keepLast: Int): Seq[Long] = {
     require(keepLast >= 1, s"snapshot vacuum: keepLast must be >= 1, got $keepLast")
-    val cur = currentVersion(spark, root)
+    val cur = headVersion(spark, root)
     require(cur > 0, s"snapshot vacuum: nothing published under $root")
     val f = fs(spark, root)
     val floor = cur - keepLast + 1
     // TAG-PROTECTION: a version any tag names stays readable however
     // old it is — deleting it would break every readTag of that tag
     // with no error at vacuum time (the silent-wrongness class). The
-    // tag set is tiny governance metadata; one listing reads it.
+    // tag set is tiny governance metadata; one listing reads it. A
+    // crashed flip's residue pins too: either half may be the tag.
     val protectedVersions = f.listStatus(new org.apache.hadoop.fs.Path(root))
-      .filter(_.isFile)
-      .map(_.getPath.getName)
-      .collect { case n if n.startsWith("TAG.") =>
-        tagVersion(spark, root, n.drop(4)) }
+      .filter(s => s.isFile && s.getPath.getName.startsWith("TAG."))
+      .map(s => readPointer(f, s.getPath))
       .toSet
     val allVersions = f.listStatus(new org.apache.hadoop.fs.Path(root))
       .filter(_.isDirectory)
@@ -997,10 +1004,7 @@ object Snapshot {
     val f = fs(spark, root)
     val cur = currentVersion(spark, root)
     val rootPath = new org.apache.hadoop.fs.Path(root)
-    val tagsByVersion = f.listStatus(rootPath)
-      .filter(_.isFile).map(_.getPath.getName)
-      .collect { case n if n.startsWith("TAG.") && !n.startsWith("TAG.tmp.") =>
-        n.drop(4) }
+    val tagsByVersion = refNames(f, root)
       .map(t => tagVersion(spark, root, t) -> t)
       .groupBy(_._1).map { case (v, xs) => v -> xs.map(_._2).sorted.mkString(",") }
     val rows = f.listStatus(rootPath).filter(_.isDirectory)
@@ -1060,13 +1064,12 @@ object Snapshot {
    * per (version, table) with status: 'ok' (physical), 'linked-ok'
    * (link target present), 'dangling-link' (link names a version that
    * no longer homes the table), plus an 'empty-version' row for a
-   * version dir serving nothing, plus a 'crashed-erase' row per
-   * `.erase_bak_T`/`.erase_tmp_T` residue dir (ADVICE r14: an
-   * [[eraseKeys]] crash between its two renames leaves the table
-   * missing and its halves stranded — recover by renaming whichever
-   * side is complete back into place), plus a 'stale-restore-tmp'
-   * row per `.restore_tmp_T` dir a crashed [[fsckRepair]] replica
-   * restore stranded. Pure namespace metadata — listings and
+   * version dir serving nothing, plus one row per table with
+   * [[eraseKeys]] residue — 'crashed-erase' when the live dir is
+   * missing, 'stale-erase-residue' beside it; [[fsckRepair]] and the
+   * next eraseKeys recover both — plus a 'stale-restore-tmp' row per
+   * `.restore_tmp_T` dir a crashed [[fsckRepair]] replica restore
+   * stranded. Pure namespace metadata — listings and
    * existence probes, no data read, no counts. */
   def fsck(spark: SparkSession, root: String): DataFrame = {
     import spark.implicits._
@@ -1080,16 +1083,6 @@ object Snapshot {
       val dirs = f.listStatus(new org.apache.hadoop.fs.Path(s"$root/v$v"))
         .filter(_.isDirectory).map(_.getPath.getName).toSeq
       val own = dirs.filter(_.matches("[A-Za-z0-9_]+"))
-      // a complete erase deletes both halves, so ANY survivor of
-      // either name is erase residue — but the RECOVERY differs by
-      // whether the live table dir survived (ADVICE r15):
-      //  - live table present (crash before the first rename, or
-      //    post-swap pre-cleanup): the table is serving fine; the
-      //    residue is garbage — recovery = delete it. Renaming a
-      //    half back over the live dir would clobber or duplicate it.
-      //  - live table MISSING (crash between the two renames): the
-      //    table is stranded — recovery = rename whichever half is
-      //    complete back into place.
       val crashedRows = dirs
         .collect { case n if n.startsWith(".erase_bak_") => n.drop(11)
                    case n if n.startsWith(".erase_tmp_") => n.drop(11) }
@@ -1118,23 +1111,15 @@ object Snapshot {
    * runbook steps an operator could get wrong in exactly the way the
    * report warns about (renaming a half over a live table). One pass,
    * applying the residue taxonomy's own rules:
-   *  - 'stale-erase-residue' (live table present): the residue is
-   *    garbage — DELETED, with the ACTION naming which half it was,
-   *    because the operator's follow-up differs: a post-swap
-   *    `.erase_bak` holds the UNERASED bytes, so deleting it is the
-   *    A30 obligation completing ('deleted-stale-backup', nothing
-   *    more to do); a pre-swap `.erase_tmp` means the erase NEVER
-   *    SWAPPED — the live table still serves the subject's rows —
-   *    so the action reads 'deleted-stale-tmp-rerun-erase' and the
-   *    operator re-runs the idempotent [[eraseKeys]]. Conflating the
-   *    two would let an operator read a half-done erasure as done.
-   *  - 'crashed-erase' (live table missing): the SCRUBBED half
-   *    (`.erase_tmp`) is complete by construction — it was fully
-   *    written before the first rename — so it is restored and the
-   *    unerased backup deleted (restoring the backup would resurrect
-   *    the erased subject). Only if the tmp half is itself gone does
-   *    the backup restore ('restored-backup'), putting data back
-   *    online with erasure explicitly flagged as NOT done.
+   *  - erase residue is recovered by the [[Commit]] residue rule, the
+   *    ACTION naming what it did because the operator's follow-up
+   *    differs: 'deleted-stale-backup' (a finished erase's unerased
+   *    bytes dropped — the A30 obligation completes);
+   *    'deleted-stale-tmp-rerun-erase' (the erase never swapped: the
+   *    live table still serves the subject, so re-run the idempotent
+   *    [[eraseKeys]]); 'restored-scrubbed' (rolled forward, unerased
+   *    backup dropped); 'restored-backup' (rolled back: data online,
+   *    erasure explicitly NOT done).
    *  - 'dangling-link': the physical home is gone (an out-of-band
    *    delete). With `fromReplica = Some(replicaRoot)` (r18, closing
    *    VERDICT r17 #2) the missing version dir is restored FROM an
@@ -1171,32 +1156,19 @@ object Snapshot {
     val rows = versions.flatMap { v =>
       val dirs = f.listStatus(new org.apache.hadoop.fs.Path(s"$root/v$v"))
         .filter(_.isDirectory).map(_.getPath.getName).toSeq
-      val own = dirs.filter(_.matches("[A-Za-z0-9_]+")).toSet
-      val tmps = dirs.filter(_.startsWith(".erase_tmp_")).map(_.drop(11)).toSet
-      val baks = dirs.filter(_.startsWith(".erase_bak_")).map(_.drop(11)).toSet
       def p(rel: String) = new org.apache.hadoop.fs.Path(s"$root/v$v/$rel")
-      val repaired = (tmps ++ baks).toSeq.sorted.map { t =>
-        if (own.contains(t)) {
-          f.delete(p(s".erase_tmp_$t"), true): Unit
-          f.delete(p(s".erase_bak_$t"), true): Unit
-          // the halves mean different things next to a live table: a
-          // tmp means the erase never swapped (live still serves the
-          // subject — re-run eraseKeys); a bak means it completed and
-          // deleting the unerased bytes finishes the A30 obligation
-          (v, t, "stale-erase-residue",
-            if (tmps.contains(t)) "deleted-stale-tmp-rerun-erase"
-            else "deleted-stale-backup")
-        } else if (tmps.contains(t)) {
-          require(f.rename(p(s".erase_tmp_$t"), p(t)),
-            s"snapshot repair: failed to restore scrubbed v$v/$t")
-          f.delete(p(s".erase_bak_$t"), true): Unit
-          (v, t, "crashed-erase", "restored-scrubbed")
-        } else {
-          require(f.rename(p(s".erase_bak_$t"), p(t)),
-            s"snapshot repair: failed to restore backup v$v/$t")
-          (v, t, "crashed-erase", "restored-backup")
+      val repaired = dirs
+        .collect { case n if n.startsWith(".erase_tmp_") || n.startsWith(".erase_bak_") =>
+          n.drop(11) }
+        .distinct.sorted.flatMap { t =>
+          Commit.recover(f, p(t), p(s".erase_tmp_$t"), p(s".erase_bak_$t")) match {
+            case Commit.Outcome.Kept(droppedTmp, _) => Some((v, t, "stale-erase-residue",
+              if (droppedTmp) "deleted-stale-tmp-rerun-erase" else "deleted-stale-backup"))
+            case Commit.Outcome.RolledForward => Some((v, t, "crashed-erase", "restored-scrubbed"))
+            case Commit.Outcome.RolledBack => Some((v, t, "crashed-erase", "restored-backup"))
+            case Commit.Outcome.Absent => None
+          }
         }
-      }
       // a crash mid-replica-restore strands a hidden tmp next to
       // nothing a reader can reach: garbage, deleted (the restore
       // itself re-copies from the replica, never resumes a partial)
@@ -1231,9 +1203,7 @@ object Snapshot {
             .tableChecksum(spark.read.parquet(tmp.toString), cols).head()
           require(a == b, s"snapshot repair: replica restore checksum " +
             s"mismatch on v$sv/$t — restore NOT installed")
-          require(f.rename(tmp,
-            new org.apache.hadoop.fs.Path(s"$root/v$sv/$t")),
-            s"snapshot repair: failed to install restored v$sv/$t")
+          Commit.move(f, tmp, new org.apache.hadoop.fs.Path(s"$root/v$sv/$t"))
           true
         }
       })
@@ -1250,19 +1220,15 @@ object Snapshot {
    * erasure is a legal obligation on the whole retention window —
    * time travel must not resurrect the erased subject, and an orphan
    * directory still holds the bytes even if no manifest names it.
-   * Each version's table dir is rewritten via write-temp → swap
-   * (rename the old dir aside, rename the new one in, drop the old —
-   * the TableSink discipline), so a concurrent reader NEVER sees
-   * partial data — though between the two renames the table dir
-   * briefly does not exist, so a read in that window fails loudly
-   * rather than serving a half-scrubbed table (rename atomicity:
-   * HDFS/local, the A15 assumption). A crash between the renames
-   * (live dir missing) leaves residue [[fsck]] reports as
-   * 'crashed-erase' — recover by renaming whichever side is complete
-   * back into place; a crash before the swap or after it but before
-   * cleanup leaves residue NEXT TO the live dir — fsck reports
-   * 'stale-erase-residue', recovery = delete the residue (renaming
-   * it back would clobber or duplicate the live table).
+   * Each version's table dir is rewritten to `.erase_tmp_<table>` and
+   * swapped in through [[Commit]] (the old dir parks in
+   * `.erase_bak_<table>`, then is dropped), so a concurrent reader
+   * NEVER sees partial data — though between the two renames the
+   * table dir briefly does not exist, so a read in that window fails
+   * loudly rather than serving a half-scrubbed table. A crash leaves
+   * residue [[fsck]] reports ('crashed-erase' with the live dir
+   * missing, 'stale-erase-residue' next to it); [[fsckRepair]] and
+   * the next eraseKeys both recover it by the Commit residue rule.
    * Returns (version, rowsRemoved) ascending, one row per version
    * that carries the table; fails loudly if NO version does.
    *
@@ -1290,22 +1256,18 @@ object Snapshot {
       .sorted.toSeq
     val touched = versions.flatMap { v =>
       val dirPath = new org.apache.hadoop.fs.Path(s"$root/v$v/$table")
+      val tmp = new org.apache.hadoop.fs.Path(s"$root/v$v/.erase_tmp_$table")
+      val bak = new org.apache.hadoop.fs.Path(s"$root/v$v/.erase_bak_$table")
+      Commit.recover(f, dirPath, tmp, bak): Unit
       if (!f.exists(dirPath)) None
       else {
         val cur = spark.read.parquet(dirPath.toString)
         val doomed = cur.join(broadcast(keyDf), Seq(keyCol), "left_semi").count()
         if (doomed == 0L) Some(v -> 0L)
         else {
-          val tmp = s"$root/v$v/.erase_tmp_$table"
           cur.join(broadcast(keyDf), Seq(keyCol), "left_anti")
-            .write.mode(SaveMode.Overwrite).parquet(tmp)
-          val bak = new org.apache.hadoop.fs.Path(s"$root/v$v/.erase_bak_$table")
-          f.delete(bak, true): Unit
-          require(f.rename(dirPath, bak),
-            s"snapshot erase: failed to move v$v/$table aside")
-          require(f.rename(new org.apache.hadoop.fs.Path(tmp), dirPath),
-            s"snapshot erase: failed to swap in scrubbed v$v/$table")
-          f.delete(bak, true): Unit // the erased bytes must actually go
+            .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
+          Commit.replace(f, dirPath, tmp, bak)
           Some(v -> doomed)
         }
       }
@@ -1335,7 +1297,7 @@ object Snapshot {
     require(tables.nonEmpty, "snapshot publish: no tables")
     tables.keys.foreach(n => require(n.matches("[A-Za-z0-9_]+"),
       s"snapshot publish: unsafe table name '$n'"))
-    val cur = currentVersion(spark, root)
+    val cur = headVersion(spark, root)
     val violations = schemaViolations(spark, root, tables)
     if (violations.nonEmpty) (cur + 1, false, violations)
     else (publish(spark, root, tables), true, Nil)
@@ -1400,19 +1362,13 @@ object Snapshot {
    * a safe BRANCH head (A35). */
   def tag(spark: SparkSession, root: String, name: String, version: Long): Unit = {
     require(name.matches("[A-Za-z0-9_-]+"), s"snapshot tag: unsafe name '$name'")
-    val cur = currentVersion(spark, root)
+    val cur = headVersion(spark, root)
     require(version >= 1 && version <= cur,
       s"snapshot tag: v$version not published (head is v$cur)")
     val f = fs(spark, root)
-    val tmp = new org.apache.hadoop.fs.Path(s"$root/TAG.tmp.$name")
-    val out = f.create(tmp, true)
-    try out.write(version.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    val dest = new org.apache.hadoop.fs.Path(s"$root/TAG.$name")
-    if (!f.rename(tmp, dest)) {
-      f.delete(dest, false)
-      require(f.rename(tmp, dest), s"snapshot tag: flip failed for '$name'")
-    }
+    val p = Pointer(root, s"TAG.$name")
+    p.recover(f)
+    p.flip(f, version)
   }
 
   /** Ref/branch lifecycle GC (A40) — remove a named ref so [[vacuum]]
@@ -1518,10 +1474,7 @@ object Snapshot {
       p.split("\\*", -1).map(java.util.regex.Pattern.quote).mkString(".*")))
     val tsByVersion = history(spark, root).select("version", "ts_ms")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val refs = f.listStatus(new org.apache.hadoop.fs.Path(root))
-      .map(_.getPath.getName)
-      .filter(n => n.startsWith("TAG.") && !n.startsWith("TAG.tmp."))
-      .map(_.drop(4))
+    val refs = refNames(f, root)
       .filterNot(_.endsWith("-mergebase"))
       .filterNot(isReleaseRef)
       .filterNot(n => keepMatchers.exists(_.matcher(n).matches()))
@@ -1541,12 +1494,9 @@ object Snapshot {
   def tagVersion(spark: SparkSession, root: String, name: String): Long = {
     require(name.matches("[A-Za-z0-9_-]+"), s"snapshot tag: unsafe name '$name'")
     val f = fs(spark, root)
-    val p = new org.apache.hadoop.fs.Path(s"$root/TAG.$name")
+    val p = Pointer(root, s"TAG.$name").target
     require(f.exists(p), s"snapshot tag: no tag '$name' under $root")
-    val in = f.open(p)
-    try new String(org.apache.commons.io.IOUtils.toByteArray(in),
-      java.nio.charset.StandardCharsets.UTF_8).trim.toLong
-    finally in.close()
+    readPointer(f, p)
   }
 
   /** Read `table` at the version a tag names. */

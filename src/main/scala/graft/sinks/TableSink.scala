@@ -70,28 +70,6 @@ object TableSink {
   }
 
   /**
-   * Small-file compaction: rewrite an UNPARTITIONED table directory
-   * into ~`targetFileBytes` output files, sized from the source's
-   * actual scan size. The streaming/incremental-ingest follow-up
-   * every large deployment needs — thousands of tiny files turn scan
-   * planning and open() overhead into the bottleneck.
-   *
-   * - Hive-partitioned (`col=value`) layouts are REJECTED: a blind
-   *   rewrite would flatten the directories (losing partition pruning)
-   *   and bake inferred partition types into the data. Compact each
-   *   partition directory individually instead.
-   * - Already-compacted input (file count at or below the target) is
-   *   a no-op — a scheduled compaction cycle must not rewrite the
-   *   whole table every run.
-   * - Reduction is `coalesce` (narrow — no shuffle).
-   * - The swap is rename-based: rewrite to `...__compact_tmp`, move
-   *   the original to `...__compact_bak`, move tmp into place (rolled
-   *   back on failure), drop the backup. Not atomic on stores without
-   *   atomic directory rename — a crash between the renames leaves
-   *   the data intact in the bak/tmp siblings for manual recovery,
-   *   never deleted-and-gone.
-   */
-  /**
    * Keyed upsert (MERGE ... WHEN MATCHED UPDATE / WHEN NOT MATCHED
    * INSERT, SCD-1): rows in `delta` replace current rows with the same
    * key; unmatched current rows are kept; unmatched delta rows are
@@ -113,9 +91,10 @@ object TableSink {
    *   shared column, or a delta that DROPS a table column, still fails
    *   loudly: both silently rewrite history (coerced values / vanished
    *   data) instead of appending to it.
-   * - Same crash-safe rename swap as `compact`: the merged result is
-   *   fully written to a `__upsert_tmp` sibling before the target
-   *   moves, so a crash never leaves a half-table.
+   * - Crash-safe: the merged result is fully written beside the
+   *   target, then swapped in through [[Commit]]; the call first
+   *   recovers any swap a crashed mutation left, so a table caught
+   *   between renames is restored, never rebuilt from the delta alone.
    */
   def upsert(
       spark: org.apache.spark.sql.SparkSession,
@@ -133,6 +112,7 @@ object TableSink {
     }
     val hPath = new org.apache.hadoop.fs.Path(path)
     val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    recoverSwap(fs, hPath)
     if (!fs.exists(hPath)) {
       delta.write.mode(SaveMode.ErrorIfExists).format(format).save(path)
       return
@@ -151,7 +131,7 @@ object TableSink {
     val merged = evolved
       .join(delta.select(keyCols.map(delta(_)): _*), keyCols, "left_anti")
       .unionByName(delta)
-    swapInto(fs, hPath, merged, format, "upsert")
+    swapInto(fs, hPath, merged, format)
   }
 
   /**
@@ -171,8 +151,12 @@ object TableSink {
    * Exact same-row duplicates collapse harmlessly. Scale shape: one
    * (score, row)-struct max aggregate on the key — map-side combined,
    * ONE shuffle of current ∪ delta, no window, no join. Schema
-   * evolution is `upsert`'s additive rule. Same crash-safe rename
-   * swap.
+   * evolution is `upsert`'s additive rule. Same crash-safe swap.
+   *
+   * A NULL or non-castable version, in the delta or the current
+   * table, fails the call before any write. A table already holding
+   * one (written outside this API) is repaired outside it: rewrite it
+   * without that row, e.g. by `writeTruncate` to a new path.
    */
   def upsertVersioned(
       spark: org.apache.spark.sql.SparkSession,
@@ -189,6 +173,7 @@ object TableSink {
     import org.apache.spark.sql.functions.{col, max, min, struct, when}
     val hPath = new org.apache.hadoop.fs.Path(path)
     val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    recoverSwap(fs, hPath)
     val all =
       if (!fs.exists(hPath)) delta
       else {
@@ -236,7 +221,7 @@ object TableSink {
       .limit(1).select(col("__nullv")).collect()
     viol.headOption.foreach { r =>
       require(r.getInt(0) == 0,
-        s"upsertVersioned: NULL $versionCol in delta or current table")
+        s"upsertVersioned: NULL or non-castable $versionCol in delta or current table")
       throw new IllegalArgumentException(
         s"requirement failed: upsertVersioned: conflicting payloads tied at the winning " +
           s"($versionCol) version for some key on ${keyCols.mkString(",")} " +
@@ -246,7 +231,7 @@ object TableSink {
       keyCs ++ payload.map(c => col(s"__hi.__row.$c").as(c)): _*)
     if (!fs.exists(hPath))
       resolved.write.mode(SaveMode.ErrorIfExists).format(format).save(path)
-    else swapInto(fs, hPath, resolved, format, "upsertVersioned")
+    else swapInto(fs, hPath, resolved, format)
   }
 
   /**
@@ -271,7 +256,7 @@ object TableSink {
    * Scale shape is identical to `upsert`: one anti join of the current
    * table against ALL delta keys (updates and deletes alike — a small
    * delta broadcasts, so the big side never shuffles), then a union
-   * with the upsert rows. Same crash-safe tmp/bak rename swap.
+   * with the upsert rows. Same crash-safe swap.
    */
   def applyCdc(
       spark: org.apache.spark.sql.SparkSession,
@@ -284,23 +269,22 @@ object TableSink {
     require(keyCols.nonEmpty, "applyCdc needs at least one key column")
     require(delta.columns.contains(opCol), s"applyCdc: delta lacks op column $opCol")
     require(!keyCols.contains(opCol), s"applyCdc: op column $opCol cannot be a key")
-    import org.apache.spark.sql.functions.{col, count, lit, sum, when}
+    import org.apache.spark.sql.functions.{coalesce, col, count, lit, sum, when}
     // The op-domain check is UNCONDITIONAL (not gated by
-    // checkUniqueKeys): a row whose op is neither U nor D would
-    // otherwise be silently dropped by the U/D split below — data
-    // loss, not a performance knob.
+    // checkUniqueKeys): a row whose op is neither U nor D — a NULL op
+    // included — would otherwise be dropped by the U/D split below
+    // while its key still feeds the anti join, silently DELETING the
+    // current row: data loss, not a performance knob. `isin` is NULL
+    // for a NULL op, so the predicate flags only a TRUE membership as
+    // good.
     //
-    // Both fail-loud guards run in ONE aggregate action (they were two,
-    // i.e. two full executions of the delta lineage per batch — at
-    // scale the delta is often itself an expensive pipeline). The
-    // shuffled bytes are the same as the old duplicate-key check alone:
-    // (key, n, badop) per distinct key, map-side combined. Predicate
-    // semantics are unchanged: a NULL op lands in the otherwise-0
-    // branch exactly as the old `filter` dropped it, and when both
-    // violations exist the op-domain error still wins (its old check
-    // ran first) via the badop-first ordering over the — normally
-    // empty — violating groups.
-    val badOpFlag = sum(when(!col(opCol).isin("U", "D"), 1).otherwise(0))
+    // Both fail-loud guards run in ONE aggregate action: the shuffled
+    // bytes are (key, n, badop) per distinct key, map-side combined,
+    // and when both violations exist the op-domain error wins via the
+    // badop-first ordering over the — normally empty — violating
+    // groups.
+    val goodOp = col(opCol).isin("U", "D")
+    val badOpFlag = sum(when(goodOp, 0).otherwise(1))
     if (checkUniqueKeys) {
       val viol = delta.groupBy(keyCols.map(delta(_)): _*)
         .agg(count(lit(1)).as("__n"), badOpFlag.as("__badop"))
@@ -314,7 +298,7 @@ object TableSink {
           s"requirement failed: applyCdc: delta has duplicate keys on ${keyCols.mkString(",")}")
       }
     } else {
-      val badOp = delta.filter(!col(opCol).isin("U", "D")).limit(1).count()
+      val badOp = delta.filter(!coalesce(goodOp, lit(false))).limit(1).count()
       require(badOp == 0, s"applyCdc: $opCol values must be 'U' or 'D'")
     }
     val ups0 = delta.filter(col(opCol) === "U").drop(opCol)
@@ -327,6 +311,7 @@ object TableSink {
       keyCols, "left_anti")
     val hPath = new org.apache.hadoop.fs.Path(path)
     val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    recoverSwap(fs, hPath)
     if (!fs.exists(hPath)) {
       // First batch bootstraps the table from its upserts; a delete-only
       // first batch has nothing to create and must not plant an empty
@@ -344,7 +329,7 @@ object TableSink {
     val merged = evolved
       .join(delta.select(keyCols.map(delta(_)): _*), keyCols, "left_anti")
       .unionByName(ups)
-    swapInto(fs, hPath, merged, format, "applyCdc")
+    swapInto(fs, hPath, merged, format)
   }
 
   /**
@@ -375,25 +360,31 @@ object TableSink {
     }
   }
 
-  /** Crash-safe swap: fully materialize `merged` beside the target,
-   * then rename through a backup (rolled back on failure). */
+  /** The one [[Commit]] residue pair every TableSink mutation of a
+   * table swaps through, so any mutation recovers another's crash.
+   * Dotted, so hidden from every Hadoop/Spark file index: beside a
+   * partition leaf (compactPartitioned) it never feeds inference. */
+  private def swapPair(hPath: org.apache.hadoop.fs.Path) = {
+    def sib(role: String) =
+      new org.apache.hadoop.fs.Path(hPath.getParent, s".${hPath.getName}__swap_$role")
+    (sib("tmp"), sib("bak"))
+  }
+
+  private def recoverSwap(
+      fs: org.apache.hadoop.fs.FileSystem, hPath: org.apache.hadoop.fs.Path): Unit = {
+    val (tmp, bak) = swapPair(hPath)
+    Commit.recover(fs, hPath, tmp, bak): Unit
+  }
+
+  /** Fully write `merged` to the table's tmp sibling, then swap it in. */
   private def swapInto(
       fs: org.apache.hadoop.fs.FileSystem,
       hPath: org.apache.hadoop.fs.Path,
       merged: DataFrame,
-      format: String,
-      who: String): Unit = {
-    val path = hPath.toString
-    val tmp = new org.apache.hadoop.fs.Path(path.stripSuffix("/") + s"__${who}_tmp")
-    val bak = new org.apache.hadoop.fs.Path(path.stripSuffix("/") + s"__${who}_bak")
+      format: String): Unit = {
+    val (tmp, bak) = swapPair(hPath)
     merged.write.mode(SaveMode.Overwrite).format(format).save(tmp.toString)
-    if (!fs.rename(hPath, bak))
-      throw new java.io.IOException(s"$who: rename $path -> $bak failed")
-    if (!fs.rename(tmp, hPath)) {
-      fs.rename(bak, hPath) // roll back; original untouched
-      throw new java.io.IOException(s"$who: rename $tmp -> $path failed (rolled back)")
-    }
-    fs.delete(bak, true): Unit // best effort; leftover bak is harmless
+    Commit.replace(fs, hPath, tmp, bak)
   }
 
   /**
@@ -422,7 +413,7 @@ object TableSink {
    * over 10k partitions would serialize 10k scheduling round trips
    * while the cluster idles. The Spark scheduler interleaves the
    * concurrent jobs across executors; per-leaf crash isolation is
-   * unchanged (each leaf still swaps through its own hidden tmp/bak).
+   * unchanged (each leaf still swaps through its own hidden pair).
    *
    * Returns the number of leaf partitions whose files were rewritten.
    */
@@ -466,6 +457,25 @@ object TableSink {
     rewritten.get()
   }
 
+  /**
+   * Small-file compaction: rewrite an UNPARTITIONED table directory
+   * into ~`targetFileBytes` output files, sized from the source's
+   * actual scan size. The streaming/incremental-ingest follow-up
+   * every large deployment needs — thousands of tiny files turn scan
+   * planning and open() overhead into the bottleneck.
+   *
+   * - Hive-partitioned (`col=value`) layouts are REJECTED: a blind
+   *   rewrite would flatten the directories (losing partition pruning)
+   *   and bake inferred partition types into the data. Compact each
+   *   partition directory individually instead.
+   * - Already-compacted input (file count at or below the target) is
+   *   a no-op — a scheduled compaction cycle must not rewrite the
+   *   whole table every run.
+   * - Reduction is `coalesce` (narrow — no shuffle).
+   * - The rewrite swaps in through [[Commit]] with the table's one
+   *   residue pair, shared by every TableSink mutation, so a crash
+   *   mid-swap is recovered by the next call on the table.
+   */
   def compact(
       spark: org.apache.spark.sql.SparkSession,
       path: String,
@@ -474,6 +484,7 @@ object TableSink {
     require(targetFileBytes > 0, "targetFileBytes must be positive")
     val hPath = new org.apache.hadoop.fs.Path(path)
     val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    recoverSwap(fs, hPath)
     val entries = fs.listStatus(hPath)
     if (entries.exists(e => e.isDirectory && e.getPath.getName.contains("=")))
       throw new IllegalArgumentException(
@@ -485,23 +496,7 @@ object TableSink {
     val nFiles = ((bytes + targetFileBytes - 1) / targetFileBytes)
       .max(BigInt(1)).min(BigInt(Int.MaxValue)).toInt
     if (nFiles >= curFiles) return // nothing to merge
-    // Dot-prefixed swap siblings: when the target is a LEAF of a
-    // partitioned table (compactPartitioned), an undotted
-    // `part=p0__compact_tmp` sibling would sit inside the partition
-    // tree and feed Spark's partition inference — hidden (`.`-led)
-    // paths are skipped by every Hadoop/Spark file index, so a crash
-    // remnant or mid-swap state is invisible to concurrent readers.
-    val parent = hPath.getParent
-    val tmp = new org.apache.hadoop.fs.Path(parent, "." + hPath.getName + "__compact_tmp")
-    val bak = new org.apache.hadoop.fs.Path(parent, "." + hPath.getName + "__compact_bak")
-    df.coalesce(nFiles).write.mode(SaveMode.Overwrite).format(format).save(tmp.toString)
-    if (!fs.rename(hPath, bak))
-      throw new java.io.IOException(s"compact: rename $path -> $bak failed")
-    if (!fs.rename(tmp, hPath)) {
-      fs.rename(bak, hPath) // roll back; original untouched
-      throw new java.io.IOException(s"compact: rename $tmp -> $path failed (rolled back)")
-    }
-    fs.delete(bak, true) // best effort; leftover bak is harmless
+    swapInto(fs, hPath, df.coalesce(nFiles), format)
   }
 
   /** Outcome of [[deleteKeys]]: how surgical the delete was. */
@@ -520,13 +515,15 @@ object TableSink {
    * read per file; each affected file is rewritten in place
    * (filter → temp sibling → swap), files that go empty are removed,
    * and untouched files keep their bytes — byte-identity of the
-   * untouched set is the machine-checkable "surgical" claim.
+   * untouched set is the machine-checkable "surgical" claim. NULL
+   * keys match no key: their rows stay.
    *
-   * Crash-safety: per-file delete-then-rename (not atomic); a rerun
-   * of the same delete is IDEMPOTENT (filtering absent keys is a
-   * no-op rewrite, a leftover tmp sibling is hidden from readers by
-   * its dot prefix and overwritten on retry). Long keys only — the
-   * footer statistics comparison is typed.
+   * Crash-safety: each rewritten file swaps in through [[Commit]]
+   * from dot-prefixed siblings readers never see, and the call first
+   * recovers the residue its listing finds, so a file caught between
+   * renames is restored, never lost. A rerun of the same delete is
+   * IDEMPOTENT. Long keys only — the footer statistics comparison is
+   * typed.
    */
   def deleteKeys(
       spark: org.apache.spark.sql.SparkSession,
@@ -539,10 +536,20 @@ object TableSink {
     val conf = spark.sparkContext.hadoopConfiguration
     val hPath = new org.apache.hadoop.fs.Path(path)
     val fs = hPath.getFileSystem(conf)
-    val files = fs.listStatus(hPath).map(_.getPath)
-      .filter(p => p.getName.endsWith(".parquet") && !p.getName.startsWith(".")
-        && !p.getName.startsWith("_"))
-      .sortBy(_.getName)
+    def sibling(file: String, role: String) =
+      new org.apache.hadoop.fs.Path(hPath, s".${file}__delete_$role")
+    val Residue = """\.(.+)__delete_(?:stage|tmp|bak)""".r
+    def listNames() = fs.listStatus(hPath).map(_.getPath.getName)
+    val listed = listNames()
+    val crashed = listed.collect { case Residue(file) => file }.distinct
+    crashed.foreach { file =>
+      Commit.recover(fs, new org.apache.hadoop.fs.Path(hPath, file),
+        sibling(file, "tmp"), sibling(file, "bak")): Unit
+      fs.delete(sibling(file, "stage"), true): Unit
+    }
+    val files = (if (crashed.isEmpty) listed else listNames())
+      .filter(n => n.endsWith(".parquet") && !n.startsWith(".") && !n.startsWith("_"))
+      .sorted.map(new org.apache.hadoop.fs.Path(hPath, _))
     val keySet = keys.toSet
     def rangeOf(p: org.apache.hadoop.fs.Path): Option[(Long, Long)] = {
       val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
@@ -572,25 +579,24 @@ object TableSink {
       }
       if (hit) {
         val kept = spark.read.parquet(p.toString)
-          .filter(!col(keyCol).isin(keySet.toSeq: _*))
+          .filter(col(keyCol).isNull || !col(keyCol).isin(keySet.toSeq: _*))
         if (kept.isEmpty) {
           // every row deleted: removing the file IS the rewrite (an
           // empty parquet part would otherwise take its place)
           fs.delete(p, false)
           removed += 1
         } else {
-          val tmpDir = new org.apache.hadoop.fs.Path(
-            p.getParent, s".${p.getName}__delete_tmp")
-          fs.delete(tmpDir, true)
-          kept.coalesce(1).write.mode(SaveMode.Overwrite).parquet(tmpDir.toString)
-          val newPart = fs.listStatus(tmpDir).map(_.getPath)
+          val stage = sibling(p.getName, "stage")
+          val tmp = sibling(p.getName, "tmp")
+          kept.coalesce(1).write.mode(SaveMode.Overwrite).parquet(stage.toString)
+          val newPart = fs.listStatus(stage).map(_.getPath)
             .find(_.getName.endsWith(".parquet"))
             .getOrElse(throw new java.io.IOException(
               s"deleteKeys: rewrite of $p produced no part file"))
-          fs.delete(p, false)
-          require(fs.rename(newPart, p), s"deleteKeys: swap failed for $p")
+          Commit.move(fs, newPart, tmp)
+          Commit.replace(fs, p, tmp, sibling(p.getName, "bak"))
+          fs.delete(stage, true): Unit
           rewritten += 1
-          fs.delete(tmpDir, true)
         }
       }
     }

@@ -108,9 +108,9 @@ class TableSinkSpec extends AnyFunSuite {
     TableSink.upsert(spark, dir, Seq((2L, "B2"), (4L, "d")).toDF("k", "v"), Seq("k"))
     val back = spark.read.parquet(dir).as[(Long, String)].collect().sortBy(_._1)
     assert(back.toSeq == Seq((1L, "a"), (2L, "B2"), (3L, "c"), (4L, "d")))
-    // no leftover swap siblings
-    assert(!new java.io.File(dir + "__upsert_tmp").exists())
-    assert(!new java.io.File(dir + "__upsert_bak").exists())
+    // the swap went through the table's residue pair and left none
+    val parent = new java.io.File(dir).getParentFile
+    assert(parent.list().toSet == Set("u"), parent.list().toSeq)
   }
 
   test("upsert into a missing target creates it") {
@@ -322,6 +322,21 @@ class TableSinkSpec extends AnyFunSuite {
     assert(spark.read.parquet(dir).count() == 1)
   }
 
+  test("applyCdc: a NULL op fails loudly instead of deleting the keyed row") {
+    val dir = java.nio.file.Files.createTempDirectory("sink").toString + "/cdcn"
+    TableSink.writeTruncate(Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("k", "v"), dir)
+    val delta = Seq[(Long, String, String)]((2L, "B", null), (4L, "d", "U"))
+      .toDF("k", "v", "_op")
+    Seq(true, false).foreach { checkUniqueKeys =>
+      val e = intercept[IllegalArgumentException] {
+        TableSink.applyCdc(spark, dir, delta, Seq("k"), checkUniqueKeys = checkUniqueKeys)
+      }
+      assert(e.getMessage.contains("must be 'U' or 'D'"), e.getMessage)
+      val back = spark.read.parquet(dir).as[(Long, String)].collect().sortBy(_._1)
+      assert(back.toSeq == Seq((1L, "a"), (2L, "b"), (3L, "c")), s"$checkUniqueKeys")
+    }
+  }
+
   test("applyCdc with the uniqueness check waived: intra-batch U+D, D wins") {
     val dir = java.nio.file.Files.createTempDirectory("sink").toString + "/cdcd"
     TableSink.applyCdc(spark, dir,
@@ -424,5 +439,16 @@ class TableSinkSpec extends AnyFunSuite {
     assert(rep.nDeletedFiles >= 1, s"$rep")
     val back = spark.read.parquet(dir).select("k").as[Long].collect().toSet
     assert(back == (1000L until 1100L).toSet)
+  }
+
+  test("deleteKeys keeps the rows whose key is NULL") {
+    val dir = java.nio.file.Files.createTempDirectory("tdel3").toString + "/t"
+    Seq((Some(1L), "a"), (None, "x"), (Some(5L), "e")).toDF("k", "v")
+      .coalesce(1).write.parquet(dir)
+    val rep = TableSink.deleteKeys(spark, dir, "k", Seq(1L))
+    assert(rep.nRewritten == 1, s"$rep")
+    val back = spark.read.parquet(dir).as[(Option[Long], String)].collect()
+      .sortBy(_._2).toSeq
+    assert(back == Seq((Some(5L), "e"), (None, "x")))
   }
 }
