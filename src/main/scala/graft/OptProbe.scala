@@ -1,9 +1,13 @@
 package graft
 
+import graft.operators.Relational
+import org.apache.spark.graftglue.Bus
 import org.apache.spark.sql.functions._
 
-/** r19 optimization-session stage probes (ad-hoc; not part of the
-  * driver contract). Usage: runMain graft.OptProbe [sfDir] [probe]. */
+/** Stage-by-stage cost probes for the heavy paths (ad-hoc; not part of
+  * the driver contract). Usage: runMain graft.OptProbe [sfDir] [probe],
+  * probe one of linkage, triangles, kernelbench, jobcount, aqeplan,
+  * nest, interp, obscheck. */
 object OptProbe {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
@@ -110,10 +114,10 @@ object OptProbe {
           })
         args.drop(2).foreach { q =>
           noop(SparkEntry.queries(q)(spark, dir)) // warm (JIT, scratch bootstrap)
-          Thread.sleep(500)
+          Bus.drain(spark.sparkContext)
           val before = jobs.get()
           noop(SparkEntry.queries(q)(spark, dir))
-          Thread.sleep(1500) // listener bus is async; settle before reading
+          Bus.drain(spark.sparkContext)
           println(s"PROBE jobcount $q: ${jobs.get() - before} jobs")
         }
       case "aqeplan" =>
@@ -129,6 +133,50 @@ object OptProbe {
           val scans = "Scan parquet".r.findAllIn(plan).length
           println(s"PROBE aqeplan $q: ReusedExchange=$reused scans=$scans")
           println(plan.linesIterator.take(120).mkString("\n"))
+        }
+      case "nest" =>
+        // nest with and without the child sort, against the shipped
+        // q_nested_denorm. Usage: runMain graft.OptProbe <sfDir> nest
+        val customer = Tables.table(spark, dir, "customer")
+        val items = Relational.innerJoinMerge(Tables.table(spark, dir, "orders"),
+          Tables.table(spark, dir, "lineitem"), "o_orderkey", "l_orderkey")
+        time("nest-unsorted") {
+          noop(customer.join(
+            items.groupBy(col("o_custkey").as("k"))
+              .agg(collect_list(struct(items.columns.map(col).toIndexedSeq: _*)).as("arr")),
+            col("c_custkey") === col("k"), "left"))
+        }
+        time("nest-sorted") {
+          noop(Relational.nest(customer, items, "c_custkey", "o_custkey", "order_items",
+            sortChildBy = Seq("o_orderkey", "l_linenumber")))
+        }
+        time("q_nested_denorm") {
+          noop(SparkEntry.queries("q_nested_denorm")(spark, dir))
+        }
+      case "interp" =>
+        // B84 interpolate stage costs: the daily rollup alone, the spine
+        // join without windows, and the shipped operator (running +
+        // unbounded-following frames). Usage: runMain graft.OptProbe <sfDir> interp
+        val nation = Tables.table(spark, dir, "nation")
+          .select(col("n_nationkey"), col("n_name"))
+        val daily = Tables.table(spark, dir, "orders").select(col("o_custkey"),
+            datediff(to_date(col("o_orderdate")), to_date(lit("1992-01-01")))
+              .cast("long").as("d"),
+            round(col("o_totalprice") * 100, 0).cast("long").as("rev_cents"))
+          .join(broadcast(Tables.table(spark, dir, "customer")
+              .select(col("c_custkey"), col("c_nationkey"))),
+            col("o_custkey") === col("c_custkey"))
+          .join(broadcast(nation), col("c_nationkey") === col("n_nationkey"))
+          .groupBy("n_name", "d").agg(sum("rev_cents").as("rev_cents"))
+        time("interp: daily rollup only")(noop(daily))
+        val span = daily.groupBy("n_name")
+          .agg(min("d").as("p0"), max("d").as("p1"))
+          .select(col("n_name"), explode(sequence(col("p0"), col("p1"))).as("d"))
+        time("interp: spine + left join, no windows") {
+          noop(span.join(daily, Seq("n_name", "d"), "left"))
+        }
+        time("interp: shipped linearFill") {
+          noop(graft.operators.Interpolate.linearFill(daily, Seq("n_name"), "d", "rev_cents"))
         }
       case "obscheck" =>
         // does an Observation fire on a localCheckpoint materialization?

@@ -1,14050 +1,28 @@
 package graft
 
-import graft.operators.Relational
-import graft.operators.Relational.Lookup
 import graft.pipelines.Denorm
-import graft.functions.TextFunctions
-import graft.sources.JsonTables
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
 
-/** Driver contract — see /root/repo/SURVEY.md §2 for the inventory. */
+/** Driver contract — see SURVEY.md §2 for the inventory. Each query's
+ * name, builder and oracle SQL live together as one [[QuerySpec]] in
+ * the group object of its inventory section: [[ReferenceQueries]] (A),
+ * [[AnalyticsQueries]] (B), [[CorpusQueries]] (C) and
+ * [[StreamingQueries]] (D). */
 object SparkEntry {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.table(s, dir, name)
-
-  /** Where the reference checkout lives (B14 reads its fixture JSON
-   * directly). Overridable so the fidelity row survives a checkout
-   * that puts the reference elsewhere (ADVICE r15); the DuckDB oracle
-   * SQL is built from the SAME value, so both engines always read the
-   * same files. */
-  private val referenceRoot: String =
-    sys.env.getOrElse("GRAFT_REFERENCE_ROOT", "/root/reference")
-
-  /** 2-decimal money/rate column scaled to an exact integer (cents).
-   * Summing money in integer space makes aggregates independent of
-   * reduction order — a double sum over millions of partitions is not
-   * reproducible at the rounding boundary, an integer sum is. */
-  private def cents(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    round(c * 100, 0).cast("long")
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     Denorm.flatDenorm(spark, "/root/testdata/sf0.001")
 
-  // ---------------------------------------------------------------- A block
-
-  /** A1: parquet→json-lines→namespaced load round trip. */
-  private def qJsonRoundtrip(s: SparkSession, dir: String): DataFrame = {
-    val nation = t(s, dir, "nation")
-    JsonTables
-      .loadTableFromText(nation.toJSON, "nation", nation.schema)
-      .orderBy("nation_n_nationkey")
-  }
-
-  /** B14: reference-fidelity row — the reference's OWN test data
-   * (src/test/resources/{artist,artist_credit_name,recording}.json,
-   * the fixtures MusicBrainzTransformsTest.java:97-198 runs) pushed
-   * through the A1 inferred load + A3 join + A5 nest, emitted flat so
-   * the driver's DuckDB replay of the same files hash-checks the
-   * 448-row credit⋈recording join AND the nest cardinality (n_nested,
-   * the per-artist size of the nested array) in one relation.
-   * ReferenceFidelitySpec keeps the in-JVM assertions (expected ids,
-   * single-artist nest shape); this row carries the fidelity claim
-   * through the independent-engine gate. Reads the reference fixtures
-   * directly — they are fixed, read-only inputs, not testdata tables,
-   * so `dir` is unused. */
-  private def qReferenceFidelity(s: SparkSession, dir: String): DataFrame = {
-    val res = s"$referenceRoot/src/test/resources"
-    def load(name: String) =
-      JsonTables.loadTableInferred(s.read.textFile(s"$res/$name.json"), name)
-    val credits = load("artist_credit_name")
-    val recordings = load("recording")
-    val artists = load("artist")
-    val joined = Relational.innerJoinMerge(credits, recordings,
-      "artist_credit_name_artist_credit", "recording_artist_credit")
-    val nested = Relational.nest(artists, joined,
-      "artist_id", "artist_credit_name_artist", "artist_recordings", inner = true)
-    val nestCounts = nested.select(col("artist_id"), col("artist_name"),
-      size(col("artist_recordings")).cast("long").as("n_nested"))
-    joined
-      .join(nestCounts, col("artist_credit_name_artist") === nestCounts("artist_id"))
-      .select(
-        col("artist_credit_name_artist_credit").as("credit_id"),
-        col("artist_credit_name_name").as("credit_name"),
-        col("recording_id"), col("recording_name"), col("recording_length"),
-        col("artist_id"), col("artist_name"), col("n_nested"))
-      .orderBy("credit_id", "recording_id")
-  }
-
-  /** A3: inner join with namespace-merged columns. */
-  private def qJoinMerge(s: SparkSession, dir: String): DataFrame =
-    Relational
-      .innerJoinMerge(t(s, dir, "customer"), t(s, dir, "orders"), "c_custkey", "o_custkey")
-      .select(
-        col("c_custkey"), col("c_name"), col("c_nationkey"), col("c_acctbal"),
-        col("c_mktsegment"), col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
-        col("o_totalprice"), col("o_orderdate").cast("date").as("o_orderdate"),
-        col("o_orderpriority"))
-      .orderBy("o_orderkey")
-
-  /** A4: broadcast lookup replacing FK ids with labels. */
-  private def qLookupReplace(s: SparkSession, dir: String): DataFrame =
-    Relational
-      .lookupReplace(
-        t(s, dir, "customer"),
-        Lookup(t(s, dir, "nation"), "n_nationkey", "n_name", Seq("c_nationkey")))
-      .select("c_custkey", "c_name", "c_nationkey", "c_acctbal", "c_mktsegment")
-      .orderBy("c_custkey")
-
-  /** A5: nest orders under customer, project order-insensitive stats. */
-  private def qNest(s: SparkSession, dir: String): DataFrame =
-    Relational
-      .nest(t(s, dir, "customer"),
-        t(s, dir, "orders").withColumn("o_total_cents", cents(col("o_totalprice"))),
-        "c_custkey", "o_custkey", "orders", sortChildBy = Seq("o_orderkey"))
-      .select(
-        col("c_custkey"),
-        size(col("orders")).cast("long").as("n_orders"),
-        // cents precomputed in the flat child (codegen'd), summed by the
-        // native ArrayFieldSum — no interpreted lambda over the array
-        (graft.functions.expressions.arrayFieldSum(col("orders"), "o_total_cents") / 100.0)
-          .as("sum_total"))
-      .orderBy("c_custkey")
-
-  /** A6: nesting limit — chunk nested arrays at 5, duplicating parents. */
-  private def qNestChunked(s: SparkSession, dir: String): DataFrame =
-    Relational
-      .nestChunked(
-        Relational.nest(t(s, dir, "orders"), t(s, dir, "lineitem"), "o_orderkey",
-          "l_orderkey", "items", inner = true, sortChildBy = Seq("l_linenumber")),
-        "items", limit = 5)
-      .groupBy("o_orderkey")
-      .agg(count(lit(1)).as("n_chunks"), sum(size(col("items"))).cast("long").as("n_items"))
-      .orderBy("o_orderkey")
-
-  /** A11: schema conformance (Relational.conformToSchema — the
-   * reference's transformToTableRows) driven end-to-end: a
-   * SchemaBuilder-built target schema projects the nested
-   * orders+items frame, exercising all three conformance paths at
-   * once — a field absent from the input (`audit_note`) becomes a
-   * typed null, the repeated record narrows element-wise to a
-   * 2-field struct (Spark rejects subset-struct casts, so this is
-   * the transform() path), and the 4-item nesting limit splits
-   * overflow rows. The oracle replays the chunk geometry from raw
-   * lineitem rows: chunks are contiguous l_linenumber-sorted slices,
-   * so (count, min, sum) of each chunk's linenumbers pins every
-   * split row. */
-  private def qConform(s: SparkSession, dir: String): DataFrame = {
-    val itemRecord = graft.schema.SchemaBuilder.create()
-      .intField("l_linenumber")
-      .doubleField("l_quantity")
-      .repeatedRecord("items")
-    val target = graft.schema.SchemaBuilder.create()
-      .intField("o_orderkey")
-      .stringField("o_orderstatus")
-      .stringField("audit_note") // not in the input → typed null
-      .field(itemRecord)
-      .schema()
-    val nested = Relational.nest(t(s, dir, "orders"), t(s, dir, "lineitem"),
-      "o_orderkey", "l_orderkey", "items", inner = true,
-      sortChildBy = Seq("l_linenumber"))
-    Relational.conformToSchema(nested, target, nestingLimit = 4)
-      .select(col("o_orderkey"), col("o_orderstatus"), col("audit_note"),
-        size(col("items")).cast("long").as("n_in_chunk"),
-        element_at(col("items.l_linenumber"), 1).as("first_ln"),
-        aggregate(col("items.l_linenumber"), lit(0L), (a, x) => a + x).as("sum_ln"))
-      .orderBy("o_orderkey", "first_ln")
-  }
-
-  /** A7: BQETLSimple — flat denormalized wide table. */
-  private def qFlatDenorm(s: SparkSession, dir: String): DataFrame =
-    Denorm.flatDenorm(s, dir)
-      .select(
-        col("c_custkey"), col("c_name"), col("c_nationkey"),
-        col("o_orderkey"), col("o_totalprice"),
-        col("o_orderdate").cast("date").as("o_orderdate"), col("o_orderpriority"),
-        col("l_linenumber"), col("l_quantity"), col("l_extendedprice"))
-      .orderBy("o_orderkey", "l_linenumber")
-
-  /** A8: BQETLNested — nested repeated records, projected to
-   * order-insensitive per-parent stats for the oracle. */
-  private def qNestedDenorm(s: SparkSession, dir: String): DataFrame =
-    Denorm.nestedDenorm(s, dir)
-      .select(
-        col("c_custkey"), col("c_name"),
-        size(col("order_items")).cast("long").as("n_items"),
-        // codegen'd nested aggregation — aggregate() HOFs run interpreted
-        (graft.functions.expressions.arrayFieldSum(col("order_items"), "l_rev_cents") / 10000.0)
-          .as("sum_rev"))
-      .orderBy("c_custkey")
-
-  // ---------------------------------------------------------------- B block
-
-  /** B1: filtered scan with predicate+projection pushdown. */
-  private def qScanFilter(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem")
-      .filter(col("l_quantity") >= 45 && col("l_returnflag") === "R")
-      .select("l_orderkey", "l_linenumber", "l_quantity", "l_extendedprice")
-      .orderBy("l_orderkey", "l_linenumber")
-
-  /** B2: TPC-H Q1-shape pricing summary. */
-  private def qAggPricing(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem")
-      .filter(col("l_shipdate").cast("date") <= lit("2000-09-02").cast("date"))
-      .groupBy("l_returnflag", "l_linestatus")
-      .agg(
-        (sum(cents(col("l_quantity"))) / 100.0).as("sum_qty"),
-        (sum(cents(col("l_extendedprice"))) / 100.0).as("sum_base"),
-        (sum(cents(col("l_extendedprice")) * cents(lit(1.0) - col("l_discount"))) / 10000.0).as("sum_disc"),
-        (sum(cents(col("l_extendedprice")) * cents(lit(1.0) - col("l_discount")) * cents(lit(1.0) + col("l_tax"))) / 1000000.0).as("sum_charge"),
-        (sum(cents(col("l_quantity"))) / (lit(100.0) * count(lit(1)))).as("avg_qty"),
-        (sum(cents(col("l_discount"))) / (lit(100.0) * count(lit(1)))).as("avg_disc"),
-        count(lit(1)).as("count_order"))
-      .orderBy("l_returnflag", "l_linestatus")
-
-  /** B3a: TPC-H Q3-shape — top 10 unshipped orders by revenue. */
-  private def qJoinAgg3(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "customer").filter(col("c_mktsegment") === "BUILDING")
-      .join(t(s, dir, "orders").filter(col("o_orderdate").cast("date") < lit("1998-03-15").cast("date")),
-        col("c_custkey") === col("o_custkey"))
-      .join(t(s, dir, "lineitem").filter(col("l_shipdate").cast("date") > lit("1998-03-15").cast("date")),
-        col("o_orderkey") === col("l_orderkey"))
-      .groupBy(col("o_orderkey"), col("o_orderdate").cast("date").as("o_orderdate"), col("o_orderpriority"))
-      .agg((sum(cents(col("l_extendedprice")) * cents(lit(1.0) - col("l_discount"))) / 10000.0).as("revenue"))
-      .select("o_orderkey", "revenue", "o_orderdate", "o_orderpriority")
-      .orderBy(col("revenue").desc, col("o_orderkey"))
-      .limit(10)
-
-  /** B3b: TPC-H Q5-shape — local supplier volume for ASIA, 1996. */
-  private def qLocalSupplier(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "customer")
-      .join(t(s, dir, "orders")
-          .filter(col("o_orderdate").cast("date") >= lit("1996-01-01").cast("date") &&
-                  col("o_orderdate").cast("date") <  lit("1997-01-01").cast("date")),
-        col("c_custkey") === col("o_custkey"))
-      .join(t(s, dir, "lineitem"), col("l_orderkey") === col("o_orderkey"))
-      .join(t(s, dir, "supplier"),
-        col("l_suppkey") === col("s_suppkey") && col("c_nationkey") === col("s_nationkey"))
-      .join(broadcast(t(s, dir, "nation")), col("s_nationkey") === col("n_nationkey"))
-      .join(broadcast(t(s, dir, "region")).filter(col("r_name") === "ASIA"),
-        col("n_regionkey") === col("r_regionkey"))
-      .groupBy("n_name")
-      .agg((sum(cents(col("l_extendedprice")) * cents(lit(1.0) - col("l_discount"))) / 10000.0).as("revenue"))
-      .orderBy(col("revenue").desc, col("n_name"))
-
-  /** B4a: semi join — customers having at least one order. */
-  private def qSemiJoin(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "customer")
-      .join(t(s, dir, "orders"), col("c_custkey") === col("o_custkey"), "left_semi")
-      .select("c_custkey", "c_name")
-      .orderBy("c_custkey")
-
-  /** B4b: anti join — customers with no orders. */
-  private def qAntiJoin(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "customer")
-      .join(t(s, dir, "orders"), col("c_custkey") === col("o_custkey"), "left_anti")
-      .select("c_custkey", "c_name")
-      .orderBy("c_custkey")
-
-  /** B5a: window — top-3 orders by total price per customer. */
-  private def qWindowTopn(s: SparkSession, dir: String): DataFrame = {
-    val w = Window.partitionBy("o_custkey").orderBy(col("o_totalprice").desc, col("o_orderkey"))
-    t(s, dir, "orders")
-      .withColumn("rn", row_number().over(w).cast("long"))
-      .filter(col("rn") <= 3)
-      .select("o_custkey", "rn", "o_orderkey", "o_totalprice")
-      .orderBy("o_custkey", "rn")
-  }
-
-  /** B5b: window — running order total per customer. */
-  private def qRunningSum(s: SparkSession, dir: String): DataFrame = {
-    val w = Window.partitionBy("o_custkey").orderBy(col("o_orderdate"), col("o_orderkey"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    t(s, dir, "orders")
-      .withColumn("running_total", sum("o_totalprice").over(w))
-      .select("o_custkey", "o_orderkey", "running_total")
-      .orderBy("o_custkey", "o_orderkey")
-  }
-
-  /** events.ts is TIMESTAMP(NANOS) in parquet; depending on
-   * `spark.sql.legacy.parquet.nanosAsLong` it reads as Long (ns) or
-   * TimestampType. Normalize to (ts: timestamp, ts_us: long). */
-  private def withEventTime(events: DataFrame): DataFrame = {
-    import org.apache.spark.sql.types.LongType
-    if (events.schema("ts").dataType == LongType)
-      events
-        // integer division — `/` on longs goes through double and loses
-        // microsecond precision on epoch-nanosecond magnitudes
-        .withColumn("ts_us", expr("ts div 1000"))
-        .withColumn("ts", timestamp_micros(col("ts_us")))
-    else
-      events
-        .withColumn("ts", col("ts").cast("timestamp"))
-        .withColumn("ts_us", unix_micros(col("ts")))
-  }
-
-  /** B6: gap-based sessionization (30 min) over the event stream. */
-  private def qSessionize(s: SparkSession, dir: String): DataFrame = {
-    val ev = withEventTime(t(s, dir, "events"))
-      .select(col("user_id"), col("event_id"), col("value"), col("ts"), col("ts_us"))
-    val byUser = Window.partitionBy("user_id").orderBy("ts_us", "event_id")
-    val cum = Window.partitionBy("user_id").orderBy("ts_us", "event_id")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    ev
-      .withColumn("prev_us", lag("ts_us", 1).over(byUser))
-      .withColumn("new_sess",
-        when(col("prev_us").isNull || col("ts_us") - col("prev_us") > 1800L * 1000000L, 1L).otherwise(0L))
-      .withColumn("session_id", sum("new_sess").over(cum))
-      .groupBy("user_id", "session_id")
-      .agg(
-        count(lit(1)).as("n_events"),
-        date_format(min(col("ts")), "yyyy-MM-dd HH:mm:ss").as("session_start"),
-        (sum(cents(col("value"))) / 100.0).as("sum_value"))
-      .orderBy("user_id", "session_id")
-  }
-
-  /** B8: rollup grouping sets. */
-  private def qRollup(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem")
-      .rollup("l_returnflag", "l_linestatus")
-      .agg(count(lit(1)).as("n"), (sum(cents(col("l_quantity"))) / 100.0).as("qty"))
-      .orderBy(asc_nulls_first("l_returnflag"), asc_nulls_first("l_linestatus"))
-
-  /** B8b: full cube over two grouping columns. */
-  private def qCube(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "orders")
-      .cube("o_orderstatus", "o_orderpriority")
-      .agg(count(lit(1)).as("n"),
-        (sum(cents(col("o_totalprice"))) / 100.0).as("total"))
-      .orderBy(asc_nulls_first("o_orderstatus"), asc_nulls_first("o_orderpriority"))
-
-  /** B-extra: TPC-H Q6-shape forecast revenue (single-row aggregate). */
-  private def qForecastRevenue(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem")
-      .filter(
-        col("l_shipdate").cast("date") >= lit("1996-01-01").cast("date") &&
-        col("l_shipdate").cast("date") <  lit("1997-01-01").cast("date") &&
-        col("l_discount") >= 0.05 && col("l_discount") <= 0.07 &&
-        col("l_quantity") < 24)
-      .agg((sum(cents(col("l_extendedprice")) * cents(col("l_discount"))) / 10000.0).as("revenue"))
-
-  /** B9: Q13-shape — distribution of customers by order count
-   * (left outer join, two-level aggregation). */
-  private def qCustDist(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "customer")
-      .join(t(s, dir, "orders"), col("c_custkey") === col("o_custkey"), "left")
-      .groupBy("c_custkey")
-      .agg(count(col("o_orderkey")).as("c_count"))
-      .groupBy("c_count")
-      .agg(count(lit(1)).as("custdist"))
-      .orderBy(col("custdist").desc, col("c_count").desc)
-
-  /** B10: Q18-shape — large-volume orders (HAVING on a grouped sum),
-   * joined back to customer. */
-  private def qBigOrders(s: SparkSession, dir: String): DataFrame = {
-    val big = t(s, dir, "lineitem")
-      .groupBy("l_orderkey")
-      .agg((sum(cents(col("l_quantity"))) / 100.0).as("sum_qty"))
-      .filter(col("sum_qty") > 250)
-    t(s, dir, "orders")
-      .join(big, col("o_orderkey") === col("l_orderkey"))
-      .join(t(s, dir, "customer"), col("c_custkey") === col("o_custkey"))
-      .select("c_custkey", "c_name", "o_orderkey", "o_totalprice", "sum_qty")
-      .orderBy("o_orderkey")
-  }
-
-  /** B11: Q2-shape correlated scalar subquery — customers holding the
-   * maximum account balance of their nation. */
-  private def qMaxBalPerNation(s: SparkSession, dir: String): DataFrame = {
-    val mx = t(s, dir, "customer")
-      .groupBy(col("c_nationkey").as("mk"))
-      .agg(max("c_acctbal").as("max_bal"))
-    t(s, dir, "customer")
-      .join(broadcast(mx), col("c_nationkey") === col("mk") && col("c_acctbal") === col("max_bal"))
-      .select("c_custkey", "c_name", "c_nationkey", "c_acctbal")
-      .orderBy("c_custkey")
-  }
-
-  /** B15: as-of join — for each purchase event, the user's latest
-   * click at or before it (backward inclusive; AsOf operator). */
-  private def qAsofJoin(s: SparkSession, dir: String): DataFrame = {
-    val ev = withEventTime(t(s, dir, "events"))
-    val purchases = ev.filter(col("event_type") === "purchase")
-      .select(col("event_id"), col("user_id"), col("ts_us"))
-    // unique (key, time) build side: max event_id among same-ts clicks
-    val clicks = ev.filter(col("event_type") === "click")
-      .groupBy(col("user_id").as("c_user"), col("ts_us").as("click_ts_us"))
-      .agg(max("event_id").as("click_id"))
-    graft.operators.AsOf
-      .asofJoin(purchases, clicks, "user_id", "c_user", "ts_us", "click_ts_us",
-        rightPayload = Seq("click_id", "click_ts_us"), outPrefix = "")
-      .orderBy("event_id")
-  }
-
-  /** B15b: FORWARD as-of join — for each purchase, the user's first
-   * click at or after it (the next-touch attribution direction). */
-  private def qAsofForward(s: SparkSession, dir: String): DataFrame = {
-    val ev = withEventTime(t(s, dir, "events"))
-    val purchases = ev.filter(col("event_type") === "purchase")
-      .select(col("event_id"), col("user_id"), col("ts_us"))
-    val clicks = ev.filter(col("event_type") === "click")
-      .groupBy(col("user_id").as("c_user"), col("ts_us").as("click_ts_us"))
-      .agg(max("event_id").as("click_id"))
-    graft.operators.AsOf
-      .asofJoin(purchases, clicks, "user_id", "c_user", "ts_us", "click_ts_us",
-        rightPayload = Seq("click_id", "click_ts_us"), outPrefix = "", direction = "forward")
-      .orderBy("event_id")
-  }
-
-  /** B15c (r14): NEAREST as-of join ([[graft.operators.AsOf
-   * .asofNearest]]) — for each purchase, the user's click CLOSEST in
-   * time in either direction (the sensor-fusion / quote-matching
-   * variant), ties resolving backward, tolerance 2h (farther matches
-   * null out, the row survives). Two sort-merge as-of passes + a
-   * row-local argmin — no range probe. Oracle ranks each purchase's
-   * clicks by (|gap| asc, direction: backward first) in DuckDB. */
-  private def qAsofNearest(s: SparkSession, dir: String): DataFrame = {
-    val ev = withEventTime(t(s, dir, "events"))
-    val purchases = ev.filter(col("event_type") === "purchase")
-      .select(col("event_id"), col("user_id"), col("ts_us"))
-    val clicks = ev.filter(col("event_type") === "click")
-      .groupBy(col("user_id").as("c_user"), col("ts_us").as("click_ts_us"))
-      .agg(max("event_id").as("click_id"))
-    graft.operators.AsOf
-      .asofNearest(purchases, clicks, "user_id", "c_user", "ts_us", "click_ts_us",
-        rightPayload = Seq("click_id", "click_ts_us"), outPrefix = "",
-        maxGap = Some(2L * 3600L * 1000000L))
-      .orderBy("event_id")
-  }
-
-  /** B16: banded range join — same-user event pairs within one hour,
-   * aggregated per user (Ranged operator: bin + replicate, no theta
-   * nested loop). */
-  private def qRangePairs(s: SparkSession, dir: String): DataFrame = {
-    val ev = withEventTime(t(s, dir, "events"))
-    val a = ev.select(col("user_id").as("u_a"), col("event_id").as("id_a"), col("ts_us").as("ts_a"))
-    val b = ev.select(col("user_id").as("u_b"), col("event_id").as("id_b"), col("ts_us").as("ts_b"))
-    graft.operators.Ranged
-      .bandedJoin(a, b, "u_a", "u_b", "ts_a", "ts_b", 3600L * 1000000L)
-      .filter(col("id_a") < col("id_b"))
-      .groupBy(col("u_a").as("user_id"))
-      .agg(count(lit(1)).as("n_pairs"), sum(abs(col("ts_b") - col("ts_a"))).as("sum_gap_us"))
-      .orderBy("user_id")
-  }
-
-  /** B17: pivot — order counts by status x priority as wide columns. */
-  private def qPivot(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "orders")
-      .groupBy("o_orderstatus")
-      .pivot("o_orderpriority", Seq("1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW"))
-      .agg(count(lit(1)))
-      .select(col("o_orderstatus"),
-        coalesce(col("1-URGENT"), lit(0L)).as("n_urgent"),
-        coalesce(col("2-HIGH"), lit(0L)).as("n_high"),
-        coalesce(col("3-MEDIUM"), lit(0L)).as("n_medium"),
-        coalesce(col("4-NOT SPECIFIED"), lit(0L)).as("n_notspec"),
-        coalesce(col("5-LOW"), lit(0L)).as("n_low"))
-      .orderBy("o_orderstatus")
-
-  /** B17b: unpivot/melt — part metrics to long form. */
-  private def qUnpivot(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "part")
-      .unpivot(
-        Array(col("p_partkey")),
-        Array(col("p_size").cast("double").as("p_size"), col("p_retailprice")),
-        "metric", "value")
-      .orderBy("p_partkey", "metric")
-
-  /** B18: exact percentiles (median / p90) per brand, interpolated in
-   * cents space so both engines interpolate the same integers. */
-  private def qPercentile(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "part")
-      .groupBy("p_brand")
-      .agg(
-        (expr("percentile(cast(round(p_retailprice * 100, 0) as bigint), 0.5)") / 100.0).as("median_price"),
-        (expr("percentile(cast(round(p_retailprice * 100, 0) as bigint), 0.9)") / 100.0).as("p90_price"))
-      .orderBy("p_brand")
-
-  /** B18b: approximate percentile (Greenwald-Khanna sketch, the scale
-   * path when an exact per-group sort is too expensive) — the sketch
-   * value has no SQL oracle, so the query emits the exact median plus
-   * the deterministic "approx within the exact p45..p55 band"
-   * invariant, both hash-checked. */
-  private def qApproxPercentile(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "part")
-      .groupBy("p_brand")
-      .agg(
-        expr("percentile(cast(round(p_retailprice * 100, 0) as bigint), 0.5)").as("med"),
-        expr("approx_percentile(cast(round(p_retailprice * 100, 0) as bigint), 0.5)").as("apx"),
-        expr("percentile(cast(round(p_retailprice * 100, 0) as bigint), 0.45)").as("lo"),
-        expr("percentile(cast(round(p_retailprice * 100, 0) as bigint), 0.55)").as("hi"))
-      .select(col("p_brand"), (col("med") / 100.0).as("median_price"),
-        (col("apx") >= col("lo") && col("apx") <= col("hi")).as("approx_in_band"))
-      .orderBy("p_brand")
-
-  /** B19: TPC-H Q7-shape — shipping volume between two nations by
-   * ship year (two dimension roles for one table, disjunctive filter). */
-  private def qVolumeShip(s: SparkSession, dir: String): DataFrame = {
-    val n1 = broadcast(t(s, dir, "nation")
-      .select(col("n_nationkey").as("s_nk"), col("n_name").as("supp_nation")))
-    val n2 = broadcast(t(s, dir, "nation")
-      .select(col("n_nationkey").as("c_nk"), col("n_name").as("cust_nation")))
-    t(s, dir, "lineitem")
-      .join(t(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
-      .join(t(s, dir, "customer"), col("o_custkey") === col("c_custkey"))
-      .join(t(s, dir, "supplier"), col("l_suppkey") === col("s_suppkey"))
-      .join(n1, col("s_nationkey") === col("s_nk"))
-      .join(n2, col("c_nationkey") === col("c_nk"))
-      .filter((col("supp_nation") === "NATION_1" && col("cust_nation") === "NATION_2") ||
-              (col("supp_nation") === "NATION_2" && col("cust_nation") === "NATION_1"))
-      .groupBy(col("supp_nation"), col("cust_nation"),
-        year(col("l_shipdate").cast("date")).cast("long").as("l_year"))
-      .agg((sum(cents(col("l_extendedprice")) * cents(lit(1.0) - col("l_discount"))) / 10000.0).as("revenue"))
-      .orderBy("supp_nation", "cust_nation", "l_year")
-  }
-
-  /** B20: set operations — customers ordering in both 1995 and 1996
-   * (INTERSECT) vs only 1995 (EXCEPT), tagged and unioned. */
-  private def qSetOps(s: SparkSession, dir: String): DataFrame = {
-    def custsIn(yr: Int): DataFrame = t(s, dir, "orders")
-      .filter(year(col("o_orderdate").cast("date")) === yr)
-      .select("o_custkey").distinct()
-    val c95 = custsIn(1995)
-    val c96 = custsIn(1996)
-    c95.intersect(c96).withColumn("tag", lit("both"))
-      .unionByName(c95.except(c96).withColumn("tag", lit("only_1995")))
-      .select("tag", "o_custkey")
-      .orderBy("tag", "o_custkey")
-  }
-
-  /** B21: explicit GROUPING SETS (disjoint sets, unlike rollup/cube). */
-  private def qGroupingSets(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "lineitem").createOrReplaceTempView("lineitem_gsets")
-    // 100.0D: Spark SQL parses a bare 100.0 literal as DECIMAL(4,1) and
-    // bigint/decimal → decimal, while the oracle divides in double
-    s.sql("""SELECT l_returnflag, l_linestatus, COUNT(*) AS n,
-             SUM(CAST(ROUND(l_quantity * 100, 0) AS BIGINT)) / 100.0D AS qty
-             FROM lineitem_gsets
-             GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus))
-             ORDER BY l_returnflag ASC NULLS FIRST, l_linestatus ASC NULLS FIRST""")
-  }
-
-  /** B22: conditional aggregation (TPC-H Q12 shape) — priority-class
-   * line counts per return flag, CASE WHEN inside SUM. */
-  private def qCondAgg(s: SparkSession, dir: String): DataFrame = {
-    val highs = Seq("1-URGENT", "2-HIGH")
-    t(s, dir, "lineitem")
-      .join(t(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
-      .filter(col("l_shipdate").cast("date") >= lit("1996-01-01").cast("date") &&
-              col("l_shipdate").cast("date") <  lit("1997-01-01").cast("date"))
-      .groupBy("l_returnflag")
-      .agg(
-        sum(when(col("o_orderpriority").isin(highs: _*), 1L).otherwise(0L)).as("high_line_count"),
-        sum(when(col("o_orderpriority").isin(highs: _*), 0L).otherwise(1L)).as("low_line_count"))
-      .orderBy("l_returnflag")
-  }
-
-  /** B23: promo revenue share (TPC-H Q14 shape) — ratio of conditional
-   * to total aggregate, part dimension broadcast. */
-  private def qPromoShare(s: SparkSession, dir: String): DataFrame = {
-    val part = broadcast(t(s, dir, "part").select("p_partkey", "p_type"))
-    t(s, dir, "lineitem")
-      .filter(col("l_shipdate").cast("date") >= lit("1996-01-01").cast("date") &&
-              col("l_shipdate").cast("date") <  lit("1996-07-01").cast("date"))
-      .join(part, col("l_partkey") === col("p_partkey"))
-      .withColumn("rev_cents", cents(col("l_extendedprice")) * cents(lit(1.0) - col("l_discount")))
-      .agg((lit(100.0) * sum(when(col("p_type") === "PROMO", col("rev_cents")).otherwise(0L)) /
-        sum(col("rev_cents"))).as("promo_share"))
-  }
-
-  /** B24: NOT IN subquery (TPC-H Q16 flavor) — customers per nation,
-   * excluding nations that have a negative-balance supplier. */
-  private def qNotIn(s: SparkSession, dir: String): DataFrame = {
-    val bad = t(s, dir, "supplier").filter(col("s_acctbal") < 0)
-      .select(col("s_nationkey")).distinct()
-    t(s, dir, "customer")
-      .join(broadcast(bad), col("c_nationkey") === col("s_nationkey"), "left_anti")
-      .groupBy("c_nationkey")
-      .agg(count(lit(1)).as("n_cust"))
-      .orderBy("c_nationkey")
-  }
-
-  /** B25: scalar-average subquery + anti join (TPC-H Q22 shape) —
-   * above-average-balance customers with no 1995 order, grouped by a
-   * name-derived code. */
-  private def qGlobalCust(s: SparkSession, dir: String): DataFrame = {
-    val cust = t(s, dir, "customer")
-    // exact mean in cents space so the > boundary is bit-identical
-    val avgBal = cust.filter(col("c_acctbal") > 0)
-      .agg((sum(cents(col("c_acctbal"))) / (lit(100.0) * count(lit(1)))).as("__avg_bal"))
-    val o95 = t(s, dir, "orders")
-      .filter(year(col("o_orderdate").cast("date")) === 1995)
-      .select(col("o_custkey")).distinct()
-    cust.crossJoin(broadcast(avgBal))
-      .filter(col("c_acctbal") > col("__avg_bal"))
-      .join(o95, col("c_custkey") === col("o_custkey"), "left_anti")
-      .groupBy(substring(col("c_name"), 10, 2).as("code"))
-      .agg(count(lit(1)).as("numcust"),
-        (sum(cents(col("c_acctbal"))) / 100.0).as("totacctbal"))
-      .orderBy("code")
-  }
-
-  /** B26: ranking-function and frame surface — rank/dense_rank/
-   * percent_rank on a tie-prone key, ntile and moving/range frames on
-   * a total order. */
-  private def qWindowFrames(s: SparkSession, dir: String): DataFrame = {
-    val o = t(s, dir, "orders")
-      .withColumn("d", col("o_orderdate").cast("date"))
-      .withColumn("days", datediff(col("d"), lit("1995-01-01").cast("date")).cast("long"))
-      .withColumn("total_cents", cents(col("o_totalprice")))
-    val byDate  = Window.partitionBy("o_custkey").orderBy("d")
-    val total   = Window.partitionBy("o_custkey").orderBy("d", "o_orderkey")
-    val moving  = total.rowsBetween(-2, 0)
-    val ranged  = Window.partitionBy("o_custkey").orderBy("days").rangeBetween(-30, 0)
-    o.select(
-        col("o_custkey"), col("o_orderkey"),
-        rank().over(byDate).cast("long").as("rnk"),
-        dense_rank().over(byDate).cast("long").as("drnk"),
-        percent_rank().over(byDate).as("prnk"),
-        ntile(4).over(total).cast("long").as("quartile"),
-        (sum(col("total_cents")).over(moving) /
-          (lit(100.0) * count(lit(1)).over(moving))).as("moving_avg"),
-        (sum(col("total_cents")).over(ranged) / 100.0).as("sum_30d"))
-      .orderBy("o_custkey", "o_orderkey")
-  }
-
-  /** B27: date/time function surface — extraction, truncation,
-   * arithmetic, month boundaries. */
-  private def qDateFuncs(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "orders")
-      .withColumn("d", col("o_orderdate").cast("date"))
-      .select(
-        col("o_orderkey"),
-        col("d"),
-        year(col("d")).cast("long").as("yr"),
-        quarter(col("d")).cast("long").as("qtr"),
-        month(col("d")).cast("long").as("mo"),
-        dayofmonth(col("d")).cast("long").as("dom"),
-        date_trunc("month", col("d")).cast("date").as("month_start"),
-        date_add(col("d"), 30).as("plus30"),
-        last_day(col("d")).as("month_end"),
-        datediff(col("d"), lit("1995-01-01").cast("date")).cast("long").as("days_since"))
-      .orderBy("o_orderkey")
-
-  /** B28: string function surface — case, slicing, padding, search,
-   * replace, concat. */
-  private def qStringFuncs(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "part")
-      .select(
-        col("p_partkey"),
-        upper(col("p_name")).as("up_name"),
-        lower(col("p_brand")).as("lo_brand"),
-        substring(col("p_type"), 1, 3).as("type3"),
-        length(col("p_name")).cast("long").as("name_len"),
-        concat_ws("-", col("p_brand"), col("p_type")).as("brand_type"),
-        lpad(col("p_size").cast("string"), 3, "0").as("size_pad"),
-        regexp_replace(col("p_name"), "[aeiou]", "_").as("devowel"),
-        instr(col("p_name"), "widget").cast("long").as("widget_pos"),
-        reverse(col("p_brand")).as("rev_brand"),
-        split(col("p_brand"), "#").getItem(1).as("brand_num"))
-      .orderBy("p_partkey")
-
-  /** B30: TPC-H Q15 shape — top-revenue supplier(s) via max-of-
-   * aggregate; the max comparison stays in exact integer revenue
-   * units so the boundary is engine-independent. */
-  private def qTopSupplier(s: SparkSession, dir: String): DataFrame = {
-    val rev = t(s, dir, "lineitem")
-      .filter(col("l_shipdate").cast("date") >= lit("1996-01-01").cast("date") &&
-              col("l_shipdate").cast("date") <  lit("1996-04-01").cast("date"))
-      .groupBy("l_suppkey")
-      .agg(sum(cents(col("l_extendedprice")) * cents(lit(1.0) - col("l_discount"))).as("ru"))
-    rev.crossJoin(broadcast(rev.agg(max("ru").as("mx"))))
-      .filter(col("ru") === col("mx"))
-      .join(t(s, dir, "supplier"), col("l_suppkey") === col("s_suppkey"))
-      .select(col("s_suppkey"), col("s_name"), (col("ru") / 10000.0).as("total_rev"))
-      .orderBy("s_suppkey")
-  }
-
-  /** B31: TPC-H Q17 shape — revenue of small-quantity orders against a
-   * correlated per-part average-quantity subquery (broadcast both the
-   * brand dimension and the per-part averages). */
-  private def qSmallQtyRev(s: SparkSession, dir: String): DataFrame = {
-    val filtered = t(s, dir, "lineitem")
-      .join(broadcast(t(s, dir, "part").filter(col("p_brand") === "Brand#11")
-        .select("p_partkey")), col("l_partkey") === col("p_partkey"))
-    val avgq = filtered.groupBy(col("l_partkey").as("ak"))
-      .agg((sum(cents(col("l_quantity"))) / (lit(100.0) * count(lit(1)))).as("avg_qty"))
-    filtered.join(broadcast(avgq),
-        col("l_partkey") === col("ak") && col("l_quantity") < lit(0.2) * col("avg_qty"))
-      .agg((sum(cents(col("l_extendedprice"))) / (lit(100.0) * 7.0)).as("avg_yearly"))
-  }
-
-  /** B32: TPC-H Q19 shape — disjunction of brand/size/quantity
-   * conjunctions over a broadcast part join (OR-of-ANDs predicate
-   * pushdown exercise). */
-  private def qDisjunctiveRev(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem")
-      .join(broadcast(t(s, dir, "part")), col("l_partkey") === col("p_partkey"))
-      .filter(
-        (col("p_brand") === "Brand#11" && col("p_size").between(1, 15) &&
-          col("l_quantity").between(1, 20)) ||
-        (col("p_brand") === "Brand#12" && col("p_size").between(10, 25) &&
-          col("l_quantity").between(10, 30)))
-      .agg((sum(cents(col("l_extendedprice")) * cents(lit(1.0) - col("l_discount"))) / 10000.0)
-        .as("revenue"))
-
-  /** B33: TPC-H Q21 shape — suppliers whose returned line is the only
-   * returned line of a multi-supplier finished order (EXISTS another
-   * supplier's line; NOT EXISTS another supplier's returned line). */
-  private def qBlamedSupplier(s: SparkSession, dir: String): DataFrame = {
-    val li = t(s, dir, "lineitem").select("l_orderkey", "l_suppkey", "l_returnflag")
-    val fOrders = t(s, dir, "orders").filter(col("o_orderstatus") === "F").select("o_orderkey")
-    val l1 = li.filter(col("l_returnflag") === "R")
-      .join(fOrders, col("l_orderkey") === col("o_orderkey"))
-      .select(col("l_orderkey").as("ok"), col("l_suppkey").as("sk")).distinct()
-    val l2 = li.select(col("l_orderkey").as("ok2"), col("l_suppkey").as("sk2"))
-    val l3 = li.filter(col("l_returnflag") === "R")
-      .select(col("l_orderkey").as("ok3"), col("l_suppkey").as("sk3"))
-    l1.join(l2, col("ok") === col("ok2") && col("sk") =!= col("sk2"), "left_semi")
-      .join(l3, col("ok") === col("ok3") && col("sk") =!= col("sk3"), "left_anti")
-      .join(t(s, dir, "supplier"), col("sk") === col("s_suppkey"))
-      .groupBy("s_name")
-      .agg(count(lit(1)).as("numwait"))
-      .orderBy(col("numwait").desc, col("s_name"))
-      .limit(20)
-  }
-
-  /** B12: part-catalog stats — grouped aggregation over the part table
-   * (count, min/max size, exact mean retail price). */
-  private def qPartStats(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "part")
-      .groupBy("p_brand")
-      .agg(
-        count(lit(1)).as("n_parts"),
-        min("p_size").as("min_size"),
-        max("p_size").as("max_size"),
-        (sum(cents(col("p_retailprice"))) / (lit(100.0) * count(lit(1)))).as("avg_price"))
-      .orderBy("p_brand")
-
-  // ---------------------------------------------------------------- C block
-
-  /** C1: exact dedup by content hash (keep min id per hash). */
-  private def qDedupExact(s: SparkSession, dir: String): DataFrame =
-    graft.dedup.Dedup.exact(t(s, dir, "documents"), "doc_id", "text")
-      .orderBy("keep_id")
-
-  /** C2: MinHash+LSH near-dup keep-table — FULL oracle since r14: the
-   * banded LSH verifies exact Jaccard before any drop, so its
-   * keep-table equals the exact layered relation whenever recall
-   * holds, and the oracle replays that relation brute-force over
-   * shingle strings in DuckDB (the C4b tokenizer). A hash mismatch IS
-   * a recall regression — precisely what the row should catch. The
-   * q_dedup_minhash_sound gate independently hedges soundness;
-   * DedupSpec verifies semantics on planted near-duplicates. */
-  private def qDedupMinhash(s: SparkSession, dir: String): DataFrame =
-    graft.dedup.Dedup.minhashKeep(t(s, dir, "documents"), "doc_id", "text")
-      .orderBy("doc_id")
-
-  /** C2b: MinHash dedup soundness — docs the LSH pipeline DROPS that
-   * have no genuine earlier ≥0.8-Jaccard partner under brute-force
-   * comparison. Must be empty (the bucket stage verifies exact
-   * Jaccard before dropping, and the exact-md5 layer only collapses
-   * identical text); a non-empty result means the layered keep logic
-   * dropped a non-duplicate. Oracle: the empty relation. */
-  private def qDedupMinhashSound(s: SparkSession, dir: String): DataFrame = {
-    val docs = t(s, dir, "documents")
-    val dropped = graft.dedup.Dedup.minhashKeep(docs, "doc_id", "text")
-      .filter(!col("keep")).select("doc_id")
-    // NULL text → '' to mirror the pipeline's normalization: two
-    // NULL-text docs dedup against each other in minhashKeep, so the
-    // genuine-partner scan must see them as identical, not as NULL
-    // (which would never match and false-fail the empty oracle)
-    val base = docs.select(col("doc_id"),
-      graft.functions.expressions
-        .wordShingleHashes(coalesce(col("text"), lit("")), 3).as("sh"))
-    val a = base.repartition(s.sparkContext.defaultParallelism)
-      .select(col("doc_id").as("id_a"), col("sh").as("sh_a"))
-    val b = base.select(col("doc_id").as("id_b"), col("sh").as("sh_b"))
-    val genuine = a.join(broadcast(b),
-        col("id_b") < col("id_a") &&
-          graft.functions.expressions.hashJaccard(col("sh_a"), col("sh_b")) >= 0.8)
-      .select(col("id_a").as("dup_id")).distinct()
-    dropped.join(genuine, col("doc_id") === col("dup_id"), "left_anti")
-      .orderBy("doc_id")
-  }
-
-  /** C3: SimHash near-dup keep-table — FULL oracle since r15: the
-   * pigeonhole blocking is COMPLETE (4×16-bit blocks; ≤3 differing
-   * bits leave ≥1 block identical), so the keep-table provably equals
-   * the brute-force Hamming≤3 relation, and the oracle recomputes the
-   * 64-bit signature itself (FNV-1a token votes replayed in mod-2^64
-   * DuckDB arithmetic) — a mismatch is a signature or blocking bug,
-   * never banding recall noise. The standing q_dedup_simhash_sound
-   * gate hedges soundness independently. */
-  private def qDedupSimhash(s: SparkSession, dir: String): DataFrame =
-    graft.dedup.Dedup.simhashKeep(t(s, dir, "documents"), "doc_id", "text")
-      .orderBy("doc_id")
-
-  /** C3b: SimHash dedup soundness — docs the pigeonhole pipeline DROPS
-   * that have no genuine earlier Hamming≤3 partner under brute-force
-   * all-pairs comparison. Must be empty: the block stage verifies
-   * popcount(xor) before dropping, and the exact-md5 layer only
-   * collapses identical text (Hamming 0). A dropped doc is either an
-   * exact copy of an earlier doc (same text → same signature) or its
-   * representative has a verified near-dup with smaller id — both
-   * imply an earlier Hamming≤3 partner for the doc itself. Oracle:
-   * the empty relation. */
-  private def qDedupSimhashSound(s: SparkSession, dir: String): DataFrame = {
-    val docs = t(s, dir, "documents")
-    val dropped = graft.dedup.Dedup.simhashKeep(docs, "doc_id", "text")
-      .filter(!col("keep")).select("doc_id")
-    // coalesce NULL text to '' to mirror keepFirstLayered's normalization
-    val base = docs.select(col("doc_id"),
-      graft.dedup.Dedup.simhashOf(coalesce(col("text"), lit(""))).as("sim"))
-    val a = base.repartition(s.sparkContext.defaultParallelism)
-      .select(col("doc_id").as("id_a"), col("sim").as("sim_a"))
-    val b = base.select(col("doc_id").as("id_b"), col("sim").as("sim_b"))
-    val genuine = a.join(broadcast(b),
-        col("id_b") < col("id_a") &&
-          bit_count(col("sim_a").bitwiseXOR(col("sim_b"))) <= 3)
-      .select(col("id_a").as("dup_id")).distinct()
-    dropped.join(genuine, col("doc_id") === col("dup_id"), "left_anti")
-      .orderBy("doc_id")
-  }
-
-  /** C4: n-gram Jaccard over a deterministic pair sample (adjacent
-   * ids), the exact-verify primitive of the dedup stack. Emitted
-   * UNROUNDED: intersection/union of small integer counts is one IEEE
-   * division, bit-identical across engines, so the hash-space merge
-   * oracle-checks against DuckDB's string-space list ops. */
-  private def qDedupJaccard(s: SparkSession, dir: String): DataFrame = {
-    val docs = t(s, dir, "documents")
-    val a = docs.select(col("doc_id").as("id_a"), col("text").as("text_a"))
-    val b = docs.select(col("doc_id").as("id_b"), col("text").as("text_b"))
-    a.join(b, col("id_b") === col("id_a") + 1)
-      .select(col("id_a"), col("id_b"),
-        graft.dedup.Dedup.ngramJaccard(col("text_a"), col("text_b")).as("jaccard"))
-      .orderBy("id_a")
-  }
-
-  /** C4b: EXACT Jaccard-threshold dedup — keep a doc iff no earlier
-   * doc has word-3-gram Jaccard >= 0.8, brute-force pairwise (the
-   * oracle-checked baseline for the MinHash+LSH scale path, as C5b is
-   * for the embedding-LSH path; the operator compares shingle-hash
-   * sets, the oracle shingle strings).
-   *
-   * Oracle parity holds for arbitrary text (ADVICE r12): docs with
-   * < 3 tokens (incl. empty/NULL) yield the EMPTY shingle set on the
-   * Spark side, mirroring the oracle's empty UNNEST(range(...)) — no
-   * shingles, no near-dup relation — and the oracle tokenizer
-   * replicates wordShingleHashes byte-for-byte (ASCII-only lowering
-   * via translate; separators = ASCII non-[a-z0-9_]; non-ASCII
-   * codepoints are word chars, so CJK text shingles instead of
-   * vanishing). CorpusAssemblySpec pins the punctuation-only /
-   * non-ASCII edge cases against a string-space replay.
-   *
-   * Both join sides re-derive the shingle sets (one extra corpus
-   * scan) on purpose: caching inside a benchmarked one-shot query
-   * would hide the honest cost, and the O(n²) verify dominates. */
-  private def qDedupJaccardExact(s: SparkSession, dir: String): DataFrame = {
-    val docs = t(s, dir, "documents")
-    val base = docs.select(col("doc_id"),
-      graft.functions.expressions.wordShingleHashes(col("text"), 3).as("sh"))
-    // single-file scan = one partition; spread the O(n^2) probe side
-    val a = base.repartition(s.sparkContext.defaultParallelism)
-      .select(col("doc_id").as("id_a"), col("sh").as("sh_a"))
-    val b = base.select(col("doc_id").as("id_b"), col("sh").as("sh_b"))
-    val dups = a.join(broadcast(b),
-        col("id_b") < col("id_a") &&
-          graft.functions.expressions.hashJaccard(col("sh_a"), col("sh_b")) >= 0.8)
-      .select(col("id_a").as("dup_id")).distinct()
-    docs.select("doc_id")
-      .join(dups, col("doc_id") === col("dup_id"), "left_anti")
-      .orderBy("doc_id")
-  }
-
-  /** C33: containment dedup (near-subset documents) — the ASYMMETRIC
-   * dedup family member: a doc ≥90% contained in a LARGER doc dies
-   * (boilerplate-wrapped copies, quoted articles), which
-   * Jaccard-threshold dedup structurally misses when the container
-   * dwarfs the contained side. Production path: anchor-sampled
-   * candidate generation + exact containment verify
-   * (dedup/Dedup.containmentKeep). FULL oracle since r15: the anchor
-   * sampling (shingle hash ≡ 0 mod 8, df ≤ 1000) and the
-   * (size desc, id asc) kill rule are deterministic functions of the
-   * shingle-hash sets, which the oracle recomputes itself in mod-2^64
-   * DuckDB arithmetic — the whole distributed algorithm replayed
-   * end-to-end in a second engine. The _sound gate + the C33b
-   * brute-force twin carry the semantic-recall side. */
-  private def qDedupContainment(s: SparkSession, dir: String): DataFrame =
-    graft.dedup.Dedup.containmentKeep(t(s, dir, "documents"), "doc_id", "text")
-      .orderBy("doc_id")
-
-  /** C33 soundness: docs killed by the anchored containment pipeline
-   * with NO genuine beating container (containment ≥ 0.9 from a
-   * strictly larger or equal-sized-smaller-id doc) under brute-force
-   * comparison. Must be empty. Oracle: the empty relation. */
-  private def qDedupContainmentSound(s: SparkSession, dir: String): DataFrame = {
-    val docs = t(s, dir, "documents")
-    val dropped = graft.dedup.Dedup.containmentKeep(docs, "doc_id", "text")
-      .filter(!col("keep")).select("doc_id")
-    // coalesce NULL text to '' to mirror containmentKeep's normalization
-    val base = docs.select(col("doc_id"),
-      graft.functions.expressions
-        .wordShingleHashes(coalesce(col("text"), lit("")), 3).as("sh"))
-    val a = base.repartition(s.sparkContext.defaultParallelism)
-      .select(col("doc_id").as("id_a"), col("sh").as("sh_a"))
-    val b = base.select(col("doc_id").as("id_b"), col("sh").as("sh_b"))
-    val genuine = a.join(broadcast(b),
-        col("id_a") =!= col("id_b") &&
-          (size(col("sh_b")) > size(col("sh_a")) ||
-            (size(col("sh_b")) === size(col("sh_a")) && col("id_b") < col("id_a"))) &&
-          graft.functions.expressions.hashContainment(col("sh_a"), col("sh_b")) >= 0.9)
-      .select(col("id_a").as("dead_id")).distinct()
-    dropped.join(genuine, col("doc_id") === col("dead_id"), "left_anti")
-      .orderBy("doc_id")
-  }
-
-  /** C33b: EXACT containment dedup (oracle baseline for the anchored
-   * scale path): brute-force ordered pairs, kill under the same
-   * (size desc, id asc) rule. The oracle replays |A∩B|/|A| over
-   * string-space shingles in DuckDB, so every run re-proves
-   * hash-space ≡ string-space for the asymmetric verify too (C4b
-   * pattern; same ≥3-ASCII-token corpus precondition). */
-  private def qDedupContainmentExact(s: SparkSession, dir: String): DataFrame = {
-    val docs = t(s, dir, "documents")
-    val base = docs.select(col("doc_id"),
-      graft.functions.expressions.wordShingleHashes(col("text"), 3).as("sh"))
-    // single-file scan = one partition; spread the O(n^2) probe side
-    val a = base.repartition(s.sparkContext.defaultParallelism)
-      .select(col("doc_id").as("id_a"), col("sh").as("sh_a"))
-    val b = base.select(col("doc_id").as("id_b"), col("sh").as("sh_b"))
-    val dead = a.join(broadcast(b),
-        col("id_a") =!= col("id_b") &&
-          (size(col("sh_b")) > size(col("sh_a")) ||
-            (size(col("sh_b")) === size(col("sh_a")) && col("id_b") < col("id_a"))) &&
-          graft.functions.expressions.hashContainment(col("sh_a"), col("sh_b")) >= 0.9)
-      .select(col("id_a").as("dead_id")).distinct()
-    docs.select("doc_id")
-      .join(dead, col("doc_id") === col("dead_id"), "left_anti")
-      .orderBy("doc_id")
-  }
-
-  /** C14b: EXACT transitive duplicate clusters (oracle baseline for
-   * the MinHash-candidate q_dedup_clusters): exact Jaccard-threshold
-   * pairs → distributed connected components → per-component min-id
-   * representative. The oracle replays the same closure in DuckDB
-   * with a recursive CTE over string-space shingles, so BOTH the
-   * pair generation and the iterative labeling are hash-checked. */
-  private def qDedupClustersExact(s: SparkSession, dir: String): DataFrame = {
-    val docs = t(s, dir, "documents")
-    val base = docs.select(col("doc_id"),
-      graft.functions.expressions.wordShingleHashes(col("text"), 3).as("sh"))
-    // single-file scan = one partition; spread the O(n^2) probe side
-    val a = base.repartition(s.sparkContext.defaultParallelism)
-      .select(col("doc_id").as("id_a"), col("sh").as("sh_a"))
-    val b = base.select(col("doc_id").as("id_b"), col("sh").as("sh_b"))
-    val pairs = a.join(broadcast(b),
-        col("id_b") < col("id_a") &&
-          graft.functions.expressions.hashJaccard(col("sh_a"), col("sh_b")) >= 0.8)
-      .select("id_a", "id_b")
-    val labeled = graft.operators.Components.connectedComponents(pairs, "id_a", "id_b")
-    docs.select("doc_id")
-      .join(labeled, col("doc_id") === col("node"), "left")
-      .select(col("doc_id"), coalesce(col("component"), col("doc_id")).as("cluster"))
-      .orderBy("doc_id")
-  }
-
-  /** C5: embedding-cosine near-dup keep-table — FULL oracle since
-   * r14: the hyperplane-LSH buckets verify exact cosine before any
-   * drop, so the keep-table equals the exact threshold relation
-   * whenever recall holds, and the oracle replays that relation
-   * brute-force in DuckDB (the C5b proven-parity compare; nearest
-   * pair sits 8.6e-4 from the threshold — orders above cross-engine
-   * float noise). Threshold 0.6 rather than the 0.95 default: the
-   * synthetic corpus has no ≥0.95 pair at either SF (the relation
-   * would be vacuously all-keep), while 0.6 exercises a genuine drop
-   * at sf0.1 and stays inside the LSH's exact-recall regime (probed
-   * r14: 0.35 drops recall to ~0.6 — the regime LSH is NOT for). A
-   * hash mismatch IS a recall regression. */
-  private def qDedupEmbed(s: SparkSession, dir: String): DataFrame =
-    graft.dedup.Dedup.embeddingKeep(t(s, dir, "embeddings"), "vec_id", "embedding", 64,
-        threshold = 0.6)
-      .orderBy("vec_id")
-
-  /** C5c: embedding-LSH dedup soundness — vectors dropped by the
-   * bucketed pipeline with no genuine earlier ≥0.6-cosine partner
-   * under brute-force comparison (threshold mirrors C5). Must be
-   * empty (in-bucket drops verify exact cosine). Oracle: the empty
-   * relation. */
-  private def qDedupEmbedSound(s: SparkSession, dir: String): DataFrame = {
-    val e = t(s, dir, "embeddings")
-    val dropped = graft.dedup.Dedup.embeddingKeep(e, "vec_id", "embedding", 64,
-        threshold = 0.6)
-      .filter(!col("keep")).select("vec_id")
-    val a = e.repartition(s.sparkContext.defaultParallelism)
-      .select(col("vec_id").as("id_a"), col("embedding").as("emb_a"))
-    val b = e.select(col("vec_id").as("id_b"), col("embedding").as("emb_b"))
-    val genuine = a.join(broadcast(b),
-        col("id_b") < col("id_a") &&
-          graft.dedup.Dedup.cosine(col("emb_a"), col("emb_b")) >= 0.6)
-      .select(col("id_a").as("dup_id")).distinct()
-    dropped.join(genuine, col("vec_id") === col("dup_id"), "left_anti")
-      .orderBy("vec_id")
-  }
-
-  /** C5b: EXACT embedding near-dup (oracle-checkable baseline for the
-   * LSH-bucketed q_dedup_embed): keep a vector iff no earlier vector
-   * is within the cosine threshold — brute-force pairwise, fine at
-   * verify scale; the LSH variant is the 100 TB path. */
-  private def qDedupEmbedExact(s: SparkSession, dir: String): DataFrame = {
-    val e = t(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
-    // single-file scan = one partition; spread the O(n^2) probe side
-    val a = e.repartition(s.sparkContext.defaultParallelism)
-      .select(col("vec_id").as("id_a"), col("embedding").as("emb_a"))
-    val b = e.select(col("vec_id").as("id_b"), col("embedding").as("emb_b"))
-    val dups = a.join(broadcast(b),
-        col("id_b") < col("id_a") &&
-          graft.functions.expressions.cosineSim(col("emb_a"), col("emb_b")) >= 0.35)
-      .select(col("id_a").as("dup_id")).distinct()
-    e.join(dups, col("vec_id") === col("dup_id"), "left_anti")
-      .select("vec_id")
-      .orderBy("vec_id")
-  }
-
-  /** C44: SemDeDup ([[graft.dedup.SemDedup.semanticKeep]]) — k-means
-   * cells over embeddings, cosine dedup only within a cell. FULL
-   * oracle: DuckDB replays the distinct-value centroid seed, the
-   * argmax assignment (C29's margin argument: min top1−top2 gap on
-   * this corpus is orders above cross-engine float noise), and the
-   * in-cell pairwise threshold (C5b's proven-parity compare). */
-  private def qSemdedup(s: SparkSession, dir: String): DataFrame = {
-    val e = t(s, dir, "embeddings")
-      .repartition(s.sparkContext.defaultParallelism) // single-file scan
-    graft.dedup.SemDedup.semanticKeep(e, "vec_id", "embedding",
-        graft.dedup.SemDedup.seedCentroids(e, "vec_id", "embedding", 8), 0.35)
-      .orderBy("vec_id")
-  }
-
-  /** C13: corpus bigram heavy hitters — exact top-20 by count
-   * (vocabulary/heavy-hitter statistics; Ngrams operator). */
-  private def qTopNgrams(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Ngrams.topNgrams(
-      // single-file table: spread before the explode-heavy stage
-      t(s, dir, "documents").repartition(s.sparkContext.defaultParallelism),
-      "text", n = 2, k = 20)
-
-  /** C65 (r14): k-anonymity audit ([[graft.operators.Anonymity]]) —
-   * release-gate evidence for the customer table under the classic
-   * quasi-identifier triple (nation, segment, $1000 balance band):
-   * every combination shared by fewer than k=3 rows re-identifies
-   * its members by linkage. One map-side-combined aggregation over
-   * the QI projection; nothing row-sized shuffles twice. */
-  private def qKAnonymity(s: SparkSession, dir: String): DataFrame = {
-    val qi = t(s, dir, "customer")
-      .withColumn("bal_cents", cents(col("c_acctbal")))
-      .select(col("c_nationkey"), col("c_mktsegment"),
-        expr("bal_cents div 100000").as("bal_kband"))
-    graft.operators.Anonymity.kAnonymityViolations(qi,
-        Seq("c_nationkey", "c_mktsegment", "bal_kband"), k = 3L)
-      .orderBy("c_nationkey", "c_mktsegment", "bal_kband")
-  }
-
-  /** C65 summary row: totals, rows-at-risk ppm, and the anonymity
-   * level (min class size) the table actually satisfies. */
-  private def qKAnonymitySummary(s: SparkSession, dir: String): DataFrame = {
-    val qi = t(s, dir, "customer")
-      .withColumn("bal_cents", cents(col("c_acctbal")))
-      .select(col("c_nationkey"), col("c_mktsegment"),
-        expr("bal_cents div 100000").as("bal_kband"))
-    graft.operators.Anonymity.kAnonymitySummary(qi,
-      Seq("c_nationkey", "c_mktsegment", "bal_kband"), k = 3L)
-  }
-
-  /** C64 (r14): per-source out-of-vocabulary rate
-   * ([[graft.operators.Ngrams.oovStats]]) — vocabulary = tokens seen
-   * ≥ 5 times corpus-wide; each source reports how much of its token
-   * MASS is corpus-rare (boilerplate ids, noise, under-covered
-   * languages). One corpus scan: occurrences collapse to (source,
-   * token) pairs map-side, global totals re-derive from the pairs,
-   * nothing occurrence-sized shuffles. Tokenizer is the byte-exact
-   * `[ \t\n\r]+` kernel, so DuckDB replays token identity, the
-   * threshold, and every ppm bit-for-bit. */
-  private def qOovRate(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Ngrams.oovStats(
-        t(s, dir, "documents").repartition(s.sparkContext.defaultParallelism),
-        "source", "text", minCount = 5L)
-      .orderBy("source")
-
-  /** C6: brute-force cosine top-5 for probe vectors (vec_id < 3). */
-  private def qAnnBruteforce(s: SparkSession, dir: String): DataFrame = {
-    val emb = t(s, dir, "embeddings")
-    graft.similarity.Ann
-      .bruteForceTopK(emb, emb.filter(col("vec_id") < 3), "vec_id", "embedding", 5)
-      .withColumn("cos", round(col("cos"), 3))
-      .orderBy("probe_id", "rank")
-  }
-
-  /** Recall-vs-bruteforce harness shared by the approximate ANN
-   * queries: the approximate neighbor set itself has no SQL oracle,
-   * but "recall@5 against exact top-5 is at least 0.3" is an exact,
-   * deterministic claim (hyperplanes and centroids are seeded
-   * deterministically) the oracle CAN assert — so the driver gate
-   * hash-checks the invariant instead of recording rows-only. */
-  private def annRecallCheck(emb: DataFrame,
-      approx: DataFrame => DataFrame): DataFrame = {
-    val probes = emb.filter(col("vec_id") < 3)
-    val exact = graft.similarity.Ann
-      .bruteForceTopK(emb, probes, "vec_id", "embedding", 5)
-      .select(col("probe_id"), col("vec_id"))
-    val hits = exact
-      .join(approx(probes).select(col("probe_id").as("p"), col("vec_id").as("v")),
-        col("probe_id") === col("p") && col("vec_id") === col("v"), "left_semi")
-      .groupBy("probe_id").agg(count(lit(1)).as("n_hit"))
-    probes.select(col("vec_id").as("probe_id"))
-      .join(hits, Seq("probe_id"), "left")
-      .select(col("probe_id"),
-        (coalesce(col("n_hit"), lit(0L)) * 10L >= 15L).as("recall_ok"))
-      .orderBy("probe_id")
-  }
-
-  /** C7: LSH-bucketed approximate top-5 — oracle-checked recall
-   * invariant (AnnSpec asserts the same bound on the raw lists). */
-  private def qAnnLsh(s: SparkSession, dir: String): DataFrame = {
-    val emb = t(s, dir, "embeddings")
-    annRecallCheck(emb,
-      p => graft.similarity.Ann.lshTopK(emb, p, "vec_id", "embedding", 64, 5))
-  }
-
-  /** C86 (r15): PCA-reduced ANN (Ann.pcaTopK) — the dimensionality-
-   * reduction serving path: rank in the top-32 principal subspace
-   * (2× fewer FLOPs per comparison), exact re-rank the 128-candidate
-   * shortlist in full space. The synthetic corpus is near-ISOTROPIC
-   * (flat spectrum — the regime dimension reduction is hardest in),
-   * so the knobs sit wider than a real embedding corpus with a
-   * decaying spectrum would need; the recall invariant is checked
-   * either way. Deterministic fit (exact-integer moments
-   * + fixed Jacobi) → the same oracle-checked recall invariant as the
-   * other approximate ANN queries. */
-  private def qAnnPca(s: SparkSession, dir: String): DataFrame = {
-    val emb = t(s, dir, "embeddings")
-    annRecallCheck(emb,
-      p => graft.similarity.Ann.pcaTopK(emb, p, "vec_id", "embedding", 64, 5,
-        reduceK = 32, shortlist = 128))
-  }
-
-  /** C87 (r16): ANN recall panel — index QUALITY as an asserted
-   * oracle row. The per-query ANN rows pin per-probe recall@5 ≥ 0.3
-   * on 3 probes (a plumbing-level floor); nothing on the r15 board
-   * failed if index quality silently DEGRADED — e.g. a
-   * centroid-seeding change halving recall would have sailed through
-   * every contract. This row measures AGGREGATE recall@5 over 20
-   * probes for every production path against the exact brute-force
-   * top-5 and asserts a per-path floor (the B7/B18b
-   * approximate-oracle pattern: the floor booleans are the hashed
-   * relation; the floors themselves are documented measurements).
-   *
-   * Measured recall_ppm (k=5, 20 probes, the committed knobs):
-   *   sf0.01: ivf 850k, ivfpq 670k, lsh 650k, pca 1000k, pq 640k
-   *   sf0.1:  ivf 890k, ivfpq 510k, lsh 720k, pca 940k,  pq 470k
-   * Floors sit ~30% under the weaker SF so corpus growth has room
-   * (quantizers are seeded deterministically — the measurement is
-   * exact per corpus, the margin absorbs future SFs, not host noise)
-   * while a halving still fails loudly. The exact top-5 is computed
-   * ONCE and eagerly checkpointed — its output is 20 probes × k rows
-   * (bounded by construction), but its lineage is the full
-   * brute-force corpus scan, which five per-path semi-joins plus the
-   * denominator would otherwise replay up to ten times (the r4
-   * materialization rule's clearest case). */
-  private def qAnnRecall(s: SparkSession, dir: String): DataFrame = {
-    val emb = t(s, dir, "embeddings")
-    val probes = emb.filter(col("vec_id") < 20)
-    val k = 5
-    // r20 (guide §2.6 — the trainBoth precedent widened): each path's
-    // construction runs its own driver-side training chain (Lloyd
-    // collect loops, PQ codebooks, the PCA gram aggregate) and the
-    // five chains share no state, so they build CONCURRENTLY from a
-    // small named pool while the exact brute-force top-5 materializes
-    // on this thread. Every chain's plans, collects, and reduction
-    // order are exactly as sequential — quantizers and results are
-    // bit-identical; only the wall-clock overlap changes.
-    val defs: Seq[(String, Long, () => DataFrame)] = Seq(
-      ("ivf", 600000L,
-        () => graft.similarity.Ann.ivfTopK(emb, probes, "vec_id", "embedding", 64, k)),
-      ("ivfpq", 350000L,
-        () => graft.similarity.Ann.ivfPqTopK(emb, probes, "vec_id", "embedding", 64, k)),
-      ("lsh", 450000L,
-        () => graft.similarity.Ann.lshTopK(emb, probes, "vec_id", "embedding", 64, k)),
-      ("pca", 700000L,
-        () => graft.similarity.Ann.pcaTopK(emb, probes, "vec_id", "embedding", 64, k,
-          reduceK = 32, shortlist = 128)),
-      ("pq", 330000L,
-        () => graft.similarity.Ann.pqTopK(emb, probes, "vec_id", "embedding", 64, k)))
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(4,
-      (r: Runnable) => { val th = new Thread(r, "graft-ann-recall"); th.setDaemon(true); th })
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
-    val (exact, nExact, paths) = try {
-      val futures = defs.map { case (name, floor, mk) => (name, floor, Future(mk())) }
-      val ex = graft.similarity.Ann
-        .bruteForceTopK(emb, probes, "vec_id", "embedding", k)
-        .select(col("probe_id"), col("vec_id"))
-        .localCheckpoint()
-      (ex, ex.count(), futures.map { case (name, floor, f) =>
-        (name, floor, Await.result(f, Duration.Inf)) })
-    } finally pool.shutdown()
-    paths.map { case (name, floorPpm, approx) =>
-      exact.join(
-          approx.select(col("probe_id").as("p"), col("vec_id").as("v")),
-          col("probe_id") === col("p") && col("vec_id") === col("v"),
-          "left_semi")
-        .agg(count(lit(1)).as("n_hit"))
-        .select(
-          lit(name).as("path"),
-          lit(k.toLong).as("k"),
-          lit(20L).as("n_probes"),
-          lit(floorPpm).as("floor_ppm"),
-          (col("n_hit") * 1000000L >= lit(nExact * floorPpm)).as("recall_ok"))
-    }.reduce(_ unionAll _).orderBy("path")
-  }
-
-  /** C7b: IVF approximate top-5 (deterministic sampled centroids,
-   * multiprobe) — oracle-checked recall invariant. */
-  private def qAnnIvf(s: SparkSession, dir: String): DataFrame = {
-    val emb = t(s, dir, "embeddings")
-    annRecallCheck(emb,
-      p => graft.similarity.Ann.ivfTopK(emb, p, "vec_id", "embedding", 64, 5))
-  }
-
-  /** C7e: product-quantization ANN (Ann.pqTopK) — the corpus encodes
-   * to m=8 one-byte codes per vector (32x smaller than the raw
-   * floats), probes scan the codes via precomputed ADC tables
-   * (lookups, no float math), and a 32-candidate shortlist re-ranks
-   * with exact cosine. Deterministic codebooks (lowest-id init + 3
-   * Lloyd rounds) → the same oracle-checked recall invariant as the
-   * other approximate ANN queries. */
-  private def qAnnPq(s: SparkSession, dir: String): DataFrame = {
-    val emb = t(s, dir, "embeddings")
-    annRecallCheck(emb,
-      p => graft.similarity.Ann.pqTopK(emb, p, "vec_id", "embedding", 64, 5))
-  }
-
-  /** C7f: IVFADC (Ann.ivfPqTopK) — coarse cells bound the scan (equi
-   * join on cell id, nProbe multiprobe) while PQ codes cut what the
-   * scanned rows cost (ADC table lookups); exact re-rank restores
-   * true-cosine order. Deterministic quantizers → the same
-   * oracle-checked recall invariant as the other ANN queries. */
-  private def qAnnIvfPq(s: SparkSession, dir: String): DataFrame = {
-    val emb = t(s, dir, "embeddings")
-    annRecallCheck(emb,
-      p => graft.similarity.Ann.ivfPqTopK(emb, p, "vec_id", "embedding", 64, 5))
-  }
-
-  /** Scratch-rooted persisted-index path + complete-build probe
-   * (ADVICE r8: CWD-independent, one shutdown hook for the whole
-   * scratch root instead of per-call hooks; a configured durable
-   * `spark.graft.scratchDir` makes reuse across applications the
-   * build-once/query-many serving shape, with staleness-vs-corpus the
-   * rebuild cadence the deployment owns). The existence probe goes
-   * through the Hadoop FS API so a remote scratch scheme (HDFS/object
-   * store) resolves the same way the writes do.
-   *
-   * Publication protocol (ADVICE r9): the whole `build` closure —
-   * including any appendTo* calls — runs against an
-   * APPLICATION-UNIQUE staging path; a `_GRAFT_COMPLETE` marker is
-   * written inside the staged tree only after the closure returns, and
-   * the tree is then published to the shared location with one
-   * directory rename. The rename is atomic on HDFS and local file
-   * systems ONLY — object stores emulate directory rename as
-   * copy+delete, so on those a production deployment should put the
-   * scratch root on HDFS/local or front publication with a
-   * coordination service. A crash mid-build leaves only an orphaned
-   * staging dir (never a half-built index at the published path, which
-   * a later application would accept), and two applications racing on
-   * a shared durable scratch root resolve by rename: the loser's
-   * staging tree is discarded and the winner's published index is
-   * served. The stale-remnant delete re-probes the marker immediately
-   * before deleting (ADVICE r12): a concurrent application may have
-   * published a complete index between the outer probe and the delete,
-   * and destroying it would lose a valid index. Re-executions (bench
-   * warmup + timed pass) then measure the probe path through the
-   * persisted index — rebuilding an unchanged index every execution
-   * would time redundant I/O, not the operator. */
-  private[graft] def withBuiltIndex(s: SparkSession, dir: String, prefix: String)(
-      build: String => Unit): String = {
-    import org.apache.hadoop.fs.Path
-    val idx = s"${graft.Scratch.root(s)}/${prefix}_${new java.io.File(dir).getName}"
-    val target = new Path(idx)
-    val fs = target.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val complete = new Path(target, "_GRAFT_COMPLETE")
-    if (!fs.exists(complete)) {
-      // a published dir without the marker is a pre-protocol or
-      // crashed-build remnant: rebuild it rather than serve half an
-      // index. Re-check the marker IMMEDIATELY before the delete — a
-      // concurrent application may have published a complete index
-      // since the outer probe, and deleting it would destroy valid
-      // work. (A hairline window remains; only a filesystem-level
-      // conditional delete could close it entirely.)
-      if (fs.exists(target) && !fs.exists(complete))
-        fs.delete(target, true): Unit
-      if (!fs.exists(complete)) {
-        val staging = new Path(s"${idx}__staging_${s.sparkContext.applicationId}")
-        if (fs.exists(staging)) fs.delete(staging, true): Unit
-        build(staging.toString)
-        fs.create(new Path(staging, "_GRAFT_COMPLETE")).close()
-        if (!fs.rename(staging, target)) {
-          // lost the publish race to a concurrent application
-          fs.delete(staging, true): Unit
-        }
-        // POSIX-style rename NESTS the source when the destination dir
-        // already exists (the other way the race can resolve): discard
-        // the nested loser tree so it never shadows the winner's layout
-        val nested = new Path(target, staging.getName)
-        if (fs.exists(nested)) fs.delete(nested, true): Unit
-      }
-      require(fs.exists(complete),
-        s"index publish at $idx left no complete index")
-    }
-    idx
-  }
-
-  /** C7c: PERSISTED IVF index end-to-end — build the cell-partitioned
-   * index to a scratch dir, then answer probes through
-   * [[graft.similarity.Ann.ivfTopKIndexed]], whose scan is statically
-   * pruned to the probes' multiprobe cells (AnnSpec asserts the
-   * partition count on the physical scan). Same oracle-checked recall
-   * invariant as q_ann_ivf. */
-  private def qAnnIvfIndexed(s: SparkSession, dir: String): DataFrame = {
-    val emb = t(s, dir, "embeddings")
-    val idx = withBuiltIndex(s, dir, "ivf_index")(
-      graft.similarity.Ann.buildIvfIndex(emb, "vec_id", "embedding", 64, _))
-    annRecallCheck(emb,
-      p => graft.similarity.Ann.ivfTopKIndexed(idx, p, "vec_id", "embedding", 64, 5))
-  }
-
-  /** C7d: INCREMENTAL index maintenance — build the cell-partitioned
-   * IVF index on the first half of the corpus, append the second half
-   * through the FROZEN quantizer ([[graft.similarity.Ann
-   * .appendToIvfIndex]] — no retrain, one assignment pass + a
-   * partitioned append), then answer probes over the combined index.
-   * Same oracle-checked recall invariant as q_ann_ivf_indexed: the
-   * appended half must be as findable as the built half. */
-  private def qAnnIvfAppend(s: SparkSession, dir: String): DataFrame = {
-    val emb = t(s, dir, "embeddings")
-    val idx = withBuiltIndex(s, dir, "ivf_append") { p =>
-      // bounded driver scalar, same class as the build's centroid train
-      val mid = emb.agg(((min("vec_id") + max("vec_id")) / 2).cast("long"))
-        .head().getLong(0)
-      graft.similarity.Ann.buildIvfIndex(
-        emb.filter(col("vec_id") <= mid), "vec_id", "embedding", 64, p)
-      graft.similarity.Ann.appendToIvfIndex(p,
-        emb.filter(col("vec_id") > mid), "vec_id", "embedding", 64)
-    }
-    annRecallCheck(emb,
-      p => graft.similarity.Ann.ivfTopKIndexed(idx, p, "vec_id", "embedding", 64, 5))
-  }
-
-  /** C7g: the persisted-IVFADC serving composition — [[graft
-   * .similarity.Ann.buildIvfPqIndex]] once (coarse cells + PQ codes
-   * stored cell-partitioned, quantizers alongside), then [[graft
-   * .similarity.Ann.ivfPqTopKIndexed]] per probe set: stored-quantizer
-   * ADC scan over statically-pruned cells reading codes only, exact
-   * re-rank from the same cells. Closes the r8 structure gap where
-   * q_ann_ivfpq retrained both quantizers inside the query. Same
-   * oracle-checked recall invariant as q_ann_ivf_indexed. The second
-   * half of the corpus arrives via [[graft.similarity.Ann
-   * .appendToIvfPqIndex]] through FROZEN quantizers, so the recall
-   * gate also proves appended vectors are as findable as built ones
-   * (C7d parity for the compressed index). */
-  private def qAnnIvfPqIndexed(s: SparkSession, dir: String): DataFrame = {
-    val emb = t(s, dir, "embeddings")
-    val idx = withBuiltIndex(s, dir, "ivfpq_index") { p =>
-      val mid = emb.agg(((min("vec_id") + max("vec_id")) / 2).cast("long"))
-        .head().getLong(0)
-      graft.similarity.Ann.buildIvfPqIndex(
-        emb.filter(col("vec_id") <= mid), "vec_id", "embedding", 64, p)
-      graft.similarity.Ann.appendToIvfPqIndex(p,
-        emb.filter(col("vec_id") > mid), "vec_id", "embedding", 64)
-    }
-    annRecallCheck(emb,
-      p => graft.similarity.Ann.ivfPqTopKIndexed(idx, p, "vec_id", "embedding", 64, 5))
-  }
-
-  /** C7h (r18): IVF index DELETE path ([[graft.similarity.Ann
-   * .deleteFromIvfIndex]] / [[graft.similarity.Ann.vacuumIvfIndex]])
-   * — the erasure half of index maintenance: without it an A30 erase
-   * of a doc whose embedding is indexed leaves the subject
-   * RETRIEVABLE by similarity search. The query builds a fresh index
-   * on the first half of the corpus (fresh per execution — deletes
-   * MUTATE the index, so the shared cached-index helper cannot serve
-   * here), dooms every probe's pre-delete top-5 (probes themselves
-   * exempted so the probe relation stays fixed), tombstones them,
-   * then APPENDS the second half — the erase must survive later
-   * ingest. Three invariants per probe, all driver-checked on
-   * bounded (≤15-row) lists: the post-delete top-5 contains no
-   * doomed id (tombstone masking works through an append); recall
-   * ≥ 3/5 against brute force over the corpus MINUS the doomed ids
-   * (deletion must not degrade the index for surviving vectors); and
-   * a physical [[vacuumIvfIndex]] changes not one answer (masking ≡
-   * reclamation). The default compact threshold leaves this delete
-   * as pure tombstones at sf0.01, so the masking path — not just the
-   * rewrite — is what the first search exercises. */
-  private def qAnnIvfDelete(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val emb = t(s, dir, "embeddings")
-    val idx = s"${graft.Scratch.root(s)}/ivf_delete_${sinkSeq.incrementAndGet()}"
-    val mid = emb.agg(((min("vec_id") + max("vec_id")) / 2).cast("long"))
-      .head().getLong(0)
-    graft.similarity.Ann.buildIvfIndex(
-      emb.filter(col("vec_id") <= mid), "vec_id", "embedding", 64, idx)
-    val probes = emb.filter(col("vec_id") < 3)
-    def search() = graft.similarity.Ann
-      .ivfTopKIndexed(idx, probes, "vec_id", "embedding", 64, 5)
-      .select("probe_id", "vec_id").as[(Long, Long)].collect().toSeq
-    val doomedIds = search().map(_._2).filter(_ >= 3L).distinct.sorted
-    // r20 (guide §2.6): the brute-force twin depends only on doomedIds
-    // (it reads the raw embeddings, never the index), so it computes
-    // on a side thread WHILE the delete → append → search → vacuum →
-    // search protocol mutates the index on this one — the mutation
-    // sequence itself stays strictly ordered.
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    val pool = java.util.concurrent.Executors.newSingleThreadExecutor(
-      (r: Runnable) => { val th = new Thread(r, "graft-ivf-delete-exact"); th.setDaemon(true); th })
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
-    val (after, after2, exact) = try {
-      val fExact = Future(graft.similarity.Ann.bruteForceTopK(
-          emb.filter(!col("vec_id").isin(doomedIds: _*)), probes,
-          "vec_id", "embedding", 5)
-        .select("probe_id", "vec_id").as[(Long, Long)].collect().toSeq)
-      graft.similarity.Ann.deleteFromIvfIndex(
-        idx, doomedIds.toDF("vec_id"), "vec_id")
-      graft.similarity.Ann.appendToIvfIndex(
-        idx, emb.filter(col("vec_id") > mid), "vec_id", "embedding", 64)
-      val a = search()
-      graft.similarity.Ann.vacuumIvfIndex(s, idx, "vec_id")
-      (a, search(), Await.result(fExact, Duration.Inf))
-    } finally pool.shutdown()
-    val doomed = doomedIds.toSet
-    probes.select("vec_id").as[Long].collect().sorted.toSeq.map { p =>
-      val a = after.collect { case (`p`, v) => v }.toSet
-      val a2 = after2.collect { case (`p`, v) => v }.toSet
-      val e = exact.collect { case (`p`, v) => v }.toSet
-      (p, a.intersect(doomed).isEmpty, a.intersect(e).size * 10 >= 30, a == a2)
-    }.toDF("probe_id", "deleted_excluded", "recall_ok", "vacuum_consistent")
-      .orderBy("probe_id")
-  }
-
-  /** C8: heuristic language ID — per-doc predictions, hash-checked
-   * against a faithful SQL mirror of the marker-argmax heuristic
-   * (valid for this ASCII corpus, where both tokenizers agree; the
-   * kernel's CJK branch and ≥0x80 word bytes never trigger). TextSpec
-   * additionally checks real multilingual samples — the synthetic
-   * corpus' lang labels are uncorrelated with its text. */
-  private def qLangId(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "documents")
-      .select(col("doc_id"), TextFunctions.langId(col("text")).as("lang_pred"))
-      .orderBy("doc_id")
-
-  /** C9: text quality metrics (SQL-expressible → full oracle). */
-  private def qTextQuality(s: SparkSession, dir: String): DataFrame = {
-    // spread: five text kernels per doc on a one-task scan otherwise
-    val d = graft.dedup.Dedup.spread(t(s, dir, "documents"))
-    d.select(
-      col("doc_id"),
-      length(col("text")).cast("long").as("n_chars"),
-      size(TextFunctions.wsTokens(col("text"))).cast("long").as("n_words"),
-      TextFunctions.punctRatio(col("text")).as("punct_ratio"),
-      TextFunctions.digitRatio(col("text")).as("digit_ratio"),
-      TextFunctions.stopwordRatio(col("text")).as("stopword_ratio"))
-      .orderBy("doc_id")
-  }
-
-  /** C10: token counting — whitespace and BPE-ish pre-tokenization. */
-  private def qTokenCount(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "documents")
-      .select(
-        col("doc_id"),
-        size(TextFunctions.wsTokens(col("text"))).cast("long").as("n_ws_tokens"),
-        size(TextFunctions.bpeishTokens(col("text"))).cast("long").as("n_bpe_tokens"))
-      .orderBy("doc_id")
-
-  /** C11: winnowed rolling-hash document fingerprint (custom codegen'd
-   * expression; rows-only + spec). */
-  private def qFingerprint(s: SparkSession, dir: String): DataFrame = {
-    // winnow(k=8, w=16) sample size is provably in [1, max(1, chars-22)]
-    // (≤ one pick per window start, ≥ one overall); the 64-bit FNV/mix
-    // values themselves are not SQL-portable, so the oracle checks the
-    // per-doc bound plus a corpus-level injectivity flag (distinct
-    // texts → distinct fingerprints — a collision among the corpus
-    // would flip it)
-    // perDoc carries text only so ONE aggregate yields both scalars;
-    // Catalyst prunes per branch: the output branch never computes
-    // count_distinct, and the aggregate branch prunes the winnow kernel
-    // (only fp64+text survive into it) — so winnow runs once and the
-    // corpus is scanned twice total (output + scalar agg), not 3×
-    val perDoc = t(s, dir, "documents")
-      .select(
-        col("doc_id"),
-        col("text"),
-        length(col("text")).cast("long").as("n_chars"),
-        graft.functions.expressions.fingerprint64(col("text")).as("fp64"),
-        size(graft.functions.expressions.winnow(col("text"))).cast("long").as("n_winnow"))
-    val scalars = perDoc.agg(
-      count_distinct(col("fp64")).as("n_fps"),
-      count_distinct(col("text")).as("n_texts"))
-    perDoc
-      .crossJoin(broadcast(scalars))
-      .select(col("doc_id"), col("n_chars"),
-        (col("n_winnow") >= 1L &&
-          col("n_winnow") <= greatest(lit(1L), col("n_chars") - 22L)).as("winnow_in_range"),
-        (col("n_fps") === col("n_texts")).as("fp_injective"))
-      .orderBy("doc_id")
-  }
-
-  /** Deterministic synthetic contact block (email + phone + URL
-   * derived from doc_id) appended to each document — the redaction
-   * and URL queries need PII-shaped content, and the corpus has none;
-   * the construction is mirrored exactly in the oracle SQL. */
-  private def withContact(docs: DataFrame): DataFrame =
-    docs.withColumn("raw", concat(
-      substring(col("text"), 1, 40),
-      lit(" contact user"), col("doc_id").cast("string"),
-      lit("@mail.example.com or +1-555-"),
-      lpad(pmod(col("doc_id"), lit(10000)).cast("string"), 4, "0"),
-      lit(" via https://site"), pmod(col("doc_id"), lit(50)).cast("string"),
-      lit(".example.org/u?id="), col("doc_id").cast("string")))
-
-  /** C15: PII redaction — codegen'd URL/email/phone regexp scrub
-   * (engine-portable patterns; full oracle). */
-  private def qPiiRedact(s: SparkSession, dir: String): DataFrame =
-    withContact(t(s, dir, "documents"))
-      .select(col("doc_id"), TextFunctions.redactPii(col("raw")).as("clean"))
-      .orderBy("doc_id")
-
-  /** C88 (r16): checksum-validated PAN audit + redaction
-   * ([[graft.text.Pii]]) — the precision upgrade over C15's
-   * pattern-only scrub: a bare digit-run regex flags order numbers
-   * and tracking ids as card numbers, and a 1% false-positive
-   * redaction rate destroys real training text at corpus scale.
-   * Candidates (13–19-digit maximal runs, RE2-safe — no lookarounds)
-   * are VALIDATED with the Luhn mod-10 checksum; only checksum-passing
-   * runs redact. The corpus plants, on every 11th doc, one
-   * 16-digit and one 13-digit run derived from doc_id (valid exactly
-   * when the arithmetic lands on a mod-10 fixpoint — roughly 1 in 10,
-   * decided by the checksum itself, not by the plant) plus a short
-   * run the length filter must reject. The oracle replays extraction,
-   * checksum, and fold-replace redaction on the same text. */
-  private def qPiiLuhn(s: SparkSession, dir: String): DataFrame = {
-    val planted = t(s, dir, "documents").withColumn("raw",
-      when(col("doc_id") % 11 === 0, concat(
-        col("text"), lit(" acct 4"),
-        lpad(pmod(col("doc_id") * 7919L + 13L, lit(1000000000000000L))
-          .cast("string"), 15, "0"),
-        lit(" tx "),
-        lpad(pmod(col("doc_id") * 104729L + 7L, lit(10000000000000L))
-          .cast("string"), 13, "0"),
-        lit(" ref "), pmod(col("doc_id"), lit(100000L)).cast("string")))
-        .otherwise(col("text")))
-    graft.text.Pii.panAudit(planted, "doc_id", "raw").orderBy("doc_id")
-  }
-
-  /** C46: Unicode corpus normalization (functions.NormalizeText —
-   * codegen'd NFC + accent-strip + case-fold + whitespace-collapse
-   * kernel with an ASCII fast path). The documents table is pure
-   * ASCII, so the query first builds a DETERMINISTIC messy variant —
-   * uppercased head, decomposed combining-acute injections, a
-   * composed-é / Angstrom-sign tail, tab + double-space runs — then
-   * normalizes it two ways (with and without accent stripping). The
-   * oracle replays the construction and the normalize→strip→fold→
-   * collapse order through DuckDB's utf8proc (nfc_normalize /
-   * strip_accents / lower) — two independent Unicode stacks agreeing
-   * byte-for-byte on every row. */
-  private def qNormalizeText(s: SparkSession, dir: String): DataFrame = {
-    val messy = concat(
-      upper(substring(col("text"), 1, 40)), lit("  \t"),
-      regexp_replace(substring(col("text"), 41, 40), "a", "á"),
-      lit(" café ANGSTROM Å end "))
-    t(s, dir, "documents")
-      .select(col("doc_id"), messy.as("messy"))
-      .select(col("doc_id"),
-        graft.functions.expressions.normalizeText(col("messy"), "NFC",
-          stripAccents = false, caseFold = true, collapseWs = true).as("norm"),
-        graft.functions.expressions.normalizeText(col("messy"), "NFC",
-          stripAccents = true, caseFold = true, collapseWs = true).as("norm_bare"))
-      .orderBy("doc_id")
-  }
-
-  /** C47: fixed-point unigram surprisal (text/Surprisal.scala) — the
-   * perplexity-proxy quality score with −log2 quantized to bit length
-   * (`length(bin(count))`, identical on both engines), so rare-token
-   * density is scored in whole bits with zero floats. Monotone in
-   * 1/frequency; the ppm-PageRank verifiability trade again. */
-  private def qSurprisal(s: SparkSession, dir: String): DataFrame =
-    graft.text.Surprisal.docSurprisal(t(s, dir, "documents"))
-      .orderBy("doc_id")
-
-  /** C16: URL domain extraction + per-domain corpus stats. */
-  private def qDomainStats(s: SparkSession, dir: String): DataFrame =
-    withContact(t(s, dir, "documents"))
-      .select(TextFunctions.extractDomain(col("raw")).as("domain"), col("doc_id"))
-      .groupBy("domain")
-      .agg(count(lit(1)).as("n_docs"), min("doc_id").as("first_doc"))
-      .orderBy("domain")
-
-  /** C17: benchmark decontamination — training docs sharing any word
-   * 4-gram with the doc_id%97 benchmark slice (full oracle; the
-   * operator joins on gram hashes, the oracle on gram strings). */
-  private def qDecontaminate(s: SparkSession, dir: String): DataFrame = {
-    val docs = t(s, dir, "documents")
-    graft.text.Decontaminate.markContaminated(
-        docs.filter(pmod(col("doc_id"), lit(97)) =!= 0),
-        docs.filter(pmod(col("doc_id"), lit(97)) === 0),
-        "doc_id", "text", n = 4)
-      .orderBy("doc_id")
-  }
-
-  /** C54 (r14): SEMANTIC decontamination ([[graft.text.Decontaminate
-   * .markContaminatedSemantic]]) — flag corpus vectors within cosine
-   * 0.35 of any benchmark vector (every 25th vec id): the
-   * meaning-level leak the n-gram ladder (C17/C17b/C17c) misses on
-   * paraphrases. Benchmark broadcasts whole; one corpus scan, exact
-   * recall (no LSH — the r14 probe showed ~0.6 recall at mid-range
-   * cosines). Integer hit counts keep the row float-hash-safe; the
-   * threshold compare uses the identical `cos*1000 >= 350` form on
-   * both engines (the C5b parity precedent). */
-  private def qDecontaminateSemantic(s: SparkSession, dir: String): DataFrame = {
-    val emb = t(s, dir, "embeddings")
-    graft.text.Decontaminate.markContaminatedSemantic(
-        emb.filter(col("vec_id") % 25 =!= 0),
-        emb.filter(col("vec_id") % 25 === 0),
-        "vec_id", "embedding", thresholdMilli = 350)
-      .orderBy("vec_id")
-  }
-
-  /** C17b: Bloom-accelerated decontamination ([[graft.text
-   * .Decontaminate.markContaminatedBig]]) — the many-benchmark regime
-   * where the gram set no longer broadcasts: bloom-prune the corpus
-   * gram stream at the scan, exact-confirm over the pruned slice with
-   * a shuffle join. Bloom false positives die in the exact join, so
-   * the row shares q_decontaminate's oracle verbatim — the driver
-   * hash-compare IS the equivalence gate. */
-  private def qDecontaminateBloom(s: SparkSession, dir: String): DataFrame = {
-    val docs = t(s, dir, "documents")
-    graft.text.Decontaminate.markContaminatedBig(
-        docs.filter(pmod(col("doc_id"), lit(97)) =!= 0),
-        docs.filter(pmod(col("doc_id"), lit(97)) === 0),
-        "doc_id", "text", n = 4)
-      .orderBy("doc_id")
-  }
-
-  /** C17c: SPAN-level decontamination ([[graft.text.Decontaminate
-   * .exciseContaminated]]) — cut exactly the benchmark-overlapping
-   * token spans, keep the document. Full string-space oracle: DuckDB
-   * replays the same whitespace tokenization, gram-start hits,
-   * [i, i+n) cover merge, and ordered token rebuild, so clean_text is
-   * hash-compared byte-for-byte. */
-  private def qDecontaminateSpans(s: SparkSession, dir: String): DataFrame = {
-    val docs = t(s, dir, "documents")
-    graft.text.Decontaminate.exciseContaminated(
-        docs.filter(pmod(col("doc_id"), lit(97)) =!= 0),
-        docs.filter(pmod(col("doc_id"), lit(97)) === 0),
-        "doc_id", "text", n = 4)
-      .orderBy("doc_id")
-  }
-
-  /** C42: corpus-global duplicate-span excision ([[graft.text.DupSpans
-   * .exciseDuplicateSpans]]) — every non-canonical occurrence of a
-   * 5-gram appearing ≥2 times corpus-wide is cut, one canonical copy
-   * (lowest (doc_id, pos)) survives. Full string-space oracle: DuckDB
-   * replays the tokenization, gram counting, canonical pick, [i, i+n)
-   * cover merge, and ordered rebuild; clean_text hash-compares
-   * byte-for-byte. */
-  private def qDupSpans(s: SparkSession, dir: String): DataFrame =
-    graft.text.DupSpans.exciseDuplicateSpans(
-        t(s, dir, "documents"), "doc_id", "text", n = 5, minCount = 2L)
-      .orderBy("doc_id")
-
-  /** C18: per-language quota sampling by deterministic hash order. */
-  private def qQuotaSample(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Sampling
-      .quotaSample(t(s, dir, "documents").select("doc_id", "lang"), "lang", "doc_id", 30)
-      .orderBy("lang", "doc_id")
-
-  /** C19: sequential token packing into 512-token context windows,
-   * sharded by source (concat-then-split pretraining batches). */
-  private def qPackSequences(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Sampling
-      .packSequences(t(s, dir, "documents"), "source", "doc_id",
-        size(graft.functions.expressions.wordNgrams(col("text"), 1)), 512L)
-      .select("source", "doc_id", "n_tok", "chunk_id", "chunk_off")
-      .orderBy("source", "doc_id")
-
-  /** C19b: materialized packing (Sampling.materializePack) — the
-   * actual training sequences: per (source, chunk), documents
-   * concatenated in pack order. The chunk text is projected through
-   * md5 so the verify artifact stays small while the oracle still
-   * value-checks every byte of every concatenation (DuckDB replays
-   * the cumulative-offset assignment AND the ordered string_agg, then
-   * hashes identically). */
-  private def qPackMaterialize(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Sampling
-      .materializePack(t(s, dir, "documents"), "source", "doc_id", "text",
-        size(graft.functions.expressions.wordNgrams(col("text"), 1)), 512L)
-      .select(col("source"), col("chunk_id"), col("n_docs"), col("chunk_tok"),
-        md5(col("chunk_text").cast("binary")).as("text_md5"))
-      .orderBy("source", "chunk_id")
-
-  /** C20: TF-IDF top-3 terms per document (rational idf → exact
-   * cross-engine reproducibility; full oracle). */
-  private def qTfidf(s: SparkSession, dir: String): DataFrame =
-    graft.text.TfIdf.topTerms(t(s, dir, "documents"), "doc_id", "text", 3)
-      .orderBy("doc_id", "rnk")
-
-  /** C43: BM25 ranked retrieval ([[graft.text.TfIdf.bm25TopK]]) —
-   * top-10 documents for a 3-term query under fixed-point BM25
-   * (rational-odds idf, one 64-bit integer division per term at ppm
-   * scale), FULL oracle: DuckDB replays tf/df/dl/N/S and the exact
-   * integer formula, so unlike the ln-based [[graft.text.TfIdf.bm25]]
-   * every score hash-compares bit-for-bit. */
-  private def qBm25(s: SparkSession, dir: String): DataFrame =
-    graft.text.TfIdf.bm25TopK(t(s, dir, "documents"), "doc_id", "text",
-        Seq("vector", "stream", "window"), 10)
-      .orderBy(col("score_ppm").desc, col("doc_id"))
-
-  /** C21: corpus length histogram — fixed-width buckets over document
-   * length (the length-distribution summary every corpus audit
-   * starts with). Bucket arithmetic is plain integer math (no
-   * width_bucket dialect risk). */
-  private def qLengthHist(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "documents")
-      .withColumn("bucket", expr("least(n_chars div 200, 9L)"))
-      .groupBy("bucket")
-      .agg(count(lit(1)).as("n_docs"),
-        min("n_chars").as("min_chars"), max("n_chars").as("max_chars"))
-      .orderBy("bucket")
-
-  /** B34: ordered conversion funnel — view → click within 24h →
-   * purchase within 24h of that click, per user; stage = furthest
-   * step reached IN ORDER (conditional mins chained through two
-   * aggregations). */
-  private def qFunnel(s: SparkSession, dir: String): DataFrame = {
-    val dayUs = 24L * 3600L * 1000000L
-    val ev = withEventTime(t(s, dir, "events"))
-      .select(col("user_id"), col("event_type"), col("ts_us"))
-    val v = ev.filter(col("event_type") === "view")
-      .groupBy("user_id").agg(min("ts_us").as("v_us"))
-    val c = ev.filter(col("event_type") === "click")
-      .join(v, Seq("user_id"))
-      .filter(col("ts_us") >= col("v_us") && col("ts_us") <= col("v_us") + dayUs)
-      .groupBy("user_id").agg(min("ts_us").as("c_us"))
-    val p = ev.filter(col("event_type") === "purchase")
-      .join(c, Seq("user_id"))
-      .filter(col("ts_us") >= col("c_us") && col("ts_us") <= col("c_us") + dayUs)
-      .groupBy("user_id").agg(min("ts_us").as("p_us"))
-    val users = ev.select("user_id").distinct()
-    users
-      .join(v, Seq("user_id"), "left").join(c, Seq("user_id"), "left").join(p, Seq("user_id"), "left")
-      .select(when(col("p_us").isNotNull, 3L)
-        .when(col("c_us").isNotNull, 2L)
-        .when(col("v_us").isNotNull, 1L).otherwise(0L).as("stage"))
-      .groupBy("stage").agg(count(lit(1)).as("n_users"))
-      .orderBy("stage")
-  }
-
-  /** B35: weekly cohort retention — users bucketed by first-event
-   * week, counted per active-week offset. Week indices are integer
-   * epoch-microsecond division: engine-portable, no calendar. */
-  private def qRetention(s: SparkSession, dir: String): DataFrame = {
-    val weekUs = 7L * 86400L * 1000000L
-    val ev = withEventTime(t(s, dir, "events"))
-      .select(col("user_id"), expr(s"ts_us div ${weekUs}L").as("wk"))
-    val cohort = ev.groupBy("user_id").agg(min("wk").as("cohort_wk"))
-    ev.distinct()
-      .join(cohort, Seq("user_id"))
-      .groupBy(col("cohort_wk"), (col("wk") - col("cohort_wk")).as("wk_offset"))
-      .agg(count_distinct(col("user_id")).as("n_users"))
-      .orderBy("cohort_wk", "wk_offset")
-  }
-
-  /** C22: per-source corpus quality audit — ratio-of-integer-sums
-   * (punct/digit chars over total chars, tokens per doc), exact
-   * regardless of reduction order; explicit ASCII char classes so
-   * both regex engines count identically. */
-  private def qSourceQuality(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "documents")
-      .select(col("source"),
-        length(col("text")).cast("long").as("chars"),
-        size(regexp_extract_all(col("text"), lit("[^A-Za-z0-9 \\t\\n\\r]"), lit(0))).cast("long").as("punct"),
-        size(regexp_extract_all(col("text"), lit("[0-9]"), lit(0))).cast("long").as("digits"),
-        size(graft.functions.expressions.wordNgrams(col("text"), 1)).cast("long").as("toks"))
-      .groupBy("source")
-      .agg(count(lit(1)).as("n_docs"),
-        sum("chars").as("sum_chars"),
-        // parts-per-million in integer space: ratio-of-integer-sums as a
-        // double hash-mismatched the driver once (r03) despite local
-        // bit-identity, so the audit emits no doubles at all
-        expr("sum(punct) * 1000000 div sum(chars)").as("punct_ppm"),
-        expr("sum(digits) * 1000000 div sum(chars)").as("digit_ppm"),
-        expr("sum(toks) * 1000 div count(1)").as("toks_per_kdoc"))
-      .orderBy("source")
-
-  /** B36: order-priority checking (TPC-H Q4 shape) — EXISTS correlated
-   * semi join with a non-equi date residual (ship >60 days after
-   * order), then count by priority. */
-  private def qPriorityCount(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "orders")
-      .filter(col("o_orderdate").cast("date") >= lit("1996-01-01").cast("date") &&
-              col("o_orderdate").cast("date") <  lit("1996-04-01").cast("date"))
-      .join(t(s, dir, "lineitem").select("l_orderkey", "l_shipdate"),
-        col("o_orderkey") === col("l_orderkey") &&
-          col("l_shipdate").cast("date") > date_add(col("o_orderdate").cast("date"), 60),
-        "left_semi")
-      .groupBy("o_orderpriority")
-      .agg(count(lit(1)).as("order_count"))
-      .orderBy("o_orderpriority")
-
-  /** B37: national market share (TPC-H Q8 shape) — one nation's share
-   * of revenue into one region's customers per year; nation broadcast
-   * under two roles, ratio of identical integer cent-sums (division
-   * bit-identical cross-engine, so no rounding). */
-  private def qMarketShare(s: SparkSession, dir: String): DataFrame = {
-    val nation = t(s, dir, "nation")
-    val regionCust = t(s, dir, "customer").select("c_custkey", "c_nationkey")
-      .join(broadcast(nation.filter(col("n_regionkey") === 2)),
-        col("c_nationkey") === col("n_nationkey"), "left_semi")
-      .select("c_custkey")
-    val supp = broadcast(
-      t(s, dir, "supplier").select("s_suppkey", "s_nationkey")
-        .join(broadcast(nation.select("n_nationkey", "n_name")),
-          col("s_nationkey") === col("n_nationkey"))
-        .select(col("s_suppkey"), col("n_name").as("supp_nation")))
-    t(s, dir, "lineitem")
-      .join(t(s, dir, "orders")
-        .filter(col("o_orderdate").cast("date") >= lit("1996-01-01").cast("date") &&
-                col("o_orderdate").cast("date") <  lit("1998-01-01").cast("date"))
-        .select("o_orderkey", "o_custkey", "o_orderdate"),
-        col("l_orderkey") === col("o_orderkey"))
-      .join(regionCust, col("o_custkey") === col("c_custkey"), "left_semi")
-      .join(supp, col("l_suppkey") === col("s_suppkey"))
-      .withColumn("vol", cents(col("l_extendedprice")) * cents(lit(1.0) - col("l_discount")))
-      .groupBy(year(col("o_orderdate")).cast("long").as("o_year"))
-      .agg((sum(when(col("supp_nation") === "NATION_3", col("vol")).otherwise(0L)).cast("double") /
-        sum(col("vol"))).as("mkt_share"))
-      .orderBy("o_year")
-  }
-
-  /** B38: product-type profit (TPC-H Q9 shape, partsupp-free: cost
-   * proxied by half retail price) — per supplier-nation per year,
-   * exact 1e-5-dollar integer units throughout. */
-  private def qProductProfit(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem")
-      .join(broadcast(t(s, dir, "part")
-        .filter(col("p_name").contains("widget"))
-        .select("p_partkey", "p_retailprice")),
-        col("l_partkey") === col("p_partkey"))
-      .join(broadcast(t(s, dir, "supplier").select("s_suppkey", "s_nationkey")),
-        col("l_suppkey") === col("s_suppkey"))
-      .join(broadcast(t(s, dir, "nation").select("n_nationkey", "n_name")),
-        col("s_nationkey") === col("n_nationkey"))
-      .join(t(s, dir, "orders").select("o_orderkey", "o_orderdate"),
-        col("l_orderkey") === col("o_orderkey"))
-      .withColumn("amount_e5",
-        cents(col("l_extendedprice")) * cents(lit(1.0) - col("l_discount")) * 10L -
-        cents(col("p_retailprice")) * cents(col("l_quantity")) * 5L)
-      .groupBy(col("n_name").as("nation"), year(col("o_orderdate")).cast("long").as("o_year"))
-      .agg((sum("amount_e5") / 100000.0).as("profit"))
-      .orderBy(col("nation"), col("o_year").desc)
-
-  /** B39: returned-item reporting (TPC-H Q10 shape) — top-20 customers
-   * by returned revenue in a quarter; the LIMIT rides a total order
-   * (revenue desc, custkey) so the selected set is deterministic. */
-  private def qReturnedItems(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem").filter(col("l_returnflag") === "R")
-      .join(t(s, dir, "orders")
-        .filter(col("o_orderdate").cast("date") >= lit("1996-01-01").cast("date") &&
-                col("o_orderdate").cast("date") <  lit("1996-04-01").cast("date"))
-        .select("o_orderkey", "o_custkey"),
-        col("l_orderkey") === col("o_orderkey"))
-      .join(t(s, dir, "customer"), col("o_custkey") === col("c_custkey"))
-      .join(broadcast(t(s, dir, "nation").select("n_nationkey", "n_name")),
-        col("c_nationkey") === col("n_nationkey"))
-      .withColumn("rev", cents(col("l_extendedprice")) * cents(lit(1.0) - col("l_discount")))
-      .groupBy("c_custkey", "c_name", "c_acctbal", "n_name")
-      .agg((sum("rev") / 10000.0).as("revenue"))
-      .orderBy(col("revenue").desc, col("c_custkey"))
-      .limit(20)
-
-  /** B40: important parts (TPC-H Q11 shape, lineitem as the
-   * part↔supplier link) — per-part value from two nations' suppliers,
-   * kept when above 0.1% of the global total; the global scalar rides
-   * a 1-row broadcast cross join and the threshold compare stays in
-   * integer space. */
-  private def qImportantParts(s: SparkSession, dir: String): DataFrame = {
-    val li = t(s, dir, "lineitem")
-      .join(broadcast(t(s, dir, "supplier")
-        .filter(col("s_nationkey").isin(7, 19)).select("s_suppkey")),
-        col("l_suppkey") === col("s_suppkey"), "left_semi")
-      .select(col("l_partkey"), cents(col("l_extendedprice")).as("val_c"))
-    li.groupBy("l_partkey").agg(sum("val_c").as("value_c"))
-      .crossJoin(broadcast(li.agg(sum("val_c").as("total_c"))))
-      .filter(col("value_c") * 1000L > col("total_c"))
-      .select(col("l_partkey").as("p_partkey"), (col("value_c") / 100.0).as("value"))
-      .orderBy(col("value").desc, col("p_partkey"))
-  }
-
-  /** B41: excess/dominant suppliers (TPC-H Q20 shape) — suppliers
-   * shipping >30% of a filtered part's yearly volume; per-part totals
-   * via a window over the grouped result, share test in integer
-   * space, then a semi join back to supplier. */
-  private def qExcessSuppliers(s: SparkSession, dir: String): DataFrame = {
-    val dominant = t(s, dir, "lineitem")
-      .filter(col("l_shipdate").cast("date") >= lit("1996-01-01").cast("date") &&
-              col("l_shipdate").cast("date") <  lit("1997-01-01").cast("date"))
-      .join(broadcast(t(s, dir, "part")
-        .filter(col("p_name").startsWith("small")).select("p_partkey")),
-        col("l_partkey") === col("p_partkey"), "left_semi")
-      .groupBy("l_partkey", "l_suppkey")
-      .agg(sum(cents(col("l_quantity"))).as("supp_qty_c"))
-      .withColumn("part_qty_c", sum("supp_qty_c").over(Window.partitionBy("l_partkey")))
-      .filter(col("supp_qty_c") * 10L > col("part_qty_c") * 3L)
-      .select("l_suppkey").distinct()
-    t(s, dir, "supplier")
-      .join(dominant, col("s_suppkey") === col("l_suppkey"), "left_semi")
-      .select("s_suppkey", "s_name", "s_acctbal")
-      .orderBy("s_suppkey")
-  }
-
-  /** C56 (r14): corpus-order NOVELTY / memorization-risk scoring —
-   * per doc, the fraction of its distinct 3-gram shingles already
-   * seen in an EARLIER doc (first occurrence = min doc id per gram):
-   * the cross-document complement of C23's within-doc repetition and
-   * the graded signal dedup's binary keep/drop can't express
-   * (curriculum ordering, near-dup-tail weighting, memorization-risk
-   * audits score by HOW MUCH of a doc is recycled). Scale shape: one
-   * gram-keyed min aggregate (map-side combined) + one join back on
-   * the gram hash + one doc rollup — all hash-keyed shuffles, nothing
-   * global; the shingle kernel is the codegen'd wordShingleHashes,
-   * hash-space ≡ string-space re-proven by the string-replaying
-   * oracle per run (the C40 argument). Shingle-less docs report 0
-   * grams and a NULL ratio (integer div by zero is NULL in both
-   * engines). */
-  private def qNovelty(s: SparkSession, dir: String): DataFrame = {
-    val docs = t(s, dir, "documents")
-    val grams = docs.select(col("doc_id"),
-      explode(graft.functions.expressions.wordShingleHashes(
-        coalesce(col("text"), lit("")), 3)).as("gh"))
-    val first = grams.groupBy("gh").agg(min("doc_id").as("first_id"))
-    val per = grams.join(first, "gh")
-      .groupBy("doc_id")
-      .agg(count(lit(1)).as("n_grams"),
-        sum(when(col("first_id") < col("doc_id"), 1L).otherwise(0L)).as("n_seen"))
-    docs.select("doc_id").join(per, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("n_grams"), lit(0L)).as("n_grams"),
-        coalesce(col("n_seen"), lit(0L)).as("n_seen"))
-      .withColumn("seen_ppm", expr("n_seen * 1000000 div n_grams"))
-      .orderBy("doc_id")
-  }
-
-  /** C23: within-document repetition audit (Gopher-style signal) —
-   * unique-token and unique-2-gram rates per source as ppm of
-   * integer sums; the n-gram kernel is the codegen'd wordNgrams. */
-  private def qRepetition(s: SparkSession, dir: String): DataFrame = {
-    val toks = graft.functions.expressions.wordNgrams(col("text"), 1)
-    val grams = graft.functions.expressions.wordNgrams(col("text"), 2)
-    t(s, dir, "documents")
-      .select(col("source"),
-        size(toks).cast("long").as("n_tok"),
-        size(array_distinct(toks)).cast("long").as("n_utok"),
-        size(grams).cast("long").as("n_2g"),
-        size(array_distinct(grams)).cast("long").as("n_u2g"))
-      .groupBy("source")
-      .agg(sum("n_tok").as("sum_tok"),
-        expr("sum(n_utok) * 1000000 div sum(n_tok)").as("uniq_tok_ppm"),
-        expr("sum(n_u2g) * 1000000 div sum(n_2g)").as("uniq_2g_ppm"))
-      .orderBy("source")
-  }
-
-  /** C89 (r16): per-doc Gopher repetition FILTER — the missing half of
-   * the Gopher rule suite: C23 audits per-source unique-token/2-gram
-   * RATES, but the published filter drops individual documents whose
-   * most frequent word n-gram covers too many characters (top-2-gram
-   * > 0.20, top-3 > 0.18, top-4 > 0.16 of chars). One codegen'd pass
-   * per row ([[graft.functions.expressions.gopherTopPpm]] — tokenize
-   * once, hash-count grams per n, truncating ppm), ZERO shuffle: the
-   * per-doc mode never explodes n-grams into the plan. The corpus
-   * plants a 12× repeated phrase on every 9th doc, which must breach
-   * all three thresholds; the oracle recomputes every doc's three
-   * ppms (count × gram chars × 10⁶ / text chars, lex-smallest gram on
-   * count ties) and the verdict from the raw text. */
-  private def qGopherFilter(s: SparkSession, dir: String): DataFrame = {
-    val raw = when(col("doc_id") % 9 === 0,
-      concat(col("text"), expr("repeat(' buy cheap now', 12)")))
-      .otherwise(col("text"))
-    t(s, dir, "documents")
-      .select(col("doc_id"), col("source"),
-        graft.functions.expressions.gopherTopPpm(raw, 2, 4).as("ppms"))
-      .select(col("doc_id"), col("source"),
-        col("ppms")(0).as("top2_ppm"),
-        col("ppms")(1).as("top3_ppm"),
-        col("ppms")(2).as("top4_ppm"))
-      .withColumn("pass",
-        col("top2_ppm") <= 200000L && col("top3_ppm") <= 180000L &&
-          col("top4_ppm") <= 160000L)
-      .orderBy("doc_id")
-  }
-
-  /** C90 (r16): hashing-trick linear quality classifier INFERENCE —
-   * how learned quality filters (fastText-style) actually serve at
-   * corpus scale: token → 64-bit hash → weight bucket (2¹⁶ here) →
-   * Σ weights, one codegen'd pass per row
-   * ([[graft.functions.expressions.hashedLinearScore]]), no
-   * vocabulary broadcast, no explode, no shuffle until the per-source
-   * rollup. The weight table is a deterministic seeded function of
-   * the bucket (mix64(bucket ⊕ seed) mod 2001 − 1000) standing in
-   * for the trained array — identical plumbing, and what makes the
-   * FULL cross-engine oracle possible: DuckDB replays tokenizer,
-   * FNV-1a, bucketing, the mix64 weight, and the occurrence-weighted
-   * sum per doc, then the keep verdict and per-source rollup. */
-  private def qQualityClassifier(s: SparkSession, dir: String): DataFrame = {
-    val scored = t(s, dir, "documents")
-      .select(col("doc_id"), col("source"),
-        graft.functions.expressions
-          .hashedLinearScore(col("text"), 65536L, 1442695040888963407L)
-          .as("score"))
-      .withColumn("keep", col("score") >= 0L)
-    scored.groupBy("source")
-      .agg(count(lit(1)).as("n_docs"),
-        sum(when(col("keep"), 1L).otherwise(0L)).as("n_keep"),
-        sum("score").as("sum_score"),
-        min("score").as("min_score"), max("score").as("max_score"))
-      .orderBy("source")
-  }
-
-  /** C24: deterministic corpus split — md5(doc_id) hex-prefix bucket
-   * (identical bytes in any engine/language, stable under
-   * repartitioning and retries), 90/5/5 train/val/test. */
-  private def qHashSplit(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "documents")
-      .withColumn("bucket",
-        expr("conv(substring(md5(cast(doc_id as string)), 1, 8), 16, 10)").cast("long") % 100)
-      .withColumn("split",
-        when(col("bucket") < 90, "train").when(col("bucket") < 95, "val").otherwise("test"))
-      .groupBy("split")
-      .agg(count(lit(1)).as("n_docs"),
-        count_distinct(col("source")).as("n_sources"),
-        min("bucket").as("min_bucket"), max("bucket").as("max_bucket"))
-      .orderBy("split")
-
-  /** C55 (r14): leakage-safe train/val/test split — split assignment
-   * at NEAR-DUP-CLUSTER granularity, not per doc: a per-doc hash
-   * split (C24) lets two near-duplicates straddle train and test,
-   * leaking training content into evaluation. Clusters come from the
-   * same verified MinHash pairs as C14; the whole cluster hashes to
-   * one split via the C24 md5-bucket arithmetic on the CLUSTER id.
-   * One CC pass + one codegen'd hash per row — no extra shuffle over
-   * C14. The oracle replays closure + bucket arithmetic and the
-   * no-straddle property follows by construction (split is a pure
-   * function of cluster_id). */
-  private def qLeakageSplit(s: SparkSession, dir: String): DataFrame = {
-    val docs = t(s, dir, "documents")
-    val pairs = graft.dedup.Dedup
-      .minhashCandidates(docs, "doc_id", "text")
-      .filter(col("jaccard") >= 0.8)
-    graft.operators.Components.dedupClusters(docs, "doc_id", pairs)
-      .withColumn("bucket",
-        expr("conv(substring(md5(concat('lsplit:', cast(cluster_id as string))), 1, 8), 16, 10)")
-          .cast("long") % 100)
-      .withColumn("split",
-        when(col("bucket") < 90, "train").when(col("bucket") < 95, "val")
-          .otherwise("test"))
-      .select("doc_id", "cluster_id", "bucket", "split")
-      .orderBy("doc_id")
-  }
-
-  /** B82 (r14): revenue concentration (Lorenz-by-deciles) — "what
-   * share of revenue do the top customer deciles hold": per-customer
-   * revenue rollup, decile assignment from NINE broadcast
-   * percentile_disc cuts (the C50/B52 rank-statistic pattern — NO
-   * global sort, no ntile's single-partition window), then per-decile
-   * counts and integer ppm shares. The textbook Gini needs a global
-   * rank over every customer; the decile report answers the same
-   * business question with one map-side rollup + a 1-row cuts
-   * aggregate + a broadcast compare pass — the formulation that
-   * survives 10⁹ customers. Ties share a decile deterministically. */
-  private def qConcentration(s: SparkSession, dir: String): DataFrame = {
-    val base = t(s, dir, "orders").groupBy("o_custkey")
-      .agg(sum(cents(col("o_totalprice"))).as("rev_cents"))
-    val cutCols = (1 to 9).map(i =>
-      expr(s"percentile_disc(0.${i}) within group (order by rev_cents)")
-        .cast("long").as(s"c$i"))
-    val cuts = base.agg(cutCols.head, cutCols.tail: _*)
-    val total = base.agg(sum("rev_cents").as("total_cents"),
-      count(lit(1)).as("n_total"))
-    base.crossJoin(broadcast(cuts))
-      .withColumn("decile",
-        (1 to 9).map(i => (col("rev_cents") > col(s"c$i")).cast("long"))
-          .reduce(_ + _) + 1L)
-      .groupBy("decile")
-      .agg(count(lit(1)).as("n_customers"), sum("rev_cents").as("sum_cents"))
-      .crossJoin(broadcast(total))
-      .select(col("decile"), col("n_customers"), col("sum_cents"),
-        expr("sum_cents * 1000000 div total_cents").as("share_ppm"))
-      .orderBy("decile")
-  }
-
-  /** B90 (r14): union-of-intervals coverage per user
-   * ([[graft.operators.Intervals.unionCoverage]]) — total time each
-   * user was "active" counting overlaps ONCE (utilization/uptime):
-   * each event opens a window of (1 + event_id mod 7) ten-minute
-   * units, all-integer microseconds so the measure replays exactly.
-   * Two window passes over one per-key sort — no self-join, no
-   * per-minute explode; a year-long interval costs one row. */
-  private def qIntervalCoverage(s: SparkSession, dir: String): DataFrame = {
-    val iv = withEventTime(t(s, dir, "events"))
-      .select(col("user_id"), col("ts_us").as("s_us"),
-        (col("ts_us") + (lit(1L) + col("event_id") % 7L) * 600000000L)
-          .as("e_us"))
-    graft.operators.Intervals.unionCoverage(iv, "user_id", "s_us", "e_us")
-      .select(col("user_id"), col("n_intervals"), col("n_segments"),
-        col("covered").as("covered_us"), col("span").as("span_us"))
-      .orderBy("user_id")
-  }
-
-  /** B91 (r14): per-nation Gini concentration of customer spend
-   * ([[graft.operators.Concentration.giniPpm]]) — the inequality
-   * index B82's decile report deliberately avoided computing
-   * GLOBALLY: per group, the rank window is partitioned by nation, so
-   * the sort is the ordinary within-key sort every keyed window pays,
-   * and the Σ(2i−n−1)x numerator runs in decimal(38,0) (bigint Σi·x
-   * silently overflows at 10⁹-member groups — the B55 class). DuckDB
-   * replays the quotient bit-for-bit in HUGEINT. */
-  private def qGiniNation(s: SparkSession, dir: String): DataFrame = {
-    val spend = t(s, dir, "orders").groupBy("o_custkey")
-      .agg(sum(cents(col("o_totalprice"))).as("v"))
-    val c = t(s, dir, "customer").select(col("c_custkey"), col("c_nationkey"))
-    val n = t(s, dir, "nation").select(col("n_nationkey"), col("n_name"))
-    val j = spend.join(broadcast(c), col("o_custkey") === col("c_custkey"))
-      .join(broadcast(n), col("c_nationkey") === col("n_nationkey"))
-      .select(col("n_name"), col("v"), col("c_custkey"))
-    graft.operators.Concentration.giniPpm(j, Seq("n_name"), "v", "c_custkey")
-      .select(col("n_name"), col("n").as("n_customers"),
-        col("sum_v").as("sum_cents"), col("gini_ppm"))
-      .orderBy("n_name")
-  }
-
-  /** B83 (r14): per-group OLS trend ([[graft.operators.Regression]]) —
-   * per-nation revenue trend: x = days since 1992-01-01 of the order
-   * date, y = order total in cents, fit y = a + b·x per nation. The
-   * five sufficient statistics are exact decimal(38,0) sums in ONE
-   * map-side-combined aggregation (never REGR_SLOPE's reduction-order
-   * float accumulation, never a per-group collect), and slope/
-   * intercept come out as exact integral quotients — slope in
-   * micro-cents/day, intercept in cents — that DuckDB replays
-   * bit-for-bit in HUGEINT. The customer/nation dimensions broadcast. */
-  private def qGroupOls(s: SparkSession, dir: String): DataFrame = {
-    val o = t(s, dir, "orders").select(col("o_custkey"),
-      datediff(to_date(col("o_orderdate")), to_date(lit("1992-01-01")))
-        .cast("long").as("x"),
-      cents(col("o_totalprice")).as("y"))
-    val c = t(s, dir, "customer").select(col("c_custkey"), col("c_nationkey"))
-    val n = t(s, dir, "nation").select(col("n_nationkey"), col("n_name"))
-    val joined = o.join(broadcast(c), col("o_custkey") === col("c_custkey"))
-      .join(broadcast(n), col("c_nationkey") === col("n_nationkey"))
-    graft.operators.Regression.groupedOls(joined, Seq("n_name"), "x", "y")
-      .select(col("n_name"), col("n").as("n_orders"),
-        col("slope_scaled").as("slope_udpm"),
-        col("intercept").as("intercept_cents"))
-      .orderBy("n_name")
-  }
-
-  /** B84 (r14): time-series gap-fill with exact linear interpolation
-   * ([[graft.operators.Interpolate.linearFill]]) — the per-nation
-   * daily-revenue panel densified over each nation's own [first, last]
-   * day span, absent days filled with the integer lerp of the nearest
-   * present neighbors. One window pass per nation (partition-local
-   * sort over a span-bounded series, no global ordering), spine
-   * generated per key — the densify step B48's calendar spine leaves
-   * to the caller, done value-exactly. */
-  private def qInterpolate(s: SparkSession, dir: String): DataFrame = {
-    val o = t(s, dir, "orders").select(col("o_custkey"),
-      datediff(to_date(col("o_orderdate")), to_date(lit("1992-01-01")))
-        .cast("long").as("d"),
-      cents(col("o_totalprice")).as("rev_cents"))
-    val c = t(s, dir, "customer").select(col("c_custkey"), col("c_nationkey"))
-    val n = t(s, dir, "nation").select(col("n_nationkey"), col("n_name"))
-    val daily = o.join(broadcast(c), col("o_custkey") === col("c_custkey"))
-      .join(broadcast(n), col("c_nationkey") === col("n_nationkey"))
-      .groupBy("n_name", "d").agg(sum("rev_cents").as("rev_cents"))
-    graft.operators.Interpolate.linearFill(daily, Seq("n_name"), "d", "rev_cents")
-      .orderBy("n_name", "d")
-  }
-
-  /** B85 (r14): exact per-group mode with deterministic tie-break
-   * ([[graft.operators.Mode.groupedMode]]) — dominant return flag per
-   * part brand. The raw facts are touched once (map-side-combined
-   * pair count); everything after runs on the bounded distinct-pair
-   * relation, and ties resolve to the smallest value so the output is
-   * a pure function of the data — the property DuckDB's own mode()
-   * does not give (its ties are arrival-order). */
-  private def qGroupMode(s: SparkSession, dir: String): DataFrame = {
-    val li = t(s, dir, "lineitem").select(col("l_partkey"), col("l_returnflag"))
-    val p = t(s, dir, "part").select(col("p_partkey"), col("p_brand"))
-    val j = li.join(broadcast(p), col("l_partkey") === col("p_partkey"))
-    graft.operators.Mode.groupedMode(j, Seq("p_brand"), "l_returnflag")
-      .orderBy("p_brand")
-  }
-
-  /** A19 (r14): atomic multi-table snapshot publish + time travel
-   * ([[graft.sinks.Snapshot]]) — publish v1 = {customer rollup,
-   * nation dim}, then v2 with a changed rollup; read the CURRENT
-   * version and the PINNED v1 back through the manifest and emit both
-   * rollups. The oracle computes both versions' content directly from
-   * the source tables — equality proves write→pointer-flip→read
-   * fidelity AND that v1 stayed intact after v2's publish (version
-   * immutability is what makes time travel trustworthy). */
-  private def qSnapshotPublish(s: SparkSession, dir: String): DataFrame = {
-    val root = s"${graft.Scratch.root(s)}/snap_${sinkSeq.incrementAndGet()}"
-    def rollup(onlyPositive: Boolean) = {
-      val c = t(s, dir, "customer")
-      (if (onlyPositive) c.filter(col("c_acctbal") > 0) else c)
-        .groupBy("c_nationkey")
-        .agg(count(lit(1)).as("n_cust"),
-          sum(cents(col("c_acctbal"))).as("bal_cents"))
-    }
-    val nation = t(s, dir, "nation").select("n_nationkey", "n_name")
-    val v1 = graft.sinks.Snapshot.publish(s, root,
-      Map("cust" -> rollup(onlyPositive = false), "nation" -> nation))
-    graft.sinks.Snapshot.publish(s, root,
-      Map("cust" -> rollup(onlyPositive = true), "nation" -> nation))
-    def readBack(version: Option[Long], tag: Long) =
-      graft.sinks.Snapshot.read(s, root, "cust", version)
-        .join(graft.sinks.Snapshot.read(s, root, "nation", version),
-          col("c_nationkey") === col("n_nationkey"))
-        .select(lit(tag).as("version"), col("n_name"), col("n_cust"),
-          col("bal_cents"))
-    readBack(None, 2L).unionByName(readBack(Some(v1), 1L))
-      .orderBy("version", "n_name")
-  }
-
-  /** C60 (r14): per-source dataset card — the one-page audit manifest
-   * a corpus release ships with (docs, tokens, exact-dup rate,
-   * dominant predicted language, median length), composed from the
-   * verified C-operators' kernels: wordNgrams token counts (C10),
-   * langId (C8) summarized by the B85 deterministic mode, exact-dup
-   * ppm from md5 distinct (C1's key), and the median via
-   * bounded-domain cumulative counts (the B67 pattern — no
-   * all-values percentile state). One pass over the corpus feeds
-   * every column; everything after runs on bounded per-source
-   * relations. */
-  private def qDatasetCard(s: SparkSession, dir: String): DataFrame = {
-    val per = t(s, dir, "documents")
-      .select(col("source"), coalesce(col("text"), lit("")).as("text"))
-      .select(col("source"),
-        size(graft.functions.expressions.wordNgrams(col("text"), 1))
-          .cast("long").as("toks"),
-        md5(col("text")).as("h"),
-        TextFunctions.langId(col("text")).as("lang"),
-        length(col("text")).cast("long").as("chars"))
-    val base = per.groupBy("source")
-      .agg(count(lit(1)).as("n_docs"), sum("toks").as("n_tokens"),
-        countDistinct("h").as("n_distinct"))
-      .withColumn("dup_ppm",
-        expr("(n_docs - n_distinct) * 1000000 div n_docs"))
-    val langMode = graft.operators.Mode
-      .groupedMode(per.select("source", "lang"), Seq("source"), "lang")
-      .select(col("source"), col("mode_value").as("top_lang"),
-        col("mode_count"))
-    val wsrc = Window.partitionBy("source")
-    val med = per.groupBy("source", "chars").agg(count(lit(1)).as("c"))
-      .withColumn("cum", sum("c").over(wsrc.orderBy("chars")))
-      .withColumn("tot", sum("c").over(wsrc))
-      .filter(col("cum") * 2 >= col("tot"))
-      .groupBy("source").agg(min("chars").as("median_chars"))
-    base.join(langMode, "source").join(med, "source")
-      .select(col("source"), col("n_docs"), col("n_tokens"), col("dup_ppm"),
-        col("top_lang"),
-        expr("mode_count * 1000000 div n_docs").as("top_lang_ppm"),
-        col("median_chars"))
-      .orderBy("source")
-  }
-
-  /** A20 (r14): incrementally-refreshed materialized view under
-   * versioned publish — B46's mergePartials driven through A19's
-   * Snapshot across three daily refreshes: each refresh aggregates
-   * ONLY its delta slice, merges with the currently-published view,
-   * and publishes a new immutable version. The oracle's FULL
-   * recompute over all three slices must equal the final published
-   * version (delta refresh ≡ rebuild), and version 1 must still equal
-   * the first slice's rollup (immutability under repeated refresh).
-   * At 100 TB this is the nightly-view shape: delta-sized aggregation
-   * + view-sized merge + one pointer flip, never a history rescan. */
-  private def qMvRefresh(s: SparkSession, dir: String): DataFrame = {
-    val root = s"${graft.Scratch.root(s)}/mv_${sinkSeq.incrementAndGet()}"
-    val o = t(s, dir, "orders").select(col("o_orderkey"),
-      col("o_orderpriority"), cents(col("o_totalprice")).as("rev"))
-    def rollup(m: Long) = o.filter(col("o_orderkey") % 3 === m)
-      .groupBy("o_orderpriority")
-      .agg(count(lit(1)).as("n_orders"), sum("rev").as("rev_cents"),
-        max("rev").as("max_cents"))
-    graft.sinks.Snapshot.publish(s, root, Map("mv" -> rollup(0L)))
-    Seq(1L, 2L).foreach { m =>
-      val merged = graft.operators.Incremental.mergePartials(
-        Seq(graft.sinks.Snapshot.read(s, root, "mv"), rollup(m)),
-        Seq("o_orderpriority"),
-        Seq("n_orders" -> "sum", "rev_cents" -> "sum", "max_cents" -> "max"))
-      graft.sinks.Snapshot.publish(s, root, Map("mv" -> merged))
-    }
-    val fin = graft.sinks.Snapshot.read(s, root, "mv")
-      .withColumn("version", lit(3L))
-    val v1 = graft.sinks.Snapshot.read(s, root, "mv", Some(1L))
-      .withColumn("version", lit(1L))
-    fin.unionByName(v1)
-      .select("version", "o_orderpriority", "n_orders", "rev_cents", "max_cents")
-      .orderBy("version", "o_orderpriority")
-  }
-
-  /** B89 (r14): edit-distance fuzzy matching
-   * ([[graft.operators.Fuzzy.fuzzyNamePairs]]) — every pair of
-   * distinct part names within 2 edits, candidates via the q-gram
-   * count-filter equi-join, verified with exact levenshtein. The
-   * oracle is the UNBLOCKED all-pairs ground truth, so a pair the
-   * blocking missed fails the row — the pigeonhole bound is
-   * machine-checked, not cited. */
-  private def qFuzzyMatch(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Fuzzy.fuzzyNamePairs(t(s, dir, "part"), "p_name", maxDist = 2)
-      .orderBy("name_a", "name_b")
-
-  /** A21 (r14): surgical key delete
-   * ([[graft.sinks.TableSink.deleteKeys]]) — the right-to-be-forgotten
-   * operation over the writeSorted layout: footer min/max statistics
-   * prune the file set (no data read for planning), only intersecting
-   * files rewrite. The rollup oracles the post-delete table against
-   * the anti-join ground truth; `surgical` asserts the rewrite
-   * touched SOME but not ALL files — the efficiency claim as a
-   * machine-checked boolean rather than prose. */
-  private def qTargetedDelete(s: SparkSession, dir: String): DataFrame = {
-    val root = s"${graft.Scratch.root(s)}/tdel_${sinkSeq.incrementAndGet()}"
-    val o = t(s, dir, "orders").select(col("o_custkey"),
-      col("o_orderpriority"), cents(col("o_totalprice")).as("rev"))
-    graft.sinks.TableSink.writeSorted(o, root, Seq("o_custkey"),
-      targetPartitions = 8)
-    val rep = graft.sinks.TableSink.deleteKeys(s, root, "o_custkey",
-      Seq(3L, 7L, 11L))
-    val touched = rep.nRewritten + rep.nDeletedFiles
-    s.read.parquet(root)
-      .groupBy("o_orderpriority")
-      .agg(count(lit(1)).as("n_orders"), sum("rev").as("rev_cents"))
-      .withColumn("surgical", lit(touched >= 1 && touched < rep.nFiles))
-      .orderBy("o_orderpriority")
-  }
-
-  /** D17 (r14): exactly-once streaming append
-   * ([[graft.streaming.EventStream.appendSink]]) — an orders slice
-   * streamed through the REAL checkpointed epoch-directory sink over
-   * two micro-batches, then epoch 0 is deliberately RE-APPLIED (the
-   * crash-replay): the read-back must equal the slice exactly once —
-   * idempotence by layout, no sink commit log to lose. */
-  private def qAppendSink(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    implicit val sql: org.apache.spark.sql.SQLContext = s.sqlContext
-    val slice = t(s, dir, "orders").filter(col("o_orderkey") % 41 === 0)
-      .select(col("o_orderkey").as("k"), cents(col("o_totalprice")).as("v"))
-      .as[(Long, Long)].collect().sortBy(_._1)
-    val (b1, b2) = slice.splitAt(slice.length / 2)
-    val base = s"${graft.Scratch.root(s)}/append_${sinkSeq.incrementAndGet()}"
-    val (table, ckpt) = (s"$base/table", s"$base/ckpt")
-    val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long)]
-    val q = graft.streaming.EventStream.appendSink(in.toDF.toDF("k", "v"), table)
-      .option("checkpointLocation", ckpt).start()
-    try {
-      in.addData(b1.toSeq)
-      q.processAllAvailable()
-      in.addData(b2.toSeq)
-      q.processAllAvailable()
-    } finally q.stop()
-    graft.streaming.EventStream.appendEpoch(b1.toSeq.toDF("k", "v"), table, 0L)
-    s.read.parquet(table).select(col("k"), col("v")).orderBy("k")
-  }
-
-  /** A22 (r14): snapshot change feed
-   * ([[graft.sinks.Snapshot.changesBetween]]) — publish two versions
-   * of a customer rollup, then DERIVE the keyed I/U/D delta between
-   * them: time travel makes change capture an after-the-fact join
-   * rather than write-path instrumentation, and the feed is the
-   * minimal delta (unchanged rows drop via null-safe struct compare).
-   * The oracle computes the same diff directly from the source
-   * table's two slices. */
-  private def qSnapshotChanges(s: SparkSession, dir: String): DataFrame = {
-    val root = s"${graft.Scratch.root(s)}/chg_${sinkSeq.incrementAndGet()}"
-    def rollup(onlyPositive: Boolean) = {
-      val c = t(s, dir, "customer")
-      (if (onlyPositive) c.filter(col("c_acctbal") > 0) else c)
-        .groupBy("c_nationkey")
-        .agg(count(lit(1)).as("n_cust"),
-          sum(cents(col("c_acctbal"))).as("bal_cents"))
-    }
-    graft.sinks.Snapshot.publish(s, root, Map("cust" -> rollup(false)))
-    graft.sinks.Snapshot.publish(s, root, Map("cust" -> rollup(true)))
-    graft.sinks.Snapshot
-      .changesBetween(s, root, "cust", 1L, 2L, Seq("c_nationkey"))
-      .orderBy("c_nationkey")
-  }
-
-  /** A25 (r14): named snapshot tags
-   * ([[graft.sinks.Snapshot.tag]]/[[graft.sinks.Snapshot.readTag]]) —
-   * the dataset-registry pattern: consumers pin the 'prod' TAG while
-   * publishes advance the head; promoting a validated version is a
-   * metadata-only pointer flip. The query proves the pin holds across
-   * a publish (tag still serves v1 after v2 lands) and that promotion
-   * re-points without data movement. */
-  private def qSnapshotTag(s: SparkSession, dir: String): DataFrame = {
-    val root = s"${graft.Scratch.root(s)}/tag_${sinkSeq.incrementAndGet()}"
-    def rollup(onlyPositive: Boolean) = {
-      val c = t(s, dir, "customer")
-      (if (onlyPositive) c.filter(col("c_acctbal") > 0) else c)
-        .groupBy("c_nationkey")
-        .agg(count(lit(1)).as("n_cust"),
-          sum(cents(col("c_acctbal"))).as("bal_cents"))
-    }
-    graft.sinks.Snapshot.publish(s, root, Map("cust" -> rollup(false)))
-    graft.sinks.Snapshot.tag(s, root, "prod", 1L)
-    graft.sinks.Snapshot.publish(s, root, Map("cust" -> rollup(true)))
-    val pinned = graft.sinks.Snapshot.readTag(s, root, "cust", "prod")
-      .withColumn("phase", lit("pinned"))
-      .withColumn("tag_version",
-        lit(graft.sinks.Snapshot.tagVersion(s, root, "prod")))
-    graft.sinks.Snapshot.tag(s, root, "prod", 2L)
-    val promoted = graft.sinks.Snapshot.readTag(s, root, "cust", "prod")
-      .withColumn("phase", lit("promoted"))
-      .withColumn("tag_version",
-        lit(graft.sinks.Snapshot.tagVersion(s, root, "prod")))
-    pinned.unionByName(promoted)
-      .select("phase", "tag_version", "c_nationkey", "n_cust", "bal_cents")
-      .orderBy("phase", "c_nationkey")
-  }
-
-  /** A26 (r14): governed release flagship — the composition row for
-   * the session's governance pieces, end to end: k-anonymity audit
-   * (C65) on the raw projection REFUSES the release; generalizing the
-   * balance band 5× still leaves rare classes; suppressing the
-   * residual violators yields a provably k-anonymous table, which
-   * then passes the gated publish (A24 machinery) and gets the
-   * `release` tag (A25). Every phase's verdict and counts are
-   * DuckDB-replayed — the full enforce-generalize-suppress-publish
-   * loop a real data release runs, with no step trusting the
-   * previous one's claim. */
-  private def qGovernedRelease(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val root = s"${graft.Scratch.root(s)}/release_${sinkSeq.incrementAndGet()}"
-    val qis = Seq("c_nationkey", "c_mktsegment", "bal_band")
-    def projected(bandCents: Long) = t(s, dir, "customer")
-      .withColumn("bal_cents", cents(col("c_acctbal")))
-      .select(col("c_nationkey"), col("c_mktsegment"),
-        expr(s"bal_cents div $bandCents").as("bal_band"))
-    def audit(df: DataFrame, phase: String) = {
-      val r = graft.operators.Anonymity.kAnonymitySummary(df, qis, k = 3L)
-        .select("n_rows", "n_rows_at_risk", "anonymity_level", "satisfies_k")
-        .as[(Long, Long, Long, Boolean)].head()
-      (phase, r._1, r._2, r._3, r._4)
-    }
-    val raw = audit(projected(100000L), "audit_raw")
-    val coarse = projected(500000L)
-    val coarseAudit = audit(coarse, "audit_coarse")
-    // suppression: drop every row whose class is still under k
-    val classes = coarse.groupBy(qis.map(col): _*)
-      .agg(count(lit(1)).as("class_size"))
-    val released = coarse.join(broadcast(classes.filter(col("class_size") < 3L)),
-      qis, "left_anti")
-    val relAudit = audit(released, "audit_released")
-    require(relAudit._5, "governed release: suppression must reach k-anonymity")
-    val (ver, ok, _) = graft.sinks.Snapshot.publishChecked(s, root,
-      Map("release" -> released), checks = Nil)
-    require(ok, "governed release: gated publish refused a passing table")
-    graft.sinks.Snapshot.tag(s, root, "release", ver)
-    val nPub = graft.sinks.Snapshot.readTag(s, root, "release", "release").count()
-    Seq(raw, coarseAudit, relAudit,
-        ("published_v" + ver, nPub, 0L, relAudit._4, true))
-      .toDF("phase", "n_rows", "n_rows_at_risk", "anonymity_level",
-        "ok")
-      .orderBy("phase")
-  }
-
-  /** A22b (r14): the publish→diff→apply loop CLOSED — A22's change
-   * feed, derived between two published versions, drives A10's
-   * applyCdc against a replica bootstrapped at v1; the replica must
-   * land EXACTLY on v2 ('I' rows map to upserts like 'U' — applyCdc's
-   * merge is insert-or-update by construction). This is the
-   * incremental-consumer contract the change feed exists for: a
-   * downstream copy pays one keyed merge per publish, never a
-   * re-read of the table — and the oracle checks the END STATE, so a
-   * feed that dropped or invented any row fails the row, not a log
-   * line. */
-  private def qChangeApply(s: SparkSession, dir: String): DataFrame = {
-    val root = s"${graft.Scratch.root(s)}/chgapply_${sinkSeq.incrementAndGet()}"
-    def rollup(maxNation: Int) = t(s, dir, "customer")
-      .filter(col("c_nationkey") < maxNation)
-      .groupBy("c_nationkey")
-      .agg(count(lit(1)).as("n_cust"),
-        sum(cents(col("c_acctbal"))).as("bal_cents"))
-    // v1: nations 0..19; v2: nations 0..14 with positive balances only
-    graft.sinks.Snapshot.publish(s, root, Map("cust" -> rollup(20)))
-    graft.sinks.Snapshot.publish(s, root, Map("cust" ->
-      rollup(15).filter(col("bal_cents") > 0)))
-    val feed = graft.sinks.Snapshot
-      .changesBetween(s, root, "cust", 1L, 2L, Seq("c_nationkey"))
-      .withColumn("_op", when(col("op") === "D", lit("D")).otherwise(lit("U")))
-      .drop("op")
-    val replica = s"$root/replica"
-    graft.sinks.Snapshot.read(s, root, "cust", Some(1L))
-      .write.parquet(replica) // bootstrap at v1
-    graft.sinks.TableSink.applyCdc(s, replica, feed, Seq("c_nationkey"))
-    s.read.parquet(replica)
-      .select("c_nationkey", "n_cust", "bal_cents")
-      .orderBy("c_nationkey")
-  }
-
-  /** A27 (r14): schema-compatibility publish gate
-   * ([[graft.sinks.Snapshot.publishCompatible]]) — additive evolution
-   * flips, breaking evolution (dropped or retyped columns readers
-   * already select) is refused BEFORE a byte is written; readers keep
-   * serving the prior version. A17's drift audit reports after the
-   * fact; this is the gate that stops the flip up front. */
-  private def qSchemaGuard(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val root = s"${graft.Scratch.root(s)}/schguard_${sinkSeq.incrementAndGet()}"
-    val base = t(s, dir, "customer").groupBy("c_nationkey")
-      .agg(count(lit(1)).as("n_cust"),
-        sum(cents(col("c_acctbal"))).as("bal_cents"))
-    val (v1, ok1, viol1) = graft.sinks.Snapshot.publishCompatible(s, root,
-      Map("cust" -> base))
-    val (v2, ok2, viol2) = graft.sinks.Snapshot.publishCompatible(s, root,
-      Map("cust" -> base.withColumn("avg_cents",
-        expr("bal_cents div n_cust")))) // additive: allowed
-    val (v3, ok3, viol3) = graft.sinks.Snapshot.publishCompatible(s, root,
-      Map("cust" -> base.drop("bal_cents")
-        .withColumn("n_cust", col("n_cust").cast("string")))) // breaking
-    val servedRows = graft.sinks.Snapshot.read(s, root, "cust").count()
-    Seq((1L, v1, ok1, viol1.size.toLong), (2L, v2, ok2, viol2.size.toLong),
-        (3L, v3, ok3, viol3.size.toLong))
-      .toDF("attempt", "candidate_version", "published", "n_violations")
-      .withColumn("rows_served", lit(servedRows))
-      .orderBy("attempt")
-  }
-
-  /** A23 (r14): snapshot version retention
-   * ([[graft.sinks.Snapshot.vacuum]]) — bound the time-travel window:
-   * publish three versions, vacuum to the newest two, and read BOTH
-   * survivors back through the manifest. The oracle recomputes both
-   * surviving rollups directly and pins `n_vacuumed` = 1 — proving
-   * the expired version went away, the survivors are untouched, and
-   * the current pointer still resolves. Deletion is pure namespace
-   * metadata (no data read), oldest-first so a crash leaves a
-   * contiguous suffix. */
-  private def qSnapshotVacuum(s: SparkSession, dir: String): DataFrame = {
-    val root = s"${graft.Scratch.root(s)}/vac_${sinkSeq.incrementAndGet()}"
-    def rollup(minBal: Double) = t(s, dir, "customer")
-      .filter(col("c_acctbal") > minBal)
-      .groupBy("c_nationkey")
-      .agg(count(lit(1)).as("n_cust"),
-        sum(cents(col("c_acctbal"))).as("bal_cents"))
-    graft.sinks.Snapshot.publish(s, root, Map("cust" -> rollup(-1e18)))
-    graft.sinks.Snapshot.publish(s, root, Map("cust" -> rollup(0.0)))
-    graft.sinks.Snapshot.publish(s, root, Map("cust" -> rollup(1000.0)))
-    val deleted = graft.sinks.Snapshot.vacuum(s, root, keepLast = 2)
-    val v2 = graft.sinks.Snapshot.read(s, root, "cust", Some(2L))
-      .withColumn("version", lit(2L))
-    val v3 = graft.sinks.Snapshot.read(s, root, "cust", Some(3L))
-      .withColumn("version", lit(3L))
-    v2.unionByName(v3)
-      .withColumn("n_vacuumed", lit(deleted.size.toLong))
-      .select("version", "c_nationkey", "n_cust", "bal_cents", "n_vacuumed")
-      .orderBy("version", "c_nationkey")
-  }
-
-  /** A32 (r14): zero-copy incremental publish
-   * ([[graft.sinks.Snapshot.publishLinked]]) — v2 rewrites only the
-   * filtered facts; dims carry forward as a link to their v1 physical
-   * home (one sidecar line instead of a table copy — at warehouse
-   * scale the difference between a pointer flip and re-writing
-   * 100 TB). The query then vacuums at keepLast = 1 — v1 MUST survive
-   * (the serving version links into it; n_vacuumed pins 0) — and
-   * reads the head back through the link for a segment rollup the
-   * oracle recomputes from source. */
-  private def qLinkedPublish(s: SparkSession, dir: String): DataFrame = {
-    val root = s"${graft.Scratch.root(s)}/linked_${sinkSeq.incrementAndGet()}"
-    val facts = t(s, dir, "orders").select(col("o_orderkey"), col("o_custkey"),
-      cents(col("o_totalprice")).as("c"))
-    val dims = t(s, dir, "customer").select(col("c_custkey"), col("c_mktsegment"))
-    graft.sinks.Snapshot.publish(s, root, Map("facts" -> facts, "dims" -> dims))
-    val (_, linked) = graft.sinks.Snapshot.publishLinked(s, root,
-      Map("facts" -> facts.filter(col("o_orderkey") % 2 === 0)))
-    val deleted = graft.sinks.Snapshot.vacuum(s, root, keepLast = 1)
-    val (pv, ts) = graft.sinks.Snapshot.readAll(s, root, Seq("facts", "dims"))
-    ts("facts").join(ts("dims"), col("o_custkey") === col("c_custkey"))
-      .groupBy("c_mktsegment")
-      .agg(count(lit(1)).as("n_orders"), sum("c").as("rev_cents"))
-      .withColumn("pinned_version", lit(pv))
-      .withColumn("dims_home", lit(linked("dims")))
-      .withColumn("n_vacuumed", lit(deleted.size.toLong))
-      .orderBy("c_mktsegment")
-  }
-
-  /** A34 (r14): namespace integrity check
-   * ([[graft.sinks.Snapshot.fsck]]) — the invariants A32 links rely
-   * on hold under this library's operations; an out-of-band `rm -rf`
-   * violates them silently until someone reads. The query builds a
-   * linked namespace, then SIMULATES exactly that operator error
-   * (deleting a link's physical home directly on disk): fsck must
-   * flag precisely the dangling link, keep every healthy row 'ok',
-   * and report the emptied version. Pure namespace metadata — no
-   * data read. */
-  private def qFsck(s: SparkSession, dir: String): DataFrame = {
-    val root = s"${graft.Scratch.root(s)}/fsck_${sinkSeq.incrementAndGet()}"
-    val cust = t(s, dir, "customer").select("c_custkey", "c_nationkey")
-    val nat = t(s, dir, "nation").select("n_nationkey", "n_name")
-    graft.sinks.Snapshot.publish(s, root, Map("cust" -> cust))
-    graft.sinks.Snapshot.publish(s, root, Map("nat" -> nat))
-    graft.sinks.Snapshot.publishLinked(s, root,
-      Map("cust" -> cust.filter(col("c_custkey") % 2 === 0)))
-    // out-of-band deletion of v2's physical home: v3's nat link dangles
-    val p = new org.apache.hadoop.fs.Path(s"$root/v2/nat")
-    val hfs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    hfs.delete(p, true): Unit
-    // planted eraseKeys crash residue (post-swap, pre-cleanup): the
-    // bak half survives NEXT TO the live table → 'stale-erase-residue'
-    // (delete the residue; ADVICE r15 — renaming it back would clobber
-    // the live table). Residue with the live dir MISSING is the
-    // 'crashed-erase' case, covered by SnapshotSpec.
-    hfs.mkdirs(new org.apache.hadoop.fs.Path(s"$root/v1/.erase_bak_cust")): Unit
-    graft.sinks.Snapshot.fsck(s, root)
-      .orderBy("version", "table_name")
-  }
-
-  /** A41 (r17): namespace repair ([[graft.sinks.Snapshot.fsckRepair]])
-   * — fsck's documented recoveries applied by code instead of a
-   * runbook: the query PLANTS both erase-residue classes (a stale
-   * backup next to the live cust — post-swap unerased bytes that must
-   * be deleted, never renamed back — and a crashed nat erase caught
-   * between its two renames, scrubbed half complete), repairs, and
-   * proves the taxonomy's own rules held: the report rows, a clean
-   * fsck (zero non-ok rows pinned), cust served intact, and nat
-   * served as the SCRUBBED half (the erasure completed — restoring
-   * the backup would have resurrected the erased rows). All counts
-   * recomputed by DuckDB from source tables. */
-  private def qFsckRepair(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val root = s"${graft.Scratch.root(s)}/fsck_repair_${sinkSeq.incrementAndGet()}"
-    val cust = t(s, dir, "customer").select("c_custkey", "c_nationkey")
-    val nat = t(s, dir, "nation").select("n_nationkey", "n_name")
-    graft.sinks.Snapshot.publish(s, root, Map("cust" -> cust, "nat" -> nat))
-    val hfs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    // stale residue next to the live cust (post-swap pre-cleanup)
-    cust.limit(5).write.parquet(s"$root/v1/.erase_bak_cust")
-    // crashed erase of nat between the renames: scrubbed tmp complete,
-    // live dir moved aside — exactly eraseKeys' steps 1-2
-    nat.filter(col("n_nationkey") < 10).write.parquet(s"$root/v1/.erase_tmp_nat")
-    require(hfs.rename(new org.apache.hadoop.fs.Path(s"$root/v1/nat"),
-      new org.apache.hadoop.fs.Path(s"$root/v1/.erase_bak_nat")),
-      "fsck repair query: failed to stage the crashed erase")
-    val rep = graft.sinks.Snapshot.fsckRepair(s, root)
-      .select(lit("repair").as("stage"),
-        concat(lit("v"), col("version").cast("string"), lit("/"),
-          col("table_name")).as("item"),
-        concat(col("issue"), lit(":"), col("action")).as("detail"),
-        lit(0L).as("n"))
-    val nonOk = graft.sinks.Snapshot.fsck(s, root)
-      .filter(col("status") =!= "ok").count()
-    def served(tb: String, df: DataFrame) = df
-      .agg(count(lit(1)).as("n"))
-      .select(lit("serve").as("stage"), lit(s"$tb@v1").as("item"),
-        lit("").as("detail"), col("n"))
-    rep.unionAll(Seq(("fsck", "non_ok_rows", "", nonOk))
-        .toDF("stage", "item", "detail", "n"))
-      .unionAll(served("cust", graft.sinks.Snapshot.read(s, root, "cust")))
-      .unionAll(served("nat", graft.sinks.Snapshot.read(s, root, "nat")))
-      .orderBy("stage", "item")
-  }
-
-  /** A41 (r18): replica-backed dangling-link repair
-   * ([[graft.sinks.Snapshot.fsckRepair]] `fromReplica`) — the one
-   * fsck issue r17's repair verb left as a runbook step ("restore
-   * from an A39 replica"), now executed by code: the query publishes
-   * v1 (cust + nat physical) and v2 (nat rewritten, cust carried as
-   * a LINK to v1), replicates the namespace BEFORE any damage (the
-   * DR discipline — a replica taken after the loss holds the loss),
-   * then simulates the out-of-band `rm -rf` of v1/cust that leaves
-   * v2's link dangling. Repair must copy v1/cust back from the
-   * replica, CHECKSUM-PROVE the copy against the replica source
-   * before installing it (a corrupt restore never serves), and leave
-   * fsck fully clean — pinned by the zero non-ok count and by
-   * re-reading cust through the repaired link at head with a count
-   * the oracle recomputes from source. */
-  private def qFsckRestore(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val seq = sinkSeq.incrementAndGet()
-    val root = s"${graft.Scratch.root(s)}/fsck_restore_$seq"
-    val rep = s"${graft.Scratch.root(s)}/fsck_restore_rep_$seq"
-    val cust = t(s, dir, "customer").select("c_custkey", "c_nationkey")
-    val nat = t(s, dir, "nation").select("n_nationkey", "n_name")
-    graft.sinks.Snapshot.publish(s, root, Map("cust" -> cust, "nat" -> nat))
-    graft.sinks.Snapshot.publishLinked(s, root,
-      Map("nat" -> nat.filter(col("n_nationkey") < 10)))
-    graft.sinks.Snapshot.replicate(s, root, rep)
-    // out-of-band deletion AFTER replication: v2's cust link dangles
-    val hfs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    hfs.delete(new org.apache.hadoop.fs.Path(s"$root/v1/cust"), true): Unit
-    val repaired = graft.sinks.Snapshot
-      .fsckRepair(s, root, fromReplica = Some(rep))
-      .select(lit("repair").as("stage"),
-        concat(lit("v"), col("version").cast("string"), lit("/"),
-          col("table_name")).as("item"),
-        concat(col("issue"), lit(":"), col("action")).as("detail"),
-        lit(0L).as("n"))
-    val nonOk = graft.sinks.Snapshot.fsck(s, root)
-      .filter(!col("status").isin("ok", "linked-ok")).count()
-    def served(item: String, df: DataFrame) = df
-      .agg(count(lit(1)).as("n"))
-      .select(lit("serve").as("stage"), lit(item).as("item"),
-        lit("").as("detail"), col("n"))
-    repaired.unionAll(Seq(("fsck", "non_ok_rows", "", nonOk))
-        .toDF("stage", "item", "detail", "n"))
-      .unionAll(served("cust@head", graft.sinks.Snapshot.read(s, root, "cust")))
-      .unionAll(served("nat@head", graft.sinks.Snapshot.read(s, root, "nat")))
-      .orderBy("stage", "item")
-  }
-
-  /** A42 (r18): bulk age-based ref GC
-   * ([[graft.sinks.Snapshot.gcRefs]]) — the lifecycle verb a team
-   * with CI-created branches needs: three versions, prod tagged at
-   * v1, two experiment branches (dev1 at v2's chain via branch(),
-   * dev2 likewise at v3), then one sweep at cutoff 0 with a planted
-   * deterministic `asOf` (one past the newest A37 timestamp — every
-   * chain is "idle"). The sweep must take dev1+dev2 AND their
-   * `-mergebase` companions, refuse to touch prod (release-name
-   * guard) or the kept ref, and the follow-up vacuum at keepLast=1
-   * must reclaim exactly the newly unrooted v2 (v1 stays: prod pins
-   * it; v3 is head) — the report pins swept names, surviving refs,
-   * vacuumed versions, and a head read-back count the oracle
-   * recomputes from source. */
-  private def qRefGc(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val root = s"${graft.Scratch.root(s)}/ref_gc_${sinkSeq.incrementAndGet()}"
-    val nat = t(s, dir, "nation").select("n_nationkey", "n_name")
-    graft.sinks.Snapshot.publish(s, root, Map("nat" -> nat))
-    graft.sinks.Snapshot.tag(s, root, "prod", 1L)
-    graft.sinks.Snapshot.publish(s, root,
-      Map("nat" -> nat.filter(col("n_nationkey") < 20)))
-    graft.sinks.Snapshot.branch(s, root, "dev1", "prod")
-    graft.sinks.Snapshot.tag(s, root, "dev1", 2L) // park dev1 on v2
-    graft.sinks.Snapshot.publish(s, root,
-      Map("nat" -> nat.filter(col("n_nationkey") < 10)))
-    graft.sinks.Snapshot.branch(s, root, "dev2", "prod")
-    graft.sinks.Snapshot.tag(s, root, "dev2", 3L)
-    graft.sinks.Snapshot.tag(s, root, "keepme", 3L)
-    val asOf = graft.sinks.Snapshot.history(s, root)
-      .agg(max("ts_ms")).head().getLong(0) + 1L
-    val swept = graft.sinks.Snapshot.gcRefs(s, root, olderThanMs = 0L,
-      asOfMs = Some(asOf), keep = Seq("keepme"))
-    val vacuumed = graft.sinks.Snapshot.vacuum(s, root, keepLast = 1)
-    val f = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    val surviving = f.listStatus(new org.apache.hadoop.fs.Path(root))
-      .map(_.getPath.getName).filter(_.startsWith("TAG."))
-      .filterNot(_.startsWith("TAG.tmp.")).map(_.drop(4)).sorted.toSeq
-    val headRows = graft.sinks.Snapshot.read(s, root, "nat").count()
-    (swept.map { case (n, v) => ("swept", n, v) } ++
-      surviving.map(n => ("kept", n, 0L)) ++
-      vacuumed.map(v => ("vacuumed", s"v$v", v)) ++
-      Seq(("serve", "nat@head", headRows)))
-      .toDF("stage", "item", "n").orderBy("stage", "item")
-  }
-
-  /** A33 (r14): storage accounting per version
-   * ([[graft.sinks.Snapshot.storageReport]]) — the chargeback /
-   * capacity view the A31 catalog's logical rows hide: how much of
-   * each version is physical vs served through A32 links. Three
-   * versions: a full publish, then two linked publishes each
-   * rewriting ONE table — the report must show exactly one physical
-   * and one linked table for both, with the linked row mass pinned.
-   * Physical bytes are codec-dependent and stay out of the oracle
-   * (SnapshotSpec asserts them). */
-  private def qStorageReport(s: SparkSession, dir: String): DataFrame = {
-    val root = s"${graft.Scratch.root(s)}/storage_${sinkSeq.incrementAndGet()}"
-    val cust = t(s, dir, "customer").select("c_custkey", "c_nationkey")
-    val nat = t(s, dir, "nation").select("n_nationkey", "n_name")
-    graft.sinks.Snapshot.publish(s, root, Map("cust" -> cust, "nat" -> nat))
-    graft.sinks.Snapshot.publishLinked(s, root,
-      Map("cust" -> cust.filter(col("c_custkey") % 2 === 0)))
-    graft.sinks.Snapshot.publishLinked(s, root,
-      Map("nat" -> nat.filter(col("n_nationkey") < 10)))
-    graft.sinks.Snapshot.storageReport(s, root)
-      .select("version", "n_physical", "n_linked", "logical_rows", "linked_rows")
-      .orderBy("version")
-  }
-
-  /** A31 (r14): snapshot version catalog
-   * ([[graft.sinks.Snapshot.catalog]]) — the datasets-page
-   * introspection row: two published versions with different table
-   * sets, v1 tagged 'prod', head at v2; per-(version, table) row
-   * counts read back from the actual version dirs (footer-only
-   * counts), currency and tags resolved from the live manifest/tag
-   * files — the oracle recomputes every count from the source. */
-  private def qSnapshotCatalog(s: SparkSession, dir: String): DataFrame = {
-    val root = s"${graft.Scratch.root(s)}/cat_${sinkSeq.incrementAndGet()}"
-    val cust = t(s, dir, "customer").select("c_custkey", "c_nationkey")
-    val nat = t(s, dir, "nation").select("n_nationkey", "n_name")
-    graft.sinks.Snapshot.publish(s, root, Map("cust" -> cust, "nat" -> nat))
-    graft.sinks.Snapshot.publish(s, root,
-      Map("cust" -> cust.filter(col("c_custkey") % 2 === 0)))
-    graft.sinks.Snapshot.tag(s, root, "prod", 1L)
-    graft.sinks.Snapshot.catalog(s, root)
-      .orderBy("version", "table_name")
-  }
-
-  /** A30 (r14): right-to-erasure across snapshot history
-   * ([[graft.sinks.Snapshot.eraseKeys]]) — two published versions
-   * (v1 tagged 'prod'), then every customer with custkey ≡ 0 (mod 10)
-   * erased from BOTH; the output re-reads each version post-erasure
-   * and proves the subject gone (`erased_present` must be 0 — read
-   * back from disk, not echoed) alongside the surviving row/balance
-   * totals the oracle recomputes independently. */
-  private def qEraseHistory(s: SparkSession, dir: String): DataFrame = {
-    val root = s"${graft.Scratch.root(s)}/erase_${sinkSeq.incrementAndGet()}"
-    def cust(minBal: Double) = t(s, dir, "customer")
-      .filter(col("c_acctbal") > minBal)
-      .select(col("c_custkey"), col("c_nationkey"),
-        cents(col("c_acctbal")).as("bal_cents"))
-    graft.sinks.Snapshot.publish(s, root, Map("cust" -> cust(-1e18)))
-    graft.sinks.Snapshot.publish(s, root, Map("cust" -> cust(0.0)))
-    graft.sinks.Snapshot.tag(s, root, "prod", 1L)
-    val keys = t(s, dir, "customer")
-      .filter(col("c_custkey") % 10 === 0).select(col("c_custkey"))
-    val removed = graft.sinks.Snapshot.eraseKeys(s, root, "cust", "c_custkey", keys)
-    removed.map { case (v, n) =>
-      graft.sinks.Snapshot.read(s, root, "cust", Some(v))
-        .agg(
-          count(lit(1)).as("rows_after"),
-          sum(when(col("c_custkey") % 10 === 0, 1L).otherwise(0L))
-            .as("erased_present"),
-          sum(col("bal_cents")).as("bal_cents_after"))
-        .withColumn("version", lit(v))
-        .withColumn("removed", lit(n))
-    }.reduce(_ unionByName _)
-      .select("version", "rows_after", "removed", "erased_present",
-        "bal_cents_after")
-      .orderBy("version")
-  }
-
-  /** A29 (r14): consistent multi-table snapshot read
-   * ([[graft.sinks.Snapshot.readAll]]) — facts and dim read PINNED to
-   * the single version the 'prod' tag named, while a newer version
-   * (with a filtered dim — the torn-read hazard) is already published:
-   * per-table readTag calls re-resolve the tag per call and can serve
-   * a fact/dim mix across versions with no error anywhere. The output
-   * carries the pinned version (the D18 lineage stamp rule); the
-   * oracle recomputes the v1 derivation directly. */
-  private def qSnapshotReadAll(s: SparkSession, dir: String): DataFrame = {
-    val root = s"${graft.Scratch.root(s)}/readall_${sinkSeq.incrementAndGet()}"
-    def facts(mod: Long) = t(s, dir, "orders")
-      .filter(col("o_orderkey") % mod === 0)
-      .select(col("o_orderkey"), col("o_custkey"),
-        cents(col("o_totalprice")).as("rev_cents"))
-    val dim = t(s, dir, "customer").select(col("c_custkey"), col("c_nationkey"))
-    graft.sinks.Snapshot.publish(s, root,
-      Map("orders" -> facts(7), "customer" -> dim))
-    graft.sinks.Snapshot.tag(s, root, "prod", 1L)
-    graft.sinks.Snapshot.publish(s, root,
-      Map("orders" -> facts(3),
-        "customer" -> dim.filter(col("c_nationkey") < 13)))
-    val (v, ts) = graft.sinks.Snapshot.readAll(s, root,
-      Seq("orders", "customer"), tag = Some("prod"))
-    ts("orders")
-      .join(ts("customer"), col("o_custkey") === col("c_custkey"))
-      .groupBy("c_nationkey")
-      .agg(count(lit(1)).as("n_orders"), sum("rev_cents").as("rev_cents"))
-      .withColumn("pinned_version", lit(v))
-      .orderBy("c_nationkey")
-  }
-
-  /** C62 (r14): temperature-balanced mixture weights — the standard
-   * multilingual/multi-source balancing (weights ∝ n^α, α = 1/2):
-   * proportional sampling drowns small sources, uniform overweights
-   * them; the square-root temperature is the published middle ground.
-   * Exactness: isqrt via floor(sqrt(double)) — IEEE sqrt is
-   * CORRECTLY ROUNDED in both engines, and floor of it on integer
-   * inputs < 2⁵² is the exact integer square root, so the whole plan
-   * stays in replayable integer space (the C57 planning arithmetic
-   * downstream of it unchanged). One token rollup per source + a
-   * 1-row broadcast total. */
-  private def qMixtureTemperature(s: SparkSession, dir: String): DataFrame = {
-    val budget = 750000L
-    val perSource = t(s, dir, "documents")
-      .select(col("source"),
-        size(graft.functions.expressions.wordNgrams(
-          coalesce(col("text"), lit("")), 1)).cast("long").as("toks"))
-      .groupBy("source").agg(sum("toks").as("n_tokens"))
-      .withColumn("weight",
-        expr("cast(floor(sqrt(cast(n_tokens as double))) as bigint)"))
-    val tot = perSource.agg(sum("n_tokens").as("tot_tokens"),
-      sum("weight").as("tot_weight"))
-    perSource.crossJoin(broadcast(tot))
-      .select(col("source"), col("n_tokens"), col("weight"),
-        expr("n_tokens * 1000000 div tot_tokens").as("prop_share_ppm"),
-        expr("weight * 1000000 div tot_weight").as("temp_share_ppm"),
-        expr(s"$budget * (weight * 1000000 div tot_weight) div 1000000")
-          .as("planned_tokens"))
-      .withColumn("boost_ppm",
-        col("temp_share_ppm") - col("prop_share_ppm"))
-      .orderBy("source")
-  }
-
-  /** B88 (r14): daily balance panel via LOCF
-   * ([[graft.operators.Interpolate.locfFill]]) — per-nation CUMULATIVE
-   * revenue carried forward over gap days: the inventory/balance
-   * "state as of every day" snapshot where the value HOLDS between
-   * observations (linear blending would invent movements). Running
-   * cumsum over present days (partition-local window), then the
-   * step-function densify — one ascending frame, O(span) per key. */
-  private def qRunningBalance(s: SparkSession, dir: String): DataFrame = {
-    val o = t(s, dir, "orders").select(col("o_custkey"),
-      datediff(to_date(col("o_orderdate")), to_date(lit("1992-01-01")))
-        .cast("long").as("d"),
-      cents(col("o_totalprice")).as("rev"))
-    val c = t(s, dir, "customer").select(col("c_custkey"), col("c_nationkey"))
-    val n = t(s, dir, "nation").select(col("n_nationkey"), col("n_name"))
-    val daily = o.join(broadcast(c), col("o_custkey") === col("c_custkey"))
-      .join(broadcast(n), col("c_nationkey") === col("n_nationkey"))
-      .groupBy("n_name", "d").agg(sum("rev").as("delta"))
-    val wcum = Window.partitionBy("n_name").orderBy("d")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val cum = daily
-      .withColumn("balance_cents", sum("delta").over(wcum))
-      .select("n_name", "d", "balance_cents")
-    graft.operators.Interpolate.locfFill(cum, Seq("n_name"), "d", "balance_cents")
-      .orderBy("n_name", "d")
-  }
-
-  /** C61 (r14): RAG retrieval flagship — the chunk→index→query
-   * composition a retrieval pipeline actually runs: strided context
-   * chunks (C35's codegen'd kernel), BM25 statistics over the CHUNK
-   * corpus (C43's fixed-point scoring — integer ppm end to end), and
-   * top-5 answers for three bag-of-words queries via TakeOrdered
-   * (per-partition heads + a k-row driver merge, never a global
-   * sort). The composition row verifies the chunk-id contract and
-   * tokenization agreement between the two operators that no
-   * per-operator oracle sees together. (A deployment shares the
-   * tf/df/stats relations across queries; the three branches here
-   * make each query's plan independently auditable.) */
-  private def qRagTopk(s: SparkSession, dir: String): DataFrame = {
-    val chunks = t(s, dir, "documents")
-      .select(col("doc_id"),
-        posexplode(graft.functions.expressions.wordChunksStrided(
-          coalesce(col("text"), lit("")), 64, 48)))
-      .select((col("doc_id") * 1000L + col("pos")).as("chunk_id"),
-        col("col").as("chunk"))
-    val queries = Seq(
-      ("q_vector", Seq("vector", "stream", "window")),
-      ("q_join", Seq("join", "merge", "batch")),
-      ("q_cust", Seq("customer", "order", "line")))
-    queries.map { case (qn, terms) =>
-      graft.text.TfIdf.bm25TopK(chunks, "chunk_id", "chunk", terms, 5)
-        .withColumn("query", lit(qn))
-    }.reduce(_.unionByName(_))
-      .select(col("query"), col("doc_id").as("chunk_id"), col("n_terms"),
-        col("score_ppm"))
-      .orderBy(col("query"), col("score_ppm").desc, col("chunk_id"))
-  }
-
-  /** B86 (r14): chi-square independence audit
-   * ([[graft.operators.Contingency.chiSquare]]) — is order priority
-   * independent of market segment? Per-cell exact decomposition
-   * (O·T − R·C)²·10⁶ div (T·R·C) in decimal(38,0) — the float
-   * Σ(O−E)²/E pipeline is neither replayable nor reduction-order-free.
-   * One map-side pair count touches the data; marginals derive from
-   * the bounded cell relation and broadcast. */
-  private def qChiSquare(s: SparkSession, dir: String): DataFrame = {
-    val o = t(s, dir, "orders").select(col("o_custkey"), col("o_orderpriority"))
-    val c = t(s, dir, "customer").select(col("c_custkey"), col("c_mktsegment"))
-    val j = o.join(broadcast(c), col("o_custkey") === col("c_custkey"))
-    graft.operators.Contingency.chiSquare(j, "o_orderpriority", "c_mktsegment")
-      .orderBy("o_orderpriority", "c_mktsegment")
-  }
-
-  /** B87 (r14): period-over-period comparison with CALENDAR alignment
-   * — per-nation monthly revenue with month-over-month and
-   * year-over-year deltas in exact ppm. The naive lag() over present
-   * months silently compares against the previous PRESENT month when
-   * a month is missing; here the bounded nation×month grid (B48's
-   * spine pattern, zero-filled) pins lag(1)/lag(12) to true calendar
-   * neighbors, and the window sorts only the 25×~84 panel — never
-   * facts. */
-  private def qPeriodOverPeriod(s: SparkSession, dir: String): DataFrame = {
-    val o = t(s, dir, "orders").select(col("o_custkey"),
-      ((year(to_date(col("o_orderdate"))) - 1992) * 12 +
-        month(to_date(col("o_orderdate"))) - 1).cast("long").as("m"),
-      cents(col("o_totalprice")).as("rev"))
-    val c = t(s, dir, "customer").select(col("c_custkey"), col("c_nationkey"))
-    val n = t(s, dir, "nation").select(col("n_nationkey"), col("n_name"))
-    val monthly = o.join(broadcast(c), col("o_custkey") === col("c_custkey"))
-      .join(broadcast(n), col("c_nationkey") === col("n_nationkey"))
-      .groupBy("n_name", "m").agg(sum("rev").as("rev_cents"))
-    val months = monthly.agg(max("m").as("mx"))
-      .select(explode(sequence(lit(0L), col("mx"))).as("m"))
-    val panel = n.select(col("n_name")).crossJoin(broadcast(months))
-      .join(monthly, Seq("n_name", "m"), "left")
-      .withColumn("rev_cents", coalesce(col("rev_cents"), lit(0L)))
-    val w = Window.partitionBy("n_name").orderBy("m")
-    panel
-      .withColumn("prev", lag("rev_cents", 1).over(w))
-      .withColumn("prev_yr", lag("rev_cents", 12).over(w))
-      .select(col("n_name"), col("m"), col("rev_cents"),
-        expr("(rev_cents - prev) * 1000000 div nullif(prev, 0)").as("mom_ppm"),
-        expr("(rev_cents - prev_yr) * 1000000 div nullif(prev_yr, 0)")
-          .as("yoy_ppm"))
-      .orderBy("n_name", "m")
-  }
-
-  /** D16 (r14): streaming distribution-drift monitor
-   * ([[graft.streaming.EventStream.histogramDrift]]) run in batch —
-   * 6-hour value histograms (histogramStream's bounded counters)
-   * finalized against a pinned reference histogram (the deterministic
-   * even-event_id slice). Integer ppm shares end to end; the oracle
-   * replays window bucketing, both share computations, the full-outer
-   * bucket union, and the smallest-worst-bucket tie-break. */
-  private def qStreamDrift(s: SparkSession, dir: String): DataFrame = {
-    val ev = withEventTime(t(s, dir, "events"))
-    val hist = graft.streaming.EventStream.histogramStream(
-      ev.select(col("ts"), col("value")),
-      windowLen = "6 hours", bucketCents = 500L)
-    val ref = ev.where(col("event_id") % 2 === 0)
-      .select(expr("cast(round(value * 100, 0) as bigint) div 500").as("bucket"))
-      .groupBy("bucket").agg(count(lit(1)).as("ref_cnt"))
-    graft.streaming.EventStream.histogramDrift(hist, ref)
-      .orderBy("window_start_us")
-  }
-
-  /** C58 (r14): random-projection (JL) embedding sketch
-   * ([[graft.similarity.Projection]]) — every embedding reduced 64→16
-   * dims against a plan-embedded md5-parity ±1 matrix (derived once
-   * on the driver, the Ann-centroid bounded-state precedent), plus
-   * the norm-preservation ratio (Σp²)·10⁶ div (k·Σq²) whose JL
-   * expectation is 10⁶. Projections are EXACT integers (micro-unit
-   * quantization before the signed dot product), so DuckDB replays
-   * every output coordinate bit-for-bit — a float random projection
-   * could never be hash-checked. The O(k·d) kernel runs inside
-   * whole-stage codegen; the ratio diagnostics use bounded 16/64-
-   * element higher-order folds. */
-  private def qJlProject(s: SparkSession, dir: String): DataFrame = {
-    val k = 16
-    val dim = 64
-    val proj = graft.similarity.Projection
-      .project(t(s, dir, "embeddings"), "embedding", "proj", k, dim)
-    proj
-      .withColumn("q", transform(col("embedding"),
-        x => round(x.cast("double") * 1000000, 0).cast("long")))
-      .select(col("vec_id"),
-        array_join(transform(col("proj"), _.cast("string")), ",").as("proj"),
-        expr(s"""(cast(aggregate(proj, 0L, (a, x) -> a + x * x) as decimal(38,0))
-                  * 1000000)
-                 div nullif($k * cast(aggregate(q, 0L, (a, x) -> a + x * x)
-                  as decimal(38,0)), 0)""").as("norm_ratio_ppm"))
-      .orderBy("vec_id")
-  }
-
-  /** C59 (r14): rule-based weak labeling
-   * ([[graft.text.WeakLabel.label]]) — four keyword rules compiled
-   * into ONE codegen'd projection over the corpus (no per-rule pass,
-   * no UDF, no regex union); `primary_label` is the first matching
-   * rule in priority order, so the output is a pure function of data
-   * + rule list. */
-  private def qWeakLabel(s: SparkSession, dir: String): DataFrame = {
-    val rules = Seq(
-      "sql" -> Seq("join", "agg", "group"),
-      "perf" -> Seq("fast", "slow"),
-      "storage" -> Seq("row", "column", "table"),
-      "stream" -> Seq("stream", "batch", "window"))
-    graft.text.WeakLabel.label(t(s, dir, "documents"), "text", rules)
-      .select(col("doc_id"), col("labels"), col("primary_label"),
-        col("n_labels"))
-      .orderBy("doc_id")
-  }
-
-  /** D15 (r14): streaming per-key anomaly detection
-   * ([[graft.streaming.EventStream.anomalyStream]]) run in batch —
-   * the full-history deterministic twin (events replayed per user in
-   * (ts, event_id) order, verdicts from PRIOR events only). Emits the
-   * flagged rows; the oracle replays the exact integer z² inequality
-   * with DuckDB prefix windows row-for-row. StreamingSpec drives the
-   * same operator incrementally through MemoryStream. */
-  private def qAnomaly(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val ev = withEventTime(t(s, dir, "events"))
-      .select(col("user_id"), col("event_id"), col("ts"), col("event_type"),
-        col("value"))
-      .as[graft.streaming.Event]
-    graft.streaming.EventStream.anomalyStream(ev)
-      .toDF()
-      .where(col("is_anomaly"))
-      .select(col("user_id"), col("event_id"), col("cents"), col("n_prior"))
-      .orderBy("user_id", "event_id")
-  }
-
-  /** C57 (r14): token-budget mixture PLANNING — the step BEFORE C22's
-   * mixture resampling: given target mixture weights and a token
-   * budget, compute each source's sampling rate
-   * (min(1, budget·weight ÷ available)) and the expected token yield,
-   * flagging under-supplied sources (rate pinned at 1 means the
-   * corpus cannot fill that slice of the budget — the signal to
-   * up-weight elsewhere or upsample). One map-side token rollup per
-   * source + pure integer ppm arithmetic — the whole plan is one
-   * aggregate over the corpus regardless of scale; weights ride a
-   * deterministic CASE (a real deployment joins a tiny weights dim).
-   * Token counts via the codegen'd wordNgrams kernel. */
-  private def qTokenBudget(s: SparkSession, dir: String): DataFrame = {
-    val budgetTokens = 100000L
-    val weightPpm = when(col("source").isin("src1", "src2"), 150000L)
-      .otherwise(lit(700000L / 18L)) // remaining 70% spread over 18 sources
-    t(s, dir, "documents")
-      .select(col("source"),
-        size(graft.functions.expressions.wordNgrams(
-          coalesce(col("text"), lit("")), 1)).cast("long").as("n_toks"))
-      .groupBy("source")
-      .agg(count(lit(1)).as("n_docs"), sum("n_toks").as("n_tokens"))
-      .withColumn("weight_ppm", weightPpm)
-      .withColumn("rate_ppm",
-        least(lit(1000000L),
-          expr(s"$budgetTokens * weight_ppm div n_tokens")))
-      .withColumn("expected_tokens", expr("n_tokens * rate_ppm div 1000000"))
-      .withColumn("under_supplied", col("rate_ppm") === 1000000L)
-      .orderBy("source")
-  }
-
-  /** C63 (r14): max-min fair token allocation under repetition caps
-   * ([[graft.operators.Allocation.maxMinFair]]) — the allocation step
-   * AFTER C57's supply check and C62's temperature weighting: every
-   * source gets an equal slice of the token budget except none may
-   * exceed its cap (2 epochs of its corpus here); spare capacity
-   * redistributes to the others — progressive filling's closed form,
-   * no iteration, all-integer. Caps are quality-tiered — sources with
-   * below-average doc length get 1 epoch, the rest 3 (the tier
-   * compare is an exact cross product, n_tokens·tot_docs <
-   * tot_tokens·n_docs, no division) — so at budget 3/2·total the
-   * low-tier sources cap out and the surplus redistributes; Σ
-   * allocated ≡ budget exactly (unit-remainder spread is
-   * deterministic). The global sort window runs over the per-SOURCE
-   * relation (a dim), never over data; the heavy pass is the one
-   * token rollup. */
-  private def qFairAllocation(s: SparkSession, dir: String): DataFrame = {
-    val per = t(s, dir, "documents")
-      .select(col("source"),
-        size(graft.functions.expressions.wordNgrams(
-          coalesce(col("text"), lit("")), 1)).cast("long").as("toks"))
-      .groupBy("source")
-      .agg(count(lit(1)).as("n_docs"), sum("toks").as("n_tokens"))
-    val tot = per.agg(sum("n_docs").as("tot_docs"),
-      sum("n_tokens").as("tot_tokens"))
-    val tiered = per.crossJoin(broadcast(tot))
-      .withColumn("epochs",
-        when(col("n_tokens") * col("tot_docs") < col("tot_tokens") * col("n_docs"),
-          1L).otherwise(3L))
-      .withColumn("cap_tokens", col("epochs") * col("n_tokens"))
-      .drop("tot_docs", "tot_tokens")
-    val budget = per.agg(expr("3 * sum(n_tokens) div 2").as("budget"))
-    graft.operators.Allocation
-      .maxMinFair(tiered, "source", "cap_tokens", budget)
-      .select(col("source"), col("n_tokens"), col("epochs"),
-        col("cap_tokens"), col("allocated").as("allocated_tokens"),
-        col("capped"), col("fill_level"))
-      .orderBy("source")
-  }
-
-  /** C66 (r14): budget materialization
-   * ([[graft.operators.Sampling.budgetMaterialize]]) — C63's fair
-   * allocation turned into per-doc COPY COUNTS: full epochs of every
-   * doc plus a deterministic md5-prefix partial epoch, stop-before-
-   * exceeding (undershoot < one doc, never an overdraw). The rollup
-   * proves the materialized token mass reconciles with the plan:
-   * materialized = full·n + partial-prefix sum, undershoot =
-   * allocated − materialized ≥ 0. Every number integer-replayable. */
-  private def qBudgetMaterialize(s: SparkSession, dir: String): DataFrame = {
-    val perDoc = t(s, dir, "documents")
-      .select(col("source"), col("doc_id"),
-        size(graft.functions.expressions.wordNgrams(
-          coalesce(col("text"), lit("")), 1)).cast("long").as("toks"))
-    val per = perDoc.groupBy("source")
-      .agg(count(lit(1)).as("n_docs"), sum("toks").as("n_tokens"))
-    val tot = per.agg(sum("n_docs").as("tot_docs"),
-      sum("n_tokens").as("tot_tokens"))
-    val tiered = per.crossJoin(broadcast(tot))
-      .withColumn("epochs",
-        when(col("n_tokens") * col("tot_docs") < col("tot_tokens") * col("n_docs"),
-          1L).otherwise(3L))
-      .withColumn("cap_tokens", col("epochs") * col("n_tokens"))
-      .drop("tot_docs", "tot_tokens")
-    val budget = per.agg(expr("3 * sum(n_tokens) div 2").as("budget"))
-    val alloc = graft.operators.Allocation
-      .maxMinFair(tiered, "source", "cap_tokens", budget)
-    graft.operators.Sampling
-      .budgetMaterialize(perDoc, "source", "doc_id", "toks", alloc)
-      .groupBy("source")
-      .agg(sum(when(col("copies") > 0, 1L).otherwise(0L)).as("n_docs_used"),
-        max("copies").as("max_copies"),
-        sum(col("copies") * col("toks")).as("materialized_tokens"))
-      .join(broadcast(alloc.select(col("source"),
-        col("allocated").as("allocated_tokens"))), Seq("source"))
-      .withColumn("undershoot",
-        col("allocated_tokens") - col("materialized_tokens"))
-      .select("source", "allocated_tokens", "n_docs_used", "max_copies",
-        "materialized_tokens", "undershoot")
-      .orderBy("source")
-  }
-
-  /** A28 (r14): policy-driven column masking
-   * ([[graft.operators.Masking.applyPolicy]]) — the release
-   * projection decided by a GOVERNANCE RELATION, not code: keep the
-   * key, pseudonymize the name (sha256 — stable joinability), prefix-
-   * truncate the segment, generalize balances to 100-dollar bands;
-   * c_nationkey is deliberately ABSENT from the policy and must be
-   * dropped (default-deny — a new sensitive column cannot leak
-   * through a stale policy). */
-  private def qMaskPolicy(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val cust = t(s, dir, "customer").select(
-      col("c_custkey"), col("c_name"), col("c_mktsegment"),
-      cents(col("c_acctbal")).as("acctbal_cents"), col("c_nationkey"))
-    val policy = Seq(
-      ("c_custkey", "keep", 0L),
-      ("c_name", "sha256", 0L),
-      ("c_mktsegment", "prefix", 2L),
-      ("acctbal_cents", "bucket", 10000L))
-      .toDF("column", "action", "param")
-    graft.operators.Masking.applyPolicy(cust, policy).orderBy("c_custkey")
-  }
-
-  /** C70 (r14): prefix-sharing report
-   * ([[graft.functions.expressions.commonPrefixLen]]) — the KV-cache
-   * planning statistic for inference batching: documents that share a
-   * prompt prefix can share its attention cache, and the saving per
-   * bucket is lcp × (n − 1). The group-wide longest common prefix
-   * needs NO pairwise comparison: every member sorts between the
-   * bucket's lexicographic MIN and MAX, so lcp(bucket) =
-   * lcp(min, max) — two ordinary aggregates plus one codegen'd
-   * comparison. */
-  private def qPrefixSharing(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "documents")
-      .groupBy(substring(col("text"), 1, 8).as("bucket"))
-      .agg(count(lit(1)).as("n_docs"),
-        min("text").as("mn"), max("text").as("mx"),
-        sum(length(col("text"))).as("total_chars"))
-      .filter(col("n_docs") >= 2)
-      .withColumn("lcp_chars",
-        graft.functions.expressions.commonPrefixLen(col("mn"), col("mx")))
-      .withColumn("saved_chars", col("lcp_chars") * (col("n_docs") - 1))
-      .select(col("bucket"), col("n_docs"), col("total_chars"),
-        col("lcp_chars"), col("saved_chars"))
-      .orderBy("bucket")
-  }
-
-  /** C69 (r14): cross-source exact passage overlap
-   * ([[graft.functions.expressions.cdcChunks]] composed) — "which
-   * sources copy from which": the pairwise matrix of byte-identical
-   * CDC chunks shared across sources, with containment ppm against
-   * the smaller side. Complements C45's KMV shingle ESTIMATE with
-   * exact passage-level evidence. The relation that matters is the
-   * DISTINCT (source, chunk-hash) set — chunk-domain sized, never
-   * corpus text — and the pair join fans out at most |sources| rows
-   * per hash; every (source_a, source_b) pair is emitted, zero
-   * sharing included (absence is a finding). */
-  private def qPassageOverlap(s: SparkSession, dir: String): DataFrame = {
-    val sh = t(s, dir, "documents")
-      .select(col("source"),
-        explode(graft.functions.expressions.cdcChunks(col("text"))).as("chunk"))
-      .select(col("source"), md5(col("chunk")).as("h"))
-      .distinct()
-    val perSrc = sh.groupBy("source").agg(count(lit(1)).as("n"))
-    val shared = sh.as("a")
-      .join(sh.as("b"),
-        col("a.h") === col("b.h") && col("a.source") < col("b.source"))
-      .groupBy(col("a.source").as("sa"), col("b.source").as("sb"))
-      .agg(count(lit(1)).as("shared"))
-    val allPairs = perSrc.select(col("source").as("source_a"), col("n").as("na"))
-      .crossJoin(broadcast(
-        perSrc.select(col("source").as("source_b"), col("n").as("nb"))))
-      .filter(col("source_a") < col("source_b"))
-    allPairs
-      .join(shared,
-        col("source_a") === col("sa") && col("source_b") === col("sb"), "left")
-      .withColumn("shared_chunks", coalesce(col("shared"), lit(0L)))
-      .withColumn("containment_ppm",
-        expr("shared_chunks * 1000000 div least(na, nb)"))
-      .select(col("source_a"), col("source_b"), col("na"), col("nb"),
-        col("shared_chunks"), col("containment_ppm"))
-      .orderBy("source_a", "source_b")
-  }
-
-  /** C68 (r14): blocklist term-hit audit ([[graft.text.Blocklist]]) —
-   * the safety/policy pass scored per document from a severity-
-   * weighted term list: corpus tokenized ONCE, terms joined as a
-   * broadcast dimension against the exploded tokens (the map-side
-   * probe discards non-hits before any shuffle), never |terms| regex
-   * passes. Clean documents are retained with zero counts. */
-  private def qBlocklist(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val terms = Seq(("dup", 5L), ("slow", 2L), ("big", 1L))
-      .toDF("term", "severity")
-    graft.text.Blocklist.termHits(
-        t(s, dir, "documents"), "doc_id", "text", terms, flagThreshold = 8L)
-      .orderBy("doc_id")
-  }
-
-  /** C67 (r14): content-defined chunk dedup
-   * ([[graft.functions.expressions.cdcChunks]]) — per-doc duplicated-
-   * passage stats over Rabin-style rolling-hash chunk boundaries:
-   * chunk edges follow CONTENT, not offsets, so a passage copied with
-   * an insertion ahead of it still lands in identical chunks (the
-   * shifted duplication C27's fixed segments and C42's stride
-   * windows only approximate). One codegen'd O(n) pass per doc, a
-   * map-side chunk-hash count, and a chunk-domain equi-join — never
-   * doc-pairs. The oracle recomputes the SAME polynomial hash per
-   * window position from scratch (recursive-CTE power table +
-   * windowed character sums — the closed definition, not the rolling
-   * update), then replays chunking, md5s, and sharing stats. */
-  private def qChunkDedup(s: SparkSession, dir: String): DataFrame = {
-    val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
-    val ch = docs.select(col("doc_id"),
-        explode(graft.functions.expressions.cdcChunks(col("text"))).as("chunk"))
-      .select(col("doc_id"), md5(col("chunk")).as("h"))
-    val byHash = ch.groupBy("h").agg(countDistinct("doc_id").as("nd"))
-    ch.join(byHash, Seq("h"))
-      .groupBy("doc_id")
-      .agg(count(lit(1)).as("n_chunks"),
-        sum(when(col("nd") >= 2, 1L).otherwise(0L)).as("shared_chunks"),
-        min("h").as("min_md5"), max("h").as("max_md5"))
-      .withColumn("shared_ppm", expr("shared_chunks * 1000000 div n_chunks"))
-      .select(col("doc_id"), col("n_chunks"), col("shared_chunks"),
-        col("shared_ppm"), col("min_md5"), col("max_md5"))
-      .orderBy("doc_id")
-  }
-
-  /** C37: incremental dedup equivalence gate — split the corpus at
-   * the id midpoint (1-row bounds broadcast, date-spine pattern),
-   * build text-free [[graft.dedup.Dedup.minhashState]] from the first
-   * half, dedup the second half incrementally against it, and emit
-   * every doc whose keep decision differs from what full-batch
-   * minhashKeep over the whole corpus assigns. Must be empty: the
-   * daily-increment path provably reproduces the monolithic rebuild.
-   * Oracle: the empty relation. */
-  private def qDedupIncremental(s: SparkSession, dir: String): DataFrame = {
-    val docs = t(s, dir, "documents")
-    val bounds = docs.agg(
-      ((min("doc_id") + max("doc_id")) / 2).cast("long").as("mid"))
-    val withMid = docs.crossJoin(broadcast(bounds))
-    val old = withMid.filter(col("doc_id") <= col("mid")).select("doc_id", "text")
-    val nw = withMid.filter(col("doc_id") > col("mid")).select("doc_id", "text")
-    val inc = graft.dedup.Dedup
-      .minhashKeepIncremental(
-        graft.dedup.Dedup.minhashState(old, "doc_id", "text"), nw, "doc_id", "text")
-      .select(col("doc_id"), col("keep").as("keep_inc"))
-    val full = graft.dedup.Dedup.minhashKeep(docs, "doc_id", "text")
-      .select(col("doc_id"), col("keep").as("keep_full"))
-    inc.join(full, Seq("doc_id"))
-      .filter(col("keep_inc") =!= col("keep_full"))
-      .select("doc_id")
-      .orderBy("doc_id")
-  }
-
-  /** C36: deterministic mixture resampling (operators/Sampling
-   * .mixtureResample) — weight sources to a target mixture before
-   * training: src1 upsampled 2.5× (replication + fractional draw),
-   * src3 downsampled to 0.3, everything else kept. All draws are
-   * md5-derived with integer-literal thresholds, so the oracle
-   * replays the exact copy set. */
-  private def qMixtureResample(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Sampling.mixtureResample(
-        t(s, dir, "documents").select("doc_id", "source"), "source", "doc_id",
-        Map("src1" -> 2.5, "src3" -> 0.3))
-      .select(col("doc_id"), col("source"), col("copy_idx").cast("long").as("copy_idx"))
-      .orderBy("doc_id", "copy_idx")
-
-  /** C35: strided context chunking — overlapping 64-word windows
-   * every 48 words (consecutive chunks share 16 words), the
-   * context-window chunker for training/RAG pipelines where overlap
-   * preserves boundary context (contrast C27's DISJOINT segments for
-   * dedup). One codegen'd kernel + posexplode — narrow after the
-   * scan, no shuffle until the output sort. */
-  private def qContextChunks(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "documents")
-      // single-file table: spread before the CPU-heavy per-row kernel
-      .repartition(s.sparkContext.defaultParallelism)
-      .select(col("doc_id"),
-        posexplode(graft.functions.expressions.wordChunksStrided(col("text"), 64, 48)))
-      .select(col("doc_id"), col("pos").cast("long").as("chunk_idx"),
-        col("col").as("chunk"))
-      .orderBy("doc_id", "chunk_idx")
-
-  /** C34: deterministic corpus shuffle — reproducible global training
-   * order as (bucket, position): bucket = md5-derived integer mod
-   * nBuckets, position = rank within the bucket by the same hash.
-   * Training consumes buckets in order, rows within a bucket by
-   * position — a total order that is stable across engines, retries,
-   * and partitionings (C24's determinism rationale applied to ORDER,
-   * not membership). Scale shape: one narrow scan emits (bucket, key);
-   * the rank is a window PARTITIONED by bucket — parallel across
-   * buckets, never the single-partition global sort a bare
-   * row_number() over a whole corpus would plan. */
-  private def qCorpusShuffle(s: SparkSession, dir: String): DataFrame = {
-    val key = expr(
-      "conv(substring(md5(concat('shuffle42:', cast(doc_id as string))), 1, 8), 16, 10)")
-      .cast("long")
-    t(s, dir, "documents")
-      .select(col("doc_id"), pmod(key, lit(16L)).as("bucket"), key.as("k"))
-      .withColumn("pos",
-        row_number().over(Window.partitionBy("bucket").orderBy("k", "doc_id")).cast("long"))
-      .select("doc_id", "bucket", "pos")
-      .orderBy("bucket", "pos")
-  }
-
-  /** B42: JSON field extraction from a string column (the reference's
-   * whole data model is JSON-line parsing; this is the per-column
-   * variant: a semi-structured `props` payload queried without a
-   * schema migration). `get_json_object` is a codegen'd path scan —
-   * no UDF, no full from_json materialization for one field. */
-  private def qJsonExtract(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "events")
-      .select(col("event_type"),
-        get_json_object(col("props"), "$.k").cast("long").as("k"))
-      .groupBy("event_type")
-      .agg(count(lit(1)).as("n_events"),
-        sum("k").as("sum_k"), min("k").as("min_k"), max("k").as("max_k"))
-      .orderBy("event_type")
-
-  /** B43: bloom-filter runtime-pruned semi join
-   * (operators/BloomJoin.scala) — the fact side is bloom-prefiltered
-   * AT THE SCAN before the exact semi join, so at scale only the
-   * ~matching slice of lineitem ever reaches the shuffle/probe; false
-   * positives die in the exact join, making the output row-identical
-   * to the plain semi join — which is exactly what the oracle checks. */
-  private def qBloomSemiJoin(s: SparkSession, dir: String): DataFrame =
-    graft.operators.BloomJoin.bloomSemiJoin(
-        t(s, dir, "lineitem"),
-        t(s, dir, "part").filter(col("p_type").startsWith("PROMO")),
-        "l_partkey", "p_partkey")
-      .groupBy("l_returnflag", "l_linestatus")
-      .agg(count(lit(1)).as("n_items"),
-        sum(col("l_quantity").cast("long")).as("sum_qty"))
-      .orderBy("l_returnflag", "l_linestatus")
-
-  /** B44: Morton z-value clustering key (operators/ZOrder.scala) —
-   * the two-key bit-interleave that [[graft.operators.ZOrder
-   * .writeZOrdered]] range-writes on so per-file min/max footers bound
-   * BOTH keys. The key is pure built-in bit arithmetic, hash-checked
-   * here against the identical formula in the oracle; the layout write
-   * itself is file-stat asserted in LayoutSpec. */
-  private def qZorderKey(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "part")
-      .select(col("p_partkey"),
-        graft.operators.ZOrder.zvalue(
-          col("p_partkey") % 65536L, col("p_size").cast("long")).as("zval"))
-      .orderBy("p_partkey")
-
-  /** B45: Count-Min sketch frequency estimates (operators/Sketches
-   * .scala) — the mergeable one-pass frequency sketch, probed here for
-   * the exact top-20 part keys. Oracle-checked invariants: a CMS never
-   * undercounts (hard guarantee), and stays within eps·N of exact
-   * (holds with the sketch's confidence; deterministic for a fixed
-   * seed + dataset, like the HLL/percentile band checks). */
-  private def qCmsTopk(s: SparkSession, dir: String): DataFrame = {
-    val li = t(s, dir, "lineitem")
-    val sketch = graft.operators.Sketches.buildCms(li, "l_partkey",
-      eps = 0.005, confidence = 0.99, seed = 42)
-    val total = li.agg(count(lit(1)).as("n_total"))
-    li.groupBy("l_partkey").agg(count(lit(1)).as("exact_cnt"))
-      .orderBy(col("exact_cnt").desc, col("l_partkey")).limit(20)
-      .withColumn("est", graft.operators.Sketches.estimate(sketch, col("l_partkey")))
-      .crossJoin(broadcast(total)) // 1-row global scalar, never a collect
-      .select(col("l_partkey"), col("exact_cnt"),
-        (col("est") >= col("exact_cnt")).as("never_undercounts"),
-        // est − exact ≤ eps·N  ⇔  (est − exact) · (1/eps) ≤ N
-        ((col("est") - col("exact_cnt")) * 200L <= col("n_total")).as("within_eps"))
-      .orderBy("l_partkey")
-  }
-
-  /** B46: incremental aggregate maintenance (operators/Incremental
-   * .scala) — history and delta each aggregate to partials; the merge
-   * never rescans history. The oracle recomputes the full aggregate
-   * from scratch, so the hash check proves merge ≡ recompute. */
-  private def qIncrementalAgg(s: SparkSession, dir: String): DataFrame = {
-    val orders = t(s, dir, "orders")
-    def partial(o: DataFrame) = o.groupBy("o_orderpriority")
-      .agg(count(lit(1)).as("n_orders"),
-        sum(cents(col("o_totalprice"))).as("sum_total_c"),
-        max(cents(col("o_totalprice"))).as("max_total_c"))
-    val cut = lit("1998-01-01").cast("timestamp")
-    graft.operators.Incremental.mergePartials(
-        Seq(partial(orders.filter(col("o_orderdate") < cut)),
-          partial(orders.filter(col("o_orderdate") >= cut))),
-        Seq("o_orderpriority"),
-        Seq("n_orders" -> "sum", "sum_total_c" -> "sum", "max_total_c" -> "max"))
-      .orderBy("o_orderpriority")
-  }
-
-  /** B51: incremental QUANTILE maintenance (Incremental
-   * .histogramPartial / quantileFromHistogram) — two date-split
-   * "daily" histograms over order cents merge by bucket-count sum
-   * (mergePartials reused verbatim) and yield the median's bucket
-   * with a declared ±width bound. Integer bucket arithmetic
-   * end-to-end: the oracle recomputes the identical histogram from
-   * the RAW rows in DuckDB, proving merge ≡ full recompute (B46
-   * pattern); the band invariant against the exact interpolated
-   * median is asserted in-query (B18 precedent). */
-  private def qIncrementalQuantile(s: SparkSession, dir: String): DataFrame = {
-    val width = 10000L // $100 buckets over order totals
-    val cents1 = t(s, dir, "orders")
-      .select(cents(col("o_totalprice")).as("c"), col("o_orderdate"))
-    val cut = lit("1998-01-01").cast("timestamp")
-    val merged = graft.operators.Incremental.mergeHistograms(Seq(
-      graft.operators.Incremental
-        .histogramPartial(cents1.filter(col("o_orderdate") < cut), "c", width),
-      graft.operators.Incremental
-        .histogramPartial(cents1.filter(col("o_orderdate") >= cut), "c", width)))
-    val med = graft.operators.Incremental.quantileFromHistogram(merged, width, 0.5)
-    // band check against the RANK-based exact median (the ceil(n/2)-th
-    // order statistic, percentile_disc) — the same definition
-    // quantileFromHistogram's cum >= ceil(q*n) rank selects, so the
-    // chosen bucket contains it BY CONSTRUCTION at any row count. The
-    // previously-used interpolated percentile averages the two middle
-    // order statistics on even n, which can straddle a bucket edge and
-    // fail the gate on correct data (ADVICE r8).
-    val exact = cents1.agg(
-      expr("percentile_disc(0.5) within group (order by c)").cast("long").as("m"))
-    med.crossJoin(broadcast(exact))
-      .select(col("n_rows"), col("q_lo"),
-        (col("m") >= col("q_lo") && col("m") < col("q_lo") + width).as("band_ok"))
-  }
-
-  /** B52: robust outlier detection via median absolute deviation —
-   * the heavy-tail-safe alternative to z-scores (mean/stddev are
-   * themselves dragged by the outliers they're meant to find). All
-   * integer-cents arithmetic with RANK-based medians
-   * (percentile_disc = the ceil(q·n)-th order statistic, identical
-   * in Spark and DuckDB incl. even-count ties), so med, MAD, and the
-   * 5-MAD outlier count are bit-exact cross-engine. Three scans by
-   * construction (med → |x−med| median → threshold count), each a
-   * full-scan aggregate with a 1-row broadcast — no shuffle grows
-   * with data. */
-  private def qMadOutliers(s: SparkSession, dir: String): DataFrame = {
-    val c = t(s, dir, "orders").select(cents(col("o_totalprice")).as("c"))
-    val med = c.agg(
-      expr("percentile_disc(0.5) within group (order by c)").cast("long").as("med"))
-    val dev = c.crossJoin(broadcast(med))
-      .select(abs(col("c") - col("med")).as("ad"), col("med"))
-    val mad = dev.groupBy("med").agg(
-      expr("percentile_disc(0.5) within group (order by ad)").cast("long").as("mad"))
-    dev.crossJoin(broadcast(mad.select("mad")))
-      .agg(count(lit(1)).as("n_rows"),
-        first(col("med")).as("med"), first(col("mad")).as("mad"),
-        sum(when(col("ad") > col("mad") * 5L, 1L).otherwise(0L)).as("n_outliers"))
-  }
-
-  /** C26: one-pass table profile (operators/Profile.scala) — per
-   * column: rows, non-nulls, exact distinct, min/max as strings.
-   * Doubles are excluded from min/max rendering on purpose: float
-   * formatting is engine-specific, everything else here is not. */
-  private def qProfile(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Profile.profile(t(s, dir, "customer"),
-      Seq("c_custkey", "c_name", "c_nationkey", "c_mktsegment"))
-      .orderBy("col_name")
-
-  /** C25: deterministic stratified sampling (operators/Sampling
-   * .scala) — per-language keep fractions, md5-bucket thresholds.
-   * Output proves composition (per-stratum kept count) and threshold
-   * (max surviving bucket); zh at fraction 0 must vanish entirely. */
-  private def qStratifiedSample(s: SparkSession, dir: String): DataFrame = {
-    val fr = Map("en" -> 0.5, "es" -> 0.25, "zh" -> 0.0)
-    graft.operators.Sampling
-      .stratifiedSample(t(s, dir, "documents"), "lang", "doc_id", fr, default = 0.1)
-      .groupBy("lang")
-      .agg(count(lit(1)).as("n_kept"),
-        max(graft.operators.Sampling.sampleBucket(col("doc_id"))).as("max_bucket"))
-      .orderBy("lang")
-  }
-
-  /** C39: deterministic weighted sampling (operators/Sampling
-   * .weightedSample) — top-100 orders per priority class, selection
-   * probability ∝ order value (sequential Poisson / Ohlsson bottom-k
-   * priorities). Every arithmetic step is IEEE-exact dyadic or one
-   * correctly-rounded division, so the oracle replays the identical
-   * priority order in DuckDB and the sampled id set hash-matches. */
-  private def qWeightedSample(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Sampling
-      .weightedSample(
-        t(s, dir, "orders").select(col("o_orderpriority"), col("o_orderkey"),
-          cents(col("o_totalprice")).as("w_cents")),
-        "o_orderpriority", "o_orderkey", col("w_cents"), k = 100)
-      .orderBy("o_orderpriority", "o_orderkey")
-
-  /** B29: connected components, oracle-checked — same-user events
-   * within 30 minutes form an edge; in 1-D, transitive closure over
-   * "within gap" pairs equals gap-based sessionization (events across
-   * any >gap silence are farther than gap apart), so the iterative
-   * distributed large-star/small-star labeling has an EXACT SQL
-   * oracle: per-session MIN(event_id) from lag/cumsum sessions. */
-  private def qCcSessions(s: SparkSession, dir: String): DataFrame = {
-    val ev = withEventTime(t(s, dir, "events"))
-      .select(col("event_id"), col("user_id"), col("ts_us"))
-    val a = ev.select(col("user_id").as("u_a"), col("event_id").as("id_a"), col("ts_us").as("ts_a"))
-    val b = ev.select(col("user_id").as("u_b"), col("event_id").as("id_b"), col("ts_us").as("ts_b"))
-    val edges = graft.operators.Ranged
-      .bandedJoin(a, b, "u_a", "u_b", "ts_a", "ts_b", 1800L * 1000000L)
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b")
-    val labeled = graft.operators.Components.connectedComponents(edges, "id_a", "id_b")
-    ev.join(labeled, col("event_id") === col("node"), "left")
-      .select(col("event_id"),
-        coalesce(col("component"), col("event_id")).as("session_rep"))
-      .orderBy("event_id")
-  }
-
-  /** C14: transitive duplicate clusters — MinHash near-dup pairs →
-   * connected components → per-cluster min-id survivor. FULL oracle
-   * since r14: the banded LSH verifies exact Jaccard before any pair
-   * enters the closure, so whenever recall holds the clustering
-   * equals the exact-pair closure, and the oracle replays THAT with
-   * the C14b recursive CTE (string-space shingles + transitive
-   * reach). A hash mismatch means a missed pair changed a component
-   * — the recall regression the row should catch. ComponentsSpec
-   * covers chain semantics; the _sound gate hedges pair soundness. */
-  private def qDedupClusters(s: SparkSession, dir: String): DataFrame = {
-    val docs = t(s, dir, "documents")
-    val pairs = graft.dedup.Dedup
-      .minhashCandidates(docs, "doc_id", "text")
-      .filter(col("jaccard") >= 0.8)
-    graft.operators.Components.dedupClusters(docs, "doc_id", pairs)
-      .orderBy("doc_id")
-  }
-
-  /** C91 (r16): dedup IMPACT report — the release-note numbers a
-   * dedup pass actually ships: per source, docs in/out, characters
-   * removed (ppm), duplicate-cluster count and largest cluster, with
-   * each cluster attributed to its SURVIVOR's source (deterministic —
-   * clusters span sources, so "whose dedup was it" needs a rule).
-   * Pure composition over the verified C14 keep-table: one join to
-   * doc metadata + two map-side-combined rollups; the oracle replays
-   * the C14b recursive-CTE closure and every aggregate. */
-  private def qDedupImpact(s: SparkSession, dir: String): DataFrame = {
-    val docs = t(s, dir, "documents")
-    val pairs = graft.dedup.Dedup
-      .minhashCandidates(docs, "doc_id", "text")
-      .filter(col("jaccard") >= 0.8)
-    val kt = graft.operators.Components.dedupClusters(docs, "doc_id", pairs)
-    val meta = docs.select(col("doc_id"), col("source"),
-      length(coalesce(col("text"), lit(""))).cast("long").as("nc"))
-    val enriched = kt.join(meta, Seq("doc_id"))
-    val perSource = enriched.groupBy("source").agg(
-      count(lit(1)).as("n_docs"),
-      sum(when(col("keep"), 1L).otherwise(0L)).as("n_keep"),
-      sum("nc").as("chars_total"),
-      sum(when(!col("keep"), col("nc")).otherwise(0L)).as("chars_removed"),
-      expr("sum(case when keep then 0 else nc end) * 1000000 div sum(nc)")
-        .as("removed_ppm"))
-    val clusterSizes = kt.groupBy("cluster_id").agg(count(lit(1)).as("csz"))
-    val survivorStats = kt.filter(col("keep"))
-      .join(meta.select("doc_id", "source"), Seq("doc_id"))
-      .join(clusterSizes, Seq("cluster_id"))
-      .groupBy("source").agg(
-        sum(when(col("csz") >= 2L, 1L).otherwise(0L)).as("n_multi_clusters"),
-        max("csz").as("max_cluster_sz"))
-    perSource.join(survivorStats, Seq("source"), "left")
-      .select(col("source"), col("n_docs"), col("n_keep"),
-        col("chars_total"), col("chars_removed"), col("removed_ppm"),
-        coalesce(col("n_multi_clusters"), lit(0L)).as("n_multi_clusters"),
-        coalesce(col("max_cluster_sz"), lit(0L)).as("max_cluster_sz"))
-      .orderBy("source")
-  }
-
-  /** C53 (r14): quality-aware cluster survivor selection
-   * ([[graft.operators.Components.keepBest]]) — same verified
-   * MinHash-candidate clusters as C14, but each cluster keeps its
-   * LONGEST doc (token count via the codegen'd wordNgrams kernel;
-   * ties → smallest id) instead of the smallest id: the rule corpus
-   * dedup actually wants (keep the best version of a mirrored page,
-   * not whichever crawled first). The argmax is one
-   * map-side-combined (score, −id)-struct max — no window, no
-   * per-cluster sort. Oracle replays the C14b recursive-CTE closure
-   * plus a row_number argmax; valid on the same LSH-recall argument
-   * as q_dedup_clusters (byte-identical clusters proven r14). */
-  private def qDedupKeepBest(s: SparkSession, dir: String): DataFrame = {
-    val docs = t(s, dir, "documents")
-    val pairs = graft.dedup.Dedup
-      .minhashCandidates(docs, "doc_id", "text")
-      .filter(col("jaccard") >= 0.8)
-    val scored = docs.select(col("doc_id"),
-      size(graft.functions.expressions.wordNgrams(
-        coalesce(col("text"), lit("")), 1)).cast("long").as("n_tokens"))
-    graft.operators.Components.keepBest(scored, "doc_id", "n_tokens", pairs)
-      .orderBy("doc_id")
-  }
-
-  /** C14c: clusters-primary soundness — every CC input pair on the
-   * MinHash-candidate path (the pairs q_dedup_clusters clusters over)
-   * must be a genuine ≥0.8-Jaccard pair when its texts are re-joined
-   * independently and re-verified. A non-empty result means candidate
-   * generation associated the wrong ids with a verified similarity
-   * (band-join or dedup plumbing bug). Oracle: the empty relation. */
-  private def qDedupClustersSound(s: SparkSession, dir: String): DataFrame = {
-    val docs = t(s, dir, "documents")
-    val pairs = graft.dedup.Dedup
-      .minhashCandidates(docs, "doc_id", "text")
-      .filter(col("jaccard") >= 0.8)
-      .select("id_a", "id_b")
-    // independent re-verify: join each emitted pair back to the corpus
-    // by id and recompute the similarity from raw text (same NULL→''
-    // normalization as the pipeline)
-    val texts = docs.select(col("doc_id"),
-      coalesce(col("text"), lit("")).as("t"))
-    pairs
-      .join(texts.select(col("doc_id").as("id_a"), col("t").as("t_a")), Seq("id_a"))
-      .join(texts.select(col("doc_id").as("id_b"), col("t").as("t_b")), Seq("id_b"))
-      .filter(graft.dedup.Dedup.ngramJaccard(col("t_a"), col("t_b")) < 0.8)
-      .select("id_a", "id_b")
-      .orderBy("id_a", "id_b")
-  }
-
-  // ---------------------------------------------------------------- D block
-
-  /** D1 (batch side of the unified API): tumbling-window hourly event
-   * aggregation — the same EventStream.windowedAgg operator that runs
-   * under Structured Streaming (StreamingSpec drives it incrementally). */
-  private def qHourlyEvents(s: SparkSession, dir: String): DataFrame =
-    graft.streaming.EventStream
-      .windowedAgg(withEventTime(t(s, dir, "events")), "1 hour", "10 minutes")
-      .select(
-        date_format(col("window_start"), "yyyy-MM-dd HH:mm:ss").as("hour_start"),
-        col("event_type"), col("n"), col("sum_value"))
-      .orderBy("hour_start", "event_type")
-
-  /** D1b: HOPPING (sliding) windows — each event lands in
-   * windowLen/slide overlapping windows (here 1h/15min = 4); the same
-   * `window(ts, len, slide)` aggregate runs under streaming with
-   * watermark eviction (D1's tumbling window is the slide = len
-   * special case). Oracle replays the window replication with integer
-   * epoch-microsecond arithmetic. */
-  private def qSlidingWindow(s: SparkSession, dir: String): DataFrame =
-    withEventTime(t(s, dir, "events"))
-      .groupBy(window(col("ts"), "1 hour", "15 minutes"), col("event_type"))
-      .agg(count(lit(1)).as("n"))
-      .select(unix_micros(col("window.start")).as("win_start_us"),
-        col("event_type"), col("n"))
-      .orderBy("win_start_us", "event_type")
-
-  /** D9: streaming heavy hitters (EventStream.heavyHittersStream) run
-   * in batch — per-hour Misra-Gries summaries at capacity 8. The
-   * events table has 5 distinct types, so no decrement ever fires and
-   * the summary is provably EXACT: the oracle is a plain windowed
-   * GROUP BY count. The over-capacity regime (where counts become
-   * n/(c+1)-bounded lower bounds) is covered in StreamingSpec. */
-  private def qStreamTopk(s: SparkSession, dir: String): DataFrame =
-    graft.streaming.EventStream
-      .heavyHittersStream(withEventTime(t(s, dir, "events")),
-        "event_type", "ts", "1 hour", capacity = 8)
-      .toDF()
-      .orderBy("window_start_us", "item")
-
-  /** D9b: the weighted-MG pre-reduced path ([[graft.streaming
-   * .EventStream.heavyHittersWeightedStream]]) over the same input —
-   * the per-partition (window, item) → weight combine that removes the
-   * one-task-per-window throughput ceiling. Below capacity the summary
-   * is exact regardless of path, so the SAME plain windowed GROUP BY
-   * count oracle proves the pre-reduction changes nothing. */
-  private def qStreamTopkWeighted(s: SparkSession, dir: String): DataFrame =
-    graft.streaming.EventStream
-      .heavyHittersWeightedStream(withEventTime(t(s, dir, "events")),
-        "event_type", "ts", "1 hour", capacity = 8)
-      .toDF()
-      .orderBy("window_start_us", "item")
-
-  /** D10: streaming windowed quantiles (EventStream.histogramStream +
-   * histogramQuantiles) run in batch — per-hour integer value
-   * histograms (the bounded mergeable summary; exact streaming
-   * quantiles are unbounded-state) finalized to p50/p90/p99 at bucket
-   * precision. Integer buckets, counts, and edges end to end, so the
-   * oracle replays the whole pipeline — bucketing, cumulative rank,
-   * quantile pick — in DuckDB exactly. StreamingSpec drives the same
-   * histogram incrementally and checks cross-micro-batch additivity. */
-  private def qStreamQuantile(s: SparkSession, dir: String): DataFrame = {
-    val hist = graft.streaming.EventStream.histogramStream(
-      withEventTime(t(s, dir, "events")), "1 hour", "10 minutes", bucketCents = 100L)
-    graft.streaming.EventStream
-      .histogramQuantiles(hist, Seq(500000L, 900000L, 990000L), bucketCents = 100L)
-      .orderBy("window_start_us", "q_ppm")
-  }
-
-  /** D2 (r14): custom stateful gap sessionization
-   * ([[graft.streaming.EventStream.sessionize]],
-   * flatMapGroupsWithState) run on the batch input — Spark's unified
-   * API executes the SAME state function per user group, and batch
-   * end-of-input closes each user's trailing session (complete
-   * history; the dedupStream degeneration argument), so the output is
-   * the full session set and the oracle is the q_sessionize-style
-   * lag/cumsum replay. Semantics differ from B6 in two ways the
-   * oracle mirrors: time is MILLISECOND-space (the state function
-   * keys on Timestamp.getTime) and values ride through the state as
-   * cents-valued doubles (integer-valued doubles sum exactly in any
-   * order, so the double accumulator is oracle-safe). StreamingSpec
-   * separately drives the watermark/timeout path incrementally. */
-  private def qStreamSessionize(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val ev = withEventTime(t(s, dir, "events"))
-      .select(col("user_id"), col("event_id"), col("ts"), col("event_type"),
-        round(col("value") * 100, 0).as("value"))
-      .as[graft.streaming.Event]
-    graft.streaming.EventStream.sessionize(ev, gapSeconds = 1800)
-      .toDF()
-      .select(col("user_id"),
-        (unix_millis(col("session_start")) * 1000L).as("session_start_us"),
-        (unix_millis(col("session_end")) * 1000L).as("session_end_us"),
-        col("n_events"), col("sum_value").cast("long").as("sum_cents"))
-      .orderBy("user_id", "session_start_us")
-  }
-
-  private val sinkSeq = new java.util.concurrent.atomic.AtomicInteger(0)
-
-  /** D12 (r14): the streaming vector-search sink
-   * ([[graft.streaming.EventStream.vectorSearchSink]]) promoted from
-   * spec-only to a driver-gated row. The query drives the REAL
-   * writeStream sink — MemoryStream probes over two micro-batches,
-   * checkpointed foreachBatch appends into batch=<id> dirs — against
-   * the same persisted IVF index q_ann_ivf_indexed serves, reads the
-   * sink back, and emits per-probe equality against a direct
-   * [[graft.similarity.Ann.ivfTopKIndexed]] call (identical
-   * deterministic code path, so cos doubles are byte-equal). The
-   * oracle asserts the bounded invariant: every probe answered with
-   * exactly k rows and zero sink/direct divergence. Driver state is
-   * the 3 probe vectors only. */
-  private def qVectorSearchSink(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    implicit val sql: org.apache.spark.sql.SQLContext = s.sqlContext
-    val emb = t(s, dir, "embeddings")
-    val idx = withBuiltIndex(s, dir, "ivf_index")(
-      graft.similarity.Ann.buildIvfIndex(emb, "vec_id", "embedding", 64, _))
-    val probes = emb.filter(col("vec_id") < 3).select("vec_id", "embedding")
-    val probeRows = probes.as[(Long, Array[Float])].collect().sortBy(_._1)
-    val base = s"${graft.Scratch.root(s)}/vss_${sinkSeq.incrementAndGet()}"
-    val (out, ckpt) = (s"$base/out", s"$base/ckpt")
-    val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Array[Float])]
-    val q = graft.streaming.EventStream.vectorSearchSink(
-        in.toDF.toDF("vec_id", "embedding"), idx, "vec_id", "embedding",
-        dim = 64, k = 5, nProbe = 5, out)
-      .option("checkpointLocation", ckpt).start()
-    try {
-      in.addData(probeRows.take(2).toSeq)
-      q.processAllAvailable()
-      in.addData(probeRows.drop(2).toSeq)
-      q.processAllAvailable()
-    } finally q.stop()
-    val got = s.read.parquet(out)
-      .select(col("probe_id"), col("rank"), col("vec_id"), col("cos"))
-    val want = graft.similarity.Ann
-      .ivfTopKIndexed(idx, probes, "vec_id", "embedding", 64, 5, nProbe = 5)
-      .select(col("probe_id").as("w_probe"), col("rank").as("w_rank"),
-        col("vec_id").as("w_vec"), col("cos").as("w_cos"))
-    val matched = got.join(want,
-        col("probe_id") === col("w_probe") && col("rank") === col("w_rank") &&
-          col("vec_id") === col("w_vec") && col("cos") === col("w_cos"), "left_semi")
-      .groupBy("probe_id").agg(count(lit(1)).as("n_match"))
-    got.groupBy("probe_id").agg(count(lit(1)).as("n_got"))
-      .join(matched, Seq("probe_id"), "left")
-      .select(col("probe_id"), col("n_got").as("k_rows"),
-        (col("n_got") === lit(5L) &&
-          coalesce(col("n_match"), lit(0L)) === col("n_got"))
-          .as("sink_matches_direct"))
-      .orderBy("probe_id")
-  }
-
-  /** D12b (r19, VERDICT r18 #6): streaming ANN freshness under
-   * DELETES — a C7h tombstone landing BETWEEN micro-batches must be
-   * respected by the very next batch. The serving path masks
-   * tombstones inside [[graft.similarity.Ann.ivfTopKIndexed]] by
-   * re-probing the sidecar per call, so freshness holds by
-   * construction — this row PINS it under a real checkpointed stream
-   * instead of assuming it. A fresh index (deletes mutate — the
-   * shared cached-index helper cannot serve), one probe batch, then
-   * [[graft.similarity.Ann.deleteFromIvfIndex]] of every non-probe
-   * id batch 0 answered, then the SAME probes as batch 1. Per probe,
-   * driver-checked on bounded (≤15-row) lists: batch 0 served at
-   * least one doomed id (the delete is observable), batch 1 serves
-   * none, and batch 1 equals the direct post-delete indexed search
-   * id-for-id. */
-  private def qStreamAnnDelete(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    implicit val sql: org.apache.spark.sql.SQLContext = s.sqlContext
-    val emb = t(s, dir, "embeddings")
-    val idx = s"${graft.Scratch.root(s)}/stream_ann_del_${sinkSeq.incrementAndGet()}"
-    graft.similarity.Ann.buildIvfIndex(emb, "vec_id", "embedding", 64, idx)
-    val probes = emb.filter(col("vec_id") < 3).select("vec_id", "embedding")
-    val probeRows = probes.as[(Long, Array[Float])].collect().sortBy(_._1)
-    val base = s"${graft.Scratch.root(s)}/sad_${sinkSeq.incrementAndGet()}"
-    val (out, ckpt) = (s"$base/out", s"$base/ckpt")
-    val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Array[Float])]
-    val q = graft.streaming.EventStream.vectorSearchSink(
-        in.toDF.toDF("vec_id", "embedding"), idx, "vec_id", "embedding",
-        dim = 64, k = 5, nProbe = 5, out)
-      .option("checkpointLocation", ckpt).start()
-    val doomed = try {
-      in.addData(probeRows.toSeq)
-      q.processAllAvailable()
-      // the tombstone lands BETWEEN micro-batches: every non-probe id
-      // batch 0 served (bounded: <= 3 probes x 5)
-      val d = s.read.parquet(s"$out/batch=0").filter(col("vec_id") >= 3L)
-        .select("vec_id").distinct().as[Long].collect().toSeq.sorted
-      graft.similarity.Ann.deleteFromIvfIndex(idx, d.toDF("vec_id"), "vec_id")
-      in.addData(probeRows.toSeq)
-      q.processAllAvailable()
-      d.toSet
-    } finally q.stop()
-    val served = s.read.parquet(out)
-      .select(col("batch").cast("long").as("b"), col("probe_id"), col("vec_id"))
-      .as[(Long, Long, Long)].collect().toSeq
-    val direct = graft.similarity.Ann
-      .ivfTopKIndexed(idx, probes, "vec_id", "embedding", 64, 5, nProbe = 5)
-      .select("probe_id", "vec_id").as[(Long, Long)].collect().toSeq
-    probeRows.map(_._1).toSeq.map { p =>
-      val b0 = served.collect { case (0L, `p`, v) => v }.toSet
-      val b1 = served.collect { case (1L, `p`, v) => v }.toSet
-      val e = direct.collect { case (`p`, v) => v }.toSet
-      (p, b0.intersect(doomed).nonEmpty, b1.intersect(doomed).isEmpty, b1 == e)
-    }.toDF("probe_id", "pre_delete_served", "deleted_excluded", "matches_direct")
-      .orderBy("probe_id")
-  }
-
-  /** D13 (r14): streaming changelog apply
-   * ([[graft.streaming.EventStream.cdcSink]]) — a Debezium-shaped
-   * change feed driven through the REAL checkpointed writeStream sink
-   * (MemoryStream, two micro-batches): batch 1 bootstraps a keyed
-   * slice of orders as upserts, batch 2 updates the even keys and
-   * deletes the odd multiples of 3. The query returns the final
-   * serving table, and the oracle computes the same end state
-   * directly from orders in SQL — a full-value check that the
-   * streamed applyCdc path (merge, delete, rewrite-swap, per-batch
-   * checkpoint) loses and invents nothing. Driver state is the
-   * bounded changelog slice (o_orderkey % 37 = 0), the D12 probe
-   * precedent. */
-  private def qCdcSink(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    implicit val sql: org.apache.spark.sql.SQLContext = s.sqlContext
-    val slice = t(s, dir, "orders")
-      .filter(col("o_orderkey") % 37 === 0)
-      .select(col("o_orderkey").as("k"), cents(col("o_totalprice")).as("v"))
-      .as[(Long, Long)].collect().sortBy(_._1)
-    val batch1 = slice.map { case (k, v) => (k, v, "U") }
-    val batch2 = slice.collect {
-      case (k, v) if k % 2 == 0 => (k, v + 7L, "U")
-      case (k, _) if k % 3 == 0 => (k, 0L, "D")
-    }
-    val base = s"${graft.Scratch.root(s)}/cdc_sink_${sinkSeq.incrementAndGet()}"
-    val (table, ckpt) = (s"$base/table", s"$base/ckpt")
-    val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long, String)]
-    val q = graft.streaming.EventStream.cdcSink(
-        in.toDF.toDF("k", "v", "_op"), table, Seq("k"))
-      .option("checkpointLocation", ckpt).start()
-    try {
-      in.addData(batch1.toSeq)
-      q.processAllAvailable()
-      in.addData(batch2.toSeq)
-      q.processAllAvailable()
-    } finally q.stop()
-    s.read.parquet(table).select(col("k"), col("v")).orderBy("k")
-  }
-
-  /** D28 (r15): streaming governed-snapshot publish
-   * ([[graft.streaming.EventStream.snapshotPublishSink]]) — the
-   * streaming write path into the A19 namespace, driven through the
-   * REAL checkpointed sink: two micro-batches (full slice, then
-   * updates to a key subset) each publish a new gated version and
-   * advance `prod`; the query reads `prod` back and also pins the
-   * version count (exactly one version per clean batch). Oracle: the
-   * LWW end state replayed in SQL + the pinned count. */
-  private def qStreamSnapshotPublish(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    implicit val sql: org.apache.spark.sql.SQLContext = s.sqlContext
-    val slice = t(s, dir, "orders")
-      .filter(col("o_orderkey") % 37 === 0)
-      .select(col("o_orderkey").as("k"), cents(col("o_totalprice")).as("v"))
-      .as[(Long, Long)].collect().sortBy(_._1)
-    val batch1 = slice.toSeq
-    val batch2 = slice.collect { case (k, v) if k % 2 == 0 => (k, v + 7L) }.toSeq
-    val base = s"${graft.Scratch.root(s)}/snap_sink_${sinkSeq.incrementAndGet()}"
-    val (root, ckpt) = (s"$base/root", s"$base/ckpt")
-    val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long)]
-    val q = graft.streaming.EventStream.snapshotPublishSink(
-        in.toDF.toDF("k", "v"), root, "orders_live", Seq("k"))
-      .option("checkpointLocation", ckpt).start()
-    try {
-      in.addData(batch1)
-      q.processAllAvailable()
-      in.addData(batch2)
-      q.processAllAvailable()
-    } finally q.stop()
-    val nVers = graft.sinks.Snapshot.currentVersion(s, root)
-    graft.sinks.Snapshot.readTag(s, root, "orders_live", "prod")
-      .select(col("k"), col("v"), lit(nVers).as("n_versions"))
-      .orderBy("k")
-  }
-
-  /** D29 (r16): streaming publish onto a BRANCH
-   * ([[graft.streaming.EventStream.snapshotBranchSink]]) — a new
-   * streaming feed STAGED against the governed warehouse: the stream
-   * publishes micro-batches onto an A35 branch (LWW merge against the
-   * ref's own head, A27-gated, other tables carried by links) while
-   * `prod` stays pinned at its pre-stream version; after burn-in the
-   * branch three-way-merges back (A36) and prod atomically gains the
-   * feed's end state joined with its consistent base. The query runs
-   * the full lifecycle through the REAL checkpointed sink and emits
-   * the prod-served feed table after the merge, with the pre-merge
-   * prod version and the final version count pinned as columns —
-   * the oracle replays the LWW end state and both constants. */
-  private def qStreamBranchPublish(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    implicit val sql: org.apache.spark.sql.SQLContext = s.sqlContext
-    val slice = t(s, dir, "orders")
-      .filter(col("o_orderkey") % 37 === 0)
-      .select(col("o_orderkey").as("k"), cents(col("o_totalprice")).as("v"))
-      .as[(Long, Long)].collect().sortBy(_._1)
-    val batch1 = slice.toSeq
-    val batch2 = slice.collect { case (k, v) if k % 2 == 0 => (k, v + 7L) }.toSeq
-    val base = s"${graft.Scratch.root(s)}/branch_sink_${sinkSeq.incrementAndGet()}"
-    val (root, ckpt) = (s"$base/root", s"$base/ckpt")
-    val dim = t(s, dir, "nation").select("n_nationkey", "n_name")
-    graft.sinks.Snapshot.publish(s, root, Map("dim" -> dim))       // v1
-    graft.sinks.Snapshot.tag(s, root, "prod", 1L)
-    graft.sinks.Snapshot.branch(s, root, "feed", "prod")
-    val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long)]
-    val q = graft.streaming.EventStream.snapshotBranchSink(
-        in.toDF.toDF("k", "v"), root, "orders_live", Seq("k"), "feed")
-      .option("checkpointLocation", ckpt).start()
-    try {
-      in.addData(batch1)
-      q.processAllAvailable()
-      in.addData(batch2)
-      q.processAllAvailable()
-    } finally q.stop()
-    val prodBefore = graft.sinks.Snapshot.tagVersion(s, root, "prod")
-    require(prodBefore == 1L,
-      s"stream branch publish: prod moved during the stream (v$prodBefore)")
-    graft.sinks.Snapshot.mergeRef(s, root, "feed", "prod")
-    val nVers = graft.sinks.Snapshot.currentVersion(s, root)
-    graft.sinks.Snapshot.readTag(s, root, "orders_live", "prod")
-      .select(col("k"), col("v"),
-        lit(prodBefore).as("prod_before"), lit(nVers).as("n_versions"))
-      .orderBy("k")
-  }
-
-  /** D30 (r16): streaming quality-gated corpus ingest
-   * ([[graft.streaming.EventStream.qualityGateSink]]) — the C90
-   * classifier and C89 repetition kernels scoring each micro-batch
-   * inline and splitting accept/reject: the live form of the batch
-   * quality chain, driven through the real checkpointed sink in two
-   * batches (even doc_ids, then odd — every doc streamed exactly
-   * once) with the C89 repetition plant riding along. The query reads
-   * BOTH sinks back and emits every doc's score, repetition ppm, and
-   * verdict; DuckDB replays both kernels and the gate over the same
-   * planted corpus — the stream adds delivery, not math. */
-  private def qStreamQualityGate(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    implicit val sql: org.apache.spark.sql.SQLContext = s.sqlContext
-    val slice = t(s, dir, "documents")
-      .withColumn("rtext", when(col("doc_id") % 9 === 0,
-        concat(col("text"), expr("repeat(' buy cheap now', 12)")))
-        .otherwise(col("text")))
-      .select("doc_id", "rtext").as[(Long, String)].collect().sortBy(_._1)
-    val b1 = slice.filter(_._1 % 2 == 0).toSeq
-    val b2 = slice.filter(_._1 % 2 == 1).toSeq
-    val base = s"${graft.Scratch.root(s)}/qgate_${sinkSeq.incrementAndGet()}"
-    val (accept, reject, ckpt) = (s"$base/accept", s"$base/reject", s"$base/ckpt")
-    val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)]
-    val q = graft.streaming.EventStream.qualityGateSink(
-        in.toDF.toDF("doc_id", "rtext"), "doc_id", "rtext", accept, reject,
-        seed = 1442695040888963407L)
-      .option("checkpointLocation", ckpt).start()
-    try {
-      in.addData(b1)
-      q.processAllAvailable()
-      in.addData(b2)
-      q.processAllAvailable()
-    } finally q.stop()
-    s.read.parquet(accept).unionByName(s.read.parquet(reject))
-      .select(col("doc_id"), col("score"), col("top2_ppm"), col("accepted"))
-      .orderBy("doc_id")
-  }
-
-  /** D31 (r16): streaming near-duplicate gate
-   * ([[graft.streaming.EventStream.nearDupGateSink]]) — C37's
-   * incremental cross-batch dedup live: two real checkpointed
-   * micro-batches split at the id midpoint — batch ids MONOTONE
-   * across batches, the arrival contract under which the streamed
-   * verdict union equals one full-batch keep-first run (new docs get
-   * new ids; an out-of-order smaller-id arrival cannot retire an
-   * already-final verdict — that is a rebuild, the C37 contract, and
-   * exactly why the parity split would NOT oracle against the full
-   * run). Each batch dedups within itself and against the
-   * accumulated text-free shingle state; the oracle replays the full
-   * run in string space (the C2 keep-table SQL, same LSH-recall
-   * hedge). */
-  private def qStreamNeardupGate(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    implicit val sql: org.apache.spark.sql.SQLContext = s.sqlContext
-    val slice = t(s, dir, "documents")
-      .select(col("doc_id"), coalesce(col("text"), lit("")).as("text"))
-      .as[(Long, String)].collect().sortBy(_._1)
-    val mid = (slice.head._1 + slice.last._1) / 2
-    val b1 = slice.filter(_._1 <= mid).toSeq
-    val b2 = slice.filter(_._1 > mid).toSeq
-    val base = s"${graft.Scratch.root(s)}/ndgate_${sinkSeq.incrementAndGet()}"
-    val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)]
-    val q = graft.streaming.EventStream.nearDupGateSink(
-        in.toDF.toDF("doc_id", "text"), "doc_id", "text",
-        s"$base/accept", s"$base/state", s"$base/verdict")
-      .option("checkpointLocation", s"$base/ckpt").start()
-    try {
-      in.addData(b1)
-      q.processAllAvailable()
-      in.addData(b2)
-      q.processAllAvailable()
-    } finally q.stop()
-    // the accept sink must be exactly the keep=true verdicts
-    val nAccept = s.read.parquet(s"$base/accept").count()
-    val v = s.read.parquet(s"$base/verdict")
-    require(nAccept == v.filter(col("keep")).count(),
-      s"near-dup gate: accept sink diverged from the verdicts")
-    // keep (not n_dups_smaller) is what the increment≡full-run
-    // contract guarantees: cross-generation partner COUNTS see raw
-    // state docs where the full run sees exact-collapsed reps, so the
-    // counts can differ while every verdict agrees (the C37
-    // equivalence row compares keep for exactly this reason)
-    v.select(col("doc_id"), col("keep")).orderBy("doc_id")
-  }
-
-  /** D14 (r14): streaming version-guarded upsert
-   * ([[graft.streaming.EventStream.versionedUpsertSink]]) — the A18
-   * LWW merge driven through the REAL checkpointed sink with the
-   * batches deliberately OUT OF ORDER across micro-batches: the newer
-   * versions stream first, the full older backfill second, and the
-   * serving table must converge to the same end state
-   * q_upsert_versioned reaches (the oracle is the same SQL). Driver
-   * state is the bounded changelog slice (the D12/D13 precedent). */
-  private def qUpsertVersionedStream(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    implicit val sql: org.apache.spark.sql.SQLContext = s.sqlContext
-    val slice = t(s, dir, "orders")
-      .filter(col("o_orderkey") % 37 === 0)
-      .select(col("o_orderkey").as("k"), cents(col("o_totalprice")).as("v"))
-      .as[(Long, Long)].collect().sortBy(_._1)
-    val newer = slice.collect { case (k, v) if k % 3 == 0 => (k, v, 2L) }
-    val older = slice.map { case (k, v) => (k, v + 5L, 1L) }
-    val base = s"${graft.Scratch.root(s)}/vup_sink_${sinkSeq.incrementAndGet()}"
-    val (table, ckpt) = (s"$base/table", s"$base/ckpt")
-    val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long, Long)]
-    val q = graft.streaming.EventStream.versionedUpsertSink(
-        in.toDF.toDF("k", "v", "ver"), table, Seq("k"), "ver")
-      .option("checkpointLocation", ckpt).start()
-    try {
-      in.addData(newer.toSeq)
-      q.processAllAvailable()
-      in.addData(older.toSeq)
-      q.processAllAvailable()
-    } finally q.stop()
-    s.read.parquet(table).select(col("k"), col("v"), col("ver")).orderBy("k")
-  }
-
-  /** D18 (r14): snapshot-versioned stream enrichment
-   * ([[graft.streaming.EventStream.snapshotEnrichSink]]) — a stream
-   * enriched against a dimension REPUBLISHED mid-stream through the
-   * A19 snapshot: batch 1 (even keys) must carry v1 labels, then the
-   * dim flips atomically, and batch 2 (odd keys) must carry v2's
-   * rewritten labels plus the new version stamp — no restart, no torn
-   * dim, every row auditable to the dim state that enriched it. The
-   * oracle replays the batch→version mapping in SQL. */
-  private def qSnapshotEnrichStream(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    implicit val sql: org.apache.spark.sql.SQLContext = s.sqlContext
-    val base = s"${graft.Scratch.root(s)}/snap_enrich_${sinkSeq.incrementAndGet()}"
-    val (root, out, ckpt) = (s"$base/dim", s"$base/out", s"$base/ckpt")
-    val nation = t(s, dir, "nation").select(col("n_nationkey"), col("n_name"))
-    graft.sinks.Snapshot.publish(s, root, Map("nation" -> nation))
-    val slice = t(s, dir, "customer").filter(col("c_custkey") % 53 === 0)
-      .select(col("c_custkey"), col("c_nationkey"))
-      .as[(Long, Long)].collect().sortBy(_._1)
-    val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long)]
-    val q = graft.streaming.EventStream.snapshotEnrichSink(
-        in.toDF.toDF("c_custkey", "c_nationkey"), root, "nation",
-        "c_nationkey", "n_nationkey", out)
-      .option("checkpointLocation", ckpt).start()
-    try {
-      in.addData(slice.filter(_._1 % 2 == 0).toSeq)
-      q.processAllAvailable()
-      graft.sinks.Snapshot.publish(s, root, Map("nation" ->
-        nation.withColumn("n_name", concat(col("n_name"), lit("#2")))))
-      in.addData(slice.filter(_._1 % 2 == 1).toSeq)
-      q.processAllAvailable()
-    } finally q.stop()
-    s.read.parquet(out)
-      .select(col("c_custkey"), col("c_nationkey"), col("n_name"),
-        col("dim_version"))
-      .orderBy("c_custkey")
-  }
-
-  /** A24 (r14): gated publish ([[graft.sinks.Snapshot.publishChecked]])
-   * — attempt 1 publishes a consistent fact+dim pair under an FK rule
-   * and must flip; attempt 2 writes a TORN extract (dim missing the
-   * high nations) and must count every dangling fact key and REFUSE
-   * the flip — readers keep serving v1. The abort path is A19's
-   * crashed-publish invisibility: no flip, no torn read, orphan
-   * overwritten by the next publish. */
-  private def qPublishGate(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val root = s"${graft.Scratch.root(s)}/gate_${sinkSeq.incrementAndGet()}"
-    val facts = t(s, dir, "orders").filter(col("o_orderkey") % 7 === 0)
-      .select(col("o_orderkey"), col("o_custkey"),
-        cents(col("o_totalprice")).as("rev_cents"))
-    val dimFull = t(s, dir, "customer").select(col("c_custkey"), col("c_nationkey"))
-    val rules = Seq(graft.sinks.Snapshot.FkCheck(
-      "orders", "o_custkey", "customer", "c_custkey"))
-    val (v1, ok1, rep1) = graft.sinks.Snapshot.publishChecked(s, root,
-      Map("orders" -> facts, "customer" -> dimFull), rules)
-    val (v2, ok2, rep2) = graft.sinks.Snapshot.publishChecked(s, root,
-      Map("orders" -> facts,
-        "customer" -> dimFull.filter(col("c_nationkey") < 13)), rules)
-    val cur = graft.sinks.Snapshot.currentVersion(s, root)
-    Seq((1L, v1, ok1, rep1.head._2, cur), (2L, v2, ok2, rep2.head._2, cur))
-      .toDF("attempt", "candidate_version", "published", "fk_violations",
-        "current_version")
-      .orderBy("attempt")
-  }
-
-  /** D19 (batch side of the unified API): interval anti join
-   * ([[graft.streaming.EventStream.intervalAntiJoin]]) — clicks that
-   * did NOT convert to a purchase by the same user within the
-   * following hour (abandonment). In batch the watermark is a no-op
-   * and the operator degenerates to exact NOT EXISTS, which is
-   * precisely the oracle's formulation; StreamingSpec drives the same
-   * operator through micro-batches and checks watermark-final
-   * absence verdicts. */
-  private def qIntervalAnti(s: SparkSession, dir: String): DataFrame = {
-    val ev = withEventTime(t(s, dir, "events"))
-    val clicks = ev.filter(col("event_type") === "click")
-      .select(col("event_id").as("click_id"), col("user_id").as("c_user"),
-        col("ts").as("c_ts"))
-    val purchases = ev.filter(col("event_type") === "purchase")
-      .select(col("user_id").as("p_user"), col("ts").as("p_ts"))
-    graft.streaming.EventStream.intervalAntiJoin(
-        clicks, purchases, "c_user", "p_user", "c_ts", "p_ts",
-        window = "1 hour")
-      .select(col("click_id"), col("c_user").as("user_id"))
-      .orderBy("click_id")
-  }
-
-  /** D20 (batch side of the unified API): streaming clamped balance
-   * ([[graft.streaming.EventStream.clampedBalanceStream]]) — the B94
-   * wallet as an online state machine (decline THIS withdrawal now),
-   * run in batch where the group call sees each key's full history in
-   * order. The oracle replays B94's closed form PER MOVEMENT — the
-   * sequential state machine and the prefix-min identity must agree
-   * on every row, which is exactly the claim that makes the batch and
-   * streaming forms one operator. */
-  private def qClampedBalanceStream(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val moves = withEventTime(t(s, dir, "events"))
-      .filter(col("event_type").isin("purchase", "signup", "view", "error"))
-      .select(col("user_id"), col("event_id"), col("ts"),
-        when(col("event_type").isin("purchase", "signup"), cents(col("value")))
-          .otherwise(-cents(col("value"))).as("delta_cents"))
-      .as[graft.streaming.WalletDelta]
-    graft.streaming.EventStream.clampedBalanceStream(moves)
-      .toDF().orderBy("event_id")
-  }
-
-  /** D22 (batch side of the unified API): per-key per-window rate cap
-   * ([[graft.streaming.EventStream.rateCapStream]]) — every event's
-   * arrival ordinal within its (user, hour) slot plus the admitted
-   * verdict at cap 3; the rejected half is emitted too (the B94
-   * rejected-ledger rule). In batch each slot's full history arrives
-   * sorted, so the verdicts equal the row_number() ≤ N formulation
-   * the oracle replays; StreamingSpec pins the cross-micro-batch
-   * counter continuity. */
-  private def qRateCap(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val ev = withEventTime(t(s, dir, "events"))
-      .select(col("user_id"), col("event_id"), col("ts"), col("event_type"),
-        col("value"))
-      .as[graft.streaming.Event]
-    graft.streaming.EventStream
-      .rateCapStream(ev, windowUs = 3600000000L, maxPerWindow = 3)
-      .toDF()
-      .select(col("user_id"), col("event_id"), col("win_start_us"),
-        col("seq_in_window"), col("admitted"))
-      .orderBy("event_id")
-  }
-
-  /** D23 (batch side of the unified API): live time-bounded funnel
-   * ([[graft.streaming.EventStream.funnelStream]]) — B106's funnel as
-   * an online per-user state machine (three timestamps of state,
-   * never retained events); in batch each user's full history arrives
-   * in event-time order, so the one row per user equals the
-   * first-qualifying-event formulation the oracle replays.
-   * StreamingSpec pins cross-batch state and window enforcement. */
-  private def qFunnelLive(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val ev = withEventTime(t(s, dir, "events"))
-      .select(col("user_id"), col("event_id"), col("ts"), col("event_type"),
-        col("value"))
-      .as[graft.streaming.Event]
-    graft.streaming.EventStream
-      .funnelStream(ev, clickWithinUs = 3600000000L,
-        purchaseWithinUs = 86400000000L)
-      .toDF()
-      .select(col("user_id"), col("stage"), col("vt_us"), col("ct_us"),
-        col("pt_us"))
-      .orderBy("user_id")
-  }
-
-  /** D24 (batch side of the unified API): as-of enrichment — every
-   * purchase stamped with the user's latest prior view
-   * ([[graft.streaming.EventStream.asofEnrichStream]]: state = ONE
-   * remembered view per user, never an event buffer). Batch mode
-   * replays full per-user histories in (ts, event_id) order, so the
-   * output is the exact batch as-of relation; the oracle replays it
-   * as a last-non-null window over the same total order.
-   * StreamingSpec pins cross-batch state carry. */
-  /** D27 (r14): streaming duplicate-payment alarm
-   * ([[graft.streaming.EventStream.dupPaymentStream]]) — B112's
-   * AP-fraud screen online: a payment repeating another's exact
-   * (customer, cents) within 30 days alarms as it arrives. Pairing is
-   * the per-key LAG relation (latest prior), so state is two longs
-   * per active key, evicted past the window. Same planted duplicates
-   * as B112; batch mode = the exact per-key lag relation the oracle
-   * replays. */
-  private def qDupAlarm(s: SparkSession, dir: String): DataFrame = {
-    val base = t(s, dir, "orders")
-      .select(col("o_orderkey").cast("long").as("okey"), col("o_custkey"),
-        cents(col("o_totalprice")).as("c"),
-        col("o_orderdate").cast("date").as("d"))
-    val planted = base.filter(col("okey") % 100 === 0L)
-      .select((col("okey") + 10000000L).as("okey"), col("o_custkey"),
-        col("c"), date_add(col("d"), 2).as("d"))
-    val tagged = base.unionByName(planted)
-      .withColumn("ts", col("d").cast("timestamp"))
-    graft.streaming.EventStream.dupPaymentStream(tagged,
-        "o_custkey", "okey", "c", "ts", windowUs = 30L * 86400L * 1000000L)
-      .toDF()
-      .orderBy("cust", "cents", "key_dup")
-  }
-
-  /** D26 (r14): streaming order reconciliation
-   * ([[graft.streaming.EventStream.reconcileStream]]) — B115's
-   * close-of-books audit run online: headers and line items
-   * interleaved on one stream, each order's verdict emitted when its
-   * event-time horizon closes. Per-order state is four longs (sums
-   * commute — arrival order across micro-batches is irrelevant), so
-   * the batch twin here is exactly the B115 per-order relation; the
-   * query closes with a one-row rollup the oracle recomputes from
-   * scratch. */
-  private def qReconcileLive(s: SparkSession, dir: String): DataFrame = {
-    val headers = t(s, dir, "orders").select(
-      col("o_orderkey").as("okey"), lit("H").as("kind"),
-      cents(col("o_totalprice")).as("cents"),
-      col("o_orderdate").cast("timestamp").as("ts"))
-    val lines = t(s, dir, "lineitem").select(
-      col("l_orderkey").as("okey"), lit("L").as("kind"),
-      expr("""(CAST(round(l_extendedprice * 100, 0) AS BIGINT)
-            * (100 - CAST(round(l_discount * 100, 0) AS BIGINT))
-            * (100 + CAST(round(l_tax * 100, 0) AS BIGINT))) div 10000""")
-        .as("cents"),
-      col("l_shipdate").cast("timestamp").as("ts"))
-    graft.streaming.EventStream.reconcileStream(
-        headers.unionByName(lines), "okey", "kind", "cents", "ts",
-        horizonUs = 365L * 86400L * 1000000L)
-      .toDF()
-      .agg(count(lit(1)).as("n_orders"),
-        sum(when(col("abs_diff") === 0L, 1L).otherwise(0L)).as("n_exact"),
-        sum("abs_diff").as("sum_abs_diff"), max("abs_diff").as("max_abs_diff"),
-        sum(when(col("header_cents").isNull, 1L).otherwise(0L))
-          .as("n_headerless"))
-  }
-
-  /** D25 (r14): live peak-concurrency gauge
-   * ([[graft.streaming.EventStream.concurrencyStream]]) — the
-   * streaming twin of the B63 batch sweep: per-hour peak open
-   * sessions, emitted as each hour's watermark closes. The batch
-   * sweep's carry-in chain is unusable online, so the stream clips
-   * every interval into self-contained per-bucket pieces (each piece
-   * opens AND closes inside its bucket; boundary −1s belong to the
-   * bucket they close; −1 before +1 at equal instants) — levels
-   * identical to the batch sweep at every instant, per-bucket state
-   * bounded by the bucket's own traffic. Batch mode = the exact
-   * relation; the oracle replays the piece decomposition
-   * independently in SQL. */
-  private def qConcurrencyLive(s: SparkSession, dir: String): DataFrame = {
-    val hourUs = 3600L * 1000000L
-    val ev = withEventTime(t(s, dir, "events")).select(col("ts"))
-    graft.streaming.EventStream.concurrencyStream(ev, "ts", hourUs, hourUs)
-      .toDF()
-      .select(col("bucket").as("hour_idx"), col("peak"), col("n_pieces"))
-      .orderBy("hour_idx")
-  }
-
-  private def qStreamAsof(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val ev = withEventTime(t(s, dir, "events"))
-      .select(col("user_id"), col("event_id"), col("ts"), col("event_type"),
-        col("value"))
-      .as[graft.streaming.Event]
-    graft.streaming.EventStream.asofEnrichStream(ev)
-      .toDF()
-      .select(col("user_id"), col("event_id"), col("ts_us"),
-        col("view_ts_us"), col("view_cents"))
-      .orderBy("event_id")
-  }
-
-  /** D21 (batch side of the unified API): per-session pattern
-   * matching ([[graft.streaming.EventStream.patternSessions]]) —
-   * B97's regex applied the way a monitor consumes it: per
-   * gap-closed SESSION, emitted at close. Batch mode replays full
-   * histories; the oracle rebuilds sessionization (the D2 ms-space
-   * replay), the ordered symbol strings, and both regex verdicts. */
-  private def qPatternSessions(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val ev = withEventTime(t(s, dir, "events"))
-      .select(col("user_id"), col("event_id"), col("ts"), col("event_type"),
-        col("value"))
-      .as[graft.streaming.Event]
-    graft.streaming.EventStream.patternSessions(ev, "v[^e]*p")
-      .toDF()
-      .select(col("user_id"),
-        unix_micros(col("session_start")).as("session_start_us"),
-        unix_micros(col("session_end")).as("session_end_us"),
-        col("seq"), col("truncated"), col("matched"), col("n_matches"))
-      .orderBy("user_id", "session_start_us")
-  }
-
-  /** B7: approximate distinct (HLL) per event type — the sketch value
-   * has no SQL oracle, so the query emits the exact count plus the
-   * deterministic "HLL within 10% of exact" invariant, both of which
-   * the oracle hash-checks. */
-  private def qApproxDistinct(s: SparkSession, dir: String): DataFrame =
-    withEventTime(t(s, dir, "events"))
-      .groupBy("event_type")
-      .agg(
-        approx_count_distinct("user_id").as("approx"),
-        countDistinct("user_id").as("exact_users"))
-      .select(col("event_type"), col("exact_users"),
-        (abs(col("approx") - col("exact_users")) * 10L <= col("exact_users")).as("within_10pct"))
-      .orderBy("event_type")
-
-  /** D8 (batch side of the unified API): windowed approximate
-   * distinct — the same `EventStream.approxDistinctStream` plan run
-   * in batch (StreamingSpec drives it incrementally and checks
-   * cross-micro-batch sketch-merge state). B7's oracle pattern: the
-   * HLL value itself has no SQL oracle, so the query joins the exact
-   * windowed COUNT(DISTINCT) and emits the deterministic error band,
-   * both of which the oracle hash-checks. Unlike B7's 5 large groups,
-   * hourly windows have single-digit cardinalities where HLL's ±1 can
-   * exceed any relative bound — the band is
-   * |approx − exact| ≤ max(1, exact/10) (relative bound + the
-   * standard small-count absolute floor), at sketch rsd 0.01 so the
-   * 10% band sits 10σ out and small windows resolve exactly in the
-   * sparse representation. */
-  private def qWindowedApproxDistinct(s: SparkSession, dir: String): DataFrame = {
-    val ev = withEventTime(t(s, dir, "events"))
-    val approx = graft.streaming.EventStream
-      .approxDistinctStream(ev, "1 hour", "10 minutes", rsd = 0.01)
-    val exact = ev
-      .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-      .agg(countDistinct("user_id").as("exact_users"))
-      .select(col("window.start").as("window_start"), col("event_type"),
-        col("exact_users"))
-    approx.join(exact, Seq("window_start", "event_type"))
-      .select(
-        date_format(col("window_start"), "yyyy-MM-dd HH:mm:ss").as("hour_start"),
-        col("event_type"), col("exact_users"),
-        (abs(col("approx_users") - col("exact_users")) * 10L <=
-          greatest(col("exact_users"), lit(10L))).as("within_band"))
-      .orderBy("hour_start", "event_type")
-  }
-
-  /** D4 (batch side of the unified API): interval join — the same
-   * `EventStream.intervalJoin` operator (purchase ← clicks in the
-   * preceding hour) run in batch, where the watermarks are no-ops and
-   * the time-range condition plans as an equi join on the key with a
-   * range residual; StreamingSpec drives the identical plan
-   * incrementally and checks state eviction. */
-  private def qIntervalJoin(s: SparkSession, dir: String): DataFrame = {
-    val ev = withEventTime(t(s, dir, "events"))
-    val purchases = ev.filter(col("event_type") === "purchase")
-      .select(col("user_id").as("p_user"), col("event_id").as("p_id"),
-        col("ts").as("p_ts"))
-    val clicks = ev.filter(col("event_type") === "click")
-      .select(col("user_id").as("c_user"), col("event_id").as("c_id"),
-        col("ts").as("c_ts"))
-    graft.streaming.EventStream.intervalJoin(purchases, clicks,
-        "p_user", "c_user", "p_ts", "c_ts", lookback = "1 hour")
-      .select(col("p_id"), col("c_id"))
-      .orderBy("p_id", "c_id")
-  }
-
-  /** D4 outer mode: the same interval join run left_outer, so
-   * purchases with NO click in the preceding hour survive null-padded
-   * (the unattributed-purchase rows an attribution pipeline must not
-   * silently drop). In batch the outer rows emit directly; under
-   * streaming Spark holds them until the watermark proves no match can
-   * still arrive (StreamingSpec covers the null-emission timing). */
-  private def qIntervalJoinOuter(s: SparkSession, dir: String): DataFrame = {
-    val ev = withEventTime(t(s, dir, "events"))
-    val purchases = ev.filter(col("event_type") === "purchase")
-      .select(col("user_id").as("p_user"), col("event_id").as("p_id"),
-        col("ts").as("p_ts"))
-    val clicks = ev.filter(col("event_type") === "click")
-      .select(col("user_id").as("c_user"), col("event_id").as("c_id"),
-        col("ts").as("c_ts"))
-    graft.streaming.EventStream.intervalJoin(purchases, clicks,
-        "p_user", "c_user", "p_ts", "c_ts", lookback = "1 hour",
-        joinType = "left_outer")
-      .select(col("p_id"), col("c_id"))
-      .orderBy(col("p_id"), col("c_id").asc_nulls_first)
-  }
-
-  /** C38: snapshot diff (operators/Profile.snapshotDiff) — classify
-   * every key across two deterministic "versions" of the orders table
-   * (old drops keys ≡0 mod 7; new drops ≡0 mod 5 and bumps totals
-   * ≡0 mod 3 by one cent) as added/removed/changed/unchanged. The
-   * oracle replays the same construction with a value-compare FULL
-   * OUTER JOIN, so the hash check proves the row-hash diff classifies
-   * identically to direct comparison. */
-  private def qSnapshotDiff(s: SparkSession, dir: String): DataFrame = {
-    val base = t(s, dir, "orders")
-      .select(col("o_orderkey"), cents(col("o_totalprice")).as("total_cents"),
-        col("o_orderstatus"))
-    val old = base.filter(pmod(col("o_orderkey"), lit(7)) =!= 0)
-    val nw = base.filter(pmod(col("o_orderkey"), lit(5)) =!= 0)
-      .withColumn("total_cents",
-        when(pmod(col("o_orderkey"), lit(3)) === 0, col("total_cents") + 1L)
-          .otherwise(col("total_cents")))
-    graft.operators.Profile.snapshotDiff(old, nw, Seq("o_orderkey"),
-        Seq("total_cents", "o_orderstatus"))
-      .groupBy("status").agg(count(lit(1)).as("n_keys"))
-      .orderBy("status")
-  }
-
-  /** B13: skew-salted join (operators/Skew.saltedJoin) — the
-   * (key, salt) fan-out join must produce EXACTLY the rows of the
-   * plain join (each probe row matches the one build replica carrying
-   * its salt). The oracle replays the UNSALTED join + aggregate in
-   * SQL, so the hash check proves the salt/replica bookkeeping
-   * neither drops nor duplicates rows. */
-  private def qSaltedJoin(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Skew.saltedJoin(
-        t(s, dir, "orders"), t(s, dir, "customer"),
-        "o_custkey", "c_custkey", saltFactor = 8, saltBy = Seq("o_orderkey"))
-      .groupBy("c_mktsegment")
-      .agg(count(lit(1)).as("n_orders"),
-        sum(cents(col("o_totalprice"))).as("rev_cents"))
-      .orderBy("c_mktsegment")
-
-  /** D3 (batch side of the unified API): streaming exact dedup — the
-   * same `EventStream.dedupStream` (dropDuplicatesWithinWatermark)
-   * run in batch, where the watermark is a no-op and the state-bounded
-   * streaming dedup degenerates to exact distinct. Keys only in the
-   * output: the operator keeps ONE arbitrary row per key, so
-   * projecting the key set is what is deterministic cross-engine. */
-  private def qStreamDedup(s: SparkSession, dir: String): DataFrame =
-    graft.streaming.EventStream.dedupStream(
-        withEventTime(t(s, dir, "events")), Seq("user_id", "event_type"))
-      .select(col("user_id"), col("event_type"))
-      .orderBy("user_id", "event_type")
-
-  /** D5 (batch side of the unified API): stream-static enrichment —
-   * the same `EventStream.enrichStream` broadcast left join run in
-   * batch (events ⋈ customer dimension; unmatched users keep the
-   * row, the late-dimension-update guarantee). */
-  private def qStreamEnrich(s: SparkSession, dir: String): DataFrame = {
-    val ev = withEventTime(t(s, dir, "events"))
-      .select(col("event_id"), col("user_id"))
-    val dim = t(s, dir, "customer").select(col("c_custkey"), col("c_mktsegment"))
-    graft.streaming.EventStream.enrichStream(ev, dim, "user_id", "c_custkey")
-      .select(col("event_id"), col("user_id"), col("c_mktsegment"))
-      .orderBy("event_id")
-  }
-
-  /** D6 (batch side of the unified API): keyed upsert sink — the same
-   * [[graft.sinks.TableSink.upsert]] the streaming `upsertSink` calls
-   * once per trigger, driven over a deterministic 3-batch delta
-   * sequence (batch b carries keys with o_orderkey%4 ∈ {b, 3}, so the
-   * %4==3 keys are UPDATED twice and everything else inserts once).
-   * The final serving table must equal a MERGE replay: last writer
-   * wins per key, no row lost, no row duplicated. The sequence is
-   * idempotent, so a bench re-execution over the surviving scratch
-   * table converges to the same state. */
-  private def qUpsert(s: SparkSession, dir: String): DataFrame = {
-    val orders = t(s, dir, "orders")
-      .select(col("o_orderkey"), cents(col("o_totalprice")).as("base_cents"))
-    val path = s"${graft.Scratch.root(s)}/upsert_${new java.io.File(dir).getName}"
-    for (b <- 0 to 2) {
-      val delta = orders
-        .filter(col("o_orderkey") % 4 === b || col("o_orderkey") % 4 === 3)
-        .select(col("o_orderkey"),
-          (col("base_cents") + b).as("upd_cents"),
-          lit(b.toLong).as("src_batch"))
-      graft.sinks.TableSink.upsert(s, path, delta, Seq("o_orderkey"))
-    }
-    s.read.parquet(path).orderBy("o_orderkey")
-  }
-
-  /** A18 (r14): version-guarded upsert (TableSink.upsertVersioned) —
-   * last-writer-wins MERGE for OUT-OF-ORDER feeds: the newer batch
-   * (ver 2, every third key) is applied FIRST and a full older
-   * backfill (ver 1) arrives after it; order-trusting upsert would
-   * regress those keys, the version guard must not. Replays are
-   * convergent (LWW is commutative + idempotent), so the bench's
-   * repeated executions re-merge onto the same table harmlessly.
-   * Oracle computes the converged end state per key in SQL. */
-  private def qUpsertVersioned(s: SparkSession, dir: String): DataFrame = {
-    val orders = t(s, dir, "orders")
-      .select(col("o_orderkey").as("k"), cents(col("o_totalprice")).as("c"))
-    val path = s"${graft.Scratch.root(s)}/upsert_ver_${new java.io.File(dir).getName}"
-    val newer = orders.filter(col("k") % 3 === 0)
-      .select(col("k"), col("c"), lit(2L).as("ver"))
-    val older = orders.select(col("k"), (col("c") + 5L).as("c"), lit(1L).as("ver"))
-    graft.sinks.TableSink.upsertVersioned(s, path, newer, Seq("k"), "ver")
-    graft.sinks.TableSink.upsertVersioned(s, path, older, Seq("k"), "ver")
-    s.read.parquet(path).select("k", "c", "ver").orderBy("k")
-  }
-
-  /** A14: malformed-record quarantine (sources/CsvLines.scala) — the
-   * reference's line reader silently NULLs unparseable input
-   * (JSONReader.java:42-57); at 100 TB that silence is unbudgeted
-   * data loss. PERMISSIVE parse with a corrupt-record column keeps
-   * good rows typed, bad rows quarantined with their raw bytes. The
-   * query builds deterministic CSV lines (every 97th order gets an
-   * unparseable numeric field), parses, and emits parse results +
-   * quarantine; the oracle replays the conditional in SQL. */
-  private def qCsvQuarantine(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.types._
-    val lines = t(s, dir, "orders").select(col("o_orderkey").as("src_key"),
-      concat_ws(",", col("o_orderkey"), col("o_orderpriority"),
-        concat(when(col("o_orderkey") % 97 === 0, lit("x")).otherwise(lit("")),
-          cents(col("o_totalprice")))).as("line"))
-    val schema = StructType(Seq(StructField("k", LongType),
-      StructField("pr", StringType), StructField("v", LongType)))
-    graft.sources.CsvLines.parseWithQuarantine(lines, "line", schema)
-      .select("src_key", "k", "pr", "v", "is_corrupt", "quarantine")
-      .orderBy("src_key")
-  }
-
-  /** B53: date-partitioned fact layout + DYNAMIC partition pruning —
-   * the standard 100 TB ingest layout (one directory per day) plus
-   * the read-side payoff: joining against a filtered dimension prunes
-   * the fact scan to matching partitions AT RUNTIME (Catalyst inserts
-   * a dynamicpruning subquery on the partition column from the
-   * broadcast side — LayoutSpec asserts it fires; a static filter
-   * can't express "the dates the dim selects"). The query writes the
-   * events table date-partitioned to scratch, joins it with a
-   * deterministic dim slice (every 5th day-of-month), and aggregates;
-   * the oracle replays the join-as-filter on the raw table — equal
-   * results prove the pruned scan lost no rows. */
-  private def qPartitionPrune(s: SparkSession, dir: String): DataFrame = {
-    val path = s"${graft.Scratch.root(s)}/part_events_${new java.io.File(dir).getName}"
-    val ev = withEventTime(t(s, dir, "events"))
-      .withColumn("event_date", col("ts").cast("date"))
-      .select(col("event_date"), cents(col("value")).as("c"))
-    graft.sinks.TableSink.writeTruncate(ev, path, partitionBy = Seq("event_date"))
-    val facts = s.read.parquet(path)
-    val dim = withEventTime(t(s, dir, "events"))
-      .select(col("ts").cast("date").as("d")).distinct()
-      .filter(dayofmonth(col("d")) % 5 === 0)
-    facts.join(broadcast(dim), facts("event_date") === dim("d"))
-      .groupBy("event_date")
-      .agg(count(lit(1)).as("n"), sum("c").as("sum_cents"))
-      .select(col("event_date").cast("string").as("event_date"),
-        col("n"), col("sum_cents"))
-      .orderBy("event_date")
-  }
-
-  /** A10c/D6 companion (r13): changelog (CDC) apply with deletes —
-   * [[graft.sinks.TableSink.applyCdc]] replays three deterministic
-   * Debezium-shaped batches over the orders table. Batch 0 bootstraps
-   * (every key upserted); batches 1–2 touch keys `k % 4 IN (b, 3)`
-   * and mark `k % 6 = b` as deletes, so the sequence exercises
-   * update-after-update, delete-after-update, AND re-insert-after-
-   * delete (e.g. key 7: upserted in 0, deleted in 1, re-upserted
-   * in 2). The oracle replays the changelog in SQL: final state =
-   * each key's max-batch touch, kept iff that touch was an upsert. */
-  private def qCdcApply(s: SparkSession, dir: String): DataFrame = {
-    val orders = t(s, dir, "orders")
-      .select(col("o_orderkey"), cents(col("o_totalprice")).as("base_cents"))
-    val path = s"${graft.Scratch.root(s)}/cdc_${new java.io.File(dir).getName}"
-    for (b <- 0 to 2) {
-      val touched =
-        if (b == 0) orders
-        else orders.filter(col("o_orderkey") % 4 === b || col("o_orderkey") % 4 === 3)
-      val delta = touched.select(
-        col("o_orderkey"),
-        (col("base_cents") + b).as("upd_cents"),
-        lit(b.toLong).as("src_batch"),
-        when(lit(b) > 0 && col("o_orderkey") % 6 === b, "D").otherwise("U").as("_op"))
-      graft.sinks.TableSink.applyCdc(s, path, delta, Seq("o_orderkey"))
-    }
-    s.read.parquet(path).orderBy("o_orderkey")
-  }
-
-  /** A10d (r13): partition-tree compaction —
-   * [[graft.sinks.TableSink.compactPartitioned]] rewrites each
-   * `col=value` leaf of a date-partitioned fact independently (plain
-   * `compact` rejects partitioned layouts). The query plants a
-   * deliberately fragmented layout (round-robin repartition(6) before
-   * a partitionBy write → ~6 small files per date), compacts every
-   * leaf to one file, and re-aggregates from the compacted table; the
-   * oracle replays the aggregate on the RAW events table, so equality
-   * proves the rewrite preserved every row. MaintenanceSpec asserts
-   * the file mechanics (counts drop, layout/pruning intact). */
-  private def qCompactPartitioned(s: SparkSession, dir: String): DataFrame = {
-    val path = s"${graft.Scratch.root(s)}/compactp_${new java.io.File(dir).getName}"
-    val ev = withEventTime(t(s, dir, "events"))
-      .withColumn("event_date", col("ts").cast("date"))
-      .select(col("event_date"), col("event_id"), cents(col("value")).as("c"))
-    graft.sinks.TableSink.writeTruncate(
-      ev.repartition(6), path, partitionBy = Seq("event_date"))
-    graft.sinks.TableSink.compactPartitioned(s, path): Unit
-    s.read.parquet(path)
-      .groupBy("event_date")
-      .agg(count(lit(1)).as("n"), sum("c").as("sum_cents"),
-        sum("event_id").as("sum_ids"))
-      .select(col("event_date").cast("string").as("event_date"),
-        col("n"), col("sum_cents"), col("sum_ids"))
-      .orderBy("event_date")
-  }
-
-  /** B56 (r13): time-weighted average — the state-duration aggregate
-   * (mean price/latency/level while it HELD, not per observation;
-   * sensor and pricing pipelines need this, plain AVG is wrong when
-   * sampling is irregular). Each event's value holds until the user's
-   * next event; weights are whole seconds and values cents, so the
-   * weighted sum is one exact integer per user and the final mean one
-   * integer division (milli-cents) — reduction-order-free, hence
-   * engine-replayable. One shuffle (window by user), no global sort.
-   * Overflow bound: cents·dur_s ≲ 1e12 per interval, 1e16 per user
-   * at 1e4 events/user — 600× under Long even at 100 TB row counts,
-   * because the sum is per-user, not global. */
-  private def qTimeWeighted(s: SparkSession, dir: String): DataFrame = {
-    val ev = withEventTime(t(s, dir, "events"))
-      .select(col("user_id"), col("event_id"), col("ts_us"),
-        cents(col("value")).as("c"))
-    val byUser = Window.partitionBy("user_id").orderBy("ts_us", "event_id")
-    ev.withColumn("next_us", lead("ts_us", 1).over(byUser))
-      .filter(col("next_us").isNotNull)
-      .withColumn("dur_s", expr("(next_us - ts_us) div 1000000"))
-      .groupBy("user_id")
-      .agg(sum(expr("c * dur_s")).as("num"), sum("dur_s").as("den"))
-      .filter(col("den") > 0)
-      .select(col("user_id"), col("num"), col("den"),
-        expr("(num * 1000) div den").as("twa_milli"))
-      .orderBy("user_id")
-  }
-
-  /** D11 (r13): late-data audit — the batch replay of watermark
-   * semantics, as a DEAD-LETTER SPLIT instead of Spark's silent
-   * streaming drop: which rows would a 30-minute watermark discard,
-   * and by how much did each miss it? Arrival order is modeled as
-   * event time plus a deterministic md5-derived ingestion delay of
-   * 0–7199 s (the testdata's ingest ids are perfectly time-ordered,
-   * so real lateness only appears under transport jitter); the
-   * watermark is per-key (user), the Kafka-partition-level shape that
-   * scales — a GLOBAL arrival window would funnel every row through
-   * one reducer. Window max over preceding arrivals, partitioned by
-   * user: one shuffle, bounded frame state. */
-  private def qLateEvents(s: SparkSession, dir: String): DataFrame = {
-    val allowedUs = 1800L * 1000000L
-    val ev = withEventTime(t(s, dir, "events"))
-      .select(col("user_id"), col("event_id"), col("ts_us"))
-      .withColumn("arr_us",
-        col("ts_us") + expr(
-          "conv(substring(md5(cast(event_id as string)), 1, 8), 16, 10)")
-          .cast("long") % 7200L * 1000000L)
-    val byArrival = Window.partitionBy("user_id").orderBy("arr_us", "event_id")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    ev.withColumn("wm_us", max("ts_us").over(byArrival) - allowedUs)
-      .filter(col("wm_us").isNotNull && col("ts_us") < col("wm_us"))
-      .select(col("event_id"), col("user_id"), col("ts_us"),
-        (col("wm_us") - col("ts_us")).as("late_by_us"))
-      .orderBy("event_id")
-  }
-
-  /** A15 (r13): exactly-once incremental file ingest
-   * ([[graft.sources.IngestLedger.ingestIncremental]]) — six
-   * deterministic JSON arrivals ingested across two runs with a
-   * full idempotence replay in between (run 1: batches 0–3; rerun:
-   * must ingest 0; run 2: batches 4–5). The output listing is the
-   * ledger (deterministically-named per-file outputs + atomic
-   * staging rename), so the re-run can only skip or overwrite —
-   * never duplicate. The oracle aggregates the RAW events table:
-   * equality proves no arrival was lost or double-ingested. */
-  private def qIngest(s: SparkSession, dir: String): DataFrame = {
-    val root = s"${graft.Scratch.root(s)}/ingest_${new java.io.File(dir).getName}"
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    val ev = withEventTime(t(s, dir, "events"))
-      .select(col("event_id"), col("event_type"), cents(col("value")).as("c"))
-    def stageBatch(b: Int): Unit = {
-      val stage = s"$root/stage_$b"
-      ev.filter(col("event_id") % 6 === b).coalesce(1)
-        .write.mode("overwrite").json(stage)
-      val part = fs.listStatus(new org.apache.hadoop.fs.Path(stage))
-        .map(_.getPath).find(_.getName.startsWith("part-"))
-        .getOrElse(throw new IllegalStateException(s"no part file in $stage"))
-      val dest = new org.apache.hadoop.fs.Path(s"$root/in/batch_$b.json")
-      fs.mkdirs(dest.getParent)
-      fs.delete(dest, false)
-      if (!fs.rename(part, dest))
-        throw new java.io.IOException(s"stage rename failed for batch $b")
-    }
-    def ingest(): Int = graft.sources.IngestLedger.ingestIncremental(
-      s, s"$root/in", s"$root/out",
-      df => df.withColumn("is_purchase", col("event_type") === "purchase"),
-      suffix = ".json")
-    (0 until 4).foreach(stageBatch)
-    ingest(): Unit
-    val rerun = ingest() // idempotence: everything already ledgered
-    require(rerun == 0, s"re-run must ingest nothing, got $rerun")
-    (4 until 6).foreach(stageBatch)
-    ingest(): Unit
-    s.read.parquet(s"$root/out/part_*")
-      .groupBy("event_type")
-      .agg(count(lit(1)).as("n"), sum("c").as("sum_cents"),
-        sum(when(col("is_purchase"), 1L).otherwise(0L)).as("n_purchase"))
-      .orderBy("event_type")
-  }
-
-  /** B61 (r13): distribution drift audit — the ML-ops "did this
-   * week's data shift?" check (population-stability style), in exact
-   * integer space because PSI's Σ(p−q)·ln(p/q) drags in libm: two
-   * deterministic periods (day-of-month halves), equi-width value
-   * buckets ($20 in cents), per-bucket counts and ppm shares, and the
-   * absolute share drift — the max row IS the drift verdict. One
-   * scan, one bucket groupBy (map-side-combined), period totals via
-   * a broadcast 1-row aggregate. */
-  private def qDrift(s: SparkSession, dir: String): DataFrame = {
-    val ev = withEventTime(t(s, dir, "events"))
-      .select(
-        (dayofmonth(col("ts")) <= 15).as("is_a"),
-        (cents(col("value")) / 2000L).cast("long").as("bucket"))
-    val buckets = ev.groupBy("bucket").agg(
-      sum(when(col("is_a"), 1L).otherwise(0L)).as("n_a"),
-      sum(when(col("is_a"), 0L).otherwise(1L)).as("n_b"))
-    val totals = buckets.agg(sum("n_a").as("tot_a"), sum("n_b").as("tot_b"))
-    buckets.crossJoin(broadcast(totals))
-      .select(col("bucket"), col("n_a"), col("n_b"),
-        expr("n_a * 1000000 div tot_a").as("share_a_ppm"),
-        expr("n_b * 1000000 div tot_b").as("share_b_ppm"),
-        abs(expr("n_a * 1000000 div tot_a") - expr("n_b * 1000000 div tot_b"))
-          .as("drift_ppm"))
-      .orderBy("bucket")
-  }
-
-  /** C49 (r13): term co-occurrence association mining — which word
-   * pairs appear in the SAME document far more often than chance
-   * (market-basket lift over the corpus): C13 counts ADJACENT
-   * bigrams, this measures document-level association; lift is exact
-   * integer ppm (1e6·N·c_xy div (c_x·c_y)) — no logs, no floats —
-   * with a min-support floor so df-1 flukes can't top the list. The
-   * per-doc pair explode is C(tokens,2) bounded by doc length (the
-   * standard market-basket shape); counts map-side-combine and the
-   * top-20 is TakeOrdered, never a global sort. */
-  private def qCooccurrence(s: SparkSession, dir: String): DataFrame = {
-    val toks = t(s, dir, "documents")
-      .repartition(t(s, dir, "documents").sparkSession
-        .sparkContext.defaultParallelism)
-      // cap the per-doc distinct-token list: the pair explode is
-      // C(len, 2), so one pathological 1M-token doc would emit 5e11
-      // pairs — the 512 lexicographically-SMALLEST distinct tokens
-      // bound any doc's contribution at ~131k pairs (no-op on this
-      // corpus). Sorted-then-sliced on BOTH sides (r13 ADVICE): a
-      // first-occurrence cap would pin the truncation to Spark's
-      // array_distinct order, which DuckDB's list_distinct does not
-      // guarantee — order-independent truncation keeps the oracle
-      // valid the day a doc exceeds the cap
-      .select(col("doc_id"),
-        slice(array_sort(array_distinct(
-          filter(split(col("text"), "[ \t\n\r]+"), w => w =!= ""))), 1, 512)
-          .as("ws"))
-    val nDocs = toks.agg(count(lit(1)).as("n_docs"))
-    val termCnt = toks.select(explode(col("ws")).as("tok"))
-      .groupBy("tok").agg(count(lit(1)).as("c"))
-    val pairCnt = toks
-      .select(explode(expr(
-        """flatten(transform(ws, (x, i) ->
-             transform(slice(ws, i + 2, size(ws)), y ->
-               if(x < y, struct(x as t1, y as t2), struct(y as t1, x as t2)))))"""))
-        .as("p"))
-      .select(col("p.t1").as("t1"), col("p.t2").as("t2"))
-      .groupBy("t1", "t2").agg(count(lit(1)).as("c_xy"))
-      .filter(col("c_xy") >= 20)
-    pairCnt
-      .join(termCnt.select(col("tok").as("t1"), col("c").as("c_x")), "t1")
-      .join(termCnt.select(col("tok").as("t2"), col("c").as("c_y")), "t2")
-      .crossJoin(broadcast(nDocs))
-      .select(col("t1"), col("t2"), col("c_xy"), col("c_x"), col("c_y"),
-        expr("c_xy * n_docs * 1000000 div (c_x * c_y)").as("lift_ppm"))
-      .orderBy(col("lift_ppm").desc, col("t1"), col("t2"))
-      .limit(20)
-  }
-
-  /** B80 (r14): declarative data-quality constraint audit
-   * ([[graft.operators.Constraints.audit]]) — the dbt-tests/Deequ
-   * capability: NOT NULL / uniqueness / accepted-values / range /
-   * referential integrity over orders in one call, one output row
-   * per constraint with violation counts. All row-local constraints
-   * share ONE conditional-aggregate scan; uniqueness is one hash
-   * aggregate (total − distinct — the second-occurrence count, never
-   * a pair count); the FK check is one broadcast anti-join count.
-   * The constraint mix deliberately includes violated ones
-   * (duplicate custkeys, status 'P', custkeys above 99) so nonzero
-   * counting is exercised, plus clean ones proving no false
-   * positives. Oracle recomputes every row in SQL. */
-  private def qConstraintAudit(s: SparkSession, dir: String): DataFrame = {
-    import graft.operators.Constraints._
-    audit(t(s, dir, "orders"), Seq(
-      NotNull("o_orderpriority"),
-      Unique(Seq("o_orderkey")),
-      Unique(Seq("o_custkey")),
-      AcceptedValues("o_orderstatus", Seq("F", "O")),
-      InRange("o_custkey", 0L, 99L),
-      RefIntegrity("o_custkey", t(s, dir, "customer"), "c_custkey")))
-      .orderBy("constraint")
-  }
-
-  /** B60 (r13): functional-dependency / candidate-key audit
-   * ([[graft.operators.Profile.fdViolations]]) — four declared
-   * invariants of the TPC-H-ish schema checked in one result: a held
-   * FD (nation id → name), a held composite candidate key
-   * (orderkey, linenumber), a VIOLATED FD (customer's nation does
-   * not determine market segment), and a violated uniqueness
-   * (custkey is not an orders key). The audit a pipeline runs before
-   * trusting a join key or a dimension mapping. */
-  private def qFdAudit(s: SparkSession, dir: String): DataFrame = {
-    import graft.operators.Profile.fdViolations
-    val tests = Seq(
-      ("nation_name_fd",
-        fdViolations(t(s, dir, "nation"), Seq("n_nationkey"), Seq("n_name"))),
-      ("lineitem_pk",
-        fdViolations(t(s, dir, "lineitem"), Seq("l_orderkey", "l_linenumber"), Nil)),
-      ("cust_nation_to_segment",
-        fdViolations(t(s, dir, "customer"), Seq("c_nationkey"), Seq("c_mktsegment"))),
-      ("orders_custkey_unique",
-        fdViolations(t(s, dir, "orders"), Seq("o_custkey"), Nil)))
-    tests.map { case (name, df) => df.select(lit(name).as("test"), col("*")) }
-      .reduce(_ unionByName _)
-      .orderBy("test")
-  }
-
-  /** B59 (r13): session transition matrix — the Markov view of user
-   * journeys (which step follows which, within a session): B6 gives
-   * the sessions, B34 checks ONE fixed sequence; this emits the full
-   * first-order transition counts product analytics actually browses.
-   * Same 30-min-gap session definition as B6, one extra lead() on the
-   * already-sorted per-user window (no new shuffle beyond the user
-   * partition), transitions never cross a session boundary. */
-  private def qSessionTransitions(s: SparkSession, dir: String): DataFrame = {
-    val byUser = Window.partitionBy("user_id").orderBy("ts_us", "event_id")
-    val ev = withEventTime(t(s, dir, "events"))
-      .select(col("user_id"), col("event_id"), col("event_type"), col("ts_us"))
-      .withColumn("prev_us", lag("ts_us", 1).over(byUser))
-      .withColumn("new_sess",
-        when(col("prev_us").isNull ||
-          col("ts_us") - col("prev_us") > 1800L * 1000000L, 1L).otherwise(0L))
-      .withColumn("session_id",
-        sum("new_sess").over(byUser.rowsBetween(Window.unboundedPreceding, 0)))
-      .withColumn("next_type", lead("event_type", 1).over(byUser))
-      .withColumn("next_sess", lead("session_id", 1).over(byUser))
-    ev.filter(col("next_type").isNotNull && col("next_sess") === col("session_id"))
-      .groupBy(col("event_type").as("from_type"), col("next_type").as("to_type"))
-      .agg(count(lit(1)).as("n"))
-      .orderBy("from_type", "to_type")
-  }
-
-  /** B81 (r14): top session PATHS — the "top user journeys" panel:
-   * the full ordered event-type sequence per 30-min-gap session,
-   * counted corpus-wide, top 20. Complements B59's first-order
-   * transition matrix with the whole-path view (the Markov matrix
-   * can't distinguish A→B→A from A→B + B→A mixtures). Sessions ride
-   * the standard B6 lag/cumsum assignment; the per-session path is a
-   * sort_array over (ts, id, type) structs (deterministic order,
-   * per-session arrays — never a data-sized sort); the top-20 plans
-   * as TakeOrderedAndProject (per-partition top-k then a 20-row
-   * merge — no global sort of the path domain). */
-  private def qSessionPaths(s: SparkSession, dir: String): DataFrame = {
-    val byUser = Window.partitionBy("user_id").orderBy("ts_us", "event_id")
-    val ev = withEventTime(t(s, dir, "events"))
-      .select(col("user_id"), col("event_id"), col("event_type"), col("ts_us"))
-      .withColumn("prev_us", lag("ts_us", 1).over(byUser))
-      .withColumn("new_sess",
-        when(col("prev_us").isNull ||
-          col("ts_us") - col("prev_us") > 1800L * 1000000L, 1L).otherwise(0L))
-      .withColumn("session_id",
-        sum("new_sess").over(byUser.rowsBetween(Window.unboundedPreceding, 0)))
-    ev.groupBy("user_id", "session_id")
-      .agg(array_join(
-        transform(
-          sort_array(collect_list(struct(col("ts_us"), col("event_id"),
-            col("event_type")))),
-          e => e.getField("event_type")), "->").as("path"))
-      .groupBy("path")
-      .agg(count(lit(1)).as("n_sessions"))
-      .orderBy(col("n_sessions").desc, col("path"))
-      .limit(20)
-  }
-
-  /** B58 (r13): BFS shortest paths ([[graft.operators.Graph
-   * .shortestPaths]]) over the bipartite order–part graph (lineitem
-   * rows ARE the edges — no self-join needed to build the graph;
-   * part ids offset by 1e9 into a disjoint node space). Single source
-   * (min orderkey), 4 hops; the rollup (dist, n_nodes, sum_nodes) is
-   * fully discriminative of the per-node assignment. Oracle: a DuckDB
-   * RECURSIVE CTE replays the frontier expansion — set-semantics
-   * UNION bounds the recursion exactly like the anti join bounds the
-   * Spark frontier. */
-  private def qBfs(s: SparkSession, dir: String): DataFrame = {
-    val li = t(s, dir, "lineitem")
-      .select(col("l_orderkey").cast("long").as("o"),
-        (col("l_partkey").cast("long") + 1000000000L).as("p"))
-    val edges = li.select(col("o").as("a"), col("p").as("b"))
-      .unionByName(li.select(col("p").as("a"), col("o").as("b")))
-    val src = t(s, dir, "orders").agg(min(col("o_orderkey")).cast("long").as("snode"))
-    graft.operators.Graph.shortestPaths(edges, "a", "b", src, "snode", maxHops = 4)
-      .groupBy("dist")
-      .agg(count(lit(1)).as("n_nodes"), sum("node").as("sum_nodes"))
-      .orderBy("dist")
-  }
-
-  /** B57 (r13): last-touch marketing attribution — each purchase's
-   * revenue is credited to the channel (click/view/signup) of the
-   * user's most recent touch at or before the purchase, but only
-   * within a 24-hour lookback; no in-window touch → 'direct'. This is
-   * the documented tolerance composition of B15's as-of join (AsOf
-   * .scala: put the right time in the payload, filter the gap after),
-   * exercised end-to-end: one sort-merge-shaped carry-forward, never
-   * a per-purchase range probe. Touches are pre-deduplicated per
-   * (user, ts) with an arg-max on ingest id — the as-of contract's
-   * uniqueness requirement, made deterministic. */
-  private def qAttribution(s: SparkSession, dir: String): DataFrame = {
-    val lookbackUs = 24L * 3600L * 1000000L
-    val ev = withEventTime(t(s, dir, "events"))
-    val purchases = ev.filter(col("event_type") === "purchase")
-      .select(col("event_id"), col("user_id"), col("ts_us"),
-        cents(col("value")).as("rev_cents"))
-    val touches = ev.filter(col("event_type").isin("click", "view", "signup"))
-      .groupBy(col("user_id").as("t_user"), col("ts_us").as("t_ts_us"))
-      .agg(max(struct(col("event_id"), col("event_type")))
-        .getField("event_type").as("t_type"))
-    graft.operators.AsOf
-      .asofJoin(purchases, touches, "user_id", "t_user", "ts_us", "t_ts_us",
-        rightPayload = Seq("t_type", "t_ts_us"), outPrefix = "")
-      .withColumn("channel",
-        when(col("t_ts_us").isNotNull &&
-          col("ts_us") - col("t_ts_us") <= lookbackUs, col("t_type"))
-          .otherwise("direct"))
-      .groupBy("channel")
-      .agg(count(lit(1)).as("n_purchases"), sum("rev_cents").as("rev_cents"))
-      .orderBy("channel")
-  }
-
-  /** C48 (r13): exact set-similarity self-join via prefix filtering
-   * ([[graft.operators.SimJoin.jaccardSelfJoin]]) — every pair of
-   * documents whose 3-word-shingle Jaccard is >= 0.8, with NO
-   * probabilistic miss (the deterministic complement to C2's MinHash
-   * LSH). The oracle brute-forces the same definition in DuckDB
-   * (co-shingle pairs → intersection counts → integer threshold), so
-   * equality proves both the prefix filter's completeness (no pair
-   * lost to the candidate pruning) and the exact integer verify. */
-  private def qSimjoin(s: SparkSession, dir: String): DataFrame =
-    graft.operators.SimJoin
-      .jaccardSelfJoin(t(s, dir, "documents"), "doc_id", "text", tMilli = 800)
-      .orderBy("id1", "id2")
-
-  /** A12 (oracled, ADVICE r12): the CLI's end-to-end path — the same
-   * flatDenorm-with-lookups → TableSink.writeTruncate → read-back
-   * round trip `Run simple-with-lookups` drives — summarized through
-   * the C31 order-independent tableChecksum, so the driver's DuckDB
-   * replay value-checks the CLI surface instead of smoke-counting it.
-   * Doubles render engine-dependently, so money/quantity columns are
-   * checksummed in cents space and the date as its ISO string.
-   *
-   * Cost profile (VERDICT r15 #9): ~5.5 s at sf0.1, and the cost IS
-   * the contract under test — one flagship denorm compute (~2 s: the
-   * 3-table join + lookups that q_flat_denorm itself benches), one
-   * full parquet truncate-write of the 600k-row result, one complete
-   * read-back, and the order-independent full-table checksum (every
-   * column of every row hashed — by definition a second full pass).
-   * Nothing here is harness overhead: dropping any leg (write,
-   * read-back, or checksum) stops exercising the CLI surface the row
-   * exists to value-check. */
-  private def qCliRun(s: SparkSession, dir: String): DataFrame = {
-    val out = s"${graft.Scratch.root(s)}/cli_run_${new java.io.File(dir).getName}"
-    graft.sinks.TableSink.writeTruncate(
-      Denorm.flatDenorm(s, dir, performLookups = true), out)
-    val back = s.read.parquet(out).select(
-      col("c_custkey"), col("c_name"), col("c_nationkey"), col("o_orderkey"),
-      cents(col("o_totalprice")).as("total_cents"),
-      // flatDenorm keeps the source's midnight TIMESTAMP; render the DATE
-      col("o_orderdate").cast("date").cast("string").as("o_date"),
-      col("o_orderpriority"), col("l_linenumber"),
-      cents(col("l_quantity")).as("qty_cents"),
-      cents(col("l_extendedprice")).as("price_cents"))
-    graft.operators.Profile.tableChecksum(back,
-      Seq("c_custkey", "c_name", "c_nationkey", "o_orderkey", "total_cents",
-        "o_date", "o_orderpriority", "l_linenumber", "qty_cents", "price_cents"))
-  }
-
-  /** A12 (mask verb, FULL-oracled r15): the CLI `mask` release path —
-   * [[graft.pipelines.Run.maskTable]] parses the policy string,
-   * applies the default-deny A28 projection, truncate-loads, and the
-   * query reads the RELEASED table back so the oracle hash-checks the
-   * actual on-disk artifact, not the in-plan projection (the
-   * q_cli_run write→read-back pattern). */
-  private def qCliMask(s: SparkSession, dir: String): DataFrame = {
-    val out = s"${graft.Scratch.root(s)}/cli_mask_${sinkSeq.incrementAndGet()}"
-    graft.pipelines.Run.maskTable(s, dir, "customer",
-      "c_custkey:keep,c_name:sha256,c_mktsegment:prefix:3", out): Unit
-    s.read.parquet(out).orderBy("c_custkey")
-  }
-
-  /** A35 (r16): snapshot BRANCHES — the experimentation surface a
-   * governed warehouse needs: a branch is a TAG that
-   * [[graft.sinks.Snapshot.publishToRef]] advances, each publish
-   * basing on the REF's own head (prod and dev interleave in one
-   * version log without seeing each other), unchanged tables carried
-   * by `_LINKS` reference, the A27 gate run against the branch head,
-   * promote = a metadata-only retag. The query builds the full
-   * lifecycle — branch, two divergent dev publishes interleaved with
-   * a prod publish, promote — and emits every (ref, table) row count
-   * at each stage; DuckDB recomputes all of them from the source
-   * tables, so isolation BOTH ways and the promote flip are
-   * value-checked, not smoke-counted. */
-  private def qSnapshotBranch(s: SparkSession, dir: String): DataFrame = {
-    val root = s"${graft.Scratch.root(s)}/branch_${sinkSeq.incrementAndGet()}"
-    val cust = t(s, dir, "customer").select("c_custkey", "c_mktsegment")
-    val nat = t(s, dir, "nation").select("n_nationkey", "n_name")
-    graft.sinks.Snapshot.publish(s, root, Map("cust" -> cust, "nat" -> nat))
-    graft.sinks.Snapshot.tag(s, root, "prod", 1L)
-    graft.sinks.Snapshot.tag(s, root, "dev", 1L)
-    graft.sinks.Snapshot.publishToRef(s, root, "dev",
-      Map("cust" -> cust.filter(col("c_custkey") % 2 === 0)))
-    graft.sinks.Snapshot.publishToRef(s, root, "prod",
-      Map("nat" -> nat.filter(col("n_nationkey") < 10)))
-    graft.sinks.Snapshot.publishToRef(s, root, "dev",
-      Map("cust" -> cust.filter(col("c_custkey") % 4 === 0)))
-    def row(stage: String, ref: String, table: String) =
-      graft.sinks.Snapshot.readTag(s, root, table, ref)
-        .agg(count(lit(1)).as("n_rows"))
-        .select(lit(stage).as("stage"), lit(ref).as("ref"),
-          lit(table).as("table_name"), col("n_rows"))
-    val before = Seq(("prod", "cust"), ("prod", "nat"),
-      ("dev", "cust"), ("dev", "nat")).map { case (r, t) => row("diverged", r, t) }
-    // promote: prod now serves the validated dev state — metadata only
-    graft.sinks.Snapshot.tag(s, root, "prod",
-      graft.sinks.Snapshot.tagVersion(s, root, "dev"))
-    val after = Seq(("prod", "cust"), ("prod", "nat"))
-      .map { case (r, t) => row("promoted", r, t) }
-    (before ++ after).reduce(_ unionAll _).orderBy("stage", "ref", "table_name")
-  }
-
-  /** A36 (r16): three-way branch MERGE with conflict detection
-   * ([[graft.sinks.Snapshot.mergeRef]]) — what A35's promote-by-retag
-   * cannot do: promote REPLACES prod with the branch head, discarding
-   * anything prod published while the branch lived; merge keeps both
-   * sides' non-conflicting changes by comparing each table's PHYSICAL
-   * HOME on branch head / target head / recorded merge base
-   * ([[graft.sinks.Snapshot.branch]]), then publishing a links-only
-   * version — zero bytes moved. The query runs the lifecycle twice:
-   * dev edits cust (twice) while prod edits nat → merge #1 must serve
-   * dev's cust AND prod's nat; then prod edits ord while dev edits
-   * cust again → merge #2 must take both, proving the merge base
-   * advanced (a stale base would re-flag cust/nat as conflicts).
-   * Every (stage, ref, table) count is recomputed by DuckDB from the
-   * source tables. Conflict refusal, schema-gate refusal, and
-   * nothing-to-merge refusal are SnapshotSpec's. */
-  private def qBranchMerge(s: SparkSession, dir: String): DataFrame = {
-    val root = s"${graft.Scratch.root(s)}/branch_merge_${sinkSeq.incrementAndGet()}"
-    val cust = t(s, dir, "customer").select("c_custkey", "c_mktsegment")
-    val nat = t(s, dir, "nation").select("n_nationkey", "n_name")
-    val ord = t(s, dir, "orders").select("o_orderkey", "o_custkey")
-    graft.sinks.Snapshot.publish(s, root,
-      Map("cust" -> cust, "nat" -> nat, "ord" -> ord))
-    graft.sinks.Snapshot.tag(s, root, "prod", 1L)
-    graft.sinks.Snapshot.branch(s, root, "dev", "prod")
-    graft.sinks.Snapshot.publishToRef(s, root, "dev",
-      Map("cust" -> cust.filter(col("c_custkey") % 2 === 0)))
-    graft.sinks.Snapshot.publishToRef(s, root, "prod",
-      Map("nat" -> nat.filter(col("n_nationkey") < 10)))
-    graft.sinks.Snapshot.publishToRef(s, root, "dev",
-      Map("cust" -> cust.filter(col("c_custkey") % 4 === 0)))
-    def row(stage: String, ref: String, table: String) =
-      graft.sinks.Snapshot.readTag(s, root, table, ref)
-        .agg(count(lit(1)).as("n_rows"))
-        .select(lit(stage).as("stage"), lit(ref).as("ref"),
-          lit(table).as("table_name"), col("n_rows"))
-    val diverged = Seq("cust", "nat", "ord").flatMap(tb =>
-      Seq(row("diverged", "prod", tb), row("diverged", "dev", tb)))
-    val (v1, homes1) = graft.sinks.Snapshot.mergeRef(s, root, "dev", "prod")
-    require(homes1("cust") == 4L && homes1("nat") == 3L && homes1("ord") == 1L,
-      s"branch merge: wrong chosen homes $homes1 at v$v1")
-    val merged = Seq("cust", "nat", "ord").map(tb => row("merged", "prod", tb))
-    // round 2: new divergence from the ADVANCED base — a stale base
-    // would see cust/nat changed-on-both and refuse
-    graft.sinks.Snapshot.publishToRef(s, root, "prod",
-      Map("ord" -> ord.filter(col("o_orderkey") % 3 === 0)))
-    graft.sinks.Snapshot.publishToRef(s, root, "dev",
-      Map("cust" -> cust.filter(col("c_custkey") % 8 === 0)))
-    graft.sinks.Snapshot.mergeRef(s, root, "dev", "prod")
-    val remerged = Seq("cust", "nat", "ord").map(tb => row("remerged", "prod", tb))
-    (diverged ++ merged ++ remerged).reduce(_ unionAll _)
-      .orderBy("stage", "ref", "table_name")
-  }
-
-  /** A39 (r16): namespace replication with checksum verification
-   * ([[graft.sinks.Snapshot.replicate]]) — the DR/migration story:
-   * every manifest-reachable version copied to a fresh root, each
-   * physical table proven LOGICALLY equal by order-independent
-   * checksum (one aggregate per side, the C31 discipline), sidecars
-   * and tags verbatim, the replica's manifest flipped LAST. The query
-   * replicates a two-version namespace (one linked carry) and emits
-   * the copy report PLUS serve-side proof rows — counts read back
-   * through the REPLICA's own manifest, tag, and copied links. */
-  private def qReplicate(s: SparkSession, dir: String): DataFrame = {
-    val base = s"${graft.Scratch.root(s)}/replicate_${sinkSeq.incrementAndGet()}"
-    val (src, dst) = (s"$base/src", s"$base/dst")
-    val cust = t(s, dir, "customer").select("c_custkey", "c_mktsegment")
-    val nat = t(s, dir, "nation").select("n_nationkey", "n_name")
-    graft.sinks.Snapshot.publish(s, src, Map("cust" -> cust, "nat" -> nat))
-    graft.sinks.Snapshot.publishLinked(s, src,
-      Map("cust" -> cust.filter(col("c_custkey") % 2 === 0)))
-    graft.sinks.Snapshot.tag(s, src, "prod", 2L)
-    val rep = graft.sinks.Snapshot.replicate(s, src, dst)
-      .select(lit("copy").as("stage"),
-        concat(lit("v"), col("version").cast("string"), lit("/"),
-          col("table_name")).as("item"),
-        col("n_rows"), col("checksum_match").as("ok"))
-    def served(tb: String) = graft.sinks.Snapshot.readTag(s, dst, tb, "prod")
-      .agg(count(lit(1)).as("n_rows"))
-      .select(lit("serve").as("stage"), lit(s"$tb@prod").as("item"),
-        col("n_rows"), lit(true).as("ok"))
-    rep.unionAll(served("cust")).unionAll(served("nat"))
-      .orderBy("stage", "item")
-  }
-
-  /** A38 (r16): ROW-LEVEL three-way merge
-   * ([[graft.sinks.Snapshot.mergeRefRows]]) — git's merge at row
-   * granularity: two pipelines editing the SAME table on a branch and
-   * on prod merge automatically when their changed KEY sets are
-   * disjoint (or convergent); only a key both sides changed to
-   * different values refuses. The query drives updates on disjoint
-   * key classes, a branch-side delete class, and target-side inserts
-   * through the full branch lifecycle, then reads the merged table
-   * prod serves; DuckDB recomputes the exact per-key outcome from the
-   * source table. Conflict refusal (update/update and delete/update
-   * races) is SnapshotSpec's. */
-  private def qRowMerge(s: SparkSession, dir: String): DataFrame = {
-    val root = s"${graft.Scratch.root(s)}/row_merge_${sinkSeq.incrementAndGet()}"
-    val baseT = t(s, dir, "customer").select(col("c_custkey").as("k"),
-      col("c_mktsegment").as("seg"), cents(col("c_acctbal")).as("bal"))
-    graft.sinks.Snapshot.publish(s, root, Map("accts" -> baseT))
-    graft.sinks.Snapshot.tag(s, root, "prod", 1L)
-    graft.sinks.Snapshot.branch(s, root, "dev", "prod")
-    // branch: +10 on the k%3==0 class, delete the k%21==2 class
-    // (⊂ k%3==2 — provably disjoint from every other change set)
-    val branchT = baseT.filter(!(col("k") % 21 === 2))
-      .withColumn("bal",
-        when(col("k") % 3 === 0, col("bal") + 10L).otherwise(col("bal")))
-    graft.sinks.Snapshot.publishToRef(s, root, "dev", Map("accts" -> branchT))
-    // target: +100 on the k%3==1 class, insert a shifted new-key block
-    val targetT = baseT
-      .withColumn("bal",
-        when(col("k") % 3 === 1, col("bal") + 100L).otherwise(col("bal")))
-      .unionAll(baseT.filter(col("k") <= 80)
-        .select((col("k") + 1000000L).as("k"), col("seg"),
-          (col("bal") + 5L).as("bal")))
-    graft.sinks.Snapshot.publishToRef(s, root, "prod", Map("accts" -> targetT))
-    graft.sinks.Snapshot.mergeRefRows(s, root, "dev", "prod",
-      Map("accts" -> Seq("k")))
-    graft.sinks.Snapshot.readTag(s, root, "accts", "prod").orderBy("k")
-  }
-
-  /** A40 (r17): branch/ref lifecycle GC
-   * ([[graft.sinks.Snapshot.deleteRef]]) — the removal path the
-   * A35/A36 surface lacked: a branch and its recorded merge base are
-   * vacuum GC roots, so an abandoned experiment pinned its whole
-   * version chain against retention forever. The query runs the
-   * lifecycle: branch diverges (dev edits cust, prod edits nat), a
-   * keepLast=1 sweep reclaims NOTHING while the branch lives (n=0
-   * pinned by the oracle), the dead branch is deleted (ref + merge
-   * base in one verb), and the SAME sweep now reclaims exactly the
-   * branch-exclusive version — while v1 survives via the link
-   * fixpoint (prod's head still carries cust by reference into it)
-   * and prod serves both tables untouched. Reclamation is pure
-   * namespace metadata; the serve rows prove no data the live side
-   * reaches was harmed. */
-  private def qBranchGc(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val root = s"${graft.Scratch.root(s)}/branch_gc_${sinkSeq.incrementAndGet()}"
-    val cust = t(s, dir, "customer").select("c_custkey", "c_mktsegment")
-    val nat = t(s, dir, "nation").select("n_nationkey", "n_name")
-    graft.sinks.Snapshot.publish(s, root, Map("cust" -> cust, "nat" -> nat))
-    graft.sinks.Snapshot.tag(s, root, "prod", 1L)
-    graft.sinks.Snapshot.branch(s, root, "dev", "prod")
-    graft.sinks.Snapshot.publishToRef(s, root, "dev",
-      Map("cust" -> cust.filter(col("c_custkey") % 2 === 0)))   // v2: dev head
-    graft.sinks.Snapshot.publishToRef(s, root, "prod",
-      Map("nat" -> nat.filter(col("n_nationkey") < 10)))        // v3: prod head
-    val pre = graft.sinks.Snapshot.vacuum(s, root, keepLast = 1)
-    val devRows = graft.sinks.Snapshot.readTag(s, root, "cust", "dev").count()
-    graft.sinks.Snapshot.deleteRef(s, root, "dev")
-    val post = graft.sinks.Snapshot.vacuum(s, root, keepLast = 1)
-    require(post == Seq(2L),
-      s"branch gc: expected exactly the branch-exclusive v2 reclaimed, got $post")
-    def served(tb: String) = graft.sinks.Snapshot.readTag(s, root, tb, "prod")
-      .agg(count(lit(1)).as("n"))
-      .select(lit("serve").as("stage"), lit(s"$tb@prod").as("item"), col("n"))
-    Seq(("live", "cust@dev", devRows),
-        ("live", "n_reclaimed", pre.size.toLong),
-        ("gc", "n_reclaimed", post.size.toLong))
-      .toDF("stage", "item", "n")
-      .unionAll(served("cust")).unionAll(served("nat"))
-      .orderBy("stage", "item")
-  }
-
-  /** A37 (r16): publish history ([[graft.sinks.Snapshot.history]]) —
-   * the `git log` of the namespace: every version-creating operation
-   * (plain publish, linked/branch publish, three-way merge, gated
-   * candidate) records a `_COMMIT` sidecar BEFORE the manifest flip,
-   * so even a gate-aborted candidate's orphan dir documents what was
-   * attempted. The query drives one of each op — including an
-   * FK-violating publishChecked that must abort — and reads the full
-   * log back (wall-clock stamp projected away, the storageReport
-   * bytes rule); the oracle is the fully-determined literal relation
-   * the construction implies. */
-  private def qSnapshotHistory(s: SparkSession, dir: String): DataFrame = {
-    val root = s"${graft.Scratch.root(s)}/history_${sinkSeq.incrementAndGet()}"
-    val cust = t(s, dir, "customer").select("c_custkey", "c_mktsegment")
-    val nat = t(s, dir, "nation").select("n_nationkey", "n_name")
-    graft.sinks.Snapshot.publish(s, root, Map("cust" -> cust, "nat" -> nat))
-    graft.sinks.Snapshot.tag(s, root, "prod", 1L)
-    graft.sinks.Snapshot.branch(s, root, "dev", "prod")
-    graft.sinks.Snapshot.publishToRef(s, root, "dev",
-      Map("cust" -> cust.filter(col("c_custkey") % 2 === 0)))
-    graft.sinks.Snapshot.publishToRef(s, root, "prod",
-      Map("nat" -> nat.filter(col("n_nationkey") < 10)))
-    graft.sinks.Snapshot.mergeRef(s, root, "dev", "prod")
-    val fact = nat.select((col("n_nationkey") + 1000L).as("fk"))
-    val dim = nat.select(col("n_nationkey").as("k"))
-    val (_, ok, _) = graft.sinks.Snapshot.publishChecked(s, root,
-      Map("fact" -> fact, "dim" -> dim),
-      Seq(graft.sinks.Snapshot.FkCheck("fact", "fk", "dim", "k")))
-    require(!ok, "snapshot history: the FK-violating publish must abort")
-    graft.sinks.Snapshot.history(s, root)
-      .select("version", "op", "parent", "written", "ref", "reachable")
-      .orderBy("version")
-  }
-
-  /** A12+A33 (storage verb, FULL-oracled r15; reshaped r16 per
-   * VERDICT #9): the CLI `snapshot` → `storage` round trip — the full
-   * gated publish + prod tag, then the `--link` rerun through the
-   * SAME A27 gate (the r15 fix) in its REAL nightly shape: one small
-   * changed table (the per-segment summary) rewrites, the big denorm
-   * carries forward by `_LINKS` reference. r15 republished the whole
-   * denorm as the "changed" table, which both paid the flagship
-   * denorm twice (the board's #2 row at 7.5 s, construction-dominated)
-   * and demonstrated zero links — the linked-carry version halves the
-   * cost AND makes the storage view account an actual physical-vs-
-   * linked split. Physical bytes are codec-dependent and stay out of
-   * the oracle (q_storage_report precedent); every row/table count is
-   * recomputed by DuckDB from the source tables. */
-  private def qCliStorage(s: SparkSession, dir: String): DataFrame = {
-    val root = s"${graft.Scratch.root(s)}/cli_storage_${sinkSeq.incrementAndGet()}"
-    val denorm = Denorm.flatDenorm(s, dir, performLookups = true)
-    val (v1, ok1, _) = graft.sinks.Snapshot.publishCompatible(
-      s, root, Map("denorm" -> denorm))
-    require(ok1, "cli storage: initial publish refused")
-    graft.sinks.Snapshot.tag(s, root, "prod", v1)
-    val summary = denorm.groupBy("c_mktsegment")
-      .agg(count(lit(1)).as("n_rows"),
-        sum(cents(col("l_extendedprice"))).as("price_cents"))
-    require(graft.sinks.Snapshot.schemaViolations(
-        s, root, Map("summary" -> summary)).isEmpty,
-      "cli storage: linked republish refused by the schema gate")
-    val (v2, links) = graft.sinks.Snapshot.publishLinked(
-      s, root, Map("summary" -> summary))
-    require(links == Map("denorm" -> v1),
-      s"cli storage: denorm must carry by reference to v1, got $links")
-    graft.sinks.Snapshot.tag(s, root, "prod", v2)
-    graft.sinks.Snapshot.storageReport(s, root)
-      .select("version", "n_physical", "n_linked", "logical_rows", "linked_rows")
-      .orderBy("version")
-  }
-
-  /** A39+A12 (r17, VERDICT r16 #4): the CLI `replicate` verb's exact
-   * library path driven end-to-end on the CLI's own nightly namespace
-   * — the governed snapshot lifecycle (gated denorm publish + prod
-   * tag + zero-copy linked summary republish, the q_cli_storage
-   * shape) replicated to a fresh root with per-table checksum proof,
-   * then SERVED back through the replica's own manifest, tag, and
-   * copied `_LINKS` (the linked denorm must resolve through the
-   * copied sidecar). The namespace is the BUILDING-segment nightly
-   * slice: the segment filter PUSHES through the denorm's joins to
-   * the customer scan (the q_cli_storage r15 lesson — a replication
-   * row must measure the replicate machinery, not pay the full
-   * flagship construction twice), while every replicate mechanism
-   * (copy, checksum, sidecar/tag transport, manifest-last flip)
-   * exercises identically. The oracle recomputes the copy report and
-   * both serve counts from source tables; `Run replicate` wraps
-   * precisely this call (refusals smoke-verified: published
-   * destination, checksum mismatch aborts before the flip). */
-  private def qCliReplicate(s: SparkSession, dir: String): DataFrame = {
-    val base = s"${graft.Scratch.root(s)}/cli_repl_${sinkSeq.incrementAndGet()}"
-    val (src, dst) = (s"$base/src", s"$base/dst")
-    val denorm = Denorm.flatDenorm(s, dir, performLookups = true)
-      .filter(col("c_mktsegment") === "BUILDING")
-    val (v1, ok1, _) = graft.sinks.Snapshot.publishCompatible(
-      s, src, Map("denorm" -> denorm))
-    require(ok1, "cli replicate: initial publish refused")
-    graft.sinks.Snapshot.tag(s, src, "prod", v1)
-    val summary = denorm.groupBy("c_mktsegment")
-      .agg(count(lit(1)).as("n_rows"),
-        sum(cents(col("l_extendedprice"))).as("price_cents"))
-    val (v2, links) = graft.sinks.Snapshot.publishLinked(
-      s, src, Map("summary" -> summary))
-    require(links == Map("denorm" -> v1),
-      s"cli replicate: denorm must carry by reference to v1, got $links")
-    graft.sinks.Snapshot.tag(s, src, "prod", v2)
-    val rep = graft.sinks.Snapshot.replicate(s, src, dst)
-      .select(lit("copy").as("stage"),
-        concat(lit("v"), col("version").cast("string"), lit("/"),
-          col("table_name")).as("item"),
-        col("n_rows"), col("checksum_match").as("ok"))
-    def served(tb: String) = graft.sinks.Snapshot.readTag(s, dst, tb, "prod")
-      .agg(count(lit(1)).as("n_rows"))
-      .select(lit("serve").as("stage"), lit(s"$tb@prod").as("item"),
-        col("n_rows"), lit(true).as("ok"))
-    rep.unionAll(served("denorm")).unionAll(served("summary"))
-      .orderBy("stage", "item")
-  }
-
-  /** C12: multimodal plumbing — binary payload + typed metadata,
-   * per-partition batched feature extraction (stub codec; rows-only). */
-  /** C12b: frame sampling plumbing (multimodal/Media.sampleFrames) —
-   * payloads split into 64-byte frames, every 3rd kept. The framing
-   * geometry (kept count, kept bytes incl. the partial tail frame,
-   * max kept index) is EXACTLY computable from the payload length, so
-   * unlike the stubbed feature values this path gets a full SQL
-   * oracle: DuckDB recomputes the arithmetic from octet_length. */
-  private def qMediaFrames(s: SparkSession, dir: String): DataFrame = {
-    val media = graft.multimodal.Media.fromDocuments(t(s, dir, "documents"))
-    graft.multimodal.Media.sampleFrames(media, frameBytes = 64, everyN = 3)
-      .groupBy("media_id")
-      .agg(count(lit(1)).as("n_kept"),
-        sum(length(col("frame"))).as("kept_bytes"),
-        max(col("frame_idx")).as("max_idx"))
-      .orderBy("media_id")
-  }
-
-  private def qMediaFeatures(s: SparkSession, dir: String): DataFrame =
-    graft.multimodal.Media
-      .extractFeatures(graft.multimodal.Media.fromDocuments(t(s, dir, "documents")))
-      .toDF()
-      .select(col("media_id"), col("kind"), col("n_bytes"),
-        // the stub feature itself is float32 sequential accumulation
-        // (not SQL-mirrorable bit-exactly); its provable range bound
-        // is, so the oracle hash-checks ids/kinds/sizes + the bound
-        (element_at(col("features"), 1) >= 0.0 &&
-          element_at(col("features"), 1) <= (col("n_bytes") / 8.0 + 1.0)).as("f0_in_range"))
-      .orderBy("media_id")
-
-  /** C12c (r16): content-addressable EXACT media dedup
-   * ([[graft.multimodal.Media.exactDedup]]) inside the no-codec wall
-   * (VERDICT r15 #5) — byte-identical payloads collapse on their
-   * digest, no decode. The corpus PLANTS re-uploads (every 13th
-   * doc's payload reappears under media_id + 1,000,000), and the
-   * collapse must map each copy onto its original (rep = lowest id)
-   * while everything else stays its own representative. FULL oracle:
-   * DuckDB replays the digest relation on the same bytes (md5 of the
-   * UTF-8 text ≡ md5 of the binary payload; ASCII corpus, the C4b
-   * pinned precondition). */
-  private def qMediaDedup(s: SparkSession, dir: String): DataFrame = {
-    val docs = t(s, dir, "documents")
-    def payload = coalesce(col("text").cast("binary"),
-      lit(Array.emptyByteArray))
-    val base = docs.select(col("doc_id").as("media_id"), payload.as("p"))
-    val copies = docs.filter(col("doc_id") % 13 === 0)
-      .select((col("doc_id") + 1000000L).as("media_id"), payload.as("p"))
-    graft.multimodal.Media.exactDedup(base.unionAll(copies), "media_id", "p")
-      .orderBy("media_id")
-  }
-
-  /** C12c (r16): chunk-signature NEAR-dup screen
-   * ([[graft.multimodal.Media.nearDupPairs]]) — locally-edited
-   * re-uploads that exact dedup misses, still without decoding a
-   * byte: payloads resemble when their 32-byte chunk digest sets
-   * overlap ≥ 0.7 Jaccard. The corpus PLANTS edited variants (every
-   * 7th doc ≥ 224 bytes reappears under media_id + 2,000,000 with
-   * its last 10 bytes rewritten): at ≥ 7 full chunks, one edited
-   * chunk costs at most (n−1)/(n+1) ≥ 0.75 resemblance, so every
-   * planted pair must surface; pair generation is bucketed on the
-   * chunk digest with the stop-chunk cap (> 100 media) replayed by
-   * the oracle. */
-  private def qMediaNeardup(s: SparkSession, dir: String): DataFrame = {
-    val docs = t(s, dir, "documents")
-    def payload = coalesce(col("text").cast("binary"),
-      lit(Array.emptyByteArray))
-    val base = docs.select(col("doc_id").as("media_id"), payload.as("p"))
-    val variants = docs
-      .filter(col("doc_id") % 7 === 0 && length(col("text")) >= 224)
-      .select((col("doc_id") + 2000000L).as("media_id"),
-        col("text").cast("binary").as("p0"))
-      .select(col("media_id"),
-        concat(expr("substring(p0, 1, length(p0) - 10)"),
-          lit("XXXXXXXXXX").cast("binary")).as("p"))
-    graft.multimodal.Media
-      .nearDupPairs(base.unionAll(variants), "media_id", "p",
-        chunkBytes = 32, maxChunkFreq = 100, thresholdPpm = 700000L)
-      .orderBy("media_a", "media_b")
-  }
-
-  /** C12c (r16): media dedup KEEP-TABLE — the relation a pipeline
-   * actually consumes: exact-digest pairs and chunk-signature
-   * near-dup pairs unioned into one edge set, closed transitively
-   * ([[graft.operators.Components.dedupClusters]] — the C14
-   * machinery on media edges), one survivor per cluster. A planted
-   * original, its byte-identical re-upload, and its tail-edited
-   * variant must land in ONE cluster even though the copy and the
-   * variant were never directly compared (exact hash differs, but
-   * both pair with the original). Oracle: both pair pipelines + the
-   * recursive-CTE closure replayed in DuckDB. */
-  private def qMediaClusters(s: SparkSession, dir: String): DataFrame = {
-    val docs = t(s, dir, "documents")
-    def payload = coalesce(col("text").cast("binary"),
-      lit(Array.emptyByteArray))
-    val base = docs.select(col("doc_id").as("media_id"), payload.as("p"))
-    val copies = docs.filter(col("doc_id") % 13 === 0)
-      .select((col("doc_id") + 1000000L).as("media_id"), payload.as("p"))
-    val variants = docs
-      .filter(col("doc_id") % 7 === 0 && length(col("text")) >= 224)
-      .select((col("doc_id") + 2000000L).as("media_id"),
-        col("text").cast("binary").as("p0"))
-      .select(col("media_id"),
-        concat(expr("substring(p0, 1, length(p0) - 10)"),
-          lit("XXXXXXXXXX").cast("binary")).as("p"))
-    val corpus = base.unionAll(copies).unionAll(variants)
-    val exactPairs = graft.multimodal.Media.exactDedup(corpus, "media_id", "p")
-      .filter(col("media_id") =!= col("rep_id"))
-      .select(col("rep_id").as("id_a"), col("media_id").as("id_b"))
-    val nearPairs = graft.multimodal.Media
-      .nearDupPairs(corpus, "media_id", "p",
-        chunkBytes = 32, maxChunkFreq = 100, thresholdPpm = 700000L)
-      .select(col("media_a").as("id_a"), col("media_b").as("id_b"))
-    graft.operators.Components
-      .dedupClusters(corpus, "media_id", exactPairs.unionAll(nearPairs))
-      .select(col("doc_id").as("media_id"), col("cluster_id"), col("keep"))
-      .orderBy("media_id")
-  }
-
-  /** C12d (r17): container-header metadata
-   * ([[graft.multimodal.Media.describeHeaders]]) — format, dimensions,
-   * sample rate, and channels read straight from the payload's header
-   * bytes, no codec (VERDICT r16 #8: RIFF/PNG/JPEG headers are plain
-   * bytes, so the multimodal column becomes genuinely descriptive
-   * inside the no-codec wall). The corpus builds REAL header bytes in
-   * pure SQL (unhex of Catalyst-built hex — constructor and parser
-   * share no code): PNG IHDR with per-doc dims, WAV with a planted
-   * JUNK chunk before fmt every 8th doc (the chunk SCAN must skip it),
-   * JPEG with a planted APP1 segment before SOF every 8th doc (the
-   * segment scan likewise), and a poisoned-leading-byte text payload
-   * as the 'unknown' class — each with a variable text tail proving
-   * the parse reads structure, not offsets-from-end. The oracle
-   * recomputes every field by the independent doc-id arithmetic, so a
-   * wrong endianness, a fixed-offset shortcut, or a crash on garbage
-   * all hash-mismatch. One pass, no shuffle. */
-  /** The C12d/D32 shared corpus: per doc one payload with REAL header
-   * bytes built in pure SQL (constructor and parser share no code) —
-   * PNG / WAV (planted JUNK chunk every 8th) / JPEG (planted APP1
-   * every 8th) / poisoned 'unknown', each with a variable text tail.
-   * Emits (media_id, p). */
-  private def mediaHeaderCorpus(s: SparkSession, dir: String): DataFrame = {
-    val staged = t(s, dir, "documents")
-      .select(col("doc_id").as("media_id"),
-        coalesce(col("text"), lit("")).as("txt"))
-      .withColumn("w", col("media_id") % 640 + 32)
-      .withColumn("h", col("media_id") % 480 + 32)
-      .withColumn("rate", col("media_id") % 8 * 1000 + 8000)
-      .withColumn("ch", col("media_id") % 2 + 1)
-      .withColumn("w2", col("media_id") % 512 + 16)
-      .withColumn("h2", col("media_id") % 384 + 16)
-      .withColumn("tail", expr("hex(substring(txt, 1, 24))"))
-      .withColumn("p", expr("""
-        CASE
-          WHEN media_id % 4 = 0 THEN unhex(concat(
-            '89504E470D0A1A0A0000000D49484452',
-            lpad(hex(w), 8, '0'), lpad(hex(h), 8, '0'), '0802000000', tail))
-          WHEN media_id % 4 = 1 THEN unhex(concat(
-            '524946462400000057415645',
-            CASE WHEN media_id % 8 = 1 THEN '4A554E4B0400000000000000' ELSE '' END,
-            '666D7420100000000100', lpad(hex(ch), 2, '0'), '00',
-            lpad(hex(rate % 256), 2, '0'),
-            lpad(hex(rate div 256 % 256), 2, '0'), '0000',
-            '0000000000001000', tail))
-          WHEN media_id % 4 = 2 THEN unhex(concat(
-            'FFD8FFE000104A46494600010100000100010000',
-            CASE WHEN media_id % 8 = 6 THEN 'FFE10008457869660000' ELSE '' END,
-            'FFC0001108', lpad(hex(h2), 4, '0'), lpad(hex(w2), 4, '0'),
-            '03011100021101031101', tail))
-          ELSE concat(unhex('00'), cast(txt AS BINARY))
-        END"""))
-    staged.select("media_id", "p")
-  }
-
-  private def qMediaHeaders(s: SparkSession, dir: String): DataFrame =
-    graft.multimodal.Media
-      .describeHeaders(mediaHeaderCorpus(s, dir), "media_id", "p")
-      .orderBy("media_id")
-
-  /** D32 (r17): streaming multimodal ingest router
-   * ([[graft.streaming.EventStream.mediaRouteSink]]) — C12d live: two
-   * real checkpointed micro-batches of binary payloads are enriched
-   * by the header kernel and routed into per-format sink partitions
-   * in one partitionBy write each (images to the image pipeline,
-   * audio to audio, garbage quarantined as 'unknown' — decided from
-   * header bytes before any decoder runs). The query reads the routed
-   * store back through partition discovery and must reproduce exactly
-   * the batch path's q_media_headers relation — the same independent
-   * doc-id arithmetic oracle, now also proving the router dropped,
-   * duplicated, and misrouted nothing across the stream. The r18
-   * metrics store is read back too: every media row carries its
-   * (batch, format) route count from the SIBLING `_metrics` store,
-   * each recomputed by the oracle from the batch-split arithmetic —
-   * a dropped, doubled, or misattributed metrics row mismatches. */
-  private def qStreamMediaRoute(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    implicit val sql: org.apache.spark.sql.SQLContext = s.sqlContext
-    val slice = mediaHeaderCorpus(s, dir)
-      .as[(Long, Array[Byte])].collect().sortBy(_._1)
-    val mid = (slice.head._1 + slice.last._1) / 2
-    val b1 = slice.filter(_._1 <= mid).toSeq
-    val b2 = slice.filter(_._1 > mid).toSeq
-    val base = s"${graft.Scratch.root(s)}/mroute_${sinkSeq.incrementAndGet()}"
-    val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Array[Byte])]
-    val q = graft.streaming.EventStream.mediaRouteSink(
-        in.toDF.toDF("media_id", "p"), "p", s"$base/out")
-      .option("checkpointLocation", s"$base/ckpt").start()
-    try {
-      in.addData(b1)
-      q.processAllAvailable()
-      in.addData(b2)
-      q.processAllAvailable()
-    } finally q.stop()
-    val metrics = s.read.parquet(s"$base/out_metrics")
-      .select(col("batch").cast("long").as("batch"),
-        col("format").cast("string").as("format"), col("n").as("route_n"))
-    s.read.parquet(s"$base/out")
-      .select(col("media_id"), col("batch").cast("long").as("batch"),
-        col("format").cast("string").as("format"),
-        col("width"), col("height"), col("sample_rate"), col("channels"))
-      .join(metrics, Seq("batch", "format"))
-      .orderBy("media_id")
-  }
-
-  /** C93 (r17, completed r18): URL canonicalization + canonical-URL
-   * dedup ([[graft.text.Urls.canonicalDedup]]) — the crawl pipeline's
-   * FIRST dedup pass, upstream of every content-based one: the corpus
-   * builds EIGHT surface variants of each logical page (scheme case +
-   * http, WWW + :80 + trailing slash + utm param, :443 + fragment +
-   * scrambled param order, gclid, userinfo, percent-encoded
-   * unreserved path byte, `/../` + `/./` dot segments, duplicate
-   * slashes) in pure Catalyst SQL, and the codegen'd canonicalizer
-   * must collapse each octet onto ONE canonical string; a second
-   * family plants lowercase-hex + encoded-tilde query values
-   * (`%2fv%7E` vs `%2Fv~`) whose pairs collapse through the
-   * percent-normalization rules alone; a third (r19) plants the same
-   * http-vs-https page pair under BOTH fold settings — merged under
-   * the default, distinct under foldHttp = false (the parameterized
-   * scheme fold, VERDICT r18 #5). The oracle recomputes every
-   * canonical URL CHARACTER-FOR-CHARACTER by independent arithmetic
-   * (never parsing anything), plus the group rep/count/keep relation
-   * — so a wrong scheme fold, port strip, userinfo split, percent
-   * decode/uppercase, dot-segment pop, param sort, or fragment rule
-   * all hash-mismatch, as does any grouping error. One projection +
-   * one canonical-key window; shuffles short strings only. */
-  private def qUrlDedup(s: SparkSession, dir: String): DataFrame = {
-    val fam1 = t(s, dir, "documents")
-      .select(col("doc_id").as("id"), expr("doc_id div 8").as("k"))
-      .withColumn("url", expr("""
-        CASE CAST(id % 8 AS INT)
-          WHEN 0 THEN concat('https://example', k, '.com/a/b', k, '?b=2&a=1')
-          WHEN 1 THEN concat('HTTP://WWW.EXAMPLE', k, '.COM:80/a/b', k,
-            '/?a=1&b=2&utm_source=x')
-          WHEN 2 THEN concat('https://example', k, '.com:443/a/b', k,
-            '?utm_campaign=z&b=2&a=1#frag')
-          WHEN 3 THEN concat('https://example', k, '.com/a/b', k, '?a=1&gclid=g&b=2')
-          WHEN 4 THEN concat('https://u:p@example', k, '.com/a/b', k, '?a=1&b=2')
-          WHEN 5 THEN concat('https://example', k, '.com/%61/b', k, '?a=1&b=2')
-          WHEN 6 THEN concat('https://example', k, '.com/x/../a/./b', k, '?a=1&b=2')
-          ELSE concat('https://example', k, '.com//a//b', k, '?a=1&b=2')
-        END"""))
-    val fam2 = t(s, dir, "documents")
-      .select((col("doc_id") + lit(1000000L)).as("id"),
-        expr("doc_id div 2").as("k"))
-      .withColumn("url", expr("""
-        CASE CAST(id % 2 AS INT)
-          WHEN 0 THEN concat('https://example', k, '.org/p?q=%2fv%7E')
-          ELSE concat('https://example', k, '.org/p?q=%2Fv~')
-        END"""))
-    // Third family (r19): the same http-vs-https page pair planted
-    // TWICE — once under the default fold (the pair must merge), once
-    // with foldHttp = false (the pair must stay distinct: 80 and 443
-    // can serve different content, the knob's whole point).
-    def foldFam(offset: Long) = t(s, dir, "documents")
-      .select((col("doc_id") + lit(offset)).as("id"),
-        expr("doc_id div 2").as("k"))
-      .withColumn("url", expr("""
-        CASE CAST(id % 2 AS INT)
-          WHEN 0 THEN concat('http://fold', k, '.com/p')
-          ELSE concat('https://fold', k, '.com/p')
-        END"""))
-    graft.text.Urls
-      .canonicalDedup(fam1.unionByName(fam2).unionByName(foldFam(2000000L)),
-        "id", "url")
-      .unionByName(graft.text.Urls.canonicalDedup(foldFam(3000000L),
-        "id", "url", foldHttp = false))
-      .orderBy("id")
-  }
-
-  /** C27: segment-level dedup (text/SegmentDedup.scala) — the corpus
-   * "line dedup" pass at fixed 8-word-chunk granularity: segments
-   * occurring in ≥2 distinct documents are cut, documents survive.
-   * The Spark path collapses segments by 64-bit hash (the scale
-   * path); the oracle groups the segment STRINGS in DuckDB, so every
-   * run re-proves hash-space ≡ string-space (C4b pattern). */
-  private def qSegmentDedup(s: SparkSession, dir: String): DataFrame =
-    graft.text.SegmentDedup
-      .cleanChunks(t(s, dir, "documents"), "doc_id", "text", chunkWords = 8, minDocs = 2)
-      .orderBy("doc_id")
-
-  /** C40: per-group boilerplate removal (text/Boilerplate.scala) —
-   * 2-word chunks occurring in ≥20% (and ≥5) of a SOURCE's documents
-   * are cut from that source's documents; the group-relative
-   * frequency test is what separates site boilerplate from ordinary
-   * repetition (C27's global ≥N-docs rule). Thresholds chosen to
-   * BITE on the synthetic corpus (the hottest per-source chunk sits
-   * at 24% df — a higher bar would verify an empty cut set).
-   * Hash-space ≡ string-space re-proved per run: the oracle replays
-   * the whole pipeline over chunk STRINGS in DuckDB (C4b/C27
-   * pattern). */
-  private def qBoilerplate(s: SparkSession, dir: String): DataFrame =
-    graft.text.Boilerplate
-      .stripFrequent(t(s, dir, "documents"), "doc_id", "text", "source",
-        chunkWords = 2, minFrac = 0.2, minDocs = 5)
-      .orderBy("doc_id")
-
-  /** C28: inverted index (text/InvertedIndex.scala) — term → df +
-   * sorted posting list, one scan + one term-keyed aggregate. The
-   * query projects scalar posting stats (sum/min/max/len) instead of
-   * the raw arrays so the driver hash check stays list-free and
-   * engine-portable; the arrays themselves are asserted in spec. */
-  private def qInvertedIndex(s: SparkSession, dir: String): DataFrame =
-    graft.text.InvertedIndex.build(t(s, dir, "documents"), "doc_id", "text")
-      .select(col("term"), col("df"),
-        aggregate(col("postings"), lit(0L), (acc, x) => acc + x).as("doc_sum"),
-        element_at(col("postings"), 1).as("min_doc"),
-        element_at(col("postings"), -1).as("max_doc"))
-      .orderBy("term")
-
-  /** B47: mergeable distinct-count sketches (Apache DataSketches HLL
-   * via hll_sketch_agg/hll_union_agg) — per-event-type sketches union
-   * to the global estimate WITHOUT rescanning events: the incremental
-   * form of COUNT(DISTINCT) a 100 TB pipeline maintains per
-   * day/source and merges on demand. Invariant: merged estimate
-   * within 5% of the exact global distinct (lgK=14 → ~0.8% rse). */
-  private def qSketchMerge(s: SparkSession, dir: String): DataFrame = {
-    val ev = t(s, dir, "events")
-    val perType = ev.groupBy("event_type")
-      .agg(expr("hll_sketch_agg(user_id, 14)").as("sk"))
-    val merged = perType.agg(
-      count(lit(1)).as("n_partials"),
-      expr("hll_sketch_estimate(hll_union_agg(sk, false))").as("est"))
-    val exact = ev.agg(countDistinct("user_id").as("exact_users"))
-    merged.crossJoin(broadcast(exact)) // two 1-row sides
-      .select(col("n_partials"), col("exact_users"),
-        (abs(col("est") - col("exact_users")) * 20L <= col("exact_users"))
-          .as("merged_within_5pct"))
-  }
-
-  /** C29: semantic cluster assignment (the SemDeDup shape: k-means
-   * cells over embeddings, near-dup search only within a cell) —
-   * deterministic centroids (the first 8 corpus vectors, broadcast),
-   * codegen'd cosine argmax per vector. Oracle replays the argmax
-   * with DuckDB list_cosine_similarity; min top1−top2 margin on this
-   * corpus is 4e-4, orders of magnitude above cross-engine float
-   * noise, so the assignment hash-checks exactly. */
-  private def qClusterAssign(s: SparkSession, dir: String): DataFrame = {
-    val emb = t(s, dir, "embeddings")
-    val cents = emb.filter(col("vec_id") < 8)
-      .select(col("vec_id").as("cid"), col("embedding").as("cemb"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("vec_id").orderBy(col("sim").desc, col("cid"))
-    emb.crossJoin(broadcast(cents))
-      .withColumn("sim",
-        graft.functions.expressions.cosineSim(col("embedding"), col("cemb")))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-      .select(col("vec_id"), col("cid").as("cluster"))
-      .orderBy("vec_id")
-  }
-
-  /** C30: composed quality-filter chain — the full pre-tokenization
-   * document gate (language, length band, stopword floor, repetition
-   * ceiling) in one scan, emitting a per-rule bitmask so kill rates
-   * stay auditable per rule. Every rule is integer/ratio arithmetic
-   * shared with q_text_quality / q_repetition, so the whole chain is
-   * SQL-mirrorable. */
-  private def qFilterChain(s: SparkSession, dir: String): DataFrame = {
-    val docs = t(s, dir, "documents")
-    val words = graft.functions.expressions.wordNgrams(coalesce(col("text"), lit("")), 1)
-    val grams2 = graft.functions.expressions.wordNgrams(coalesce(col("text"), lit("")), 2)
-    docs
-      .withColumn("n_words", size(words).cast("long"))
-      .withColumn("n_g2", size(grams2).cast("long"))
-      .withColumn("n_g2_uniq", size(array_distinct(grams2)).cast("long"))
-      .select(col("doc_id"),
-        (col("lang") === "en").as("pass_lang"),
-        (col("n_words") >= 20L && col("n_words") <= 2000L).as("pass_len"),
-        // stopword floor: ≥ 10% stopwords (same tokenizer + word set
-        // as q_text_quality, whose doubles hash-match cross-engine)
-        (TextFunctions.stopwordRatio(col("text")) >= 0.1).as("pass_stop"),
-        // repetition ceiling: ≥ 40% of 2-grams unique
-        (col("n_g2") === 0L || col("n_g2_uniq") * 5L >= col("n_g2") * 2L)
-          .as("pass_rep"))
-      .withColumn("keep",
-        col("pass_lang") && col("pass_len") && col("pass_stop") && col("pass_rep"))
-      .orderBy("doc_id")
-  }
-
-  /** FLAGSHIP COMPOSITION (round 10; stage 0 added r18): end-to-end
-   * corpus assembly — canonical-URL dedup (C93) → quality filter
-   * (C30) → exact dedup (C1) → near-dup dedup → decontaminate (C17)
-   * → stratified sample (C25) → pack+materialize (C19/C19b),
-   * composed as ONE lazy plan by
-   * [[graft.pipelines.CorpusAssembly.assemble]]. Every operator is
-   * individually oracle-verified elsewhere on the board; THIS row
-   * verifies their composition — the stage-to-stage schema contracts
-   * and ordering assumptions no per-operator oracle can see. The
-   * DuckDB oracle replays all seven stages in string space and
-   * hash-compares the final packed chunks' md5 fingerprints, so a
-   * divergence at ANY stage corrupts the bytes downstream and fails
-   * the row.
-   *
-   * Stage 0 is exercised for real: every document PAIR (doc_id div 2)
-   * is planted with two surface-variant URLs of one logical page —
-   * the even doc plain-canonical, the odd doc scheme-cased + WWW +
-   * :80 + trailing slash + scrambled params + utm — so the
-   * canonicalizer must collapse each pair (keep = min id) BEFORE any
-   * content stage runs; the benchmark slice for decontamination
-   * still cuts from the RAW input (the assemble contract). The
-   * oracle replays the canon keep set as `doc_id = MIN(doc_id) per
-   * doc_id // 2 group`, INDEPENDENT of any URL parsing.
-   *
-   * The near-dup stage pins [[graft.pipelines.CorpusAssembly
-   * .nearDedupExact]] — the COMPLETE shingle-blocked variant (equi
-   * join on shared shingles; any ≥0.8-Jaccard pair shares one), which
-   * is what makes the whole composition exactly SQL-replayable. The
-   * banded MinHash plug (C2) slots in for boilerplate-heavy corpora;
-   * its keep contract is identical and its recall is hedged by the
-   * standing q_dedup_minhash_sound gate. */
-  private def qCorpusPipeline(s: SparkSession, dir: String): DataFrame =
-    graft.pipelines.CorpusAssembly.assemble(
-        t(s, dir, "documents").withColumn("url", expr("""
-          CASE CAST(doc_id % 2 AS INT)
-            WHEN 0 THEN concat('https://crawl', doc_id div 2, '.com/p',
-              doc_id div 2, '?a=1&b=2')
-            ELSE concat('HTTP://WWW.CRAWL', doc_id div 2, '.COM:80/p',
-              doc_id div 2, '/?b=2&a=1&utm_source=x')
-          END""")),
-        cfg = graft.pipelines.CorpusAssembly.Config(urlCol = Some("url")),
-        nearDedup = graft.pipelines.CorpusAssembly.nearDedupExact)
-      .orderBy("source", "chunk_id")
-
-  /** D7: built-in session-window aggregation (streaming/EventStream
-   * .sessionWindowAgg) — gap sessionization as ONE declarative
-   * aggregate whose plan runs unchanged in batch and streaming; this
-   * batch run is the oracle-checked twin of the StreamingSpec run.
-   * Boundary semantics differ from B6's lag-based convention: an
-   * event at exactly last+gap starts a NEW session (exclusive window
-   * end), so the oracle uses `>=` where q_sessionize uses `>`. */
-  private def qSessionWindow(s: SparkSession, dir: String): DataFrame =
-    graft.streaming.EventStream
-      .sessionWindowAgg(withEventTime(t(s, dir, "events")))
-      .orderBy("user_id", "session_start_us")
-
-  /** B48: calendar densification (date-spine gap fill) — generate the
-   * min..max day spine with `sequence` + `explode` (narrow after a
-   * 1-row bounds broadcast, never a driver loop) and left-join daily
-   * revenue so missing days report zero. The standard time-series
-   * reporting shape (gaps break window/lag arithmetic downstream). */
-  private def qDateSpine(s: SparkSession, dir: String): DataFrame = {
-    val orders = t(s, dir, "orders")
-    val daily = orders
-      .groupBy(to_date(col("o_orderdate")).as("day"))
-      .agg(sum(cents(col("o_totalprice"))).as("rev_cents"))
-    val bounds = daily.agg(min(col("day")).as("lo"), max(col("day")).as("hi"))
-    bounds
-      .select(explode(sequence(col("lo"), col("hi"))).as("day"))
-      .join(daily, Seq("day"), "left")
-      .select(col("day"), coalesce(col("rev_cents"), lit(0L)).as("rev_cents"))
-      .orderBy("day")
-  }
-
-  /** B49: fixed-point integer PageRank (operators/Graph.scala) over
-   * the customer→supplier order graph, 3 iterations — the iterative
-   * scoring family beyond CC, made oracle-checkable by integer
-   * arithmetic (float PageRank is reduction-order-dependent; the ppm
-   * recurrence is bit-identical cross-engine). Oracle unrolls the
-   * same 3 iterations in DuckDB (recursive CTEs can't aggregate). */
-  private def qPagerank(s: SparkSession, dir: String): DataFrame = {
-    val edges = t(s, dir, "orders")
-      .join(t(s, dir, "lineitem"), col("o_orderkey") === col("l_orderkey"))
-      .select(col("o_custkey").as("src"),
-        (col("l_suppkey") + 1000000L).as("dst")) // disjoint node spaces
-    graft.operators.Graph.pageRank(edges, "src", "dst", iters = 3)
-      .orderBy("node")
-  }
-
-  /** A13: SCD type-2 dimension build (operators/Scd.scala) — the
-   * change log of per-user event types becomes an effective-dated
-   * dimension: change points only, valid_from/valid_to intervals,
-   * is_current flag. One shuffle; deterministic under timestamp ties
-   * via the event_id tie-break. */
-  private def qScd2(s: SparkSession, dir: String): DataFrame = {
-    val ev = withEventTime(t(s, dir, "events"))
-      .select(col("user_id"), col("event_id"), col("event_type"), col("ts_us"))
-    graft.operators.Scd.type2(ev, "user_id", "ts_us",
-        Seq("event_type"), tieCol = "event_id")
-      .select(col("user_id"), col("event_type"),
-        col("valid_from").as("valid_from_us"), col("valid_to").as("valid_to_us"),
-        col("is_current"))
-      .orderBy("user_id", "valid_from_us", "event_type")
-  }
-
-  /** C31: order-independent corpus checksum (operators/Profile
-   * .tableChecksum) — validate a 100 TB copy/migration with one
-   * aggregate per side and no row transfer; the oracle recomputing
-   * the identical checksum in DuckDB IS the cross-engine use case. */
-  private def qTableChecksum(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Profile
-      .tableChecksum(t(s, dir, "documents"), Seq("doc_id", "lang", "source", "text"))
-
-  /** C45: cross-source corpus overlap via KMV sketches
-   * (operators/Overlap.scala) — each source's word-3-gram shingle set
-   * reduces to its k smallest distinct md5 hashes in ONE bounded
-   * algebraic aggregate (never more than k strings of state per
-   * partial, regardless of corpus size), then the #sources² sketch
-   * pairs yield the KMV Jaccard estimate |K(A∪B)∩K(A)∩K(B)|/|K(A∪B)|
-   * as an integer ppm. The graded companion of C31's equality
-   * checksum: "how much of source A is mirrored in B" without ever
-   * co-shuffling the corpora. Oracle replays the identical hash,
-   * k-min ranking, and integer division in DuckDB. */
-  private def qSourceOverlap(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Overlap
-      .sourceOverlap(t(s, dir, "documents"), "source", "text", k = 256)
-      .orderBy("src_a", "src_b")
-
-  /** C32: record linkage / entity resolution over structured records
-   * (operators/Linkage.scala) — block on (nation, segment), verify
-   * only in-block pairs with codegen'd levenshtein; the multi-field
-   * cousin of the text-dedup family. Scale caveat measured by the
-   * r18 sf10 probe: with FIXED-cardinality blocking keys (125 blocks
-   * here), block sizes grow ∝ n and in-block pairs ∝ n² — 86× runtime
-   * for 10× data. This row stays as the blocked BASELINE (the
-   * operator's docs say a discriminating key is the caller's lever);
-   * the scale path for dist-1 linkage is [[qRecordLinkageDel]]. */
-  private def qRecordLinkage(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Linkage
-      .linkByEditDistance(t(s, dir, "customer"), "c_custkey", "c_name",
-        Seq("c_nationkey", "c_mktsegment"), maxDist = 1)
-      .orderBy("id_a", "id_b")
-
-  /** C32b (r18): edit-distance-1 linkage via DELETION NEIGHBORHOODS
-   * ([[graft.operators.Linkage.linkByDeletion1]] — FastSS): each name
-   * emits itself plus every single-deletion variant as blocking keys
-   * through one codegen'd kernel; intersecting neighborhoods are a
-   * COMPLETE dist≤1 candidate generator, so candidate volume tracks
-   * true near-duplicate density instead of block-size² — the fix for
-   * the sf10 superlinearity the blocked C32 baseline measures. The
-   * oracle regenerates the neighborhoods in pure SQL (substr
-   * arithmetic, no shared code) and replays the whole key-join +
-   * verify, so a wrong variant set, missed dedup, or verify bug all
-   * hash-mismatch. Global linkage (no block confinement). */
-  private def qRecordLinkageDel(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Linkage
-      .linkByDeletion1(t(s, dir, "customer"), "c_custkey", "c_name")
-      .orderBy("id_a", "id_b")
-
-  /** The composite ENTITY IDENTITY string the C32c/C14-composition
-   * rows compare on: name + segment + nation. Deliberately
-   * multi-field (the standard entity-resolution shape — a bare
-   * sequential serial-number name is the densest possible dist-k
-   * domain: at maxDist = 2 the r19 probe measured 204k name pairs
-   * among 1500 bare names vs 3.3k with the composite, 62× — the
-   * discriminating-field lever the operator docs prescribe). */
-  private def linkIdent(df: DataFrame): DataFrame =
-    df.withColumn("ident", concat(col("c_name"), lit("|"),
-      col("c_mktsegment"), col("c_nationkey").cast("string")))
-
-  /** C32c (r19): edit-distance-≤2 linkage via k = 2 deletion
-   * neighborhoods ([[graft.operators.Linkage.linkByDeletionK]]) —
-   * FastSS generalized past the dist-1 IFF regime: the 0/1/2-deletion
-   * key sets are a COMPLETE dist≤2 candidate generator but no longer
-   * tight, so this row is the one place the board exercises a
-   * verify that actually KILLS candidates (shared 2-deletion keys at
-   * true distance 3..4). The oracle regenerates both deletion levels
-   * in pure substr arithmetic and replays key-join + thresholded
-   * verify + record expansion, so a wrong variant set at EITHER
-   * level, a verify bug, or a missed dedup all hash-mismatch. */
-  private def qRecordLinkageDel2(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Linkage
-      .linkByDeletionK(linkIdent(t(s, dir, "customer")), "c_custkey",
-        "ident", maxDist = 2)
-      .orderBy("id_a", "id_b")
-
-  /** C32d (r19, the composition SCALE_SF10.md named): linkage
-   * CLUSTERS — [[graft.operators.Linkage.linkClusters]] feeds the
-   * C32b deletion-neighborhood pair relation through the C14
-   * connected-components machinery and emits ONE (id, cluster) row
-   * per record, singletons labeled by their own id. This is the
-   * scale-correct OUTPUT for linkage under mass duplication: pairs
-   * are quadratic in duplicate-group size (the r18 sf10 probe's 2.7B
-   * enumerated pairs), cluster labels are linear in records always.
-   * The oracle replays neighborhoods + union-find: deletion keys by
-   * substr arithmetic, the dist≤1 verify, then a recursive-CTE
-   * transitive closure labeled by component-minimum id. */
-  private def qLinkageClusters(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Linkage
-      .linkClusters(linkIdent(t(s, dir, "customer")), "c_custkey", "ident")
-      .orderBy("id")
-
-  /** B54: grouped top-k in bounded state (operators/TopK.scala) — the
-   * scale-safe twin of B5's window row_number: a k-bounded ordered
-   * aggregate buffer (map-side combined, ≤ k rows per partition per
-   * group cross the shuffle) instead of sort-shuffling every row of
-   * every group. Deterministic (score desc, id asc) tie-break; the
-   * oracle replays the WINDOW formulation in DuckDB — equality proves
-   * the bounded aggregate drops exactly the right rows. */
-  private def qGroupTopk(s: SparkSession, dir: String): DataFrame =
-    graft.operators.TopK.topKPerGroup(
-      t(s, dir, "orders").select(col("o_orderpriority"),
-        cents(col("o_totalprice")).as("score"), col("o_orderkey").as("id")),
-      Seq("o_orderpriority"), "score", "id", k = 5)
-      .orderBy("o_orderpriority", "rank")
-
-  /** B55: exact triangle counting (operators/Graph.triangleCount) over
-   * the co-purchase graph (parts sharing an order) — degree-ordered
-   * orientation caps every wedge fan-out at O(√m), the bound that
-   * keeps the join shuffle-safe on hub-heavy graphs. Oracle replays
-   * the identical orientation and self-joins in DuckDB. */
-  private def qTriangles(s: SparkSession, dir: String): DataFrame = {
-    val li = t(s, dir, "lineitem")
-      .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-    val e = li.as("a").join(li.as("b"),
-        col("a.ok") === col("b.ok") && col("a.pk") < col("b.pk"))
-      .select(col("a.pk").as("src"), col("b.pk").as("dst"))
-    graft.operators.Graph.triangleCount(e, "src", "dst")
-  }
-
-  /** B50: winsorization (percentile outlier clamping) — clamp order
-   * totals to the exact cents-space [p05, p95] band and report the
-   * clamped aggregate; the standard robust-statistics cleaning step
-   * before training on heavy-tailed values. All integer arithmetic
-   * after the interpolated percentile (B18 precedent). */
-  private def qWinsorize(s: SparkSession, dir: String): DataFrame = {
-    val cents = t(s, dir, "orders")
-      .select(round(col("o_totalprice") * 100, 0).cast("long").as("c"))
-    // floor BEFORE the long cast: Spark's double→long cast truncates
-    // while DuckDB's rounds, so the explicit floor is what makes the
-    // two sides agree on the boundary (interpolated doubles over the
-    // same integers are bit-identical, B18 precedent)
-    val bounds = cents.agg(
-      expr("cast(floor(percentile(c, 0.05)) as bigint)").as("lo"),
-      expr("cast(floor(percentile(c, 0.95)) as bigint)").as("hi"))
-    cents.crossJoin(broadcast(bounds)) // 1-row bounds, never a collect
-      .select(greatest(col("lo"), least(col("hi"), col("c"))).as("w"),
-        (col("c") < col("lo")).cast("long").as("clip_lo"),
-        (col("c") > col("hi")).cast("long").as("clip_hi"))
-      .agg(count(lit(1)).as("n_orders"),
-        sum("w").as("winsorized_sum_c"),
-        sum("clip_lo").as("n_clipped_low"),
-        sum("clip_hi").as("n_clipped_high"))
-  }
-
-  /** B62 (r13): gaps-and-islands ([[graft.operators.Islands]]) —
-   * each customer's ordering activity grouped into maximal runs of
-   * CONSECUTIVE active months (streak length, island count, first /
-   * last active month). The `pos - row_number()` constant-per-run
-   * trick does it in one window pass — no self-join, no recursion;
-   * the month dedup ahead of the window bounds per-key work by the
-   * calendar, not the order count. */
-  private def qIslands(s: SparkSession, dir: String): DataFrame = {
-    val m = t(s, dir, "orders").select(col("o_custkey"),
-      (year(col("o_orderdate")) * 12 + month(col("o_orderdate")) - 1)
-        .cast("long").as("mi"))
-    graft.operators.Islands.streakStats(m, "o_custkey", "mi")
-      .select(col("o_custkey"), col("n_islands"),
-        col("n_active").as("n_active_months"), col("longest_streak"),
-        col("first_pos").as("first_month"), col("last_pos").as("last_month"))
-      .orderBy("o_custkey")
-  }
-
-  /** B63 (r13): peak concurrency via a distributed sweep line
-   * ([[graft.operators.Sweep]]) — max simultaneously-open 1-hour
-   * activity windows per hour, the "how many things were in flight
-   * at once" capacity question. The classic sorted running sum is
-   * sequential; the operator's two-level segmented prefix sum keeps
-   * the data-sized sort partitioned by bucket and leaves only a
-   * one-row-per-bucket cumulative pass global. Oracle replays the
-   * GLOBAL running sum in DuckDB and takes the same per-hour max —
-   * equality proves the segmented decomposition exact. */
-  private def qPeakConcurrency(s: SparkSession, dir: String): DataFrame = {
-    val hourUs = 3600L * 1000000L
-    val iv = withEventTime(t(s, dir, "events"))
-      .select(col("ts_us").as("s_us"), (col("ts_us") + hourUs).as("e_us"))
-    graft.operators.Sweep.peakConcurrent(iv, "s_us", "e_us", hourUs)
-      .select(col("bucket").as("hour_idx"), col("peak"), col("n_deltas"))
-      .orderBy("hour_idx")
-  }
-
-  /** B64 (r13): trailing 7-day rolling distinct customers per day
-   * ([[graft.operators.Rolling]]) — the WAU-by-day panel. COUNT
-   * (DISTINCT) OVER RANGE is unsupported and a day×orders range join
-   * rescans the fact table per day; the operator trades a bounded ×7
-   * cover-day explode (on already-deduped (customer, day) pairs) for
-   * three keyed exchanges and zero rescans. Oracle is the
-   * independent range-join formulation in DuckDB. */
-  private def qRollingDistinct(s: SparkSession, dir: String): DataFrame = {
-    val act = t(s, dir, "orders").select(col("o_custkey"),
-      datediff(to_date(col("o_orderdate")), lit("1970-01-01").cast("date"))
-        .cast("long").as("d"))
-    graft.operators.Rolling.rollingDistinct(act, "o_custkey", "d", windowDays = 7)
-      .select(col("day"), col("n_distinct").as("n_customers"))
-      .orderBy("day")
-  }
-
-  /** B65 (r13): static range-dimension (band) lookup without a join
-   * ([[graft.functions.SearchSortedLong]]) — every lineitem priced
-   * into a band of the part retail-price distribution. Breaks are
-   * derived deterministically (every 100th distinct price cent in
-   * rank order) via [[graft.operators.Rank.everyKthDistinct]] — the
-   * two-level range-partitioned rank, so even the DIMENSION pass has
-   * no single-partition window (r13 ADVICE) — and collapse to a
-   * plan-embedded sorted array (the Ann centroid precedent for
-   * bounded dim state); each fact row then binary-searches its band
-   * INSIDE whole-stage codegen. No shuffle, no broadcast hash table,
-   * O(log n) per row — the shape that replaces a BETWEEN
-   * BroadcastNestedLoopJoin for IP→geo / SLA-tier / price-band
-   * lookups at 100 TB. */
-  private def qBandLookup(s: SparkSession, dir: String): DataFrame = {
-    val v = t(s, dir, "part").select(cents(col("p_retailprice")).as("v"))
-    val breaks = graft.operators.Rank.everyKthDistinct(v, "v", k = 100)
-      .collect().map(_.getLong(0))
-    val li = t(s, dir, "lineitem").select(cents(col("l_extendedprice")).as("c"))
-    li.select(
-        graft.functions.expressions.searchSortedLong(col("c"), breaks)
-          .cast("long").as("band_idx"), col("c"))
-      .groupBy("band_idx")
-      .agg(count(lit(1)).as("n_items"), sum("c").as("sum_cents"),
-        min("c").as("min_cents"), max("c").as("max_cents"))
-      .orderBy("band_idx")
-  }
-
-  /** C50 (r13): RFM segmentation — the classic customer scoring
-   * (recency / frequency / monetary, each binned into quintiles,
-   * segment = RFM digits). The textbook ntile(5) is a GLOBAL
-   * single-partition window over every customer — the anti-pattern
-   * at 100 TB — so scores come from four broadcast percentile_disc
-   * cut points per metric instead: one map-side-combined customer
-   * rollup, one 1-row cuts aggregate, one broadcast compare pass;
-   * ties share a score deterministically (rank-based ntile splits
-   * them by arbitrary row order). percentile_disc ≡ DuckDB
-   * quantile_disc (B52 precedent), recency negated so all three
-   * metrics score "bigger is better" through one formula. */
-  private def qRfm(s: SparkSession, dir: String): DataFrame = {
-    val base = t(s, dir, "orders").groupBy("o_custkey").agg(
-      datediff(to_date(lit("2001-09-01")), max(to_date(col("o_orderdate"))))
-        .cast("long").as("recency_days"),
-      count(lit(1)).as("frequency"),
-      sum(cents(col("o_totalprice"))).as("monetary_cents"))
-      .withColumn("rec_neg", -col("recency_days"))
-    def cutsOf(c: String, p: String) = Seq(0.2, 0.4, 0.6, 0.8).zipWithIndex.map {
-      case (q, i) =>
-        expr(s"percentile_disc($q) within group (order by $c)")
-          .cast("long").as(s"$p${i + 1}")
-    }
-    val allCuts = cutsOf("rec_neg", "r") ++ cutsOf("frequency", "f") ++
-      cutsOf("monetary_cents", "m")
-    val cuts = base.agg(allCuts.head, allCuts.tail: _*)
-    def score(c: String, p: String) =
-      (1 to 4).map(i => (col(c) > col(s"$p$i")).cast("long"))
-        .foldLeft(lit(1L))(_ + _)
-    base.crossJoin(broadcast(cuts))
-      .select(col("o_custkey"), col("recency_days"), col("frequency"),
-        col("monetary_cents"),
-        score("rec_neg", "r").as("r_score"),
-        score("frequency", "f").as("f_score"),
-        score("monetary_cents", "m").as("m_score"))
-      .withColumn("segment",
-        col("r_score") * 100L + col("f_score") * 10L + col("m_score"))
-      .orderBy("o_custkey")
-  }
-
-  /** B66 (r13): incremental JOIN-view maintenance
-   * ([[graft.operators.Incremental.deltaJoin]]) — the missing member
-   * of the incremental family (B46 maintains aggregates, C37 dedup
-   * state; joined views need the classic delta rule). Orders and
-   * lineitem are split deterministically into old/delta slices
-   * (orderkey mod), the maintained view is refreshed as view_old ∪
-   * Δ(A⋈B), and the rollup is compared against the ORACLE'S FULL
-   * RECOMPUTE of the join — equality proves the delta rule emits
-   * every new pair exactly once (no old×old rescan, no duplicates,
-   * delta-sized shuffles only). */
-  private def qIncrementalJoin(s: SparkSession, dir: String): DataFrame = {
-    val o = t(s, dir, "orders")
-      .select(col("o_orderkey"), col("o_orderpriority"))
-    val l = t(s, dir, "lineitem")
-      .select(col("l_orderkey"),
-        cents(col("l_extendedprice") * (lit(1) - col("l_discount"))).as("rev"))
-    val (oOld, oDelta) = (o.filter(col("o_orderkey") % 5 =!= 0),
-      o.filter(col("o_orderkey") % 5 === 0))
-    val (lOld, lDelta) = (l.filter(col("l_orderkey") % 7 =!= 0),
-      l.filter(col("l_orderkey") % 7 === 0))
-    val viewOld = oOld.join(lOld, col("o_orderkey") === col("l_orderkey"))
-    val viewNew = viewOld.unionByName(
-      graft.operators.Incremental.deltaJoin(
-        oOld, oDelta, lOld, lDelta, "o_orderkey", "l_orderkey"))
-    viewNew.groupBy("o_orderpriority")
-      .agg(count(lit(1)).as("n_rows"), sum("rev").as("rev_cents"))
-      .orderBy("o_orderpriority")
-  }
-
-  /** B67 (r13): exact weighted quantiles
-   * ([[graft.operators.WeightedQuantile]]) — quantity-weighted
-   * price percentiles of lineitem (p25/p50/p90/p99 in cents). The
-   * naive form is a global sort with a running weight sum (single
-   * partition over the facts); the operator's two-level bucket
-   * decomposition makes both data-sized passes scans and confines
-   * sorting to the bounded bucket domain. All integer arithmetic —
-   * the oracle replays the sequential running-sum definition and
-   * must match bit-for-bit. */
-  private def qWeightedQuantile(s: SparkSession, dir: String): DataFrame = {
-    val li = t(s, dir, "lineitem").select(cents(col("l_extendedprice")).as("v"),
-      col("l_quantity").cast("long").as("w"))
-    graft.operators.WeightedQuantile.weightedQuantiles(li, "v", "w",
-        ppms = Seq(250000L, 500000L, 900000L, 990000L), bucketWidth = 100000L)
-      .select(col("q_ppm"), col("value").as("value_cents"))
-      .orderBy("q_ppm")
-  }
-
-  /** B68 (r13): join preflight diagnostics
-   * ([[graft.operators.JoinDiag]]) — the hot-key report run BEFORE
-   * an expensive equi-join (here: the lineitem co-purchase self-join
-   * shape B55 actually pays). Shuffles carry one row per DISTINCT
-   * key, never the facts; top-20 by output contribution under a
-   * total order is TakeOrdered, not a global sort. The report is
-   * what decides broadcast vs B13's saltedJoin vs filter. */
-  private def qJoinProfile(s: SparkSession, dir: String): DataFrame = {
-    val li = t(s, dir, "lineitem")
-    graft.operators.JoinDiag.joinProfile(
-      li, li.filter(col("l_returnflag") === "R"),
-      "l_partkey", "l_partkey", topN = 20)
-  }
-
-  /** B69 (r13): point-in-time join to a type-2 dimension
-   * ([[graft.operators.Scd.pitJoin]]) — each purchase joined to the
-   * activity state the user was in AT purchase time (dimension =
-   * A13's SCD2 build over the user's non-purchase events). The
-   * canonical fact→SCD2 temporal join, ridden on B15's one-exchange
-   * as-of carry-forward instead of an interval-containment range
-   * probe; purchases before the user's first state row report
-   * 'none'. Oracle replays the interval-containment join literally —
-   * equality proves the as-of reduction (intervals tile the
-   * timeline) and the zero-width-interval drop exact. */
-  private def qPitJoin(s: SparkSession, dir: String): DataFrame = {
-    val ev = withEventTime(t(s, dir, "events"))
-      .select(col("user_id"), col("event_id"), col("event_type"),
-        col("ts_us"), col("value"))
-    val dim = graft.operators.Scd.type2(
-      ev.filter(col("event_type") =!= "purchase").drop("value"),
-      "user_id", "ts_us", Seq("event_type"), tieCol = "event_id")
-    val purchases = ev.filter(col("event_type") === "purchase")
-      .select(col("event_id"), col("user_id"), col("ts_us"),
-        cents(col("value")).as("rev_cents"))
-    graft.operators.Scd.pitJoin(purchases, dim,
-        "user_id", "user_id", "ts_us", payload = Seq("event_type"))
-      .select(col("event_id"),
-        coalesce(col("pit_event_type"), lit("none")).as("state"),
-        col("rev_cents"))
-      .orderBy("event_id")
-  }
-
-  /** B93 (r14): top-k + OTHERS report
-   * ([[graft.operators.TopK.topKWithOthers]]) — each nation's top-3
-   * part brands by revenue plus the completeness bucket: the rows
-   * account for 100% of the nation's mass, so "top 3 are 40%" and
-   * "the tail is the story" are both readable. The rank window sorts
-   * the (nation, brand) ROLLUP — label domains, never facts — and
-   * the OTHERS fold + share window reuse the same partitioning.
-   * Revenue stays in exact cents×pct integers. */
-  private def qTopkOthers(s: SparkSession, dir: String): DataFrame = {
-    val li = t(s, dir, "lineitem").select(col("l_orderkey"), col("l_partkey"),
-      (cents(col("l_extendedprice")) * cents(lit(1.0) - col("l_discount")))
-        .as("rev_e4"))
-    val o = t(s, dir, "orders").select(col("o_orderkey"), col("o_custkey"))
-    val c = t(s, dir, "customer").select(col("c_custkey"), col("c_nationkey"))
-    val n = t(s, dir, "nation").select(col("n_nationkey"), col("n_name"))
-    val p = t(s, dir, "part").select(col("p_partkey"), col("p_brand"))
-    val rollup = li
-      .join(o, col("l_orderkey") === col("o_orderkey"))
-      .join(broadcast(c), col("o_custkey") === col("c_custkey"))
-      .join(broadcast(n), col("c_nationkey") === col("n_nationkey"))
-      .join(broadcast(p), col("l_partkey") === col("p_partkey"))
-      .groupBy("n_name", "p_brand").agg(sum("rev_e4").as("rev_e4"))
-    graft.operators.TopK.topKWithOthers(rollup, Seq("n_name"), "p_brand",
-        "rev_e4", k = 3)
-      .select(col("n_name"), col("p_brand"), col("rank"), col("rev_e4"),
-        col("n_members"), col("share_ppm"))
-      .orderBy("n_name", "rank")
-  }
-
-  /** B94 (r14): clamped running balance
-   * ([[graft.operators.Balance.clampedFinal]]) — per-user wallet
-   * where credits are purchases/signups and debits are views/errors,
-   * and the balance CANNOT go negative (an over-large debit partially
-   * absorbs to zero). The recurrence y_t = max(0, y_{t−1}+x_t) looks
-   * recursion-only; the prefix-min closed form does it in two
-   * running windows over one sort, and `rejected_cents` is the
-   * cumulative clamped-away demand. The oracle replays both windows
-   * sequential-definition-style. */
-  private def qClampedBalance(s: SparkSession, dir: String): DataFrame = {
-    val ev = withEventTime(t(s, dir, "events"))
-      .filter(col("event_type").isin("purchase", "signup", "view", "error"))
-      .select(col("user_id"),
-        struct(col("ts_us"), col("event_id")).as("ord"),
-        when(col("event_type").isin("purchase", "signup"), cents(col("value")))
-          .otherwise(-cents(col("value"))).as("delta"))
-    graft.operators.Balance.clampedFinal(ev, "user_id", "ord", "delta")
-      .select(col("user_id"), col("n_tx"), col("net").as("net_cents"),
-        col("rejected_total").as("rejected_cents"),
-        col("final_balance").as("balance_cents"))
-      .orderBy("user_id")
-  }
-
-  /** B100 (r14): exact correlation matrix
-   * ([[graft.operators.Correlation.pairwiseR2]]) — Pearson r² (ppm) +
-   * sign for every pair of four lineitem measures, WITHOUT floats:
-   * `corr()` accumulates doubles in reduction order (non-replayable);
-   * the integer sufficient statistics are exact under any order, and
-   * n-normalized before squaring so the quotient survives 10¹² rows.
-   * ONE single-pass aggregation computes all ten sums. */
-  private def qCorrMatrix(s: SparkSession, dir: String): DataFrame = {
-    val li = t(s, dir, "lineitem").select(
-      round(col("l_quantity"), 0).cast("long").as("qty"),
-      round(col("l_extendedprice"), 0).cast("long").as("price_usd"),
-      round(col("l_discount") * 100, 0).cast("long").as("disc_pct"),
-      round(col("l_tax") * 100, 0).cast("long").as("tax_pct"))
-    graft.operators.Correlation.pairwiseR2(li,
-        Seq("qty", "price_usd", "disc_pct", "tax_pct"))
-      .orderBy("measure_a", "measure_b")
-  }
-
-  /** B99 (r14): tail attribution — "which market segments drive the
-   * top decile of order values": the global p90 cut is ONE broadcast
-   * percentile_disc (the B82/C50 rank-statistic pattern, no global
-   * sort), and each segment reports its tail presence against its
-   * overall presence — over_rep_ppm > 1e6 means the segment is
-   * over-represented in the tail (the "who drives the p99 latency"
-   * question in revenue form). All-integer ppm. */
-  private def qTailAttribution(s: SparkSession, dir: String): DataFrame = {
-    val o = t(s, dir, "orders")
-      .join(broadcast(t(s, dir, "customer")
-        .select(col("c_custkey"), col("c_mktsegment"))),
-        col("o_custkey") === col("c_custkey"))
-      .select(col("c_mktsegment"), cents(col("o_totalprice")).as("c"))
-    val cut = o.agg(
-      expr("percentile_disc(0.9) within group (order by c)").cast("long")
-        .as("p90"))
-    val g = o.crossJoin(broadcast(cut))
-      .groupBy("c_mktsegment")
-      .agg(count(lit(1)).as("n_orders"),
-        sum(when(col("c") > col("p90"), 1L).otherwise(0L)).as("n_tail"),
-        sum(when(col("c") > col("p90"), col("c")).otherwise(0L))
-          .as("tail_cents"))
-    val tot = g.agg(sum("n_orders").as("n_all"), sum("n_tail").as("tail_all"))
-    g.crossJoin(broadcast(tot))
-      .withColumn("overall_share_ppm", expr("n_orders * 1000000 div n_all"))
-      .withColumn("tail_share_ppm", expr("n_tail * 1000000 div tail_all"))
-      // over-representation index: (tail share) / (overall share), in
-      // decimal(38,0) — the cross product overflows bigint at ~1e9 rows
-      .withColumn("over_rep_ppm", expr(
-        """cast(n_tail as decimal(38,0)) * n_all * 1000000
-           div (cast(n_orders as decimal(38,0)) * tail_all)"""))
-      .drop("n_all", "tail_all")
-      .orderBy("c_mktsegment")
-  }
-
-  /** B101 (r14): business-day calendar arithmetic
-   * ([[graft.functions.Calendars]]) — per ship-month fulfilment
-   * report: working-day ship→receipt lag, 10-business-day SLA hit
-   * count, and the promised-date span, all via the CLOSED-FORM weekday
-   * ordinal (codegen'd integer ops on the scan) instead of the
-   * calendar-dimension range join that explodes every fact into its
-   * day span. The oracle counts weekdays the independent way —
-   * generate_series + isodow — so the closed form is machine-checked
-   * against the enumeration, not replayed. */
-  private def qBusinessDays(s: SparkSession, dir: String): DataFrame = {
-    import graft.functions.Calendars
-    // receipt = ship + a deterministic 1..25-calendar-day lag (the
-    // driver's lineitem carries only l_shipdate; the B98 carve pattern)
-    val li = t(s, dir, "lineitem").select(
-      to_date(col("l_shipdate")).as("ship"),
-      date_add(to_date(col("l_shipdate")),
-        (round(col("l_quantity"), 0).cast("int") % 25) + 1).as("rcpt"))
-    li.withColumn("bd", Calendars.businessDaysBetween(col("ship"), col("rcpt")))
-      .withColumn("gap",
-        datediff(Calendars.addBusinessDays(col("ship"), 10), col("ship"))
-          .cast("long"))
-      .groupBy(date_format(col("ship"), "yyyy-MM").as("ym"))
-      .agg(
-        count(lit(1)).as("n_items"),
-        sum("bd").as("sum_bd"),
-        sum(when(col("bd") <= 10, 1L).otherwise(0L)).as("sla10_met"),
-        sum("gap").as("promised_gap_days"))
-      .withColumn("avg_bd_c", expr("sum_bd * 100 div n_items"))
-      .select(col("ym"), col("n_items"), col("sum_bd"), col("avg_bd_c"),
-        col("sla10_met"), col("promised_gap_days"))
-      .orderBy("ym")
-  }
-
-  /** B102 (r14): price–volume–mix revenue bridge
-   * ([[graft.operators.Bridge.priceVolumeMix]]) — 1994→1995 revenue
-   * change per brand decomposed into price, volume, new-part, and
-   * discontinued-part effects at PART grain (so brand mix shifts show
-   * as offsetting price/volume terms, not a meaningless brand-average
-   * price); the four effects re-add to the delta EXACTLY by
-   * construction. Facts touched once by a map-side (part, period)
-   * rollup; the decimal(38,0) volume product survives where bigint
-   * cents×quantity silently wraps. */
-  private def qPvmBridge(s: SparkSession, dir: String): DataFrame = {
-    val li = t(s, dir, "lineitem")
-      .withColumn("yr", year(to_date(col("l_shipdate"))))
-      .filter(col("yr").isin(1994, 1995))
-      .select(col("l_partkey"), (col("yr") === 1995).as("is_p2"),
-        round(col("l_quantity"), 0).cast("long").as("q"),
-        cents(col("l_extendedprice")).as("r"))
-    val p = t(s, dir, "part").select(col("p_partkey"), col("p_brand"))
-    val facts = li.join(broadcast(p), col("l_partkey") === col("p_partkey"))
-    graft.operators.Bridge
-      .priceVolumeMix(facts, "p_partkey", "p_brand", "is_p2", "q", "r")
-      .orderBy("p_brand")
-  }
-
-  /** B103 (r14): CUSUM drift alarms
-   * ([[graft.operators.Balance.cusumAlarms]]) — per-nation monthly
-   * revenue watched for a SUSTAINED level shift (a deterministic +50%
-   * shift injected from month 48 on nations ≡ 0 mod 5), reference =
-   * each nation's first-36-month mean, slack 5%, threshold = ref. The
-   * sequential-looking CUSUM recurrence runs as B94's prefix-min
-   * closed form: two running windows over one per-key sort. The
-   * oracle replays panel, reference, both windows, and the alarm
-   * rollup bit-for-bit. */
-  private def qCusumDrift(s: SparkSession, dir: String): DataFrame = {
-    val o = t(s, dir, "orders").select(col("o_custkey"),
-      ((year(to_date(col("o_orderdate"))) - 1992) * 12 +
-        month(to_date(col("o_orderdate"))) - 1).cast("long").as("m"),
-      cents(col("o_totalprice")).as("rev"))
-    val c = t(s, dir, "customer").select(col("c_custkey"), col("c_nationkey"))
-    val n = t(s, dir, "nation").select(col("n_nationkey"), col("n_name"))
-    val monthly = o.join(broadcast(c), col("o_custkey") === col("c_custkey"))
-      .join(broadcast(n), col("c_nationkey") === col("n_nationkey"))
-      .groupBy("n_nationkey", "n_name", "m").agg(sum("rev").as("rev_cents"))
-    val months = monthly.agg(max("m").as("mx"))
-      .select(explode(sequence(lit(0L), col("mx"))).as("m"))
-    val panel = n.crossJoin(broadcast(months))
-      .join(monthly, Seq("n_nationkey", "n_name", "m"), "left")
-      .withColumn("rev_cents", coalesce(col("rev_cents"), lit(0L)))
-      .withColumn("x", col("rev_cents") +
-        when(col("m") >= 48 && col("n_nationkey") % 5 === 0,
-          expr("rev_cents div 2")).otherwise(0L))
-    val ref = panel
-      .groupBy(col("n_name").as("ref_name"))
-      .agg(expr("sum(case when m < 36 then x else 0 end) div 36").as("ref"))
-      .withColumn("slack", expr("ref div 20"))
-      .withColumn("h", col("ref"))
-    val series = panel.join(broadcast(ref), col("n_name") === col("ref_name"))
-    graft.operators.Balance
-      .cusumAlarms(series, "n_name", "m", "x", "ref", "slack", "h")
-      .select(col("n_name"), col("n_points"), col("max_cusum"),
-        col("n_alarm"), col("first_alarm_ord").as("first_alarm_m"))
-      .orderBy("n_name")
-  }
-
-  /** B104 (r14): leaderboard dynamics ("movers & shakers") — each
-   * month's product-type revenue ranking with the CALENDAR-aligned
-   * rank delta and churn status: a lag over present months silently
-   * compares against the previous PRESENT month (the B87 bug applied
-   * to ranks), so ranks ride the bounded month×type spine and an
-   * absence is an explicit 'exited' row, never a skipped comparison.
-   * Ranks are computed on the PRE-AGGREGATED month×group rollup (the
-   * B62 dedup-ahead-of-window discipline — the window sorts 200
-   * product groups per month, never facts) with a deterministic
-   * (rev desc, group asc) tie-break. Product group = partkey div 10:
-   * sparse enough (~3% absent months) that every churn branch
-   * genuinely fires. */
-  private def qRankMovers(s: SparkSession, dir: String): DataFrame = {
-    val li = t(s, dir, "lineitem").select(
-      expr("l_partkey div 10").as("grp"),
-      ((year(to_date(col("l_shipdate"))) - 1992) * 12 +
-        month(to_date(col("l_shipdate"))) - 1).cast("long").as("m"),
-      cents(col("l_extendedprice")).as("rev"))
-    val monthly = li
-      .groupBy("m", "grp").agg(sum("rev").as("rev_cents"))
-    val ranked = monthly.withColumn("rank",
-      row_number().over(Window.partitionBy("m")
-        .orderBy(col("rev_cents").desc, col("grp").asc)).cast("long"))
-    val bounds = monthly.agg(min("m").as("mn"), max("m").as("mx"))
-    val months = bounds
-      .select(col("mn"), explode(sequence(col("mn"), col("mx"))).as("m"))
-    val panel = t(s, dir, "part").select(expr("p_partkey div 10").as("grp"))
-      .distinct()
-      .crossJoin(broadcast(months))
-      .join(ranked, Seq("m", "grp"), "left")
-    val w = Window.partitionBy("grp").orderBy("m")
-    panel
-      .withColumn("prev_rank", lag("rank", 1).over(w))
-      .withColumn("status",
-        when(col("rank").isNotNull && col("m") === col("mn"), "first")
-          .when(col("rank").isNotNull && col("prev_rank").isNull, "entered")
-          .when(col("rank").isNull && col("prev_rank").isNotNull, "exited")
-          .otherwise("ranked"))
-      .filter(col("rank").isNotNull || col("prev_rank").isNotNull)
-      .withColumn("rank_delta", col("prev_rank") - col("rank"))
-      .select(col("m"), col("grp"), col("rev_cents"),
-        col("rank").as("rnk"), col("prev_rank").as("prev_rnk"),
-        col("rank_delta"), col("status"))
-      .orderBy("m", "grp")
-  }
-
-  /** B106 (r14): TIME-BOUNDED funnel — view → click within 1h →
-   * purchase within 24h, each stage anchored at the user's FIRST
-   * qualifying event: the conversion report B34's unbounded funnel
-   * and B97's order-only patterns cannot answer ("how many convert
-   * within the SLA window, and how fast"). Three keyed min-aggregates
-   * chained by co-partitioned user joins — the fact stream is
-   * touched once per stage, never self-joined event-to-event. */
-  private def qFunnelWindowed(s: SparkSession, dir: String): DataFrame = {
-    val ev = withEventTime(t(s, dir, "events"))
-      .select(col("user_id"), col("event_type"),
-        unix_micros(col("ts")).as("ts_us"))
-    val v = ev.filter(col("event_type") === "view")
-      .groupBy("user_id").agg(min("ts_us").as("vt"))
-    val c = ev.filter(col("event_type") === "click")
-      .join(v, Seq("user_id"))
-      .filter(col("ts_us") > col("vt") &&
-        col("ts_us") <= col("vt") + 3600000000L)
-      .groupBy("user_id").agg(min("ts_us").as("ct"))
-    val p = ev.filter(col("event_type") === "purchase")
-      .join(c, Seq("user_id"))
-      .filter(col("ts_us") > col("ct") &&
-        col("ts_us") <= col("ct") + 86400000000L)
-      .groupBy("user_id").agg(min("ts_us").as("pt"))
-    v.join(c, Seq("user_id"), "left").join(p, Seq("user_id"), "left")
-      .agg(
-        count(lit(1)).as("n_viewed"),
-        count(col("ct")).as("n_clicked"),
-        count(col("pt")).as("n_purchased"),
-        sum(col("ct") - col("vt")).as("sum_click_lag_us"),
-        sum(col("pt") - col("ct")).as("sum_purchase_lag_us"))
-      .withColumn("view_click_ppm", expr("n_clicked * 1000000 div n_viewed"))
-      .withColumn("click_purchase_ppm",
-        expr("n_purchased * 1000000 div nullif(n_clicked, 0)"))
-  }
-
-  /** B98 (r14): layered interval resolution
-   * ([[graft.operators.Layers.effectiveIntervals]]) — overlapping
-   * price rules per part (each lineitem opens a rule for 10–29 days,
-   * priority = line number, unique tie = order·10+line) resolved into
-   * the minimal effective timeline: highest-priority covering price
-   * at every instant, uncovered gaps absent, adjacent same-winner
-   * segments merged. The oracle replays boundaries, covering join,
-   * lexicographic winner, and the run merge. */
-  private def qEffectiveConfig(s: SparkSession, dir: String): DataFrame = {
-    val iv = t(s, dir, "lineitem").filter(col("l_partkey") % 7 === 0)
-      .select(col("l_partkey"),
-        datediff(to_date(col("l_shipdate")), lit("1970-01-01").cast("date"))
-          .cast("long").as("vf"),
-        round(col("l_quantity"), 0).cast("long").as("q"),
-        col("l_linenumber").cast("long").as("prio"),
-        (col("l_orderkey") * 10L + col("l_linenumber")).as("tie"),
-        cents(col("l_extendedprice")).as("price_cents"))
-      .withColumn("vt", col("vf") + 10L + col("q") % 20L)
-      .drop("q")
-    graft.operators.Layers.effectiveIntervals(iv, "l_partkey", "vf", "vt",
-        "prio", "tie", "price_cents")
-      .orderBy("l_partkey", "seg_start")
-  }
-
-  /** B97 (r14): ordered-sequence pattern matching
-   * ([[graft.operators.Patterns.matchPattern]]) — MATCH_RECOGNIZE's
-   * core over each user's chronological event initials: did the user
-   * view, then (eventually) click, then purchase — and how many
-   * view→purchase motifs with no error in between? Full regex over
-   * event ORDER; one hash aggregation builds the per-user symbol
-   * string, no window sort. */
-  private def qSequencePattern(s: SparkSession, dir: String): DataFrame = {
-    val ev = withEventTime(t(s, dir, "events"))
-      .select(col("user_id"),
-        struct(col("ts_us"), col("event_id")).as("ord"),
-        substring(col("event_type"), 1, 1).as("sym"))
-    graft.operators.Patterns
-      .matchPattern(ev, "user_id", "ord", "sym", "v[^e]*c[^e]*p")
-      .select(col("user_id"), col("seq_len"), col("matched"),
-        col("n_matches"))
-      .orderBy("user_id")
-  }
-
-  /** B96 (r14): market-basket association
-   * ([[graft.operators.Baskets.pairStats]]) — support / confidence /
-   * lift for part-brand pairs co-purchased in an order ("bought A,
-   * also bought B"), the association-rule relation MLlib only offers
-   * model-shaped. Pair generation is a per-order self-join (output
-   * bounded by basket width choose 2, never brand-domain²); marginals
-   * and the order total broadcast; lift runs in decimal(38,0). */
-  private def qBasketLift(s: SparkSession, dir: String): DataFrame = {
-    val li = t(s, dir, "lineitem").select(col("l_orderkey"), col("l_partkey"))
-    val p = t(s, dir, "part").select(col("p_partkey"), col("p_brand"))
-    val baskets = li.join(broadcast(p), col("l_partkey") === col("p_partkey"))
-      .select(col("l_orderkey"), col("p_brand"))
-    graft.operators.Baskets.pairStats(baskets, "l_orderkey", "p_brand",
-        minPairCount = 5L)
-      .orderBy("item_a", "item_b")
-  }
-
-  /** B95 (r14): FIFO cost basis ([[graft.operators.Fifo.fifoCogs]]) —
-   * per part, returns ('R' rows, the outflow) costed against the
-   * oldest unconsumed inflows in ship order. The sequential
-   * two-pointer walk becomes interval intersection on the
-   * cumulative-quantity axis (FIFO consumes units in arrival order,
-   * so lot assignment IS range overlap), ridden on the banded join —
-   * no recursion, no per-key nested loop. Oversold parts surface as
-   * `unmatched_qty`, never silently costed at zero. */
-  private def qFifoCogs(s: SparkSession, dir: String): DataFrame = {
-    val txns = t(s, dir, "lineitem").select(
-      col("l_partkey"),
-      struct(col("l_shipdate"), col("l_orderkey"), col("l_linenumber")).as("ord"),
-      round(col("l_quantity"), 0).cast("long").as("q"),
-      (col("l_returnflag") === "R").as("is_out"),
-      expr(s"${"cast(round(l_extendedprice * 100, 0) as bigint)"} div cast(round(l_quantity, 0) as bigint)")
-        .as("unit_cost"))
-    graft.operators.Fifo.fifoCogs(txns, "l_partkey", "ord", "q", "is_out",
-        "unit_cost")
-      .select("l_partkey", "in_qty", "out_qty", "matched_qty",
-        "unmatched_qty", "cogs")
-      .orderBy("l_partkey")
-  }
-
-  /** B105 (r14): inventory aging report
-   * ([[graft.operators.Fifo.agingBuckets]]) — the balance-sheet
-   * complement of B95: under FIFO the on-hand remnant of each lot is
-   * CLOSED-FORM arithmetic on the cumulative axis (everything below
-   * the key's total outflow is consumed, everything above survives),
-   * so the whole report is one prefix window + a key-sized total
-   * join + a bucket rollup — no intersection join at all. Same
-   * movement carve as q_fifo_cogs; as-of day 2557 (past the last
-   * ship date), year-width age buckets. */
-  private def qInventoryAging(s: SparkSession, dir: String): DataFrame = {
-    val txns = t(s, dir, "lineitem").select(
-      col("l_partkey"),
-      struct(col("l_shipdate"), col("l_orderkey"), col("l_linenumber")).as("ord"),
-      datediff(to_date(col("l_shipdate")), lit("1992-01-01").cast("date"))
-        .cast("long").as("day"),
-      round(col("l_quantity"), 0).cast("long").as("q"),
-      (col("l_returnflag") === "R").as("is_out"),
-      expr("""cast(round(l_extendedprice * 100, 0) as bigint)
-              div cast(round(l_quantity, 0) as bigint)""").as("unit_cost"))
-    graft.operators.Fifo.agingBuckets(txns, "l_partkey", "ord", "day",
-        "q", "is_out", "unit_cost", asOfDay = 2557L,
-        breaks = Seq(365L, 730L, 1095L))
-      .orderBy("bucket")
-  }
-
-  /** B92 (r14): bitemporal join ([[graft.operators.Bitemporal]]) —
-   * B69 asks "what state was VALID at purchase time"; this asks the
-   * two-timeline question "what state did the warehouse BELIEVE at
-   * the purchase's audit time, about the state valid at purchase
-   * time". Dim: the SCD2 state history, each version recorded
-   * 1–5 hours late (deterministic lag), every third interval later
-   * CORRECTED (payload starred, +10 hours knowledge lag). Facts audit
-   * 7 hours after the event — so early purchases must resolve to the
-   * original version and late ones to the correction, and purchases
-   * before the first known state survive as 'none'. The oracle
-   * replays the full two-timeline resolution in SQL. */
-  private def qBitemporalJoin(s: SparkSession, dir: String): DataFrame = {
-    val hourUs = 3600000000L
-    val ev = withEventTime(t(s, dir, "events"))
-      .select(col("user_id"), col("event_id"), col("event_type"),
-        col("ts_us"), col("value"))
-    val base = graft.operators.Scd.type2(
-      ev.filter(col("event_type") =!= "purchase").drop("value"),
-      "user_id", "ts_us", Seq("event_type"), tieCol = "event_id")
-    val dim0 = base.withColumn("sf",
-      col("valid_from") + (expr("(valid_from div 1000000) % 5") + 1L) * hourUs)
-    val corr = dim0.filter(expr("(valid_from div 1000000) % 3 = 0"))
-      .withColumn("event_type", concat(col("event_type"), lit("*")))
-      .withColumn("sf", col("sf") + lit(10L) * hourUs)
-    val purchases = ev.filter(col("event_type") === "purchase")
-      .select(col("event_id"), col("user_id"), col("ts_us"),
-        cents(col("value")).as("rev_cents"),
-        (col("ts_us") + lit(7L) * hourUs).as("audit_us"))
-    graft.operators.Bitemporal.bitemporalJoin(
-        purchases, dim0.unionByName(corr),
-        factId = "event_id", factKey = "user_id", dimKey = "user_id",
-        validAt = "ts_us", auditAt = "audit_us",
-        validFrom = "valid_from", validTo = "valid_to", sysFrom = "sf",
-        payload = Seq("event_type"), tieCol = "valid_from")
-      .select(col("event_id"),
-        coalesce(col("bt_event_type"), lit("none")).as("state"),
-        col("bt_sys_from").as("known_sys_us"), col("rev_cents"))
-      .orderBy("event_id")
-  }
-
-  /** B70 (r13): window-function conformance — the full ranking/
-   * navigation surface (rank, dense_rank, percent_rank, cume_dist,
-   * ntile, lag/lead, first/last/nth_value with an explicit
-   * full-partition frame) on one deterministic total order,
-   * value-compared per row against DuckDB. The row that certifies a
-   * reference user's window queries transfer wholesale; percent_rank
-   * and cume_dist are IEEE divisions of identical integers, so even
-   * the doubles compare bit-stable. */
-  private def qWindowConformance(s: SparkSession, dir: String): DataFrame = {
-    val w = Window.partitionBy("o_custkey")
-      .orderBy(col("o_orderdate"), col("o_orderkey"))
-    val full = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    t(s, dir, "orders")
-      .select(col("o_custkey"), col("o_orderkey"), col("o_orderdate"),
-        cents(col("o_totalprice")).as("c"))
-      .select(col("o_custkey"), col("o_orderkey"),
-        rank().over(w).cast("long").as("rnk"),
-        dense_rank().over(w).cast("long").as("drnk"),
-        percent_rank().over(w).as("prnk"),
-        cume_dist().over(w).as("cdist"),
-        ntile(4).over(w).cast("long").as("quartile"),
-        lag("c", 1).over(w).as("prev_c"),
-        lead("c", 1).over(w).as("next_c"),
-        first("c").over(full).as("first_c"),
-        last("c").over(full).as("last_c"),
-        nth_value(col("c"), 2).over(full).as("second_c"))
-      .orderBy("o_custkey", "o_orderkey")
-  }
-
-  /** B71 (r13): NULL-semantics conformance — the aggregate/distinct/
-   * grouping/null-safe-join behaviors every migration trips over,
-   * pinned in one result: COUNT(*) vs COUNT(col) vs COUNT(DISTINCT
-   * col) under nulls, SUM over an all-null slice, nulls as their own
-   * GROUP BY key, and a null-safe equality join (Spark `<=>` ≡ SQL
-   * IS NOT DISTINCT FROM) counting the null-key match the plain
-   * equi-join drops. Nulls are carved deterministically out of
-   * order priorities. */
-  private def qNullSemantics(s: SparkSession, dir: String): DataFrame = {
-    val o = t(s, dir, "orders").select(col("o_orderkey"),
-      nullif(col("o_orderpriority"), lit("1-URGENT")).as("prio"),
-      cents(col("o_totalprice")).as("c"))
-    val counts = o.agg(
-      count(lit(1)).as("a"), count(col("prio")).as("b"),
-      countDistinct(col("prio")).as("cd"),
-      sum(when(col("prio").isNull, col("c"))).as("d"))
-      .select(explode(array(
-        struct(lit("count_star").as("metric"), col("a").as("value")),
-        struct(lit("count_col").as("metric"), col("b").as("value")),
-        struct(lit("count_distinct").as("metric"), col("cd").as("value")),
-        struct(lit("sum_null_slice_cents").as("metric"), col("d").as("value"))))
-        .as("m"))
-      .select(col("m.metric"), col("m.value"))
-    val nullGroup = o.groupBy("prio").agg(count(lit(1)).as("n"))
-      .select(concat(lit("group:"), coalesce(col("prio"), lit("NULL"))).as("metric"),
-        col("n").as("value"))
-    val l = o.select(col("prio").as("lp"))
-    val r = o.select(col("prio").as("rp")).distinct()
-    val joins = l.join(r, col("lp") === col("rp"))
-      .agg(count(lit(1)).as("eq"))
-      .crossJoin(l.join(r, col("lp") <=> col("rp"))
-        .agg(count(lit(1)).as("nseq")))
-      .select(explode(array(
-        struct(lit("join_eq_rows").as("metric"), col("eq").as("value")),
-        struct(lit("join_null_safe_rows").as("metric"), col("nseq").as("value"))))
-        .as("m"))
-      .select(col("m.metric"), col("m.value"))
-    counts.unionByName(nullGroup).unionByName(joins).orderBy("metric")
-  }
-
-  /** A16 (r13): ORC sink/source fidelity — the second columnar
-   * format a lake migration meets (Hive-era tables are ORC). A typed
-   * slice of orders — longs, strings WITH a null carve, timestamps,
-   * cents-scaled money — is written to ORC, read back, and rolled
-   * up; the oracle computes the same rollup from the ORIGINAL
-   * parquet table, so any type coercion, timezone shift, or null
-   * mangling in the ORC writer/reader path fails the row rather
-   * than slipping through a same-path roundtrip compare. */
-  private def qOrcRoundtrip(s: SparkSession, dir: String): DataFrame = {
-    val path = s"${graft.Scratch.root(s)}/orc_${new java.io.File(dir).getName}"
-    t(s, dir, "orders").select(col("o_orderkey"), col("o_custkey"),
-        nullif(col("o_orderpriority"), lit("1-URGENT")).as("prio"),
-        col("o_orderdate"), cents(col("o_totalprice")).as("cents"))
-      .write.mode("overwrite").orc(path)
-    val back = s.read.orc(path)
-    back.groupBy(year(col("o_orderdate")).as("yr"))
-      .agg(count(lit(1)).as("n_orders"), sum("cents").as("sum_cents"),
-        sum(when(col("prio").isNull, 1L).otherwise(0L)).as("n_null_prio"),
-        countDistinct("o_custkey").as("n_cust"))
-      .orderBy("yr")
-  }
-
-  /** B72 (r13): adaptive (hot-key-only) salted join
-   * ([[graft.operators.Skew.adaptiveSaltedJoin]]) — B13 salts every
-   * key, replicating the whole build side; the production shape
-   * detects hot probe keys inline (B68's preflight as one
-   * distinct-key count), broadcasts the bounded hot set, salts ONLY
-   * the hot slices and joins the cold rest plain. Skew is carved
-   * deterministically (~30% of lineitem rows collapse onto one part
-   * key); oracle is the plain unsalted join — equality proves the
-   * hot/cold split partitions both sides consistently. */
-  private def qAdaptiveSalt(s: SparkSession, dir: String): DataFrame = {
-    val probe = t(s, dir, "lineitem").select(
-      when(col("l_orderkey") % 10 < 3, 1L).otherwise(col("l_partkey")).as("k"),
-      cents(col("l_extendedprice")).as("c"))
-    val build = t(s, dir, "part").select(col("p_partkey"), col("p_brand"))
-    graft.operators.Skew.adaptiveSaltedJoin(probe, build, "k", "p_partkey",
-        saltFactor = 16, hotThreshold = 1000L)
-      .groupBy("p_brand")
-      .agg(count(lit(1)).as("n_items"), sum("c").as("sum_cents"))
-      .orderBy("p_brand")
-  }
-
-  /** C51 (r13): per-class embedding centroid audit — the
-   * embedding-space statistic a dataset curator watches (class
-   * centroids drift when an encoder or labeler changes; the
-   * per-class mean is also the seed for C44's SemDeDup cells).
-   * Exact integer space end-to-end: elements scale to micros, sums
-   * are longs, and the centroid is an integer division — Spark `div`
-   * and DuckDB `//` BOTH truncate toward zero (verified on negative
-   * sums; it is SQL-standard floor `//` engines like Python that
-   * would need the pmod floor-div adaptation here). One posexplode →
-   * map-side-combined (label, dim) aggregate; shuffle carries
-   * labels × dims rows, never vectors. */
-  private def qEmbeddingStats(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "embeddings")
-      .select(col("label"), posexplode(col("embedding")).as(Seq("dim", "x")))
-      .select(col("label"), col("dim").cast("long").as("dim"),
-        round(col("x") * 1000000d, 0).cast("long").as("micro"))
-      .groupBy("label", "dim")
-      .agg(count(lit(1)).as("n_vecs"), sum("micro").as("s"))
-      .select(col("label"), col("dim"), col("n_vecs"),
-        expr("s div n_vecs").as("centroid_micro"))
-      .orderBy("label", "dim")
-  }
-
-  /** C81 (r15): distributed PCA, the exact-integer moment pass
-   * ([[graft.functions.GramAggregate]]) — ONE map-side-combined
-   * aggregate whose state is dim(dim+1)/2 + dim + 1 longs regardless
-   * of corpus size (the shuffle carries one 33 KiB buffer per
-   * partition, never vectors). Coordinates quantize to micro-units
-   * (floor(x·10⁶ + 0.5), the C58 exact-integer discipline), so every
-   * upper-tri second moment, first moment, and the count are EXACT
-   * integers the oracle recomputes from the same parquet — the whole
-   * distributed half of PCA hash-checked. Output rows: (i, j, v) for
-   * i ≤ j = Σ qᵢqⱼ; (i, -1) = Σ qᵢ; (-1, -1) = n. */
-  private def qPcaGram(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val dim = 64
-    val (g, sv, n) = graft.similarity.Pca.gramStats(
-      t(s, dir, "embeddings"), "embedding", dim)
-    val rows = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
-    var idx = 0
-    for (i <- 0 until dim; j <- i until dim) {
-      rows += ((i.toLong, j.toLong, g(idx))); idx += 1
-    }
-    for (i <- 0 until dim) rows += ((i.toLong, -1L, sv(i)))
-    rows += ((-1L, -1L, n))
-    rows.toSeq.toDF("i", "j", "v").orderBy("i", "j")
-  }
-
-  /** C81b (r15): PCA projection + whitening invariants — the bounded
-   * driver eigensolve (deterministic cyclic Jacobi over the exact
-   * covariance) and the codegen'd y = Vᵀ(x − μ) projection pass
-   * ([[graft.functions.expressions.affineProject]]; matrix embeds in
-   * the plan, no shuffle). Eigen-VALUES are driver doubles a second
-   * engine cannot replay, so the row carries the PROVABLE invariants
-   * instead (the approximate-operator oracle pattern): per component,
-   * orthonormality of the eigenbasis (|vc·vd − δ| < 1e-8),
-   * descending-variance order, and — the end-to-end check that runs
-   * DISTRIBUTED — the whitened projection's population variance lands
-   * on 1 within 1% (covariance came from quantized micros, the
-   * projection runs on raw doubles; the gap is bounded by the
-   * quantization step). */
-  private def qPcaProject(s: SparkSession, dir: String): DataFrame = {
-    val dim = 64; val k = 8
-    val emb = t(s, dir, "embeddings")
-    val m = graft.similarity.Pca.fit(emb, "embedding", dim, k)
-    require(m.k == k, s"pca: expected $k components above floor, got ${m.k}")
-    def dot(c: Int, d: Int): Double =
-      (0 until dim).map(i => m.components(c * dim + i) * m.components(d * dim + i)).sum
-    val orthoOk = Array.tabulate(k)(c => (0 until k).forall { d =>
-      math.abs(dot(c, d) - (if (c == d) 1.0 else 0.0)) < 1e-8
-    })
-    val orderOk = Array.tabulate(k)(c =>
-      c == 0 || m.eigenvalues(c) <= m.eigenvalues(c - 1) + 1e-12)
-    val white = m.copy(components = Array.tabulate(k * dim) { idx =>
-      m.components(idx) / math.sqrt(m.eigenvalues(idx / dim))
-    })
-    val stats = emb
-      .select(posexplode(graft.similarity.Pca.projectColumn(white, col("embedding")))
-        .as(Seq("comp", "y")))
-      .groupBy("comp")
-      .agg(count(lit(1)).as("n"), sum("y").as("sy"), sum(col("y") * col("y")).as("syy"))
-      .select(col("comp").cast("long").as("component"), col("n").as("n_used"),
-        (abs(col("syy") / col("n") - (col("sy") / col("n")) * (col("sy") / col("n"))
-          - 1.0) < 0.01).as("var_ok"))
-    import emb.sparkSession.implicits._
-    val driverFlags = (0 until k)
-      .map(c => (c.toLong, orthoOk(c), orderOk(c)))
-      .toDF("component", "ortho_ok", "order_ok")
-    stats.join(broadcast(driverFlags), Seq("component"))
-      .select("component", "n_used", "ortho_ok", "order_ok", "var_ok")
-      .orderBy("component")
-  }
-
-  /** C82 (r15): int8 quantization calibration — the per-dimension
-   * min-max affine map a serving/training stack uses to ship
-   * embeddings at 1 byte/coordinate. Exact end-to-end: coordinates
-   * quantize to micro-units, calibration is a (pos → min, max)
-   * aggregate (dim-bounded, broadcast back), and the code is
-   * round-half-up((q−min)·255/range) computed IN INTEGERS
-   * (⌊((q−min)·510 + range) / 2·range⌋ — Spark `div` and DuckDB `//`
-   * both truncate), so the oracle replays every code bit-for-bit.
-   * Constant dimensions (range 0) code to 0. Scale shape: one
-   * posexplode pass + a 64-row broadcast join — no vector shuffle. */
-  private def qQuantizeInt8(s: SparkSession, dir: String): DataFrame = {
-    val q = t(s, dir, "embeddings")
-      .select(col("vec_id"), posexplode(col("embedding")).as(Seq("pos", "x")))
-      .select(col("vec_id"), col("pos").cast("long").as("pos"),
-        floor(col("x").cast("double") * 1000000d + 0.5).cast("long").as("qv"))
-    val cal = q.groupBy("pos").agg(min("qv").as("qmin"), max("qv").as("qmax"))
-    q.join(broadcast(cal), Seq("pos"))
-      .select(col("vec_id"), col("pos"),
-        when(col("qmax") === col("qmin"), 0L)
-          .otherwise(expr("((qv - qmin) * 510 + (qmax - qmin)) div (2 * (qmax - qmin))"))
-          .cast("long").as("code"))
-      .orderBy("vec_id", "pos")
-  }
-
-  /** C83 (r15): sequence-length bucketing / padding-waste report —
-   * the batch-shape audit a training loader runs before fixing bucket
-   * boundaries: docs bucket to a FIXED power-of-two token-cap ladder
-   * (16 … 4096, clamped at the top), and each bucket reports doc
-   * count, true token mass, padded mass (cap × docs), and waste ppm.
-   * The ladder is a CASE chain, not log2 (float log at exact powers
-   * of two is engine-dependent; integer compares are not). One scan +
-   * one small aggregate; the integer waste_ppm division truncates
-   * identically in both engines. */
-  private def qLengthBuckets(s: SparkSession, dir: String): DataFrame = {
-    val caps = Seq(16L, 32L, 64L, 128L, 256L, 512L, 1024L, 2048L, 4096L)
-    val toks = t(s, dir, "documents")
-      .select(size(TextFunctions.wsTokens(col("text"))).cast("long").as("n_tok"))
-    val cap = caps.init.foldRight(lit(caps.last): org.apache.spark.sql.Column) {
-      (c, acc) => when(col("n_tok") <= c, c).otherwise(acc)
-    }
-    toks.withColumn("cap", cap)
-      .groupBy("cap")
-      .agg(count(lit(1)).as("n_docs"), sum("n_tok").as("sum_tok"))
-      .select(col("cap"), col("n_docs"), col("sum_tok"),
-        (col("cap") * col("n_docs")).as("padded_tok"),
-        expr("(cap * n_docs - sum_tok) * 1000000 div (cap * n_docs)").as("waste_ppm"))
-      .orderBy("cap")
-  }
-
-  /** C84 (r15): distributed BPE merge induction
-   * ([[graft.text.Bpe.learnMerges]]) — the tokenizer-training core:
-   * the corpus collapses once to the (word, freq) vocabulary, then
-   * every merge round runs vocabulary-sized with ONE-row driver state
-   * (best pair by weighted replace-count, ties lexicographic —
-   * deterministic). The oracle unrolls the SAME eight rounds in
-   * DuckDB (generated CTE chain, the hash-replay precedent), so the
-   * learned merge table is hash-checked end to end. */
-  private def qBpeMerges(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    graft.text.Bpe.learnMerges(t(s, dir, "documents"), "text", 8)
-      .zipWithIndex
-      .map { case ((pair, merged, wcnt), i) => (i + 1L, pair, merged, wcnt) }
-      .toDF("merge_idx", "pair", "merged", "wcnt")
-      .orderBy("merge_idx")
-  }
-
-  /** C85 (r15): BPE segmentation report
-   * ([[graft.text.Bpe.segmentReport]]) — the learned merges applied
-   * back to the corpus: per doc, word count, symbols before (word
-   * characters) and tokens after the eight merges — the compression
-   * evidence that justifies a vocabulary budget. One corpus pass; the
-   * merge chain is a codegen'd per-row replace chain. */
-  private def qBpeApply(s: SparkSession, dir: String): DataFrame = {
-    val docs = t(s, dir, "documents")
-    val merges = graft.text.Bpe.learnMerges(docs, "text", 8).map(_._1)
-    graft.text.Bpe.segmentReport(docs, "doc_id", "text", merges)
-      .orderBy("doc_id")
-  }
-
-  /** C84b (r16): BATCHED BPE merge induction
-   * ([[graft.text.Bpe.learnMergesBatched]]) — the scale path of the
-   * C84 trainer (VERDICT r15 #4): real tokenizers learn 10⁴–10⁵
-   * merges, so rounds must not equal merges. Each round picks the
-   * top-8 pairwise symbol-disjoint pairs from a 32-candidate window
-   * (rank-window disjointness — one anti-join, engine-replayable)
-   * and applies them as one chain: ~5 disjoint picks materialize per
-   * round on this corpus, so 14 driver round trips learn 65+ merges
-   * (vs 65+ trips sequentially). The oracle unrolls the SAME 14
-   * batched rounds in DuckDB —
-   * candidate window, disjointness anti-join, pick cap, and the
-   * list_reduce replace fold — so the full merge table is
-   * hash-checked end to end. */
-  private def qBpeMergesBatched(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    graft.text.Bpe
-      .learnMergesBatched(t(s, dir, "documents"), "text", rounds = 14, kBatch = 8)
-      .zipWithIndex
-      .map { case ((round, pick, pair, merged, wcnt), i) =>
-        (i + 1L, round.toLong, pick.toLong, pair, merged, wcnt) }
-      .toDF("merge_idx", "round", "pick", "pair", "merged", "wcnt")
-      .orderBy("merge_idx")
-  }
-
-  /** B122 (r15): join-explosion audit — the pre-join sanity check a
-   * 100 TB pipeline runs BEFORE a self-join/equi-join on a suspect
-   * key: per key n, the join emits n² rows, so the audit reports the
-   * top-10 contributing keys (n² desc, key asc — deterministic) plus
-   * a total row (key −1: distinct keys, Σ n² = the exact output size
-   * a self-join would produce). One groupBy count + a bounded top-k;
-   * the Σ n² accumulates in decimal(38,0) and fails loudly past long
-   * range (B55 rule) rather than wrapping into a plausible lie. */
-  private def qJoinExplosion(s: SparkSession, dir: String): DataFrame = {
-    val c = t(s, dir, "events").groupBy("user_id")
-      .agg(count(lit(1)).as("n"))
-      .select(col("user_id"), col("n"), (col("n") * col("n")).as("pairs"))
-    val top = c.orderBy(col("pairs").desc, col("user_id")).limit(10)
-    val total = c.agg(
-        count(lit(1)).as("n"),
-        sum(col("pairs").cast(org.apache.spark.sql.types.DecimalType(38, 0))).as("p"))
-      .select(lit(-1L).as("user_id"), col("n"),
-        when(col("p") < lit(Long.MaxValue).cast("decimal(38,0)"),
-          col("p").cast("long"))
-          .otherwise(raise_error(lit("join explosion total past long range")))
-          .as("pairs"))
-    top.unionAll(total).orderBy(col("pairs").desc, col("user_id"))
-  }
-
-  /** B123 (r16): approximate query processing via deterministic
-   * key-cluster sampling — the "revenue per flag, roughly, NOW"
-   * capability: at 100 TB an exploratory aggregate should read a few
-   * percent of the data, not all of it. The sample is a stable hash
-   * bucket of the ORDER key (the C24 md5 discipline: engine-portable,
-   * retry/partition/scale-invariant — the same orders sample forever,
-   * so estimates are reproducible and deltas between runs are real),
-   * and the sampling UNIT is the key cluster: all lines of an order
-   * are in or out together, so order-correlated measures stay
-   * unbiased (row-level Bernoulli would undercount within-order
-   * correlation). Estimate = sample aggregate × 1/f in exact integer
-   * cents. The row carries the estimate AND its exact error in ppm
-   * against the full aggregate — the oracle pins both, so the
-   * estimator's determinism and its accuracy accounting are
-   * hash-checked, not asserted. In production the sampled scan is the
-   * only pass (filter rides the parquet scan; with the bucket
-   * materialized as a partition/sort column it prunes to ~f of the
-   * files); the full pass here exists to pin the error. */
-  private def qSampleEstimate(s: SparkSession, dir: String): DataFrame = {
-    val li = t(s, dir, "lineitem")
-    val bucket = expr(
-      "conv(substring(md5(cast(l_orderkey as string)), 1, 8), 16, 10)")
-      .cast("long") % 100
-    val est = li.filter(bucket < 5) // 5% of order keys, lines ride along
-      .groupBy("l_returnflag")
-      .agg((sum(cents(col("l_extendedprice"))) * 20L).as("est_cents"),
-        (count(lit(1)) * 20L).as("est_rows"))
-    val exact = li.groupBy("l_returnflag")
-      .agg(sum(cents(col("l_extendedprice"))).as("exact_cents"),
-        count(lit(1)).as("exact_rows"))
-    exact.join(est, Seq("l_returnflag"), "left")
-      .select(col("l_returnflag"), col("exact_cents"),
-        coalesce(col("est_cents"), lit(0L)).as("est_cents"),
-        col("exact_rows"), coalesce(col("est_rows"), lit(0L)).as("est_rows"),
-        expr("abs(coalesce(est_cents, 0) - exact_cents) * 1000000 div exact_cents")
-          .as("err_ppm"))
-      .orderBy("l_returnflag")
-  }
-
-  /** B124 (r16): distributed skyline / Pareto frontier
-   * ([[graft.operators.Skyline]]) — per brand, the parts not beaten
-   * on BOTH price (lower better) and size (higher better): the
-   * multi-objective shortlist behind procurement/instance-picker
-   * views. The operator is the bucket-decomposed O(n log n) shape
-   * (per-group bounds broadcast, per-bucket max, tiny prefix relation
-   * broadcast back, dominance decided inside PARTITIONED windows —
-   * no global sort, no self-join); the oracle is the INDEPENDENT
-   * all-pairs NOT EXISTS formulation, so the decomposition is proven
-   * against the definition itself, not replayed. */
-  private def qSkyline(s: SparkSession, dir: String): DataFrame = {
-    val p = t(s, dir, "part").select(col("p_brand"), col("p_partkey"),
-      cents(col("p_retailprice")).as("price_cents"),
-      col("p_size").cast("long").as("sz"))
-    graft.operators.Skyline.frontier(p, Seq("p_brand"), "price_cents", "sz")
-      .orderBy("p_brand", "p_partkey")
-  }
-
-  /** B125 (r16): pre-join cardinality estimation via mergeable
-   * bucket histograms — the "do I dare run this join" preflight that
-   * completes the family: B68 profiles ONE side's hot keys, B122
-   * audits a self-join, this row estimates |A ⋈ B| from two
-   * 1024-bucket key SKETCHES without shuffling either table against
-   * the other — per bucket, (row count, distinct-key count) on each
-   * side, combined with the classic optimizer uniformity estimate
-   * est_b = nA·nB / max(dA, dB) (each of the rarer side's keys is
-   * assumed to hit the denser side's bucket mass uniformly; for an
-   * FK join max(dA,dB) = nB per bucket, so the estimate collapses to
-   * ~|A| — the right answer). Each sketch is one map-side-combined
-   * aggregate producing ≤1024 rows — exchangeable between teams/
-   * systems at 100 TB without moving data. The bucket hash is the
-   * C24 md5 discipline (engine-portable, so the oracle replays the
-   * estimate bit-for-bit with the same truncating per-bucket div),
-   * and the row carries the EXACT join size and the signed error in
-   * ppm — accuracy accounted, not asserted. */
-  private def qJoinEstimate(s: SparkSession, dir: String): DataFrame = {
-    def bucket(name: String) =
-      expr(s"conv(substring(md5(cast($name as string)), 1, 8), 16, 10)")
-        .cast("long") % 1024L
-    val li = t(s, dir, "lineitem")
-      .select(col("l_orderkey").as("k"), bucket("l_orderkey").as("b"))
-    val ord = t(s, dir, "orders")
-      .select(col("o_orderkey").as("k"), bucket("o_orderkey").as("b"))
-    val ha = li.groupBy("b").agg(count(lit(1)).as("na"),
-      count_distinct(col("k")).as("da"))
-    val hb = ord.groupBy("b").agg(count(lit(1)).as("nb"),
-      count_distinct(col("k")).as("db"))
-    val est = ha.join(hb, Seq("b"))
-      .agg(sum(expr("na * nb div greatest(da, db)")).as("est_pairs"))
-    val exact = li.join(ord.select(col("k")), Seq("k"))
-      .agg(count(lit(1)).as("exact_pairs"))
-    est.crossJoin(exact)
-      .select(lit(1024L).as("n_buckets"), col("est_pairs"), col("exact_pairs"),
-        expr("(est_pairs - exact_pairs) * 1000000 div exact_pairs").as("err_ppm"))
-  }
-
-  /** C71 (r14): centroid-distance outlier audit — the mislabel /
-   * contamination detector a curator runs over an embedded corpus:
-   * each vector's exact squared distance to its OWN class centroid
-   * (C51's integer-micros centroids — engine-reproducible, no float
-   * reduction order), top-3 farthest per class via B54's
-   * bounded-state top-k (never a per-class sort of all vectors).
-   * All-integer: micros ≤ ~4e6, so Σ₆₄ diff² ≤ ~4e15 — inside long
-   * with three orders of margin (the B55 audit, done up front). */
-  private def qCentroidOutliers(s: SparkSession, dir: String): DataFrame = {
-    val m = t(s, dir, "embeddings")
-      .select(col("vec_id"), col("label"),
-        posexplode(col("embedding")).as(Seq("dim", "x")))
-      .select(col("vec_id"), col("label").cast("long").as("label"),
-        col("dim").cast("long").as("dim"),
-        round(col("x") * 1000000d, 0).cast("long").as("micro"))
-    val cent = m.groupBy("label", "dim")
-      .agg(expr("sum(micro) div count(1)").as("cent"))
-    val dist = m.join(broadcast(cent), Seq("label", "dim"))
-      .groupBy("vec_id", "label")
-      .agg(sum((col("micro") - col("cent")) * (col("micro") - col("cent")))
-        .as("dist_sq"))
-    graft.operators.TopK
-      .topKPerGroup(dist, Seq("label"), "dist_sq", "vec_id", k = 3)
-      .select(col("label"), col("rank").as("rnk"), col("id").as("vec_id"),
-        col("score").as("dist_sq"))
-      .orderBy("label", "rnk")
-  }
-
-  /** C72 (r14): exact tie-aware ranking AUC per segment — the metric
-   * a curator runs to decide whether a cheap quality signal (here:
-   * document length) actually RANKS the gold label (lang = 'en')
-   * within each source, before spending it as a filter. Float AUC
-   * from a sort is not replayable evidence; this is the exact
-   * Mann-Whitney identity in integers: AUC · 2·P·N =
-   * 2·#{(pos,neg): score_pos > score_neg} + #{score ties across
-   * classes}. Computed WITHOUT per-row ranks: one (source, score)
-   * aggregate collapses the corpus to the distinct-score relation,
-   * a per-source prefix sum over that (score-domain-sized, never
-   * row-sized — the partitions are per-source, no global window)
-   * yields negatives-below, and one more aggregate closes the form.
-   * Capacity: P·N per source ≤ n² and the ×1e6 quotient runs in
-   * decimal(38,0), so no long overflow at any source size. */
-  private def qRankingAuc(s: SparkSession, dir: String): DataFrame = {
-    val d = t(s, dir, "documents").select(
-      col("source"),
-      col("n_chars").as("score"),
-      (col("lang") === "en").cast("long").as("pos"))
-    val byScore = d.groupBy("source", "score")
-      .agg(sum("pos").as("p"), (count(lit(1)) - sum("pos")).as("n"))
-    val below = Window.partitionBy("source").orderBy("score")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    byScore
-      .withColumn("n_below", coalesce(sum("n").over(below), lit(0L)))
-      .groupBy("source")
-      .agg(
-        sum("p").as("n_pos"), sum("n").as("n_neg"),
-        (sum(col("p") * col("n_below")) * 2L + sum(col("p") * col("n")))
-          .as("auc_num_2x"))
-      .withColumn("auc_den_2x", col("n_pos") * col("n_neg") * 2L)
-      .withColumn("auc_micros",
-        when(col("auc_den_2x") === 0L, lit(null).cast("long")).otherwise(
-          expr("CAST(CAST(auc_num_2x AS DECIMAL(38,0)) * 1000000 div auc_den_2x AS BIGINT)")))
-      .orderBy("source")
-  }
-
-  /** C79 (r14): hybrid-retrieval flagship — the composition a
-   * production retrieval stack actually runs, end to end: lexical
-   * BM25 (C43) and exact semantic distance rankings fused by RRF
-   * (C76), the fused top-8 shortlist diversified by MMR (C77,
-   * [[graft.similarity.Ann.mmrSelectFrom]]) into the final 3-doc
-   * context. The flagship row verifies the stage contracts no
-   * per-operator oracle sees together: the rank→fusion id space, the
-   * fused-pool→MMR handoff, and the relevance/separation arithmetic
-   * across operators — the oracle replays ALL four stages (BM25
-   * closed form, micros distances, RRF, three unrolled greedy picks)
-   * in one SQL statement. */
-  private def qHybridRetrieval(s: SparkSession, dir: String): DataFrame = {
-    val lex = graft.text.TfIdf.bm25TopK(t(s, dir, "documents"),
-        "doc_id", "text", Seq("vector", "stream", "window"), 20)
-      .withColumn("lex_rank", row_number().over(
-        Window.orderBy(col("score_ppm").desc, col("doc_id"))).cast("long"))
-      .select(col("doc_id"), col("lex_rank"))
-    val emb = t(s, dir, "embeddings")
-    val m = emb
-      .select(col("vec_id"), posexplode(col("embedding")).as(Seq("dim", "x")))
-      .select(col("vec_id"), col("dim"),
-        round(col("x") * 1000000d, 0).cast("long").as("micro"))
-    val p = m.filter(col("vec_id") === 0L)
-      .select(col("dim"), col("micro").as("pm"))
-    val sem = m.join(broadcast(p), Seq("dim"))
-      .filter(col("vec_id") =!= 0L)
-      .groupBy("vec_id")
-      .agg(sum((col("micro") - col("pm")) * (col("micro") - col("pm")))
-        .as("dq"))
-      .orderBy(col("dq"), col("vec_id")).limit(20)
-      .withColumn("sem_rank", row_number().over(
-        Window.orderBy(col("dq"), col("vec_id"))).cast("long"))
-      .select(col("vec_id").as("doc_id"), col("sem_rank"))
-    val fused = lex.join(sem, Seq("doc_id"), "full_outer")
-      .withColumn("rrf_ppm",
-        coalesce(expr("1000000 div (60 + lex_rank)"), lit(0L)) +
-        coalesce(expr("1000000 div (60 + sem_rank)"), lit(0L)))
-      .orderBy(col("rrf_ppm").desc, col("doc_id")).limit(8)
-    graft.similarity.Ann.mmrSelectFrom(emb,
-        emb.filter(col("vec_id") === 0L), fused.select("doc_id"),
-        "vec_id", "embedding", selectK = 3)
-      .join(fused.select(col("doc_id").as("vec_id"), col("rrf_ppm")), Seq("vec_id"))
-      .select("sel_rank", "vec_id", "rrf_ppm", "dist_q", "gain")
-      .orderBy("sel_rank")
-  }
-
-  /** C80 (r14): balanced shard assignment
-   * ([[graft.operators.Sampling.shardAssign]]) — the data-parallel
-   * loader split: stripe documents across 8 shards in (size desc, id)
-   * rank order, the deterministic first-fit-decreasing rendering.
-   * Hash splits balance counts, not token mass; this bounds per-shard
-   * mass skew by construction. The global rank is the two-level
-   * range-partitioned rank over a fail-loud packed key — never a
-   * single-partition window. */
-  private def qShardAssign(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Sampling.shardAssign(
-        t(s, dir, "documents"), "doc_id", "n_chars", nShards = 8)
-      .groupBy("shard")
-      .agg(count(lit(1)).as("n_docs"), sum("size").as("sum_chars"),
-        min("size").as("min_chars"), max("size").as("max_chars"))
-      .orderBy("shard")
-
-  /** C78 (r14): calibration curve (reliability diagram) — the
-   * companion gate to C72's ranking AUC: a signal can RANK well yet
-   * be badly calibrated, and a filter threshold chosen from its raw
-   * values then keeps the wrong mass. Ten fixed-width score buckets
-   * over the observed [min, max] (1-row broadcast bounds); per bucket
-   * the positive rate in ppm (truncating div) against the bucket's
-   * exact score sum — all integers, monotonically auditable. */
-  private def qCalibration(s: SparkSession, dir: String): DataFrame = {
-    val d = t(s, dir, "documents").select(
-      col("n_chars").as("score"),
-      (col("lang") === "en").cast("long").as("pos"))
-    val bounds = d.agg(min("score").as("mn"), max("score").as("mx"))
-    d.crossJoin(broadcast(bounds))
-      .withColumn("bucket",
-        least(expr("(score - mn) * 10 div (mx - mn + 1)"), lit(9L)))
-      .groupBy("bucket")
-      .agg(count(lit(1)).as("n_docs"), sum("pos").as("n_pos"),
-        sum("score").as("sum_score"))
-      .withColumn("pos_ppm", expr("n_pos * 1000000 div n_docs"))
-      .orderBy("bucket")
-  }
-
-  /** C76 (r14): reciprocal-rank fusion — the standard hybrid-retrieval
-   * merge: a lexical ranking (C43's fixed-point BM25 top-20) and a
-   * semantic ranking (exact integer-micros distance to a probe
-   * embedding, top-20) fused as Σ 10⁶ div (60 + rank) per doc, a doc
-   * missing from a list contributing nothing. RRF is rank-only — no
-   * score normalization across incomparable scales — which is exactly
-   * why production hybrid search uses it. Both per-list rank windows
-   * run AFTER a TakeOrdered limit, so they sort 20 rows, never the
-   * corpus; the fusion join is 40 rows total. Integer throughout. */
-  private def qRrfFusion(s: SparkSession, dir: String): DataFrame = {
-    val lex = graft.text.TfIdf.bm25TopK(t(s, dir, "documents"),
-        "doc_id", "text", Seq("vector", "stream", "window"), 20)
-      .withColumn("lex_rank", row_number().over(
-        Window.orderBy(col("score_ppm").desc, col("doc_id"))).cast("long"))
-      .select(col("doc_id"), col("lex_rank"))
-    val m = t(s, dir, "embeddings")
-      .select(col("vec_id"), posexplode(col("embedding")).as(Seq("dim", "x")))
-      .select(col("vec_id"), col("dim"),
-        round(col("x") * 1000000d, 0).cast("long").as("micro"))
-    val p = m.filter(col("vec_id") === 0L)
-      .select(col("dim"), col("micro").as("pm"))
-    val sem = m.join(broadcast(p), Seq("dim"))
-      .filter(col("vec_id") =!= 0L)
-      .groupBy("vec_id")
-      .agg(sum((col("micro") - col("pm")) * (col("micro") - col("pm")))
-        .as("dq"))
-      .orderBy(col("dq"), col("vec_id")).limit(20)
-      .withColumn("sem_rank", row_number().over(
-        Window.orderBy(col("dq"), col("vec_id"))).cast("long"))
-      .select(col("vec_id").as("doc_id"), col("sem_rank"))
-    lex.join(sem, Seq("doc_id"), "full_outer")
-      .withColumn("rrf_ppm",
-        coalesce(expr("1000000 div (60 + lex_rank)"), lit(0L)) +
-        coalesce(expr("1000000 div (60 + sem_rank)"), lit(0L)))
-      .orderBy(col("rrf_ppm").desc, col("doc_id")).limit(10)
-      .select("doc_id", "lex_rank", "sem_rank", "rrf_ppm")
-  }
-
-  /** C77 (r14): MMR diversified re-rank
-   * ([[graft.similarity.Ann.mmrRerank]]) — top-8 exact candidates of
-   * probe 0, 4 selected by the doubled integer MMR objective
-   * (min-separation-from-selected − relevance, λ = 1/2); the oracle
-   * unrolls all four greedy steps as scalar-subquery CTE stages in
-   * HUGEINT space, so every pick, distance, and gain hash-compares. */
-  private def qMmrRerank(s: SparkSession, dir: String): DataFrame = {
-    val emb = t(s, dir, "embeddings")
-    graft.similarity.Ann.mmrRerank(emb, emb.filter(col("vec_id") === 0L),
-        "vec_id", "embedding", poolK = 8, selectK = 4)
-      .orderBy("sel_rank")
-  }
-
-  /** C74 (r14): hard-negative mining — for each probe vector, the
-   * NEAREST vector of a DIFFERENT label: the contrastive-training
-   * data a retrieval model needs (easy negatives teach nothing; the
-   * closest wrong-label example is the gradient that matters).
-   * Exact integer-micros distances (the C71 discipline — float
-   * reduction order isn't replayable evidence); the winner per probe
-   * is the lexicographic (dist, id) struct-MIN — one bounded
-   * aggregate, no per-probe sort. Probes broadcast (bounded set);
-   * the dim-keyed join against the exploded corpus is the C6
-   * brute-force baseline shape — at index scale the C7 IVF path
-   * generates candidates and this exact scorer re-ranks them. */
-  private def qHardNegatives(s: SparkSession, dir: String): DataFrame = {
-    val m = t(s, dir, "embeddings")
-      .select(col("vec_id"), col("label"),
-        posexplode(col("embedding")).as(Seq("dim", "x")))
-      .select(col("vec_id"), col("label").cast("long").as("label"),
-        col("dim").cast("long").as("dim"),
-        round(col("x") * 1000000d, 0).cast("long").as("micro"))
-    val probes = m.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("probe_id"), col("label").as("probe_label"),
-        col("dim"), col("micro").as("pm"))
-    m.join(broadcast(probes), Seq("dim"))
-      .filter(col("label") =!= col("probe_label"))
-      .groupBy("probe_id", "probe_label", "vec_id")
-      .agg(sum((col("micro") - col("pm")) * (col("micro") - col("pm")))
-        .as("dist_sq"))
-      .groupBy("probe_id", "probe_label")
-      .agg(min(struct(col("dist_sq"), col("vec_id"))).as("b"))
-      .select(col("probe_id"), col("probe_label"),
-        col("b").getField("vec_id").as("neg_id"),
-        col("b").getField("dist_sq").as("dist_sq"))
-      .orderBy("probe_id")
-  }
-
-  /** C75 (r14): code-switch detection — within-document language
-   * mixing: C8's stopword-argmax lang-id applied to each HALF of the
-   * document (character midpoint, integer div so both engines split
-   * identically); a doc whose halves disagree (neither undetermined)
-   * is flagged. The corpus is monolingual per doc, so a deterministic
-   * French-stopword tail is injected into every doc_id ≡ 0 (mod 3)
-   * (the withContact convention: the construction is mirrored exactly
-   * in the oracle) — those docs must flag, the rest must not.
-   * Scale: two codegen'd kernel calls per row, no join, no shuffle
-   * before the final per-source rollup. */
-  private def qCodeSwitch(s: SparkSession, dir: String): DataFrame = {
-    val mixed = t(s, dir, "documents").withColumn("mixed",
-      when(col("doc_id") % 3 === 0,
-        concat(col("text"),
-          lit(" le la les des est et une dans que pour pas vous")))
-        .otherwise(col("text")))
-    mixed
-      .withColumn("lang_head", TextFunctions.langId(
-        expr("substring(mixed, 1, length(mixed) div 2)")))
-      .withColumn("lang_tail", TextFunctions.langId(
-        expr("substring(mixed, length(mixed) div 2 + 1)")))
-      .select(col("doc_id"), col("source"), col("lang_head"), col("lang_tail"),
-        (col("lang_head") =!= col("lang_tail") &&
-          col("lang_head") =!= "und" && col("lang_tail") =!= "und")
-          .as("is_switch"))
-      .orderBy("doc_id")
-  }
-
-  /** C73 (r14): vocabulary coverage curve per source — the tokenizer-
-   * planning statistic: how many distinct terms (ranked by frequency,
-   * ties lexicographic) cover 90% of a source's token occurrences,
-   * and what fraction the top-100 alone covers. A corpus where 500
-   * terms cover 90% tokenizes very differently from one needing 50k —
-   * this drives vocab-size and BPE-merge budgets before training.
-   * Scale: the corpus collapses to the (source, term) frequency
-   * relation in one map-side-combined aggregate; the rank/cumsum
-   * window runs on THAT (vocabulary-sized, partitioned per source —
-   * never a row-sized or global window); one closing aggregate. */
-  private def qVocabCoverage(s: SparkSession, dir: String): DataFrame = {
-    val tf = t(s, dir, "documents")
-      .select(col("source"),
-        explode(TextFunctions.wsTokens(col("text"))).as("tok"))
-      .groupBy("source", "tok").agg(count(lit(1)).as("cnt"))
-    val totals = tf.groupBy("source")
-      .agg(sum("cnt").as("n_tokens"), count(lit(1)).as("n_terms"))
-    val byFreq = Window.partitionBy("source").orderBy(col("cnt").desc, col("tok"))
-    tf
-      .withColumn("rnk", row_number().over(byFreq))
-      .withColumn("cum", sum("cnt").over(
-        byFreq.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .join(broadcast(totals), "source")
-      .groupBy("source", "n_tokens", "n_terms")
-      .agg(
-        min(when(col("cum") * 10L >= col("n_tokens") * 9L, col("rnk")))
-          .cast("long").as("vocab90"),
-        sum(when(col("rnk") <= 100L, col("cnt")).otherwise(0L)).as("top100"))
-      .withColumn("top100_ppm", expr("top100 * 1000000 div n_tokens"))
-      .select("source", "n_tokens", "n_terms", "vocab90", "top100_ppm")
-      .orderBy("source")
-  }
-
-  /** B120 (r14): interval coalesce
-   * ([[graft.operators.Intervals.mergedSegments]]) — the classic
-   * "merge overlapping intervals" relation, EMITTED (B90's coverage
-   * summarizes it): each user's one-hour activity intervals collapsed
-   * to maximal disjoint runs — consolidated sessions / maintenance
-   * windows / blackout calendars. Per-key prefix-max sweep, windows
-   * partitioned BY KEY — no global sort anywhere. */
-  private def qIntervalMerge(s: SparkSession, dir: String): DataFrame = {
-    val hourUs = 3600L * 1000000L
-    withEventTime(t(s, dir, "events"))
-      .select(col("user_id"), col("ts_us").as("s_us"),
-        (col("ts_us") + hourUs).as("e_us"))
-      .transform(iv => graft.operators.Intervals.mergedSegments(
-        iv, "user_id", "s_us", "e_us"))
-      .orderBy("user_id", "seg_idx")
-  }
-
-  /** B119 (r14): largest-remainder pro-rata allocation
-   * ([[graft.operators.Allocation.proRata]]) — split a fixed
-   * 1,000,000-cent budget across nations proportional to revenue,
-   * summing EXACTLY to the budget: ⌊budget·w/W⌋ bases, leftover cents
-   * +1 each to the largest remainders (Hamilton apportionment). Naive
-   * per-key rounding loses or invents cents — the migration trap this
-   * row pins. Arithmetic in decimal(38,0); the top-remainder pick
-   * rides the range-partitioned rank, never a single-partition
-   * sort. */
-  private def qProRata(s: SparkSession, dir: String): DataFrame = {
-    val rev = t(s, dir, "orders")
-      .join(t(s, dir, "customer"), col("o_custkey") === col("c_custkey"))
-      .groupBy("c_nationkey")
-      .agg(sum(cents(col("o_totalprice"))).as("w"))
-    val budget = s.range(1).select(lit(1000000L).as("budget"))
-    graft.operators.Allocation.proRata(rev, "c_nationkey", "w", budget)
-      .orderBy("c_nationkey")
-  }
-
-  /** B118 (r14): sequential purchase affinity — the ORDERED
-   * complement of B96's co-occurrence basket lift: "customers who
-   * bought brand A were later (within 90 days) buyers of brand B",
-   * with lift against independence in integer ppm. Direction matters
-   * (A→B ≠ B→A) — the repeat-purchase / recommendation signal plain
-   * market-basket analysis cannot see. EXISTS semantics per
-   * (customer, A, B): one qualifying sequence marks the customer, ten
-   * don't count twice. Scale: purchase events dedupe to the
-   * (customer, brand, day) relation first; the sequential pair join
-   * is customer-keyed (fan-out bounded by a customer's own brand-day
-   * count, never cross-customer); brand supports and the customer
-   * total are bounded-domain broadcasts. */
-  private def qNextPurchase(s: SparkSession, dir: String): DataFrame = {
-    val ev = t(s, dir, "lineitem")
-      .join(t(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
-      .join(t(s, dir, "part"), col("l_partkey") === col("p_partkey"))
-      .select(col("o_custkey").as("cust"), col("p_brand").as("brand"),
-        col("o_orderdate").cast("date").as("d"))
-      .distinct()
-    val a = ev.select(col("cust"), col("brand").as("brand_a"), col("d").as("da"))
-    val b = ev.select(col("cust"), col("brand").as("brand_b"), col("d").as("db"))
-    val nAb = a.join(b, Seq("cust"))
-      .filter(col("brand_a") =!= col("brand_b") &&
-        col("db") > col("da") && datediff(col("db"), col("da")) <= 90)
-      .select("cust", "brand_a", "brand_b").distinct()
-      .groupBy("brand_a", "brand_b").agg(count(lit(1)).as("n_ab"))
-    val support = ev.select("cust", "brand").distinct()
-      .groupBy("brand").agg(count(lit(1)).as("n"))
-    val nCust = ev.select("cust").distinct().agg(count(lit(1)).as("n_cust"))
-    nAb
-      .join(broadcast(support.select(col("brand").as("brand_a"), col("n").as("n_a"))),
-        Seq("brand_a"))
-      .join(broadcast(support.select(col("brand").as("brand_b"), col("n").as("n_b"))),
-        Seq("brand_b"))
-      .crossJoin(broadcast(nCust))
-      // decimal(38,0): n_ab·n_cust·10⁶ wraps a long at warehouse
-      // customer counts (the B55 rule — no silent overflow)
-      .withColumn("lift_ppm", expr(
-        """cast((cast(n_ab as decimal(38,0)) * n_cust * 1000000)
-           div (cast(n_a as decimal(38,0)) * n_b) as long)"""))
-      .select("brand_a", "brand_b", "n_ab", "n_a", "n_b", "lift_ppm")
-      .orderBy("brand_a", "brand_b")
-  }
-
-  /** B117 (r14): Theil–Sen median trend slope per segment — the
-   * robust complement of B110's Mann-Kendall (which answers IS there
-   * a trend; this answers HOW STEEP, immune to outlier months that
-   * wreck the B102 OLS slope). Slope of every month pair in integer
-   * ppm (truncating div — both engines truncate toward zero on
-   * negatives), median picked at rank (n+1) div 2 under the total
-   * (slope, m1, m2) order. The corpus collapses to the (segment,
-   * month) cents series in ONE aggregate first; the pair join and the
-   * rank window run on that calendar-sized relation, partitioned by
-   * segment — never row-sized, never global. */
-  private def qTheilSen(s: SparkSession, dir: String): DataFrame = {
-    val monthly = t(s, dir, "orders")
-      .join(t(s, dir, "customer"), col("o_custkey") === col("c_custkey"))
-      .select(col("c_mktsegment").as("g"),
-        (year(col("o_orderdate")) * 12 + month(col("o_orderdate")))
-          .cast("long").as("m"),
-        cents(col("o_totalprice")).as("c"))
-      .groupBy("g", "m").agg(sum("c").as("v"))
-    val a = monthly.select(col("g"), col("m").as("m1"), col("v").as("v1"))
-    val b = monthly.select(col("g").as("g2"), col("m").as("m2"), col("v").as("v2"))
-    val pairs = a.join(b, col("g") === col("g2") && col("m1") < col("m2"))
-      .select(col("g"), col("m1"), col("m2"),
-        expr("(v2 - v1) * 1000000 div (m2 - m1)").as("slope_ppm"))
-    val w = Window.partitionBy("g").orderBy("slope_ppm", "m1", "m2")
-    pairs.withColumn("rk", row_number().over(w).cast("long"))
-      .withColumn("n_pairs", count(lit(1)).over(Window.partitionBy("g")))
-      .filter(col("rk") === expr("(n_pairs + 1) div 2"))
-      .select(col("g"), col("n_pairs"), col("slope_ppm").as("median_slope_ppm"))
-      .orderBy("g")
-  }
-
-  /** B115 (r14): order-to-line financial reconciliation — the
-   * close-of-books audit: does each order header's total equal the sum
-   * of its line values? Line value is pinned to the COMMERCIAL
-   * convention (each line rounded to a cent before summing) in pure
-   * integer space: cents × (100 − disc%) × (100 + tax%) div 10⁴ — the
-   * percentages are scaled-integer up front so no engine ever
-   * multiplies doubles. The audit REPORTS per priority class: orders,
-   * exact matches, total and max absolute drift — synthetic headers
-   * won't reconcile, which is exactly what the report must show
-   * faithfully. Headerless/lineless orders stay in (left join,
-   * coalesce 0): a missing fact is drift, not absence. */
-  private def qReconcile(s: SparkSession, dir: String): DataFrame = {
-    val lines = t(s, dir, "lineitem")
-      .select(col("l_orderkey"),
-        ((cents(col("l_extendedprice")) *
-          (lit(100L) - round(col("l_discount") * 100d, 0).cast("long")) *
-          (lit(100L) + round(col("l_tax") * 100d, 0).cast("long")))
-          .as("num")))
-      .select(col("l_orderkey"), expr("num div 10000").as("lc"))
-      .groupBy("l_orderkey").agg(sum("lc").as("lines_cents"))
-    t(s, dir, "orders")
-      .select(col("o_orderkey"), col("o_orderpriority"),
-        cents(col("o_totalprice")).as("tc"))
-      .join(lines, col("o_orderkey") === col("l_orderkey"), "left")
-      .withColumn("lines_cents", coalesce(col("lines_cents"), lit(0L)))
-      .withColumn("ad", abs(col("tc") - col("lines_cents")))
-      .groupBy("o_orderpriority")
-      .agg(count(lit(1)).as("n_orders"),
-        sum(when(col("ad") === 0L, 1L).otherwise(0L)).as("n_exact"),
-        sum("ad").as("sum_abs_diff"), max("ad").as("max_abs_diff"))
-      .orderBy("o_orderpriority")
-  }
-
-  /** B116 (r14): Kaplan-Meier survival curve per group — the churn /
-   * time-to-event primitive: S(t) multiplies (n_t − d_t)/n_t over
-   * event times, with censored rows leaving the risk set silently.
-   * Float KM is reduction-order-dependent; here S runs in ppm with a
-   * TRUNCATING integer multiply per step, pinned identically in the
-   * oracle's recursive CTE. Time is bucketed to 30-day months
-   * (clamped at 0), so the sequential fold runs over the CALENDAR
-   * domain: the corpus collapses to the (group, month) relation in
-   * one aggregate, at-risk counts come from a reverse prefix window
-   * over THAT, and the per-step product runs IN-PLAN (r17, VERDICT
-   * #7): each group's time-ordered steps collect into one
-   * calendar-sized array and the truncating fold is the codegen'd
-   * km_fold_ppm kernel — no driver-side sequential math left on the
-   * query board, so survival groups could be user-keyed without
-   * driver state. */
-  private def qSurvival(s: SparkSession, dir: String): DataFrame = {
-    val li = t(s, dir, "lineitem")
-      .select(col("l_orderkey"), col("l_linestatus").as("g"),
-        col("l_shipdate").cast("date").as("ship"),
-        (col("l_returnflag") === "R").cast("long").as("d"))
-      .join(t(s, dir, "orders").select(col("o_orderkey"),
-        col("o_orderdate").cast("date").as("od")),
-        col("l_orderkey") === col("o_orderkey"))
-      .select(col("g"),
-        expr("greatest(datediff(ship, od), 0) div 30").cast("long").as("t"),
-        col("d"))
-    val byT = li.groupBy("g", "t")
-      .agg(count(lit(1)).as("n_all"), sum("d").as("deaths"))
-    val wRisk = Window.partitionBy("g").orderBy("t")
-      .rowsBetween(Window.currentRow, Window.unboundedFollowing)
-    byT.withColumn("at_risk", sum("n_all").over(wRisk))
-      .groupBy("g")
-      .agg(sort_array(collect_list(
-        struct(col("t"), col("at_risk"), col("deaths")))).as("steps"))
-      .withColumn("s_ppm_arr", graft.functions.expressions.kmFoldPpm(
-        col("steps").getField("at_risk"), col("steps").getField("deaths")))
-      .select(col("g"), col("s_ppm_arr"), posexplode(col("steps")).as(Seq("i", "st")))
-      .select(col("g"), col("st.t").as("t"), col("st.at_risk").as("at_risk"),
-        col("st.deaths").as("deaths"),
-        element_at(col("s_ppm_arr"), col("i") + 1).as("s_ppm"))
-      .orderBy("g", "t")
-  }
-
-  /** B112 (r14): duplicate-payment audit — the classic AP-fraud /
-   * double-billing screen: two orders by the SAME customer for the
-   * SAME cent-exact amount within 30 days are a refund-or-fraud
-   * review queue. Organic synthetic prices almost never collide, so a
-   * deterministic duplicate set is planted (every orderkey ≡ 0
-   * (mod 100) re-billed 2 days later under a shifted key — the
-   * withContact convention, mirrored exactly in the oracle); the
-   * audit must find every plant and whatever organic pairs exist.
-   * Scale: ONE equi-join on (custkey, cents) — fan-out bounded by
-   * genuine amount collisions per customer (≈1) — with the date band
-   * as a residual filter; never a date-band or cross join. */
-  private def qDuplicatePayments(s: SparkSession, dir: String): DataFrame = {
-    val base = t(s, dir, "orders")
-      .select(col("o_orderkey").cast("long").as("okey"), col("o_custkey"),
-        cents(col("o_totalprice")).as("c"), col("o_orderdate").cast("date").as("d"))
-    val planted = base.filter(col("okey") % 100 === 0L)
-      .select((col("okey") + 10000000L).as("okey"), col("o_custkey"),
-        col("c"), date_add(col("d"), 2).as("d"))
-    val o = base.unionByName(planted)
-    val a = o.select(col("okey").as("key_lo"), col("o_custkey"),
-      col("c"), col("d").as("d_lo"))
-    val b = o.select(col("okey").as("key_hi"), col("o_custkey"),
-      col("c"), col("d").as("d_hi"))
-    a.join(b, Seq("o_custkey", "c"))
-      .filter(col("key_lo") < col("key_hi") &&
-        abs(datediff(col("d_hi"), col("d_lo"))) <= 30)
-      .select(col("o_custkey"), col("key_lo"), col("key_hi"), col("c").as("cents"),
-        datediff(col("d_hi"), col("d_lo")).cast("long").as("day_gap"))
-      .orderBy("o_custkey", "key_lo", "key_hi")
-  }
-
-  /** B113 (r14): critical path over a DAG
-   * ([[graft.operators.Graph.criticalPath]]) — longest weighted path
-   * ending at each node (PERT scheduling), the max-plus leg of the
-   * graph family. DAG constructed over the part-key domain (u → 2u,
-   * u → 3u where present, edge weight v mod 7 + 1 — multiple routes
-   * to every 6-divisible node make the max non-trivial); log-depth by
-   * construction, improvement-only Bellman-Ford relaxation, fail-loud
-   * on non-convergence (the cycle guard). */
-  private def qCriticalPath(s: SparkSession, dir: String): DataFrame = {
-    // key 0 is excluded: 2·0 = 0 would be a self-loop, and the guard
-    // (correctly) refuses cyclic input — found by the guard itself
-    val keys = t(s, dir, "part")
-      .select(col("p_partkey").cast("long").as("n"))
-      .filter(col("n") >= 1L).distinct()
-    def edgesTimes(k: Int) = keys
-      .join(keys.filter(col("n") % k === 0L)
-          .select(expr(s"n div $k").as("n"), col("n").as("v")), Seq("n"))
-      .select(col("n").as("u"), col("v"),
-        (col("v") % 7L + 1L).as("w"))
-    graft.operators.Graph.criticalPath(
-        edgesTimes(2).unionByName(edgesTimes(3)), "u", "v", "w")
-      .orderBy("id")
-  }
-
-  /** B121 (r14): path counting over the same ×2/×3 DAG
-   * ([[graft.operators.Graph.pathCounts]]) — the COUNTING semiring
-   * completing B107 (product-sum) and B113 (max-plus): distinct
-   * incoming paths per node, the lineage-multiplicity audit. A node
-   * divisible by both 2 and 3 has combinatorially many routes
-   * (compositions of its 2/3 factor sequence) — the oracle enumerates
-   * every one through the recursive CTE and must agree count-for-
-   * count. Counts in decimal(38,0) (combinatorial growth wraps a
-   * long — B55 rule, ANSI-thrown). */
-  private def qPathCount(s: SparkSession, dir: String): DataFrame = {
-    val keys = t(s, dir, "part")
-      .select(col("p_partkey").cast("long").as("n"))
-      .filter(col("n") >= 1L).distinct()
-    def edgesTimes(k: Int) = keys
-      .join(keys.filter(col("n") % k === 0L)
-          .select(expr(s"n div $k").as("n"), col("n").as("v")), Seq("n"))
-      .select(col("n").as("u"), col("v"))
-    graft.operators.Graph.pathCounts(
-        edgesTimes(2).unionByName(edgesTimes(3)), "u", "v")
-      .select(col("id"), col("n_paths").cast("long").as("n_paths"))
-      .orderBy("id")
-  }
-
-  /** B114 (r14): cycle census of a functional graph
-   * ([[graft.operators.Graph.cycleStats]]) — every node has one
-   * out-edge (retry chains, next-state tables, alias maps); report
-   * each terminal cycle as (min member, size). The graph is the
-   * quadratic map u → (u² + 1) mod M over the customer-key domain —
-   * rho-shaped tails feeding small cycles, the shape that separates a
-   * cycle census from a permutation. Pointer doubling: ⌈log₂ n⌉
-   * self-join rounds carrying (2^t-step jump, min seen), never a
-   * step-by-step walk; the oracle walks every node step-by-step in a
-   * recursive CTE — an independent formulation. */
-  private def qCycleCensus(s: SparkSession, dir: String): DataFrame = {
-    // the synthetic key domain is 0-based and dense (0..M−1), exactly
-    // the domain (u² + 1) mod M maps back into — every node keeps an
-    // out-edge, the functional-graph precondition
-    val c = t(s, dir, "customer")
-      .select(col("c_custkey").cast("long").as("id"))
-    val m = c.agg(count(lit(1)).as("m"))
-    val nextDf = c.crossJoin(broadcast(m))
-      .select(col("id"), ((col("id") * col("id") + 1L) % col("m")).as("nxt"))
-    graft.operators.Graph.cycleStats(nextDf, "id", "nxt")
-      .orderBy("cycle_id")
-  }
-
-  /** B111 (r14): Benford first-digit audit — the classic fabricated-
-   * data screen: the leading significant digit of a naturally-grown
-   * monetary amount follows log10(1 + 1/d); per-digit observed ppm vs
-   * the expected ppm table with the absolute deviation, all integer
-   * (the expected constants are the SAME nine literals on both
-   * engines — nothing recomputes a log at query time). Synthetic
-   * uniform prices will deviate hugely: the audit REPORTS, thresholds
-   * are the caller's. Scale: one scan, a 9-bucket map-side-combined
-   * histogram, one tiny broadcast of the total. */
-  private def qBenford(s: SparkSession, dir: String): DataFrame = {
-    val expected = "array(301030L, 176091L, 124939L, 96910L, 79181L, " +
-      "66947L, 57992L, 51153L, 45757L)"
-    val digits = t(s, dir, "orders")
-      .select(cents(col("o_totalprice")).as("c"))
-      .filter(col("c") > 0L)
-      .select(expr("CAST(substring(CAST(c AS STRING), 1, 1) AS BIGINT)")
-        .as("digit"))
-      .groupBy("digit").agg(count(lit(1)).as("cnt"))
-    val total = digits.agg(sum("cnt").as("n_total"))
-    digits.crossJoin(broadcast(total))
-      .withColumn("obs_ppm", expr("cnt * 1000000 div n_total"))
-      .withColumn("expected_ppm",
-        expr(s"element_at($expected, CAST(digit AS INT))"))
-      .withColumn("dev_ppm", abs(col("obs_ppm") - col("expected_ppm")))
-      .select("digit", "cnt", "obs_ppm", "expected_ppm", "dev_ppm")
-      .orderBy("digit")
-  }
-
-  /** B109 (r14): Allen interval-algebra classification — the complete
-   * 13-relation vocabulary (before/meets/overlaps/starts/during/
-   * finishes/equals + inverses) over interval pairs, the temporal-
-   * reasoning primitive scheduling-conflict and process-mining
-   * audits are built from (here: how a single order's line shipment
-   * windows interact; the synthetic lineitem carries no receipt
-   * date, so each window is [shipdate, shipdate + (qty mod 7 +
-   * linenumber) days] — deterministic, varied, and replayed
-   * identically by the oracle). The CASE ladder is a
-   * total, mutually-exclusive decision tree (disjointness checked
-   * first, then the (cmp(a1,b1), cmp(a2,b2)) grid on genuinely
-   * overlapping pairs), so every pair lands in exactly one bucket —
-   * a histogram that must sum to the pair count.
-   * Scale: pairs come from an EQUI self-join on the order key with
-   * per-group fan-out bounded by the lines-per-order cap (≤ 7 → ≤ 21
-   * pairs), never a time-band or cross join; the 13-value histogram
-   * combines map-side. */
-  private def qIntervalRelations(s: SparkSession, dir: String): DataFrame = {
-    val li = t(s, dir, "lineitem").select(
-      col("l_orderkey").as("ok"), col("l_linenumber").as("ln"),
-      col("l_shipdate").cast("date").as("st"),
-      date_add(col("l_shipdate").cast("date"),
-        (col("l_quantity").cast("long") % 7L + col("l_linenumber").cast("long"))
-          .cast("int")).as("en"))
-    val a = li.select(col("ok"), col("ln").as("ln_a"),
-      col("st").as("a1"), col("en").as("a2"))
-    val b = li.select(col("ok"), col("ln").as("ln_b"),
-      col("st").as("b1"), col("en").as("b2"))
-    val rel = when(col("a2") < col("b1"), "before")
-      .when(col("a2") === col("b1"), "meets")
-      .when(col("a1") > col("b2"), "after")
-      .when(col("a1") === col("b2"), "met_by")
-      .when(col("a1") < col("b1") && col("a2") < col("b2"), "overlaps")
-      .when(col("a1") < col("b1") && col("a2") === col("b2"), "finished_by")
-      .when(col("a1") < col("b1") && col("a2") > col("b2"), "contains")
-      .when(col("a1") === col("b1") && col("a2") < col("b2"), "starts")
-      .when(col("a1") === col("b1") && col("a2") === col("b2"), "equals")
-      .when(col("a1") === col("b1") && col("a2") > col("b2"), "started_by")
-      .when(col("a1") > col("b1") && col("a2") < col("b2"), "during")
-      .when(col("a1") > col("b1") && col("a2") === col("b2"), "finishes")
-      .otherwise("overlapped_by")
-    a.join(b, Seq("ok")).filter(col("ln_a") < col("ln_b"))
-      .select(rel.as("relation"))
-      .groupBy("relation").agg(count(lit(1)).as("cnt"))
-      .orderBy("relation")
-  }
-
-  /** B110 (r14): Mann-Kendall trend statistic per series — the
-   * distribution-free "is this metric trending" test a monitoring
-   * deck runs per segment: S = Σ_{i<j} sign(v_j − v_i) over the
-   * time-ordered series, reported with its concordant/discordant/tie
-   * decomposition (all integers — no variance approximation, the
-   * exact statistic itself). Series: monthly order revenue (cents)
-   * per order priority.
-   * Scale: the pair join runs on the AGGREGATED series relation
-   * (groups × months — calendar-sized, never row-sized), keyed by
-   * the group so fan-out is months² within a group; the corpus-sized
-   * input collapses in one map-side-combined aggregate first. */
-  private def qKendallTrend(s: SparkSession, dir: String): DataFrame = {
-    val series = t(s, dir, "orders").select(
-      col("o_orderpriority").as("grp"),
-      date_trunc("month", col("o_orderdate")).cast("date").as("mon"),
-      round(col("o_totalprice") * 100, 0).cast("long").as("cents"))
-      .groupBy("grp", "mon").agg(sum("cents").as("v"))
-    val x = series.select(col("grp"), col("mon").as("m_a"), col("v").as("v_a"))
-    val y = series.select(col("grp"), col("mon").as("m_b"), col("v").as("v_b"))
-    x.join(y, Seq("grp")).filter(col("m_a") < col("m_b"))
-      .groupBy("grp").agg(
-        (countDistinct(col("m_a")) + lit(1L)).as("n_months"),
-        sum(signum(col("v_b") - col("v_a")).cast("long")).as("s_stat"),
-        sum(when(col("v_b") > col("v_a"), 1L).otherwise(0L)).as("concordant"),
-        sum(when(col("v_b") < col("v_a"), 1L).otherwise(0L)).as("discordant"),
-        sum(when(col("v_b") === col("v_a"), 1L).otherwise(0L)).as("ties"))
-      .orderBy("grp")
-  }
-
-  /** B73 (r13): exact distinct over a bounded key domain via a
-   * custom Catalyst AGGREGATE ([[graft.functions.BitmapDistinct]],
-   * the library's TypedImperativeAggregate example — scalar codegen
-   * expressions are C8-C35's tool; this is the aggregate half of the
-   * extension surface). COUNT(DISTINCT) plans an Expand whose first
-   * shuffle carries every distinct (group, key) pair; the bitmap's
-   * partial is domain/8 bytes regardless of row count, merges are a
-   * byte OR, and the whole thing is one map-side-combined pass —
-   * the fixed-width roaring-bitmap idea for enum-sized domains. */
-  private def qBitmapDistinct(s: SparkSession, dir: String): DataFrame = {
-    import graft.functions.expressions.bitmapDistinct
-    t(s, dir, "lineitem").groupBy("l_returnflag").agg(
-        bitmapDistinct(col("l_suppkey"), 1 << 20).as("n_supp"),
-        bitmapDistinct(col("l_partkey"), 1 << 20).as("n_part"),
-        count(lit(1)).as("n_rows"))
-      .orderBy("l_returnflag")
-  }
-
-  /** B74 (r13): hierarchical subtree rollup
-   * ([[graft.operators.Graph.subtreeRollup]]) — the org-chart /
-   * bill-of-materials aggregate SQL needs a recursive CTE for:
-   * every node's count + balance sum over its ENTIRE subtree. The
-   * hierarchy is a deterministic 10-ary forest over customers
-   * (parent = custkey div 10, roots below 10); the operator builds
-   * the node→ancestor closure in depth-many keyed joins (closure
-   * size n·depth, no dedup needed on a tree's strictly-shrinking
-   * chains) and rolls up with one map-side-combined aggregate.
-   * Oracle is the literal recursive CTE. */
-  private def qSubtreeRollup(s: SparkSession, dir: String): DataFrame = {
-    val nodes = t(s, dir, "customer").select(col("c_custkey"),
-      when(col("c_custkey") >= 10, expr("c_custkey div 10")).as("parent"),
-      cents(col("c_acctbal")).as("bal"))
-    graft.operators.Graph.subtreeRollup(nodes, "c_custkey", "parent", "bal",
-        maxDepth = 6)
-      .orderBy("id")
-  }
-
-  /** B108 (r14): decimal rounding + sign-arithmetic conformance —
-   * the money-math rules a migration silently bends, certified
-   * value-per-row on EXACT decimal ties constructed from integers
-   * (never from doubles, whose binary ties diverge — the r4 lesson):
-   * HALF_UP round vs HALF_EVEN bround on genuine .x5 ties of both
-   * signs, floor/ceil toward ∓∞ on negatives, truncating integer
-   * div, dividend-sign %, and non-negative pmod (DuckDB has no pmod —
-   * the oracle replays it as ((a % b) + b) % b, pinning the exact
-   * translation a migration must write). All outputs rescaled to
-   * BIGINT so nothing compares in float space. */
-  private def qDecimalConformance(s: SparkSession, dir: String): DataFrame = {
-    // spread: the decimal placement/rounding chain otherwise runs on
-    // the single-file scan's one task (r19; result order-identical)
-    val li = graft.dedup.Dedup.spread(t(s, dir, "lineitem")).select(
-      col("l_orderkey"), col("l_linenumber"),
-      cents(col("l_extendedprice")).as("c"))
-      // a signed integer cent value ending in 5: an EXACT .x5 tie
-      // once placed at scale 2
-      .withColumn("s_c",
-        (expr("c div 10") * 10 + 5) *
-          when(col("l_orderkey") % 2 === 0, -1L).otherwise(1L))
-      .withColumn("v", expr("cast(s_c as decimal(18,0)) * 0.01"))
-    li.select(
-        col("l_orderkey"), col("l_linenumber"), col("s_c"),
-        expr("cast(round(v, 1) * 10 as bigint)").as("r_half_up"),
-        expr("cast(bround(v, 1) * 10 as bigint)").as("r_half_even"),
-        expr("cast(floor(v) as bigint)").as("fl"),
-        expr("cast(ceil(v) as bigint)").as("ce"),
-        expr("s_c div 7").as("idiv"),
-        (col("s_c") % 7).as("imod"),
-        pmod(col("s_c"), lit(7L)).as("pm"))
-      .orderBy("l_orderkey", "l_linenumber")
-  }
-
-  /** B107 (r14): bill-of-materials explosion
-   * ([[graft.operators.Graph.bomExplode]]) — B74's closure with a
-   * MULTIPLICATIVE edge weight: effective units of every component
-   * per unit of every assembly = product of per-level quantities
-   * along the path (the recursive-CTE-with-arithmetic workload).
-   * Same 10-ary customer forest as B74, per-edge qty = key mod 5 + 1;
-   * the oracle runs the literal RECURSIVE CTE with the running
-   * product. */
-  private def qBomExplode(s: SparkSession, dir: String): DataFrame = {
-    val nodes = t(s, dir, "customer").select(col("c_custkey"),
-      when(col("c_custkey") >= 10, expr("c_custkey div 10")).as("parent"),
-      (col("c_custkey") % 5 + 1).as("qty"))
-    graft.operators.Graph.bomExplode(nodes, "c_custkey", "parent", "qty",
-        maxDepth = 6)
-      .orderBy("id")
-  }
-
-  /** A17 (r13): schema-drift audit on schema-on-read ingest — the
-   * complement of A14's quarantine: A14 catches MALFORMED lines,
-   * this catches well-formed lines whose producer started emitting
-   * NEW KEYS the declared schema silently drops (`from_json`
-   * discards unknown fields — an upstream v2 rollout costs data with
-   * no error anywhere). One codegen'd `json_object_keys` pass →
-   * explode → anti-filter against the declared key set →
-   * map-side-combined count per unknown key. Drift is carved
-   * deterministically (two conditional fields on orderkey moduli;
-   * `to_json` omits null fields, so presence is the conditional). */
-  private def qSchemaDrift(s: SparkSession, dir: String): DataFrame = {
-    val declared = Seq("order_key", "priority")
-    val lines = t(s, dir, "orders").select(to_json(struct(
-      col("o_orderkey").as("order_key"),
-      col("o_orderpriority").as("priority"),
-      when(col("o_orderkey") % 37 === 0, lit("v2")).as("src_v2_field"),
-      when(col("o_orderkey") % 101 === 0, col("o_totalprice")).as("exp_tag")))
-      .as("line"))
-    lines.select(explode(expr("json_object_keys(line)")).as("key"))
-      .filter(!col("key").isInCollection(declared))
-      .groupBy("key").agg(count(lit(1)).as("n_rows"))
-      .orderBy("key")
-  }
-
-  /** B75 (r13): nightly-warehouse flagship — the B-side analog of
-   * C41's corpus flagship: raw CSV arrivals → quarantine split (A14)
-   * → typed parse → broadcast dimension denorm (A4/A7) → revenue
-   * rollup, composed as ONE lazy Catalyst plan with the quarantine
-   * count carried to the output as a pseudo-segment row. The row
-   * that verifies stage-to-stage contracts (corrupt rows excluded
-   * from the join, parse types surviving into the rollup, the
-   * dimension broadcast) that no per-operator oracle sees together;
-   * a divergence at ANY stage shifts the rollup and fails the
-   * full-value compare. */
-  private def qWarehousePipeline(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.types._
-    val lines = t(s, dir, "orders").select(
-      concat_ws(",", col("o_orderkey"), col("o_custkey"), col("o_orderpriority"),
-        concat(when(col("o_orderkey") % 89 === 0, lit("x")).otherwise(lit("")),
-          cents(col("o_totalprice")))).as("line"))
-    val schema = StructType(Seq(StructField("ok", LongType),
-      StructField("ck", LongType), StructField("pr", StringType),
-      StructField("cents", LongType)))
-    val parsed = graft.sources.CsvLines.parseWithQuarantine(lines, "line", schema)
-    val facts = parsed.filter(!col("is_corrupt"))
-      .join(broadcast(t(s, dir, "customer")
-        .select(col("c_custkey"), col("c_mktsegment"))),
-        col("ck") === col("c_custkey"))
-    val rollup = facts.groupBy(col("c_mktsegment").as("segment"), col("pr"))
-      .agg(count(lit(1)).as("n_orders"), sum("cents").as("rev_cents"))
-    val dead = parsed.filter(col("is_corrupt"))
-      .agg(count(lit(1)).as("n_orders"))
-      .select(lit("__quarantine").as("segment"), lit("__quarantine").as("pr"),
-        col("n_orders"), lit(0L).as("rev_cents"))
-    rollup.unionByName(dead).orderBy("segment", "pr")
-  }
-
-  /** B76 (r13): array-function conformance — the collection surface
-   * (sort, distinct-then-sort, slice, element lookup, fold, zip,
-   * flatten-of-sequence) value-compared per row against DuckDB's
-   * list functions, on arrays built deterministically from each
-   * order's lineitem quantities. Complements B70/B71: nested-typed
-   * columns are where migrations diverge quietest (ordering of
-   * distinct, 1-based vs 0-based indexing, fold semantics). All
-   * integer element math. */
-  private def qArrayFuncs(s: SparkSession, dir: String): DataFrame = {
-    val arrs = t(s, dir, "lineitem")
-      .groupBy(col("l_orderkey"))
-      .agg(sort_array(collect_list(col("l_quantity").cast("long"))).as("qs"))
-    // arrays serialize to csv strings: the driver's compare (and its
-    // DuckDB DESCRIBE portability gate) speaks scalar types only
-    arrs.select(col("l_orderkey"),
-        array_join(col("qs"), ",").as("qs"),
-        array_join(sort_array(array_distinct(col("qs"))), ",").as("dedup_sorted"),
-        array_join(slice(col("qs"), 1, 3), ",").as("first3"),
-        element_at(col("qs"), -1).as("last_q"),
-        aggregate(col("qs"), lit(0L), (acc, x) => acc + x).as("fold_sum"),
-        array_join(zip_with(col("qs"), reverse(col("qs")), (a, b) => a + b), ",")
-          .as("zip_sum"),
-        array_join(flatten(array(col("qs"), sequence(lit(1L), lit(3L)))), ",")
-          .as("flat"),
-        size(col("qs")).cast("long").as("n"))
-      .orderBy("l_orderkey")
-  }
-
-  /** C52 (r13): bigram surprisal with stupid-backoff
-   * ([[graft.text.Surprisal.docBigramSurprisal]]) — the held-out
-   * strengthening of C47's unigram score toward CCNet's KenLM
-   * scoring: the model trains on the EVEN-id half of the corpus and
-   * scores every document, so odd docs genuinely exercise the
-   * unseen-bigram backoff branch (1-bit penalty + unigram bits) and
-   * unseen-unigram ceiling. Whole-bit integers end-to-end — the
-   * oracle replays the model exactly. */
-  private def qBigramSurprisal(s: SparkSession, dir: String): DataFrame = {
-    val docs = t(s, dir, "documents")
-    graft.text.Surprisal
-      .docBigramSurprisal(docs, docs.filter(col("doc_id") % 2 === 0))
-      .orderBy("doc_id")
-  }
-
-  /** B77 (r13): lenient-cast (TRY_CAST) conformance — the
-   * dirty-string-to-typed boundary every ingest crosses: numeric
-   * strings with whitespace/sign/decimal tails, garbage, empties,
-   * overflow-range integers, and date strings, each TRY_CASTed to
-   * long/double/date with null-on-failure semantics compared
-   * value-per-row. Inputs are carved deterministically from order
-   * priorities and keys so every branch (clean parse, trim parse,
-   * fraction truncation, garbage→null, overflow→null) has rows. */
-  private def qTryCast(s: SparkSession, dir: String): DataFrame = {
-    // spread: the carve + three try_casts (failure paths are the
-    // expensive branch) otherwise run on the single-file scan's one
-    // task (r19, guide §2.5 input parallelism; result order-identical)
-    val raw = graft.dedup.Dedup.spread(t(s, dir, "orders")).select(col("o_orderkey"),
-      when(col("o_orderkey") % 7 === 0, concat(lit(" "), col("o_orderkey"), lit(" ")))
-        .when(col("o_orderkey") % 7 === 1, concat(col("o_orderkey"), lit(".75")))
-        .when(col("o_orderkey") % 7 === 2, lit("garbage"))
-        .when(col("o_orderkey") % 7 === 3, lit(""))
-        .when(col("o_orderkey") % 7 === 4, lit("99999999999999999999"))
-        .when(col("o_orderkey") % 7 === 5, lit("-42"))
-        .otherwise(col("o_orderkey").cast("string")).as("nstr"),
-      when(col("o_orderkey") % 3 === 0, lit("1995-07-16"))
-        .when(col("o_orderkey") % 3 === 1, lit("not-a-date"))
-        .otherwise(lit("1999-02-28")).as("dstr"))
-    raw.select(col("o_orderkey"),
-        expr("try_cast(nstr as bigint)").as("as_long"),
-        expr("try_cast(nstr as double)").as("as_double"),
-        expr("try_cast(dstr as date)").cast("string").as("as_date"))
-      .orderBy("o_orderkey")
-  }
-
-  /** B78 (r13): regex conformance on the PORTABLE subset — anchored
-   * group extraction, extract-all, global replacement with group
-   * backreferences, and match flags, value-compared per row. The
-   * engines speak different dialects where it bites: Spark (Java
-   * regex) writes replacement groups `$1` and replaces globally by
-   * default, DuckDB (RE2) writes `\1` and needs the 'g' flag — the
-   * oracle uses each engine's own spelling of the SAME semantics,
-   * which is exactly what a migration must do. Patterns stay inside
-   * the dialect-portable subset (classes, quantifiers, anchors,
-   * groups). */
-  private def qRegexConformance(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "part").select(col("p_partkey"),
-        regexp_extract(col("p_name"), "([a-z]+)$", 1).as("last_word"),
-        // Spark defaults the group index to 1 — a group-less pattern
-        // needs an explicit 0 (DuckDB defaults to the full match)
-        array_join(expr("regexp_extract_all(p_name, '[a-z]{5,}', 0)"), ",")
-          .as("long_words"),
-        regexp_replace(col("p_name"), "([aeiou])([a-z])", "$2$1").as("swapped"),
-        col("p_name").rlike("^[a-z]+ (widget|bolt)$").as("is_two_word_part"),
-        regexp_replace(col("p_type"), "[AEIOU]", "_").as("devowel_type"))
-      .orderBy("p_partkey")
-
-  /** B79 (r13): approximate rolling distinct
-   * ([[graft.operators.Rolling.rollingDistinctApprox]]) — B64's
-   * long-window scale path: one HLL sketch per day, trailing window
-   * = union of w sketches over the CALENDAR-sized daily table, so a
-   * 90-day window over 10⁹ entities costs w small merges per day
-   * instead of w× entity fan-out. Sketches are deterministic for
-   * fixed input and lgK, so the oracle asserts the ±10% accuracy
-   * band as a boolean invariant against the EXACT range-join count
-   * (the declared-bound pattern of the approximate family). */
-  private def qRollingDistinctApprox(s: SparkSession, dir: String): DataFrame = {
-    val act = t(s, dir, "orders").select(col("o_custkey"),
-      datediff(to_date(col("o_orderdate")), lit("1970-01-01").cast("date"))
-        .cast("long").as("d"))
-    val approx = graft.operators.Rolling
-      .rollingDistinctApprox(act, "o_custkey", "d", windowDays = 7)
-    val exact = graft.operators.Rolling
-      .rollingDistinct(act, "o_custkey", "d", windowDays = 7)
-      .select(col("day"), col("n_distinct").as("n_exact"))
-    approx.join(exact, "day")
-      .select(col("day"), col("n_exact"),
-        (abs(col("n_approx") - col("n_exact")) * 10L <= col("n_exact"))
-          .as("within_10pct"))
-      .orderBy("day")
-  }
-
-  // ------------------------------------------------------------- contract
-
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_json_roundtrip" -> qJsonRoundtrip,
-    "q_reference_fidelity" -> qReferenceFidelity,
-    "q_join_merge"     -> qJoinMerge,
-    "q_lookup_replace" -> qLookupReplace,
-    "q_nest"           -> qNest,
-    "q_nest_chunked"   -> qNestChunked,
-    "q_conform"        -> qConform,
-    "q_flat_denorm"    -> qFlatDenorm,
-    "q_nested_denorm"  -> qNestedDenorm,
-    "q_scan_filter"    -> qScanFilter,
-    "q_agg_pricing"    -> qAggPricing,
-    "q_join_agg3"      -> qJoinAgg3,
-    "q_local_supplier" -> qLocalSupplier,
-    "q_semi_join"      -> qSemiJoin,
-    "q_anti_join"      -> qAntiJoin,
-    "q_window_topn"    -> qWindowTopn,
-    "q_running_sum"    -> qRunningSum,
-    "q_sessionize"     -> qSessionize,
-    "q_rollup"         -> qRollup,
-    "q_cube"           -> qCube,
-    "q_forecast_rev"   -> qForecastRevenue,
-    "q_cust_dist"      -> qCustDist,
-    "q_big_orders"     -> qBigOrders,
-    "q_max_bal_nation" -> qMaxBalPerNation,
-    "q_part_stats"     -> qPartStats,
-    "q_asof_join"      -> qAsofJoin,
-    "q_asof_forward"   -> qAsofForward,
-    "q_asof_nearest"   -> qAsofNearest,
-    "q_range_pairs"    -> qRangePairs,
-    "q_pivot"          -> qPivot,
-    "q_unpivot"        -> qUnpivot,
-    "q_percentile"     -> qPercentile,
-    "q_volume_ship"    -> qVolumeShip,
-    "q_setops"         -> qSetOps,
-    "q_grouping_sets"  -> qGroupingSets,
-    "q_window_frames"  -> qWindowFrames,
-    "q_date_funcs"     -> qDateFuncs,
-    "q_string_funcs"   -> qStringFuncs,
-    "q_cond_agg"       -> qCondAgg,
-    "q_promo_share"    -> qPromoShare,
-    "q_not_in"         -> qNotIn,
-    "q_global_cust"    -> qGlobalCust,
-    "q_top_supplier"   -> qTopSupplier,
-    "q_small_qty_rev"  -> qSmallQtyRev,
-    "q_disjunctive_rev" -> qDisjunctiveRev,
-    "q_blamed_supplier" -> qBlamedSupplier,
-    "q_dedup_embed_exact" -> qDedupEmbedExact,
-    "q_dedup_exact"    -> qDedupExact,
-    "q_dedup_minhash"  -> qDedupMinhash,
-    "q_dedup_simhash"  -> qDedupSimhash,
-    "q_dedup_jaccard"  -> qDedupJaccard,
-    "q_dedup_jaccard_exact" -> qDedupJaccardExact,
-    "q_dedup_containment" -> qDedupContainment,
-    "q_dedup_containment_sound" -> qDedupContainmentSound,
-    "q_dedup_containment_exact" -> qDedupContainmentExact,
-    "q_corpus_shuffle" -> qCorpusShuffle,
-    "q_context_chunks" -> qContextChunks,
-    "q_mixture_resample" -> qMixtureResample,
-    "q_token_budget"   -> qTokenBudget,
-    "q_dedup_incremental" -> qDedupIncremental,
-    "q_dedup_embed"    -> qDedupEmbed,
-    "q_semdedup"       -> qSemdedup,
-    "q_ann_bruteforce" -> qAnnBruteforce,
-    "q_ann_lsh"        -> qAnnLsh,
-    "q_ann_ivf"        -> qAnnIvf,
-    "q_ann_ivf_indexed" -> qAnnIvfIndexed,
-    "q_ann_ivfpq_indexed" -> qAnnIvfPqIndexed,
-    "q_ann_ivf_append" -> qAnnIvfAppend,
-    "q_ann_ivf_delete" -> qAnnIvfDelete,
-    "q_ann_pq"         -> qAnnPq,
-    "q_ann_ivfpq"      -> qAnnIvfPq,
-    "q_lang_id"        -> qLangId,
-    "q_text_quality"   -> qTextQuality,
-    "q_token_count"    -> qTokenCount,
-    "q_fingerprint"    -> qFingerprint,
-    "q_top_ngrams"     -> qTopNgrams,
-    "q_oov_rate"       -> qOovRate,
-    "q_k_anonymity"    -> qKAnonymity,
-    "q_k_anonymity_summary" -> qKAnonymitySummary,
-    "q_cc_sessions"    -> qCcSessions,
-    "q_dedup_clusters" -> qDedupClusters,
-    "q_dedup_impact"   -> qDedupImpact,
-    "q_dedup_clusters_exact" -> qDedupClustersExact,
-    "q_dedup_keep_best" -> qDedupKeepBest,
-    "q_leakage_split"  -> qLeakageSplit,
-    "q_dedup_minhash_sound" -> qDedupMinhashSound,
-    "q_dedup_simhash_sound" -> qDedupSimhashSound,
-    "q_dedup_clusters_sound" -> qDedupClustersSound,
-    "q_dedup_embed_sound" -> qDedupEmbedSound,
-    "q_pii_redact"     -> qPiiRedact,
-    "q_pii_luhn"       -> qPiiLuhn,
-    "q_normalize_text" -> qNormalizeText,
-    "q_surprisal"      -> qSurprisal,
-    "q_domain_stats"   -> qDomainStats,
-    "q_decontaminate"  -> qDecontaminate,
-    "q_decontaminate_bloom" -> qDecontaminateBloom,
-    "q_decontaminate_semantic" -> qDecontaminateSemantic,
-    "q_decontaminate_spans" -> qDecontaminateSpans,
-    "q_dup_spans"      -> qDupSpans,
-    "q_quota_sample"   -> qQuotaSample,
-    "q_pack_sequences" -> qPackSequences,
-    "q_pack_materialize" -> qPackMaterialize,
-    "q_tfidf"          -> qTfidf,
-    "q_bm25"           -> qBm25,
-    "q_length_hist"    -> qLengthHist,
-    "q_funnel"         -> qFunnel,
-    "q_retention"      -> qRetention,
-    "q_source_quality" -> qSourceQuality,
-    "q_priority_count" -> qPriorityCount,
-    "q_market_share"   -> qMarketShare,
-    "q_product_profit" -> qProductProfit,
-    "q_returned_items" -> qReturnedItems,
-    "q_important_parts" -> qImportantParts,
-    "q_excess_suppliers" -> qExcessSuppliers,
-    "q_repetition"     -> qRepetition,
-    "q_gopher_filter"  -> qGopherFilter,
-    "q_quality_classifier" -> qQualityClassifier,
-    "q_novelty"        -> qNovelty,
-    "q_hash_split"     -> qHashSplit,
-    "q_json_extract"   -> qJsonExtract,
-    "q_bloom_semi_join" -> qBloomSemiJoin,
-    "q_zorder_key"     -> qZorderKey,
-    "q_cms_topk"       -> qCmsTopk,
-    "q_incremental_agg" -> qIncrementalAgg,
-    "q_incremental_quantile" -> qIncrementalQuantile,
-    "q_profile"        -> qProfile,
-    "q_stratified_sample" -> qStratifiedSample,
-    "q_weighted_sample" -> qWeightedSample,
-    "q_approx_percentile" -> qApproxPercentile,
-    "q_hourly_events"  -> qHourlyEvents,
-    "q_stream_topk"    -> qStreamTopk,
-    "q_stream_topk_weighted" -> qStreamTopkWeighted,
-    "q_sliding_window" -> qSlidingWindow,
-    "q_windowed_approx_distinct" -> qWindowedApproxDistinct,
-    "q_stream_quantile" -> qStreamQuantile,
-    "q_stream_sessionize" -> qStreamSessionize,
-    "q_vector_search_sink" -> qVectorSearchSink,
-    "q_stream_ann_delete" -> qStreamAnnDelete,
-    "q_cdc_sink"      -> qCdcSink,
-    "q_upsert_versioned_stream" -> qUpsertVersionedStream,
-    "q_interval_join" -> qIntervalJoin,
-    "q_interval_join_outer" -> qIntervalJoinOuter,
-    "q_stream_dedup"  -> qStreamDedup,
-    "q_salted_join"   -> qSaltedJoin,
-    "q_snapshot_diff" -> qSnapshotDiff,
-    "q_stream_enrich" -> qStreamEnrich,
-    "q_upsert"        -> qUpsert,
-    "q_upsert_versioned" -> qUpsertVersioned,
-    "q_cdc_apply"     -> qCdcApply,
-    "q_simjoin"       -> qSimjoin,
-    "q_attribution"   -> qAttribution,
-    "q_bfs"           -> qBfs,
-    "q_session_transitions" -> qSessionTransitions,
-    "q_session_paths" -> qSessionPaths,
-    "q_fd_audit"      -> qFdAudit,
-    "q_constraint_audit" -> qConstraintAudit,
-    "q_group_ols"     -> qGroupOls,
-    "q_interpolate"   -> qInterpolate,
-    "q_group_mode"    -> qGroupMode,
-    "q_jl_project"    -> qJlProject,
-    "q_weak_label"    -> qWeakLabel,
-    "q_anomaly"       -> qAnomaly,
-    "q_chi_square"    -> qChiSquare,
-    "q_period_over_period" -> qPeriodOverPeriod,
-    "q_stream_drift"  -> qStreamDrift,
-    "q_snapshot_publish" -> qSnapshotPublish,
-    "q_dataset_card"  -> qDatasetCard,
-    "q_running_balance" -> qRunningBalance,
-    "q_rag_topk"      -> qRagTopk,
-    "q_mv_refresh"    -> qMvRefresh,
-    "q_fuzzy_match"   -> qFuzzyMatch,
-    "q_targeted_delete" -> qTargetedDelete,
-    "q_append_sink"   -> qAppendSink,
-    "q_snapshot_enrich_stream" -> qSnapshotEnrichStream,
-    "q_interval_anti" -> qIntervalAnti,
-    "q_publish_gate" -> qPublishGate,
-    "q_snapshot_changes" -> qSnapshotChanges,
-    "q_snapshot_vacuum" -> qSnapshotVacuum,
-    "q_change_apply" -> qChangeApply,
-    "q_snapshot_tag" -> qSnapshotTag,
-    "q_schema_guard" -> qSchemaGuard,
-    "q_governed_release" -> qGovernedRelease,
-    "q_mixture_temperature" -> qMixtureTemperature,
-    "q_interval_coverage" -> qIntervalCoverage,
-    "q_gini_nation"   -> qGiniNation,
-    "q_fair_allocation" -> qFairAllocation,
-    "q_budget_materialize" -> qBudgetMaterialize,
-    "q_chunk_dedup" -> qChunkDedup,
-    "q_blocklist" -> qBlocklist,
-    "q_mask_policy" -> qMaskPolicy,
-    "q_passage_overlap" -> qPassageOverlap,
-    "q_drift"         -> qDrift,
-    "q_ingest"        -> qIngest,
-    "q_cooccurrence"  -> qCooccurrence,
-    "q_compact_partitioned" -> qCompactPartitioned,
-    "q_time_weighted" -> qTimeWeighted,
-    "q_late_events"   -> qLateEvents,
-    "q_cli_run"       -> qCliRun,
-    "q_cli_mask"      -> qCliMask,
-    "q_cli_storage"   -> qCliStorage,
-    "q_cli_replicate" -> qCliReplicate,
-    "q_snapshot_branch" -> qSnapshotBranch,
-    "q_branch_merge"   -> qBranchMerge,
-    "q_branch_gc"      -> qBranchGc,
-    "q_snapshot_history" -> qSnapshotHistory,
-    "q_row_merge"      -> qRowMerge,
-    "q_replicate"      -> qReplicate,
-    "q_partition_prune" -> qPartitionPrune,
-    "q_csv_quarantine" -> qCsvQuarantine,
-    "q_approx_distinct" -> qApproxDistinct,
-    "q_media_features" -> qMediaFeatures,
-    "q_media_frames"   -> qMediaFrames,
-    "q_media_dedup"    -> qMediaDedup,
-    "q_media_neardup"  -> qMediaNeardup,
-    "q_media_clusters" -> qMediaClusters,
-    "q_media_headers"  -> qMediaHeaders,
-    "q_segment_dedup"  -> qSegmentDedup,
-    "q_boilerplate"    -> qBoilerplate,
-    "q_inverted_index" -> qInvertedIndex,
-    "q_sketch_merge"   -> qSketchMerge,
-    "q_cluster_assign" -> qClusterAssign,
-    "q_filter_chain"   -> qFilterChain,
-    "q_corpus_pipeline" -> qCorpusPipeline,
-    "q_session_window" -> qSessionWindow,
-    "q_date_spine"     -> qDateSpine,
-    "q_pagerank"       -> qPagerank,
-    "q_scd2"           -> qScd2,
-    "q_table_checksum" -> qTableChecksum,
-    "q_source_overlap" -> qSourceOverlap,
-    "q_record_linkage" -> qRecordLinkage,
-    "q_record_linkage_del" -> qRecordLinkageDel,
-    "q_record_linkage_del2" -> qRecordLinkageDel2,
-    "q_linkage_clusters" -> qLinkageClusters,
-    "q_winsorize"      -> qWinsorize,
-    "q_group_topk"     -> qGroupTopk,
-    "q_triangles"      -> qTriangles,
-    "q_mad_outliers"   -> qMadOutliers,
-    "q_islands"        -> qIslands,
-    "q_peak_concurrency" -> qPeakConcurrency,
-    "q_rolling_distinct" -> qRollingDistinct,
-    "q_band_lookup"    -> qBandLookup,
-    "q_rfm"            -> qRfm,
-    "q_concentration"  -> qConcentration,
-    "q_incremental_join" -> qIncrementalJoin,
-    "q_weighted_quantile" -> qWeightedQuantile,
-    "q_join_profile"   -> qJoinProfile,
-    "q_pit_join"       -> qPitJoin,
-    "q_bitemporal_join" -> qBitemporalJoin,
-    "q_clamped_balance" -> qClampedBalance,
-    "q_fifo_cogs" -> qFifoCogs,
-    "q_basket_lift" -> qBasketLift,
-    "q_sequence_pattern" -> qSequencePattern,
-    "q_pattern_sessions" -> qPatternSessions,
-    "q_effective_config" -> qEffectiveConfig,
-    "q_tail_attribution" -> qTailAttribution,
-    "q_corr_matrix" -> qCorrMatrix,
-    "q_business_days" -> qBusinessDays,
-    "q_pvm_bridge" -> qPvmBridge,
-    "q_cusum_drift" -> qCusumDrift,
-    "q_rank_movers" -> qRankMovers,
-    "q_inventory_aging" -> qInventoryAging,
-    "q_funnel_windowed" -> qFunnelWindowed,
-    "q_prefix_sharing" -> qPrefixSharing,
-    "q_bom_explode" -> qBomExplode,
-    "q_decimal_conformance" -> qDecimalConformance,
-    "q_snapshot_read_all" -> qSnapshotReadAll,
-    "q_centroid_outliers" -> qCentroidOutliers,
-    "q_ranking_auc" -> qRankingAuc,
-    "q_interval_relations" -> qIntervalRelations,
-    "q_kendall_trend" -> qKendallTrend,
-    "q_stream_asof" -> qStreamAsof,
-    "q_concurrency_live" -> qConcurrencyLive,
-    "q_erase_history" -> qEraseHistory,
-    "q_vocab_coverage" -> qVocabCoverage,
-    "q_hard_negatives" -> qHardNegatives,
-    "q_rrf_fusion" -> qRrfFusion,
-    "q_mmr_rerank" -> qMmrRerank,
-    "q_code_switch" -> qCodeSwitch,
-    "q_benford" -> qBenford,
-    "q_duplicate_payments" -> qDuplicatePayments,
-    "q_reconcile" -> qReconcile,
-    "q_theil_sen" -> qTheilSen,
-    "q_next_purchase" -> qNextPurchase,
-    "q_pro_rata" -> qProRata,
-    "q_interval_merge" -> qIntervalMerge,
-    "q_dup_alarm" -> qDupAlarm,
-    "q_hybrid_retrieval" -> qHybridRetrieval,
-    "q_survival" -> qSurvival,
-    "q_calibration" -> qCalibration,
-    "q_shard_assign" -> qShardAssign,
-    "q_critical_path" -> qCriticalPath,
-    "q_path_count" -> qPathCount,
-    "q_cycle_census" -> qCycleCensus,
-    "q_snapshot_catalog" -> qSnapshotCatalog,
-    "q_linked_publish" -> qLinkedPublish,
-    "q_storage_report" -> qStorageReport,
-    "q_fsck" -> qFsck,
-    "q_fsck_repair" -> qFsckRepair,
-    "q_fsck_restore" -> qFsckRestore,
-    "q_ref_gc" -> qRefGc,
-    "q_reconcile_live" -> qReconcileLive,
-    "q_clamped_balance_stream" -> qClampedBalanceStream,
-    "q_rate_cap" -> qRateCap,
-    "q_funnel_live" -> qFunnelLive,
-    "q_topk_others" -> qTopkOthers,
-    "q_window_conformance" -> qWindowConformance,
-    "q_null_semantics" -> qNullSemantics,
-    "q_orc_roundtrip"  -> qOrcRoundtrip,
-    "q_adaptive_salt"  -> qAdaptiveSalt,
-    "q_embedding_stats" -> qEmbeddingStats,
-    "q_pca_gram" -> qPcaGram,
-    "q_ann_pca" -> qAnnPca,
-    "q_ann_recall" -> qAnnRecall,
-    "q_stream_snapshot_publish" -> qStreamSnapshotPublish,
-    "q_stream_branch_publish" -> qStreamBranchPublish,
-    "q_stream_quality_gate" -> qStreamQualityGate,
-    "q_stream_neardup_gate" -> qStreamNeardupGate,
-    "q_stream_media_route" -> qStreamMediaRoute,
-    "q_url_dedup"      -> qUrlDedup,
-    "q_bpe_merges" -> qBpeMerges,
-    "q_bpe_merges_batched" -> qBpeMergesBatched,
-    "q_bpe_apply" -> qBpeApply,
-    "q_pca_project" -> qPcaProject,
-    "q_quantize_int8" -> qQuantizeInt8,
-    "q_length_buckets" -> qLengthBuckets,
-    "q_join_explosion" -> qJoinExplosion,
-    "q_join_estimate"  -> qJoinEstimate,
-    "q_sample_estimate" -> qSampleEstimate,
-    "q_skyline"        -> qSkyline,
-    "q_bitmap_distinct" -> qBitmapDistinct,
-    "q_subtree_rollup" -> qSubtreeRollup,
-    "q_schema_drift"   -> qSchemaDrift,
-    "q_warehouse_pipeline" -> qWarehousePipeline,
-    "q_array_funcs"    -> qArrayFuncs,
-    "q_bigram_surprisal" -> qBigramSurprisal,
-    "q_try_cast"       -> qTryCast,
-    "q_regex_conformance" -> qRegexConformance,
-    "q_rolling_distinct_approx" -> qRollingDistinctApprox,
-  )
-
-  // ------------------------------------------------------------------------
-  // DuckDB replay of the engine's 64-bit text-hash pipeline
-  // (HashOps.simhashText / wordShingleHashes) for the C3/C33 FULL
-  // oracles: ASCII-lowered [a-z0-9_]+ tokens → per-token FNV-1a-64 →
-  // (shingles) splitmix64-combined word-3-grams / (simhash) per-bit
-  // sign votes. All arithmetic is mod 2^64, bit-exact vs the JVM:
-  // xor and >>> run on UBIGINT; each 64×64 multiply runs in HUGEINT
-  // with the multiplier split into 32-bit halves (the full 128-bit
-  // product would overflow HUGEINT's 2^127−1 cap). Same ASCII-corpus
-  // precondition as the C4b string-space oracle: the engine hashes
-  // UTF-8 BYTES, the replay hashes codepoints, identical for ASCII
-  // (CorpusAssemblySpec pins the non-ASCII edge cases in-JVM).
-  // ------------------------------------------------------------------------
-
-  /** `a*b mod 2^64` for a HUGEINT expr `a` in [0,2^64) and a constant
-   * unsigned-64 multiplier, split hi/lo so no intermediate exceeds
-   * 2^96. */
-  private def sqlMulMod64(a: String, b: java.math.BigInteger): String = {
-    val hi = b.shiftRight(32); val lo = b.and(java.math.BigInteger.valueOf(0xffffffffL))
-    s"((($a) * $lo) % 18446744073709551616 + ((($a) * $hi) % 4294967296) * 4294967296) % 18446744073709551616"
-  }
-  private def big(hex: String) = new java.math.BigInteger(hex, 16)
-  private def sqlXor64(a: String, b: String): String =
-    s"CAST(xor(CAST(($a) AS UBIGINT), CAST(($b) AS UBIGINT)) AS HUGEINT)"
-  private def sqlShr64(a: String, k: Int): String =
-    s"CAST(CAST(($a) AS UBIGINT) >> $k AS HUGEINT)"
-
-  /** splitmix64 finalizer (HashOps.mix64) as a lateral-alias column
-   * chain `p1,p2,p3,po` (po = the mix of `e`) — nesting the three
-   * multiply/xor rounds as one expression would duplicate `e`
-   * exponentially. */
-  private def sqlMixCols(e: String, p: String): String =
-    s"(($e) + 11400714819323198485) % 18446744073709551616 AS ${p}1, " +
-      s"${sqlMulMod64(sqlXor64(s"${p}1", sqlShr64(s"${p}1", 30)), big("bf58476d1ce4e5b9"))} AS ${p}2, " +
-      s"${sqlMulMod64(sqlXor64(s"${p}2", sqlShr64(s"${p}2", 27)), big("94d049bb133111eb"))} AS ${p}3, " +
-      s"${sqlXor64(s"${p}3", sqlShr64(s"${p}3", 31))} AS ${p}o"
-
-  /** FNV-1a-64 of a VARCHAR expr, one codepoint per step (== one byte
-   * for ASCII), via list_reduce with the offset basis prepended
-   * (DuckDB 1.0 list_reduce has no initial-value form). */
-  private def sqlFnv64(t: String): String = {
-    val step = sqlMulMod64(sqlXor64("h", "c"), big("100000001b3"))
-    s"list_reduce(list_prepend(CAST(14695981039346656037 AS HUGEINT), " +
-      s"list_transform(range(1, length($t)+1), i -> CAST(ord(substr($t, CAST(i AS INT), 1)) AS HUGEINT))), " +
-      s"(h, c) -> ($step))"
-  }
-
-  /** CTE block: `reps(rep_id, text)` → `tocc(rep_id, tok, pos)` +
-   * `dh(tok, th)` (FNV-1a per DISTINCT token — each token string is
-   * hashed once, as the engine's per-row loop is replayed set-wise).
-   * Tokenizer = the C4b oracle tokenizer (ASCII lower + split on
-   * ASCII non-[a-z0-9_]), byte-for-byte HashOps' inline scanner.
-   * MATERIALIZED: DuckDB inlines plain CTEs per reference, which
-   * re-runs the whole hash pipeline for every downstream mention. */
-  private val sqlTokenCtes: String =
-    """toks AS MATERIALIZED (SELECT rep_id,
-           list_filter(string_split_regex(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[\x00-\x2f\x3a-\x40\x5b-\x5e\x60\x7b-\x7f]+'), t -> t <> '') AS ts
-           FROM reps),
-         tocc AS MATERIALIZED (SELECT rep_id, ts[CAST(i AS INT)] AS tok, i AS pos
-           FROM toks, UNNEST(range(1, len(ts)+1)) AS u(i)),
-         dh AS MATERIALIZED (SELECT tok, """ + sqlFnv64("tok") + """ AS th
-           FROM (SELECT DISTINCT tok FROM tocc)),"""
-
-  /** CTE block: token hashes → `sh(rep_id, sh)` = the DISTINCT
-   * word-3-gram shingle-hash set (HashOps.wordShingleHashes): rolling
-   * acc = mix64(acc ⊕ tokHash) over each 3-token window. Reps with
-   * < 3 tokens are ABSENT (empty set), matching the engine.
-   * One MATERIALIZED layer per mix64 round: a lateral alias is
-   * substituted textually, so chaining the three rounds inside one
-   * SELECT would nest the duplication ~32× per round (the first cut
-   * of this oracle ran MINUTES at sf0.01 for exactly that reason);
-   * materializing each round's output column keeps every round a
-   * constant-size expression over a stored column. */
-  private val sqlShingleCtes: String =
-    """seq AS MATERIALIZED (SELECT rep_id, list(th ORDER BY pos) AS ths
-           FROM tocc JOIN dh USING (tok) GROUP BY rep_id),
-         sj AS MATERIALIZED (SELECT rep_id, ths[CAST(j AS INT)] AS t0,
-             ths[CAST(j AS INT)+1] AS t1, ths[CAST(j AS INT)+2] AS t2
-           FROM seq, UNNEST(range(1, len(ths)-1)) AS u(j)),
-         smA AS MATERIALIZED (SELECT rep_id, t1, t2, """ +
-      sqlMixCols(sqlXor64("14695981039346656037", "t0"), "a") + """
-           FROM sj),
-         smB AS MATERIALIZED (SELECT rep_id, t2, """ +
-      sqlMixCols(sqlXor64("ao", "t1"), "b") + """
-           FROM smA),
-         smC AS MATERIALIZED (SELECT rep_id, """ +
-      sqlMixCols(sqlXor64("bo", "t2"), "c") + """
-           FROM smB),
-         sh AS MATERIALIZED (SELECT rep_id, list(DISTINCT CAST(co AS UBIGINT)) AS sh
-           FROM smC GROUP BY rep_id),"""
-
-  /** DuckDB replay of the C84 BPE trainer: the (word, freq)
-   * vocabulary, then `n` unrolled merge rounds (the hash-replay
-   * generated-CTE precedent). Each round: adjacent-pair enumeration
-   * over the current segmentation, weighted replace-count, best pair
-   * (count desc, pair lex), fold the winner in. Emits CTEs
-   * `vocab, v0..v{n}` (padded symbol strings, word kept) and
-   * `b1..b{n}` (each round's winner). */
-  private def sqlBpeRounds(n: Int): String = {
-    val head =
-      """vocab AS MATERIALIZED (SELECT w, CAST(COUNT(*) AS BIGINT) AS freq FROM (
-           SELECT unnest(list_filter(regexp_split_to_array(TRIM(text), '\s+'), t -> t <> '')) AS w
-           FROM documents) GROUP BY w),
-         v0 AS MATERIALIZED (SELECT w,
-           ' ' || array_to_string(string_split(w, ''), ' ') || ' ' AS sym, freq
-           FROM vocab),"""
-    val rounds = (1 to n).map { r =>
-      s"""b$r AS MATERIALIZED (
-           SELECT pair, CAST(SUM(((length(sym) - length(replace(sym, ' ' || pair || ' ', ' ')))
-               // (length(pair) + 1)) * freq) AS BIGINT) AS wcnt
-           FROM (SELECT sym, freq, u.pr AS pair FROM (
-             SELECT sym, freq,
-               list_distinct(list_transform(range(1, len(syms)),
-                 i -> syms[CAST(i AS INT)] || ' ' || syms[CAST(i AS INT) + 1])) AS prs
-             FROM (SELECT sym, freq, string_split(trim(sym), ' ') AS syms FROM v${r - 1})
-             WHERE len(syms) >= 2), UNNEST(prs) AS u(pr))
-           GROUP BY pair ORDER BY wcnt DESC, pair LIMIT 1),
-         v$r AS MATERIALIZED (
-           SELECT w, replace(sym, ' ' || (SELECT pair FROM b$r) || ' ',
-             ' ' || (SELECT replace(pair, ' ', '') FROM b$r) || ' ') AS sym, freq
-           FROM v${r - 1}),"""
-    }.mkString("\n         ")
-    head + "\n         " + rounds
-  }
-
-  /** DuckDB replay of the C84b BATCHED BPE trainer: per round, the
-   * full weighted pair-count relation, the top-`window` candidate
-   * list (wcnt desc, pair lex → rn), the rank-window disjointness
-   * anti-join (a candidate survives iff its two symbols avoid the
-   * symbols AND merged form of every better-ranked candidate), the
-   * first-`kBatch` pick cap, and the ordered replace fold via
-   * list_reduce — exactly [[graft.text.Bpe.learnMergesBatched]]'s
-   * rule, unrolled. Emits CTEs `vocab, v0..v{rounds}` and
-   * `sel1..sel{rounds}` (each round's picks). */
-  private def sqlBpeBatchedRounds(rounds: Int, kBatch: Int): String = {
-    val window = kBatch * 4
-    val head =
-      """vocab AS MATERIALIZED (SELECT w, CAST(COUNT(*) AS BIGINT) AS freq FROM (
-           SELECT unnest(list_filter(regexp_split_to_array(TRIM(text), '\s+'), t -> t <> '')) AS w
-           FROM documents) GROUP BY w),
-         v0 AS MATERIALIZED (SELECT w,
-           ' ' || array_to_string(string_split(w, ''), ' ') || ' ' AS sym, freq
-           FROM vocab),"""
-    val perRound = (1 to rounds).map { r =>
-      s"""cand$r AS MATERIALIZED (
-           SELECT pair, wcnt, row_number() OVER (ORDER BY wcnt DESC, pair) AS rn FROM (
-             SELECT pair, CAST(SUM(((length(sym) - length(replace(sym, ' ' || pair || ' ', ' ')))
-                 // (length(pair) + 1)) * freq) AS BIGINT) AS wcnt
-             FROM (SELECT sym, freq, u.pr AS pair FROM (
-               SELECT sym, freq,
-                 list_distinct(list_transform(range(1, len(syms)),
-                   i -> syms[CAST(i AS INT)] || ' ' || syms[CAST(i AS INT) + 1])) AS prs
-               FROM (SELECT sym, freq, string_split(trim(sym), ' ') AS syms FROM v${r - 1})
-               WHERE len(syms) >= 2), UNNEST(prs) AS u(pr))
-             GROUP BY pair)
-           ORDER BY wcnt DESC, pair LIMIT $window),
-         sel$r AS MATERIALIZED (
-           SELECT pair, wcnt, row_number() OVER (ORDER BY rn) AS pick FROM (
-             SELECT c1.pair, c1.wcnt, c1.rn FROM cand$r c1 WHERE NOT EXISTS (
-               SELECT 1 FROM cand$r c2 WHERE c2.rn < c1.rn AND (
-                 string_split(c2.pair, ' ')[1] IN (string_split(c1.pair, ' ')[1], string_split(c1.pair, ' ')[2]) OR
-                 string_split(c2.pair, ' ')[2] IN (string_split(c1.pair, ' ')[1], string_split(c1.pair, ' ')[2]) OR
-                 replace(c2.pair, ' ', '') IN (string_split(c1.pair, ' ')[1], string_split(c1.pair, ' ')[2])))
-             ORDER BY rn LIMIT $kBatch)),
-         v$r AS MATERIALIZED (
-           SELECT w, list_reduce(list_prepend(sym,
-               coalesce((SELECT list(pair ORDER BY pick) FROM sel$r), [])),
-             (acc, p) -> replace(acc, ' ' || p || ' ', ' ' || replace(p, ' ', '') || ' ')) AS sym, freq
-           FROM v${r - 1}),"""
-    }.mkString("\n         ")
-    head + "\n         " + perRound
-  }
-
-  def oracleSql: Map[String, String] = Map(
-    // D28: the streamed LWW end state + version count replayed.
-    "q_stream_snapshot_publish" ->
-      """SELECT o_orderkey AS k,
-           CAST(ROUND(o_totalprice * 100, 0) AS BIGINT)
-             + CASE WHEN o_orderkey % 2 = 0 THEN 7 ELSE 0 END AS v,
-           CAST(2 AS BIGINT) AS n_versions
-         FROM orders WHERE o_orderkey % 37 = 0 ORDER BY k""",
-    // D29: the branch-staged stream's LWW end state as served by prod
-    // AFTER the A36 merge, plus the pinned version lineage (prod held
-    // at v1 through both micro-batches; v1 + 2 stream + 1 merge = 4).
-    "q_stream_branch_publish" ->
-      """SELECT o_orderkey AS k,
-           CAST(ROUND(o_totalprice * 100, 0) AS BIGINT)
-             + CASE WHEN o_orderkey % 2 = 0 THEN 7 ELSE 0 END AS v,
-           CAST(1 AS BIGINT) AS prod_before,
-           CAST(4 AS BIGINT) AS n_versions
-         FROM orders WHERE o_orderkey % 37 = 0 ORDER BY k""",
-    // D31: the streamed verdict union must equal one full-batch
-    // keep-first run over all docs (the C37 increment≡full-run
-    // contract) — the C2 string-space keep-table SQL verbatim, under
-    // the same LSH-recall hedge.
-    "q_stream_neardup_gate" ->
-      """WITH keyed AS (SELECT doc_id, COALESCE(text, '') AS text FROM documents),
-         reps AS (SELECT text, MIN(doc_id) AS rep_id FROM keyed GROUP BY text),
-         toks AS (SELECT rep_id,
-           list_filter(string_split_regex(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[\x00-\x2f\x3a-\x40\x5b-\x5e\x60\x7b-\x7f]+'), t -> t <> '') AS ts
-           FROM reps),
-         g AS (SELECT rep_id, list(DISTINCT array_to_string(ts[i : i + 2], ' ')) AS sh
-               FROM toks, UNNEST(range(1, len(ts) - 1)) AS u(i) GROUP BY rep_id),
-         dead AS (SELECT b.rep_id AS dead_rep, CAST(COUNT(*) AS BIGINT) AS n_near
-               FROM g a JOIN g b ON a.rep_id < b.rep_id
-               AND len(list_intersect(a.sh, b.sh)) * 1.0 /
-                   len(list_distinct(list_concat(a.sh, b.sh))) >= 0.8
-               GROUP BY 1)
-         SELECT k.doc_id,
-           (k.doc_id = r.rep_id AND d.n_near IS NULL) AS keep
-         FROM keyed k JOIN reps r ON k.text = r.text
-         LEFT JOIN dead d ON r.rep_id = d.dead_rep
-         ORDER BY doc_id""",
-    // D30: both quality kernels and the gate replayed over the same
-    // planted corpus — classifier score via the mod-2^64 token CTEs,
-    // repetition ppm via the whitespace-gram CTEs (renamed to avoid
-    // colliding with the token block's names).
-    "q_stream_quality_gate" ->
-      ("""WITH raw AS MATERIALIZED (SELECT doc_id,
-           CASE WHEN doc_id % 9 = 0 THEN text || repeat(' buy cheap now', 12)
-             ELSE text END AS rtext FROM documents),
-         reps AS MATERIALIZED (SELECT doc_id AS rep_id, rtext AS text FROM raw),
-         """ + sqlTokenCtes + """
-         occ AS MATERIALIZED (SELECT t.rep_id,
-             CAST(CAST(d.th AS UBIGINT) % 65536 AS HUGEINT) AS b
-           FROM tocc t JOIN dh d USING (tok)),
-         bk AS (SELECT DISTINCT b FROM occ),
-         bm AS MATERIALIZED (SELECT b, """ +
-        sqlMixCols(sqlXor64("b", "1442695040888963407"), "m") + """
-           FROM bk),
-         bw AS (SELECT b, CAST(mo % 2001 - 1000 AS BIGINT) AS w FROM bm),
-         sc AS (SELECT r.rep_id AS doc_id, CAST(COALESCE(SUM(x.w), 0) AS BIGINT) AS score
-           FROM reps r LEFT JOIN (SELECT o.rep_id, bw.w FROM occ o JOIN bw USING (b)) x
-             ON r.rep_id = x.rep_id GROUP BY 1),
-         wt AS MATERIALIZED (SELECT doc_id, length(rtext) AS nc,
-           list_filter(string_split_regex(rtext, '[ \t\n\r]+'), s -> s <> '') AS ts
-           FROM raw),
-         wg AS (SELECT doc_id, nc,
-             array_to_string(list_slice(ts, CAST(u.i AS INT), CAST(u.i AS INT) + 1), ' ') AS gram
-           FROM wt, UNNEST(range(1, len(ts))) AS u(i)),
-         wc AS (SELECT doc_id, nc, gram, COUNT(*) AS c FROM wg GROUP BY 1, 2, 3),
-         wb AS (SELECT doc_id, CAST(c * length(gram) * 1000000 // nc AS BIGINT) AS ppm FROM wc
-           QUALIFY row_number() OVER (PARTITION BY doc_id ORDER BY c DESC, gram) = 1)
-         SELECT r.doc_id, sc.score, COALESCE(wb.ppm, 0) AS top2_ppm,
-           (sc.score >= 0 AND COALESCE(wb.ppm, 0) <= 200000) AS accepted
-         FROM raw r JOIN sc USING (doc_id) LEFT JOIN wb USING (doc_id)
-         ORDER BY r.doc_id"""),
-    // C84: the eight learned merges replayed round for round.
-    "q_bpe_merges" ->
-      ("WITH " + sqlBpeRounds(8) + """
-         u AS (""" +
-        (1 to 8).map(r => s"SELECT CAST($r AS BIGINT) AS merge_idx, pair, wcnt FROM b$r")
-          .mkString(" UNION ALL ") + """)
-         SELECT merge_idx, pair, replace(pair, ' ', '') AS merged, wcnt
-         FROM u ORDER BY merge_idx"""),
-    // C84b: 64 batched merges replayed round for round — window,
-    // disjointness anti-join, pick cap, ordered replace fold.
-    "q_bpe_merges_batched" ->
-      ("WITH " + sqlBpeBatchedRounds(14, 8) + """
-         u AS (""" +
-        (1 to 14).map(r =>
-          s"SELECT CAST($r AS BIGINT) AS round, CAST(pick AS BIGINT) AS pick, pair, wcnt FROM sel$r")
-          .mkString(" UNION ALL ") + """)
-         SELECT CAST(row_number() OVER (ORDER BY round, pick) AS BIGINT) AS merge_idx,
-           round, pick, pair, replace(pair, ' ', '') AS merged, wcnt
-         FROM u ORDER BY merge_idx"""),
-    // C85: the final segmentation joined back to the corpus words.
-    "q_bpe_apply" ->
-      ("WITH " + sqlBpeRounds(8) + """
-         words AS (SELECT doc_id, w FROM (
-           SELECT doc_id,
-             unnest(list_filter(regexp_split_to_array(TRIM(text), '\s+'), t -> t <> '')) AS w
-           FROM documents))
-         SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_words,
-           CAST(SUM(length(w)) AS BIGINT) AS symbols_before,
-           CAST(SUM(len(string_split(trim(sym), ' '))) AS BIGINT) AS tokens_after
-         FROM words JOIN v8 USING (w)
-         GROUP BY doc_id ORDER BY doc_id"""),
-    // DuckDB replay over the reference's own fixture files (fixed,
-    // read-only inputs — same absolute paths the query reads): the
-    // credit⋈recording join plus the per-artist nest cardinality.
-    "q_reference_fidelity" ->
-      (s"""WITH c AS (SELECT * FROM read_json_auto('$referenceRoot/src/test/resources/artist_credit_name.json', format='newline_delimited')),
-         r AS (SELECT * FROM read_json_auto('$referenceRoot/src/test/resources/recording.json', format='newline_delimited')),
-         a AS (SELECT * FROM read_json_auto('$referenceRoot/src/test/resources/artist.json', format='newline_delimited')),
-         j AS (SELECT c.artist_credit AS credit_id, c.name AS credit_name,
-                 c.artist AS artist_fk, r.id AS recording_id,
-                 r.name AS recording_name, r.length AS recording_length
-               FROM c JOIN r ON c.artist_credit = r.artist_credit),
-         n AS (SELECT a.id AS artist_id, a.name AS artist_name,
-                 CAST(COUNT(*) AS BIGINT) AS n_nested
-               FROM a JOIN j ON j.artist_fk = a.id GROUP BY 1, 2)
-         SELECT j.credit_id, j.credit_name, j.recording_id, j.recording_name,
-           j.recording_length, n.artist_id, n.artist_name, n.n_nested
-         FROM j JOIN n ON j.artist_fk = n.artist_id
-         ORDER BY credit_id, recording_id"""),
-    "q_json_roundtrip" ->
-      """SELECT CAST(n_nationkey AS BIGINT) AS nation_n_nationkey, n_name AS nation_n_name,
-         CAST(n_regionkey AS BIGINT) AS nation_n_regionkey
-         FROM nation ORDER BY nation_n_nationkey""",
-    "q_join_merge" ->
-      """SELECT c_custkey, c_name, c_nationkey, c_acctbal, c_mktsegment,
-         o_orderkey, o_custkey, o_orderstatus, o_totalprice,
-         CAST(o_orderdate AS DATE) AS o_orderdate, o_orderpriority
-         FROM customer JOIN orders ON c_custkey = o_custkey ORDER BY o_orderkey""",
-    "q_lookup_replace" ->
-      """SELECT c_custkey, c_name,
-         COALESCE(n_name, CAST(customer.c_nationkey AS VARCHAR)) AS c_nationkey,
-         c_acctbal, c_mktsegment
-         FROM customer LEFT JOIN nation ON customer.c_nationkey = nation.n_nationkey
-         ORDER BY c_custkey""",
-    "q_nest" ->
-      """SELECT c_custkey, CAST(COUNT(o_orderkey) AS BIGINT) AS n_orders,
-         COALESCE(SUM(CAST(ROUND(o_totalprice * 100, 0) AS BIGINT)), 0) / 100.0 AS sum_total
-         FROM customer LEFT JOIN orders ON c_custkey = o_custkey
-         GROUP BY c_custkey ORDER BY c_custkey""",
-    "q_nest_chunked" ->
-      """SELECT l_orderkey AS o_orderkey,
-         CAST(CEIL(COUNT(*) / 5.0) AS BIGINT) AS n_chunks,
-         CAST(COUNT(*) AS BIGINT) AS n_items
-         FROM lineitem GROUP BY l_orderkey ORDER BY o_orderkey""",
-    // chunk replay: chunks are contiguous slices of the
-    // l_linenumber-sorted items at limit 4
-    "q_conform" ->
-      """WITH x AS (SELECT l_orderkey, l_linenumber,
-             (ROW_NUMBER() OVER (PARTITION BY l_orderkey ORDER BY l_linenumber) - 1) // 4 AS chunk
-           FROM lineitem),
-         c AS (SELECT l_orderkey AS o_orderkey, chunk,
-             CAST(COUNT(*) AS BIGINT) AS n_in_chunk,
-             CAST(MIN(l_linenumber) AS BIGINT) AS first_ln,
-             CAST(SUM(l_linenumber) AS BIGINT) AS sum_ln
-           FROM x GROUP BY 1, 2)
-         SELECT c.o_orderkey, o.o_orderstatus, CAST(NULL AS VARCHAR) AS audit_note,
-           c.n_in_chunk, c.first_ln, c.sum_ln
-         FROM c JOIN orders o ON c.o_orderkey = o.o_orderkey
-         ORDER BY c.o_orderkey, c.first_ln""",
-    "q_flat_denorm" ->
-      """SELECT c_custkey, c_name,
-         COALESCE(n_name, CAST(customer.c_nationkey AS VARCHAR)) AS c_nationkey,
-         o_orderkey, o_totalprice, CAST(o_orderdate AS DATE) AS o_orderdate,
-         o_orderpriority, l_linenumber, l_quantity, l_extendedprice
-         FROM customer LEFT JOIN nation ON customer.c_nationkey = nation.n_nationkey
-         JOIN orders ON c_custkey = o_custkey
-         JOIN lineitem ON o_orderkey = l_orderkey
-         ORDER BY o_orderkey, l_linenumber""",
-    "q_nested_denorm" ->
-      """SELECT c_custkey, c_name, CAST(COUNT(j.l_orderkey) AS BIGINT) AS n_items,
-         COALESCE(SUM(CAST(ROUND(j.l_extendedprice * 100, 0) AS BIGINT) *
-                   CAST(ROUND((1 - j.l_discount) * 100, 0) AS BIGINT)), 0) / 10000.0 AS sum_rev
-         FROM customer LEFT JOIN
-         (SELECT o_custkey, l_orderkey, l_extendedprice, l_discount
-          FROM orders JOIN lineitem ON o_orderkey = l_orderkey) j
-         ON c_custkey = j.o_custkey
-         GROUP BY c_custkey, c_name ORDER BY c_custkey""",
-    "q_scan_filter" ->
-      """SELECT l_orderkey, l_linenumber, l_quantity, l_extendedprice
-         FROM lineitem WHERE l_quantity >= 45 AND l_returnflag = 'R'
-         ORDER BY l_orderkey, l_linenumber""",
-    "q_agg_pricing" ->
-      """SELECT l_returnflag, l_linestatus,
-         SUM(CAST(ROUND(l_quantity * 100, 0) AS BIGINT)) / 100.0 AS sum_qty,
-         SUM(CAST(ROUND(l_extendedprice * 100, 0) AS BIGINT)) / 100.0 AS sum_base,
-         SUM(CAST(ROUND(l_extendedprice * 100, 0) AS BIGINT) *
-             CAST(ROUND((1 - l_discount) * 100, 0) AS BIGINT)) / 10000.0 AS sum_disc,
-         SUM(CAST(ROUND(l_extendedprice * 100, 0) AS BIGINT) *
-             CAST(ROUND((1 - l_discount) * 100, 0) AS BIGINT) *
-             CAST(ROUND((1 + l_tax) * 100, 0) AS BIGINT)) / 1000000.0 AS sum_charge,
-         SUM(CAST(ROUND(l_quantity * 100, 0) AS BIGINT)) / (100.0 * COUNT(*)) AS avg_qty,
-         SUM(CAST(ROUND(l_discount * 100, 0) AS BIGINT)) / (100.0 * COUNT(*)) AS avg_disc,
-         CAST(COUNT(*) AS BIGINT) AS count_order
-         FROM lineitem WHERE CAST(l_shipdate AS DATE) <= DATE '2000-09-02'
-         GROUP BY l_returnflag, l_linestatus ORDER BY l_returnflag, l_linestatus""",
-    "q_join_agg3" ->
-      """SELECT o_orderkey,
-         SUM(CAST(ROUND(l_extendedprice * 100, 0) AS BIGINT) *
-             CAST(ROUND((1 - l_discount) * 100, 0) AS BIGINT)) / 10000.0 AS revenue,
-         CAST(o_orderdate AS DATE) AS o_orderdate, o_orderpriority
-         FROM customer JOIN orders ON c_custkey = o_custkey
-         JOIN lineitem ON o_orderkey = l_orderkey
-         WHERE c_mktsegment = 'BUILDING'
-           AND CAST(o_orderdate AS DATE) < DATE '1998-03-15'
-           AND CAST(l_shipdate AS DATE) > DATE '1998-03-15'
-         GROUP BY o_orderkey, CAST(o_orderdate AS DATE), o_orderpriority
-         ORDER BY revenue DESC, o_orderkey LIMIT 10""",
-    "q_local_supplier" ->
-      """SELECT n_name,
-         SUM(CAST(ROUND(l_extendedprice * 100, 0) AS BIGINT) *
-             CAST(ROUND((1 - l_discount) * 100, 0) AS BIGINT)) / 10000.0 AS revenue
-         FROM customer JOIN orders ON c_custkey = o_custkey
-         JOIN lineitem ON l_orderkey = o_orderkey
-         JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
-         JOIN nation ON s_nationkey = n_nationkey
-         JOIN region ON n_regionkey = r_regionkey
-         WHERE r_name = 'ASIA'
-           AND CAST(o_orderdate AS DATE) >= DATE '1996-01-01'
-           AND CAST(o_orderdate AS DATE) <  DATE '1997-01-01'
-         GROUP BY n_name ORDER BY revenue DESC, n_name""",
-    "q_semi_join" ->
-      """SELECT c_custkey, c_name FROM customer
-         WHERE EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
-         ORDER BY c_custkey""",
-    "q_anti_join" ->
-      """SELECT c_custkey, c_name FROM customer
-         WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
-         ORDER BY c_custkey""",
-    "q_window_topn" ->
-      """SELECT o_custkey, rn, o_orderkey, o_totalprice FROM
-         (SELECT o_custkey, o_orderkey, o_totalprice,
-          ROW_NUMBER() OVER (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey) AS rn
-          FROM orders) sub
-         WHERE rn <= 3 ORDER BY o_custkey, rn""",
-    "q_running_sum" ->
-      """SELECT o_custkey, o_orderkey,
-         SUM(o_totalprice) OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
-           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS running_total
-         FROM orders ORDER BY o_custkey, o_orderkey""",
-    "q_sessionize" ->
-      """WITH e AS (
-           SELECT user_id, event_id, value, ts, epoch_us(ts) AS ts_us FROM events),
-         lagged AS (
-           SELECT *, LAG(ts_us) OVER (PARTITION BY user_id ORDER BY ts_us, event_id) AS prev_us FROM e),
-         flagged AS (
-           SELECT *, CASE WHEN prev_us IS NULL OR ts_us - prev_us > 1800000000 THEN 1 ELSE 0 END AS new_sess FROM lagged),
-         sess AS (
-           SELECT *, CAST(SUM(new_sess) OVER (PARTITION BY user_id ORDER BY ts_us, event_id
-             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_id FROM flagged)
-         SELECT user_id, session_id, CAST(COUNT(*) AS BIGINT) AS n_events,
-           strftime(MIN(ts), '%Y-%m-%d %H:%M:%S') AS session_start,
-           SUM(CAST(ROUND(value * 100, 0) AS BIGINT)) / 100.0 AS sum_value
-         FROM sess GROUP BY user_id, session_id ORDER BY user_id, session_id""",
-    "q_rollup" ->
-      """SELECT l_returnflag, l_linestatus, CAST(COUNT(*) AS BIGINT) AS n,
-         SUM(CAST(ROUND(l_quantity * 100, 0) AS BIGINT)) / 100.0 AS qty
-         FROM lineitem GROUP BY ROLLUP(l_returnflag, l_linestatus)
-         ORDER BY l_returnflag NULLS FIRST, l_linestatus NULLS FIRST""",
-    "q_cube" ->
-      """SELECT o_orderstatus, o_orderpriority, CAST(COUNT(*) AS BIGINT) AS n,
-         SUM(CAST(ROUND(o_totalprice * 100, 0) AS BIGINT)) / 100.0 AS total
-         FROM orders GROUP BY CUBE(o_orderstatus, o_orderpriority)
-         ORDER BY o_orderstatus NULLS FIRST, o_orderpriority NULLS FIRST""",
-    "q_forecast_rev" ->
-      """SELECT SUM(CAST(ROUND(l_extendedprice * 100, 0) AS BIGINT) *
-             CAST(ROUND(l_discount * 100, 0) AS BIGINT)) / 10000.0 AS revenue
-         FROM lineitem
-         WHERE CAST(l_shipdate AS DATE) >= DATE '1996-01-01'
-           AND CAST(l_shipdate AS DATE) <  DATE '1997-01-01'
-           AND l_discount >= 0.05 AND l_discount <= 0.07
-           AND l_quantity < 24""",
-    "q_cust_dist" ->
-      """SELECT c_count, CAST(COUNT(*) AS BIGINT) AS custdist FROM
-         (SELECT c_custkey, CAST(COUNT(o_orderkey) AS BIGINT) AS c_count
-          FROM customer LEFT JOIN orders ON c_custkey = o_custkey
-          GROUP BY c_custkey) sub
-         GROUP BY c_count ORDER BY custdist DESC, c_count DESC""",
-    "q_big_orders" ->
-      """SELECT c_custkey, c_name, o_orderkey, o_totalprice, sum_qty FROM
-         (SELECT l_orderkey, SUM(CAST(ROUND(l_quantity * 100, 0) AS BIGINT)) / 100.0 AS sum_qty
-          FROM lineitem GROUP BY l_orderkey HAVING sum_qty > 250) big
-         JOIN orders ON o_orderkey = big.l_orderkey
-         JOIN customer ON c_custkey = o_custkey
-         ORDER BY o_orderkey""",
-    "q_max_bal_nation" ->
-      """SELECT c_custkey, c_name, c_nationkey, c_acctbal FROM customer
-         WHERE c_acctbal = (SELECT MAX(c2.c_acctbal) FROM customer c2
-                            WHERE c2.c_nationkey = customer.c_nationkey)
-         ORDER BY c_custkey""",
-    "q_part_stats" ->
-      """SELECT p_brand, CAST(COUNT(*) AS BIGINT) AS n_parts,
-         MIN(p_size) AS min_size, MAX(p_size) AS max_size,
-         SUM(CAST(ROUND(p_retailprice * 100, 0) AS BIGINT)) / (100.0 * COUNT(*)) AS avg_price
-         FROM part GROUP BY p_brand ORDER BY p_brand""",
-    "q_dedup_exact" ->
-      """SELECT md5(text) AS text_md5, CAST(MIN(doc_id) AS BIGINT) AS keep_id,
-         CAST(COUNT(*) AS BIGINT) AS n_copies
-         FROM documents GROUP BY md5(text) ORDER BY keep_id""",
-    "q_text_quality" ->
-      """SELECT doc_id,
-         CAST(LENGTH(text) AS BIGINT) AS n_chars,
-         CAST(LEN(regexp_split_to_array(TRIM(text), '\s+')) AS BIGINT) AS n_words,
-         CASE WHEN LENGTH(text) = 0 THEN 0.0 ELSE
-           LEN(regexp_extract_all(text, '[^A-Za-z0-9\s]'))::DOUBLE / LENGTH(text) END AS punct_ratio,
-         CASE WHEN LENGTH(text) = 0 THEN 0.0 ELSE
-           LEN(regexp_extract_all(text, '[0-9]'))::DOUBLE / LENGTH(text) END AS digit_ratio,
-         CASE WHEN LEN(list_filter(regexp_split_to_array(LOWER(text), '\W+'), w -> LEN(w) > 0)) = 0 THEN 0.0 ELSE
-           LEN(list_filter(list_filter(regexp_split_to_array(LOWER(text), '\W+'), w -> LEN(w) > 0),
-               w -> w IN ('the','a','an','of','and','to','in','is','on','for','with','at','by','from','it','that','this','be','are','as')))::DOUBLE /
-           LEN(list_filter(regexp_split_to_array(LOWER(text), '\W+'), w -> LEN(w) > 0)) END AS stopword_ratio
-         FROM documents ORDER BY doc_id""",
-    "q_token_count" ->
-      """SELECT doc_id,
-         CAST(LEN(regexp_split_to_array(TRIM(text), '\s+')) AS BIGINT) AS n_ws_tokens,
-         CAST(LEN(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]')) AS BIGINT) AS n_bpe_tokens
-         FROM documents ORDER BY doc_id""",
-    "q_ann_bruteforce" ->
-      """WITH probes AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id < 3),
-         sims AS (
-           SELECT p.vec_id AS probe_id, e.vec_id AS vec_id,
-             list_cosine_similarity(CAST(p.embedding AS DOUBLE[]), CAST(e.embedding AS DOUBLE[])) AS cos
-           FROM probes p CROSS JOIN embeddings e WHERE e.vec_id <> p.vec_id),
-         ranked AS (
-           SELECT probe_id, vec_id, cos,
-             CAST(ROW_NUMBER() OVER (PARTITION BY probe_id ORDER BY cos DESC, vec_id) AS BIGINT) AS rank
-           FROM sims)
-         SELECT probe_id, rank, vec_id, ROUND(cos, 3) AS cos
-         FROM ranked WHERE rank <= 5 ORDER BY probe_id, rank""",
-    "q_hourly_events" ->
-      """SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS hour_start,
-         event_type, CAST(COUNT(*) AS BIGINT) AS n,
-         ROUND(SUM(CAST(ROUND(value * 100, 0) AS BIGINT)) / 100.0, 2) AS sum_value
-         FROM events GROUP BY 1, 2 ORDER BY hour_start, event_type""",
-    "q_stream_topk" ->
-      """WITH c AS (SELECT epoch_us(date_trunc('hour', ts)) AS window_start_us,
-           event_type AS item, CAST(COUNT(*) AS BIGINT) AS mg_count
-           FROM events GROUP BY 1, 2)
-         SELECT window_start_us, item, mg_count,
-           CAST(SUM(mg_count) OVER (PARTITION BY window_start_us) AS BIGINT) AS n_window
-         FROM c ORDER BY window_start_us, item""",
-    "q_stream_topk_weighted" ->
-      """WITH c AS (SELECT epoch_us(date_trunc('hour', ts)) AS window_start_us,
-           event_type AS item, CAST(COUNT(*) AS BIGINT) AS mg_count
-           FROM events GROUP BY 1, 2)
-         SELECT window_start_us, item, mg_count,
-           CAST(SUM(mg_count) OVER (PARTITION BY window_start_us) AS BIGINT) AS n_window
-         FROM c ORDER BY window_start_us, item""",
-    "q_sliding_window" ->
-      """WITH w AS (SELECT event_type,
-           (epoch_us(ts) // 900000000 - i) * 900000000 AS win_start_us
-           FROM events, UNNEST(range(0, 4)) AS u(i))
-         SELECT win_start_us, event_type, CAST(COUNT(*) AS BIGINT) AS n
-         FROM w GROUP BY 1, 2 ORDER BY win_start_us, event_type""",
-    "q_windowed_approx_distinct" ->
-      """SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS hour_start,
-         event_type, CAST(COUNT(DISTINCT user_id) AS BIGINT) AS exact_users,
-         true AS within_band
-         FROM events GROUP BY 1, 2 ORDER BY hour_start, event_type""",
-    "q_stream_quantile" ->
-      """WITH e AS (SELECT (epoch_us(ts) // 3600000000) * 3600000000 AS window_start_us,
-           CAST(round(value * 100, 0) AS BIGINT) // 100 AS bucket
-           FROM events),
-         h AS (SELECT window_start_us, bucket, CAST(COUNT(*) AS BIGINT) AS cnt
-           FROM e GROUP BY 1, 2),
-         c AS (SELECT *,
-             SUM(cnt) OVER (PARTITION BY window_start_us ORDER BY bucket) AS cum,
-             SUM(cnt) OVER (PARTITION BY window_start_us) AS total FROM h),
-         f AS (SELECT window_start_us, q_ppm, MIN(bucket) AS qb
-           FROM c, (VALUES (500000), (900000), (990000)) AS q(q_ppm)
-           WHERE cum * 1000000 >= total * q_ppm GROUP BY 1, 2)
-         SELECT window_start_us, CAST(q_ppm AS BIGINT) AS q_ppm,
-           CAST((qb + 1) * 100 AS BIGINT) AS value_cents_ub
-         FROM f ORDER BY 1, 2""",
-    // ms-space replay of the stateful sessionizer's batch twin: the
-    // state function keys on Timestamp.getTime (millis, µs truncated),
-    // so the lag/cumsum runs on epoch_us // 1000; cents sums are
-    // integer-exact in any order
-    "q_stream_sessionize" ->
-      """WITH e AS (SELECT user_id, event_id,
-           CAST(round(value * 100, 0) AS BIGINT) AS cents,
-           epoch_us(ts) // 1000 AS ts_ms FROM events),
-         lagged AS (SELECT *, LAG(ts_ms) OVER
-             (PARTITION BY user_id ORDER BY ts_ms, event_id) AS prev_ms FROM e),
-         flagged AS (SELECT *, CASE WHEN prev_ms IS NULL
-             OR ts_ms - prev_ms > 1800000 THEN 1 ELSE 0 END AS new_sess FROM lagged),
-         sess AS (SELECT *, SUM(new_sess) OVER (PARTITION BY user_id
-             ORDER BY ts_ms, event_id
-             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid FROM flagged)
-         SELECT user_id, CAST(MIN(ts_ms) * 1000 AS BIGINT) AS session_start_us,
-           CAST(MAX(ts_ms) * 1000 AS BIGINT) AS session_end_us,
-           CAST(COUNT(*) AS BIGINT) AS n_events,
-           CAST(SUM(cents) AS BIGINT) AS sum_cents
-         FROM sess GROUP BY user_id, sid ORDER BY user_id, session_start_us""",
-    // LWW convergence: ver-2 keys (every third) keep their first-batch
-    // value; everything else takes the older backfill's c+5 at ver 1
-    "q_upsert_versioned" ->
-      """SELECT CAST(o_orderkey AS BIGINT) AS k,
-           CAST(CASE WHEN o_orderkey % 3 = 0
-             THEN CAST(round(o_totalprice * 100, 0) AS BIGINT)
-             ELSE CAST(round(o_totalprice * 100, 0) AS BIGINT) + 5 END AS BIGINT) AS c,
-           CAST(CASE WHEN o_orderkey % 3 = 0 THEN 2 ELSE 1 END AS BIGINT) AS ver
-         FROM orders ORDER BY k""",
-    // the A18 LWW end state over the slice, reached through the REAL
-    // streaming sink with batches out of order across micro-batches
-    "q_upsert_versioned_stream" ->
-      """SELECT CAST(o_orderkey AS BIGINT) AS k,
-           CAST(CASE WHEN o_orderkey % 3 = 0
-             THEN CAST(round(o_totalprice * 100, 0) AS BIGINT)
-             ELSE CAST(round(o_totalprice * 100, 0) AS BIGINT) + 5 END AS BIGINT) AS v,
-           CAST(CASE WHEN o_orderkey % 3 = 0 THEN 2 ELSE 1 END AS BIGINT) AS ver
-         FROM orders WHERE o_orderkey % 37 = 0 ORDER BY k""",
-    // end-state replay of the two-batch streamed changelog: batch 1
-    // upserts the slice, batch 2 bumps even keys by 7 and deletes odd
-    // multiples of 3 (a key matching both rules is even -> updated)
-    "q_cdc_sink" ->
-      """SELECT CAST(o_orderkey AS BIGINT) AS k,
-           CAST(CAST(round(o_totalprice * 100, 0) AS BIGINT)
-             + CASE WHEN o_orderkey % 2 = 0 THEN 7 ELSE 0 END AS BIGINT) AS v
-         FROM orders
-         WHERE o_orderkey % 37 = 0
-           AND NOT (o_orderkey % 2 = 1 AND o_orderkey % 3 = 0)
-         ORDER BY k""",
-    // every constraint row recomputed in SQL; "constraint" quoted (a
-    // reserved word in DuckDB)
-    "q_constraint_audit" ->
-      """WITH n AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_rows FROM orders),
-         rows_out AS (
-           SELECT 'not_null(o_orderpriority)' AS c,
-             CAST(COUNT(*) FILTER (WHERE o_orderpriority IS NULL) AS BIGINT) AS violations
-           FROM orders
-           UNION ALL
-           SELECT 'unique(o_orderkey)',
-             CAST(COUNT(*) - COUNT(DISTINCT o_orderkey) AS BIGINT) FROM orders
-           UNION ALL
-           SELECT 'unique(o_custkey)',
-             CAST(COUNT(*) - COUNT(DISTINCT o_custkey) AS BIGINT) FROM orders
-           UNION ALL
-           SELECT 'accepted_values(o_orderstatus)',
-             CAST(COUNT(*) FILTER (WHERE o_orderstatus IS NOT NULL
-               AND o_orderstatus NOT IN ('F', 'O')) AS BIGINT) FROM orders
-           UNION ALL
-           SELECT 'in_range(o_custkey)',
-             CAST(COUNT(*) FILTER (WHERE o_custkey IS NOT NULL
-               AND (CAST(o_custkey AS BIGINT) < 0
-                 OR CAST(o_custkey AS BIGINT) > 99)) AS BIGINT) FROM orders
-           UNION ALL
-           SELECT 'ref_integrity(o_custkey)',
-             CAST(COUNT(*) FILTER (WHERE o_custkey IS NOT NULL
-               AND o_custkey NOT IN (SELECT c_custkey FROM customer)) AS BIGINT)
-           FROM orders)
-         SELECT r.c AS "constraint", r.violations, n.n_rows
-         FROM rows_out r, n ORDER BY "constraint"""",
-    // exact OLS from HUGEINT sufficient statistics — the same closed
-    // forms as the Spark decimal(38,0) side, truncating // division.
-    "q_group_ols" ->
-      """WITH d AS (SELECT n_name,
-             CAST(datediff('day', DATE '1992-01-01', CAST(o_orderdate AS DATE)) AS BIGINT) AS x,
-             CAST(round(o_totalprice * 100, 0) AS BIGINT) AS y
-           FROM orders JOIN customer ON o_custkey = c_custkey
-           JOIN nation ON c_nationkey = n_nationkey),
-         s AS (SELECT n_name, COUNT(*) AS n, SUM(x) AS sx, SUM(y) AS sy,
-             SUM(x * x) AS sxx, SUM(x * y) AS sxy FROM d GROUP BY 1),
-         f AS (SELECT n_name, n, n * sxy - sx * sy AS num,
-             n * sxx - sx * sx AS den, sx, sy FROM s)
-         SELECT n_name, CAST(n AS BIGINT) AS n_orders,
-           CAST((num * 1000000) // den AS BIGINT) AS slope_udpm,
-           CAST((sy * den - num * sx) // (n * den) AS BIGINT) AS intercept_cents
-         FROM f ORDER BY n_name""",
-    // full spine + window replay of the integer lerp; IGNORE NULLS
-    // frames mirror Spark's last/first(ignoreNulls).
-    "q_interpolate" ->
-      """WITH o AS (SELECT o_custkey,
-             CAST(datediff('day', DATE '1992-01-01', CAST(o_orderdate AS DATE)) AS BIGINT) AS d,
-             CAST(round(o_totalprice * 100, 0) AS BIGINT) AS cents
-           FROM orders),
-         v AS (SELECT n_name, d, SUM(cents) AS rev FROM o
-           JOIN customer ON o_custkey = c_custkey
-           JOIN nation ON c_nationkey = n_nationkey GROUP BY 1, 2),
-         b AS (SELECT n_name, MIN(d) AS d0, MAX(d) AS d1 FROM v GROUP BY 1),
-         spine AS (SELECT n_name, UNNEST(range(d0, d1 + 1)) AS d FROM b),
-         j AS (SELECT spine.n_name, spine.d, v.rev
-           FROM spine LEFT JOIN v ON spine.n_name = v.n_name AND spine.d = v.d),
-         f AS (SELECT n_name, d, rev,
-             last_value(rev IGNORE NULLS) OVER (PARTITION BY n_name ORDER BY d
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS pv,
-             last_value(CASE WHEN rev IS NOT NULL THEN d END IGNORE NULLS)
-               OVER (PARTITION BY n_name ORDER BY d
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS pp,
-             first_value(rev IGNORE NULLS) OVER (PARTITION BY n_name ORDER BY d
-               ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS nv,
-             first_value(CASE WHEN rev IS NOT NULL THEN d END IGNORE NULLS)
-               OVER (PARTITION BY n_name ORDER BY d
-                 ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS np
-           FROM j)
-         SELECT n_name, d,
-           CAST(CASE WHEN rev IS NOT NULL THEN rev
-             ELSE pv + ((nv - pv) * (d - pp)) // (np - pp) END AS BIGINT) AS rev_cents,
-           (rev IS NULL) AS is_gap
-         FROM f ORDER BY n_name, d""",
-    // the I/U/D delta recomputed directly from the two slices: U where
-    // the positive-only rollup differs, D where a nation loses every
-    // customer, I impossible here (filtering never adds keys).
-    "q_snapshot_changes" ->
-      """WITH v1 AS (SELECT c_nationkey, CAST(COUNT(*) AS BIGINT) AS n_cust,
-             CAST(SUM(CAST(round(c_acctbal * 100, 0) AS BIGINT)) AS BIGINT) AS bal
-           FROM customer GROUP BY 1),
-         v2 AS (SELECT c_nationkey, CAST(COUNT(*) AS BIGINT) AS n_cust,
-             CAST(SUM(CAST(round(c_acctbal * 100, 0) AS BIGINT)) AS BIGINT) AS bal
-           FROM customer WHERE c_acctbal > 0 GROUP BY 1)
-         SELECT CASE WHEN v1.c_nationkey IS NULL THEN 'I'
-             WHEN v2.c_nationkey IS NULL THEN 'D' ELSE 'U' END AS op,
-           COALESCE(v2.c_nationkey, v1.c_nationkey) AS c_nationkey,
-           CASE WHEN v2.c_nationkey IS NULL THEN v1.n_cust ELSE v2.n_cust END
-             AS n_cust,
-           CASE WHEN v2.c_nationkey IS NULL THEN v1.bal ELSE v2.bal END
-             AS bal_cents
-         FROM v1 FULL JOIN v2 ON v1.c_nationkey = v2.c_nationkey
-         WHERE v1.c_nationkey IS NULL OR v2.c_nationkey IS NULL
-            OR v1.n_cust <> v2.n_cust OR v1.bal <> v2.bal
-         ORDER BY c_nationkey""",
-    // the same merged-segments sweep: running-max-end window marks
-    // segment starts, a cumulative flag sum labels segments, covered =
-    // Σ per-segment (max(e) − min(s)); all-integer microseconds.
-    "q_interval_coverage" ->
-      """WITH iv AS (SELECT user_id, epoch_us(ts) AS s,
-             epoch_us(ts) + (1 + event_id % 7) * 600000000 AS e
-           FROM events),
-         m AS (SELECT user_id, s, e,
-             MAX(e) OVER (PARTITION BY user_id ORDER BY s, e
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pm
-           FROM iv),
-         g AS (SELECT user_id, s, e,
-             SUM(CASE WHEN pm IS NULL OR s > pm THEN 1 ELSE 0 END)
-               OVER (PARTITION BY user_id ORDER BY s, e
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS gid
-           FROM m),
-         seg AS (SELECT user_id, gid, MIN(s) AS ss, MAX(e) AS se,
-             COUNT(*) AS nn
-           FROM g GROUP BY 1, 2)
-         SELECT user_id, CAST(SUM(nn) AS BIGINT) AS n_intervals,
-           CAST(COUNT(*) AS BIGINT) AS n_segments,
-           CAST(SUM(se - ss) AS BIGINT) AS covered_us,
-           CAST(MAX(se) - MIN(ss) AS BIGINT) AS span_us
-         FROM seg GROUP BY user_id ORDER BY user_id""",
-    // rank-weighted Gini replayed in HUGEINT: ties occupy consecutive
-    // ranks so Σi·x over a tied block is order-invariant; // truncates
-    // toward zero exactly like Spark's decimal div.
-    "q_gini_nation" ->
-      """WITH s AS (SELECT o_custkey,
-             SUM(CAST(round(o_totalprice * 100, 0) AS BIGINT)) AS v
-           FROM orders GROUP BY 1),
-         j AS (SELECT n_name, v, c_custkey FROM s
-           JOIN customer ON o_custkey = c_custkey
-           JOIN nation ON c_nationkey = n_nationkey),
-         r AS (SELECT n_name, v,
-             ROW_NUMBER() OVER (PARTITION BY n_name ORDER BY v, c_custkey) AS i
-           FROM j),
-         g AS (SELECT n_name, COUNT(*) AS n, SUM(v) AS sv,
-             SUM(CAST(i AS HUGEINT) * v) AS six
-           FROM r GROUP BY 1)
-         SELECT n_name, CAST(n AS BIGINT) AS n_customers,
-           CAST(sv AS BIGINT) AS sum_cents,
-           CAST((2 * six - (CAST(n AS HUGEINT) + 1) * sv) * 1000000
-             // (CAST(n AS HUGEINT) * sv) AS BIGINT) AS gini_ppm
-         FROM g ORDER BY n_name""",
-    // attempt 1 flips (0 violations); attempt 2's dangling-key count
-    // is the torn extract's high-nation order rows; readers stay on 1.
-    "q_publish_gate" ->
-      """SELECT CAST(1 AS BIGINT) AS attempt, CAST(1 AS BIGINT) AS candidate_version,
-           TRUE AS published, CAST(0 AS BIGINT) AS fk_violations,
-           CAST(1 AS BIGINT) AS current_version
-         UNION ALL
-         SELECT CAST(2 AS BIGINT), CAST(2 AS BIGINT), FALSE,
-           (SELECT CAST(COUNT(*) AS BIGINT) FROM orders o
-              JOIN customer c ON o.o_custkey = c.c_custkey
-            WHERE o.o_orderkey % 7 = 0 AND c.c_nationkey >= 13),
-           CAST(1 AS BIGINT)
-         ORDER BY attempt""",
-    // exact NOT EXISTS over the same one-hour follow-up window.
-    "q_interval_anti" ->
-      """SELECT c.event_id AS click_id, c.user_id
-         FROM events c
-         WHERE c.event_type = 'click' AND NOT EXISTS (
-           SELECT 1 FROM events p
-           WHERE p.event_type = 'purchase' AND p.user_id = c.user_id
-             AND p.ts >= c.ts AND p.ts <= c.ts + INTERVAL 1 HOUR)
-         ORDER BY click_id""",
-    // the batch -> dim-version mapping is deterministic by
-    // construction (even keys enriched before the flip, odd after).
-    "q_snapshot_enrich_stream" ->
-      """SELECT c_custkey, c_nationkey,
-           CASE WHEN c_custkey % 2 = 0 THEN n_name
-                ELSE n_name || '#2' END AS n_name,
-           CAST(CASE WHEN c_custkey % 2 = 0 THEN 1 ELSE 2 END AS BIGINT)
-             AS dim_version
-         FROM customer JOIN nation ON c_nationkey = n_nationkey
-         WHERE c_custkey % 53 = 0
-         ORDER BY c_custkey""",
-    // all four phases replayed: raw and coarse audits, the suppressed
-    // release's size and floor (>= 3 by construction), the publish.
-    "q_governed_release" ->
-      """WITH raw AS (SELECT c_nationkey, c_mktsegment,
-             CAST(round(c_acctbal * 100, 0) AS BIGINT) // 100000 AS b,
-             COUNT(*) AS n
-           FROM customer GROUP BY 1, 2, 3),
-         coarse AS (SELECT c_nationkey, c_mktsegment,
-             CAST(round(c_acctbal * 100, 0) AS BIGINT) // 500000 AS b,
-             COUNT(*) AS n
-           FROM customer GROUP BY 1, 2, 3),
-         rel AS (SELECT * FROM coarse WHERE n >= 3)
-         SELECT 'audit_raw' AS phase, CAST(SUM(n) AS BIGINT) AS n_rows,
-           CAST(SUM(CASE WHEN n < 3 THEN n ELSE 0 END) AS BIGINT) AS n_rows_at_risk,
-           CAST(MIN(n) AS BIGINT) AS anonymity_level, MIN(n) >= 3 AS ok
-         FROM raw
-         UNION ALL
-         SELECT 'audit_coarse', CAST(SUM(n) AS BIGINT),
-           CAST(SUM(CASE WHEN n < 3 THEN n ELSE 0 END) AS BIGINT),
-           CAST(MIN(n) AS BIGINT), MIN(n) >= 3
-         FROM coarse
-         UNION ALL
-         SELECT 'audit_released', CAST(SUM(n) AS BIGINT), CAST(0 AS BIGINT),
-           CAST(MIN(n) AS BIGINT), TRUE
-         FROM rel
-         UNION ALL
-         SELECT 'published_v1', CAST(SUM(n) AS BIGINT), CAST(0 AS BIGINT),
-           CAST(MIN(n) AS BIGINT), TRUE
-         FROM rel
-         ORDER BY phase""",
-    // additive flips (attempts 1-2); the breaking attempt is refused
-    // with THREE violations (bal_cents dropped, n_cust retyped, and
-    // v2's additive avg_cents also missing — the gate compares against
-    // the CURRENT version, not the original); served rows = nations.
-    "q_schema_guard" ->
-      """WITH served AS (SELECT CAST(COUNT(DISTINCT c_nationkey) AS BIGINT) AS n
-           FROM customer)
-         SELECT CAST(1 AS BIGINT) AS attempt, CAST(1 AS BIGINT) AS candidate_version,
-           TRUE AS published, CAST(0 AS BIGINT) AS n_violations, n AS rows_served
-         FROM served
-         UNION ALL SELECT 2, 2, TRUE, 0, n FROM served
-         UNION ALL SELECT 3, 3, FALSE, 3, n FROM served
-         ORDER BY attempt""",
-    // pinned phase = the FULL rollup (tag still v1 after v2 lands);
-    // promoted phase = the positive-only rollup under tag_version 2.
-    "q_snapshot_tag" ->
-      """WITH v1 AS (SELECT c_nationkey, CAST(COUNT(*) AS BIGINT) AS n_cust,
-             CAST(SUM(CAST(round(c_acctbal * 100, 0) AS BIGINT)) AS BIGINT) AS bal_cents
-           FROM customer GROUP BY 1),
-         v2 AS (SELECT c_nationkey, CAST(COUNT(*) AS BIGINT) AS n_cust,
-             CAST(SUM(CAST(round(c_acctbal * 100, 0) AS BIGINT)) AS BIGINT) AS bal_cents
-           FROM customer WHERE c_acctbal > 0 GROUP BY 1)
-         SELECT 'pinned' AS phase, CAST(1 AS BIGINT) AS tag_version,
-           c_nationkey, n_cust, bal_cents FROM v1
-         UNION ALL
-         SELECT 'promoted', CAST(2 AS BIGINT), c_nationkey, n_cust, bal_cents
-         FROM v2
-         ORDER BY phase, c_nationkey""",
-    // the END STATE of the replica after the feed: exactly v2's
-    // definition recomputed from source — a feed that dropped or
-    // invented any row diverges here.
-    "q_change_apply" ->
-      """SELECT c_nationkey, CAST(COUNT(*) AS BIGINT) AS n_cust,
-           CAST(SUM(CAST(round(c_acctbal * 100, 0) AS BIGINT)) AS BIGINT)
-             AS bal_cents
-         FROM customer WHERE c_nationkey < 15
-         GROUP BY 1
-         HAVING SUM(CAST(round(c_acctbal * 100, 0) AS BIGINT)) > 0
-         ORDER BY c_nationkey""",
-    // both surviving rollups recomputed from source; n_vacuumed pinned
-    // to the literal 1 — the expired version count is deterministic.
-    "q_snapshot_vacuum" ->
-      """WITH v2 AS (SELECT c_nationkey, CAST(COUNT(*) AS BIGINT) AS n_cust,
-             CAST(SUM(CAST(round(c_acctbal * 100, 0) AS BIGINT)) AS BIGINT) AS bal_cents
-           FROM customer WHERE c_acctbal > 0 GROUP BY 1),
-         v3 AS (SELECT c_nationkey, CAST(COUNT(*) AS BIGINT) AS n_cust,
-             CAST(SUM(CAST(round(c_acctbal * 100, 0) AS BIGINT)) AS BIGINT) AS bal_cents
-           FROM customer WHERE c_acctbal > 1000 GROUP BY 1)
-         SELECT CAST(2 AS BIGINT) AS version, c_nationkey, n_cust, bal_cents,
-           CAST(1 AS BIGINT) AS n_vacuumed FROM v2
-         UNION ALL
-         SELECT CAST(3 AS BIGINT), c_nationkey, n_cust, bal_cents,
-           CAST(1 AS BIGINT) FROM v3
-         ORDER BY version, c_nationkey""",
-    // the full allocation replayed (q_fair_allocation's SQL) plus the
-    // md5-prefix partial epoch and the reconciliation arithmetic.
-    "q_budget_materialize" ->
-      """WITH toks AS (SELECT source, doc_id,
-             CAST(len(list_filter(string_split_regex(COALESCE(text, ''),
-               '[ 	
-
-]+'), t -> t <> '')) AS BIGINT) AS toks
-           FROM documents),
-         per AS (SELECT source, COUNT(*) AS n_docs, SUM(toks) AS n_tokens
-           FROM toks GROUP BY 1),
-         tiers AS (SELECT per.*,
-             CASE WHEN n_tokens * tot_docs < tot_tokens * n_docs
-                  THEN n_tokens ELSE 3 * n_tokens END AS cap
-           FROM per, (SELECT SUM(n_docs) AS tot_docs,
-               SUM(n_tokens) AS tot_tokens FROM per)),
-         b AS (SELECT 3 * SUM(n_tokens) // 2 AS budget,
-             COUNT(*) AS m FROM per),
-         r AS (SELECT tiers.*, budget, m,
-             ROW_NUMBER() OVER (ORDER BY cap, source) AS i,
-             COALESCE(SUM(cap) OVER (ORDER BY cap, source
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cumprev
-           FROM tiers, b),
-         f AS (SELECT *, cap * (m - i + 1) > budget - cumprev AS fail FROM r),
-         ff AS (SELECT MIN(CASE WHEN fail THEN i END) AS ffi FROM f),
-         c2 AS (SELECT f.*, (ffi IS NULL OR i < ffi) AS capped, ffi
-           FROM f, ff),
-         lv AS (SELECT SUM(CASE WHEN capped THEN cap ELSE 0 END) AS granted,
-             SUM(CASE WHEN capped THEN 0 ELSE 1 END) AS u FROM c2),
-         alloc AS (SELECT source, n_tokens,
-             CASE WHEN capped THEN cap
-               ELSE (budget - granted) // u
-                 + (CASE WHEN i - ffi + 1 <= (budget - granted) % u
-                    THEN 1 ELSE 0 END) END AS a
-           FROM c2, lv),
-         cum AS (SELECT t.source, t.doc_id, t.toks, a.a, a.n_tokens,
-             SUM(t.toks) OVER (PARTITION BY t.source
-               ORDER BY md5(CAST(t.doc_id AS VARCHAR)), t.doc_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-           FROM toks t JOIN alloc a USING (source)),
-         cp AS (SELECT source, doc_id, toks,
-             a // n_tokens
-               + (CASE WHEN cum <= a % n_tokens THEN 1 ELSE 0 END) AS copies,
-             a
-           FROM cum)
-         SELECT source, CAST(MAX(a) AS BIGINT) AS allocated_tokens,
-           CAST(SUM(CASE WHEN copies > 0 THEN 1 ELSE 0 END) AS BIGINT)
-             AS n_docs_used,
-           CAST(MAX(copies) AS BIGINT) AS max_copies,
-           CAST(SUM(copies * toks) AS BIGINT) AS materialized_tokens,
-           CAST(MAX(a) - SUM(copies * toks) AS BIGINT) AS undershoot
-         FROM cp GROUP BY source ORDER BY source""",
-    // progressive filling replayed: capped set = prefix of the
-    // cap-ascending order, boundary = first exact-product failure,
-    // uncapped split = base + deterministic unit-remainder spread.
-    "q_fair_allocation" ->
-      """WITH toks AS (SELECT source,
-             CAST(len(list_filter(string_split_regex(COALESCE(text, ''),
-               '[ \t\n\r]+'), t -> t <> '')) AS BIGINT) AS toks
-           FROM documents),
-         per AS (SELECT source, COUNT(*) AS n_docs, SUM(toks) AS n_tokens
-           FROM toks GROUP BY 1),
-         tiers AS (SELECT per.*,
-             CASE WHEN n_tokens * tot_docs < tot_tokens * n_docs
-                  THEN 1 ELSE 3 END AS epochs,
-             CASE WHEN n_tokens * tot_docs < tot_tokens * n_docs
-                  THEN n_tokens ELSE 3 * n_tokens END AS cap
-           FROM per, (SELECT SUM(n_docs) AS tot_docs,
-               SUM(n_tokens) AS tot_tokens FROM per)),
-         b AS (SELECT 3 * SUM(n_tokens) // 2 AS budget,
-             COUNT(*) AS m FROM per),
-         r AS (SELECT tiers.*, budget, m,
-             ROW_NUMBER() OVER (ORDER BY cap, source) AS i,
-             COALESCE(SUM(cap) OVER (ORDER BY cap, source
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cumprev
-           FROM tiers, b),
-         f AS (SELECT *, cap * (m - i + 1) > budget - cumprev AS fail FROM r),
-         ff AS (SELECT MIN(CASE WHEN fail THEN i END) AS ffi FROM f),
-         c2 AS (SELECT f.*, (ffi IS NULL OR i < ffi) AS capped, ffi
-           FROM f, ff),
-         lv AS (SELECT SUM(CASE WHEN capped THEN cap ELSE 0 END) AS granted,
-             SUM(CASE WHEN capped THEN 0 ELSE 1 END) AS u FROM c2)
-         SELECT source, CAST(n_tokens AS BIGINT) AS n_tokens,
-           CAST(epochs AS BIGINT) AS epochs,
-           CAST(cap AS BIGINT) AS cap_tokens,
-           CAST(CASE WHEN capped THEN cap
-             ELSE (budget - granted) // u
-               + (CASE WHEN i - ffi + 1 <= (budget - granted) % u
-                  THEN 1 ELSE 0 END) END AS BIGINT) AS allocated_tokens,
-           capped,
-           CAST(CASE WHEN u > 0 THEN (budget - granted) // u END AS BIGINT)
-             AS fill_level
-         FROM c2, lv ORDER BY source""",
-    // floor(sqrt()) is exact integer isqrt in BOTH engines (IEEE sqrt
-    // is correctly rounded); everything else is integer ppm.
-    "q_mixture_temperature" ->
-      """WITH toks AS (SELECT source,
-             CAST(len(list_filter(string_split_regex(COALESCE(text, ''),
-               '[ \t\n\r]+'), t -> t <> '')) AS BIGINT) AS toks
-           FROM documents),
-         per AS (SELECT source, SUM(toks) AS n_tokens FROM toks GROUP BY 1),
-         w AS (SELECT source, n_tokens,
-             CAST(floor(sqrt(CAST(n_tokens AS DOUBLE))) AS BIGINT) AS weight
-           FROM per),
-         tot AS (SELECT SUM(n_tokens) AS tt, SUM(weight) AS tw FROM w)
-         SELECT source, CAST(n_tokens AS BIGINT) AS n_tokens,
-           CAST(weight AS BIGINT) AS weight,
-           CAST(n_tokens * 1000000 // tt AS BIGINT) AS prop_share_ppm,
-           CAST(weight * 1000000 // tw AS BIGINT) AS temp_share_ppm,
-           CAST(750000 * (weight * 1000000 // tw) // 1000000 AS BIGINT)
-             AS planned_tokens,
-           CAST(weight * 1000000 // tw - n_tokens * 1000000 // tt AS BIGINT)
-             AS boost_ppm
-         FROM w, tot ORDER BY source""",
-    // anti-join ground truth for the post-delete table; `surgical`
-    // (some-but-not-all files touched) must come back TRUE.
-    "q_targeted_delete" ->
-      """WITH keep AS (SELECT o_orderpriority,
-             CAST(round(o_totalprice * 100, 0) AS BIGINT) AS rev
-           FROM orders WHERE o_custkey NOT IN (3, 7, 11))
-         SELECT o_orderpriority, CAST(COUNT(*) AS BIGINT) AS n_orders,
-           CAST(SUM(rev) AS BIGINT) AS rev_cents, TRUE AS surgical
-         FROM keep GROUP BY 1 ORDER BY 1""",
-    // the slice exactly once, despite the deliberately replayed epoch.
-    "q_append_sink" ->
-      """SELECT o_orderkey AS k,
-           CAST(round(o_totalprice * 100, 0) AS BIGINT) AS v
-         FROM orders WHERE o_orderkey % 41 = 0 ORDER BY k""",
-    // delta-refresh equivalence: v3 must equal the FULL recompute over
-    // all slices, v1 the first slice's rollup (refresh never rescanned
-    // history, yet converged to the rebuild).
-    "q_mv_refresh" ->
-      """WITH o AS (SELECT o_orderkey, o_orderpriority,
-             CAST(round(o_totalprice * 100, 0) AS BIGINT) AS rev
-           FROM orders),
-         v3 AS (SELECT CAST(3 AS BIGINT) AS version, o_orderpriority,
-             CAST(COUNT(*) AS BIGINT) AS n_orders,
-             CAST(SUM(rev) AS BIGINT) AS rev_cents,
-             CAST(MAX(rev) AS BIGINT) AS max_cents
-           FROM o GROUP BY 2),
-         v1 AS (SELECT CAST(1 AS BIGINT), o_orderpriority,
-             CAST(COUNT(*) AS BIGINT), CAST(SUM(rev) AS BIGINT),
-             CAST(MAX(rev) AS BIGINT)
-           FROM o WHERE o_orderkey % 3 = 0 GROUP BY 2)
-         SELECT * FROM v3 UNION ALL SELECT * FROM v1
-         ORDER BY version, o_orderpriority""",
-    // UNBLOCKED all-pairs ground truth: if the q-gram blocking missed
-    // any within-distance pair, this row fails.
-    "q_fuzzy_match" ->
-      """WITH n AS (SELECT DISTINCT p_name AS name FROM part
-           WHERE p_name IS NOT NULL),
-         p AS (SELECT a.name AS name_a, b.name AS name_b,
-             CAST(levenshtein(a.name, b.name) AS BIGINT) AS dist
-           FROM n a JOIN n b ON a.name < b.name)
-         SELECT name_a, name_b, dist FROM p WHERE dist <= 2
-         ORDER BY name_a, name_b""",
-    // cumsum over present days + spine + LOCF running frame: the
-    // balance panel replayed row-for-row.
-    "q_running_balance" ->
-      """WITH o AS (SELECT o_custkey,
-             CAST(datediff('day', DATE '1992-01-01', CAST(o_orderdate AS DATE)) AS BIGINT) AS d,
-             CAST(round(o_totalprice * 100, 0) AS BIGINT) AS rev
-           FROM orders),
-         daily AS (SELECT n_name, d, SUM(rev) AS delta FROM o
-           JOIN customer ON o_custkey = c_custkey
-           JOIN nation ON c_nationkey = n_nationkey GROUP BY 1, 2),
-         cum AS (SELECT n_name, d,
-             SUM(delta) OVER (PARTITION BY n_name ORDER BY d
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS bal
-           FROM daily),
-         b AS (SELECT n_name, MIN(d) AS d0, MAX(d) AS d1 FROM cum GROUP BY 1),
-         spine AS (SELECT n_name, UNNEST(range(d0, d1 + 1)) AS d FROM b),
-         j AS (SELECT spine.n_name, spine.d, cum.bal
-           FROM spine LEFT JOIN cum
-             ON spine.n_name = cum.n_name AND spine.d = cum.d)
-         SELECT n_name, d,
-           CAST(last_value(bal IGNORE NULLS) OVER (PARTITION BY n_name
-             ORDER BY d ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-             AS BIGINT) AS balance_cents,
-           (bal IS NULL) AS is_gap
-         FROM j ORDER BY n_name, d""",
-    // chunking + the BM25 closed form + per-query top-5, replayed over
-    // the CHUNK corpus with the same chunk-id arithmetic.
-    "q_rag_topk" ->
-      """WITH toks0 AS (SELECT doc_id,
-             list_filter(string_split_regex(COALESCE(text, ''), '[ \t\n\r]+'),
-               t -> t <> '') AS ts
-           FROM documents),
-         chunk AS (SELECT doc_id * 1000 + CAST(p / 48 AS BIGINT) AS chunk_id,
-             ts[p + 1 : p + 64] AS cts
-           FROM toks0, UNNEST(range(0, len(ts), 48)) AS u(p)),
-         tfr AS (SELECT chunk_id, unnest(cts) AS term FROM chunk),
-         tf AS (SELECT chunk_id, term, CAST(COUNT(*) AS BIGINT) AS tf
-           FROM tfr GROUP BY 1, 2),
-         dl AS (SELECT chunk_id, CAST(SUM(tf) AS BIGINT) AS dl FROM tf GROUP BY 1),
-         df AS (SELECT term, CAST(COUNT(*) AS BIGINT) AS df FROM tf GROUP BY 1),
-         g AS (SELECT CAST(COUNT(*) AS BIGINT) AS n,
-             CAST(SUM(dl) AS BIGINT) AS s FROM dl),
-         sc AS (SELECT tf.chunk_id, tf.term,
-             (CAST(1000000 AS HUGEINT) * (2 * g.n - 2 * df.df + 1) * 22 * tf.tf * g.s)
-               // ((2 * df.df + 1) * (CAST(10 AS HUGEINT) * g.s * tf.tf + 3 * g.s + 9 * dl.dl * g.n))
-               AS score_ppm
-           FROM tf JOIN dl USING (chunk_id) JOIN df USING (term) CROSS JOIN g),
-         q1 AS (SELECT 'q_vector' AS query, chunk_id,
-             CAST(COUNT(*) AS BIGINT) AS n_terms,
-             CAST(SUM(score_ppm) AS BIGINT) AS score_ppm
-           FROM sc WHERE term IN ('vector', 'stream', 'window')
-           GROUP BY 2 ORDER BY score_ppm DESC, chunk_id LIMIT 5),
-         q2 AS (SELECT 'q_join' AS query, chunk_id,
-             CAST(COUNT(*) AS BIGINT) AS n_terms,
-             CAST(SUM(score_ppm) AS BIGINT) AS score_ppm
-           FROM sc WHERE term IN ('join', 'merge', 'batch')
-           GROUP BY 2 ORDER BY score_ppm DESC, chunk_id LIMIT 5),
-         q3 AS (SELECT 'q_cust' AS query, chunk_id,
-             CAST(COUNT(*) AS BIGINT) AS n_terms,
-             CAST(SUM(score_ppm) AS BIGINT) AS score_ppm
-           FROM sc WHERE term IN ('customer', 'order', 'line')
-           GROUP BY 2 ORDER BY score_ppm DESC, chunk_id LIMIT 5)
-         SELECT * FROM (SELECT * FROM q1 UNION ALL SELECT * FROM q2
-           UNION ALL SELECT * FROM q3)
-         ORDER BY query, score_ppm DESC, chunk_id""",
-    // both snapshot versions recomputed directly from the source
-    // tables: equality proves publish->flip->read fidelity and v1
-    // immutability after v2's publish.
-    "q_snapshot_publish" ->
-      """WITH v1 AS (SELECT c_nationkey, CAST(COUNT(*) AS BIGINT) AS n_cust,
-             CAST(SUM(CAST(round(c_acctbal * 100, 0) AS BIGINT)) AS BIGINT) AS bal
-           FROM customer GROUP BY 1),
-         v2 AS (SELECT c_nationkey, CAST(COUNT(*) AS BIGINT) AS n_cust,
-             CAST(SUM(CAST(round(c_acctbal * 100, 0) AS BIGINT)) AS BIGINT) AS bal
-           FROM customer WHERE c_acctbal > 0 GROUP BY 1),
-         u AS (SELECT CAST(2 AS BIGINT) AS version, n_name, n_cust, bal
-             FROM v2 JOIN nation ON c_nationkey = n_nationkey
-           UNION ALL
-           SELECT CAST(1 AS BIGINT), n_name, n_cust, bal
-             FROM v1 JOIN nation ON c_nationkey = n_nationkey)
-         SELECT version, n_name, n_cust, bal AS bal_cents
-         FROM u ORDER BY version, n_name""",
-    // the whole card replayed: whitespace token counts (C10), md5
-    // exact-dup ppm, the langId CASE (C8) summarized by the B85
-    // min-tie-break mode, and the lower-median via cumulative counts.
-    "q_dataset_card" ->
-      """WITH d AS (SELECT source, COALESCE(text, '') AS text FROM documents),
-         per AS (SELECT source,
-             CAST(len(list_filter(string_split_regex(text, '[ \t\n\r]+'),
-               t -> t <> '')) AS BIGINT) AS toks,
-             md5(text) AS h,
-             length(text) AS chars,
-             list_filter(string_split_regex(lower(text), '[^a-z0-9_]+'),
-               t -> t <> '') AS ts
-           FROM d),
-         lang AS (SELECT source, toks, h, chars, CASE
-             WHEN en = 0 AND fr = 0 AND es = 0 AND de = 0 THEN 'und'
-             WHEN en >= fr AND en >= es AND en >= de THEN 'en'
-             WHEN fr >= es AND fr >= de THEN 'fr'
-             WHEN es >= de THEN 'es' ELSE 'de' END AS lang
-           FROM (SELECT source, toks, h, chars,
-             len(list_filter(ts, t -> list_contains(['the','and','of','to','is','in','that','it','with','for','this','are'], t))) AS en,
-             len(list_filter(ts, t -> list_contains(['le','la','les','des','est','et','une','dans','que','pour','pas','vous'], t))) AS fr,
-             len(list_filter(ts, t -> list_contains(['el','los','las','es','y','una','que','en','por','para','con','su'], t))) AS es,
-             len(list_filter(ts, t -> list_contains(['der','die','das','und','ist','nicht','ein','eine','mit','für','auf','ich'], t))) AS de
-             FROM per)),
-         base AS (SELECT source, COUNT(*) AS n_docs, SUM(toks) AS n_tokens,
-             COUNT(DISTINCT h) AS n_distinct FROM lang GROUP BY 1),
-         lc AS (SELECT source, lang, COUNT(*) AS cnt FROM lang GROUP BY 1, 2),
-         lt AS (SELECT source, MAX(cnt) AS mode_count FROM lc GROUP BY 1),
-         lm AS (SELECT lc.source, MIN(lc.lang) AS top_lang, lt.mode_count
-           FROM lc JOIN lt ON lc.source = lt.source AND lc.cnt = lt.mode_count
-           GROUP BY 1, 3),
-         cc AS (SELECT source, chars, COUNT(*) AS c FROM lang GROUP BY 1, 2),
-         cw AS (SELECT source, chars,
-             SUM(c) OVER (PARTITION BY source ORDER BY chars) AS cum,
-             SUM(c) OVER (PARTITION BY source) AS tot FROM cc),
-         med AS (SELECT source, MIN(chars) AS median_chars FROM cw
-           WHERE cum * 2 >= tot GROUP BY 1)
-         SELECT base.source, CAST(n_docs AS BIGINT) AS n_docs,
-           CAST(n_tokens AS BIGINT) AS n_tokens,
-           CAST((n_docs - n_distinct) * 1000000 // n_docs AS BIGINT) AS dup_ppm,
-           top_lang,
-           CAST(mode_count * 1000000 // n_docs AS BIGINT) AS top_lang_ppm,
-           CAST(median_chars AS BIGINT) AS median_chars
-         FROM base JOIN lm ON base.source = lm.source
-         JOIN med ON base.source = med.source
-         ORDER BY base.source""",
-    // per-cell chi-square decomposition replayed in HUGEINT — same
-    // closed form, same truncating divisions.
-    "q_chi_square" ->
-      """WITH j AS (SELECT o_orderpriority AS a, c_mktsegment AS b
-           FROM orders JOIN customer ON o_custkey = c_custkey),
-         cells AS (SELECT a, b, COUNT(*) AS observed FROM j GROUP BY 1, 2),
-         rm AS (SELECT a, SUM(observed) AS r FROM cells GROUP BY 1),
-         cm AS (SELECT b, SUM(observed) AS c FROM cells GROUP BY 1),
-         tt AS (SELECT SUM(observed) AS t, COUNT(DISTINCT a) AS na,
-             COUNT(DISTINCT b) AS nb FROM cells)
-         SELECT cells.a AS o_orderpriority, cells.b AS c_mktsegment,
-           CAST(observed AS BIGINT) AS observed,
-           CAST((r * c * 1000) // t AS BIGINT) AS expected_milli,
-           CAST(((observed * t - r * c) * (observed * t - r * c) * 1000000)
-             // (t * r * c) AS BIGINT) AS term_ppm,
-           CAST((na - 1) * (nb - 1) AS BIGINT) AS dof,
-           CAST(t AS BIGINT) AS n_total
-         FROM cells, rm, cm, tt WHERE cells.a = rm.a AND cells.b = cm.b
-         ORDER BY 1, 2""",
-    // calendar-aligned panel replay: zero-filled nation x month grid,
-    // lag(1)/lag(12) over the grid, ppm deltas with NULL on zero base.
-    "q_period_over_period" ->
-      """WITH o AS (SELECT o_custkey,
-             CAST((year(CAST(o_orderdate AS DATE)) - 1992) * 12
-               + month(CAST(o_orderdate AS DATE)) - 1 AS BIGINT) AS m,
-             CAST(round(o_totalprice * 100, 0) AS BIGINT) AS rev
-           FROM orders),
-         monthly AS (SELECT n_name, m, SUM(rev) AS rev_cents FROM o
-           JOIN customer ON o_custkey = c_custkey
-           JOIN nation ON c_nationkey = n_nationkey GROUP BY 1, 2),
-         months AS (SELECT UNNEST(range(0,
-             (SELECT MAX(m) FROM monthly) + 1)) AS m),
-         grid AS (SELECT n_name, m FROM nation CROSS JOIN months),
-         panel AS (SELECT g.n_name, g.m,
-             COALESCE(mo.rev_cents, 0) AS rev_cents
-           FROM grid g
-           LEFT JOIN monthly mo ON g.n_name = mo.n_name AND g.m = mo.m),
-         lagd AS (SELECT n_name, m, rev_cents,
-             lag(rev_cents, 1) OVER (PARTITION BY n_name ORDER BY m) AS prev,
-             lag(rev_cents, 12) OVER (PARTITION BY n_name ORDER BY m) AS prev_yr
-           FROM panel)
-         SELECT n_name, m, CAST(rev_cents AS BIGINT) AS rev_cents,
-           CAST((rev_cents - prev) * 1000000 // nullif(prev, 0) AS BIGINT)
-             AS mom_ppm,
-           CAST((rev_cents - prev_yr) * 1000000 // nullif(prev_yr, 0) AS BIGINT)
-             AS yoy_ppm
-         FROM lagd ORDER BY n_name, m""",
-    // full drift replay: window bucketing, both ppm share relations,
-    // the full-outer bucket union, L1/max, smallest-worst tie-break.
-    "q_stream_drift" ->
-      """WITH e AS (SELECT event_id,
-             (epoch_us(ts) // 21600000000) * 21600000000 AS w,
-             CAST(round(value * 100, 0) AS BIGINT) // 500 AS bucket
-           FROM events),
-         h AS (SELECT w, bucket, COUNT(*) AS cnt FROM e GROUP BY 1, 2),
-         wt AS (SELECT w, SUM(cnt) AS n_events FROM h GROUP BY 1),
-         sh AS (SELECT h.w, h.bucket, h.cnt * 1000000 // wt.n_events AS share
-           FROM h JOIN wt ON h.w = wt.w),
-         r AS (SELECT bucket, COUNT(*) AS rc FROM e
-           WHERE event_id % 2 = 0 GROUP BY 1),
-         rt AS (SELECT SUM(rc) AS rtot FROM r),
-         rs AS (SELECT bucket, rc * 1000000 // rtot AS rshare FROM r, rt),
-         grid AS (SELECT wt.w, rs.bucket, rs.rshare FROM wt, rs),
-         fj AS (SELECT COALESCE(sh.w, grid.w) AS w,
-             COALESCE(sh.bucket, grid.bucket) AS bucket,
-             abs(COALESCE(sh.share, 0) - COALESCE(grid.rshare, 0)) AS drift
-           FROM sh FULL JOIN grid
-             ON sh.w = grid.w AND sh.bucket = grid.bucket),
-         agg AS (SELECT w, SUM(drift) AS l1, MAX(drift) AS mx
-           FROM fj GROUP BY 1),
-         worst AS (SELECT fj.w, MIN(fj.bucket) AS wb FROM fj
-           JOIN agg ON fj.w = agg.w AND fj.drift = agg.mx GROUP BY 1)
-         SELECT agg.w AS window_start_us,
-           CAST(wt.n_events AS BIGINT) AS n_events,
-           CAST(agg.l1 AS BIGINT) AS l1_ppm,
-           CAST(agg.mx AS BIGINT) AS max_ppm,
-           CAST(worst.wb AS BIGINT) AS worst_bucket
-         FROM agg JOIN wt ON agg.w = wt.w JOIN worst ON agg.w = worst.w
-         ORDER BY 1""",
-    // full integer replay of the JL sketch: the md5-parity sign matrix,
-    // the micro-unit quantization, every projected coordinate, and the
-    // norm-preservation ratio — bit-for-bit.
-    "q_jl_project" ->
-      """WITH q AS (SELECT vec_id,
-             list_transform(embedding,
-               x -> CAST(round(CAST(x AS DOUBLE) * 1000000) AS BIGINT)) AS q
-           FROM embeddings),
-         p AS (SELECT vec_id, q,
-             list_transform(range(0, 16), i ->
-               list_sum(list_transform(range(1, len(q) + 1), j ->
-                 (CASE WHEN CAST(concat('0x',
-                     substr(md5(concat('jl_', i, '_', j - 1)), 1, 8)) AS BIGINT)
-                     % 2 = 0
-                   THEN 1 ELSE -1 END) * q[j]))) AS proj
-           FROM q)
-         SELECT vec_id,
-           array_to_string(proj, ',') AS proj,
-           CAST((list_sum(list_transform(proj, x -> x * x)) * 1000000)
-             // (16 * list_sum(list_transform(q, x -> x * x))) AS BIGINT)
-             AS norm_ratio_ppm
-         FROM p ORDER BY vec_id""",
-    // every rule replayed as substring probes; labels list, priority
-    // pick, and count rebuilt from the same booleans.
-    "q_weak_label" ->
-      """WITH m AS (SELECT doc_id, lower(coalesce(text, '')) AS tx FROM documents),
-         r AS (SELECT doc_id,
-             (instr(tx, 'join') > 0 OR instr(tx, 'agg') > 0
-               OR instr(tx, 'group') > 0) AS l_sql,
-             (instr(tx, 'fast') > 0 OR instr(tx, 'slow') > 0) AS l_perf,
-             (instr(tx, 'row') > 0 OR instr(tx, 'column') > 0
-               OR instr(tx, 'table') > 0) AS l_storage,
-             (instr(tx, 'stream') > 0 OR instr(tx, 'batch') > 0
-               OR instr(tx, 'window') > 0) AS l_stream
-           FROM m)
-         SELECT doc_id,
-           array_to_string(list_filter([
-             CASE WHEN l_sql THEN 'sql' END,
-             CASE WHEN l_perf THEN 'perf' END,
-             CASE WHEN l_storage THEN 'storage' END,
-             CASE WHEN l_stream THEN 'stream' END], x -> x IS NOT NULL), ',')
-             AS labels,
-           COALESCE(CASE WHEN l_sql THEN 'sql' END,
-             CASE WHEN l_perf THEN 'perf' END,
-             CASE WHEN l_storage THEN 'storage' END,
-             CASE WHEN l_stream THEN 'stream' END, 'unlabeled') AS primary_label,
-           CAST(l_sql::INT + l_perf::INT + l_storage::INT + l_stream::INT
-             AS BIGINT) AS n_labels
-         FROM r ORDER BY doc_id""",
-    // prefix-window replay of the exact integer z² inequality over
-    // PRIOR events per user in (ts, event_id) order.
-    "q_anomaly" ->
-      """WITH e AS (SELECT user_id, event_id, ts,
-             CAST(round(value * 100, 0) AS BIGINT) AS c
-           FROM events),
-         p AS (SELECT user_id, event_id, c,
-             COUNT(*) OVER w AS n_prior,
-             COALESCE(SUM(c) OVER w, 0) AS s,
-             COALESCE(SUM(c * c) OVER w, 0) AS q
-           FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
-             ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING))
-         SELECT user_id, event_id, CAST(c AS BIGINT) AS cents,
-           CAST(n_prior AS BIGINT) AS n_prior
-         FROM p
-         WHERE n_prior >= 10
-           AND (n_prior * c - s) * (n_prior * c - s) > 9 * (n_prior * q - s * s)
-         ORDER BY user_id, event_id""",
-    // pair counts → per-key max → tied winners → MIN: the deterministic
-    // tie-break replayed literally (never DuckDB's arrival-order mode()).
-    "q_group_mode" ->
-      """WITH j AS (SELECT p_brand, l_returnflag
-           FROM lineitem JOIN part ON l_partkey = p_partkey),
-         c AS (SELECT p_brand, l_returnflag, COUNT(*) AS cnt FROM j GROUP BY 1, 2),
-         t AS (SELECT p_brand, MAX(cnt) AS mode_count, COUNT(*) AS n_distinct
-           FROM c GROUP BY 1)
-         SELECT c.p_brand, MIN(c.l_returnflag) AS mode_value,
-           CAST(t.mode_count AS BIGINT) AS mode_count,
-           CAST(t.n_distinct AS BIGINT) AS n_distinct
-         FROM c JOIN t ON c.p_brand = t.p_brand AND c.cnt = t.mode_count
-         GROUP BY c.p_brand, t.mode_count, t.n_distinct
-         ORDER BY c.p_brand""",
-    // bounded invariant (the ANN recall-gate pattern): every probe
-    // answered through the REAL streaming sink with exactly k rows,
-    // byte-equal to the direct indexed query
-    "q_vector_search_sink" ->
-      """SELECT CAST(vec_id AS BIGINT) AS probe_id, CAST(5 AS BIGINT) AS k_rows,
-         true AS sink_matches_direct
-         FROM embeddings WHERE vec_id < 3 ORDER BY probe_id""",
-    "q_stream_ann_delete" ->
-      """SELECT CAST(vec_id AS BIGINT) AS probe_id, TRUE AS pre_delete_served,
-         TRUE AS deleted_excluded, TRUE AS matches_direct
-         FROM embeddings WHERE vec_id < 3 ORDER BY probe_id""",
-    "q_interval_join" ->
-      """WITH p AS (SELECT user_id, event_id AS p_id, ts AS p_ts FROM events
-                    WHERE event_type = 'purchase'),
-            c AS (SELECT user_id, event_id AS c_id, ts AS c_ts FROM events
-                    WHERE event_type = 'click')
-         SELECT p.p_id, c.c_id FROM p JOIN c ON p.user_id = c.user_id
-           AND c.c_ts >= p.p_ts - INTERVAL 1 HOUR AND c.c_ts <= p.p_ts
-         ORDER BY p_id, c_id""",
-    "q_interval_join_outer" ->
-      """WITH p AS (SELECT user_id, event_id AS p_id, ts AS p_ts FROM events
-                    WHERE event_type = 'purchase'),
-            c AS (SELECT user_id, event_id AS c_id, ts AS c_ts FROM events
-                    WHERE event_type = 'click')
-         SELECT p.p_id, c.c_id FROM p LEFT JOIN c ON p.user_id = c.user_id
-           AND c.c_ts >= p.p_ts - INTERVAL 1 HOUR AND c.c_ts <= p.p_ts
-         ORDER BY p_id, c_id NULLS FIRST""",
-    "q_stream_dedup" ->
-      """SELECT DISTINCT user_id, event_type FROM events
-         ORDER BY user_id, event_type""",
-    "q_snapshot_diff" ->
-      """WITH base AS (SELECT o_orderkey,
-             CAST(ROUND(o_totalprice * 100, 0) AS BIGINT) AS c, o_orderstatus
-           FROM orders),
-         o AS (SELECT * FROM base WHERE o_orderkey % 7 <> 0),
-         n AS (SELECT o_orderkey,
-                 CASE WHEN o_orderkey % 3 = 0 THEN c + 1 ELSE c END AS c,
-                 o_orderstatus
-               FROM base WHERE o_orderkey % 5 <> 0),
-         d AS (SELECT CASE WHEN o.o_orderkey IS NULL THEN 'added'
-                      WHEN n.o_orderkey IS NULL THEN 'removed'
-                      WHEN o.c <> n.c OR o.o_orderstatus <> n.o_orderstatus THEN 'changed'
-                      ELSE 'unchanged' END AS status
-               FROM o FULL OUTER JOIN n ON o.o_orderkey = n.o_orderkey)
-         SELECT status, CAST(COUNT(*) AS BIGINT) AS n_keys
-         FROM d GROUP BY status ORDER BY status""",
-    // CAST the outer SUM: DuckDB widens SUM(BIGINT) to HUGEINT, and a
-    // compare that loads results via pandas renders int128 as float64 —
-    // every value mismatches while rows/schema agree. This (with
-    // q_date_spine) was the r7/r8 driver-red signature: the only two
-    // oracles emitting HUGEINT, and the only two red rows.
-    "q_salted_join" ->
-      """SELECT c_mktsegment, CAST(COUNT(*) AS BIGINT) AS n_orders,
-         CAST(SUM(CAST(ROUND(o_totalprice * 100, 0) AS BIGINT)) AS BIGINT) AS rev_cents
-         FROM orders JOIN customer ON o_custkey = c_custkey
-         GROUP BY c_mktsegment ORDER BY c_mktsegment""",
-    "q_stream_enrich" ->
-      """SELECT e.event_id, e.user_id, c.c_mktsegment
-         FROM events e LEFT JOIN customer c ON e.user_id = c.c_custkey
-         ORDER BY e.event_id""",
-    // MERGE replay: batch b carries keys o_orderkey%4 IN (b, 3); last
-    // writer wins per key = the max-batch row for that key.
-    "q_upsert" ->
-      """WITH d AS (SELECT o_orderkey,
-             CAST(ROUND(o_totalprice * 100, 0) AS BIGINT) AS base_cents,
-             o_orderkey % 4 AS r
-           FROM orders),
-         batches AS (
-           SELECT 0 AS b, o_orderkey, base_cents FROM d WHERE r IN (0, 3)
-           UNION ALL SELECT 1, o_orderkey, base_cents FROM d WHERE r IN (1, 3)
-           UNION ALL SELECT 2, o_orderkey, base_cents FROM d WHERE r IN (2, 3)),
-         last AS (SELECT o_orderkey, MAX(b) AS b FROM batches GROUP BY o_orderkey)
-         SELECT t.o_orderkey, t.base_cents + t.b AS upd_cents,
-           CAST(t.b AS BIGINT) AS src_batch
-         FROM batches t JOIN last l ON t.o_orderkey = l.o_orderkey AND t.b = l.b
-         ORDER BY t.o_orderkey""",
-    // Ingest replay: the raw events table IS the union of all six
-    // arrivals — equality proves exactly-once across runs and reruns.
-    "q_ingest" ->
-      """SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n,
-           CAST(SUM(CAST(ROUND(value * 100, 0) AS BIGINT)) AS BIGINT) AS sum_cents,
-           CAST(SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS BIGINT)
-             AS n_purchase
-         FROM events GROUP BY 1 ORDER BY 1""",
-    // Drift replay: same deterministic periods, buckets, and integer
-    // ppm shares (both engines floor non-negative integer division).
-    "q_drift" ->
-      """WITH e AS (SELECT day(ts) <= 15 AS is_a,
-             CAST(ROUND(value * 100, 0) AS BIGINT) // 2000 AS bucket FROM events),
-         b AS (SELECT bucket, SUM(CASE WHEN is_a THEN 1 ELSE 0 END) AS n_a,
-               SUM(CASE WHEN is_a THEN 0 ELSE 1 END) AS n_b FROM e GROUP BY 1),
-         t AS (SELECT SUM(n_a) AS tot_a, SUM(n_b) AS tot_b FROM b)
-         SELECT bucket, CAST(n_a AS BIGINT) AS n_a, CAST(n_b AS BIGINT) AS n_b,
-           CAST(n_a * 1000000 // tot_a AS BIGINT) AS share_a_ppm,
-           CAST(n_b * 1000000 // tot_b AS BIGINT) AS share_b_ppm,
-           CAST(ABS(n_a * 1000000 // tot_a - n_b * 1000000 // tot_b) AS BIGINT)
-             AS drift_ppm
-         FROM b CROSS JOIN t ORDER BY bucket""",
-    // Co-occurrence replay: per-doc distinct tokens, all unordered
-    // in-doc pairs, min-support floor, integer-ppm lift, top 20 under
-    // a total order.
-    "q_cooccurrence" ->
-      """WITH d0 AS (SELECT doc_id,
-             list_sort(list_distinct(list_filter(regexp_split_to_array(text, '[ \t\n\r]+'),
-               x -> x <> ''))) AS ws0
-           FROM documents),
-         d AS (SELECT doc_id, ws0[1 : 512] AS ws FROM d0),
-         nd AS (SELECT COUNT(*) AS n_docs FROM d),
-         ex AS (SELECT doc_id, UNNEST(ws) AS t FROM d),
-         term AS (SELECT t AS tok, COUNT(*) AS c FROM ex GROUP BY 1),
-         pairs AS (SELECT a.t AS t1, b.t AS t2, COUNT(*) AS c_xy
-           FROM ex a JOIN ex b ON a.doc_id = b.doc_id AND a.t < b.t
-           GROUP BY 1, 2 HAVING COUNT(*) >= 20)
-         SELECT t1, t2, CAST(c_xy AS BIGINT) AS c_xy,
-           CAST(x.c AS BIGINT) AS c_x, CAST(y.c AS BIGINT) AS c_y,
-           CAST(c_xy * n_docs * 1000000 // (x.c * y.c) AS BIGINT) AS lift_ppm
-         FROM pairs JOIN term x ON t1 = x.tok JOIN term y ON t2 = y.tok
-         CROSS JOIN nd
-         ORDER BY lift_ppm DESC, t1, t2 LIMIT 20""",
-    // FD audit replay: per test, distinct-pair (or raw-row) group
-    // sizes, then groups / violations / max fan-out.
-    "q_fd_audit" ->
-      """WITH t1 AS (SELECT 'nation_name_fd' AS test, COUNT(*) AS n_groups,
-             SUM(CASE WHEN m > 1 THEN 1 ELSE 0 END) AS n_violating, MAX(m) AS mx
-           FROM (SELECT n_nationkey, COUNT(*) AS m
-                 FROM (SELECT DISTINCT n_nationkey, n_name FROM nation) GROUP BY 1)),
-         t2 AS (SELECT 'lineitem_pk', COUNT(*),
-             SUM(CASE WHEN m > 1 THEN 1 ELSE 0 END), MAX(m)
-           FROM (SELECT l_orderkey, l_linenumber, COUNT(*) AS m
-                 FROM lineitem GROUP BY 1, 2)),
-         t3 AS (SELECT 'cust_nation_to_segment', COUNT(*),
-             SUM(CASE WHEN m > 1 THEN 1 ELSE 0 END), MAX(m)
-           FROM (SELECT c_nationkey, COUNT(*) AS m
-                 FROM (SELECT DISTINCT c_nationkey, c_mktsegment FROM customer) GROUP BY 1)),
-         t4 AS (SELECT 'orders_custkey_unique', COUNT(*),
-             SUM(CASE WHEN m > 1 THEN 1 ELSE 0 END), MAX(m)
-           FROM (SELECT o_custkey, COUNT(*) AS m FROM orders GROUP BY 1)),
-         u AS (SELECT * FROM t1 UNION ALL SELECT * FROM t2
-               UNION ALL SELECT * FROM t3 UNION ALL SELECT * FROM t4)
-         SELECT test, CAST(n_groups AS BIGINT) AS n_groups,
-           CAST(n_violating AS BIGINT) AS n_violating,
-           CAST(mx AS BIGINT) AS max_rhs_per_group
-         FROM u ORDER BY test""",
-    // B6's session assignment + one LEAD: transitions within sessions.
-    "q_session_transitions" ->
-      """WITH e AS (
-           SELECT user_id, event_id, event_type, epoch_us(ts) AS ts_us FROM events),
-         lagged AS (
-           SELECT *, LAG(ts_us) OVER (PARTITION BY user_id ORDER BY ts_us, event_id) AS prev_us FROM e),
-         flagged AS (
-           SELECT *, CASE WHEN prev_us IS NULL OR ts_us - prev_us > 1800000000 THEN 1 ELSE 0 END AS new_sess FROM lagged),
-         sess AS (
-           SELECT *, SUM(new_sess) OVER (PARTITION BY user_id ORDER BY ts_us, event_id
-             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_id FROM flagged),
-         nx AS (
-           SELECT *, LEAD(event_type) OVER (PARTITION BY user_id ORDER BY ts_us, event_id) AS next_type,
-             LEAD(session_id) OVER (PARTITION BY user_id ORDER BY ts_us, event_id) AS next_sess FROM sess)
-         SELECT event_type AS from_type, next_type AS to_type,
-           CAST(COUNT(*) AS BIGINT) AS n
-         FROM nx WHERE next_type IS NOT NULL AND next_sess = session_id
-         GROUP BY 1, 2 ORDER BY 1, 2""",
-    // B81: full ordered path per session (string_agg over the same
-    // (ts, id) order as Spark's struct sort), corpus top 20 by
-    // (count desc, path asc)
-    "q_session_paths" ->
-      """WITH e AS (
-           SELECT user_id, event_id, event_type, epoch_us(ts) AS ts_us FROM events),
-         lagged AS (
-           SELECT *, LAG(ts_us) OVER (PARTITION BY user_id ORDER BY ts_us, event_id) AS prev_us FROM e),
-         flagged AS (
-           SELECT *, CASE WHEN prev_us IS NULL OR ts_us - prev_us > 1800000000 THEN 1 ELSE 0 END AS new_sess FROM lagged),
-         sess AS (
-           SELECT *, SUM(new_sess) OVER (PARTITION BY user_id ORDER BY ts_us, event_id
-             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_id FROM flagged),
-         paths AS (
-           SELECT user_id, session_id,
-             string_agg(event_type, '->' ORDER BY ts_us, event_id) AS path
-           FROM sess GROUP BY 1, 2)
-         SELECT path, CAST(COUNT(*) AS BIGINT) AS n_sessions
-         FROM paths GROUP BY 1
-         ORDER BY n_sessions DESC, path LIMIT 20""",
-    // BFS frontier expansion replayed as a recursive CTE: UNION's set
-    // semantics dedupe (node, d) pairs exactly as the anti join
-    // bounds the Spark frontier; MIN(d) per node = first settle.
-    "q_bfs" ->
-      """WITH RECURSIVE e AS (
-           SELECT l_orderkey AS a, l_partkey + 1000000000 AS b FROM lineitem
-           UNION SELECT l_partkey + 1000000000, l_orderkey FROM lineitem),
-         bfs(node, d) AS (
-           SELECT MIN(o_orderkey), 0 FROM orders
-           UNION
-           SELECT e.b, bfs.d + 1 FROM bfs, e WHERE e.a = bfs.node AND bfs.d < 4),
-         best AS (SELECT node, MIN(d) AS dist FROM bfs GROUP BY node)
-         SELECT CAST(dist AS BIGINT) AS dist, CAST(COUNT(*) AS BIGINT) AS n_nodes,
-           CAST(SUM(node) AS BIGINT) AS sum_nodes
-         FROM best GROUP BY 1 ORDER BY 1""",
-    // Last-touch attribution replay: within-window arg_max equals the
-    // unbounded as-of match + gap filter (older touches have larger
-    // gaps, so the in-window latest IS the overall latest when any
-    // in-window touch exists).
-    "q_attribution" ->
-      """WITH p AS (SELECT event_id, user_id, epoch_us(ts) AS ts_us,
-             CAST(ROUND(value * 100, 0) AS BIGINT) AS rev
-           FROM events WHERE event_type = 'purchase'),
-         t AS (SELECT user_id, epoch_us(ts) AS t_ts,
-             arg_max(event_type, event_id) AS t_type
-           FROM events WHERE event_type IN ('click', 'view', 'signup')
-           GROUP BY 1, 2),
-         att AS (SELECT p.event_id, ANY_VALUE(p.rev) AS rev,
-             COALESCE(arg_max(t.t_type, t.t_ts), 'direct') AS channel
-           FROM p LEFT JOIN t ON p.user_id = t.user_id
-             AND t.t_ts <= p.ts_us AND p.ts_us - t.t_ts <= 86400000000
-           GROUP BY p.event_id)
-         SELECT channel, CAST(COUNT(*) AS BIGINT) AS n_purchases,
-           CAST(SUM(rev) AS BIGINT) AS rev_cents
-         FROM att GROUP BY 1 ORDER BY 1""",
-    // Brute-force replay of the exact shingle-Jaccard join: equality
-    // proves the prefix filter lost no candidate pair.
-    "q_simjoin" ->
-      """WITH w AS (SELECT doc_id,
-             list_filter(regexp_split_to_array(text, '[ \t\n\r]+'), x -> x <> '') AS ts
-           FROM documents),
-         sh AS (SELECT DISTINCT doc_id, array_to_string(ts[i : i + 2], ' ') AS token
-                FROM w, UNNEST(range(1, len(ts) - 1)) AS u(i)),
-         sz AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-         pairs AS (SELECT a.doc_id AS id1, b.doc_id AS id2, COUNT(*) AS inter
-                   FROM sh a JOIN sh b ON a.token = b.token AND a.doc_id < b.doc_id
-                   GROUP BY 1, 2),
-         j AS (SELECT id1, id2, inter, s1.n + s2.n - inter AS uni
-               FROM pairs JOIN sz s1 ON id1 = s1.doc_id JOIN sz s2 ON id2 = s2.doc_id)
-         SELECT id1, id2, CAST(inter AS BIGINT) AS inter, CAST(uni AS BIGINT) AS uni,
-           CAST((inter * 1000) // uni AS BIGINT) AS jac_milli
-         FROM j WHERE inter * 1000 >= 800 * uni
-         ORDER BY id1, id2""",
-    // Changelog replay: final state per key = its max-batch touch,
-    // kept iff that touch was an upsert ('U').
-    "q_cdc_apply" ->
-      """WITH d AS (SELECT o_orderkey AS k,
-             CAST(ROUND(o_totalprice * 100, 0) AS BIGINT) AS base_cents
-           FROM orders),
-         batches AS (
-           SELECT 0 AS b, k, base_cents + 0 AS upd_cents, 'U' AS op FROM d
-           UNION ALL
-           SELECT 1, k, base_cents + 1,
-             CASE WHEN k % 6 = 1 THEN 'D' ELSE 'U' END FROM d WHERE k % 4 IN (1, 3)
-           UNION ALL
-           SELECT 2, k, base_cents + 2,
-             CASE WHEN k % 6 = 2 THEN 'D' ELSE 'U' END FROM d WHERE k % 4 IN (2, 3)),
-         last AS (SELECT k, MAX(b) AS b FROM batches GROUP BY k)
-         SELECT t.k AS o_orderkey, t.upd_cents, CAST(t.b AS BIGINT) AS src_batch
-         FROM batches t JOIN last l ON t.k = l.k AND t.b = l.b
-         WHERE t.op = 'U'
-         ORDER BY t.k""",
-    // Compaction preserves every row: replay the aggregate on the RAW
-    // events table.
-    "q_compact_partitioned" ->
-      """WITH e AS (SELECT CAST(ts AS DATE) AS event_date, event_id,
-           CAST(round(value * 100, 0) AS BIGINT) AS c FROM events)
-         SELECT CAST(event_date AS VARCHAR) AS event_date,
-           CAST(COUNT(*) AS BIGINT) AS n, CAST(SUM(c) AS BIGINT) AS sum_cents,
-           CAST(SUM(event_id) AS BIGINT) AS sum_ids
-         FROM e GROUP BY 1 ORDER BY 1""",
-    "q_time_weighted" ->
-      """WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS ts_us,
-             CAST(ROUND(value * 100, 0) AS BIGINT) AS c FROM events),
-         nx AS (SELECT *, LEAD(ts_us) OVER
-             (PARTITION BY user_id ORDER BY ts_us, event_id) AS next_us FROM e),
-         iv AS (SELECT user_id, c, (next_us - ts_us) // 1000000 AS dur_s
-           FROM nx WHERE next_us IS NOT NULL),
-         agg AS (SELECT user_id, SUM(c * dur_s) AS num, SUM(dur_s) AS den
-           FROM iv GROUP BY user_id)
-         SELECT user_id, CAST(num AS BIGINT) AS num, CAST(den AS BIGINT) AS den,
-           CAST((num * 1000) // den AS BIGINT) AS twa_milli
-         FROM agg WHERE den > 0 ORDER BY user_id""",
-    "q_late_events" ->
-      """WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS ts_us,
-             epoch_us(ts) + CAST(concat('0x',
-               substr(md5(CAST(event_id AS VARCHAR)), 1, 8)) AS BIGINT)
-               % 7200 * 1000000 AS arr_us
-           FROM events),
-         w AS (SELECT *, MAX(ts_us) OVER
-             (PARTITION BY user_id ORDER BY arr_us, event_id
-              ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-             - 1800000000 AS wm_us FROM e)
-         SELECT event_id, user_id, ts_us, wm_us - ts_us AS late_by_us
-         FROM w WHERE wm_us IS NOT NULL AND ts_us < wm_us
-         ORDER BY event_id""",
-    // The CLI round trip replayed: flat denorm (q_flat_denorm's join
-    // tree) rendered to stable strings, then the C31 checksum shape.
-    "q_cli_run" ->
-      """WITH f AS (SELECT c_custkey, c_name,
-             COALESCE(n_name, CAST(customer.c_nationkey AS VARCHAR)) AS c_nationkey,
-             o_orderkey,
-             CAST(ROUND(o_totalprice * 100, 0) AS BIGINT) AS total_cents,
-             CAST(CAST(o_orderdate AS DATE) AS VARCHAR) AS o_date,
-             o_orderpriority, l_linenumber,
-             CAST(ROUND(l_quantity * 100, 0) AS BIGINT) AS qty_cents,
-             CAST(ROUND(l_extendedprice * 100, 0) AS BIGINT) AS price_cents
-           FROM customer LEFT JOIN nation ON customer.c_nationkey = nation.n_nationkey
-           JOIN orders ON c_custkey = o_custkey
-           JOIN lineitem ON o_orderkey = l_orderkey),
-         h AS (SELECT CAST(concat('0x', substr(md5(
-             CAST(c_custkey AS VARCHAR) || ':' || COALESCE(c_name, '') || ':' ||
-             COALESCE(c_nationkey, '') || ':' || CAST(o_orderkey AS VARCHAR) || ':' ||
-             CAST(total_cents AS VARCHAR) || ':' || COALESCE(o_date, '') || ':' ||
-             COALESCE(o_orderpriority, '') || ':' || CAST(l_linenumber AS VARCHAR) || ':' ||
-             CAST(qty_cents AS VARCHAR) || ':' || CAST(price_cents AS VARCHAR)), 1, 8)) AS BIGINT) AS h
-           FROM f)
-         SELECT CAST(COUNT(*) AS BIGINT) AS n_rows,
-           CAST(SUM(h) AS BIGINT) AS checksum_sum,
-           CAST(BIT_XOR(h) AS BIGINT) AS checksum_xor
-         FROM h""",
-    // the released artifact replayed: same default-deny projection
-    // semantics as q_mask_policy, read back from disk by the query.
-    "q_cli_mask" ->
-      """SELECT c_custkey, sha256(c_name) AS c_name,
-           substr(c_mktsegment, 1, 3) || '***' AS c_mktsegment
-         FROM customer ORDER BY c_custkey""",
-    // the snapshot-verb namespace replayed: two versions, both fully
-    // physical (the verb publishes only `denorm`, so the --link rerun
-    // has nothing to carry by reference); logical rows = the denorm
-    // join mass recomputed from the source tables.
-    // A35: every (stage, ref, table) count recomputed from the source
-    // tables — the branch/promote lifecycle is the query's own fixed
-    // construction.
-    "q_snapshot_branch" ->
-      """WITH c AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM customer),
-         c4 AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM customer WHERE c_custkey % 4 = 0),
-         na AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM nation),
-         n10 AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM nation WHERE n_nationkey < 10)
-         SELECT * FROM (
-           SELECT 'diverged' AS stage, 'dev' AS ref, 'cust' AS table_name, (SELECT n FROM c4) AS n_rows
-           UNION ALL SELECT 'diverged', 'dev', 'nat', (SELECT n FROM na)
-           UNION ALL SELECT 'diverged', 'prod', 'cust', (SELECT n FROM c)
-           UNION ALL SELECT 'diverged', 'prod', 'nat', (SELECT n FROM n10)
-           UNION ALL SELECT 'promoted', 'prod', 'cust', (SELECT n FROM c4)
-           UNION ALL SELECT 'promoted', 'prod', 'nat', (SELECT n FROM na)
-         ) ORDER BY stage, ref, table_name""",
-    // A36: the three-way merge lifecycle replayed — each (stage, ref,
-    // table) count from the side whose physical home must win; the
-    // second merge's rows prove the merge base advanced.
-    "q_branch_merge" ->
-      """WITH c AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM customer),
-         c4 AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM customer WHERE c_custkey % 4 = 0),
-         c8 AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM customer WHERE c_custkey % 8 = 0),
-         na AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM nation),
-         n10 AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM nation WHERE n_nationkey < 10),
-         o AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM orders),
-         o3 AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM orders WHERE o_orderkey % 3 = 0)
-         SELECT * FROM (
-           SELECT 'diverged' AS stage, 'dev' AS ref, 'cust' AS table_name, (SELECT n FROM c4) AS n_rows
-           UNION ALL SELECT 'diverged', 'dev', 'nat', (SELECT n FROM na)
-           UNION ALL SELECT 'diverged', 'dev', 'ord', (SELECT n FROM o)
-           UNION ALL SELECT 'diverged', 'prod', 'cust', (SELECT n FROM c)
-           UNION ALL SELECT 'diverged', 'prod', 'nat', (SELECT n FROM n10)
-           UNION ALL SELECT 'diverged', 'prod', 'ord', (SELECT n FROM o)
-           UNION ALL SELECT 'merged', 'prod', 'cust', (SELECT n FROM c4)
-           UNION ALL SELECT 'merged', 'prod', 'nat', (SELECT n FROM n10)
-           UNION ALL SELECT 'merged', 'prod', 'ord', (SELECT n FROM o)
-           UNION ALL SELECT 'remerged', 'prod', 'cust', (SELECT n FROM c8)
-           UNION ALL SELECT 'remerged', 'prod', 'nat', (SELECT n FROM n10)
-           UNION ALL SELECT 'remerged', 'prod', 'ord', (SELECT n FROM o3)
-         ) ORDER BY stage, ref, table_name""",
-    // A40: the ref-GC lifecycle replayed — nothing reclaimable while
-    // the branch lives (n=0), exactly the branch-exclusive version
-    // after deleteRef (n=1), prod's serve counts untouched (cust
-    // through the link-rescued v1, nat filtered at its head).
-    "q_branch_gc" ->
-      """WITH c AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM customer),
-         c2 AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM customer WHERE c_custkey % 2 = 0),
-         n10 AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM nation WHERE n_nationkey < 10)
-         SELECT * FROM (
-           SELECT 'gc' AS stage, 'n_reclaimed' AS item, CAST(1 AS BIGINT) AS n
-           UNION ALL SELECT 'live', 'cust@dev', (SELECT n FROM c2)
-           UNION ALL SELECT 'live', 'n_reclaimed', CAST(0 AS BIGINT)
-           UNION ALL SELECT 'serve', 'cust@prod', (SELECT n FROM c)
-           UNION ALL SELECT 'serve', 'nat@prod', (SELECT n FROM n10)
-         ) ORDER BY stage, item""",
-    // A39+A12: the CLI replicate verb's copy report + serve-through-
-    // replica counts — the denorm row count and segment count
-    // recomputed from source; checksums pinned TRUE (a mismatch
-    // refuses before the replica's manifest flips).
-    "q_cli_replicate" ->
-      """WITH n AS (SELECT CAST(COUNT(*) AS BIGINT) AS c FROM lineitem
-           JOIN orders ON l_orderkey = o_orderkey
-           JOIN customer ON o_custkey = c_custkey
-           WHERE c_mktsegment = 'BUILDING')
-         SELECT * FROM (
-           SELECT 'copy' AS stage, 'v1/denorm' AS item, (SELECT c FROM n) AS n_rows, TRUE AS ok
-           UNION ALL SELECT 'copy', 'v2/summary', CAST(1 AS BIGINT), TRUE
-           UNION ALL SELECT 'serve', 'denorm@prod', (SELECT c FROM n), TRUE
-           UNION ALL SELECT 'serve', 'summary@prod', CAST(1 AS BIGINT), TRUE
-         ) ORDER BY stage, item""",
-    "q_cli_storage" ->
-      """WITH n AS (SELECT CAST(COUNT(*) AS BIGINT) AS c FROM lineitem
-           JOIN orders ON l_orderkey = o_orderkey
-           JOIN customer ON o_custkey = c_custkey),
-         seg AS (SELECT CAST(COUNT(DISTINCT c_mktsegment) AS BIGINT) AS c
-           FROM customer JOIN orders ON o_custkey = c_custkey
-           JOIN lineitem ON l_orderkey = o_orderkey)
-         SELECT CAST(1 AS BIGINT) AS version, CAST(1 AS BIGINT) AS n_physical,
-           CAST(0 AS BIGINT) AS n_linked, (SELECT c FROM n) AS logical_rows,
-           CAST(0 AS BIGINT) AS linked_rows
-         UNION ALL
-         SELECT 2, 1, 1, (SELECT c FROM n) + (SELECT c FROM seg),
-           (SELECT c FROM n)
-         ORDER BY version""",
-    // C81: the exact integer moment pass replayed from the parquet —
-    // every upper-tri second moment, first moment, and n.
-    "q_pca_gram" ->
-      """WITH q AS (SELECT vec_id, CAST(u.i - 1 AS BIGINT) AS i,
-           CAST(floor(CAST(embedding[CAST(u.i AS INT)] AS DOUBLE) * 1000000 + 0.5) AS BIGINT) AS qv
-         FROM embeddings, UNNEST(range(1, 65)) AS u(i)),
-         g AS (SELECT a.i AS i, b.i AS j, CAST(SUM(a.qv * b.qv) AS BIGINT) AS v
-           FROM q a JOIN q b ON a.vec_id = b.vec_id AND a.i <= b.i GROUP BY 1, 2),
-         s AS (SELECT i, CAST(-1 AS BIGINT) AS j, CAST(SUM(qv) AS BIGINT) AS v
-           FROM q GROUP BY 1)
-         SELECT i, j, v FROM g
-         UNION ALL SELECT i, j, v FROM s
-         UNION ALL SELECT CAST(-1 AS BIGINT), CAST(-1 AS BIGINT),
-           (SELECT CAST(COUNT(*) AS BIGINT) FROM embeddings)
-         ORDER BY i, j""",
-    // C81b: eigenvalues are driver doubles — the row carries provable
-    // invariants (orthonormal basis, variance order, whitened
-    // variance ≈ 1 computed distributed), all TRUE.
-    "q_pca_project" ->
-      """SELECT CAST(u.c AS BIGINT) AS component,
-           (SELECT CAST(COUNT(*) AS BIGINT) FROM embeddings) AS n_used,
-           TRUE AS ortho_ok, TRUE AS order_ok, TRUE AS var_ok
-         FROM UNNEST(range(0, 8)) AS u(c) ORDER BY component""",
-    // C82: the whole affine int8 map replayed in integers.
-    "q_quantize_int8" ->
-      """WITH q AS (SELECT vec_id, CAST(u.i - 1 AS BIGINT) AS pos,
-           CAST(floor(CAST(embedding[CAST(u.i AS INT)] AS DOUBLE) * 1000000 + 0.5) AS BIGINT) AS qv
-         FROM embeddings, UNNEST(range(1, 65)) AS u(i)),
-         cal AS (SELECT pos, MIN(qv) AS qmin, MAX(qv) AS qmax FROM q GROUP BY pos)
-         SELECT vec_id, pos,
-           CAST(CASE WHEN qmax = qmin THEN 0
-             ELSE ((qv - qmin) * 510 + (qmax - qmin)) // (2 * (qmax - qmin))
-           END AS BIGINT) AS code
-         FROM q JOIN cal USING (pos) ORDER BY vec_id, pos""",
-    // C83: fixed power-of-two cap ladder (CASE chain, no float log2),
-    // integer waste ppm.
-    "q_length_buckets" ->
-      """WITH toks AS (SELECT CAST(LEN(regexp_split_to_array(TRIM(text), '\s+')) AS BIGINT) AS n_tok
-           FROM documents),
-         b AS (SELECT n_tok, CAST(CASE
-             WHEN n_tok <= 16 THEN 16 WHEN n_tok <= 32 THEN 32
-             WHEN n_tok <= 64 THEN 64 WHEN n_tok <= 128 THEN 128
-             WHEN n_tok <= 256 THEN 256 WHEN n_tok <= 512 THEN 512
-             WHEN n_tok <= 1024 THEN 1024 WHEN n_tok <= 2048 THEN 2048
-             ELSE 4096 END AS BIGINT) AS cap FROM toks)
-         SELECT cap, CAST(COUNT(*) AS BIGINT) AS n_docs,
-           CAST(SUM(n_tok) AS BIGINT) AS sum_tok,
-           CAST(cap * COUNT(*) AS BIGINT) AS padded_tok,
-           CAST((cap * COUNT(*) - SUM(n_tok)) * 1000000 // (cap * COUNT(*)) AS BIGINT) AS waste_ppm
-         FROM b GROUP BY cap ORDER BY cap""",
-    // B122: top contributing keys + exact self-join output size.
-    "q_join_explosion" ->
-      """WITH c AS (SELECT user_id, CAST(COUNT(*) AS BIGINT) AS n
-           FROM events GROUP BY 1),
-         top AS (SELECT user_id, n, CAST(n * n AS BIGINT) AS pairs FROM c
-           ORDER BY n * n DESC, user_id LIMIT 10)
-         SELECT user_id, n, pairs FROM top
-         UNION ALL
-         SELECT CAST(-1 AS BIGINT), (SELECT CAST(COUNT(*) AS BIGINT) FROM c),
-           (SELECT CAST(SUM(n * n) AS BIGINT) FROM c)
-         ORDER BY pairs DESC, user_id""",
-    // A39: copy report (three physical tables, checksums TRUE — a
-    // mismatch refuses before the flip) + serve-side counts through
-    // the replica's own manifest/tag/links.
-    "q_replicate" ->
-      """WITH c AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM customer),
-         c2 AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM customer WHERE c_custkey % 2 = 0),
-         na AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM nation)
-         SELECT * FROM (
-           SELECT 'copy' AS stage, 'v1/cust' AS item, (SELECT n FROM c) AS n_rows, TRUE AS ok
-           UNION ALL SELECT 'copy', 'v1/nat', (SELECT n FROM na), TRUE
-           UNION ALL SELECT 'copy', 'v2/cust', (SELECT n FROM c2), TRUE
-           UNION ALL SELECT 'serve', 'cust@prod', (SELECT n FROM c2), TRUE
-           UNION ALL SELECT 'serve', 'nat@prod', (SELECT n FROM na), TRUE
-         ) ORDER BY stage, item""",
-    // A38: the per-key outcome of the keyed three-way merge —
-    // branch's +10/delete classes, target's +100/insert block —
-    // recomputed straight from the source table.
-    "q_row_merge" ->
-      """WITH b AS (SELECT c_custkey AS k, c_mktsegment AS seg,
-           CAST(round(c_acctbal * 100, 0) AS BIGINT) AS bal FROM customer)
-         SELECT * FROM (
-           SELECT k, seg,
-             CASE WHEN k % 3 = 0 THEN bal + 10
-                  WHEN k % 3 = 1 THEN bal + 100 ELSE bal END AS bal
-           FROM b WHERE k % 21 <> 2
-           UNION ALL
-           SELECT k + 1000000, seg, bal + 5 FROM b WHERE k <= 80
-         ) ORDER BY k""",
-    // A37: the construction fully determines the log — one row per
-    // op, the aborted FK candidate visible as an unreachable orphan.
-    "q_snapshot_history" ->
-      """SELECT * FROM (VALUES
-           (CAST(1 AS BIGINT), 'publish', CAST(0 AS BIGINT), 'cust,nat', '', TRUE),
-           (2, 'linked', 1, 'cust', 'dev', TRUE),
-           (3, 'linked', 2, 'nat', 'prod', TRUE),
-           (4, 'merge', 3, '', 'prod', TRUE),
-           (5, 'checked', 4, 'dim,fact', '', FALSE)
-         ) AS t(version, op, parent, written, ref, reachable)
-         ORDER BY version""",
-    // B124: the independent all-pairs dominance definition — the
-    // bucket-decomposed operator must reproduce it exactly.
-    "q_skyline" ->
-      """WITH p AS (SELECT p_brand, p_partkey,
-           CAST(round(p_retailprice * 100, 0) AS BIGINT) AS price_cents,
-           CAST(p_size AS BIGINT) AS sz FROM part)
-         SELECT a.p_brand, a.p_partkey, a.price_cents, a.sz FROM p a
-         WHERE NOT EXISTS (SELECT 1 FROM p q WHERE q.p_brand = a.p_brand
-           AND q.price_cents <= a.price_cents AND q.sz >= a.sz
-           AND (q.price_cents < a.price_cents OR q.sz > a.sz))
-         ORDER BY a.p_brand, a.p_partkey""",
-    // B125: the two (count, distinct) bucket sketches, the per-bucket
-    // uniformity estimate with truncating div, the exact join size,
-    // and the signed error all replayed.
-    "q_join_estimate" ->
-      """WITH la AS (SELECT l_orderkey AS k,
-           CAST(concat('0x', substr(md5(CAST(l_orderkey AS VARCHAR)), 1, 8)) AS BIGINT) % 1024 AS b
-           FROM lineitem),
-         oa AS (SELECT o_orderkey AS k,
-           CAST(concat('0x', substr(md5(CAST(o_orderkey AS VARCHAR)), 1, 8)) AS BIGINT) % 1024 AS b
-           FROM orders),
-         ha AS (SELECT b, CAST(COUNT(*) AS BIGINT) AS na,
-           CAST(COUNT(DISTINCT k) AS BIGINT) AS da FROM la GROUP BY 1),
-         hb AS (SELECT b, CAST(COUNT(*) AS BIGINT) AS nb,
-           CAST(COUNT(DISTINCT k) AS BIGINT) AS db FROM oa GROUP BY 1),
-         est AS (SELECT CAST(SUM(na * nb // greatest(da, db)) AS BIGINT) AS est_pairs
-           FROM ha JOIN hb USING (b)),
-         ex AS (SELECT CAST(COUNT(*) AS BIGINT) AS exact_pairs
-           FROM lineitem JOIN orders ON l_orderkey = o_orderkey)
-         SELECT CAST(1024 AS BIGINT) AS n_buckets, est_pairs, exact_pairs,
-           CAST((est_pairs - exact_pairs) * 1000000 // exact_pairs AS BIGINT) AS err_ppm
-         FROM est, ex""",
-    // B123: the deterministic md5-bucket key-cluster sample, the x20
-    // scale-up, and the exact ppm error all replayed — estimator AND
-    // accuracy accounting hash-checked.
-    "q_sample_estimate" ->
-      """WITH li AS (SELECT l_returnflag,
-           CAST(round(l_extendedprice * 100, 0) AS BIGINT) AS cents,
-           CAST(concat('0x', substr(md5(CAST(l_orderkey AS VARCHAR)), 1, 8)) AS BIGINT) % 100 AS bucket
-           FROM lineitem),
-         est AS (SELECT l_returnflag,
-             CAST(SUM(cents) * 20 AS BIGINT) AS est_cents,
-             CAST(COUNT(*) * 20 AS BIGINT) AS est_rows
-           FROM li WHERE bucket < 5 GROUP BY 1),
-         ex AS (SELECT l_returnflag,
-             CAST(SUM(cents) AS BIGINT) AS exact_cents,
-             CAST(COUNT(*) AS BIGINT) AS exact_rows
-           FROM li GROUP BY 1)
-         SELECT ex.l_returnflag, ex.exact_cents,
-           COALESCE(est.est_cents, 0) AS est_cents,
-           ex.exact_rows, COALESCE(est.est_rows, 0) AS est_rows,
-           CAST(abs(COALESCE(est.est_cents, 0) - ex.exact_cents) * 1000000 // ex.exact_cents AS BIGINT) AS err_ppm
-         FROM ex LEFT JOIN est USING (l_returnflag)
-         ORDER BY l_returnflag""",
-    "q_csv_quarantine" ->
-      """WITH l AS (SELECT o_orderkey, o_orderpriority,
-           CAST(round(o_totalprice * 100, 0) AS BIGINT) AS cents FROM orders)
-         SELECT CAST(o_orderkey AS BIGINT) AS src_key,
-           CAST(o_orderkey AS BIGINT) AS k,
-           o_orderpriority AS pr,
-           CASE WHEN o_orderkey % 97 = 0 THEN NULL ELSE cents END AS v,
-           (o_orderkey % 97 = 0) AS is_corrupt,
-           CASE WHEN o_orderkey % 97 = 0 THEN
-             CAST(o_orderkey AS VARCHAR) || ',' || o_orderpriority || ',x' ||
-             CAST(cents AS VARCHAR) END AS quarantine
-         FROM l ORDER BY 1""",
-    "q_partition_prune" ->
-      """WITH e AS (SELECT CAST(ts AS DATE) AS event_date,
-           CAST(round(value * 100, 0) AS BIGINT) AS c FROM events)
-         SELECT CAST(event_date AS VARCHAR) AS event_date,
-           CAST(COUNT(*) AS BIGINT) AS n, CAST(SUM(c) AS BIGINT) AS sum_cents
-         FROM e WHERE day(event_date) % 5 = 0
-         GROUP BY 1 ORDER BY 1""",
-    "q_top_ngrams" ->
-      """WITH toks AS (SELECT list_filter(regexp_split_to_array(text, '[ \t\n\r]+'), t -> t <> '') AS ts
-                       FROM documents),
-         bi AS (SELECT array_to_string(ts[i : i + 1], ' ') AS ngram
-                FROM toks, UNNEST(range(1, len(ts))) AS u(i))
-         SELECT ngram, CAST(COUNT(*) AS BIGINT) AS cnt FROM bi
-         GROUP BY ngram ORDER BY cnt DESC, ngram LIMIT 20""",
-    // equivalence classes replayed with the same truncating banding;
-    // NULL-safe grouping is GROUP BY's default in both engines.
-    "q_k_anonymity" ->
-      """SELECT c_nationkey, c_mktsegment,
-           CAST(round(c_acctbal * 100, 0) AS BIGINT) // 100000 AS bal_kband,
-           CAST(COUNT(*) AS BIGINT) AS class_size
-         FROM customer GROUP BY 1, 2, 3 HAVING COUNT(*) < 3
-         ORDER BY 1, 2, 3""",
-    "q_k_anonymity_summary" ->
-      """WITH cls AS (SELECT c_nationkey, c_mktsegment,
-             CAST(round(c_acctbal * 100, 0) AS BIGINT) // 100000 AS b,
-             COUNT(*) AS n
-           FROM customer GROUP BY 1, 2, 3)
-         SELECT CAST(COUNT(*) AS BIGINT) AS n_classes,
-           CAST(SUM(n) AS BIGINT) AS n_rows,
-           CAST(SUM(CASE WHEN n < 3 THEN 1 ELSE 0 END) AS BIGINT)
-             AS n_violating_classes,
-           CAST(SUM(CASE WHEN n < 3 THEN n ELSE 0 END) AS BIGINT)
-             AS n_rows_at_risk,
-           CAST(MIN(n) AS BIGINT) AS anonymity_level,
-           CAST(SUM(CASE WHEN n < 3 THEN n ELSE 0 END) * 1000000
-             // SUM(n) AS BIGINT) AS risk_ppm,
-           MIN(n) >= 3 AS satisfies_k
-         FROM cls""",
-    // token identity replayed with the same byte-exact whitespace
-    // split; vocabulary threshold and ppm all-integer.
-    "q_oov_rate" ->
-      """WITH occ AS (SELECT source, UNNEST(list_filter(
-             regexp_split_to_array(COALESCE(text, ''), '[ \t\n\r]+'),
-             t -> t <> '')) AS tok
-           FROM documents),
-         pairs AS (SELECT source, tok, COUNT(*) AS cnt
-           FROM occ GROUP BY 1, 2),
-         totals AS (SELECT tok, SUM(cnt) AS gcnt FROM pairs GROUP BY 1)
-         SELECT source,
-           CAST(SUM(cnt) AS BIGINT) AS n_tokens,
-           CAST(COUNT(*) AS BIGINT) AS n_distinct,
-           CAST(SUM(CASE WHEN gcnt < 5 THEN cnt ELSE 0 END) AS BIGINT)
-             AS oov_occurrences,
-           CAST(SUM(CASE WHEN gcnt < 5 THEN 1 ELSE 0 END) AS BIGINT)
-             AS n_oov_types,
-           CAST(SUM(CASE WHEN gcnt < 5 THEN cnt ELSE 0 END) * 1000000
-             // SUM(cnt) AS BIGINT) AS oov_ppm
-         FROM pairs JOIN totals USING (tok)
-         GROUP BY source ORDER BY source""",
-    "q_asof_join" ->
-      """WITH purchases AS (
-           SELECT event_id, user_id, epoch_us(ts) AS ts_us FROM events
-           WHERE event_type = 'purchase'),
-         clicks AS (
-           SELECT user_id AS c_user, epoch_us(ts) AS click_ts_us,
-                  MAX(event_id) AS click_id
-           FROM events WHERE event_type = 'click' GROUP BY 1, 2)
-         SELECT p.event_id, p.user_id, p.ts_us, c.click_id, c.click_ts_us
-         FROM purchases p ASOF LEFT JOIN clicks c
-           ON p.user_id = c.c_user AND p.ts_us >= c.click_ts_us
-         ORDER BY p.event_id""",
-    // nearest in either direction, |gap| asc then backward-first,
-    // tolerance 2h (7_200_000_000 us) nulls the match, keeps the row
-    "q_asof_nearest" ->
-      """WITH purchases AS (
-           SELECT event_id, user_id, epoch_us(ts) AS ts_us FROM events
-           WHERE event_type = 'purchase'),
-         clicks AS (
-           SELECT user_id AS c_user, epoch_us(ts) AS click_ts_us,
-                  MAX(event_id) AS click_id
-           FROM events WHERE event_type = 'click' GROUP BY 1, 2),
-         cand AS (
-           SELECT p.event_id, p.user_id, p.ts_us, c.click_id, c.click_ts_us,
-             ABS(c.click_ts_us - p.ts_us) AS gap,
-             CASE WHEN c.click_ts_us <= p.ts_us THEN 0 ELSE 1 END AS fwd,
-             ROW_NUMBER() OVER (PARTITION BY p.event_id
-               ORDER BY ABS(c.click_ts_us - p.ts_us),
-                        CASE WHEN c.click_ts_us <= p.ts_us THEN 0 ELSE 1 END)
-               AS rn
-           FROM purchases p JOIN clicks c ON p.user_id = c.c_user),
-         best AS (SELECT * FROM cand WHERE rn = 1 AND gap <= 7200000000)
-         SELECT p.event_id, p.user_id, p.ts_us,
-           b.click_id, b.click_ts_us, CAST(b.gap AS BIGINT) AS gap
-         FROM purchases p LEFT JOIN best b USING (event_id)
-         ORDER BY p.event_id""",
-    "q_asof_forward" ->
-      """WITH purchases AS (
-           SELECT event_id, user_id, epoch_us(ts) AS ts_us FROM events
-           WHERE event_type = 'purchase'),
-         clicks AS (
-           SELECT user_id AS c_user, epoch_us(ts) AS click_ts_us,
-                  MAX(event_id) AS click_id
-           FROM events WHERE event_type = 'click' GROUP BY 1, 2)
-         SELECT p.event_id, p.user_id, p.ts_us, c.click_id, c.click_ts_us
-         FROM purchases p ASOF LEFT JOIN clicks c
-           ON p.user_id = c.c_user AND p.ts_us <= c.click_ts_us
-         ORDER BY p.event_id""",
-    "q_range_pairs" ->
-      """WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS ts_us FROM events)
-         SELECT a.user_id, CAST(COUNT(*) AS BIGINT) AS n_pairs,
-           CAST(SUM(ABS(b.ts_us - a.ts_us)) AS BIGINT) AS sum_gap_us
-         FROM e a JOIN e b ON a.user_id = b.user_id
-           AND a.event_id < b.event_id
-           AND ABS(a.ts_us - b.ts_us) <= 3600000000
-         GROUP BY a.user_id ORDER BY a.user_id""",
-    "q_pivot" ->
-      """SELECT o_orderstatus,
-         COUNT(*) FILTER (WHERE o_orderpriority = '1-URGENT') AS n_urgent,
-         COUNT(*) FILTER (WHERE o_orderpriority = '2-HIGH') AS n_high,
-         COUNT(*) FILTER (WHERE o_orderpriority = '3-MEDIUM') AS n_medium,
-         COUNT(*) FILTER (WHERE o_orderpriority = '4-NOT SPECIFIED') AS n_notspec,
-         COUNT(*) FILTER (WHERE o_orderpriority = '5-LOW') AS n_low
-         FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""",
-    "q_unpivot" ->
-      """SELECT p_partkey, 'p_size' AS metric, CAST(p_size AS DOUBLE) AS value FROM part
-         UNION ALL
-         SELECT p_partkey, 'p_retailprice' AS metric, p_retailprice AS value FROM part
-         ORDER BY p_partkey, metric""",
-    "q_percentile" ->
-      """SELECT p_brand,
-         quantile_cont(CAST(ROUND(p_retailprice * 100, 0) AS BIGINT), 0.5) / 100.0 AS median_price,
-         quantile_cont(CAST(ROUND(p_retailprice * 100, 0) AS BIGINT), 0.9) / 100.0 AS p90_price
-         FROM part GROUP BY p_brand ORDER BY p_brand""",
-    "q_approx_percentile" ->
-      """SELECT p_brand,
-         quantile_cont(CAST(ROUND(p_retailprice * 100, 0) AS BIGINT), 0.5) / 100.0 AS median_price,
-         TRUE AS approx_in_band
-         FROM part GROUP BY p_brand ORDER BY p_brand""",
-    "q_volume_ship" ->
-      """SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
-         CAST(EXTRACT(year FROM CAST(l_shipdate AS DATE)) AS BIGINT) AS l_year,
-         SUM(CAST(ROUND(l_extendedprice * 100, 0) AS BIGINT) *
-             CAST(ROUND((1 - l_discount) * 100, 0) AS BIGINT)) / 10000.0 AS revenue
-         FROM lineitem
-         JOIN orders ON l_orderkey = o_orderkey
-         JOIN customer ON o_custkey = c_custkey
-         JOIN supplier ON l_suppkey = s_suppkey
-         JOIN nation n1 ON s_nationkey = n1.n_nationkey
-         JOIN nation n2 ON c_nationkey = n2.n_nationkey
-         WHERE (n1.n_name = 'NATION_1' AND n2.n_name = 'NATION_2')
-            OR (n1.n_name = 'NATION_2' AND n2.n_name = 'NATION_1')
-         GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""",
-    "q_setops" ->
-      """WITH c95 AS (SELECT DISTINCT o_custkey FROM orders
-                      WHERE EXTRACT(year FROM CAST(o_orderdate AS DATE)) = 1995),
-              c96 AS (SELECT DISTINCT o_custkey FROM orders
-                      WHERE EXTRACT(year FROM CAST(o_orderdate AS DATE)) = 1996)
-         SELECT 'both' AS tag, o_custkey FROM (FROM c95 INTERSECT FROM c96)
-         UNION ALL
-         SELECT 'only_1995' AS tag, o_custkey FROM (FROM c95 EXCEPT FROM c96)
-         ORDER BY tag, o_custkey""",
-    "q_grouping_sets" ->
-      """SELECT l_returnflag, l_linestatus, CAST(COUNT(*) AS BIGINT) AS n,
-         SUM(CAST(ROUND(l_quantity * 100, 0) AS BIGINT)) / 100.0 AS qty
-         FROM lineitem
-         GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus))
-         ORDER BY l_returnflag ASC NULLS FIRST, l_linestatus ASC NULLS FIRST""",
-    "q_window_frames" ->
-      """WITH o AS (SELECT o_custkey, o_orderkey, CAST(o_orderdate AS DATE) AS d,
-             CAST(CAST(o_orderdate AS DATE) - DATE '1995-01-01' AS BIGINT) AS days,
-             CAST(ROUND(o_totalprice * 100, 0) AS BIGINT) AS total_cents
-           FROM orders)
-         SELECT o_custkey, o_orderkey,
-           CAST(RANK() OVER wd AS BIGINT) AS rnk,
-           CAST(DENSE_RANK() OVER wd AS BIGINT) AS drnk,
-           PERCENT_RANK() OVER wd AS prnk,
-           CAST(NTILE(4) OVER wt AS BIGINT) AS quartile,
-           SUM(total_cents) OVER wm / (100.0 * COUNT(*) OVER wm) AS moving_avg,
-           SUM(total_cents) OVER wr / 100.0 AS sum_30d
-         FROM o
-         WINDOW wd AS (PARTITION BY o_custkey ORDER BY d),
-                wt AS (PARTITION BY o_custkey ORDER BY d, o_orderkey),
-                wm AS (PARTITION BY o_custkey ORDER BY d, o_orderkey
-                       ROWS BETWEEN 2 PRECEDING AND CURRENT ROW),
-                wr AS (PARTITION BY o_custkey ORDER BY days
-                       RANGE BETWEEN 30 PRECEDING AND CURRENT ROW)
-         ORDER BY o_custkey, o_orderkey""",
-    "q_date_funcs" ->
-      """SELECT o_orderkey, CAST(o_orderdate AS DATE) AS d,
-         CAST(EXTRACT(year FROM CAST(o_orderdate AS DATE)) AS BIGINT) AS yr,
-         CAST(EXTRACT(quarter FROM CAST(o_orderdate AS DATE)) AS BIGINT) AS qtr,
-         CAST(EXTRACT(month FROM CAST(o_orderdate AS DATE)) AS BIGINT) AS mo,
-         CAST(EXTRACT(day FROM CAST(o_orderdate AS DATE)) AS BIGINT) AS dom,
-         CAST(date_trunc('month', CAST(o_orderdate AS DATE)) AS DATE) AS month_start,
-         CAST(o_orderdate AS DATE) + 30 AS plus30,
-         last_day(CAST(o_orderdate AS DATE)) AS month_end,
-         CAST(CAST(o_orderdate AS DATE) - DATE '1995-01-01' AS BIGINT) AS days_since
-         FROM orders ORDER BY o_orderkey""",
-    "q_string_funcs" ->
-      """SELECT p_partkey,
-         UPPER(p_name) AS up_name,
-         LOWER(p_brand) AS lo_brand,
-         substr(p_type, 1, 3) AS type3,
-         CAST(LENGTH(p_name) AS BIGINT) AS name_len,
-         p_brand || '-' || p_type AS brand_type,
-         lpad(CAST(p_size AS VARCHAR), 3, '0') AS size_pad,
-         regexp_replace(p_name, '[aeiou]', '_', 'g') AS devowel,
-         CAST(instr(p_name, 'widget') AS BIGINT) AS widget_pos,
-         reverse(p_brand) AS rev_brand,
-         string_split(p_brand, '#')[2] AS brand_num
-         FROM part ORDER BY p_partkey""",
-    "q_cond_agg" ->
-      """SELECT l_returnflag,
-         CAST(SUM(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH') THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
-         CAST(SUM(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH') THEN 0 ELSE 1 END) AS BIGINT) AS low_line_count
-         FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-         WHERE CAST(l_shipdate AS DATE) >= DATE '1996-01-01'
-           AND CAST(l_shipdate AS DATE) <  DATE '1997-01-01'
-         GROUP BY l_returnflag ORDER BY l_returnflag""",
-    "q_promo_share" ->
-      """SELECT 100.0 * SUM(CASE WHEN p_type = 'PROMO' THEN rev_cents ELSE 0 END) / SUM(rev_cents) AS promo_share
-         FROM (SELECT p_type,
-                 CAST(ROUND(l_extendedprice * 100, 0) AS BIGINT) *
-                 CAST(ROUND((1 - l_discount) * 100, 0) AS BIGINT) AS rev_cents
-               FROM lineitem JOIN part ON l_partkey = p_partkey
-               WHERE CAST(l_shipdate AS DATE) >= DATE '1996-01-01'
-                 AND CAST(l_shipdate AS DATE) <  DATE '1996-07-01')""",
-    "q_not_in" ->
-      """SELECT c_nationkey, CAST(COUNT(*) AS BIGINT) AS n_cust FROM customer
-         WHERE c_nationkey NOT IN (SELECT s_nationkey FROM supplier WHERE s_acctbal < 0)
-         GROUP BY c_nationkey ORDER BY c_nationkey""",
-    "q_global_cust" ->
-      """SELECT substr(c_name, 10, 2) AS code, CAST(COUNT(*) AS BIGINT) AS numcust,
-         SUM(CAST(ROUND(c_acctbal * 100, 0) AS BIGINT)) / 100.0 AS totacctbal
-         FROM customer
-         WHERE c_acctbal > (SELECT SUM(CAST(ROUND(c_acctbal * 100, 0) AS BIGINT)) / (100.0 * COUNT(*))
-                            FROM customer WHERE c_acctbal > 0)
-           AND NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey
-                           AND EXTRACT(year FROM CAST(o_orderdate AS DATE)) = 1995)
-         GROUP BY 1 ORDER BY 1""",
-    "q_top_supplier" ->
-      """WITH rev AS (SELECT l_suppkey,
-           SUM(CAST(ROUND(l_extendedprice * 100, 0) AS BIGINT) *
-               CAST(ROUND((1.0 - l_discount) * 100, 0) AS BIGINT)) AS ru
-           FROM lineitem
-           WHERE CAST(l_shipdate AS DATE) >= DATE '1996-01-01'
-             AND CAST(l_shipdate AS DATE) <  DATE '1996-04-01'
-           GROUP BY l_suppkey)
-         SELECT s_suppkey, s_name, ru / 10000.0 AS total_rev
-         FROM rev JOIN supplier ON l_suppkey = s_suppkey
-         WHERE ru = (SELECT MAX(ru) FROM rev) ORDER BY s_suppkey""",
-    "q_small_qty_rev" ->
-      """WITH f AS (SELECT l.* FROM lineitem l
-           JOIN part p ON l.l_partkey = p.p_partkey AND p.p_brand = 'Brand#11'),
-         a AS (SELECT l_partkey AS ak,
-           SUM(CAST(ROUND(l_quantity * 100, 0) AS BIGINT)) / (100.0 * COUNT(*)) AS avg_qty
-           FROM f GROUP BY l_partkey)
-         SELECT SUM(CAST(ROUND(l_extendedprice * 100, 0) AS BIGINT)) / (100.0 * 7.0) AS avg_yearly
-         FROM f JOIN a ON f.l_partkey = a.ak AND f.l_quantity < 0.2 * a.avg_qty""",
-    "q_disjunctive_rev" ->
-      """SELECT SUM(CAST(ROUND(l_extendedprice * 100, 0) AS BIGINT) *
-           CAST(ROUND((1.0 - l_discount) * 100, 0) AS BIGINT)) / 10000.0 AS revenue
-         FROM lineitem JOIN part ON l_partkey = p_partkey
-         WHERE (p_brand = 'Brand#11' AND p_size BETWEEN 1 AND 15 AND l_quantity BETWEEN 1 AND 20)
-            OR (p_brand = 'Brand#12' AND p_size BETWEEN 10 AND 25 AND l_quantity BETWEEN 10 AND 30)""",
-    "q_blamed_supplier" ->
-      """WITH l1 AS (SELECT DISTINCT l_orderkey AS ok, l_suppkey AS sk FROM lineitem
-           JOIN orders ON l_orderkey = o_orderkey
-           WHERE l_returnflag = 'R' AND o_orderstatus = 'F')
-         SELECT s_name, CAST(COUNT(*) AS BIGINT) AS numwait FROM l1
-         JOIN supplier ON sk = s_suppkey
-         WHERE EXISTS (SELECT 1 FROM lineitem l2
-                       WHERE l2.l_orderkey = ok AND l2.l_suppkey <> sk)
-           AND NOT EXISTS (SELECT 1 FROM lineitem l3
-                           WHERE l3.l_orderkey = ok AND l3.l_suppkey <> sk
-                             AND l3.l_returnflag = 'R')
-         GROUP BY s_name ORDER BY numwait DESC, s_name LIMIT 20""",
-    "q_surprisal" ->
-      """WITH toks AS (SELECT doc_id, unnest(list_filter(string_split_regex(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[\x00-\x2f\x3a-\x40\x5b-\x5e\x60\x7b-\x7f]+'), t -> t <> '')) AS w
-           FROM documents),
-         c AS (SELECT w, CAST(COUNT(*) AS BIGINT) AS cnt FROM toks GROUP BY 1),
-         tot AS (SELECT length(bin(SUM(cnt))) AS bits_total FROM c)
-         SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_tokens,
-           CAST(SUM(bits_total - length(bin(cnt))) AS BIGINT) AS surprisal_sum,
-           CAST(SUM(bits_total - length(bin(cnt))) * 1000 // COUNT(*) AS BIGINT) AS surprisal_milli
-         FROM toks JOIN c USING (w), tot
-         GROUP BY doc_id ORDER BY doc_id""",
-    "q_normalize_text" ->
-      """WITH m AS (SELECT doc_id,
-           upper(substr(text, 1, 40)) || '  ' || chr(9) ||
-           regexp_replace(substr(text, 41, 40), 'a', 'a' || chr(769), 'g') ||
-           ' caf' || chr(233) || ' ANGSTROM ' || chr(8491) || ' end ' AS messy
-           FROM documents)
-         SELECT doc_id,
-           trim(regexp_replace(lower(nfc_normalize(messy)),
-             '[ \t\n\x0b\f\r]+', ' ', 'g')) AS norm,
-           trim(regexp_replace(lower(strip_accents(nfc_normalize(messy))),
-             '[ \t\n\x0b\f\r]+', ' ', 'g')) AS norm_bare
-         FROM m ORDER BY doc_id""",
-    "q_pii_redact" ->
-      """WITH raw AS (SELECT doc_id,
-           substr(text, 1, 40) || ' contact user' || CAST(doc_id AS VARCHAR) ||
-           '@mail.example.com or +1-555-' || lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0') ||
-           ' via https://site' || CAST(doc_id % 50 AS VARCHAR) ||
-           '.example.org/u?id=' || CAST(doc_id AS VARCHAR) AS raw
-           FROM documents)
-         SELECT doc_id, regexp_replace(regexp_replace(regexp_replace(raw,
-           'https?://[^ \t\n\r]+', '[URL]', 'g'),
-           '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '[EMAIL]', 'g'),
-           '\+[0-9]{1,3}-[0-9]{3}-[0-9]{4}', '[PHONE]', 'g') AS clean
-         FROM raw ORDER BY doc_id""",
-    // C88: the plant, the 13-19-digit candidate extraction, the Luhn
-    // mod-10 fold, and the fold-replace redaction all replayed.
-    "q_pii_luhn" ->
-      """WITH raw AS (SELECT doc_id,
-           CASE WHEN doc_id % 11 = 0 THEN
-             text || ' acct 4' || lpad(CAST((doc_id * 7919 + 13) % 1000000000000000 AS VARCHAR), 15, '0')
-                  || ' tx ' || lpad(CAST((doc_id * 104729 + 7) % 10000000000000 AS VARCHAR), 13, '0')
-                  || ' ref ' || CAST(doc_id % 100000 AS VARCHAR)
-           ELSE text END AS raw FROM documents),
-         c AS (SELECT doc_id, raw,
-           list_filter(regexp_extract_all(raw, '[0-9]+'),
-             d -> len(d) BETWEEN 13 AND 19) AS cands FROM raw),
-         v AS (SELECT doc_id, raw, cands,
-           list_filter(cands, d -> list_sum(list_transform(range(1, length(d) + 1),
-             i -> CASE WHEN (length(d) - i) % 2 = 1
-               THEN CASE WHEN 2 * CAST(substr(d, CAST(i AS INT), 1) AS INT) > 9
-                 THEN 2 * CAST(substr(d, CAST(i AS INT), 1) AS INT) - 9
-                 ELSE 2 * CAST(substr(d, CAST(i AS INT), 1) AS INT) END
-               ELSE CAST(substr(d, CAST(i AS INT), 1) AS INT) END)) % 10 = 0) AS valids
-           FROM c)
-         SELECT doc_id, CAST(len(cands) AS BIGINT) AS n_candidates,
-           CAST(len(valids) AS BIGINT) AS n_valid,
-           COALESCE(array_to_string(list_sort(valids), ','), '') AS valid_pans,
-           list_reduce(list_prepend(raw, valids),
-             (acc, p) -> replace(acc, p, '<PAN>')) AS redacted
-         FROM v ORDER BY doc_id""",
-    "q_domain_stats" ->
-      """WITH raw AS (SELECT doc_id,
-           substr(text, 1, 40) || ' contact user' || CAST(doc_id AS VARCHAR) ||
-           '@mail.example.com or +1-555-' || lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0') ||
-           ' via https://site' || CAST(doc_id % 50 AS VARCHAR) ||
-           '.example.org/u?id=' || CAST(doc_id AS VARCHAR) AS raw
-           FROM documents)
-         SELECT regexp_extract(raw, 'https?://([^/ \t\n\r]+)', 1) AS domain,
-           CAST(COUNT(*) AS BIGINT) AS n_docs, MIN(doc_id) AS first_doc
-         FROM raw GROUP BY domain ORDER BY domain""",
-    "q_decontaminate" ->
-      """WITH toks AS (SELECT doc_id,
-           list_filter(regexp_split_to_array(text, '[ \t\n\r]+'), t -> t <> '') AS ts
-           FROM documents),
-         g AS (SELECT doc_id, array_to_string(ts[i : i + 3], ' ') AS gram
-               FROM toks, UNNEST(range(1, len(ts) - 2)) AS u(i)),
-         bench AS (SELECT DISTINCT gram FROM g WHERE doc_id % 97 = 0),
-         hits AS (SELECT t.doc_id, CAST(COUNT(DISTINCT t.gram) AS BIGINT) AS n_hit_grams
-                  FROM (SELECT DISTINCT doc_id, gram FROM g WHERE doc_id % 97 <> 0) t
-                  JOIN bench USING (gram) GROUP BY t.doc_id)
-         SELECT d.doc_id, COALESCE(h.n_hit_grams, 0) AS n_hit_grams,
-           COALESCE(h.n_hit_grams, 0) > 0 AS contaminated
-         FROM documents d LEFT JOIN hits h USING (doc_id)
-         WHERE d.doc_id % 97 <> 0 ORDER BY d.doc_id""",
-    // C54: per-corpus-vector count of benchmark vectors within cosine
-    // 0.35; the compare uses the identical cos*1000 >= 350 form as the
-    // Spark side (C5b float-parity precedent)
-    "q_decontaminate_semantic" ->
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
-         bench AS (SELECT emb FROM e WHERE vec_id % 25 = 0),
-         train AS (SELECT vec_id, emb FROM e WHERE vec_id % 25 <> 0),
-         hits AS (SELECT t.vec_id, CAST(COUNT(*) AS BIGINT) AS n_bench_hits
-           FROM train t JOIN bench b
-             ON list_cosine_similarity(t.emb, b.emb) * 1000 >= 350
-           GROUP BY 1)
-         SELECT t.vec_id, COALESCE(h.n_bench_hits, 0) AS n_bench_hits,
-           COALESCE(h.n_bench_hits, 0) > 0 AS contaminated
-         FROM train t LEFT JOIN hits h USING (vec_id) ORDER BY vec_id""",
-    // same oracle as q_decontaminate: the bloom pre-filter must be
-    // output-invisible (false positives die in the exact confirm join)
-    "q_decontaminate_bloom" ->
-      """WITH toks AS (SELECT doc_id,
-           list_filter(regexp_split_to_array(text, '[ \t\n\r]+'), t -> t <> '') AS ts
-           FROM documents),
-         g AS (SELECT doc_id, array_to_string(ts[i : i + 3], ' ') AS gram
-               FROM toks, UNNEST(range(1, len(ts) - 2)) AS u(i)),
-         bench AS (SELECT DISTINCT gram FROM g WHERE doc_id % 97 = 0),
-         hits AS (SELECT t.doc_id, CAST(COUNT(DISTINCT t.gram) AS BIGINT) AS n_hit_grams
-                  FROM (SELECT DISTINCT doc_id, gram FROM g WHERE doc_id % 97 <> 0) t
-                  JOIN bench USING (gram) GROUP BY t.doc_id)
-         SELECT d.doc_id, COALESCE(h.n_hit_grams, 0) AS n_hit_grams,
-           COALESCE(h.n_hit_grams, 0) > 0 AS contaminated
-         FROM documents d LEFT JOIN hits h USING (doc_id)
-         WHERE d.doc_id % 97 <> 0 ORDER BY d.doc_id""",
-    // span replay: 1-based gram start i covers tokens i..i+3; kept
-    // tokens rebuild in order; untouched docs keep their RAW text
-    "q_decontaminate_spans" ->
-      """WITH tr AS (SELECT doc_id, text,
-             list_filter(regexp_split_to_array(text, '[ \t\n\r]+'), t -> t <> '') AS ts
-           FROM documents WHERE doc_id % 97 <> 0),
-         be AS (SELECT list_filter(regexp_split_to_array(text, '[ \t\n\r]+'), t -> t <> '') AS ts
-           FROM documents WHERE doc_id % 97 = 0),
-         bg AS (SELECT DISTINCT array_to_string(ts[i : i + 3], ' ') AS gram
-           FROM be, UNNEST(range(1, len(ts) - 2)) AS u(i)),
-         hits AS (SELECT t.doc_id, u.i FROM tr t, UNNEST(range(1, len(ts) - 2)) AS u(i)
-           WHERE array_to_string(ts[i : i + 3], ' ') IN (SELECT gram FROM bg)),
-         cov AS (SELECT DISTINCT doc_id, i + j AS k FROM hits, UNNEST(range(0, 4)) AS v(j)),
-         kept AS (SELECT t.doc_id, string_agg(t.ts[u.k], ' ' ORDER BY u.k) AS clean_text,
-             CAST(COUNT(*) AS BIGINT) AS n_kept
-           FROM tr t, UNNEST(range(1, len(ts) + 1)) AS u(k)
-           WHERE t.doc_id IN (SELECT doc_id FROM hits)
-             AND NOT EXISTS (SELECT 1 FROM cov c WHERE c.doc_id = t.doc_id AND c.k = u.k)
-           GROUP BY t.doc_id)
-         SELECT t.doc_id,
-           CASE WHEN t.doc_id IN (SELECT doc_id FROM hits)
-                THEN COALESCE(k.clean_text, '') ELSE t.text END AS clean_text,
-           CAST(CASE WHEN t.doc_id IN (SELECT doc_id FROM hits)
-                THEN len(t.ts) - COALESCE(k.n_kept, 0) ELSE 0 END AS BIGINT) AS n_removed
-         FROM tr t LEFT JOIN kept k USING (doc_id) ORDER BY t.doc_id""",
-    "q_dup_spans" ->
-      """WITH d AS (SELECT doc_id, text,
-             list_filter(regexp_split_to_array(text, '[ \t\n\r]+'), t -> t <> '') AS ts
-           FROM documents),
-         g AS (SELECT doc_id, i, array_to_string(ts[i : i + 4], ' ') AS gram
-           FROM d, UNNEST(range(1, len(ts) - 3)) AS u(i)),
-         hot AS (SELECT gram FROM g GROUP BY gram HAVING COUNT(*) >= 2),
-         occ AS (SELECT g.*, row_number() OVER (
-             PARTITION BY gram ORDER BY doc_id, i) AS rn
-           FROM g WHERE gram IN (SELECT gram FROM hot)),
-         cov AS (SELECT DISTINCT doc_id, i + j AS k
-           FROM occ, UNNEST(range(0, 5)) AS v(j) WHERE rn > 1),
-         kept AS (SELECT t.doc_id, string_agg(t.ts[u.k], ' ' ORDER BY u.k) AS clean_text,
-             CAST(COUNT(*) AS BIGINT) AS n_kept
-           FROM d t, UNNEST(range(1, len(ts) + 1)) AS u(k)
-           WHERE t.doc_id IN (SELECT doc_id FROM cov)
-             AND NOT EXISTS (SELECT 1 FROM cov c WHERE c.doc_id = t.doc_id AND c.k = u.k)
-           GROUP BY t.doc_id)
-         SELECT t.doc_id,
-           CASE WHEN t.doc_id IN (SELECT doc_id FROM cov)
-                THEN COALESCE(k.clean_text, '') ELSE t.text END AS clean_text,
-           CAST(CASE WHEN t.doc_id IN (SELECT doc_id FROM cov)
-                THEN len(t.ts) - COALESCE(k.n_kept, 0) ELSE 0 END AS BIGINT) AS n_removed
-         FROM d t LEFT JOIN kept k USING (doc_id) ORDER BY t.doc_id""",
-    "q_quota_sample" ->
-      """SELECT doc_id, lang FROM (
-           SELECT doc_id, lang, row_number() OVER (
-             PARTITION BY lang ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS rn
-           FROM documents)
-         WHERE rn <= 30 ORDER BY lang, doc_id""",
-    "q_pack_sequences" ->
-      """WITH t AS (SELECT source, doc_id,
-           CAST(len(list_filter(regexp_split_to_array(text, '[ \t\n\r]+'), x -> x <> '')) AS BIGINT) AS n_tok
-           FROM documents),
-         c AS (SELECT *, COALESCE(SUM(n_tok) OVER (PARTITION BY source ORDER BY doc_id
-           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS prev FROM t)
-         SELECT source, doc_id, n_tok, CAST(prev // 512 AS BIGINT) AS chunk_id,
-           CAST(prev % 512 AS BIGINT) AS chunk_off
-         FROM c ORDER BY source, doc_id""",
-    "q_pack_materialize" ->
-      """WITH t AS (SELECT source, doc_id, text,
-           CAST(len(list_filter(regexp_split_to_array(text, '[ \t\n\r]+'), x -> x <> '')) AS BIGINT) AS n_tok
-           FROM documents),
-         c AS (SELECT *, COALESCE(SUM(n_tok) OVER (PARTITION BY source ORDER BY doc_id
-           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) // 512 AS chunk_id FROM t)
-         SELECT source, CAST(chunk_id AS BIGINT) AS chunk_id,
-           CAST(COUNT(*) AS BIGINT) AS n_docs,
-           CAST(SUM(n_tok) AS BIGINT) AS chunk_tok,
-           md5(string_agg(text, ' ' ORDER BY doc_id)) AS text_md5
-         FROM c GROUP BY 1, 2 ORDER BY source, chunk_id""",
-    "q_tfidf" ->
-      """WITH toks AS (SELECT doc_id,
-           unnest(list_filter(regexp_split_to_array(text, '[ \t\n\r]+'), t -> t <> '')) AS term
-           FROM documents),
-         tf AS (SELECT doc_id, term, CAST(COUNT(*) AS BIGINT) AS tf FROM toks GROUP BY 1, 2),
-         df AS (SELECT term, CAST(COUNT(*) AS BIGINT) AS df FROM tf GROUP BY 1),
-         n AS (SELECT CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS n FROM tf),
-         scored AS (SELECT doc_id, term, CAST(tf.tf * n.n AS DOUBLE) / df.df AS score
-                    FROM tf JOIN df USING (term) CROSS JOIN n),
-         ranked AS (SELECT *, CAST(row_number() OVER (
-           PARTITION BY doc_id ORDER BY score DESC, term) AS BIGINT) AS rnk FROM scored)
-         SELECT doc_id, rnk, term, score FROM ranked WHERE rnk <= 3
-         ORDER BY doc_id, rnk""",
-    "q_bm25" ->
-      """WITH toks AS (SELECT doc_id,
-           unnest(list_filter(regexp_split_to_array(text, '[ \t\n\r]+'), t -> t <> '')) AS term
-           FROM documents),
-         tf AS (SELECT doc_id, term, CAST(COUNT(*) AS BIGINT) AS tf FROM toks GROUP BY 1, 2),
-         dl AS (SELECT doc_id, CAST(SUM(tf) AS BIGINT) AS dl FROM tf GROUP BY 1),
-         df AS (SELECT term, CAST(COUNT(*) AS BIGINT) AS df FROM tf GROUP BY 1),
-         g AS (SELECT CAST(COUNT(*) AS BIGINT) AS n,
-                      CAST(SUM(dl) AS BIGINT) AS s FROM dl),
-         sc AS (SELECT tf.doc_id, tf.term,
-             (CAST(1000000 AS HUGEINT) * (2 * g.n - 2 * df.df + 1) * 22 * tf.tf * g.s)
-               // ((2 * df.df + 1) * (CAST(10 AS HUGEINT) * g.s * tf.tf + 3 * g.s + 9 * dl.dl * g.n))
-               AS score_ppm
-           FROM tf JOIN dl USING (doc_id) JOIN df USING (term) CROSS JOIN g)
-         SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_terms,
-           CAST(SUM(score_ppm) AS BIGINT) AS score_ppm
-         FROM sc WHERE term IN ('vector', 'stream', 'window')
-         GROUP BY doc_id ORDER BY score_ppm DESC, doc_id LIMIT 10""",
-    "q_length_hist" ->
-      """SELECT LEAST(n_chars // 200, 9) AS bucket, CAST(COUNT(*) AS BIGINT) AS n_docs,
-         MIN(n_chars) AS min_chars, MAX(n_chars) AS max_chars
-         FROM documents GROUP BY 1 ORDER BY bucket""",
-    "q_funnel" ->
-      """WITH e AS (SELECT user_id, event_type, epoch_us(ts) AS ts_us FROM events),
-         v AS (SELECT user_id, MIN(ts_us) AS v_us FROM e WHERE event_type = 'view' GROUP BY 1),
-         c AS (SELECT e.user_id, MIN(ts_us) AS c_us FROM e JOIN v USING (user_id)
-               WHERE event_type = 'click' AND ts_us >= v_us
-                 AND ts_us <= v_us + 86400000000 GROUP BY 1),
-         p AS (SELECT e.user_id, MIN(ts_us) AS p_us FROM e JOIN c USING (user_id)
-               WHERE event_type = 'purchase' AND ts_us >= c_us
-                 AND ts_us <= c_us + 86400000000 GROUP BY 1)
-         SELECT CASE WHEN p_us IS NOT NULL THEN 3 WHEN c_us IS NOT NULL THEN 2
-                     WHEN v_us IS NOT NULL THEN 1 ELSE 0 END AS stage,
-                CAST(COUNT(*) AS BIGINT) AS n_users
-         FROM (SELECT DISTINCT user_id FROM e) u
-         LEFT JOIN v USING (user_id) LEFT JOIN c USING (user_id) LEFT JOIN p USING (user_id)
-         GROUP BY 1 ORDER BY stage""",
-    "q_retention" ->
-      """WITH e AS (SELECT DISTINCT user_id, epoch_us(ts) // 604800000000 AS wk FROM events),
-         cohort AS (SELECT user_id, MIN(wk) AS cohort_wk FROM e GROUP BY 1)
-         SELECT cohort_wk, wk - cohort_wk AS wk_offset,
-                CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n_users
-         FROM e JOIN cohort USING (user_id)
-         GROUP BY 1, 2 ORDER BY cohort_wk, wk_offset""",
-    "q_source_quality" ->
-      """WITH d AS (SELECT source, CAST(LENGTH(text) AS BIGINT) AS chars,
-           CAST(len(regexp_extract_all(text, '[^A-Za-z0-9 \t\n\r]')) AS BIGINT) AS punct,
-           CAST(len(regexp_extract_all(text, '[0-9]')) AS BIGINT) AS digits,
-           CAST(len(list_filter(regexp_split_to_array(text, '[ \t\n\r]+'), t -> t <> '')) AS BIGINT) AS toks
-           FROM documents)
-         SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs, CAST(SUM(chars) AS BIGINT) AS sum_chars,
-           CAST(SUM(punct) * 1000000 // SUM(chars) AS BIGINT) AS punct_ppm,
-           CAST(SUM(digits) * 1000000 // SUM(chars) AS BIGINT) AS digit_ppm,
-           CAST(SUM(toks) * 1000 // COUNT(*) AS BIGINT) AS toks_per_kdoc
-         FROM d GROUP BY source ORDER BY source""",
-    "q_priority_count" ->
-      """SELECT o_orderpriority, CAST(COUNT(*) AS BIGINT) AS order_count
-         FROM orders
-         WHERE CAST(o_orderdate AS DATE) >= DATE '1996-01-01'
-           AND CAST(o_orderdate AS DATE) <  DATE '1996-04-01'
-           AND EXISTS (SELECT 1 FROM lineitem
-                       WHERE l_orderkey = o_orderkey
-                         AND CAST(l_shipdate AS DATE) > CAST(o_orderdate AS DATE) + INTERVAL 60 DAY)
-         GROUP BY 1 ORDER BY 1""",
-    "q_market_share" ->
-      """WITH li AS (SELECT l_suppkey, l_orderkey,
-           CAST(ROUND(l_extendedprice * 100, 0) AS BIGINT) *
-           CAST(ROUND((1 - l_discount) * 100, 0) AS BIGINT) AS vol
-           FROM lineitem)
-         SELECT CAST(year(o_orderdate) AS BIGINT) AS o_year,
-           CAST(SUM(CASE WHEN n2.n_name = 'NATION_3' THEN vol ELSE 0 END) AS DOUBLE) / SUM(vol) AS mkt_share
-         FROM li JOIN orders ON l_orderkey = o_orderkey
-         JOIN customer ON o_custkey = c_custkey
-         JOIN nation n1 ON c_nationkey = n1.n_nationkey AND n1.n_regionkey = 2
-         JOIN supplier ON l_suppkey = s_suppkey
-         JOIN nation n2 ON supplier.s_nationkey = n2.n_nationkey
-         WHERE CAST(o_orderdate AS DATE) >= DATE '1996-01-01'
-           AND CAST(o_orderdate AS DATE) <  DATE '1998-01-01'
-         GROUP BY 1 ORDER BY 1""",
-    "q_product_profit" ->
-      """SELECT n_name AS nation, CAST(year(o_orderdate) AS BIGINT) AS o_year,
-           SUM(CAST(ROUND(l_extendedprice * 100, 0) AS BIGINT) *
-               CAST(ROUND((1 - l_discount) * 100, 0) AS BIGINT) * 10 -
-               CAST(ROUND(p_retailprice * 100, 0) AS BIGINT) *
-               CAST(ROUND(l_quantity * 100, 0) AS BIGINT) * 5) / 100000.0 AS profit
-         FROM lineitem
-         JOIN part ON l_partkey = p_partkey AND contains(p_name, 'widget')
-         JOIN supplier ON l_suppkey = s_suppkey
-         JOIN nation ON s_nationkey = n_nationkey
-         JOIN orders ON l_orderkey = o_orderkey
-         GROUP BY 1, 2 ORDER BY nation, o_year DESC""",
-    "q_returned_items" ->
-      """SELECT c_custkey, c_name, c_acctbal, n_name,
-           SUM(CAST(ROUND(l_extendedprice * 100, 0) AS BIGINT) *
-               CAST(ROUND((1 - l_discount) * 100, 0) AS BIGINT)) / 10000.0 AS revenue
-         FROM lineitem
-         JOIN orders ON l_orderkey = o_orderkey
-         JOIN customer ON o_custkey = c_custkey
-         JOIN nation ON c_nationkey = n_nationkey
-         WHERE l_returnflag = 'R'
-           AND CAST(o_orderdate AS DATE) >= DATE '1996-01-01'
-           AND CAST(o_orderdate AS DATE) <  DATE '1996-04-01'
-         GROUP BY 1, 2, 3, 4
-         ORDER BY revenue DESC, c_custkey LIMIT 20""",
-    "q_important_parts" ->
-      """WITH li AS (SELECT l_partkey, CAST(ROUND(l_extendedprice * 100, 0) AS BIGINT) AS val_c
-           FROM lineitem
-           WHERE l_suppkey IN (SELECT s_suppkey FROM supplier WHERE s_nationkey IN (7, 19)))
-         SELECT l_partkey AS p_partkey, SUM(val_c) / 100.0 AS value
-         FROM li GROUP BY 1
-         HAVING SUM(val_c) * 1000 > (SELECT SUM(val_c) FROM li)
-         ORDER BY value DESC, p_partkey""",
-    "q_excess_suppliers" ->
-      """WITH li AS (SELECT l_partkey, l_suppkey, CAST(ROUND(l_quantity * 100, 0) AS BIGINT) AS qty_c
-           FROM lineitem
-           WHERE CAST(l_shipdate AS DATE) >= DATE '1996-01-01'
-             AND CAST(l_shipdate AS DATE) <  DATE '1997-01-01'
-             AND l_partkey IN (SELECT p_partkey FROM part WHERE p_name LIKE 'small%')),
-         g AS (SELECT l_partkey, l_suppkey, SUM(qty_c) AS supp_qty_c FROM li GROUP BY 1, 2),
-         w AS (SELECT *, SUM(supp_qty_c) OVER (PARTITION BY l_partkey) AS part_qty_c FROM g)
-         SELECT s_suppkey, s_name, s_acctbal FROM supplier
-         WHERE s_suppkey IN (SELECT DISTINCT l_suppkey FROM w WHERE supp_qty_c * 10 > part_qty_c * 3)
-         ORDER BY s_suppkey""",
-    "q_repetition" ->
-      """WITH d AS (SELECT source,
-           list_filter(regexp_split_to_array(text, '[ \t\n\r]+'), x -> x <> '') AS t
-           FROM documents),
-         g AS (SELECT source,
-           CAST(len(t) AS BIGINT) AS n_tok,
-           CAST(len(list_distinct(t)) AS BIGINT) AS n_utok,
-           CAST(greatest(len(t) - 1, 0) AS BIGINT) AS n_2g,
-           CAST(len(list_distinct(list_transform(range(1, len(t)), i -> t[i] || ' ' || t[i+1]))) AS BIGINT) AS n_u2g
-           FROM d)
-         SELECT source, CAST(SUM(n_tok) AS BIGINT) AS sum_tok,
-           CAST(SUM(n_utok) * 1000000 // SUM(n_tok) AS BIGINT) AS uniq_tok_ppm,
-           CAST(SUM(n_u2g) * 1000000 // SUM(n_2g) AS BIGINT) AS uniq_2g_ppm
-         FROM g GROUP BY source ORDER BY source""",
-    // C89: every doc's three top-n-gram char ppms (count × gram chars
-    // × 1e6 // text chars, lex-smallest gram on count ties) and the
-    // Gopher verdict recomputed from the raw text.
-    "q_gopher_filter" ->
-      """WITH raw AS (SELECT doc_id, source,
-           CASE WHEN doc_id % 9 = 0 THEN text || repeat(' buy cheap now', 12)
-             ELSE text END AS raw FROM documents),
-         toks AS MATERIALIZED (SELECT doc_id, source, length(raw) AS nc,
-           list_filter(string_split_regex(raw, '[ \t\n\r]+'), t -> t <> '') AS ts
-           FROM raw),
-         g2 AS (SELECT doc_id, nc,
-             array_to_string(list_slice(ts, CAST(u.i AS INT), CAST(u.i AS INT) + 1), ' ') AS gram
-           FROM toks, UNNEST(range(1, len(ts))) AS u(i)),
-         g3 AS (SELECT doc_id, nc,
-             array_to_string(list_slice(ts, CAST(u.i AS INT), CAST(u.i AS INT) + 2), ' ') AS gram
-           FROM toks, UNNEST(range(1, len(ts) - 1)) AS u(i)),
-         g4 AS (SELECT doc_id, nc,
-             array_to_string(list_slice(ts, CAST(u.i AS INT), CAST(u.i AS INT) + 3), ' ') AS gram
-           FROM toks, UNNEST(range(1, len(ts) - 2)) AS u(i)),
-         c2 AS (SELECT doc_id, nc, gram, COUNT(*) AS c FROM g2 GROUP BY 1, 2, 3),
-         c3 AS (SELECT doc_id, nc, gram, COUNT(*) AS c FROM g3 GROUP BY 1, 2, 3),
-         c4 AS (SELECT doc_id, nc, gram, COUNT(*) AS c FROM g4 GROUP BY 1, 2, 3),
-         b2 AS (SELECT doc_id, CAST(c * length(gram) * 1000000 // nc AS BIGINT) AS ppm FROM c2
-           QUALIFY row_number() OVER (PARTITION BY doc_id ORDER BY c DESC, gram) = 1),
-         b3 AS (SELECT doc_id, CAST(c * length(gram) * 1000000 // nc AS BIGINT) AS ppm FROM c3
-           QUALIFY row_number() OVER (PARTITION BY doc_id ORDER BY c DESC, gram) = 1),
-         b4 AS (SELECT doc_id, CAST(c * length(gram) * 1000000 // nc AS BIGINT) AS ppm FROM c4
-           QUALIFY row_number() OVER (PARTITION BY doc_id ORDER BY c DESC, gram) = 1)
-         SELECT r.doc_id, r.source,
-           COALESCE(b2.ppm, 0) AS top2_ppm,
-           COALESCE(b3.ppm, 0) AS top3_ppm,
-           COALESCE(b4.ppm, 0) AS top4_ppm,
-           (COALESCE(b2.ppm, 0) <= 200000 AND COALESCE(b3.ppm, 0) <= 180000
-             AND COALESCE(b4.ppm, 0) <= 160000) AS pass
-         FROM raw r LEFT JOIN b2 USING (doc_id) LEFT JOIN b3 USING (doc_id)
-           LEFT JOIN b4 USING (doc_id)
-         ORDER BY doc_id""",
-    // C90: tokenizer, FNV-1a, 2^16 bucketing, the mix64 seeded weight,
-    // and the occurrence-weighted per-doc score replayed set-wise
-    // (weights per DISTINCT bucket), then verdict + per-source rollup.
-    "q_quality_classifier" ->
-      ("""WITH reps AS MATERIALIZED (SELECT doc_id AS rep_id, text FROM documents),
-         """ + sqlTokenCtes + """
-         occ AS MATERIALIZED (SELECT t.rep_id,
-             CAST(CAST(d.th AS UBIGINT) % 65536 AS HUGEINT) AS b
-           FROM tocc t JOIN dh d USING (tok)),
-         bk AS (SELECT DISTINCT b FROM occ),
-         bm AS MATERIALIZED (SELECT b, """ +
-        sqlMixCols(sqlXor64("b", "1442695040888963407"), "m") + """
-           FROM bk),
-         bw AS (SELECT b, CAST(mo % 2001 - 1000 AS BIGINT) AS w FROM bm),
-         sc AS (SELECT r.rep_id, CAST(COALESCE(SUM(x.w), 0) AS BIGINT) AS score
-           FROM reps r LEFT JOIN (SELECT o.rep_id, bw.w FROM occ o JOIN bw USING (b)) x
-             ON r.rep_id = x.rep_id GROUP BY 1)
-         SELECT d.source, CAST(COUNT(*) AS BIGINT) AS n_docs,
-           CAST(SUM(CASE WHEN s.score >= 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_keep,
-           CAST(SUM(s.score) AS BIGINT) AS sum_score,
-           CAST(MIN(s.score) AS BIGINT) AS min_score,
-           CAST(MAX(s.score) AS BIGINT) AS max_score
-         FROM documents d JOIN sc s ON d.doc_id = s.rep_id
-         GROUP BY d.source ORDER BY d.source"""),
-    "q_hash_split" ->
-      """WITH d AS (SELECT source,
-           CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT) % 100 AS bucket
-           FROM documents),
-         s AS (SELECT source, bucket,
-           CASE WHEN bucket < 90 THEN 'train' WHEN bucket < 95 THEN 'val' ELSE 'test' END AS split
-           FROM d)
-         SELECT split, CAST(COUNT(*) AS BIGINT) AS n_docs,
-           CAST(COUNT(DISTINCT source) AS BIGINT) AS n_sources,
-           CAST(MIN(bucket) AS BIGINT) AS min_bucket, CAST(MAX(bucket) AS BIGINT) AS max_bucket
-         FROM s GROUP BY 1 ORDER BY 1""",
-    "q_json_extract" ->
-      """SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_events,
-           CAST(SUM(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS BIGINT) AS sum_k,
-           CAST(MIN(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS BIGINT) AS min_k,
-           CAST(MAX(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS BIGINT) AS max_k
-         FROM events GROUP BY 1 ORDER BY 1""",
-    "q_bloom_semi_join" ->
-      """SELECT l_returnflag, l_linestatus, CAST(COUNT(*) AS BIGINT) AS n_items,
-           CAST(SUM(CAST(l_quantity AS BIGINT)) AS BIGINT) AS sum_qty
-         FROM lineitem
-         WHERE l_partkey IN (SELECT p_partkey FROM part WHERE p_type LIKE 'PROMO%')
-         GROUP BY 1, 2 ORDER BY 1, 2""",
-    "q_zorder_key" ->
-      """WITH s0 AS (SELECT CAST(p_partkey AS BIGINT) AS k,
-             CAST(p_partkey % 65536 AS BIGINT) AS x, CAST(p_size AS BIGINT) AS y FROM part),
-         s1 AS (SELECT k, (x | (x << 8)) & 16711935 AS x, (y | (y << 8)) & 16711935 AS y FROM s0),
-         s2 AS (SELECT k, (x | (x << 4)) & 252645135 AS x, (y | (y << 4)) & 252645135 AS y FROM s1),
-         s3 AS (SELECT k, (x | (x << 2)) & 858993459 AS x, (y | (y << 2)) & 858993459 AS y FROM s2),
-         s4 AS (SELECT k, (x | (x << 1)) & 1431655765 AS x, (y | (y << 1)) & 1431655765 AS y FROM s3)
-         SELECT k AS p_partkey, CAST(x | (y << 1) AS BIGINT) AS zval FROM s4 ORDER BY p_partkey""",
-    "q_cms_topk" ->
-      """WITH e AS (SELECT l_partkey, CAST(COUNT(*) AS BIGINT) AS exact_cnt FROM lineitem
-           GROUP BY 1 ORDER BY exact_cnt DESC, l_partkey LIMIT 20)
-         SELECT l_partkey, exact_cnt, TRUE AS never_undercounts, TRUE AS within_eps
-         FROM e ORDER BY l_partkey""",
-    "q_incremental_agg" ->
-      """SELECT o_orderpriority, CAST(COUNT(*) AS BIGINT) AS n_orders,
-           CAST(SUM(CAST(ROUND(o_totalprice * 100, 0) AS BIGINT)) AS BIGINT) AS sum_total_c,
-           CAST(MAX(CAST(ROUND(o_totalprice * 100, 0) AS BIGINT)) AS BIGINT) AS max_total_c
-         FROM orders GROUP BY 1 ORDER BY 1""",
-    "q_incremental_quantile" ->
-      """WITH c AS (SELECT CAST(round(o_totalprice * 100, 0) AS BIGINT) AS c FROM orders),
-         h AS (SELECT c // 10000 AS bucket, CAST(COUNT(*) AS BIGINT) AS cnt FROM c GROUP BY 1),
-         t AS (SELECT CAST(SUM(cnt) AS BIGINT) AS n_rows FROM h),
-         k AS (SELECT MIN(bucket) AS qb FROM
-             (SELECT bucket, SUM(cnt) OVER (ORDER BY bucket) AS cum FROM h), t
-           WHERE cum >= GREATEST(1, CAST(ceil(0.5 * n_rows) AS BIGINT)))
-         SELECT t.n_rows, CAST(k.qb * 10000 AS BIGINT) AS q_lo, TRUE AS band_ok
-         FROM t, k""",
-    "q_profile" ->
-      """WITH s AS (
-           SELECT 'c_custkey' AS col_name, COUNT(*) AS n_rows, COUNT(c_custkey) AS n_nonnull,
-             COUNT(DISTINCT c_custkey) AS n_distinct,
-             CAST(MIN(c_custkey) AS VARCHAR) AS min_str, CAST(MAX(c_custkey) AS VARCHAR) AS max_str
-           FROM customer
-           UNION ALL
-           SELECT 'c_name', COUNT(*), COUNT(c_name), COUNT(DISTINCT c_name),
-             CAST(MIN(c_name) AS VARCHAR), CAST(MAX(c_name) AS VARCHAR) FROM customer
-           UNION ALL
-           SELECT 'c_nationkey', COUNT(*), COUNT(c_nationkey), COUNT(DISTINCT c_nationkey),
-             CAST(MIN(c_nationkey) AS VARCHAR), CAST(MAX(c_nationkey) AS VARCHAR) FROM customer
-           UNION ALL
-           SELECT 'c_mktsegment', COUNT(*), COUNT(c_mktsegment), COUNT(DISTINCT c_mktsegment),
-             CAST(MIN(c_mktsegment) AS VARCHAR), CAST(MAX(c_mktsegment) AS VARCHAR) FROM customer)
-         SELECT col_name, CAST(n_rows AS BIGINT) AS n_rows, CAST(n_nonnull AS BIGINT) AS n_nonnull,
-           CAST(n_distinct AS BIGINT) AS n_distinct, min_str, max_str
-         FROM s ORDER BY col_name""",
-    "q_stratified_sample" ->
-      """WITH d AS (SELECT lang,
-           CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT) % 10000 AS bucket
-           FROM documents),
-         k AS (SELECT lang, bucket FROM d
-           WHERE bucket < CASE lang WHEN 'en' THEN 5000 WHEN 'es' THEN 2500 WHEN 'zh' THEN 0
-                                    ELSE 1000 END)
-         SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_kept, CAST(MAX(bucket) AS BIGINT) AS max_bucket
-         FROM k GROUP BY 1 ORDER BY 1""",
-    "q_weighted_sample" ->
-      """WITH p AS (SELECT o_orderpriority, CAST(o_orderkey AS BIGINT) AS o_orderkey,
-           CAST(round(o_totalprice * 100, 0) AS BIGINT) AS w_cents,
-           (CAST(concat('0x', substr(md5(CAST(o_orderkey AS VARCHAR)), 1, 8)) AS BIGINT) + 0.5)
-             / 4294967296.0 AS u
-           FROM orders),
-         r AS (SELECT o_orderpriority, o_orderkey, w_cents,
-           ROW_NUMBER() OVER (PARTITION BY o_orderpriority
-             ORDER BY u / CAST(w_cents AS DOUBLE), o_orderkey) AS rn
-           FROM p WHERE w_cents > 0)
-         SELECT o_orderpriority, o_orderkey, w_cents
-         FROM r WHERE rn <= 100 ORDER BY 1, 2""",
-    "q_cc_sessions" ->
-      """WITH e AS (SELECT event_id, user_id, epoch_us(ts) AS ts_us FROM events),
-         lagged AS (
-           SELECT *, LAG(ts_us) OVER (PARTITION BY user_id ORDER BY ts_us, event_id) AS prev_us FROM e),
-         flagged AS (
-           SELECT *, CASE WHEN prev_us IS NULL OR ts_us - prev_us > 1800000000 THEN 1 ELSE 0 END AS new_sess FROM lagged),
-         sess AS (
-           SELECT *, SUM(new_sess) OVER (PARTITION BY user_id ORDER BY ts_us, event_id
-             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_id FROM flagged)
-         SELECT event_id, MIN(event_id) OVER (PARTITION BY user_id, session_id) AS session_rep
-         FROM sess ORDER BY event_id""",
-    "q_dedup_jaccard" ->
-      """WITH toks AS (SELECT doc_id,
-           list_filter(string_split_regex(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[\x00-\x2f\x3a-\x40\x5b-\x5e\x60\x7b-\x7f]+'), t -> t <> '') AS ts
-           FROM documents),
-         g AS (SELECT doc_id, list(DISTINCT array_to_string(ts[i : i + 2], ' ')) AS sh
-               FROM toks, UNNEST(range(1, len(ts) - 1)) AS u(i) GROUP BY doc_id)
-         SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-           len(list_intersect(a.sh, b.sh)) * 1.0 /
-           len(list_distinct(list_concat(a.sh, b.sh))) AS jaccard
-         FROM g a JOIN g b ON b.doc_id = a.doc_id + 1 ORDER BY id_a""",
-    "q_dedup_jaccard_exact" ->
-      """WITH toks AS (SELECT doc_id,
-           list_filter(string_split_regex(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[\x00-\x2f\x3a-\x40\x5b-\x5e\x60\x7b-\x7f]+'), t -> t <> '') AS ts
-           FROM documents),
-         g AS (SELECT doc_id, list(DISTINCT array_to_string(ts[i : i + 2], ' ')) AS sh
-               FROM toks, UNNEST(range(1, len(ts) - 1)) AS u(i) GROUP BY doc_id),
-         d AS (SELECT DISTINCT a.doc_id AS id FROM g a JOIN g b ON b.doc_id < a.doc_id
-               AND len(list_intersect(a.sh, b.sh)) * 1.0 /
-                   len(list_distinct(list_concat(a.sh, b.sh))) >= 0.8)
-         SELECT doc_id FROM documents ANTI JOIN d ON doc_id = id ORDER BY doc_id""",
-    // full keep-table replay of the LAYERED minhash dedup (exact text
-    // collapse first, then >= 0.8-Jaccard pairs among the reps) via
-    // brute-force shingle STRINGS — valid because the banded LSH's
-    // verify stage confirms exact Jaccard before any drop, so its
-    // keep-table equals the exact relation whenever recall holds;
-    // a hash mismatch here IS a recall regression, which is exactly
-    // what the row should catch (the standing _sound gate still
-    // hedges soundness independently)
-    "q_dedup_minhash" ->
-      """WITH keyed AS (SELECT doc_id, COALESCE(text, '') AS text FROM documents),
-         reps AS (SELECT text, MIN(doc_id) AS rep_id FROM keyed GROUP BY text),
-         toks AS (SELECT rep_id,
-           list_filter(string_split_regex(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[\x00-\x2f\x3a-\x40\x5b-\x5e\x60\x7b-\x7f]+'), t -> t <> '') AS ts
-           FROM reps),
-         g AS (SELECT rep_id, list(DISTINCT array_to_string(ts[i : i + 2], ' ')) AS sh
-               FROM toks, UNNEST(range(1, len(ts) - 1)) AS u(i) GROUP BY rep_id),
-         dead AS (SELECT b.rep_id AS dead_rep, CAST(COUNT(*) AS BIGINT) AS n_near
-               FROM g a JOIN g b ON a.rep_id < b.rep_id
-               AND len(list_intersect(a.sh, b.sh)) * 1.0 /
-                   len(list_distinct(list_concat(a.sh, b.sh))) >= 0.8
-               GROUP BY 1)
-         SELECT k.doc_id,
-           CAST(CASE WHEN k.doc_id <> r.rep_id THEN 1 ELSE 0 END
-             + COALESCE(d.n_near, 0) AS BIGINT) AS n_dups_smaller,
-           (k.doc_id = r.rep_id AND d.n_near IS NULL) AS keep
-         FROM keyed k JOIN reps r ON k.text = r.text
-         LEFT JOIN dead d ON r.rep_id = d.dead_rep
-         ORDER BY doc_id""",
-    // FULL keep-table replay of the layered SimHash dedup: exact text
-    // collapse, then Hamming<=3 pairs among rep signatures. Unlike
-    // MinHash banding, the pigeonhole blocking is COMPLETE (4 blocks
-    // of 16 bits; <=3 differing bits leave >=1 block identical), so
-    // the engine's keep-table provably equals this brute-force
-    // all-pairs replay — the oracle recomputes the 64-bit signature
-    // itself (FNV-1a votes, mod-2^64 CTEs above) and a hash mismatch
-    // is a signature or blocking bug, never banding recall noise.
-    "q_dedup_simhash" ->
-      ("""WITH keyed AS MATERIALIZED (SELECT doc_id, COALESCE(text, '') AS text FROM documents),
-         reps AS MATERIALIZED (SELECT MIN(doc_id) AS rep_id, text FROM keyed GROUP BY text),
-         """ + sqlTokenCtes + """
-         tc AS MATERIALIZED (SELECT rep_id, tok, CAST(COUNT(*) AS BIGINT) AS cnt
-           FROM tocc GROUP BY rep_id, tok),
-         votes AS MATERIALIZED (SELECT rep_id, CAST(b.b AS INT) AS bit,
-             SUM(cnt * CASE WHEN (CAST(th AS UBIGINT) >> CAST(b.b AS INT)) & 1 = 1
-                 THEN 1 ELSE -1 END) AS v
-           FROM tc JOIN dh USING (tok), UNNEST(range(0, 64)) AS b(b)
-           GROUP BY rep_id, bit),
-         simv AS MATERIALIZED (SELECT rep_id,
-             SUM(CASE WHEN v > 0 THEN CAST(1 AS HUGEINT) << bit ELSE 0 END) AS s
-           FROM votes GROUP BY rep_id),
-         sims AS MATERIALIZED (SELECT r.rep_id, CAST(COALESCE(v.s, 0) AS UBIGINT) AS sim
-           FROM reps r LEFT JOIN simv v USING (rep_id)),
-         dead AS (SELECT b.rep_id AS dead_rep, CAST(COUNT(*) AS BIGINT) AS n_near
-           FROM sims a JOIN sims b ON a.rep_id < b.rep_id
-             AND bit_count(xor(a.sim, b.sim)) <= 3
-           GROUP BY 1)
-         SELECT k.doc_id,
-           CAST(CASE WHEN k.doc_id <> r.rep_id THEN 1 ELSE 0 END
-             + COALESCE(d.n_near, 0) AS BIGINT) AS n_dups_smaller,
-           (k.doc_id = r.rep_id AND d.n_near IS NULL) AS keep
-         FROM keyed k JOIN reps r ON k.text = r.text
-         LEFT JOIN dead d ON r.rep_id = d.dead_rep
-         ORDER BY doc_id"""),
-    // FULL keep-table replay of the layered anchored-containment
-    // dedup: exact text collapse, anchor sampling (shingle hash ≡ 0
-    // mod 8, df <= 1000), exact containment verify |A∩B|/|A| >= 0.9,
-    // and the (size desc, id asc) kill rule — the documented
-    // algorithm recomputed end-to-end in a second engine over the
-    // same hash space (mod-2^64 CTEs above). The _sound gate and the
-    // C33b brute-force twin carry the semantic-recall side; this row
-    // pins the distributed implementation.
-    "q_dedup_containment" ->
-      ("""WITH keyed AS MATERIALIZED (SELECT doc_id, COALESCE(text, '') AS text FROM documents),
-         reps AS MATERIALIZED (SELECT MIN(doc_id) AS rep_id, text FROM keyed GROUP BY text),
-         """ + sqlTokenCtes + """
-         """ + sqlShingleCtes + """
-         anch AS MATERIALIZED (SELECT rep_id, u.a AS anchor FROM sh, UNNEST(sh) AS u(a)
-           WHERE u.a % 8 = 0),
-         rare AS MATERIALIZED (SELECT anchor FROM anch GROUP BY anchor HAVING COUNT(*) <= 1000),
-         pr AS MATERIALIZED (SELECT rep_id, anchor FROM anch JOIN rare USING (anchor)),
-         cand AS MATERIALIZED (SELECT DISTINCT a.rep_id AS id_x, b.rep_id AS id_y
-           FROM pr a JOIN pr b USING (anchor) WHERE a.rep_id < b.rep_id),
-         ver AS MATERIALIZED (SELECT id_x, id_y, len(list_intersect(x.sh, y.sh)) AS inter,
-             len(x.sh) AS sz_x, len(y.sh) AS sz_y
-           FROM cand JOIN sh x ON id_x = x.rep_id JOIN sh y ON id_y = y.rep_id),
-         killed AS (
-           SELECT id_x AS dead_rep FROM ver
-           WHERE inter * 1.0 / sz_x >= 0.9
-             AND (sz_y > sz_x OR (sz_y = sz_x AND id_y < id_x))
-           UNION ALL
-           SELECT id_y AS dead_rep FROM ver
-           WHERE inter * 1.0 / sz_y >= 0.9
-             AND (sz_x > sz_y OR (sz_x = sz_y AND id_x < id_y))),
-         kc AS (SELECT dead_rep, CAST(COUNT(*) AS BIGINT) AS n_cont
-           FROM killed GROUP BY 1)
-         SELECT k.doc_id,
-           CAST(CASE WHEN k.doc_id <> r.rep_id THEN 1 ELSE 0 END
-             + COALESCE(kc.n_cont, 0) AS BIGINT) AS n_containers,
-           (k.doc_id = r.rep_id AND kc.n_cont IS NULL) AS keep
-         FROM keyed k JOIN reps r ON k.text = r.text
-         LEFT JOIN kc ON r.rep_id = kc.dead_rep
-         ORDER BY doc_id"""),
-    "q_dedup_containment_sound" ->
-      """SELECT doc_id FROM documents WHERE 1 = 0 ORDER BY doc_id""",
-    "q_dedup_containment_exact" ->
-      """WITH toks AS (SELECT doc_id,
-           list_filter(string_split_regex(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[\x00-\x2f\x3a-\x40\x5b-\x5e\x60\x7b-\x7f]+'), t -> t <> '') AS ts
-           FROM documents),
-         g AS (SELECT doc_id, list(DISTINCT array_to_string(ts[i : i + 2], ' ')) AS sh
-               FROM toks, UNNEST(range(1, len(ts) - 1)) AS u(i) GROUP BY doc_id),
-         d AS (SELECT DISTINCT a.doc_id AS id FROM g a JOIN g b ON a.doc_id <> b.doc_id
-               AND (len(b.sh) > len(a.sh) OR (len(b.sh) = len(a.sh) AND b.doc_id < a.doc_id))
-               AND len(list_intersect(a.sh, b.sh)) * 1.0 / len(a.sh) >= 0.9)
-         SELECT doc_id FROM documents ANTI JOIN d ON doc_id = id ORDER BY doc_id""",
-    "q_corpus_shuffle" ->
-      """WITH d AS (SELECT doc_id,
-           CAST(concat('0x', substr(md5(concat('shuffle42:', CAST(doc_id AS VARCHAR))), 1, 8)) AS BIGINT) AS k
-           FROM documents)
-         SELECT doc_id, k % 16 AS bucket,
-           CAST(ROW_NUMBER() OVER (PARTITION BY k % 16 ORDER BY k, doc_id) AS BIGINT) AS pos
-         FROM d ORDER BY bucket, pos""",
-    "q_context_chunks" ->
-      """WITH toks AS (SELECT doc_id,
-           list_filter(string_split_regex(text, '[ \t\n\r]+'), t -> t <> '') AS ts
-           FROM documents),
-         c AS (SELECT doc_id, CAST(p / 48 AS BIGINT) AS chunk_idx,
-           array_to_string(ts[p + 1 : p + 64], ' ') AS chunk
-           FROM toks, UNNEST(range(0, len(ts), 48)) AS u(p))
-         SELECT doc_id, chunk_idx, chunk FROM c ORDER BY doc_id, chunk_idx""",
-    "q_mixture_resample" ->
-      """WITH d AS (SELECT doc_id, source,
-           CASE WHEN source = 'src1' THEN 2 WHEN source = 'src3' THEN 0 ELSE 1 END AS nfull,
-           CASE WHEN source = 'src1' THEN 5000 WHEN source = 'src3' THEN 3000 ELSE 0 END AS thr
-           FROM documents),
-         c AS (SELECT doc_id, source, nfull, thr, CAST(u.i AS BIGINT) AS copy_idx
-           FROM d, UNNEST(range(0, nfull + 1)) AS u(i))
-         SELECT doc_id, source, copy_idx FROM c
-         WHERE copy_idx < nfull
-            OR (CAST(concat('0x', substr(md5(concat(CAST(doc_id AS VARCHAR), ':', CAST(copy_idx AS VARCHAR))), 1, 8)) AS BIGINT) % 10000) < thr
-         ORDER BY doc_id, copy_idx""",
-    "q_dedup_incremental" ->
-      """SELECT doc_id FROM documents WHERE 1 = 0 ORDER BY doc_id""",
-    "q_dedup_minhash_sound" ->
-      """SELECT doc_id FROM documents WHERE 1 = 0 ORDER BY doc_id""",
-    "q_dedup_simhash_sound" ->
-      """SELECT doc_id FROM documents WHERE 1 = 0 ORDER BY doc_id""",
-    "q_dedup_clusters_sound" ->
-      """SELECT doc_id AS id_a, doc_id AS id_b FROM documents
-         WHERE 1 = 0 ORDER BY id_a""",
-    "q_dedup_embed_sound" ->
-      """SELECT vec_id FROM embeddings WHERE 1 = 0 ORDER BY vec_id""",
-    "q_fingerprint" ->
-      """SELECT doc_id, CAST(LENGTH(text) AS BIGINT) AS n_chars,
-           TRUE AS winnow_in_range, TRUE AS fp_injective
-         FROM documents ORDER BY doc_id""",
-    "q_media_features" ->
-      """SELECT doc_id AS media_id,
-           CASE WHEN doc_id % 2 = 0 THEN 'image' ELSE 'audio' END AS kind,
-           CAST(octet_length(CAST(COALESCE(text, '') AS BLOB)) AS BIGINT) AS n_bytes,
-           TRUE AS f0_in_range
-         FROM documents ORDER BY media_id""",
-    "q_media_frames" ->
-      """WITH b AS (SELECT doc_id AS media_id,
-           octet_length(CAST(COALESCE(text, '') AS BLOB)) AS n FROM documents),
-         f AS (SELECT media_id, n, CAST(ceil(n / 64.0) AS BIGINT) AS total_frames
-           FROM b WHERE n > 0),
-         k AS (SELECT media_id, n, total_frames,
-           CAST(ceil(total_frames / 3.0) AS BIGINT) AS n_kept FROM f)
-         SELECT media_id, n_kept,
-           CAST(64 * (n_kept - 1) +
-             CASE WHEN (total_frames - 1) % 3 = 0
-                  THEN n - 64 * (total_frames - 1) ELSE 64 END AS BIGINT) AS kept_bytes,
-           CAST(3 * (n_kept - 1) AS BIGINT) AS max_idx
-         FROM k ORDER BY media_id""",
-    "q_ann_lsh" ->
-      """SELECT vec_id AS probe_id, TRUE AS recall_ok
-         FROM embeddings WHERE vec_id < 3 ORDER BY probe_id""",
-    "q_ann_pca" ->
-      """SELECT vec_id AS probe_id, TRUE AS recall_ok
-         FROM embeddings WHERE vec_id < 3 ORDER BY probe_id""",
-    // C12c: exact media dedup — the digest collapse replayed on the
-    // same bytes (md5(text) over UTF-8 ≡ md5(binary payload); ASCII
-    // corpus). Planted copies: every 13th doc under id + 1,000,000.
-    "q_media_dedup" ->
-      """WITH m AS (
-           SELECT doc_id AS media_id, md5(coalesce(text, '')) AS sig FROM documents
-           UNION ALL
-           SELECT doc_id + 1000000, md5(coalesce(text, '')) FROM documents
-           WHERE doc_id % 13 = 0
-         )
-         SELECT media_id, min(media_id) OVER (PARTITION BY sig) AS rep_id,
-           CAST(COUNT(*) OVER (PARTITION BY sig) AS BIGINT) AS n_copies, sig
-         FROM m ORDER BY media_id""",
-    // C12c: chunk-signature near-dup — the full bucketed pipeline
-    // (32-byte full chunks, stop-chunk cap 100, Jaccard >= 0.7 in
-    // truncating ppm) replayed chunk for chunk on the same bytes.
-    "q_media_neardup" ->
-      """WITH m AS MATERIALIZED (
-           SELECT doc_id AS media_id, coalesce(text, '') AS p FROM documents
-           UNION ALL
-           SELECT doc_id + 2000000,
-             substring(text, 1, length(text) - 10) || 'XXXXXXXXXX'
-           FROM documents WHERE doc_id % 7 = 0 AND length(text) >= 224
-         ),
-         sg AS MATERIALIZED (
-           SELECT DISTINCT media_id, md5(substring(p, CAST(u.i AS INT) * 32 + 1, 32)) AS sig
-           FROM m, UNNEST(range(0, length(p) // 32)) AS u(i)
-         ),
-         cold AS MATERIALIZED (
-           SELECT media_id, sig FROM sg
-           WHERE sig NOT IN (SELECT sig FROM sg GROUP BY sig HAVING COUNT(*) > 100)
-         ),
-         sz AS MATERIALIZED (
-           SELECT media_id, CAST(COUNT(*) AS BIGINT) AS n FROM cold GROUP BY 1
-         ),
-         pr AS MATERIALIZED (
-           SELECT a.media_id AS media_a, b.media_id AS media_b,
-             CAST(COUNT(*) AS BIGINT) AS shared_chunks
-           FROM cold a JOIN cold b ON a.sig = b.sig AND a.media_id < b.media_id
-           GROUP BY 1, 2
-         )
-         SELECT media_a, media_b, shared_chunks,
-           CAST(shared_chunks * 1000000 // (sa.n + sb.n - shared_chunks) AS BIGINT)
-             AS resemblance_ppm
-         FROM pr
-         JOIN sz sa ON pr.media_a = sa.media_id
-         JOIN sz sb ON pr.media_b = sb.media_id
-         WHERE shared_chunks * 1000000 // (sa.n + sb.n - shared_chunks) >= 700000
-         ORDER BY media_a, media_b""",
-    // C12c: the media keep-table — exact + near pairs closed
-    // transitively (the q_dedup_clusters recursive-CTE pattern).
-    // C12d: every header field recomputed by the independent doc-id
-    // arithmetic the constructor used — a wrong endianness, a
-    // fixed-offset shortcut past the planted JUNK/APP1, or a crash on
-    // the poisoned 'unknown' class all hash-mismatch.
-    "q_media_headers" ->
-      """SELECT doc_id AS media_id,
-           CASE doc_id % 4 WHEN 0 THEN 'png' WHEN 1 THEN 'wav'
-             WHEN 2 THEN 'jpeg' ELSE 'unknown' END AS format,
-           CAST(CASE WHEN doc_id % 4 = 0 THEN doc_id % 640 + 32
-             WHEN doc_id % 4 = 2 THEN doc_id % 512 + 16 ELSE 0 END AS BIGINT) AS width,
-           CAST(CASE WHEN doc_id % 4 = 0 THEN doc_id % 480 + 32
-             WHEN doc_id % 4 = 2 THEN doc_id % 384 + 16 ELSE 0 END AS BIGINT) AS height,
-           CAST(CASE WHEN doc_id % 4 = 1 THEN doc_id % 8 * 1000 + 8000
-             ELSE 0 END AS BIGINT) AS sample_rate,
-           CAST(CASE WHEN doc_id % 4 = 1 THEN doc_id % 2 + 1
-             ELSE 0 END AS BIGINT) AS channels
-         FROM documents ORDER BY media_id""",
-    // C93: the canonical URL recomputed character-for-character by
-    // independent arithmetic (no parsing in the oracle), plus the
-    // rep/count/keep group relation — wrong scheme fold / port strip /
-    // param sort / fragment rule or grouping error all hash-mismatch.
-    "q_url_dedup" ->
-      """WITH d1 AS (SELECT doc_id AS id, doc_id // 8 AS k FROM documents),
-         g1 AS (SELECT k, CAST(MIN(id) AS BIGINT) AS rep,
-             CAST(COUNT(*) AS BIGINT) AS n FROM d1 GROUP BY k),
-         d2 AS (SELECT doc_id + 1000000 AS id, doc_id // 2 AS k FROM documents),
-         g2 AS (SELECT k, CAST(MIN(id) AS BIGINT) AS rep,
-             CAST(COUNT(*) AS BIGINT) AS n FROM d2 GROUP BY k),
-         d3 AS (SELECT doc_id + 2000000 AS id, doc_id // 2 AS k FROM documents),
-         g3 AS (SELECT k, CAST(MIN(id) AS BIGINT) AS rep,
-             CAST(COUNT(*) AS BIGINT) AS n FROM d3 GROUP BY k),
-         d4 AS (SELECT doc_id + 3000000 AS id, doc_id // 2 AS k,
-             doc_id % 2 AS r FROM documents)
-         SELECT * FROM (
-           SELECT id,
-             concat('https://example', k, '.com/a/b', k, '?a=1&b=2') AS canon_url,
-             g1.rep AS rep_id, g1.n AS n_copies, id = g1.rep AS keep
-           FROM d1 JOIN g1 USING (k)
-           UNION ALL
-           SELECT id,
-             concat('https://example', k, '.org/p?q=%2Fv~') AS canon_url,
-             g2.rep AS rep_id, g2.n AS n_copies, id = g2.rep AS keep
-           FROM d2 JOIN g2 USING (k)
-           UNION ALL
-           SELECT id,
-             concat('https://fold', k, '.com/p') AS canon_url,
-             g3.rep AS rep_id, g3.n AS n_copies, id = g3.rep AS keep
-           FROM d3 JOIN g3 USING (k)
-           UNION ALL
-           SELECT id,
-             concat(CASE WHEN r = 0 THEN 'http' ELSE 'https' END,
-               '://fold', k, '.com/p') AS canon_url,
-             CAST(id AS BIGINT) AS rep_id, CAST(1 AS BIGINT) AS n_copies,
-             TRUE AS keep
-           FROM d4)
-         ORDER BY id""",
-    // D32: the routed store read back must equal the batch header
-    // relation — same independent arithmetic as q_media_headers; any
-    // drop/duplicate/misroute across the two micro-batches mismatches,
-    // and (r18) each row's (batch, format) route count from the
-    // sibling metrics store is recomputed from the batch-split
-    // arithmetic (batch 0 = media_id <= (min+max)/2).
-    "q_stream_media_route" ->
-      """WITH m AS (SELECT doc_id AS media_id,
-           CASE WHEN doc_id <= (SELECT (MIN(doc_id) + MAX(doc_id)) // 2
-             FROM documents) THEN 0 ELSE 1 END AS batch,
-           CASE doc_id % 4 WHEN 0 THEN 'png' WHEN 1 THEN 'wav'
-             WHEN 2 THEN 'jpeg' ELSE 'unknown' END AS format,
-           CAST(CASE WHEN doc_id % 4 = 0 THEN doc_id % 640 + 32
-             WHEN doc_id % 4 = 2 THEN doc_id % 512 + 16 ELSE 0 END AS BIGINT) AS width,
-           CAST(CASE WHEN doc_id % 4 = 0 THEN doc_id % 480 + 32
-             WHEN doc_id % 4 = 2 THEN doc_id % 384 + 16 ELSE 0 END AS BIGINT) AS height,
-           CAST(CASE WHEN doc_id % 4 = 1 THEN doc_id % 8 * 1000 + 8000
-             ELSE 0 END AS BIGINT) AS sample_rate,
-           CAST(CASE WHEN doc_id % 4 = 1 THEN doc_id % 2 + 1
-             ELSE 0 END AS BIGINT) AS channels
-         FROM documents),
-         cnt AS (SELECT batch, format, CAST(COUNT(*) AS BIGINT) AS route_n
-           FROM m GROUP BY 1, 2)
-         SELECT CAST(m.batch AS BIGINT) AS batch, m.format, media_id,
-           width, height, sample_rate, channels, route_n
-         FROM m JOIN cnt USING (batch, format) ORDER BY media_id""",
-    "q_media_clusters" ->
-      """WITH RECURSIVE m AS MATERIALIZED (
-           SELECT doc_id AS media_id, coalesce(text, '') AS p FROM documents
-           UNION ALL
-           SELECT doc_id + 1000000, coalesce(text, '') FROM documents
-           WHERE doc_id % 13 = 0
-           UNION ALL
-           SELECT doc_id + 2000000,
-             substring(text, 1, length(text) - 10) || 'XXXXXXXXXX'
-           FROM documents WHERE doc_id % 7 = 0 AND length(text) >= 224
-         ),
-         ex AS MATERIALIZED (
-           SELECT min(media_id) OVER (PARTITION BY md5(p)) AS id_a,
-             media_id AS id_b
-           FROM m QUALIFY id_a <> id_b
-         ),
-         sg AS MATERIALIZED (
-           SELECT DISTINCT media_id, md5(substring(p, CAST(u.i AS INT) * 32 + 1, 32)) AS sig
-           FROM m, UNNEST(range(0, length(p) // 32)) AS u(i)
-         ),
-         cold AS MATERIALIZED (
-           SELECT media_id, sig FROM sg
-           WHERE sig NOT IN (SELECT sig FROM sg GROUP BY sig HAVING COUNT(*) > 100)
-         ),
-         sz AS MATERIALIZED (
-           SELECT media_id, CAST(COUNT(*) AS BIGINT) AS n FROM cold GROUP BY 1
-         ),
-         nr AS MATERIALIZED (
-           SELECT media_a AS id_a, media_b AS id_b FROM (
-             SELECT a.media_id AS media_a, b.media_id AS media_b,
-               CAST(COUNT(*) AS BIGINT) AS shared_chunks
-             FROM cold a JOIN cold b ON a.sig = b.sig AND a.media_id < b.media_id
-             GROUP BY 1, 2) pr
-           JOIN sz sa ON pr.media_a = sa.media_id
-           JOIN sz sb ON pr.media_b = sb.media_id
-           WHERE shared_chunks * 1000000 // (sa.n + sb.n - shared_chunks) >= 700000
-         ),
-         e AS MATERIALIZED (SELECT id_a AS u, id_b AS v FROM ex
-           UNION SELECT id_a, id_b FROM nr),
-         edges AS MATERIALIZED (SELECT u, v FROM e UNION SELECT v, u FROM e),
-         reach(src, dst) AS (
-           SELECT u, v FROM edges
-           UNION
-           SELECT r.src, e2.v FROM reach r JOIN edges e2 ON r.dst = e2.u),
-         comp AS (SELECT src AS node, LEAST(src, MIN(dst)) AS cluster FROM reach GROUP BY src)
-         SELECT media_id, CAST(COALESCE(c.cluster, media_id) AS BIGINT) AS cluster_id,
-           media_id = COALESCE(c.cluster, media_id) AS keep
-         FROM m LEFT JOIN comp c ON media_id = c.node
-         ORDER BY media_id""",
-    // C87: per-path aggregate recall floors (documented measurements
-    // minus margin in the query scaladoc) — the QUALITY gate.
-    "q_ann_recall" ->
-      """SELECT * FROM (VALUES
-           ('ivf',   CAST(5 AS BIGINT), CAST(20 AS BIGINT), CAST(600000 AS BIGINT), TRUE),
-           ('ivfpq', 5, 20, 350000, TRUE),
-           ('lsh',   5, 20, 450000, TRUE),
-           ('pca',   5, 20, 700000, TRUE),
-           ('pq',    5, 20, 330000, TRUE)
-         ) t(path, k, n_probes, floor_ppm, recall_ok)
-         ORDER BY path""",
-    "q_ann_ivf" ->
-      """SELECT vec_id AS probe_id, TRUE AS recall_ok
-         FROM embeddings WHERE vec_id < 3 ORDER BY probe_id""",
-    "q_ann_ivf_indexed" ->
-      """SELECT vec_id AS probe_id, TRUE AS recall_ok
-         FROM embeddings WHERE vec_id < 3 ORDER BY probe_id""",
-    "q_ann_ivf_append" ->
-      """SELECT vec_id AS probe_id, TRUE AS recall_ok
-         FROM embeddings WHERE vec_id < 3 ORDER BY probe_id""",
-    // C7h: the delete invariants — no doomed id in any post-delete
-    // top-5 (through an append), recall holds vs brute force over the
-    // surviving corpus, physical vacuum answer-identical to masking.
-    "q_ann_ivf_delete" ->
-      """SELECT vec_id AS probe_id, TRUE AS deleted_excluded,
-           TRUE AS recall_ok, TRUE AS vacuum_consistent
-         FROM embeddings WHERE vec_id < 3 ORDER BY probe_id""",
-    "q_ann_ivfpq_indexed" ->
-      """SELECT vec_id AS probe_id, TRUE AS recall_ok
-         FROM embeddings WHERE vec_id < 3 ORDER BY probe_id""",
-    "q_ann_pq" ->
-      """SELECT vec_id AS probe_id, TRUE AS recall_ok
-         FROM embeddings WHERE vec_id < 3 ORDER BY probe_id""",
-    "q_ann_ivfpq" ->
-      """SELECT vec_id AS probe_id, TRUE AS recall_ok
-         FROM embeddings WHERE vec_id < 3 ORDER BY probe_id""",
-    "q_approx_distinct" ->
-      """SELECT event_type, CAST(COUNT(DISTINCT user_id) AS BIGINT) AS exact_users,
-           TRUE AS within_10pct
-         FROM events GROUP BY 1 ORDER BY 1""",
-    "q_lang_id" ->
-      """WITH toks AS (SELECT doc_id,
-           list_filter(string_split_regex(lower(text), '[^a-z0-9_]+'), t -> t <> '') AS ts
-           FROM documents),
-         h AS (SELECT doc_id,
-           len(list_filter(ts, t -> list_contains(['the','and','of','to','is','in','that','it','with','for','this','are'], t))) AS en,
-           len(list_filter(ts, t -> list_contains(['le','la','les','des','est','et','une','dans','que','pour','pas','vous'], t))) AS fr,
-           len(list_filter(ts, t -> list_contains(['el','los','las','es','y','una','que','en','por','para','con','su'], t))) AS es,
-           len(list_filter(ts, t -> list_contains(['der','die','das','und','ist','nicht','ein','eine','mit','für','auf','ich'], t))) AS de
-           FROM toks)
-         SELECT doc_id, CASE
-           WHEN en = 0 AND fr = 0 AND es = 0 AND de = 0 THEN 'und'
-           WHEN en >= fr AND en >= es AND en >= de THEN 'en'
-           WHEN fr >= es AND fr >= de THEN 'fr'
-           WHEN es >= de THEN 'es'
-           ELSE 'de' END AS lang_pred
-         FROM h ORDER BY doc_id""",
-    "q_dedup_clusters_exact" ->
-      """WITH RECURSIVE edges AS MATERIALIZED (
-           -- inverted-index overlap counting: candidate pairs share >= 1
-           -- word-3-gram, their exact intersection is COUNTED by one
-           -- parallel join+aggregate (no per-pair list ops), and
-           -- Jaccard >= 0.8 is the exact integer predicate
-           -- 9*o >= 4*(|A|+|B|)  <=>  o/(|A|+|B|-o) >= 4/5. Only tiny
-           -- relations may be NAMED in this RECURSIVE with-list: DuckDB
-           -- materializes every CTE of a recursive clause and scans it
-           -- single-threaded, so the heavy pipeline stays inline as
-           -- derived tables (sf1: 450s -> 15s).
-           SELECT CASE WHEN d.i = 0 THEN p.u ELSE p.v END AS u,
-                  CASE WHEN d.i = 0 THEN p.v ELSE p.u END AS v
-           FROM (
-             SELECT ov.u, ov.v FROM (
-               SELECT b.doc_id AS u, a.doc_id AS v, COUNT(*) AS o
-               FROM (SELECT DISTINCT doc_id, array_to_string(ts[i : i + 2], ' ') AS s
-             FROM (SELECT doc_id, list_filter(string_split_regex(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[\x00-\x2f\x3a-\x40\x5b-\x5e\x60\x7b-\x7f]+'), t -> t <> '') AS ts
-               FROM documents) toks, UNNEST(range(1, len(ts) - 1)) AS u(i)) a
-               JOIN (SELECT DISTINCT doc_id, array_to_string(ts[i : i + 2], ' ') AS s
-             FROM (SELECT doc_id, list_filter(string_split_regex(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[\x00-\x2f\x3a-\x40\x5b-\x5e\x60\x7b-\x7f]+'), t -> t <> '') AS ts
-               FROM documents) toks, UNNEST(range(1, len(ts) - 1)) AS u(i)) b
-                 ON a.s = b.s AND b.doc_id < a.doc_id
-               GROUP BY 1, 2) ov
-             JOIN (SELECT doc_id, COUNT(*) AS n FROM (SELECT DISTINCT doc_id, array_to_string(ts[i : i + 2], ' ') AS s
-             FROM (SELECT doc_id, list_filter(string_split_regex(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[\x00-\x2f\x3a-\x40\x5b-\x5e\x60\x7b-\x7f]+'), t -> t <> '') AS ts
-               FROM documents) toks, UNNEST(range(1, len(ts) - 1)) AS u(i)) ga GROUP BY doc_id) sa
-               ON sa.doc_id = ov.u
-             JOIN (SELECT doc_id, COUNT(*) AS n FROM (SELECT DISTINCT doc_id, array_to_string(ts[i : i + 2], ' ') AS s
-             FROM (SELECT doc_id, list_filter(string_split_regex(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[\x00-\x2f\x3a-\x40\x5b-\x5e\x60\x7b-\x7f]+'), t -> t <> '') AS ts
-               FROM documents) toks, UNNEST(range(1, len(ts) - 1)) AS u(i)) gb GROUP BY doc_id) sb
-               ON sb.doc_id = ov.v
-             WHERE 9 * ov.o >= 4 * (sa.n + sb.n)) p
-           CROSS JOIN (VALUES (0), (1)) d(i)),
-         reach(src, dst) AS (
-           SELECT u, v FROM edges
-           UNION
-           SELECT r.src, e2.v FROM reach r JOIN edges e2 ON r.dst = e2.u),
-         comp AS (SELECT src AS node, LEAST(src, MIN(dst)) AS cluster FROM reach GROUP BY src)
-         SELECT doc_id, COALESCE(c.cluster, doc_id) AS cluster
-         FROM documents LEFT JOIN comp c ON doc_id = c.node
-         ORDER BY doc_id""",
-    // C57: the planning arithmetic replayed over the same
-    // whitespace-token counts; all integer ppm
-    "q_token_budget" ->
-      """WITH toks AS (SELECT source,
-           CAST(len(list_filter(string_split_regex(COALESCE(text, ''), '[ \t\n\r]+'), t -> t <> '')) AS BIGINT) AS n_toks
-           FROM documents),
-         per AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
-             CAST(SUM(n_toks) AS BIGINT) AS n_tokens FROM toks GROUP BY 1),
-         w AS (SELECT *, CAST(CASE WHEN source IN ('src1', 'src2')
-             THEN 150000 ELSE 700000 // 18 END AS BIGINT) AS weight_ppm FROM per),
-         r AS (SELECT *, LEAST(1000000, 100000 * weight_ppm // n_tokens) AS rate_ppm FROM w)
-         SELECT source, n_docs, n_tokens, weight_ppm,
-           CAST(rate_ppm AS BIGINT) AS rate_ppm,
-           CAST(n_tokens * rate_ppm // 1000000 AS BIGINT) AS expected_tokens,
-           rate_ppm = 1000000 AS under_supplied
-         FROM r ORDER BY source""",
-    // B82: decile by quantile_disc cuts (≡ Spark percentile_disc, the
-    // B52 precedent); integer ppm shares
-    "q_concentration" ->
-      """WITH base AS (SELECT o_custkey,
-           CAST(SUM(CAST(round(o_totalprice * 100, 0) AS BIGINT)) AS BIGINT) AS rev_cents
-           FROM orders GROUP BY 1),
-         cuts AS (SELECT
-             quantile_disc(rev_cents, 0.1) AS c1, quantile_disc(rev_cents, 0.2) AS c2,
-             quantile_disc(rev_cents, 0.3) AS c3, quantile_disc(rev_cents, 0.4) AS c4,
-             quantile_disc(rev_cents, 0.5) AS c5, quantile_disc(rev_cents, 0.6) AS c6,
-             quantile_disc(rev_cents, 0.7) AS c7, quantile_disc(rev_cents, 0.8) AS c8,
-             quantile_disc(rev_cents, 0.9) AS c9 FROM base),
-         tot AS (SELECT SUM(rev_cents) AS total_cents FROM base),
-         dec AS (SELECT b.o_custkey, b.rev_cents,
-             CAST(1 + (b.rev_cents > c1)::INT + (b.rev_cents > c2)::INT
-               + (b.rev_cents > c3)::INT + (b.rev_cents > c4)::INT
-               + (b.rev_cents > c5)::INT + (b.rev_cents > c6)::INT
-               + (b.rev_cents > c7)::INT + (b.rev_cents > c8)::INT
-               + (b.rev_cents > c9)::INT AS BIGINT) AS decile
-           FROM base b, cuts)
-         SELECT decile, CAST(COUNT(*) AS BIGINT) AS n_customers,
-           CAST(SUM(rev_cents) AS BIGINT) AS sum_cents,
-           CAST(SUM(rev_cents) * 1000000 // tot.total_cents AS BIGINT) AS share_ppm
-         FROM dec, tot GROUP BY decile, tot.total_cents ORDER BY decile""",
-    // C56: per-doc fraction of distinct shingles first seen in an
-    // earlier doc — string-space replay of the hash-space pipeline;
-    // x div 0 is NULL in both engines (shingle-less docs)
-    "q_novelty" ->
-      """WITH toks AS (SELECT doc_id,
-           list_filter(string_split_regex(translate(COALESCE(text, ''), 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[\x00-\x2f\x3a-\x40\x5b-\x5e\x60\x7b-\x7f]+'), t -> t <> '') AS ts
-           FROM documents),
-         g AS (SELECT DISTINCT doc_id, array_to_string(ts[i : i + 2], ' ') AS gram
-               FROM toks, UNNEST(range(1, len(ts) - 1)) AS u(i)),
-         fst AS (SELECT gram, MIN(doc_id) AS first_id FROM g GROUP BY 1),
-         per AS (SELECT g.doc_id, CAST(COUNT(*) AS BIGINT) AS n_grams,
-             CAST(SUM(CASE WHEN fst.first_id < g.doc_id THEN 1 ELSE 0 END) AS BIGINT) AS n_seen
-           FROM g JOIN fst USING (gram) GROUP BY 1)
-         SELECT d.doc_id, COALESCE(p.n_grams, 0) AS n_grams,
-           COALESCE(p.n_seen, 0) AS n_seen,
-           CAST(COALESCE(p.n_seen, 0) * 1000000 // COALESCE(p.n_grams, 0) AS BIGINT) AS seen_ppm
-         FROM documents d LEFT JOIN per p USING (doc_id)
-         ORDER BY d.doc_id""",
-    // C55: the C14b closure plus the C24 md5-bucket arithmetic on the
-    // CLUSTER id — split is a pure function of cluster, so near-dups
-    // cannot straddle train/test by construction
-    "q_leakage_split" ->
-      """WITH RECURSIVE edges AS MATERIALIZED (
-           -- inverted-index overlap counting: candidate pairs share >= 1
-           -- word-3-gram, their exact intersection is COUNTED by one
-           -- parallel join+aggregate (no per-pair list ops), and
-           -- Jaccard >= 0.8 is the exact integer predicate
-           -- 9*o >= 4*(|A|+|B|)  <=>  o/(|A|+|B|-o) >= 4/5. Only tiny
-           -- relations may be NAMED in this RECURSIVE with-list: DuckDB
-           -- materializes every CTE of a recursive clause and scans it
-           -- single-threaded, so the heavy pipeline stays inline as
-           -- derived tables (sf1: 450s -> 15s).
-           SELECT CASE WHEN d.i = 0 THEN p.u ELSE p.v END AS u,
-                  CASE WHEN d.i = 0 THEN p.v ELSE p.u END AS v
-           FROM (
-             SELECT ov.u, ov.v FROM (
-               SELECT b.doc_id AS u, a.doc_id AS v, COUNT(*) AS o
-               FROM (SELECT DISTINCT doc_id, array_to_string(ts[i : i + 2], ' ') AS s
-             FROM (SELECT doc_id, list_filter(string_split_regex(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[\x00-\x2f\x3a-\x40\x5b-\x5e\x60\x7b-\x7f]+'), t -> t <> '') AS ts
-               FROM documents) toks, UNNEST(range(1, len(ts) - 1)) AS u(i)) a
-               JOIN (SELECT DISTINCT doc_id, array_to_string(ts[i : i + 2], ' ') AS s
-             FROM (SELECT doc_id, list_filter(string_split_regex(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[\x00-\x2f\x3a-\x40\x5b-\x5e\x60\x7b-\x7f]+'), t -> t <> '') AS ts
-               FROM documents) toks, UNNEST(range(1, len(ts) - 1)) AS u(i)) b
-                 ON a.s = b.s AND b.doc_id < a.doc_id
-               GROUP BY 1, 2) ov
-             JOIN (SELECT doc_id, COUNT(*) AS n FROM (SELECT DISTINCT doc_id, array_to_string(ts[i : i + 2], ' ') AS s
-             FROM (SELECT doc_id, list_filter(string_split_regex(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[\x00-\x2f\x3a-\x40\x5b-\x5e\x60\x7b-\x7f]+'), t -> t <> '') AS ts
-               FROM documents) toks, UNNEST(range(1, len(ts) - 1)) AS u(i)) ga GROUP BY doc_id) sa
-               ON sa.doc_id = ov.u
-             JOIN (SELECT doc_id, COUNT(*) AS n FROM (SELECT DISTINCT doc_id, array_to_string(ts[i : i + 2], ' ') AS s
-             FROM (SELECT doc_id, list_filter(string_split_regex(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[\x00-\x2f\x3a-\x40\x5b-\x5e\x60\x7b-\x7f]+'), t -> t <> '') AS ts
-               FROM documents) toks, UNNEST(range(1, len(ts) - 1)) AS u(i)) gb GROUP BY doc_id) sb
-               ON sb.doc_id = ov.v
-             WHERE 9 * ov.o >= 4 * (sa.n + sb.n)) p
-           CROSS JOIN (VALUES (0), (1)) d(i)),
-         reach(src, dst) AS (
-           SELECT u, v FROM edges
-           UNION
-           SELECT r.src, e2.v FROM reach r JOIN edges e2 ON r.dst = e2.u),
-         comp AS (SELECT src AS node, LEAST(src, MIN(dst)) AS cluster FROM reach GROUP BY src),
-         assigned AS (SELECT d.doc_id,
-             CAST(COALESCE(c.cluster, d.doc_id) AS BIGINT) AS cluster_id
-           FROM documents d LEFT JOIN comp c ON d.doc_id = c.node),
-         b AS (SELECT *,
-             CAST(concat('0x', substr(md5(concat('lsplit:', CAST(cluster_id AS VARCHAR))), 1, 8)) AS BIGINT) % 100 AS bucket
-           FROM assigned)
-         SELECT doc_id, cluster_id, bucket,
-           CASE WHEN bucket < 90 THEN 'train' WHEN bucket < 95 THEN 'val'
-             ELSE 'test' END AS split
-         FROM b ORDER BY doc_id""",
-    // C53: the C14b closure plus a per-cluster argmax (token count
-    // desc, id asc) — the keep-best survivor rule
-    "q_dedup_keep_best" ->
-      """WITH RECURSIVE edges AS MATERIALIZED (
-           -- inverted-index overlap counting: candidate pairs share >= 1
-           -- word-3-gram, their exact intersection is COUNTED by one
-           -- parallel join+aggregate (no per-pair list ops), and
-           -- Jaccard >= 0.8 is the exact integer predicate
-           -- 9*o >= 4*(|A|+|B|)  <=>  o/(|A|+|B|-o) >= 4/5. Only tiny
-           -- relations may be NAMED in this RECURSIVE with-list: DuckDB
-           -- materializes every CTE of a recursive clause and scans it
-           -- single-threaded, so the heavy pipeline stays inline as
-           -- derived tables (sf1: 450s -> 15s).
-           SELECT CASE WHEN d.i = 0 THEN p.u ELSE p.v END AS u,
-                  CASE WHEN d.i = 0 THEN p.v ELSE p.u END AS v
-           FROM (
-             SELECT ov.u, ov.v FROM (
-               SELECT b.doc_id AS u, a.doc_id AS v, COUNT(*) AS o
-               FROM (SELECT DISTINCT doc_id, array_to_string(ts[i : i + 2], ' ') AS s
-             FROM (SELECT doc_id, list_filter(string_split_regex(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[\x00-\x2f\x3a-\x40\x5b-\x5e\x60\x7b-\x7f]+'), t -> t <> '') AS ts
-               FROM documents) toks, UNNEST(range(1, len(ts) - 1)) AS u(i)) a
-               JOIN (SELECT DISTINCT doc_id, array_to_string(ts[i : i + 2], ' ') AS s
-             FROM (SELECT doc_id, list_filter(string_split_regex(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[\x00-\x2f\x3a-\x40\x5b-\x5e\x60\x7b-\x7f]+'), t -> t <> '') AS ts
-               FROM documents) toks, UNNEST(range(1, len(ts) - 1)) AS u(i)) b
-                 ON a.s = b.s AND b.doc_id < a.doc_id
-               GROUP BY 1, 2) ov
-             JOIN (SELECT doc_id, COUNT(*) AS n FROM (SELECT DISTINCT doc_id, array_to_string(ts[i : i + 2], ' ') AS s
-             FROM (SELECT doc_id, list_filter(string_split_regex(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[\x00-\x2f\x3a-\x40\x5b-\x5e\x60\x7b-\x7f]+'), t -> t <> '') AS ts
-               FROM documents) toks, UNNEST(range(1, len(ts) - 1)) AS u(i)) ga GROUP BY doc_id) sa
-               ON sa.doc_id = ov.u
-             JOIN (SELECT doc_id, COUNT(*) AS n FROM (SELECT DISTINCT doc_id, array_to_string(ts[i : i + 2], ' ') AS s
-             FROM (SELECT doc_id, list_filter(string_split_regex(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[\x00-\x2f\x3a-\x40\x5b-\x5e\x60\x7b-\x7f]+'), t -> t <> '') AS ts
-               FROM documents) toks, UNNEST(range(1, len(ts) - 1)) AS u(i)) gb GROUP BY doc_id) sb
-               ON sb.doc_id = ov.v
-             WHERE 9 * ov.o >= 4 * (sa.n + sb.n)) p
-           CROSS JOIN (VALUES (0), (1)) d(i)),
-         reach(src, dst) AS (
-           SELECT u, v FROM edges
-           UNION
-           SELECT r.src, e2.v FROM reach r JOIN edges e2 ON r.dst = e2.u),
-         comp AS (SELECT src AS node, LEAST(src, MIN(dst)) AS cluster FROM reach GROUP BY src),
-         scored AS (SELECT d.doc_id,
-             CAST(len(list_filter(string_split_regex(COALESCE(d.text, ''), '[ \x09\x0a\x0d]+'), t -> t <> '')) AS BIGINT) AS n_tokens,
-             CAST(COALESCE(c.cluster, d.doc_id) AS BIGINT) AS cluster_id
-           FROM documents d LEFT JOIN comp c ON d.doc_id = c.node),
-         ranked AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY cluster_id
-             ORDER BY n_tokens DESC, doc_id) AS rn FROM scored),
-         reps AS (SELECT cluster_id, doc_id AS rep_id FROM ranked WHERE rn = 1)
-         SELECT s.doc_id, s.cluster_id, CAST(r.rep_id AS BIGINT) AS rep_id,
-           s.doc_id = r.rep_id AS keep
-         FROM scored s JOIN reps r ON s.cluster_id = r.cluster_id
-         ORDER BY doc_id""",
-    // full replay of the MinHash-candidate clustering (C14): the LSH
-    // verifies exact Jaccard before a pair enters the closure, so the
-    // clustering equals the exact-pair transitive closure whenever
-    // recall holds — same recursive CTE as C14b, plus the keep column
-    "q_dedup_clusters" ->
-      """WITH RECURSIVE edges AS MATERIALIZED (
-           -- inverted-index overlap counting: candidate pairs share >= 1
-           -- word-3-gram, their exact intersection is COUNTED by one
-           -- parallel join+aggregate (no per-pair list ops), and
-           -- Jaccard >= 0.8 is the exact integer predicate
-           -- 9*o >= 4*(|A|+|B|)  <=>  o/(|A|+|B|-o) >= 4/5. Only tiny
-           -- relations may be NAMED in this RECURSIVE with-list: DuckDB
-           -- materializes every CTE of a recursive clause and scans it
-           -- single-threaded, so the heavy pipeline stays inline as
-           -- derived tables (sf1: 450s -> 15s).
-           SELECT CASE WHEN d.i = 0 THEN p.u ELSE p.v END AS u,
-                  CASE WHEN d.i = 0 THEN p.v ELSE p.u END AS v
-           FROM (
-             SELECT ov.u, ov.v FROM (
-               SELECT b.doc_id AS u, a.doc_id AS v, COUNT(*) AS o
-               FROM (SELECT DISTINCT doc_id, array_to_string(ts[i : i + 2], ' ') AS s
-             FROM (SELECT doc_id, list_filter(string_split_regex(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[\x00-\x2f\x3a-\x40\x5b-\x5e\x60\x7b-\x7f]+'), t -> t <> '') AS ts
-               FROM documents) toks, UNNEST(range(1, len(ts) - 1)) AS u(i)) a
-               JOIN (SELECT DISTINCT doc_id, array_to_string(ts[i : i + 2], ' ') AS s
-             FROM (SELECT doc_id, list_filter(string_split_regex(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[\x00-\x2f\x3a-\x40\x5b-\x5e\x60\x7b-\x7f]+'), t -> t <> '') AS ts
-               FROM documents) toks, UNNEST(range(1, len(ts) - 1)) AS u(i)) b
-                 ON a.s = b.s AND b.doc_id < a.doc_id
-               GROUP BY 1, 2) ov
-             JOIN (SELECT doc_id, COUNT(*) AS n FROM (SELECT DISTINCT doc_id, array_to_string(ts[i : i + 2], ' ') AS s
-             FROM (SELECT doc_id, list_filter(string_split_regex(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[\x00-\x2f\x3a-\x40\x5b-\x5e\x60\x7b-\x7f]+'), t -> t <> '') AS ts
-               FROM documents) toks, UNNEST(range(1, len(ts) - 1)) AS u(i)) ga GROUP BY doc_id) sa
-               ON sa.doc_id = ov.u
-             JOIN (SELECT doc_id, COUNT(*) AS n FROM (SELECT DISTINCT doc_id, array_to_string(ts[i : i + 2], ' ') AS s
-             FROM (SELECT doc_id, list_filter(string_split_regex(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[\x00-\x2f\x3a-\x40\x5b-\x5e\x60\x7b-\x7f]+'), t -> t <> '') AS ts
-               FROM documents) toks, UNNEST(range(1, len(ts) - 1)) AS u(i)) gb GROUP BY doc_id) sb
-               ON sb.doc_id = ov.v
-             WHERE 9 * ov.o >= 4 * (sa.n + sb.n)) p
-           CROSS JOIN (VALUES (0), (1)) d(i)),
-         reach(src, dst) AS (
-           SELECT u, v FROM edges
-           UNION
-           SELECT r.src, e2.v FROM reach r JOIN edges e2 ON r.dst = e2.u),
-         comp AS (SELECT src AS node, LEAST(src, MIN(dst)) AS cluster FROM reach GROUP BY src)
-         SELECT doc_id, CAST(COALESCE(c.cluster, doc_id) AS BIGINT) AS cluster_id,
-           doc_id = COALESCE(c.cluster, doc_id) AS keep
-         FROM documents LEFT JOIN comp c ON doc_id = c.node
-         ORDER BY doc_id""",
-    // C91: the C14b recursive closure replayed, then every impact
-    // aggregate (per-source doc/char rollup + survivor-attributed
-    // cluster stats) recomputed.
-    "q_dedup_impact" ->
-      """WITH RECURSIVE edges AS MATERIALIZED (
-           -- inverted-index overlap counting: candidate pairs share >= 1
-           -- word-3-gram, their exact intersection is COUNTED by one
-           -- parallel join+aggregate (no per-pair list ops), and
-           -- Jaccard >= 0.8 is the exact integer predicate
-           -- 9*o >= 4*(|A|+|B|)  <=>  o/(|A|+|B|-o) >= 4/5. Only tiny
-           -- relations may be NAMED in this RECURSIVE with-list: DuckDB
-           -- materializes every CTE of a recursive clause and scans it
-           -- single-threaded, so the heavy pipeline stays inline as
-           -- derived tables (sf1: 450s -> 15s).
-           SELECT CASE WHEN d.i = 0 THEN p.u ELSE p.v END AS u,
-                  CASE WHEN d.i = 0 THEN p.v ELSE p.u END AS v
-           FROM (
-             SELECT ov.u, ov.v FROM (
-               SELECT b.doc_id AS u, a.doc_id AS v, COUNT(*) AS o
-               FROM (SELECT DISTINCT doc_id, array_to_string(ts[i : i + 2], ' ') AS s
-             FROM (SELECT doc_id, list_filter(string_split_regex(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[\x00-\x2f\x3a-\x40\x5b-\x5e\x60\x7b-\x7f]+'), t -> t <> '') AS ts
-               FROM documents) toks, UNNEST(range(1, len(ts) - 1)) AS u(i)) a
-               JOIN (SELECT DISTINCT doc_id, array_to_string(ts[i : i + 2], ' ') AS s
-             FROM (SELECT doc_id, list_filter(string_split_regex(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[\x00-\x2f\x3a-\x40\x5b-\x5e\x60\x7b-\x7f]+'), t -> t <> '') AS ts
-               FROM documents) toks, UNNEST(range(1, len(ts) - 1)) AS u(i)) b
-                 ON a.s = b.s AND b.doc_id < a.doc_id
-               GROUP BY 1, 2) ov
-             JOIN (SELECT doc_id, COUNT(*) AS n FROM (SELECT DISTINCT doc_id, array_to_string(ts[i : i + 2], ' ') AS s
-             FROM (SELECT doc_id, list_filter(string_split_regex(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[\x00-\x2f\x3a-\x40\x5b-\x5e\x60\x7b-\x7f]+'), t -> t <> '') AS ts
-               FROM documents) toks, UNNEST(range(1, len(ts) - 1)) AS u(i)) ga GROUP BY doc_id) sa
-               ON sa.doc_id = ov.u
-             JOIN (SELECT doc_id, COUNT(*) AS n FROM (SELECT DISTINCT doc_id, array_to_string(ts[i : i + 2], ' ') AS s
-             FROM (SELECT doc_id, list_filter(string_split_regex(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[\x00-\x2f\x3a-\x40\x5b-\x5e\x60\x7b-\x7f]+'), t -> t <> '') AS ts
-               FROM documents) toks, UNNEST(range(1, len(ts) - 1)) AS u(i)) gb GROUP BY doc_id) sb
-               ON sb.doc_id = ov.v
-             WHERE 9 * ov.o >= 4 * (sa.n + sb.n)) p
-           CROSS JOIN (VALUES (0), (1)) d(i)),
-         reach(src, dst) AS (
-           SELECT u, v FROM edges
-           UNION
-           SELECT r.src, e2.v FROM reach r JOIN edges e2 ON r.dst = e2.u),
-         comp AS (SELECT src AS node, LEAST(src, MIN(dst)) AS cluster FROM reach GROUP BY src),
-         kt AS (SELECT doc_id, CAST(COALESCE(c.cluster, doc_id) AS BIGINT) AS cluster_id,
-             doc_id = COALESCE(c.cluster, doc_id) AS keep
-           FROM documents LEFT JOIN comp c ON doc_id = c.node),
-         enr AS (SELECT kt.doc_id, kt.cluster_id, kt.keep, d.source,
-             length(COALESCE(d.text, '')) AS nc
-           FROM kt JOIN documents d USING (doc_id)),
-         ps AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
-             CAST(SUM(CASE WHEN keep THEN 1 ELSE 0 END) AS BIGINT) AS n_keep,
-             CAST(SUM(nc) AS BIGINT) AS chars_total,
-             CAST(SUM(CASE WHEN keep THEN 0 ELSE nc END) AS BIGINT) AS chars_removed,
-             CAST(SUM(CASE WHEN keep THEN 0 ELSE nc END) * 1000000 // SUM(nc) AS BIGINT) AS removed_ppm
-           FROM enr GROUP BY source),
-         cl AS (SELECT cluster_id, CAST(COUNT(*) AS BIGINT) AS csz FROM kt GROUP BY 1),
-         cs AS (SELECT e2.source,
-             CAST(SUM(CASE WHEN cl.csz >= 2 THEN 1 ELSE 0 END) AS BIGINT) AS n_multi_clusters,
-             CAST(MAX(cl.csz) AS BIGINT) AS max_cluster_sz
-           FROM enr e2 JOIN cl USING (cluster_id) WHERE e2.keep GROUP BY e2.source)
-         SELECT ps.source, n_docs, n_keep, chars_total, chars_removed, removed_ppm,
-           COALESCE(cs.n_multi_clusters, 0) AS n_multi_clusters,
-           COALESCE(cs.max_cluster_sz, 0) AS max_cluster_sz
-         FROM ps LEFT JOIN cs USING (source) ORDER BY source""",
-    "q_semdedup" ->
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
-         cents AS (SELECT MIN(vec_id) AS cid, emb AS cv FROM e GROUP BY emb
-           ORDER BY cid LIMIT 8),
-         asg AS (SELECT vec_id, emb, cid AS cluster FROM (
-             SELECT e.vec_id, e.emb, c.cid,
-               row_number() OVER (PARTITION BY e.vec_id
-                 ORDER BY list_cosine_similarity(e.emb, c.cv) DESC, c.cid) AS rn
-             FROM e CROSS JOIN cents c) WHERE rn = 1),
-         dups AS (SELECT DISTINCT a.vec_id AS dup_id FROM asg a JOIN asg b
-           ON a.cluster = b.cluster AND b.vec_id < a.vec_id
-           AND list_cosine_similarity(a.emb, b.emb) >= 0.35)
-         SELECT a.vec_id, CAST(a.cluster AS BIGINT) AS cluster,
-           dup_id IS NULL AS keep
-         FROM asg a LEFT JOIN dups ON vec_id = dup_id ORDER BY vec_id""",
-    "q_dedup_embed_exact" ->
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
-         dups AS (SELECT DISTINCT a.vec_id AS dup_id FROM e a JOIN e b
-           ON b.vec_id < a.vec_id
-           AND list_cosine_similarity(a.emb, b.emb) >= 0.35)
-         SELECT vec_id FROM e ANTI JOIN dups ON vec_id = dup_id ORDER BY vec_id""",
-    // full keep-table replay of the embedding-LSH dedup at 0.6 (the
-    // bucketed pipeline verifies exact cosine before dropping; its
-    // keep-table equals the exact relation whenever recall holds —
-    // a mismatch IS a recall regression)
-    "q_dedup_embed" ->
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
-         dups AS (SELECT a.vec_id AS dup_id, CAST(COUNT(*) AS BIGINT) AS n
-           FROM e a JOIN e b ON b.vec_id < a.vec_id
-           AND list_cosine_similarity(a.emb, b.emb) >= 0.6 GROUP BY 1)
-         SELECT e.vec_id, COALESCE(d.n, 0) AS n_dups_smaller, d.n IS NULL AS keep
-         FROM e LEFT JOIN dups d ON e.vec_id = d.dup_id ORDER BY vec_id""",
-    // The Spark path collapses segments by xxhash64; grouping the
-    // segment STRINGS here re-proves hash-space ≡ string-space.
-    "q_segment_dedup" ->
-      """WITH toks AS (SELECT doc_id,
-           list_filter(regexp_split_to_array(COALESCE(text, ''), '[ \t\n\r]+'), x -> x <> '') AS ts
-           FROM documents),
-         chunks AS (SELECT doc_id, i AS cidx,
-             array_to_string(ts[(i * 8 + 1) : (i * 8 + 8)], ' ') AS chunk
-           FROM toks, UNNEST(range(0, CAST(ceil(len(ts) / 8.0) AS BIGINT))) AS u(i)),
-         dup AS (SELECT chunk FROM chunks GROUP BY chunk
-                 HAVING COUNT(DISTINCT doc_id) >= 2),
-         marked AS (SELECT c.doc_id, c.cidx, c.chunk, d.chunk IS NOT NULL AS removed
-           FROM chunks c LEFT JOIN dup d ON c.chunk = d.chunk),
-         agg AS (SELECT doc_id,
-             COALESCE(string_agg(CASE WHEN NOT removed THEN chunk END, ' ' ORDER BY cidx), '') AS clean_text,
-             CAST(COUNT(*) AS BIGINT) AS n_chunks,
-             CAST(COUNT(*) FILTER (removed) AS BIGINT) AS n_removed
-           FROM marked GROUP BY doc_id)
-         SELECT d.doc_id, COALESCE(a.clean_text, '') AS clean_text,
-           COALESCE(a.n_chunks, 0) AS n_chunks, COALESCE(a.n_removed, 0) AS n_removed
-         FROM documents d LEFT JOIN agg a ON d.doc_id = a.doc_id
-         ORDER BY d.doc_id""",
-    "q_boilerplate" ->
-      """WITH toks AS (SELECT doc_id, source,
-           list_filter(regexp_split_to_array(COALESCE(text, ''), '[ \t\n\r]+'), x -> x <> '') AS ts
-           FROM documents),
-         chunks AS (SELECT doc_id, source, i AS cidx,
-             array_to_string(ts[(i * 2 + 1) : (i * 2 + 2)], ' ') AS chunk
-           FROM toks, UNNEST(range(0, CAST(ceil(len(ts) / 2.0) AS BIGINT))) AS u(i)),
-         gd AS (SELECT source, COUNT(*) AS gdocs FROM documents GROUP BY source),
-         boiler AS (SELECT source, chunk FROM (
-             SELECT c.source, c.chunk, COUNT(DISTINCT c.doc_id) AS ndocs, MAX(g.gdocs) AS gdocs
-             FROM chunks c JOIN gd g ON c.source = g.source
-             GROUP BY c.source, c.chunk)
-           WHERE ndocs >= 5 AND ndocs * 1000 >= gdocs * 200),
-         marked AS (SELECT c.doc_id, c.source, c.cidx, c.chunk, b.chunk IS NOT NULL AS removed
-           FROM chunks c LEFT JOIN boiler b ON c.source = b.source AND c.chunk = b.chunk),
-         agg AS (SELECT doc_id,
-             COALESCE(string_agg(CASE WHEN NOT removed THEN chunk END, ' ' ORDER BY cidx), '') AS clean_text,
-             CAST(COUNT(*) AS BIGINT) AS n_chunks,
-             CAST(COUNT(*) FILTER (removed) AS BIGINT) AS n_removed
-           FROM marked GROUP BY doc_id)
-         SELECT d.doc_id, d.source, COALESCE(a.clean_text, '') AS clean_text,
-           COALESCE(a.n_chunks, 0) AS n_chunks, COALESCE(a.n_removed, 0) AS n_removed
-         FROM documents d LEFT JOIN agg a ON d.doc_id = a.doc_id
-         ORDER BY d.doc_id""",
-    "q_inverted_index" ->
-      """WITH toks AS (SELECT doc_id,
-           list_filter(regexp_split_to_array(COALESCE(text, ''), '[ \t\n\r]+'), x -> x <> '') AS ts
-           FROM documents),
-         terms AS (SELECT DISTINCT doc_id, t AS term FROM toks, UNNEST(ts) AS u(t))
-         SELECT term, CAST(COUNT(*) AS BIGINT) AS df,
-           CAST(SUM(doc_id) AS BIGINT) AS doc_sum,
-           MIN(doc_id) AS min_doc, MAX(doc_id) AS max_doc
-         FROM terms GROUP BY term ORDER BY term""",
-    // Exact global distinct + the asserted 5% band; the sketch union
-    // itself happens Spark-side (DataSketches HLL).
-    "q_sketch_merge" ->
-      """SELECT CAST(COUNT(DISTINCT event_type) AS BIGINT) AS n_partials,
-         CAST(COUNT(DISTINCT user_id) AS BIGINT) AS exact_users,
-         TRUE AS merged_within_5pct
-         FROM events""",
-    "q_cluster_assign" ->
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
-         c AS (SELECT vec_id AS cid, emb AS cemb FROM e WHERE vec_id < 8),
-         sims AS (SELECT e.vec_id, c.cid, list_cosine_similarity(e.emb, c.cemb) AS s
-                  FROM e, c),
-         r AS (SELECT vec_id, cid,
-             row_number() OVER (PARTITION BY vec_id ORDER BY s DESC, cid) AS rn
-           FROM sims)
-         SELECT vec_id, cid AS cluster FROM r WHERE rn = 1 ORDER BY vec_id""",
-    "q_filter_chain" ->
-      """WITH toks AS (SELECT doc_id, lang, text,
-           list_filter(regexp_split_to_array(COALESCE(text, ''), '[ \t\n\r]+'), x -> x <> '') AS ts
-           FROM documents),
-         base AS (SELECT doc_id, lang, text,
-             CAST(len(ts) AS BIGINT) AS n_words,
-             CAST(greatest(len(ts) - 1, 0) AS BIGINT) AS n_g2,
-             CAST(len(list_distinct(list_transform(range(1, len(ts)), i -> ts[i] || ' ' || ts[i+1]))) AS BIGINT) AS n_u2g
-           FROM toks),
-         flags AS (SELECT doc_id,
-             (lang = 'en') AS pass_lang,
-             (n_words >= 20 AND n_words <= 2000) AS pass_len,
-             (CASE WHEN LEN(list_filter(regexp_split_to_array(LOWER(text), '\W+'), w -> LEN(w) > 0)) = 0 THEN 0.0 ELSE
-               LEN(list_filter(list_filter(regexp_split_to_array(LOWER(text), '\W+'), w -> LEN(w) > 0),
-                   w -> w IN ('the','a','an','of','and','to','in','is','on','for','with','at','by','from','it','that','this','be','are','as')))::DOUBLE /
-               LEN(list_filter(regexp_split_to_array(LOWER(text), '\W+'), w -> LEN(w) > 0)) END >= 0.1) AS pass_stop,
-             (n_g2 = 0 OR n_u2g * 5 >= n_g2 * 2) AS pass_rep
-           FROM base)
-         SELECT doc_id, pass_lang, pass_len, pass_stop, pass_rep,
-           (pass_lang AND pass_len AND pass_stop AND pass_rep) AS keep
-         FROM flags ORDER BY doc_id""",
-    // End-to-end corpus-assembly replay: stage CTEs mirror the Spark
-    // pipeline 1:1 — canon = C93 canonical-URL dedup of the planted
-    // per-pair surface variants (replayed as min-id per doc_id // 2
-    // group, INDEPENDENT of URL parsing), flt = quality gate
-    // (whitespace-token count band, stopword floor, 2-gram
-    // uniqueness), ex = exact dedup (min id per md5), dead/ndd =
-    // complete shingle-space Jaccard keep-first (the oracle can
-    // afford straight all-pairs; shared-shingle blocking loses
-    // nothing at >= 0.8), bg/dirty/dec = 4-gram benchmark
-    // decontamination vs the RAW %97 slice, samp = md5-bucket
-    // stratified keep (8000/5000/2500 of 10000), packed = cumulative
-    // token-offset chunking; final md5(string_agg) fingerprints every
-    // byte of every chunk.
-    "q_corpus_pipeline" ->
-      """WITH toks AS (SELECT doc_id, lang, source, text,
-           list_filter(regexp_split_to_array(COALESCE(text, ''), '[ \t\n\r]+'), x -> x <> '') AS ts
-           FROM documents),
-         canon AS (SELECT * FROM toks
-           WHERE doc_id IN (SELECT MIN(doc_id) FROM documents GROUP BY doc_id // 2)),
-         base AS (SELECT *, CAST(len(ts) AS BIGINT) AS n_words,
-             CAST(greatest(len(ts) - 1, 0) AS BIGINT) AS n_g2,
-             CAST(len(list_distinct(list_transform(range(1, len(ts)), i -> ts[i] || ' ' || ts[i+1]))) AS BIGINT) AS n_u2g
-           FROM canon),
-         flt AS (SELECT doc_id, lang, source, text, ts FROM base
-           WHERE n_words >= 20 AND n_words <= 2000
-             AND (CASE WHEN LEN(list_filter(regexp_split_to_array(LOWER(text), '\W+'), w -> LEN(w) > 0)) = 0 THEN 0.0 ELSE
-               LEN(list_filter(list_filter(regexp_split_to_array(LOWER(text), '\W+'), w -> LEN(w) > 0),
-                   w -> w IN ('the','a','an','of','and','to','in','is','on','for','with','at','by','from','it','that','this','be','are','as')))::DOUBLE /
-               LEN(list_filter(regexp_split_to_array(LOWER(text), '\W+'), w -> LEN(w) > 0)) END) >= 0.1
-             AND (n_g2 = 0 OR n_u2g * 5 >= n_g2 * 2)),
-         ex AS (SELECT f.* FROM flt f
-           JOIN (SELECT md5(text) AS k, MIN(doc_id) AS keep_id FROM flt GROUP BY 1) e
-             ON f.doc_id = e.keep_id),
-         sh AS (SELECT doc_id, list(DISTINCT array_to_string(ws[i : i + 2], ' ')) AS sh
-           FROM (SELECT doc_id,
-                   list_filter(string_split_regex(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[\x00-\x2f\x3a-\x40\x5b-\x5e\x60\x7b-\x7f]+'), t -> t <> '') AS ws
-                 FROM ex),
-             UNNEST(range(1, len(ws) - 1)) AS u(i)
-           GROUP BY doc_id),
-         dead AS (SELECT DISTINCT a.doc_id AS id FROM sh a JOIN sh b ON b.doc_id < a.doc_id
-           AND len(list_intersect(a.sh, b.sh)) * 1.0 /
-               len(list_distinct(list_concat(a.sh, b.sh))) >= 0.8),
-         ndd AS (SELECT * FROM ex ANTI JOIN dead ON doc_id = id),
-         bg AS (SELECT DISTINCT array_to_string(ts[i : i + 3], ' ') AS gram
-           FROM toks, UNNEST(range(1, len(ts) - 2)) AS u(i)
-           WHERE doc_id % 97 = 0),
-         dirty AS (SELECT DISTINCT t.doc_id
-           FROM (SELECT doc_id, ts FROM ndd WHERE doc_id % 97 <> 0) t,
-             UNNEST(range(1, len(ts) - 2)) AS u(i)
-           WHERE array_to_string(ts[i : i + 3], ' ') IN (SELECT gram FROM bg)),
-         dec AS (SELECT * FROM ndd WHERE doc_id % 97 <> 0
-           AND doc_id NOT IN (SELECT doc_id FROM dirty)),
-         samp AS (SELECT * FROM dec
-           WHERE CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT) % 10000 <
-             CASE lang WHEN 'en' THEN 8000 WHEN 'es' THEN 5000 ELSE 2500 END),
-         packed AS (SELECT source, doc_id, text, CAST(len(ts) AS BIGINT) AS n_tok,
-             COALESCE(SUM(CAST(len(ts) AS BIGINT)) OVER (PARTITION BY source ORDER BY doc_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) // 512 AS chunk_id
-           FROM samp)
-         SELECT source, CAST(chunk_id AS BIGINT) AS chunk_id,
-           CAST(COUNT(*) AS BIGINT) AS n_docs, CAST(SUM(n_tok) AS BIGINT) AS chunk_tok,
-           md5(string_agg(text, ' ' ORDER BY doc_id)) AS text_md5
-         FROM packed GROUP BY 1, 2 ORDER BY source, chunk_id""",
-    // session_window's exclusive end: an event at exactly last+gap
-    // starts a NEW session, hence >= (vs q_sessionize's >).
-    "q_session_window" ->
-      """WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS ts_us FROM events),
-         x AS (SELECT user_id, event_id, ts_us,
-             CASE WHEN lag(ts_us) OVER w IS NULL
-                    OR ts_us - lag(ts_us) OVER w >= 1800000000 THEN 1 ELSE 0 END AS new_sess
-           FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts_us, event_id)),
-         s AS (SELECT user_id, ts_us,
-             SUM(new_sess) OVER (PARTITION BY user_id ORDER BY ts_us, event_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
-           FROM x)
-         SELECT user_id, MIN(ts_us) AS session_start_us,
-           MAX(ts_us) + 1800000000 AS session_end_us,
-           CAST(COUNT(*) AS BIGINT) AS n_events
-         FROM s GROUP BY user_id, sid ORDER BY user_id, session_start_us""",
-    // CAST the SUM out of HUGEINT — see q_salted_join's comment.
-    "q_date_spine" ->
-      """WITH daily AS (SELECT CAST(o_orderdate AS DATE) AS day,
-             CAST(SUM(CAST(round(o_totalprice * 100, 0) AS BIGINT)) AS BIGINT) AS rev_cents
-           FROM orders GROUP BY 1),
-         b AS (SELECT MIN(day) AS lo, MAX(day) AS hi FROM daily),
-         spine AS (SELECT CAST(UNNEST(generate_series(lo, hi, INTERVAL 1 DAY)) AS DATE) AS day FROM b)
-         SELECT s.day, COALESCE(d.rev_cents, 0) AS rev_cents
-         FROM spine s LEFT JOIN daily d USING (day) ORDER BY s.day""",
-    // The same ppm integer recurrence as Graph.pageRank, 3 iterations
-    // unrolled (aggregation is not allowed in a recursive CTE term).
-    // `//` (floor) ≡ Spark's `div` (truncate) here: operands stay
-    // non-negative.
-    "q_pagerank" ->
-      """WITH edges AS (SELECT DISTINCT o_custkey AS src, l_suppkey + 1000000 AS dst
-             FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
-         nodes AS (SELECT src AS node FROM edges UNION SELECT dst FROM edges),
-         deg AS (SELECT src, CAST(COUNT(*) AS BIGINT) AS outdeg FROM edges GROUP BY src),
-         r0 AS (SELECT node, CAST(1000000 AS BIGINT) AS rank FROM nodes),
-         s1 AS (SELECT e.dst, CAST(SUM(r.rank // d.outdeg) AS BIGINT) AS insum
-                FROM edges e JOIN deg d ON e.src = d.src JOIN r0 r ON e.src = r.node
-                GROUP BY e.dst),
-         r1 AS (SELECT n.node, CAST(150000 + 85 * COALESCE(s.insum, 0) // 100 AS BIGINT) AS rank
-                FROM nodes n LEFT JOIN s1 s ON n.node = s.dst),
-         s2 AS (SELECT e.dst, CAST(SUM(r.rank // d.outdeg) AS BIGINT) AS insum
-                FROM edges e JOIN deg d ON e.src = d.src JOIN r1 r ON e.src = r.node
-                GROUP BY e.dst),
-         r2 AS (SELECT n.node, CAST(150000 + 85 * COALESCE(s.insum, 0) // 100 AS BIGINT) AS rank
-                FROM nodes n LEFT JOIN s2 s ON n.node = s.dst),
-         s3 AS (SELECT e.dst, CAST(SUM(r.rank // d.outdeg) AS BIGINT) AS insum
-                FROM edges e JOIN deg d ON e.src = d.src JOIN r2 r ON e.src = r.node
-                GROUP BY e.dst),
-         r3 AS (SELECT n.node, CAST(150000 + 85 * COALESCE(s.insum, 0) // 100 AS BIGINT) AS rank
-                FROM nodes n LEFT JOIN s3 s ON n.node = s.dst)
-         SELECT CAST(node AS BIGINT) AS node, rank FROM r3 ORDER BY node""",
-    "q_scd2" ->
-      """WITH e AS (SELECT user_id, event_id, event_type, epoch_us(ts) AS ts_us FROM events),
-         chg AS (SELECT *, lag(event_type) OVER
-             (PARTITION BY user_id ORDER BY ts_us, event_id) AS prev FROM e),
-         cp AS (SELECT user_id, event_id, event_type, ts_us FROM chg
-                WHERE prev IS NULL OR prev <> event_type),
-         v AS (SELECT user_id, event_type, ts_us AS valid_from_us,
-             lead(ts_us) OVER (PARTITION BY user_id ORDER BY ts_us, event_id) AS valid_to_us
-           FROM cp)
-         SELECT user_id, event_type, valid_from_us, valid_to_us,
-           (valid_to_us IS NULL) AS is_current
-         FROM v ORDER BY user_id, valid_from_us, event_type""",
-    "q_table_checksum" ->
-      """WITH h AS (SELECT CAST(concat('0x', substr(md5(
-             CAST(doc_id AS VARCHAR) || ':' || COALESCE(lang, '') || ':' ||
-             COALESCE(source, '') || ':' || COALESCE(text, '')), 1, 8)) AS BIGINT) AS h
-           FROM documents)
-         SELECT CAST(COUNT(*) AS BIGINT) AS n_rows,
-           CAST(SUM(h) AS BIGINT) AS checksum_sum,
-           CAST(BIT_XOR(h) AS BIGINT) AS checksum_xor
-         FROM h""",
-    "q_source_overlap" ->
-      """WITH toks AS (SELECT source,
-           list_filter(string_split_regex(COALESCE(text, ''), '[ \t\n\r]+'), t -> t <> '') AS ts
-           FROM documents),
-         sh AS (SELECT DISTINCT source, md5(array_to_string(ts[i : i + 2], ' ')) AS h
-           FROM toks, UNNEST(range(1, len(ts) - 1)) AS u(i)),
-         r AS (SELECT source, h, ROW_NUMBER() OVER (PARTITION BY source ORDER BY h) AS rn FROM sh),
-         k AS (SELECT source, h FROM r WHERE rn <= 256),
-         pairs AS (SELECT DISTINCT a.source AS sa, b.source AS sb
-           FROM k a, k b WHERE a.source < b.source),
-         uni AS (SELECT p.sa, p.sb, x.h,
-             MAX(CASE WHEN x.source = p.sa THEN 1 ELSE 0 END) AS in_a,
-             MAX(CASE WHEN x.source = p.sb THEN 1 ELSE 0 END) AS in_b
-           FROM pairs p JOIN k x ON x.source = p.sa OR x.source = p.sb
-           GROUP BY 1, 2, 3),
-         rk AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY sa, sb ORDER BY h) AS rn FROM uni)
-         SELECT sa AS src_a, sb AS src_b,
-           CAST(SUM(in_a * in_b) AS BIGINT) AS matched,
-           CAST(COUNT(*) AS BIGINT) AS denom,
-           CAST(SUM(in_a * in_b) * 1000000 // COUNT(*) AS BIGINT) AS jaccard_ppm
-         FROM rk WHERE rn <= 256 GROUP BY 1, 2 ORDER BY 1, 2""",
-    "q_record_linkage" ->
-      """WITH r AS (SELECT c_custkey, c_name, c_nationkey, c_mktsegment FROM customer)
-         SELECT a.c_custkey AS id_a, b.c_custkey AS id_b,
-           CAST(levenshtein(a.c_name, b.c_name) AS BIGINT) AS dist
-         FROM r a JOIN r b
-           ON a.c_nationkey = b.c_nationkey AND a.c_mktsegment = b.c_mktsegment
-           AND a.c_custkey < b.c_custkey
-         WHERE levenshtein(a.c_name, b.c_name) <= 1
-         ORDER BY id_a, id_b""",
-    // C32b: FastSS deletion-neighborhood replay — keys regenerated by
-    // independent substr arithmetic, key-join candidates, exact verify.
-    "q_record_linkage_del" ->
-      """WITH r AS (SELECT c_custkey AS id, c_name AS s FROM customer
-           WHERE c_name IS NOT NULL),
-         k AS (SELECT id, s, s AS k FROM r
-           UNION
-           SELECT id, s,
-             substr(s, 1, CAST(u.i AS INT) - 1) || substr(s, CAST(u.i AS INT) + 1)
-           FROM r, UNNEST(range(1, len(s) + 1)) AS u(i)),
-         cand AS (SELECT DISTINCT a.id AS id_a, a.s AS s_a, b.id AS id_b, b.s AS s_b
-           FROM k a JOIN k b ON a.k = b.k AND a.id < b.id)
-         SELECT id_a, id_b, CAST(levenshtein(s_a, s_b) AS BIGINT) AS dist
-         FROM cand WHERE levenshtein(s_a, s_b) <= 1
-         ORDER BY id_a, id_b""",
-    // C32c: both deletion levels regenerated by substr arithmetic; the
-    // thresholded verify is load-bearing at k = 2 (shared 2-deletion
-    // keys reach true distance 4)
-    "q_record_linkage_del2" ->
-      """WITH r AS (SELECT c_custkey AS id,
-           c_name || '|' || c_mktsegment || CAST(c_nationkey AS VARCHAR) AS s
-           FROM customer),
-         n AS (SELECT DISTINCT s FROM r),
-         d1 AS (SELECT s,
-             substr(s, 1, CAST(u.i AS INT) - 1) || substr(s, CAST(u.i AS INT) + 1) AS k
-           FROM n, UNNEST(range(1, len(s) + 1)) AS u(i)),
-         k2 AS (SELECT s, s AS k FROM n
-           UNION SELECT s, k FROM d1
-           UNION
-           SELECT s,
-             substr(k, 1, CAST(u.i AS INT) - 1) || substr(k, CAST(u.i AS INT) + 1)
-           FROM d1, UNNEST(range(1, len(k) + 1)) AS u(i)),
-         np AS (SELECT s1, s2, CAST(levenshtein(s1, s2) AS BIGINT) AS dist
-           FROM (SELECT DISTINCT a.s AS s1, b.s AS s2
-             FROM k2 a JOIN k2 b ON a.k = b.k AND a.s < b.s)
-           WHERE levenshtein(s1, s2) <= 2)
-         SELECT id_a, id_b, dist FROM (
-           SELECT x.id AS id_a, y.id AS id_b, CAST(0 AS BIGINT) AS dist
-           FROM r x JOIN r y ON x.s = y.s AND x.id < y.id
-           UNION ALL
-           SELECT LEAST(x.id, y.id), GREATEST(x.id, y.id), np.dist
-           FROM np JOIN r x ON x.s = np.s1 JOIN r y ON y.s = np.s2)
-         ORDER BY id_a, id_b""",
-    // C32d: neighborhoods + union-find replayed — deletion keys by
-    // substr arithmetic, dist<=1 verify, recursive-CTE transitive
-    // closure labeled by component-minimum id (the C14 oracle shape)
-    "q_linkage_clusters" ->
-      """WITH RECURSIVE r AS (SELECT c_custkey AS id,
-           c_name || '|' || c_mktsegment || CAST(c_nationkey AS VARCHAR) AS s
-           FROM customer),
-         n AS (SELECT DISTINCT s FROM r),
-         k AS (SELECT s, s AS k FROM n
-           UNION
-           SELECT s,
-             substr(s, 1, CAST(u.i AS INT) - 1) || substr(s, CAST(u.i AS INT) + 1)
-           FROM n, UNNEST(range(1, len(s) + 1)) AS u(i)),
-         np AS (SELECT s1, s2
-           FROM (SELECT DISTINCT a.s AS s1, b.s AS s2
-             FROM k a JOIN k b ON a.k = b.k AND a.s < b.s)
-           WHERE levenshtein(s1, s2) <= 1),
-         pairs AS (SELECT x.id AS u, y.id AS v
-             FROM np JOIN r x ON x.s = np.s1 JOIN r y ON y.s = np.s2
-           UNION
-           SELECT x.id, y.id FROM r x JOIN r y ON x.s = y.s AND x.id < y.id),
-         edges AS (SELECT u, v FROM pairs UNION SELECT v, u FROM pairs),
-         reach(src, dst) AS (
-           SELECT u, v FROM edges
-           UNION
-           SELECT rc.src, e.v FROM reach rc JOIN edges e ON rc.dst = e.u),
-         comp AS (SELECT src AS node, LEAST(src, MIN(dst)) AS cluster
-           FROM reach GROUP BY src)
-         SELECT c_custkey AS id,
-           CAST(COALESCE(c.cluster, c_custkey) AS BIGINT) AS cluster
-         FROM customer LEFT JOIN comp c ON c_custkey = c.node
-         ORDER BY id""",
-    "q_triangles" ->
-      """WITH e0 AS (SELECT DISTINCT CAST(a.l_partkey AS BIGINT) AS lo,
-             CAST(b.l_partkey AS BIGINT) AS hi
-           FROM lineitem a JOIN lineitem b
-             ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey),
-         deg AS (SELECT n, COUNT(*) AS d FROM
-           (SELECT lo AS n FROM e0 UNION ALL SELECT hi FROM e0) GROUP BY 1),
-         o AS (SELECT CASE WHEN (kl.d, kl.n) < (kh.d, kh.n) THEN e0.lo ELSE e0.hi END AS src,
-               CASE WHEN (kl.d, kl.n) < (kh.d, kh.n) THEN e0.hi ELSE e0.lo END AS dst,
-               CASE WHEN (kl.d, kl.n) < (kh.d, kh.n) THEN kh.d ELSE kl.d END AS d_dst
-           FROM e0 JOIN deg kl ON kl.n = e0.lo JOIN deg kh ON kh.n = e0.hi),
-         w AS (SELECT x.dst AS tv, y.dst AS tw
-           FROM o x JOIN o y ON x.src = y.src
-             AND (x.d_dst, x.dst) < (y.d_dst, y.dst))
-         SELECT CAST(COUNT(*) AS BIGINT) AS n_triangles
-         FROM w JOIN o ON o.src = w.tv AND o.dst = w.tw""",
-    "q_group_topk" ->
-      """WITH p AS (SELECT o_orderpriority,
-           CAST(round(o_totalprice * 100, 0) AS BIGINT) AS score,
-           CAST(o_orderkey AS BIGINT) AS id,
-           ROW_NUMBER() OVER (PARTITION BY o_orderpriority
-             ORDER BY round(o_totalprice * 100, 0) DESC, o_orderkey) AS rn
-           FROM orders)
-         SELECT o_orderpriority, CAST(rn AS BIGINT) AS rank, score, id
-         FROM p WHERE rn <= 5 ORDER BY o_orderpriority, rank""",
-    "q_winsorize" ->
-      """WITH c AS (SELECT CAST(round(o_totalprice * 100, 0) AS BIGINT) AS c FROM orders),
-         p AS (SELECT CAST(FLOOR(quantile_cont(c, 0.05)) AS BIGINT) AS lo,
-                      CAST(FLOOR(quantile_cont(c, 0.95)) AS BIGINT) AS hi FROM c)
-         SELECT CAST(COUNT(*) AS BIGINT) AS n_orders,
-           CAST(SUM(GREATEST(p.lo, LEAST(p.hi, c.c))) AS BIGINT) AS winsorized_sum_c,
-           CAST(SUM(CASE WHEN c.c < p.lo THEN 1 ELSE 0 END) AS BIGINT) AS n_clipped_low,
-           CAST(SUM(CASE WHEN c.c > p.hi THEN 1 ELSE 0 END) AS BIGINT) AS n_clipped_high
-         FROM c, p""",
-    // rank-based medians: quantile_disc ≡ Spark percentile_disc (the
-    // ceil(q·n)-th order statistic, even-count ties included)
-    "q_mad_outliers" ->
-      """WITH c AS (SELECT CAST(round(o_totalprice * 100, 0) AS BIGINT) AS c FROM orders),
-         m AS (SELECT CAST(quantile_disc(c, 0.5) AS BIGINT) AS med FROM c),
-         d AS (SELECT ABS(c.c - m.med) AS ad, m.med FROM c, m),
-         md AS (SELECT CAST(quantile_disc(ad, 0.5) AS BIGINT) AS mad FROM d)
-         SELECT CAST(COUNT(*) AS BIGINT) AS n_rows,
-           CAST(ANY_VALUE(d.med) AS BIGINT) AS med,
-           CAST(ANY_VALUE(md.mad) AS BIGINT) AS mad,
-           CAST(SUM(CASE WHEN d.ad > 5 * md.mad THEN 1 ELSE 0 END) AS BIGINT) AS n_outliers
-         FROM d, md""",
-    // pos - ROW_NUMBER is constant within a consecutive run: the same
-    // one-window-pass islands construction, replayed independently.
-    "q_islands" ->
-      """WITH m AS (SELECT DISTINCT o_custkey,
-             CAST(year(o_orderdate) * 12 + month(o_orderdate) - 1 AS BIGINT) AS mi
-           FROM orders),
-         isl AS (SELECT o_custkey, mi,
-             mi - ROW_NUMBER() OVER (PARTITION BY o_custkey ORDER BY mi) AS g
-           FROM m),
-         st AS (SELECT o_custkey, g, COUNT(*) AS len, MIN(mi) AS s, MAX(mi) AS e
-           FROM isl GROUP BY 1, 2)
-         SELECT o_custkey, CAST(COUNT(*) AS BIGINT) AS n_islands,
-           CAST(SUM(len) AS BIGINT) AS n_active_months,
-           CAST(MAX(len) AS BIGINT) AS longest_streak,
-           CAST(MIN(s) AS BIGINT) AS first_month,
-           CAST(MAX(e) AS BIGINT) AS last_month
-         FROM st GROUP BY 1 ORDER BY 1""",
-    // GLOBAL running sum over all endpoint deltas (the sequential
-    // textbook sweep), per-hour max — equality proves the Spark
-    // side's segmented two-level prefix sum decomposes it exactly.
-    // the self-contained piece decomposition replayed: intervals
-    // clipped per bucket, −1 before +1 at equal instants, per-bucket
-    // max prefix from level 0.
-    "q_concurrency_live" ->
-      """WITH e AS (SELECT epoch_us(ts) AS s, epoch_us(ts) + 3600000000 AS e
-           FROM events),
-         bks AS (SELECT s, e, u.b AS b
-           FROM e, UNNEST(range(s // 3600000000, (e - 1) // 3600000000 + 1))
-             AS u(b)),
-         p AS (SELECT b, GREATEST(s, b * 3600000000) AS ps,
-             LEAST(e, (b + 1) * 3600000000) AS pe FROM bks),
-         d AS (SELECT b, ps AS t, 1 AS dd FROM p
-               UNION ALL SELECT b, pe, -1 FROM p),
-         r AS (SELECT b, t, dd, SUM(dd) OVER (PARTITION BY b ORDER BY t, dd
-             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS rs
-           FROM d)
-         SELECT b AS hour_idx, CAST(MAX(rs) AS BIGINT) AS peak,
-           CAST(COUNT(*) // 2 AS BIGINT) AS n_pieces
-         FROM r GROUP BY 1 ORDER BY 1""",
-    "q_peak_concurrency" ->
-      """WITH e AS (SELECT epoch_us(ts) AS s, epoch_us(ts) + 3600000000 AS t_end
-           FROM events),
-         d AS (SELECT s AS t, 1 AS delta FROM e
-               UNION ALL SELECT t_end, -1 FROM e),
-         r AS (SELECT t, SUM(delta) OVER (ORDER BY t, delta
-             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS rs
-           FROM d)
-         SELECT t // 3600000000 AS hour_idx, CAST(MAX(rs) AS BIGINT) AS peak,
-           CAST(COUNT(*) AS BIGINT) AS n_deltas
-         FROM r GROUP BY 1 ORDER BY 1""",
-    // independent range-join formulation: for each calendar day in the
-    // data span, distinct customers active in [day-6, day]; inner join
-    // drops zero-coverage days exactly as the cover-day explode does.
-    "q_rolling_distinct" ->
-      """WITH p AS (SELECT DISTINCT o_custkey AS c,
-             CAST(datediff('day', DATE '1970-01-01', CAST(o_orderdate AS DATE)) AS BIGINT) AS d
-           FROM orders),
-         lim AS (SELECT MIN(d) AS lo, MAX(d) AS hi FROM p),
-         days AS (SELECT UNNEST(generate_series(lo, hi)) AS day FROM lim)
-         SELECT day, CAST(COUNT(DISTINCT c) AS BIGINT) AS n_customers
-         FROM days JOIN p ON p.d BETWEEN day - 6 AND day
-         GROUP BY 1 ORDER BY 1""",
-    // independent non-equi formulation: band = count of breaks <= value
-    // via a correlated aggregate — equality proves the plan-embedded
-    // binary search assigns every row the same band as the BETWEEN join
-    // semantics it replaces.
-    "q_band_lookup" ->
-      """WITH v AS (SELECT DISTINCT CAST(round(p_retailprice * 100, 0) AS BIGINT) AS v FROM part),
-         r AS (SELECT v, ROW_NUMBER() OVER (ORDER BY v) AS rn FROM v),
-         b AS (SELECT v FROM r WHERE rn % 100 = 0),
-         l AS (SELECT CAST(round(l_extendedprice * 100, 0) AS BIGINT) AS c FROM lineitem),
-         band AS (SELECT c, (SELECT COUNT(*) FROM b WHERE b.v <= l.c) AS band_idx FROM l)
-         SELECT CAST(band_idx AS BIGINT) AS band_idx,
-           CAST(COUNT(*) AS BIGINT) AS n_items, CAST(SUM(c) AS BIGINT) AS sum_cents,
-           CAST(MIN(c) AS BIGINT) AS min_cents, CAST(MAX(c) AS BIGINT) AS max_cents
-         FROM band GROUP BY 1 ORDER BY 1""",
-    // quantile_disc ≡ Spark percentile_disc (B52 precedent); scores are
-    // threshold compares so ties land identically in both engines.
-    "q_rfm" ->
-      """WITH base AS (SELECT o_custkey,
-             CAST(datediff('day', MAX(CAST(o_orderdate AS DATE)), DATE '2001-09-01') AS BIGINT) AS recency_days,
-             CAST(COUNT(*) AS BIGINT) AS frequency,
-             CAST(SUM(CAST(round(o_totalprice * 100, 0) AS BIGINT)) AS BIGINT) AS monetary_cents
-           FROM orders GROUP BY 1),
-         s AS (SELECT *, -recency_days AS rec_neg FROM base),
-         cuts AS (SELECT
-             quantile_disc(rec_neg, 0.2) AS r1, quantile_disc(rec_neg, 0.4) AS r2,
-             quantile_disc(rec_neg, 0.6) AS r3, quantile_disc(rec_neg, 0.8) AS r4,
-             quantile_disc(frequency, 0.2) AS f1, quantile_disc(frequency, 0.4) AS f2,
-             quantile_disc(frequency, 0.6) AS f3, quantile_disc(frequency, 0.8) AS f4,
-             quantile_disc(monetary_cents, 0.2) AS m1, quantile_disc(monetary_cents, 0.4) AS m2,
-             quantile_disc(monetary_cents, 0.6) AS m3, quantile_disc(monetary_cents, 0.8) AS m4
-           FROM s),
-         sc AS (SELECT o_custkey, recency_days, frequency, monetary_cents,
-             CAST(1 + (rec_neg > r1)::INT + (rec_neg > r2)::INT
-                    + (rec_neg > r3)::INT + (rec_neg > r4)::INT AS BIGINT) AS r_score,
-             CAST(1 + (frequency > f1)::INT + (frequency > f2)::INT
-                    + (frequency > f3)::INT + (frequency > f4)::INT AS BIGINT) AS f_score,
-             CAST(1 + (monetary_cents > m1)::INT + (monetary_cents > m2)::INT
-                    + (monetary_cents > m3)::INT + (monetary_cents > m4)::INT AS BIGINT) AS m_score
-           FROM s, cuts)
-         SELECT *, CAST(r_score * 100 + f_score * 10 + m_score AS BIGINT) AS segment
-         FROM sc ORDER BY o_custkey""",
-    // FULL recompute of the joined view — equality proves the Spark
-    // side's delta rule (ΔA⋈B_new ∪ A_old⋈ΔB) emits every pair of
-    // the old∪delta join exactly once.
-    "q_incremental_join" ->
-      """WITH j AS (SELECT o_orderpriority,
-             CAST(round(l_extendedprice * (1 - l_discount) * 100, 0) AS BIGINT) AS rev
-           FROM orders JOIN lineitem ON o_orderkey = l_orderkey)
-         SELECT o_orderpriority, CAST(COUNT(*) AS BIGINT) AS n_rows,
-           CAST(SUM(rev) AS BIGINT) AS rev_cents
-         FROM j GROUP BY 1 ORDER BY 1""",
-    // the sequential textbook definition: running weight sum over
-    // values in order, min value reaching ceil(q·W) — equality proves
-    // the two-level bucket decomposition exact.
-    "q_weighted_quantile" ->
-      """WITH f AS (SELECT CAST(round(l_extendedprice * 100, 0) AS BIGINT) AS v,
-             CAST(l_quantity AS BIGINT) AS w FROM lineitem),
-         tot AS (SELECT SUM(w) AS tw FROM f),
-         pv AS (SELECT v, SUM(w) AS wv FROM f GROUP BY v),
-         c AS (SELECT v, SUM(wv) OVER (ORDER BY v
-             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cw FROM pv),
-         q AS (SELECT UNNEST([250000, 500000, 900000, 990000]) AS q_ppm),
-         t AS (SELECT q_ppm, (q_ppm * tw + 999999) // 1000000 AS r FROM q, tot)
-         SELECT CAST(t.q_ppm AS BIGINT) AS q_ppm,
-           CAST(MIN(c.v) AS BIGINT) AS value_cents
-         FROM t JOIN c ON c.cw >= t.r GROUP BY 1 ORDER BY 1""",
-    // per-key count tables full-outer-joined; top-20 contributions
-    // under the same (out_rows desc, key) total order.
-    "q_join_profile" ->
-      """WITH ca AS (SELECT l_partkey AS key, COUNT(*) AS n_left
-           FROM lineitem GROUP BY 1),
-         cb AS (SELECT l_partkey AS key, COUNT(*) AS n_right
-           FROM lineitem WHERE l_returnflag = 'R' GROUP BY 1),
-         j AS (SELECT COALESCE(ca.key, cb.key) AS key,
-             COALESCE(n_left, 0) AS n_left, COALESCE(n_right, 0) AS n_right
-           FROM ca FULL OUTER JOIN cb ON ca.key = cb.key)
-         SELECT key, CAST(n_left AS BIGINT) AS n_left,
-           CAST(n_right AS BIGINT) AS n_right,
-           CAST(n_left * n_right AS BIGINT) AS out_rows
-         FROM j ORDER BY out_rows DESC, key LIMIT 20""",
-    // the window formulation replayed over the same rollup; OTHERS
-    // folds ranks > 3, shares are exact HUGEINT ppm of nation mass.
-    "q_topk_others" ->
-      """WITH r AS (SELECT n_name, p_brand,
-             SUM(CAST(round(l_extendedprice * 100, 0) AS BIGINT)
-               * CAST(round((1 - l_discount) * 100, 0) AS BIGINT)) AS rev
-           FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-             JOIN customer ON o_custkey = c_custkey
-             JOIN nation ON c_nationkey = n_nationkey
-             JOIN part ON l_partkey = p_partkey
-           GROUP BY 1, 2),
-         rk AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY n_name
-             ORDER BY rev DESC, p_brand) AS rn FROM r),
-         folded AS (SELECT n_name,
-             CASE WHEN rn <= 3 THEN p_brand ELSE 'OTHERS' END AS p_brand,
-             SUM(rev) AS rev_e4, COUNT(*) AS n_members, MIN(rn) AS rank
-           FROM rk GROUP BY 1, 2)
-         SELECT n_name, p_brand, CAST(rank AS BIGINT) AS rank,
-           CAST(rev_e4 AS BIGINT) AS rev_e4,
-           CAST(n_members AS BIGINT) AS n_members,
-           CAST(CAST(rev_e4 AS HUGEINT) * 1000000
-             // SUM(rev_e4) OVER (PARTITION BY n_name) AS BIGINT) AS share_ppm
-         FROM folded ORDER BY n_name, rank""",
-    // B94's closed form replayed PER MOVEMENT: the online state
-    // machine must agree with the prefix-min identity on every row.
-    "q_clamped_balance_stream" ->
-      """WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS ts_us,
-             CASE WHEN event_type IN ('purchase', 'signup')
-                  THEN CAST(round(value * 100, 0) AS BIGINT)
-                  ELSE -CAST(round(value * 100, 0) AS BIGINT) END AS d
-           FROM events
-           WHERE event_type IN ('purchase', 'signup', 'view', 'error')),
-         p AS (SELECT user_id, event_id, ts_us, d,
-             SUM(d) OVER (PARTITION BY user_id ORDER BY ts_us, event_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS pre
-           FROM e),
-         m AS (SELECT user_id, event_id, pre,
-             MIN(pre) OVER (PARTITION BY user_id ORDER BY ts_us, event_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS rm
-           FROM p)
-         SELECT user_id, event_id,
-           CAST(pre + GREATEST(0, -rm) AS BIGINT) AS balance_cents,
-           CAST(GREATEST(0, -rm) AS BIGINT) AS rejected_cents
-         FROM m ORDER BY event_id""",
-    // the sufficient statistics replayed in HUGEINT with the same
-    // n-normalizing truncating division before the square.
-    "q_corr_matrix" ->
-      """WITH m AS (SELECT CAST(round(l_quantity, 0) AS BIGINT) AS qty,
-             CAST(round(l_extendedprice, 0) AS BIGINT) AS price_usd,
-             CAST(round(l_discount * 100, 0) AS BIGINT) AS disc_pct,
-             CAST(round(l_tax * 100, 0) AS BIGINT) AS tax_pct
-           FROM lineitem),
-         s AS (SELECT CAST(COUNT(*) AS HUGEINT) AS n,
-             CAST(SUM(qty) AS HUGEINT) AS s1, CAST(SUM(price_usd) AS HUGEINT) AS s2,
-             CAST(SUM(disc_pct) AS HUGEINT) AS s3, CAST(SUM(tax_pct) AS HUGEINT) AS s4,
-             CAST(SUM(qty * qty) AS HUGEINT) AS q1,
-             CAST(SUM(price_usd * price_usd) AS HUGEINT) AS q2,
-             CAST(SUM(disc_pct * disc_pct) AS HUGEINT) AS q3,
-             CAST(SUM(tax_pct * tax_pct) AS HUGEINT) AS q4,
-             CAST(SUM(qty * price_usd) AS HUGEINT) AS p12,
-             CAST(SUM(qty * disc_pct) AS HUGEINT) AS p13,
-             CAST(SUM(qty * tax_pct) AS HUGEINT) AS p14,
-             CAST(SUM(price_usd * disc_pct) AS HUGEINT) AS p23,
-             CAST(SUM(price_usd * tax_pct) AS HUGEINT) AS p24,
-             CAST(SUM(disc_pct * tax_pct) AS HUGEINT) AS p34
-           FROM m),
-         pairs AS (
-           SELECT 'qty' AS a, 'price_usd' AS b, n, s1 AS sa, s2 AS sb,
-             (n*p12 - s1*s2) // n AS cov, (n*q1 - s1*s1) // n AS va,
-             (n*q2 - s2*s2) // n AS vb FROM s
-           UNION ALL SELECT 'qty', 'disc_pct', n, s1, s3,
-             (n*p13 - s1*s3) // n, (n*q1 - s1*s1) // n, (n*q3 - s3*s3) // n FROM s
-           UNION ALL SELECT 'qty', 'tax_pct', n, s1, s4,
-             (n*p14 - s1*s4) // n, (n*q1 - s1*s1) // n, (n*q4 - s4*s4) // n FROM s
-           UNION ALL SELECT 'price_usd', 'disc_pct', n, s2, s3,
-             (n*p23 - s2*s3) // n, (n*q2 - s2*s2) // n, (n*q3 - s3*s3) // n FROM s
-           UNION ALL SELECT 'price_usd', 'tax_pct', n, s2, s4,
-             (n*p24 - s2*s4) // n, (n*q2 - s2*s2) // n, (n*q4 - s4*s4) // n FROM s
-           UNION ALL SELECT 'disc_pct', 'tax_pct', n, s3, s4,
-             (n*p34 - s3*s4) // n, (n*q3 - s3*s3) // n, (n*q4 - s4*s4) // n FROM s)
-         SELECT a AS measure_a, b AS measure_b, CAST(n AS BIGINT) AS n,
-           CAST(sa AS BIGINT) AS sum_a, CAST(sb AS BIGINT) AS sum_b,
-           CAST(cov * cov * 1000000 // (va * vb) AS BIGINT) AS r2_ppm,
-           CAST(CASE WHEN cov > 0 THEN 1 WHEN cov < 0 THEN -1 ELSE 0 END
-             AS BIGINT) AS r_sign
-         FROM pairs ORDER BY measure_a, measure_b""",
-    // quantile_disc ≡ percentile_disc; over-representation replayed
-    // in HUGEINT (tail share over overall share).
-    "q_tail_attribution" ->
-      """WITH o AS (SELECT c_mktsegment,
-             CAST(round(o_totalprice * 100, 0) AS BIGINT) AS c
-           FROM orders JOIN customer ON o_custkey = c_custkey),
-         cut AS (SELECT CAST(quantile_disc(c, 0.9) AS BIGINT) AS p90 FROM o),
-         g AS (SELECT c_mktsegment, COUNT(*) AS n_orders,
-             SUM(CASE WHEN c > p90 THEN 1 ELSE 0 END) AS n_tail,
-             SUM(CASE WHEN c > p90 THEN c ELSE 0 END) AS tail_cents
-           FROM o, cut GROUP BY 1),
-         t AS (SELECT SUM(n_orders) AS n_all, SUM(n_tail) AS tail_all FROM g)
-         SELECT c_mktsegment, CAST(n_orders AS BIGINT) AS n_orders,
-           CAST(n_tail AS BIGINT) AS n_tail,
-           CAST(tail_cents AS BIGINT) AS tail_cents,
-           CAST(n_orders * 1000000 // n_all AS BIGINT) AS overall_share_ppm,
-           CAST(n_tail * 1000000 // tail_all AS BIGINT) AS tail_share_ppm,
-           CAST(CAST(n_tail AS HUGEINT) * n_all * 1000000
-             // (CAST(n_orders AS HUGEINT) * tail_all) AS BIGINT)
-             AS over_rep_ppm
-         FROM g, t ORDER BY c_mktsegment""",
-    // boundaries, covering join, lexicographic winner, run merge —
-    // the full resolution replayed (row_number DESC = struct max).
-    "q_effective_config" ->
-      """WITH iv AS (SELECT l_partkey AS k,
-             CAST(datediff('day', DATE '1970-01-01', CAST(l_shipdate AS DATE))
-               AS BIGINT) AS vf,
-             CAST(datediff('day', DATE '1970-01-01', CAST(l_shipdate AS DATE))
-               AS BIGINT) + 10 + CAST(round(l_quantity, 0) AS BIGINT) % 20 AS vt,
-             CAST(l_linenumber AS BIGINT) AS prio,
-             l_orderkey * 10 + l_linenumber AS tie,
-             CAST(round(l_extendedprice * 100, 0) AS BIGINT) AS val
-           FROM lineitem WHERE l_partkey % 7 = 0),
-         b AS (SELECT k, vf AS p FROM iv UNION SELECT k, vt FROM iv),
-         segs AS (SELECT k, p AS s,
-             LEAD(p) OVER (PARTITION BY k ORDER BY p) AS e FROM b),
-         cov AS (SELECT s.k, s.s, s.e, i.prio, i.tie, i.vf, i.val,
-             ROW_NUMBER() OVER (PARTITION BY s.k, s.s
-               ORDER BY i.prio DESC, i.tie DESC, i.vf DESC, i.val DESC) AS rn
-           FROM segs s JOIN iv i
-             ON s.k = i.k AND i.vf <= s.s AND s.s < i.vt
-           WHERE s.e IS NOT NULL),
-         w AS (SELECT k, s, e, prio, tie, vf, val FROM cov WHERE rn = 1),
-         runs AS (SELECT *, CASE WHEN LAG(e) OVER wk IS NULL
-               OR LAG(e) OVER wk <> s OR LAG(tie) OVER wk <> tie
-               OR LAG(prio) OVER wk <> prio OR LAG(vf) OVER wk <> vf
-             THEN 1 ELSE 0 END AS nr
-           FROM w WINDOW wk AS (PARTITION BY k ORDER BY s)),
-         g AS (SELECT *, SUM(nr) OVER (PARTITION BY k ORDER BY s
-             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS run
-           FROM runs)
-         SELECT k AS l_partkey, CAST(MIN(s) AS BIGINT) AS seg_start,
-           CAST(MAX(e) AS BIGINT) AS seg_end,
-           CAST(MAX(prio) AS BIGINT) AS prio, CAST(MAX(tie) AS BIGINT) AS tie,
-           CAST(MAX(val) AS BIGINT) AS price_cents
-         FROM g GROUP BY k, run ORDER BY l_partkey, seg_start""",
-    // D2's ms-space sessionization replay + ordered string_agg + the
-    // same regex find / non-overlapping count.
-    "q_pattern_sessions" ->
-      """WITH e AS (SELECT user_id, event_id, substr(event_type, 1, 1) AS sym,
-             epoch_us(ts) // 1000 AS ts_ms FROM events),
-         lagged AS (SELECT *, LAG(ts_ms) OVER
-             (PARTITION BY user_id ORDER BY ts_ms, event_id) AS prev_ms FROM e),
-         flagged AS (SELECT *, CASE WHEN prev_ms IS NULL
-             OR ts_ms - prev_ms > 1800000 THEN 1 ELSE 0 END AS new_sess
-           FROM lagged),
-         sess AS (SELECT *, SUM(new_sess) OVER (PARTITION BY user_id
-             ORDER BY ts_ms, event_id
-             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
-           FROM flagged),
-         g AS (SELECT user_id, sid,
-             CAST(MIN(ts_ms) * 1000 AS BIGINT) AS session_start_us,
-             CAST(MAX(ts_ms) * 1000 AS BIGINT) AS session_end_us,
-             string_agg(sym, '' ORDER BY ts_ms, event_id) AS seq
-           FROM sess GROUP BY 1, 2)
-         SELECT user_id, session_start_us, session_end_us, seq,
-           FALSE AS truncated,
-           regexp_matches(seq, 'v[^e]*p') AS matched,
-           CAST(len(regexp_extract_all(seq, 'v[^e]*p')) AS BIGINT) AS n_matches
-         FROM g ORDER BY user_id, session_start_us""",
-    // the symbol string rebuilt with ORDER BY string_agg; regex
-    // find + non-overlapping count semantics agree across engines.
-    "q_sequence_pattern" ->
-      """WITH e AS (SELECT user_id, epoch_us(ts) AS ts_us, event_id,
-             substr(event_type, 1, 1) AS sym
-           FROM events),
-         sq AS (SELECT user_id,
-             string_agg(sym, '' ORDER BY ts_us, event_id) AS seq
-           FROM e GROUP BY user_id)
-         SELECT user_id, CAST(length(seq) AS BIGINT) AS seq_len,
-           regexp_matches(seq, 'v[^e]*c[^e]*p') AS matched,
-           CAST(len(regexp_extract_all(seq, 'v[^e]*c[^e]*p')) AS BIGINT)
-             AS n_matches
-         FROM sq ORDER BY user_id""",
-    // the association relation replayed: distinct (order, brand),
-    // pair self-join a<b, marginals, HUGEINT lift.
-    "q_basket_lift" ->
-      """WITH bi AS (SELECT DISTINCT l_orderkey AS b, p_brand AS i
-           FROM lineitem JOIN part ON l_partkey = p_partkey),
-         n AS (SELECT COUNT(DISTINCT b) AS nb FROM bi),
-         marg AS (SELECT i, COUNT(*) AS cnt FROM bi GROUP BY 1),
-         pr AS (SELECT x.i AS item_a, y.i AS item_b, COUNT(*) AS n_pair
-           FROM bi x JOIN bi y ON x.b = y.b AND x.i < y.i
-           GROUP BY 1, 2 HAVING COUNT(*) >= 5)
-         SELECT item_a, item_b, CAST(n_pair AS BIGINT) AS n_pair,
-           CAST(ma.cnt AS BIGINT) AS n_a, CAST(mb.cnt AS BIGINT) AS n_b,
-           CAST(n_pair * 1000000 // nb AS BIGINT) AS support_ppm,
-           CAST(n_pair * 1000000 // ma.cnt AS BIGINT) AS conf_a_to_b_ppm,
-           CAST(n_pair * 1000000 // mb.cnt AS BIGINT) AS conf_b_to_a_ppm,
-           CAST(CAST(n_pair AS HUGEINT) * nb * 1000000
-             // (CAST(ma.cnt AS HUGEINT) * mb.cnt) AS BIGINT) AS lift_ppm
-         FROM pr JOIN marg ma ON pr.item_a = ma.i
-           JOIN marg mb ON pr.item_b = mb.i
-           CROSS JOIN n
-         ORDER BY item_a, item_b""",
-    // FIFO as cumulative-interval intersection, replayed with a plain
-    // theta join (verify scale); oversell surfaces as unmatched.
-    "q_fifo_cogs" ->
-      """WITH t AS (SELECT l_partkey AS k, l_shipdate, l_orderkey, l_linenumber,
-             CAST(round(l_quantity, 0) AS BIGINT) AS q,
-             l_returnflag = 'R' AS is_out,
-             CAST(round(l_extendedprice * 100, 0) AS BIGINT)
-               // CAST(round(l_quantity, 0) AS BIGINT) AS c
-           FROM lineitem),
-         r AS (SELECT *, SUM(q) OVER (PARTITION BY k, is_out
-             ORDER BY l_shipdate, l_orderkey, l_linenumber
-             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS hi
-           FROM t),
-         r2 AS (SELECT *, hi - q AS lo FROM r),
-         ins AS (SELECT k, lo, hi, c FROM r2 WHERE NOT is_out),
-         outs AS (SELECT k AS ok, lo AS olo, hi AS ohi FROM r2 WHERE is_out),
-         p AS (SELECT o.ok,
-             LEAST(i.hi, o.ohi) - GREATEST(i.lo, o.olo) AS ov, i.c
-           FROM outs o JOIN ins i
-             ON o.ok = i.k AND i.lo < o.ohi AND o.olo < i.hi),
-         m AS (SELECT ok, SUM(ov * c) AS cogs, SUM(ov) AS matched
-           FROM p WHERE ov > 0 GROUP BY 1),
-         tot AS (SELECT k, SUM(CASE WHEN is_out THEN q ELSE 0 END) AS out_q,
-             SUM(CASE WHEN is_out THEN 0 ELSE q END) AS in_q
-           FROM t GROUP BY 1)
-         SELECT tot.k AS l_partkey, CAST(in_q AS BIGINT) AS in_qty,
-           CAST(out_q AS BIGINT) AS out_qty,
-           CAST(COALESCE(matched, 0) AS BIGINT) AS matched_qty,
-           CAST(out_q - COALESCE(matched, 0) AS BIGINT) AS unmatched_qty,
-           CAST(COALESCE(cogs, 0) AS BIGINT) AS cogs
-         FROM tot LEFT JOIN m ON tot.k = m.ok
-         ORDER BY l_partkey""",
-    // the same prefix + running-min windows; rejected = -min(0, runmin)
-    // is the cumulative clamp absorption, final = net + rejected.
-    "q_clamped_balance" ->
-      """WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS ts_us,
-             CASE WHEN event_type IN ('purchase', 'signup')
-                  THEN CAST(round(value * 100, 0) AS BIGINT)
-                  ELSE -CAST(round(value * 100, 0) AS BIGINT) END AS d
-           FROM events
-           WHERE event_type IN ('purchase', 'signup', 'view', 'error')),
-         p AS (SELECT user_id, ts_us, event_id, d,
-             SUM(d) OVER (PARTITION BY user_id ORDER BY ts_us, event_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS pre
-           FROM e),
-         m AS (SELECT user_id, d,
-             MIN(pre) OVER (PARTITION BY user_id ORDER BY ts_us, event_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS rm
-           FROM p)
-         SELECT user_id, CAST(COUNT(*) AS BIGINT) AS n_tx,
-           CAST(SUM(d) AS BIGINT) AS net_cents,
-           CAST(MAX(GREATEST(0, -rm)) AS BIGINT) AS rejected_cents,
-           CAST(SUM(d) + MAX(GREATEST(0, -rm)) AS BIGINT) AS balance_cents
-         FROM m GROUP BY user_id ORDER BY user_id""",
-    // every mask action replayed; c_nationkey proven dropped by the
-    // schema compare (default-deny).
-    "q_mask_policy" ->
-      """SELECT c_custkey, sha256(c_name) AS c_name,
-           substr(c_mktsegment, 1, 2) || '***' AS c_mktsegment,
-           CAST(CAST(round(c_acctbal * 100, 0) AS BIGINT)
-             // 10000 * 10000 AS BIGINT) AS acctbal_cents
-         FROM customer ORDER BY c_custkey""",
-    // the same first-qualifying-stage CTEs as q_funnel_windowed,
-    // emitted per user — the state machine must agree row-for-row.
-    "q_funnel_live" ->
-      """WITH e AS (SELECT user_id, event_type, epoch_us(ts) AS ts_us
-           FROM events),
-         v AS (SELECT user_id, MIN(ts_us) AS vt FROM e
-           WHERE event_type = 'view' GROUP BY 1),
-         c AS (SELECT e.user_id, MIN(ts_us) AS ct FROM e JOIN v USING (user_id)
-           WHERE event_type = 'click' AND ts_us > vt
-             AND ts_us <= vt + 3600000000 GROUP BY 1),
-         p AS (SELECT e.user_id, MIN(ts_us) AS pt FROM e JOIN c USING (user_id)
-           WHERE event_type = 'purchase' AND ts_us > ct
-             AND ts_us <= ct + 86400000000 GROUP BY 1)
-         SELECT user_id,
-           CAST(CASE WHEN pt IS NOT NULL THEN 2
-                     WHEN ct IS NOT NULL THEN 1 ELSE 0 END AS BIGINT) AS stage,
-           vt AS vt_us, ct AS ct_us, pt AS pt_us
-         FROM v LEFT JOIN c USING (user_id) LEFT JOIN p USING (user_id)
-         ORDER BY user_id""",
-    // the batch twin of the online rate cap: arrival ordinal within
-    // each (user, hour) slot = row_number over event time.
-    "q_rate_cap" ->
-      """WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS ts_us FROM events),
-         w AS (SELECT user_id, event_id, ts_us,
-             ts_us // 3600000000 * 3600000000 AS win_start_us FROM e),
-         r AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY user_id, win_start_us
-             ORDER BY ts_us, event_id) AS rn FROM w)
-         SELECT user_id, event_id, win_start_us,
-           CAST(rn AS BIGINT) AS seq_in_window, rn <= 3 AS admitted
-         FROM r ORDER BY event_id""",
-    // the C67 chunk derivation (closed-definition window hashes) plus
-    // the distinct (source, hash) set, pair join, and ppm replayed;
-    // zero-sharing pairs present.
-    "q_passage_overlap" ->
-      """WITH RECURSIVE pw(j, p) AS (
-             SELECT 0, CAST(1 AS BIGINT)
-             UNION ALL
-             SELECT j + 1, p * 257 % 1000000007 FROM pw WHERE j < 15),
-         d AS (SELECT doc_id, source, text, length(text) AS n FROM documents),
-         pos AS (SELECT doc_id, text, n, g.q
-           FROM d, UNNEST(range(1, n - 16 + 2)) AS g(q)),
-         hw AS (SELECT doc_id, n, q,
-             SUM(unicode(substr(text, CAST(q + o.o AS INTEGER), 1)) * pw.p)
-               % 1000000007 AS hh
-           FROM pos, UNNEST(range(0, 16)) AS o(o), pw
-           WHERE pw.j = 15 - o.o
-           GROUP BY doc_id, n, q),
-         cuts AS (SELECT doc_id, q + 15 AS b FROM hw
-           WHERE hh % 32 = 9 AND q + 15 < n),
-         bounds AS (SELECT doc_id, b FROM cuts
-           UNION ALL SELECT doc_id, n FROM d),
-         ch AS (SELECT doc_id,
-             COALESCE(LAG(b) OVER (PARTITION BY doc_id ORDER BY b), 0) AS st,
-             b AS en FROM bounds),
-         sh AS (SELECT DISTINCT d.source, md5(substr(d.text,
-               CAST(c.st + 1 AS INTEGER), CAST(c.en - c.st AS INTEGER))) AS h
-           FROM ch c JOIN d ON c.doc_id = d.doc_id),
-         per AS (SELECT source, COUNT(*) AS n FROM sh GROUP BY source),
-         pr AS (SELECT a.source AS sa, b.source AS sb, COUNT(*) AS shared
-           FROM sh a JOIN sh b ON a.h = b.h AND a.source < b.source
-           GROUP BY 1, 2)
-         SELECT pa.source AS source_a, pb.source AS source_b,
-           CAST(pa.n AS BIGINT) AS na, CAST(pb.n AS BIGINT) AS nb,
-           CAST(COALESCE(shared, 0) AS BIGINT) AS shared_chunks,
-           CAST(COALESCE(shared, 0) * 1000000 // LEAST(pa.n, pb.n) AS BIGINT)
-             AS containment_ppm
-         FROM per pa JOIN per pb ON pa.source < pb.source
-         LEFT JOIN pr ON pa.source = pr.sa AND pb.source = pr.sb
-         ORDER BY source_a, source_b""",
-    // tokenizer + term join + severity rollup + zero-retaining left
-    // join replayed; flagged is the same integer threshold.
-    "q_blocklist" ->
-      """WITH terms(term, severity) AS (VALUES ('dup', 5), ('slow', 2), ('big', 1)),
-         tok AS (SELECT doc_id,
-             unnest(string_split_regex(lower(text), '[^a-z0-9]+')) AS w
-           FROM documents),
-         h AS (SELECT doc_id, COUNT(DISTINCT term) AS nt, COUNT(*) AS nh,
-             SUM(severity) AS wh, MAX(severity) AS ms
-           FROM tok JOIN terms ON w = term GROUP BY doc_id)
-         SELECT d.doc_id,
-           CAST(COALESCE(nt, 0) AS BIGINT) AS n_flag_terms,
-           CAST(COALESCE(nh, 0) AS BIGINT) AS n_flag_hits,
-           CAST(COALESCE(wh, 0) AS BIGINT) AS weighted_hits,
-           CAST(COALESCE(ms, 0) AS BIGINT) AS max_severity,
-           COALESCE(wh, 0) >= 8 AS flagged
-         FROM documents d LEFT JOIN h ON d.doc_id = h.doc_id
-         ORDER BY d.doc_id""",
-    // the SAME polynomial window hash recomputed from the closed
-    // definition (recursive-CTE powers + windowed character sums —
-    // not the rolling update), then chunking, md5s, sharing replayed.
-    "q_chunk_dedup" ->
-      """WITH RECURSIVE pw(j, p) AS (
-             SELECT 0, CAST(1 AS BIGINT)
-             UNION ALL
-             SELECT j + 1, p * 257 % 1000000007 FROM pw WHERE j < 15),
-         d AS (SELECT doc_id, text, length(text) AS n FROM documents),
-         pos AS (SELECT doc_id, text, n, g.q
-           FROM d, UNNEST(range(1, n - 16 + 2)) AS g(q)),
-         hw AS (SELECT doc_id, n, q,
-             SUM(unicode(substr(text, CAST(q + o.o AS INTEGER), 1)) * pw.p)
-               % 1000000007 AS hh
-           FROM pos, UNNEST(range(0, 16)) AS o(o), pw
-           WHERE pw.j = 15 - o.o
-           GROUP BY doc_id, n, q),
-         cuts AS (SELECT doc_id, q + 15 AS b FROM hw
-           WHERE hh % 32 = 9 AND q + 15 < n),
-         bounds AS (SELECT doc_id, b FROM cuts
-           UNION ALL SELECT doc_id, n FROM d),
-         ch AS (SELECT doc_id,
-             COALESCE(LAG(b) OVER (PARTITION BY doc_id ORDER BY b), 0) AS st,
-             b AS en FROM bounds),
-         chd AS (SELECT c.doc_id, md5(substr(d.text,
-               CAST(c.st + 1 AS INTEGER), CAST(c.en - c.st AS INTEGER))) AS h
-           FROM ch c JOIN d ON c.doc_id = d.doc_id),
-         byh AS (SELECT h, COUNT(DISTINCT doc_id) AS nd FROM chd GROUP BY h)
-         SELECT chd.doc_id, CAST(COUNT(*) AS BIGINT) AS n_chunks,
-           CAST(SUM(CASE WHEN nd >= 2 THEN 1 ELSE 0 END) AS BIGINT)
-             AS shared_chunks,
-           CAST(SUM(CASE WHEN nd >= 2 THEN 1 ELSE 0 END) * 1000000
-             // COUNT(*) AS BIGINT) AS shared_ppm,
-           MIN(chd.h) AS min_md5, MAX(chd.h) AS max_md5
-         FROM chd JOIN byh ON chd.h = byh.h
-         GROUP BY chd.doc_id ORDER BY doc_id""",
-    // INDEPENDENT formulation: weekdays counted by enumeration
-    // (generate_series + isodow) — the closed form is checked against
-    // the definition, not replayed.
-    "q_business_days" ->
-      """WITH li AS (SELECT CAST(l_shipdate AS DATE) AS s,
-             CAST(l_shipdate AS DATE)
-               + CAST(CAST(round(l_quantity, 0) AS BIGINT) % 25 + 1 AS INTEGER)
-               AS r FROM lineitem),
-         bd AS (SELECT s, r, strftime(s, '%Y-%m') AS ym,
-             (SELECT count(*) FROM UNNEST(generate_series(
-                  CAST(s AS TIMESTAMP) + INTERVAL 1 DAY,
-                  CAST(r AS TIMESTAMP), INTERVAL 1 DAY)) AS g(d)
-               WHERE isodow(CAST(g.d AS DATE)) <= 5) AS bdays,
-             (SELECT CAST(g.d AS DATE) FROM UNNEST(generate_series(
-                  CAST(s AS TIMESTAMP) + INTERVAL 1 DAY,
-                  CAST(s AS TIMESTAMP) + INTERVAL 21 DAY, INTERVAL 1 DAY)) AS g(d)
-               WHERE isodow(CAST(g.d AS DATE)) <= 5
-               ORDER BY g.d LIMIT 1 OFFSET 9) AS promised
-           FROM li)
-         SELECT ym, CAST(COUNT(*) AS BIGINT) AS n_items,
-           CAST(SUM(bdays) AS BIGINT) AS sum_bd,
-           CAST(SUM(bdays) * 100 // COUNT(*) AS BIGINT) AS avg_bd_c,
-           CAST(SUM(CASE WHEN bdays <= 10 THEN 1 ELSE 0 END) AS BIGINT)
-             AS sla10_met,
-           CAST(SUM(promised - s) AS BIGINT) AS promised_gap_days
-         FROM bd GROUP BY ym ORDER BY ym""",
-    // part-grain period rollup, HUGEINT volume product, truncating //,
-    // price as the closure term — the bridge re-adds to delta exactly.
-    "q_pvm_bridge" ->
-      """WITH f AS (SELECT l_partkey AS pk,
-             year(CAST(l_shipdate AS DATE)) = 1995 AS p2,
-             CAST(round(l_quantity, 0) AS BIGINT) AS q,
-             CAST(round(l_extendedprice * 100, 0) AS BIGINT) AS r
-           FROM lineitem WHERE year(CAST(l_shipdate AS DATE)) IN (1994, 1995)),
-         bi AS (SELECT pk,
-             SUM(CASE WHEN p2 THEN 0 ELSE q END) AS q1,
-             SUM(CASE WHEN p2 THEN 0 ELSE r END) AS r1,
-             SUM(CASE WHEN p2 THEN q ELSE 0 END) AS q2,
-             SUM(CASE WHEN p2 THEN r ELSE 0 END) AS r2
-           FROM f GROUP BY pk),
-         e AS (SELECT p_brand, q1, r1, q2, r2, r2 - r1 AS delta,
-             CASE WHEN q1 > 0 AND q2 > 0
-                  THEN CAST(CAST(q2 - q1 AS HUGEINT) * r1 // q1 AS BIGINT)
-                  ELSE 0 END AS vol,
-             CASE WHEN q1 = 0 AND q2 > 0 THEN r2 ELSE 0 END AS newc,
-             CASE WHEN q2 = 0 AND q1 > 0 THEN -r1 ELSE 0 END AS discc
-           FROM bi JOIN part ON pk = p_partkey)
-         SELECT p_brand, CAST(SUM(q1) AS BIGINT) AS qty1,
-           CAST(SUM(q2) AS BIGINT) AS qty2,
-           CAST(SUM(r1) AS BIGINT) AS rev1_c, CAST(SUM(r2) AS BIGINT) AS rev2_c,
-           CAST(SUM(delta) AS BIGINT) AS delta_c,
-           CAST(SUM(vol) AS BIGINT) AS volume_c,
-           CAST(SUM(delta - vol - newc - discc) AS BIGINT) AS price_c,
-           CAST(SUM(newc) AS BIGINT) AS new_c,
-           CAST(SUM(discc) AS BIGINT) AS disc_c
-         FROM e GROUP BY p_brand ORDER BY p_brand""",
-    // C51's scaling + truncating-div centroids, HUGEINT-safe diff
-    // squares, and the (dist desc, id asc) top-3 replayed.
-    "q_centroid_outliers" ->
-      """WITH m AS (SELECT vec_id, CAST(label AS BIGINT) AS label,
-             u.i - 1 AS dim,
-             CAST(round(CAST(embedding[u.i] AS DOUBLE) * 1000000, 0)
-               AS BIGINT) AS micro
-           FROM embeddings, UNNEST(range(1, len(embedding) + 1)) AS u(i)),
-         c AS (SELECT label, dim,
-             CAST(SUM(micro) // COUNT(*) AS BIGINT) AS cent
-           FROM m GROUP BY 1, 2),
-         d AS (SELECT vec_id, m.label,
-             SUM((micro - cent) * (micro - cent)) AS dist_sq
-           FROM m JOIN c ON m.label = c.label AND m.dim = c.dim
-           GROUP BY 1, 2),
-         r AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY label
-             ORDER BY dist_sq DESC, vec_id) AS rnk FROM d)
-         SELECT label, CAST(rnk AS BIGINT) AS rnk, vec_id,
-           CAST(dist_sq AS BIGINT) AS dist_sq
-         FROM r WHERE rnk <= 3 ORDER BY label, rnk""",
-    // the Mann-Whitney identity replayed from the pair DEFINITION in
-    // HUGEINT — concordant pairs ×2 plus cross-class ties, never ranks.
-    "q_ranking_auc" ->
-      """WITH d AS (SELECT source, n_chars AS score,
-             CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS pos
-           FROM documents),
-         g AS (SELECT source, score, SUM(pos) AS p, COUNT(*) - SUM(pos) AS n
-           FROM d GROUP BY 1, 2),
-         c AS (SELECT *, COALESCE(SUM(n) OVER (PARTITION BY source ORDER BY score
-             ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS n_below
-           FROM g)
-         SELECT source, CAST(SUM(p) AS BIGINT) AS n_pos,
-           CAST(SUM(n) AS BIGINT) AS n_neg,
-           CAST(SUM(p * n_below) * 2 + SUM(p * n) AS BIGINT) AS auc_num_2x,
-           CAST(2 * SUM(p) * SUM(n) AS BIGINT) AS auc_den_2x,
-           CAST(CASE WHEN SUM(p) = 0 OR SUM(n) = 0 THEN NULL
-             ELSE (SUM(p * n_below) * 2 + SUM(p * n)) * 1000000
-                  // (2 * SUM(p) * SUM(n)) END AS BIGINT) AS auc_micros
-         FROM c GROUP BY source ORDER BY source""",
-    // BM25 fixed-point scores + exact micros distances, both ranked,
-    // fused as integer reciprocal ranks — full replay of both lists.
-    "q_rrf_fusion" ->
-      """WITH toks AS (SELECT doc_id,
-           unnest(list_filter(regexp_split_to_array(text, '[ \t\n\r]+'), t -> t <> '')) AS term
-           FROM documents),
-         tf AS (SELECT doc_id, term, CAST(COUNT(*) AS BIGINT) AS tf FROM toks GROUP BY 1, 2),
-         dl AS (SELECT doc_id, CAST(SUM(tf) AS BIGINT) AS dl FROM tf GROUP BY 1),
-         df AS (SELECT term, CAST(COUNT(*) AS BIGINT) AS df FROM tf GROUP BY 1),
-         g AS (SELECT CAST(COUNT(*) AS BIGINT) AS n,
-                      CAST(SUM(dl) AS BIGINT) AS s FROM dl),
-         sc AS (SELECT tf.doc_id,
-             (CAST(1000000 AS HUGEINT) * (2 * g.n - 2 * df.df + 1) * 22 * tf.tf * g.s)
-               // ((2 * df.df + 1) * (CAST(10 AS HUGEINT) * g.s * tf.tf + 3 * g.s + 9 * dl.dl * g.n))
-               AS score_ppm
-           FROM tf JOIN dl USING (doc_id) JOIN df USING (term) CROSS JOIN g
-           WHERE term IN ('vector', 'stream', 'window')),
-         bm AS (SELECT doc_id, SUM(score_ppm) AS score FROM sc GROUP BY 1
-                ORDER BY score DESC, doc_id LIMIT 20),
-         lex AS (SELECT doc_id,
-             ROW_NUMBER() OVER (ORDER BY score DESC, doc_id) AS lex_rank FROM bm),
-         m AS (SELECT vec_id, u.i - 1 AS dim,
-             CAST(round(CAST(embedding[u.i] AS DOUBLE) * 1000000, 0) AS BIGINT) AS micro
-           FROM embeddings, UNNEST(range(1, len(embedding) + 1)) AS u(i)),
-         pq AS (SELECT dim, micro AS pm FROM m WHERE vec_id = 0),
-         dq AS (SELECT m.vec_id, SUM((m.micro - pq.pm) * (m.micro - pq.pm)) AS dq
-           FROM m JOIN pq USING (dim) WHERE m.vec_id <> 0 GROUP BY 1
-           ORDER BY dq, vec_id LIMIT 20),
-         sem AS (SELECT vec_id AS doc_id,
-             ROW_NUMBER() OVER (ORDER BY dq, vec_id) AS sem_rank FROM dq)
-         SELECT COALESCE(lex.doc_id, sem.doc_id) AS doc_id,
-           CAST(lex_rank AS BIGINT) AS lex_rank,
-           CAST(sem_rank AS BIGINT) AS sem_rank,
-           CAST(COALESCE(1000000 // (60 + lex_rank), 0)
-              + COALESCE(1000000 // (60 + sem_rank), 0) AS BIGINT) AS rrf_ppm
-         FROM lex FULL OUTER JOIN sem ON lex.doc_id = sem.doc_id
-         ORDER BY rrf_ppm DESC, doc_id LIMIT 10""",
-    // all four greedy MMR picks unrolled as CTE stages: each step's
-    // argmax of (min separation to selected − relevance) in HUGEINT.
-    "q_mmr_rerank" ->
-      """WITH m AS (SELECT vec_id, u.i - 1 AS dim,
-             CAST(round(CAST(embedding[u.i] AS DOUBLE) * 1000000, 0) AS BIGINT) AS micro
-           FROM embeddings, UNNEST(range(1, len(embedding) + 1)) AS u(i)),
-         pq AS (SELECT dim, micro AS pm FROM m WHERE vec_id = 0),
-         dqall AS (SELECT m.vec_id, SUM((m.micro - pq.pm) * (m.micro - pq.pm)) AS dq
-           FROM m JOIN pq USING (dim) WHERE m.vec_id <> 0 GROUP BY 1),
-         pool AS (SELECT vec_id, dq FROM dqall ORDER BY dq, vec_id LIMIT 8),
-         pm2 AS (SELECT m.vec_id, m.dim, m.micro FROM m
-           JOIN pool USING (vec_id)),
-         pd AS (SELECT a.vec_id AS i, b.vec_id AS j,
-             SUM((a.micro - b.micro) * (a.micro - b.micro)) AS d
-           FROM pm2 a JOIN pm2 b ON a.dim = b.dim AND a.vec_id <> b.vec_id
-           GROUP BY 1, 2),
-         s1 AS (SELECT vec_id, dq FROM pool ORDER BY dq, vec_id LIMIT 1),
-         s2 AS (SELECT p.vec_id, p.dq, pd.d - p.dq AS gain
-           FROM pool p JOIN pd ON pd.i = p.vec_id
-             AND pd.j = (SELECT vec_id FROM s1)
-           WHERE p.vec_id <> (SELECT vec_id FROM s1)
-           ORDER BY gain DESC, p.vec_id LIMIT 1),
-         s3 AS (SELECT p.vec_id, p.dq, MIN(pd.d) - p.dq AS gain
-           FROM pool p JOIN pd ON pd.i = p.vec_id
-             AND pd.j IN ((SELECT vec_id FROM s1), (SELECT vec_id FROM s2))
-           WHERE p.vec_id NOT IN ((SELECT vec_id FROM s1), (SELECT vec_id FROM s2))
-           GROUP BY p.vec_id, p.dq
-           ORDER BY gain DESC, p.vec_id LIMIT 1),
-         s4 AS (SELECT p.vec_id, p.dq, MIN(pd.d) - p.dq AS gain
-           FROM pool p JOIN pd ON pd.i = p.vec_id
-             AND pd.j IN ((SELECT vec_id FROM s1), (SELECT vec_id FROM s2),
-                          (SELECT vec_id FROM s3))
-           WHERE p.vec_id NOT IN ((SELECT vec_id FROM s1),
-             (SELECT vec_id FROM s2), (SELECT vec_id FROM s3))
-           GROUP BY p.vec_id, p.dq
-           ORDER BY gain DESC, p.vec_id LIMIT 1)
-         SELECT CAST(1 AS BIGINT) AS sel_rank, vec_id,
-           CAST(dq AS BIGINT) AS dist_q, CAST(NULL AS BIGINT) AS gain FROM s1
-         UNION ALL SELECT 2, vec_id, CAST(dq AS BIGINT), CAST(gain AS BIGINT) FROM s2
-         UNION ALL SELECT 3, vec_id, CAST(dq AS BIGINT), CAST(gain AS BIGINT) FROM s3
-         UNION ALL SELECT 4, vec_id, CAST(dq AS BIGINT), CAST(gain AS BIGINT) FROM s4
-         ORDER BY sel_rank""",
-    // exact integer-micros distances + the (dist, id) struct-min
-    // replayed as a ROW_NUMBER pick in HUGEINT space.
-    "q_hard_negatives" ->
-      """WITH m AS (SELECT vec_id, CAST(label AS BIGINT) AS label,
-             u.i - 1 AS dim,
-             CAST(round(CAST(embedding[u.i] AS DOUBLE) * 1000000, 0)
-               AS BIGINT) AS micro
-           FROM embeddings, UNNEST(range(1, len(embedding) + 1)) AS u(i)),
-         p AS (SELECT vec_id AS probe_id, label AS probe_label, dim,
-             micro AS pm FROM m WHERE vec_id < 10),
-         d AS (SELECT p.probe_id, p.probe_label, m.vec_id,
-             SUM((m.micro - p.pm) * (m.micro - p.pm)) AS dist_sq
-           FROM m JOIN p ON m.dim = p.dim AND m.label <> p.probe_label
-           GROUP BY 1, 2, 3),
-         r AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY probe_id
-             ORDER BY dist_sq, vec_id) AS rk FROM d)
-         SELECT probe_id, probe_label, vec_id AS neg_id,
-           CAST(dist_sq AS BIGINT) AS dist_sq
-         FROM r WHERE rk = 1 ORDER BY probe_id""",
-    // the C8 stopword-argmax lang-id replayed per half, same integer
-    // midpoint split and same injected French tail on doc_id % 3 = 0.
-    "q_code_switch" ->
-      """WITH base AS (SELECT doc_id, source,
-             CASE WHEN doc_id % 3 = 0 THEN text ||
-               ' le la les des est et une dans que pour pas vous'
-             ELSE text END AS mixed
-           FROM documents),
-         halves AS (
-           SELECT doc_id, source, 1 AS part,
-             substring(mixed, 1, CAST(len(mixed) // 2 AS INTEGER)) AS t
-           FROM base
-           UNION ALL
-           SELECT doc_id, source, 2,
-             substring(mixed, CAST(len(mixed) // 2 AS INTEGER) + 1)
-           FROM base),
-         toks AS (SELECT doc_id, source, part,
-             list_filter(string_split_regex(lower(t), '[^a-z0-9_]+'),
-               x -> x <> '') AS ts
-           FROM halves),
-         h AS (SELECT doc_id, source, part,
-             len(list_filter(ts, t -> list_contains(['the','and','of','to','is','in','that','it','with','for','this','are'], t))) AS en,
-             len(list_filter(ts, t -> list_contains(['le','la','les','des','est','et','une','dans','que','pour','pas','vous'], t))) AS fr,
-             len(list_filter(ts, t -> list_contains(['el','los','las','es','y','una','que','en','por','para','con','su'], t))) AS es,
-             len(list_filter(ts, t -> list_contains(['der','die','das','und','ist','nicht','ein','eine','mit','für','auf','ich'], t))) AS de
-           FROM toks),
-         pred AS (SELECT doc_id, source, part, CASE
-             WHEN en = 0 AND fr = 0 AND es = 0 AND de = 0 THEN 'und'
-             WHEN en >= fr AND en >= es AND en >= de THEN 'en'
-             WHEN fr >= es AND fr >= de THEN 'fr'
-             WHEN es >= de THEN 'es'
-             ELSE 'de' END AS lang_pred
-           FROM h)
-         SELECT doc_id, ANY_VALUE(source) AS source,
-           MAX(CASE WHEN part = 1 THEN lang_pred END) AS lang_head,
-           MAX(CASE WHEN part = 2 THEN lang_pred END) AS lang_tail,
-           (MAX(CASE WHEN part = 1 THEN lang_pred END) <>
-              MAX(CASE WHEN part = 2 THEN lang_pred END)
-            AND MAX(CASE WHEN part = 1 THEN lang_pred END) <> 'und'
-            AND MAX(CASE WHEN part = 2 THEN lang_pred END) <> 'und')
-             AS is_switch
-         FROM pred GROUP BY doc_id ORDER BY doc_id""",
-    // the same prefix-max sweep: new run iff start clears every
-    // earlier end; 1-based run index in time order.
-    "q_interval_merge" ->
-      """WITH iv AS (SELECT user_id, epoch_us(ts) AS s,
-             epoch_us(ts) + 3600000000 AS e FROM events),
-         m AS (SELECT user_id, s, e,
-             MAX(e) OVER (PARTITION BY user_id ORDER BY s, e
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pm
-           FROM iv),
-         seg AS (SELECT user_id, s, e,
-             SUM(CASE WHEN pm IS NULL OR s > pm THEN 1 ELSE 0 END)
-               OVER (PARTITION BY user_id ORDER BY s, e
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
-           FROM m)
-         SELECT user_id, CAST(sid AS BIGINT) AS seg_idx,
-           MIN(s) AS seg_start, MAX(e) AS seg_end,
-           CAST(COUNT(*) AS BIGINT) AS n_merged
-         FROM seg GROUP BY user_id, sid ORDER BY user_id, seg_idx""",
-    // HUGEINT bases/remainders, leftover to the largest remainders
-    // (ties to the smaller key), total provably exact.
-    "q_pro_rata" ->
-      """WITH rev AS (SELECT c_nationkey,
-             CAST(SUM(CAST(round(o_totalprice * 100, 0) AS BIGINT)) AS BIGINT) AS w
-           FROM orders JOIN customer ON o_custkey = c_custkey GROUP BY 1),
-         t AS (SELECT SUM(CAST(w AS HUGEINT)) AS tw FROM rev),
-         b AS (SELECT c_nationkey, w,
-             CAST(1000000 * CAST(w AS HUGEINT) // tw AS BIGINT) AS base,
-             CAST((1000000 * CAST(w AS HUGEINT)) % tw AS BIGINT) AS rem
-           FROM rev CROSS JOIN t),
-         lo AS (SELECT 1000000 - SUM(base) AS leftover FROM b),
-         r AS (SELECT *, ROW_NUMBER() OVER (ORDER BY rem DESC, c_nationkey)
-             AS rk FROM b)
-         SELECT c_nationkey, w, base,
-           CAST(CASE WHEN rk <= (SELECT leftover FROM lo) THEN 1 ELSE 0 END
-             AS BIGINT) AS extra,
-           CAST(base + CASE WHEN rk <= (SELECT leftover FROM lo) THEN 1 ELSE 0 END
-             AS BIGINT) AS allocated
-         FROM r ORDER BY c_nationkey""",
-    // the per-(customer, cents) LAG relation over the same planted
-    // duplicates — each payment pairs with its latest prior in-window.
-    "q_dup_alarm" ->
-      """WITH base AS (SELECT CAST(o_orderkey AS BIGINT) AS okey, o_custkey,
-             CAST(round(o_totalprice * 100, 0) AS BIGINT) AS c,
-             CAST(o_orderdate AS DATE) AS d
-           FROM orders),
-         o AS (SELECT * FROM base
-           UNION ALL
-           SELECT okey + 10000000, o_custkey, c, d + 2
-           FROM base WHERE okey % 100 = 0),
-         l AS (SELECT o_custkey, c, okey, d,
-             lag(okey) OVER (PARTITION BY o_custkey, c ORDER BY d, okey) AS pk,
-             lag(d) OVER (PARTITION BY o_custkey, c ORDER BY d, okey) AS pd
-           FROM o)
-         SELECT o_custkey AS cust, c AS cents, pk AS key_prior,
-           okey AS key_dup,
-           CAST(date_diff('day', pd, d) AS BIGINT) AS day_gap
-         FROM l WHERE pk IS NOT NULL AND date_diff('day', pd, d) <= 30
-         ORDER BY cust, cents, key_dup""",
-    // same EXISTS-per-customer sequential pairs, same HUGEINT lift.
-    "q_next_purchase" ->
-      """WITH ev AS (SELECT DISTINCT o_custkey AS cust, p_brand AS brand,
-             CAST(o_orderdate AS DATE) AS d
-           FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-             JOIN part ON l_partkey = p_partkey),
-         seqp AS (SELECT DISTINCT a.cust, a.brand AS brand_a, b.brand AS brand_b
-           FROM ev a JOIN ev b ON a.cust = b.cust
-           WHERE a.brand <> b.brand AND b.d > a.d
-             AND date_diff('day', a.d, b.d) <= 90),
-         ab AS (SELECT brand_a, brand_b, CAST(COUNT(*) AS BIGINT) AS n_ab
-           FROM seqp GROUP BY 1, 2),
-         sup AS (SELECT brand, CAST(COUNT(DISTINCT cust) AS BIGINT) AS n
-           FROM ev GROUP BY 1),
-         tot AS (SELECT CAST(COUNT(DISTINCT cust) AS BIGINT) AS n_cust FROM ev)
-         SELECT brand_a, brand_b, n_ab, sa.n AS n_a, sb.n AS n_b,
-           CAST(CAST(n_ab AS HUGEINT) * n_cust * 1000000
-                // (CAST(sa.n AS HUGEINT) * sb.n) AS BIGINT) AS lift_ppm
-         FROM ab JOIN sup sa ON sa.brand = brand_a
-           JOIN sup sb ON sb.brand = brand_b CROSS JOIN tot
-         ORDER BY brand_a, brand_b""",
-    // same pair slopes in truncating ppm, same (slope, m1, m2) median
-    // rank pick.
-    "q_theil_sen" ->
-      """WITH monthly AS (SELECT c_mktsegment AS g,
-             CAST(year(CAST(o_orderdate AS DATE)) * 12
-                + month(CAST(o_orderdate AS DATE)) AS BIGINT) AS m,
-             SUM(CAST(round(o_totalprice * 100, 0) AS BIGINT)) AS v
-           FROM orders JOIN customer ON o_custkey = c_custkey GROUP BY 1, 2),
-         pairs AS (SELECT a.g, a.m AS m1, b.m AS m2,
-             (b.v - a.v) * 1000000 // (b.m - a.m) AS slope_ppm
-           FROM monthly a JOIN monthly b ON a.g = b.g AND a.m < b.m),
-         r AS (SELECT g, slope_ppm,
-             ROW_NUMBER() OVER (PARTITION BY g ORDER BY slope_ppm, m1, m2) AS rk,
-             COUNT(*) OVER (PARTITION BY g) AS n_pairs FROM pairs)
-         SELECT g, CAST(n_pairs AS BIGINT) AS n_pairs,
-           CAST(slope_ppm AS BIGINT) AS median_slope_ppm
-         FROM r WHERE rk = (n_pairs + 1) // 2 ORDER BY g""",
-    // all four stages replayed in one statement: BM25 closed form,
-    // micros distances, RRF fusion top-8, three unrolled MMR picks.
-    "q_hybrid_retrieval" ->
-      """WITH toks AS (SELECT doc_id,
-           unnest(list_filter(regexp_split_to_array(text, '[ \t\n\r]+'), t -> t <> '')) AS term
-           FROM documents),
-         tf AS (SELECT doc_id, term, CAST(COUNT(*) AS BIGINT) AS tf FROM toks GROUP BY 1, 2),
-         dl AS (SELECT doc_id, CAST(SUM(tf) AS BIGINT) AS dl FROM tf GROUP BY 1),
-         df AS (SELECT term, CAST(COUNT(*) AS BIGINT) AS df FROM tf GROUP BY 1),
-         g AS (SELECT CAST(COUNT(*) AS BIGINT) AS n,
-                      CAST(SUM(dl) AS BIGINT) AS s FROM dl),
-         sc AS (SELECT tf.doc_id,
-             (CAST(1000000 AS HUGEINT) * (2 * g.n - 2 * df.df + 1) * 22 * tf.tf * g.s)
-               // ((2 * df.df + 1) * (CAST(10 AS HUGEINT) * g.s * tf.tf + 3 * g.s + 9 * dl.dl * g.n))
-               AS score_ppm
-           FROM tf JOIN dl USING (doc_id) JOIN df USING (term) CROSS JOIN g
-           WHERE term IN ('vector', 'stream', 'window')),
-         bm AS (SELECT doc_id, SUM(score_ppm) AS score FROM sc GROUP BY 1
-                ORDER BY score DESC, doc_id LIMIT 20),
-         lex AS (SELECT doc_id,
-             ROW_NUMBER() OVER (ORDER BY score DESC, doc_id) AS lex_rank FROM bm),
-         m AS (SELECT vec_id, u.i - 1 AS dim,
-             CAST(round(CAST(embedding[u.i] AS DOUBLE) * 1000000, 0) AS BIGINT) AS micro
-           FROM embeddings, UNNEST(range(1, len(embedding) + 1)) AS u(i)),
-         pq AS (SELECT dim, micro AS pm FROM m WHERE vec_id = 0),
-         dqall AS (SELECT m.vec_id, SUM((m.micro - pq.pm) * (m.micro - pq.pm)) AS dq
-           FROM m JOIN pq USING (dim) WHERE m.vec_id <> 0 GROUP BY 1),
-         dq20 AS (SELECT vec_id, dq FROM dqall ORDER BY dq, vec_id LIMIT 20),
-         sem AS (SELECT vec_id AS doc_id,
-             ROW_NUMBER() OVER (ORDER BY dq, vec_id) AS sem_rank FROM dq20),
-         fused AS (SELECT COALESCE(lex.doc_id, sem.doc_id) AS id,
-             COALESCE(1000000 // (60 + lex_rank), 0)
-               + COALESCE(1000000 // (60 + sem_rank), 0) AS rrf_ppm
-           FROM lex FULL OUTER JOIN sem ON lex.doc_id = sem.doc_id
-           ORDER BY rrf_ppm DESC, id LIMIT 8),
-         pool AS (SELECT f.id AS vec_id, d.dq, f.rrf_ppm
-           FROM fused f JOIN dqall d ON d.vec_id = f.id WHERE f.id <> 0),
-         pm2 AS (SELECT m.vec_id, m.dim, m.micro FROM m
-           JOIN pool USING (vec_id)),
-         pd AS (SELECT a.vec_id AS i, b.vec_id AS j,
-             SUM((a.micro - b.micro) * (a.micro - b.micro)) AS d
-           FROM pm2 a JOIN pm2 b ON a.dim = b.dim AND a.vec_id <> b.vec_id
-           GROUP BY 1, 2),
-         s1 AS (SELECT vec_id, dq, rrf_ppm FROM pool ORDER BY dq, vec_id LIMIT 1),
-         s2 AS (SELECT p.vec_id, p.dq, p.rrf_ppm, pd.d - p.dq AS gain
-           FROM pool p JOIN pd ON pd.i = p.vec_id
-             AND pd.j = (SELECT vec_id FROM s1)
-           WHERE p.vec_id <> (SELECT vec_id FROM s1)
-           ORDER BY gain DESC, p.vec_id LIMIT 1),
-         s3 AS (SELECT p.vec_id, p.dq, p.rrf_ppm, MIN(pd.d) - p.dq AS gain
-           FROM pool p JOIN pd ON pd.i = p.vec_id
-             AND pd.j IN ((SELECT vec_id FROM s1), (SELECT vec_id FROM s2))
-           WHERE p.vec_id NOT IN ((SELECT vec_id FROM s1), (SELECT vec_id FROM s2))
-           GROUP BY p.vec_id, p.dq, p.rrf_ppm
-           ORDER BY gain DESC, p.vec_id LIMIT 1)
-         SELECT CAST(1 AS BIGINT) AS sel_rank, vec_id,
-           CAST(rrf_ppm AS BIGINT) AS rrf_ppm, CAST(dq AS BIGINT) AS dist_q,
-           CAST(NULL AS BIGINT) AS gain FROM s1
-         UNION ALL SELECT 2, vec_id, CAST(rrf_ppm AS BIGINT),
-           CAST(dq AS BIGINT), CAST(gain AS BIGINT) FROM s2
-         UNION ALL SELECT 3, vec_id, CAST(rrf_ppm AS BIGINT),
-           CAST(dq AS BIGINT), CAST(gain AS BIGINT) FROM s3
-         ORDER BY sel_rank""",
-    // the same commercial per-line rounding in scaled-integer space:
-    // cents × (100 − disc%) × (100 + tax%) div 10⁴ per line, then sum.
-    "q_reconcile" ->
-      """WITH lv AS (SELECT l_orderkey,
-             (CAST(round(CAST(l_extendedprice AS DOUBLE) * 100, 0) AS BIGINT)
-              * (100 - CAST(round(CAST(l_discount AS DOUBLE) * 100, 0) AS BIGINT))
-              * (100 + CAST(round(CAST(l_tax AS DOUBLE) * 100, 0) AS BIGINT)))
-              // 10000 AS lc
-           FROM lineitem),
-         agg AS (SELECT l_orderkey, SUM(lc) AS lines_cents FROM lv GROUP BY 1),
-         j AS (SELECT o_orderpriority,
-             CAST(round(o_totalprice * 100, 0) AS BIGINT) AS tc,
-             COALESCE(lines_cents, 0) AS lines_cents
-           FROM orders LEFT JOIN agg ON o_orderkey = l_orderkey)
-         SELECT o_orderpriority, CAST(COUNT(*) AS BIGINT) AS n_orders,
-           CAST(SUM(CASE WHEN tc = lines_cents THEN 1 ELSE 0 END) AS BIGINT)
-             AS n_exact,
-           CAST(SUM(abs(tc - lines_cents)) AS BIGINT) AS sum_abs_diff,
-           CAST(MAX(abs(tc - lines_cents)) AS BIGINT) AS max_abs_diff
-         FROM j GROUP BY 1 ORDER BY 1""",
-    // the truncating per-step ppm product replayed as a recursive CTE
-    // over the ordered (group, month) relation.
-    "q_survival" ->
-      """WITH RECURSIVE li AS (SELECT l_linestatus AS g,
-             GREATEST(date_diff('day', CAST(o_orderdate AS DATE),
-               CAST(l_shipdate AS DATE)), 0) // 30 AS t,
-             CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END AS d
-           FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
-         byt AS (SELECT g, t, CAST(COUNT(*) AS BIGINT) AS n_all,
-             CAST(SUM(d) AS BIGINT) AS deaths FROM li GROUP BY 1, 2),
-         ar AS (SELECT g, t, deaths,
-             CAST(SUM(n_all) OVER (PARTITION BY g ORDER BY t DESC
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-               AS at_risk
-           FROM byt),
-         ord AS (SELECT g, t, deaths, at_risk,
-             ROW_NUMBER() OVER (PARTITION BY g ORDER BY t) AS rk FROM ar),
-         km(g, t, deaths, at_risk, rk, s_ppm) AS (
-           SELECT g, t, deaths, at_risk, rk,
-             1000000 * (at_risk - deaths) // at_risk
-           FROM ord WHERE rk = 1
-           UNION ALL
-           SELECT o.g, o.t, o.deaths, o.at_risk, o.rk,
-             km.s_ppm * (o.at_risk - o.deaths) // o.at_risk
-           FROM km JOIN ord o ON o.g = km.g AND o.rk = km.rk + 1)
-         SELECT g, t, at_risk, deaths, CAST(s_ppm AS BIGINT) AS s_ppm
-         FROM km ORDER BY g, t""",
-    // the (size desc, id) stripe replayed as ROW_NUMBER mod 8.
-    "q_shard_assign" ->
-      """WITH r AS (SELECT doc_id, n_chars,
-             ROW_NUMBER() OVER (ORDER BY n_chars DESC, doc_id) AS rk
-           FROM documents)
-         SELECT (rk - 1) % 8 AS shard, CAST(COUNT(*) AS BIGINT) AS n_docs,
-           CAST(SUM(n_chars) AS BIGINT) AS sum_chars,
-           CAST(MIN(n_chars) AS BIGINT) AS min_chars,
-           CAST(MAX(n_chars) AS BIGINT) AS max_chars
-         FROM r GROUP BY 1 ORDER BY shard""",
-    // same fixed-width bucketing from the observed bounds, same
-    // truncating ppm.
-    "q_calibration" ->
-      """WITH d AS (SELECT n_chars AS score,
-             CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS pos FROM documents),
-         b AS (SELECT CAST(MIN(score) AS BIGINT) AS mn,
-                      CAST(MAX(score) AS BIGINT) AS mx FROM d)
-         SELECT LEAST((score - mn) * 10 // (mx - mn + 1), 9) AS bucket,
-           CAST(COUNT(*) AS BIGINT) AS n_docs,
-           CAST(SUM(pos) AS BIGINT) AS n_pos,
-           CAST(SUM(score) AS BIGINT) AS sum_score,
-           CAST(SUM(pos) * 1000000 // COUNT(*) AS BIGINT) AS pos_ppm
-         FROM d CROSS JOIN b GROUP BY 1 ORDER BY bucket""",
-    // same planted duplicates, same (custkey, cents) pair definition.
-    "q_duplicate_payments" ->
-      """WITH base AS (SELECT CAST(o_orderkey AS BIGINT) AS okey, o_custkey,
-             CAST(round(o_totalprice * 100, 0) AS BIGINT) AS c,
-             CAST(o_orderdate AS DATE) AS d
-           FROM orders),
-         o AS (SELECT * FROM base
-           UNION ALL
-           SELECT okey + 10000000, o_custkey, c, d + 2
-           FROM base WHERE okey % 100 = 0)
-         SELECT a.o_custkey, a.okey AS key_lo, b.okey AS key_hi,
-           a.c AS cents,
-           CAST(date_diff('day', a.d, b.d) AS BIGINT) AS day_gap
-         FROM o a JOIN o b ON a.o_custkey = b.o_custkey AND a.c = b.c
-           AND a.okey < b.okey
-           AND abs(date_diff('day', a.d, b.d)) <= 30
-         ORDER BY a.o_custkey, key_lo, key_hi""",
-    // every path enumerated by the recursive CTE; counts per end node.
-    // NOTE the seed is an INLINE subquery: DuckDB 1.0 duplicates
-    // recursion rows when an intermediate CTE sits between the
-    // recursive CTE and a CTE both reference (MAX-style oracles are
-    // immune; COUNT exposes it — pinned by the C/D probe in r14).
-    "q_path_count" ->
-      """WITH RECURSIVE nodes AS (
-           SELECT DISTINCT CAST(p_partkey AS BIGINT) AS n FROM part
-           WHERE p_partkey >= 1),
-         edges AS (
-           SELECT a.n AS u, b.n AS v
-           FROM nodes a JOIN nodes b ON b.n = 2 * a.n OR b.n = 3 * a.n),
-         paths(v) AS (
-           SELECT n FROM (SELECT u AS n FROM edges
-                          UNION SELECT v FROM edges) en
-           UNION ALL
-           SELECT e.v FROM paths p JOIN edges e ON e.u = p.v)
-         SELECT v AS id, CAST(COUNT(*) - 1 AS BIGINT) AS n_paths
-         FROM paths GROUP BY v ORDER BY id""",
-    // the literal recursive longest-path over the same ×2/×3 DAG.
-    "q_critical_path" ->
-      """WITH RECURSIVE nodes AS (
-           SELECT DISTINCT CAST(p_partkey AS BIGINT) AS n FROM part
-           WHERE p_partkey >= 1),
-         edges AS (
-           SELECT a.n AS u, b.n AS v, b.n % 7 + 1 AS w
-           FROM nodes a JOIN nodes b ON b.n = 2 * a.n OR b.n = 3 * a.n),
-         en AS (SELECT u AS n FROM edges UNION SELECT v FROM edges),
-         paths(v, len) AS (
-           SELECT n, CAST(0 AS BIGINT) FROM en
-           UNION ALL
-           SELECT e.v, p.len + e.w FROM paths p JOIN edges e ON e.u = p.v)
-         SELECT v AS id, MAX(len) AS critical_len
-         FROM paths GROUP BY v ORDER BY id""",
-    // cycle nodes = image of f^(2^24) (chained squaring joins — the
-    // per-node m-step walk was O(n·m): every TAIL node walked the full
-    // bound, which times out at sf1; 2^24 = 16.7M >= m at every tier
-    // up to and including a 15M-customer sf100, and the image of f^N
-    // for N >= max tail length is exactly the cycle-node set), then
-    // the per-cycle walk runs over cycle nodes only (O(Σ len²),
-    // cycles are tiny vs m).
-    "q_cycle_census" ->
-      """WITH RECURSIVE c AS (
-           SELECT CAST(c_custkey AS BIGINT) AS id FROM customer),
-         g AS (SELECT CAST(COUNT(*) AS BIGINT) AS m FROM c),
-         nxt AS MATERIALIZED (SELECT id, (id * id + 1) % g.m AS n FROM c CROSS JOIN g),
-         j0 AS MATERIALIZED (SELECT id, n AS j FROM nxt),
-         j1 AS MATERIALIZED (SELECT a.id, b.j FROM j0 a JOIN j0 b ON b.id = a.j),
-         j2 AS MATERIALIZED (SELECT a.id, b.j FROM j1 a JOIN j1 b ON b.id = a.j),
-         j3 AS MATERIALIZED (SELECT a.id, b.j FROM j2 a JOIN j2 b ON b.id = a.j),
-         j4 AS MATERIALIZED (SELECT a.id, b.j FROM j3 a JOIN j3 b ON b.id = a.j),
-         j5 AS MATERIALIZED (SELECT a.id, b.j FROM j4 a JOIN j4 b ON b.id = a.j),
-         j6 AS MATERIALIZED (SELECT a.id, b.j FROM j5 a JOIN j5 b ON b.id = a.j),
-         j7 AS MATERIALIZED (SELECT a.id, b.j FROM j6 a JOIN j6 b ON b.id = a.j),
-         j8 AS MATERIALIZED (SELECT a.id, b.j FROM j7 a JOIN j7 b ON b.id = a.j),
-         j9 AS MATERIALIZED (SELECT a.id, b.j FROM j8 a JOIN j8 b ON b.id = a.j),
-         j10 AS MATERIALIZED (SELECT a.id, b.j FROM j9 a JOIN j9 b ON b.id = a.j),
-         j11 AS MATERIALIZED (SELECT a.id, b.j FROM j10 a JOIN j10 b ON b.id = a.j),
-         j12 AS MATERIALIZED (SELECT a.id, b.j FROM j11 a JOIN j11 b ON b.id = a.j),
-         j13 AS MATERIALIZED (SELECT a.id, b.j FROM j12 a JOIN j12 b ON b.id = a.j),
-         j14 AS MATERIALIZED (SELECT a.id, b.j FROM j13 a JOIN j13 b ON b.id = a.j),
-         j15 AS MATERIALIZED (SELECT a.id, b.j FROM j14 a JOIN j14 b ON b.id = a.j),
-         j16 AS MATERIALIZED (SELECT a.id, b.j FROM j15 a JOIN j15 b ON b.id = a.j),
-         j17 AS MATERIALIZED (SELECT a.id, b.j FROM j16 a JOIN j16 b ON b.id = a.j),
-         j18 AS MATERIALIZED (SELECT a.id, b.j FROM j17 a JOIN j17 b ON b.id = a.j),
-         j19 AS MATERIALIZED (SELECT a.id, b.j FROM j18 a JOIN j18 b ON b.id = a.j),
-         j20 AS MATERIALIZED (SELECT a.id, b.j FROM j19 a JOIN j19 b ON b.id = a.j),
-         j21 AS MATERIALIZED (SELECT a.id, b.j FROM j20 a JOIN j20 b ON b.id = a.j),
-         j22 AS MATERIALIZED (SELECT a.id, b.j FROM j21 a JOIN j21 b ON b.id = a.j),
-         j23 AS MATERIALIZED (SELECT a.id, b.j FROM j22 a JOIN j22 b ON b.id = a.j),
-         j24 AS MATERIALIZED (SELECT a.id, b.j FROM j23 a JOIN j23 b ON b.id = a.j),
-         cyc AS (SELECT DISTINCT j AS id FROM j24),
-         walk(v0, v) AS (
-           SELECT nxt.id, nxt.n FROM nxt JOIN cyc ON cyc.id = nxt.id
-           UNION
-           SELECT w.v0, nxt.n FROM walk w JOIN nxt ON nxt.id = w.v
-           WHERE w.v <> w.v0),
-         lab AS (SELECT v0 AS id, LEAST(v0, MIN(v)) AS cycle_id
-           FROM walk GROUP BY 1)
-         SELECT cycle_id, CAST(COUNT(*) AS BIGINT) AS size
-         FROM lab GROUP BY 1 ORDER BY cycle_id""",
-    // the same nine expected-ppm literals; observed ppm by truncating
-    // div on both engines.
-    "q_benford" ->
-      """WITH c AS (SELECT CAST(round(o_totalprice * 100, 0) AS BIGINT) AS c
-           FROM orders),
-         d AS (SELECT CAST(substring(CAST(c AS VARCHAR), 1, 1) AS BIGINT)
-             AS digit, COUNT(*) AS cnt
-           FROM c WHERE c > 0 GROUP BY 1),
-         e(digit, expected_ppm) AS (VALUES (1, 301030), (2, 176091),
-           (3, 124939), (4, 96910), (5, 79181), (6, 66947), (7, 57992),
-           (8, 51153), (9, 45757))
-         SELECT d.digit, CAST(cnt AS BIGINT) AS cnt,
-           CAST(cnt * 1000000 // (SELECT SUM(cnt) FROM d) AS BIGINT) AS obs_ppm,
-           CAST(expected_ppm AS BIGINT) AS expected_ppm,
-           CAST(abs(cnt * 1000000 // (SELECT SUM(cnt) FROM d)
-             - expected_ppm) AS BIGINT) AS dev_ppm
-         FROM d JOIN e ON d.digit = e.digit ORDER BY d.digit""",
-    // every count recomputed from the source; version/table/tag
-    // layout is the query's own fixed construction.
-    // the query's own constructed namespace + planted out-of-band
-    // deletion: the verdict table is fully determined.
-    "q_fsck" ->
-      """SELECT * FROM (VALUES
-           (CAST(1 AS BIGINT), 'cust', 'stale-erase-residue', CAST(1 AS BIGINT)),
-           (1, 'cust', 'ok', 1),
-           (2, '', 'empty-version', 2),
-           (3, 'cust', 'ok', 3),
-           (3, 'nat', 'dangling-link', 2)
-         ) t(version, table_name, status, home_version)
-         ORDER BY version, table_name""",
-    // A41: both planted residue classes repaired by their own rules,
-    // fsck clean after (zero non-ok rows), cust intact, nat serving
-    // the SCRUBBED half — the erased rows stay erased.
-    "q_fsck_repair" ->
-      """WITH c AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM customer),
-         n10 AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM nation WHERE n_nationkey < 10)
-         SELECT * FROM (
-           SELECT 'fsck' AS stage, 'non_ok_rows' AS item, '' AS detail, CAST(0 AS BIGINT) AS n
-           UNION ALL SELECT 'repair', 'v1/cust', 'stale-erase-residue:deleted-stale-backup', 0
-           UNION ALL SELECT 'repair', 'v1/nat', 'crashed-erase:restored-scrubbed', 0
-           UNION ALL SELECT 'serve', 'cust@v1', '', (SELECT n FROM c)
-           UNION ALL SELECT 'serve', 'nat@v1', '', (SELECT n FROM n10)
-         ) ORDER BY stage, item""",
-    // A41 fromReplica: the dangling link restored from the A39
-    // replica (checksum-proved before install), fsck clean after,
-    // both tables serving at head with source-recomputed counts.
-    "q_fsck_restore" ->
-      """WITH c AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM customer),
-         n10 AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM nation WHERE n_nationkey < 10)
-         SELECT * FROM (
-           SELECT 'fsck' AS stage, 'non_ok_rows' AS item, '' AS detail, CAST(0 AS BIGINT) AS n
-           UNION ALL SELECT 'repair', 'v2/cust', 'dangling-link:restored-from-replica', 0
-           UNION ALL SELECT 'serve', 'cust@head', '', (SELECT n FROM c)
-           UNION ALL SELECT 'serve', 'nat@head', '', (SELECT n FROM n10)
-         ) ORDER BY stage, item""",
-    // A42: dev1+dev2 swept at their parked versions, prod kept by the
-    // release guard and keepme by the keep-list, vacuum reclaims
-    // exactly the newly unrooted v2, head still serves.
-    "q_ref_gc" ->
-      """SELECT * FROM (
-           SELECT 'kept' AS stage, 'keepme' AS item, CAST(0 AS BIGINT) AS n
-           UNION ALL SELECT 'kept', 'prod', 0
-           UNION ALL SELECT 'serve', 'nat@head',
-             (SELECT CAST(COUNT(*) AS BIGINT) FROM nation WHERE n_nationkey < 10)
-           UNION ALL SELECT 'swept', 'dev1', 2
-           UNION ALL SELECT 'swept', 'dev2', 3
-           UNION ALL SELECT 'vacuumed', 'v2', 2
-         ) ORDER BY stage, item""",
-    // three versions of the query's own construction: full publish,
-    // then two one-table linked publishes; linked row mass recomputed.
-    "q_storage_report" ->
-      """WITH c AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM customer),
-         ce AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM customer
-                WHERE c_custkey % 2 = 0),
-         na AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM nation),
-         nf AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM nation
-                WHERE n_nationkey < 10)
-         SELECT CAST(1 AS BIGINT) AS version, CAST(2 AS BIGINT) AS n_physical,
-           CAST(0 AS BIGINT) AS n_linked,
-           (SELECT n FROM c) + (SELECT n FROM na) AS logical_rows,
-           CAST(0 AS BIGINT) AS linked_rows
-         UNION ALL
-         SELECT 2, 1, 1, (SELECT n FROM ce) + (SELECT n FROM na),
-           (SELECT n FROM na)
-         UNION ALL
-         SELECT 3, 1, 1, (SELECT n FROM ce) + (SELECT n FROM nf),
-           (SELECT n FROM ce)
-         ORDER BY version""",
-    // B115's per-order audit replayed from scratch, then the one-row
-    // rollup; every order has exactly one header so n_headerless = 0.
-    "q_reconcile_live" ->
-      """WITH lv AS (SELECT l_orderkey,
-             (CAST(round(CAST(l_extendedprice AS DOUBLE) * 100, 0) AS BIGINT)
-              * (100 - CAST(round(CAST(l_discount AS DOUBLE) * 100, 0) AS BIGINT))
-              * (100 + CAST(round(CAST(l_tax AS DOUBLE) * 100, 0) AS BIGINT)))
-              // 10000 AS lc
-           FROM lineitem),
-         agg AS (SELECT l_orderkey, SUM(lc) AS lines_cents FROM lv GROUP BY 1),
-         j AS (SELECT CAST(round(o_totalprice * 100, 0) AS BIGINT) AS tc,
-             COALESCE(lines_cents, 0) AS lines_cents
-           FROM orders LEFT JOIN agg ON o_orderkey = l_orderkey)
-         SELECT CAST(COUNT(*) AS BIGINT) AS n_orders,
-           CAST(SUM(CASE WHEN tc = lines_cents THEN 1 ELSE 0 END) AS BIGINT)
-             AS n_exact,
-           CAST(SUM(abs(tc - lines_cents)) AS BIGINT) AS sum_abs_diff,
-           CAST(MAX(abs(tc - lines_cents)) AS BIGINT) AS max_abs_diff,
-           CAST(0 AS BIGINT) AS n_headerless
-         FROM j""",
-    // v2 = even orders joined v1 dims (served through the link);
-    // lineage constants pinned: version 2, dims homed at v1, vacuum
-    // deleted nothing (v1 link-protected).
-    "q_linked_publish" ->
-      """SELECT c_mktsegment,
-           CAST(COUNT(*) AS BIGINT) AS n_orders,
-           CAST(SUM(CAST(round(o_totalprice * 100, 0) AS BIGINT)) AS BIGINT)
-             AS rev_cents,
-           CAST(2 AS BIGINT) AS pinned_version,
-           CAST(1 AS BIGINT) AS dims_home,
-           CAST(0 AS BIGINT) AS n_vacuumed
-         FROM orders JOIN customer ON o_custkey = c_custkey
-         WHERE o_orderkey % 2 = 0
-         GROUP BY c_mktsegment ORDER BY c_mktsegment""",
-    "q_snapshot_catalog" ->
-      """SELECT * FROM (
-           SELECT CAST(1 AS BIGINT) AS version, 'cust' AS table_name,
-             CAST((SELECT COUNT(*) FROM customer) AS BIGINT) AS n_rows,
-             FALSE AS is_current, 'prod' AS tags
-           UNION ALL
-           SELECT 1, 'nat', (SELECT COUNT(*) FROM nation), FALSE, 'prod'
-           UNION ALL
-           SELECT 2, 'cust',
-             (SELECT COUNT(*) FROM customer WHERE c_custkey % 2 = 0),
-             TRUE, ''
-         ) ORDER BY version, table_name""",
-    // the C10 whitespace tokenization + (freq desc, term) ranking +
-    // integer 90% threshold (cum*10 >= total*9) replayed exactly.
-    "q_vocab_coverage" ->
-      """WITH tk AS (SELECT source, t AS tok FROM (
-             SELECT source,
-               list_filter(regexp_split_to_array(text, '[ \t\n\r]+'),
-                 x -> x <> '') AS ts
-             FROM documents), UNNEST(ts) AS u(t)),
-         tf AS (SELECT source, tok, COUNT(*) AS cnt FROM tk GROUP BY 1, 2),
-         tot AS (SELECT source, SUM(cnt) AS n_tokens, COUNT(*) AS n_terms
-           FROM tf GROUP BY 1),
-         r AS (SELECT source, tok, cnt,
-             ROW_NUMBER() OVER (PARTITION BY source ORDER BY cnt DESC, tok) AS rnk,
-             SUM(cnt) OVER (PARTITION BY source ORDER BY cnt DESC, tok
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-           FROM tf)
-         SELECT r.source, CAST(n_tokens AS BIGINT) AS n_tokens,
-           CAST(n_terms AS BIGINT) AS n_terms,
-           CAST(MIN(CASE WHEN cum * 10 >= n_tokens * 9 THEN rnk END) AS BIGINT) AS vocab90,
-           CAST(SUM(CASE WHEN rnk <= 100 THEN cnt ELSE 0 END) * 1000000
-             // MAX(n_tokens) AS BIGINT) AS top100_ppm
-         FROM r JOIN tot ON r.source = tot.source
-         GROUP BY r.source, n_tokens, n_terms ORDER BY r.source""",
-    // both versions' post-erasure state recomputed from the source:
-    // v1 = all customers, v2 = positive balances, minus the mod-10
-    // erasure set; erased_present is Spark's read-back, constant-0 here.
-    "q_erase_history" ->
-      """WITH c AS (SELECT c_custkey, c_acctbal,
-             CAST(round(c_acctbal * 100, 0) AS BIGINT) AS cents
-           FROM customer),
-         v AS (SELECT 1 AS version, * FROM c
-               UNION ALL SELECT 2, * FROM c WHERE c_acctbal > 0.0)
-         SELECT CAST(version AS BIGINT) AS version,
-           CAST(COUNT(*) FILTER (WHERE c_custkey % 10 <> 0) AS BIGINT) AS rows_after,
-           CAST(COUNT(*) FILTER (WHERE c_custkey % 10 = 0) AS BIGINT) AS removed,
-           CAST(0 AS BIGINT) AS erased_present,
-           CAST(SUM(cents) FILTER (WHERE c_custkey % 10 <> 0) AS BIGINT) AS bal_cents_after
-         FROM v GROUP BY version ORDER BY version""",
-    // the state machine's (ts, event_id) total order replayed as a
-    // last-non-null window: latest prior view per purchase, ties
-    // broken by event_id on both sides.
-    "q_stream_asof" ->
-      """WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS ts_us,
-             event_type,
-             CAST(round(CAST(value AS DOUBLE) * 100, 0) AS BIGINT) AS cents
-           FROM events WHERE event_type IN ('view', 'purchase')),
-         w AS (SELECT *,
-             LAST_VALUE(CASE WHEN event_type = 'view' THEN ts_us END
-               IGNORE NULLS) OVER win AS view_ts_us,
-             LAST_VALUE(CASE WHEN event_type = 'view' THEN cents END
-               IGNORE NULLS) OVER win AS view_cents
-           FROM e
-           WINDOW win AS (PARTITION BY user_id ORDER BY ts_us, event_id
-             ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING))
-         SELECT user_id, event_id, ts_us, view_ts_us, view_cents
-         FROM w WHERE event_type = 'purchase' ORDER BY event_id""",
-    // the same total 13-way decision ladder replayed; bucket sums
-    // must equal the pair count by construction on both sides.
-    "q_interval_relations" ->
-      """WITH li AS (SELECT l_orderkey AS ok, l_linenumber AS ln,
-             CAST(l_shipdate AS DATE) AS st,
-             CAST(CAST(l_shipdate AS DATE)
-               + CAST(CAST(l_quantity AS BIGINT) % 7 + l_linenumber AS INTEGER)
-                 * INTERVAL 1 DAY AS DATE) AS en
-           FROM lineitem),
-         p AS (SELECT a.st AS a1, a.en AS a2, b.st AS b1, b.en AS b2
-           FROM li a JOIN li b ON a.ok = b.ok AND a.ln < b.ln)
-         SELECT CASE
-             WHEN a2 < b1 THEN 'before'
-             WHEN a2 = b1 THEN 'meets'
-             WHEN a1 > b2 THEN 'after'
-             WHEN a1 = b2 THEN 'met_by'
-             WHEN a1 < b1 AND a2 < b2 THEN 'overlaps'
-             WHEN a1 < b1 AND a2 = b2 THEN 'finished_by'
-             WHEN a1 < b1 AND a2 > b2 THEN 'contains'
-             WHEN a1 = b1 AND a2 < b2 THEN 'starts'
-             WHEN a1 = b1 AND a2 = b2 THEN 'equals'
-             WHEN a1 = b1 AND a2 > b2 THEN 'started_by'
-             WHEN a1 > b1 AND a2 < b2 THEN 'during'
-             WHEN a1 > b1 AND a2 = b2 THEN 'finishes'
-             ELSE 'overlapped_by' END AS relation,
-           CAST(COUNT(*) AS BIGINT) AS cnt
-         FROM p GROUP BY 1 ORDER BY 1""",
-    // exact S with its concordant/discordant/tie decomposition,
-    // replayed from the pair definition on the monthly cents series.
-    "q_kendall_trend" ->
-      """WITH s AS (SELECT o_orderpriority AS grp,
-             date_trunc('month', o_orderdate) AS mon,
-             SUM(CAST(round(o_totalprice * 100, 0) AS BIGINT)) AS v
-           FROM orders GROUP BY 1, 2)
-         SELECT a.grp,
-           CAST(COUNT(DISTINCT a.mon) + 1 AS BIGINT) AS n_months,
-           CAST(SUM(CASE WHEN b.v > a.v THEN 1 WHEN b.v < a.v THEN -1
-             ELSE 0 END) AS BIGINT) AS s_stat,
-           CAST(SUM(CASE WHEN b.v > a.v THEN 1 ELSE 0 END) AS BIGINT) AS concordant,
-           CAST(SUM(CASE WHEN b.v < a.v THEN 1 ELSE 0 END) AS BIGINT) AS discordant,
-           CAST(SUM(CASE WHEN b.v = a.v THEN 1 ELSE 0 END) AS BIGINT) AS ties
-         FROM s a JOIN s b ON a.grp = b.grp AND a.mon < b.mon
-         GROUP BY a.grp ORDER BY a.grp""",
-    // the v1 (tagged) derivation recomputed directly: mod-7 facts
-    // joined against the FULL dim — any torn mix with v2's filtered
-    // dim or mod-3 facts changes counts.
-    "q_snapshot_read_all" ->
-      """SELECT c_nationkey, CAST(COUNT(*) AS BIGINT) AS n_orders,
-           CAST(SUM(CAST(round(o_totalprice * 100, 0) AS BIGINT)) AS BIGINT)
-             AS rev_cents,
-           CAST(1 AS BIGINT) AS pinned_version
-         FROM orders JOIN customer ON o_custkey = c_custkey
-         WHERE o_orderkey % 7 = 0
-         GROUP BY c_nationkey ORDER BY c_nationkey""",
-    // INDEPENDENT formulation: both tie roundings recomputed from
-    // the integer DEFINITION (every s_c ends in 5, so HALF_UP tens =
-    // k+1 away from zero and HALF_EVEN tens = k + (k mod 2) on the
-    // magnitude k = |s_c| // 10) — NOT DuckDB's round/roundbankers,
-    // whose decimal overloads detour through doubles and mis-break
-    // exact ties. floor/ceil keep the dialect functions (the integer
-    // boundary is never within double error of a .x5 value). pmod
-    // spelled out as ((a % b) + b) % b.
-    "q_decimal_conformance" ->
-      """WITH li AS (SELECT l_orderkey, l_linenumber,
-             CAST(round(l_extendedprice * 100, 0) AS BIGINT) AS c
-           FROM lineitem),
-         t AS (SELECT l_orderkey, l_linenumber,
-             (c // 10 * 10 + 5) * (CASE WHEN l_orderkey % 2 = 0
-                                        THEN -1 ELSE 1 END) AS s_c
-           FROM li),
-         v AS (SELECT *, CAST(s_c AS DECIMAL(18,0)) * 0.01 AS v,
-             ABS(s_c) // 10 AS k,
-             CASE WHEN s_c >= 0 THEN 1 ELSE -1 END AS sg
-           FROM t)
-         SELECT l_orderkey, l_linenumber, s_c,
-           sg * (k + 1) AS r_half_up,
-           sg * (k + k % 2) AS r_half_even,
-           CAST(floor(v) AS BIGINT) AS fl,
-           CAST(ceil(v) AS BIGINT) AS ce,
-           s_c // 7 AS idiv,
-           s_c % 7 AS imod,
-           ((s_c % 7) + 7) % 7 AS pm
-         FROM v ORDER BY l_orderkey, l_linenumber""",
-    // the literal recursive CTE with the running path product.
-    "q_bom_explode" ->
-      """WITH RECURSIVE n AS (SELECT c_custkey AS id,
-             CASE WHEN c_custkey >= 10 THEN c_custkey // 10 END AS parent,
-             c_custkey % 5 + 1 AS q FROM customer),
-         cl AS (
-           SELECT id AS v, id AS a, CAST(1 AS BIGINT) AS m FROM n
-           UNION ALL
-           SELECT cl.v, n.parent, cl.m * n.q FROM cl JOIN n ON cl.a = n.id
-           WHERE n.parent IS NOT NULL)
-         SELECT CAST(a AS BIGINT) AS id,
-           CAST(COUNT(*) AS BIGINT) AS n_components,
-           CAST(SUM(m) AS BIGINT) AS total_units
-         FROM cl WHERE v <> a GROUP BY a ORDER BY id""",
-    // three chained first-qualifying-event stages + the lag sums and
-    // conversion ppms replayed.
-    "q_funnel_windowed" ->
-      """WITH e AS (SELECT user_id, event_type, epoch_us(ts) AS ts_us
-           FROM events),
-         v AS (SELECT user_id, MIN(ts_us) AS vt FROM e
-           WHERE event_type = 'view' GROUP BY 1),
-         c AS (SELECT e.user_id, MIN(ts_us) AS ct FROM e JOIN v USING (user_id)
-           WHERE event_type = 'click' AND ts_us > vt
-             AND ts_us <= vt + 3600000000 GROUP BY 1),
-         p AS (SELECT e.user_id, MIN(ts_us) AS pt FROM e JOIN c USING (user_id)
-           WHERE event_type = 'purchase' AND ts_us > ct
-             AND ts_us <= ct + 86400000000 GROUP BY 1)
-         SELECT CAST(COUNT(*) AS BIGINT) AS n_viewed,
-           CAST(COUNT(ct) AS BIGINT) AS n_clicked,
-           CAST(COUNT(pt) AS BIGINT) AS n_purchased,
-           CAST(SUM(ct - vt) AS BIGINT) AS sum_click_lag_us,
-           CAST(SUM(pt - ct) AS BIGINT) AS sum_purchase_lag_us,
-           CAST(COUNT(ct) * 1000000 // COUNT(*) AS BIGINT) AS view_click_ppm,
-           CAST(COUNT(pt) * 1000000 // NULLIF(COUNT(ct), 0) AS BIGINT)
-             AS click_purchase_ppm
-         FROM v LEFT JOIN c USING (user_id) LEFT JOIN p USING (user_id)""",
-    // group lcp = lcp(min, max) — the lexicographic-bounds identity —
-    // recomputed in DuckDB by monotone prefix counting.
-    "q_prefix_sharing" ->
-      """WITH g AS (SELECT substr(text, 1, 8) AS bucket, COUNT(*) AS n_docs,
-             MIN(text) AS mn, MAX(text) AS mx,
-             SUM(length(text)) AS total_chars
-           FROM documents GROUP BY 1 HAVING COUNT(*) >= 2),
-         l AS (SELECT bucket, n_docs, total_chars,
-             (SELECT COUNT(*) FROM UNNEST(range(1,
-                  LEAST(length(mn), length(mx)) + 1)) AS u(i)
-               WHERE substr(mn, 1, CAST(i AS INTEGER))
-                   = substr(mx, 1, CAST(i AS INTEGER))) AS lcp
-           FROM g)
-         SELECT bucket, CAST(n_docs AS BIGINT) AS n_docs,
-           CAST(total_chars AS BIGINT) AS total_chars,
-           CAST(lcp AS BIGINT) AS lcp_chars,
-           CAST(lcp * (n_docs - 1) AS BIGINT) AS saved_chars
-         FROM l ORDER BY bucket""",
-    // the FIFO remnant closed form, HUGEINT lot values, and the
-    // padded bucket labels replayed.
-    "q_inventory_aging" ->
-      """WITH t AS (SELECT l_partkey AS k, l_shipdate AS sd,
-             l_orderkey AS oky, l_linenumber AS ln,
-             date_diff('day', DATE '1992-01-01', CAST(l_shipdate AS DATE))
-               AS day,
-             CAST(round(l_quantity, 0) AS BIGINT) AS q,
-             l_returnflag = 'R' AS is_out,
-             CAST(round(l_extendedprice * 100, 0) AS BIGINT)
-               // CAST(round(l_quantity, 0) AS BIGINT) AS uc
-           FROM lineitem),
-         c AS (SELECT *, SUM(q) OVER (PARTITION BY k, is_out
-             ORDER BY sd, oky, ln
-             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS hi
-           FROM t),
-         o AS (SELECT k, SUM(q) AS ot FROM t WHERE is_out GROUP BY k),
-         r AS (SELECT c.k, c.day, c.uc,
-             GREATEST(0, hi - GREATEST(hi - q, COALESCE(ot, 0))) AS rem
-           FROM c LEFT JOIN o ON c.k = o.k WHERE NOT is_out),
-         b AS (SELECT CASE WHEN 2557 - day <= 365 THEN '0000-0365'
-                WHEN 2557 - day <= 730 THEN '0366-0730'
-                WHEN 2557 - day <= 1095 THEN '0731-1095'
-                ELSE '1096+' END AS bucket, rem, uc
-           FROM r WHERE rem > 0)
-         SELECT bucket, CAST(COUNT(*) AS BIGINT) AS n_lots,
-           CAST(SUM(rem) AS BIGINT) AS on_hand_qty,
-           CAST(SUM(CAST(rem AS HUGEINT) * uc) AS BIGINT)
-             AS on_hand_value_cents
-         FROM b GROUP BY bucket ORDER BY bucket""",
-    // ranks on the pre-aggregated rollup, spine-aligned lag, churn
-    // status and delta replayed row-for-row.
-    "q_rank_movers" ->
-      """WITH li AS (SELECT l_partkey // 10 AS grp,
-             CAST((year(CAST(l_shipdate AS DATE)) - 1992) * 12
-               + month(CAST(l_shipdate AS DATE)) - 1 AS BIGINT) AS m,
-             CAST(round(l_extendedprice * 100, 0) AS BIGINT) AS rev
-           FROM lineitem),
-         mo AS (SELECT m, grp, CAST(SUM(rev) AS BIGINT) AS rev_cents
-           FROM li GROUP BY 1, 2),
-         rk AS (SELECT m, grp, rev_cents,
-             CAST(ROW_NUMBER() OVER (PARTITION BY m
-               ORDER BY rev_cents DESC, grp ASC) AS BIGINT) AS rnk
-           FROM mo),
-         mx AS (SELECT MIN(m) AS mn, MAX(m) AS mx FROM mo),
-         ty AS (SELECT DISTINCT p_partkey // 10 AS grp FROM part),
-         sp AS (SELECT ty.grp, mx.mn, g.m
-           FROM ty, mx, UNNEST(range(mx.mn, mx.mx + 1)) AS g(m)),
-         pan AS (SELECT sp.m, sp.grp, sp.mn, rk.rev_cents, rk.rnk
-           FROM sp LEFT JOIN rk ON sp.m = rk.m AND sp.grp = rk.grp),
-         lg AS (SELECT *, LAG(rnk) OVER (PARTITION BY grp ORDER BY m)
-             AS prev_rnk FROM pan)
-         SELECT m, grp, rev_cents, rnk, prev_rnk,
-           prev_rnk - rnk AS rank_delta,
-           CASE WHEN rnk IS NOT NULL AND m = mn THEN 'first'
-                WHEN rnk IS NOT NULL AND prev_rnk IS NULL THEN 'entered'
-                WHEN rnk IS NULL AND prev_rnk IS NOT NULL THEN 'exited'
-                ELSE 'ranked' END AS status
-         FROM lg WHERE rnk IS NOT NULL OR prev_rnk IS NOT NULL
-         ORDER BY m, grp""",
-    // panel + injected shift + reference + the two B94 windows + the
-    // alarm rollup, replayed bit-for-bit.
-    "q_cusum_drift" ->
-      """WITH o AS (SELECT o_custkey,
-             CAST((year(CAST(o_orderdate AS DATE)) - 1992) * 12
-               + month(CAST(o_orderdate AS DATE)) - 1 AS BIGINT) AS m,
-             CAST(round(o_totalprice * 100, 0) AS BIGINT) AS rev FROM orders),
-         mo AS (SELECT n_nationkey, n_name, m, SUM(rev) AS rev
-           FROM o JOIN customer ON o_custkey = c_custkey
-             JOIN nation ON c_nationkey = n_nationkey
-           GROUP BY 1, 2, 3),
-         mx AS (SELECT MAX(m) AS mx FROM mo),
-         sp AS (SELECT n_nationkey, n_name, g.m
-           FROM nation, mx, UNNEST(range(0, mx + 1)) AS g(m)),
-         pan AS (SELECT sp.n_nationkey, sp.n_name, sp.m,
-             COALESCE(mo.rev, 0) + CASE
-               WHEN sp.m >= 48 AND sp.n_nationkey % 5 = 0
-               THEN COALESCE(mo.rev, 0) // 2 ELSE 0 END AS x
-           FROM sp LEFT JOIN mo
-             ON sp.n_nationkey = mo.n_nationkey AND sp.m = mo.m),
-         ref AS (SELECT n_name, SUM(CASE WHEN m < 36 THEN x ELSE 0 END) // 36
-             AS ref FROM pan GROUP BY 1),
-         d AS (SELECT pan.n_name, m, x - ref - ref // 20 AS dd, ref
-           FROM pan JOIN ref USING (n_name)),
-         p AS (SELECT n_name, m, ref, dd, SUM(dd) OVER (PARTITION BY n_name
-             ORDER BY m ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS pre
-           FROM d),
-         sb AS (SELECT n_name, m, ref, pre + GREATEST(0, -MIN(pre) OVER
-             (PARTITION BY n_name ORDER BY m
-              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)) AS bal
-           FROM p)
-         SELECT n_name, CAST(COUNT(*) AS BIGINT) AS n_points,
-           CAST(MAX(bal) AS BIGINT) AS max_cusum,
-           CAST(SUM(CASE WHEN bal > ref THEN 1 ELSE 0 END) AS BIGINT) AS n_alarm,
-           CAST(MIN(CASE WHEN bal > ref THEN m END) AS BIGINT) AS first_alarm_m
-         FROM sb GROUP BY n_name ORDER BY n_name""",
-    // the full two-timeline resolution replayed literally: SCD2
-    // rebuild, lagged knowledge versions + starred corrections, valid
-    // containment AND sys_from <= audit, latest-knowledge winner.
-    "q_bitemporal_join" ->
-      """WITH e AS (SELECT user_id, event_id, event_type, epoch_us(ts) AS ts_us,
-             value FROM events),
-         ne AS (SELECT * FROM e WHERE event_type <> 'purchase'),
-         chg AS (SELECT *, lag(event_type) OVER
-             (PARTITION BY user_id ORDER BY ts_us, event_id) AS prev FROM ne),
-         cp AS (SELECT user_id, event_id, event_type, ts_us FROM chg
-                WHERE prev IS NULL OR prev <> event_type),
-         v AS (SELECT user_id, event_type AS state, ts_us AS vf,
-             lead(ts_us) OVER (PARTITION BY user_id ORDER BY ts_us, event_id) AS vt
-           FROM cp),
-         dim0 AS (SELECT user_id, state, vf, vt,
-             vf + ((vf // 1000000) % 5 + 1) * 3600000000 AS sf FROM v),
-         dim AS (SELECT * FROM dim0
-           UNION ALL
-           SELECT user_id, state || '*', vf, vt, sf + 10 * 3600000000
-           FROM dim0 WHERE (vf // 1000000) % 3 = 0),
-         p AS (SELECT event_id, user_id, ts_us,
-             CAST(round(value * 100, 0) AS BIGINT) AS rev_cents,
-             ts_us + 7 * 3600000000 AS audit_us
-           FROM e WHERE event_type = 'purchase'),
-         m AS (SELECT p.event_id, p.rev_cents, dim.state, dim.sf,
-             ROW_NUMBER() OVER (PARTITION BY p.event_id
-               ORDER BY dim.sf DESC, dim.vf DESC) AS rn
-           FROM p LEFT JOIN dim ON p.user_id = dim.user_id
-             AND p.ts_us >= dim.vf AND (dim.vt IS NULL OR p.ts_us < dim.vt)
-             AND dim.sf <= p.audit_us)
-         SELECT event_id, COALESCE(state, 'none') AS state,
-           CAST(sf AS BIGINT) AS known_sys_us, rev_cents
-         FROM m WHERE rn = 1 ORDER BY event_id""",
-    // literal interval-containment join against the replayed SCD2
-    // dimension (zero-width intervals excluded exactly as pitJoin
-    // drops them) — equality proves the as-of reduction.
-    "q_pit_join" ->
-      """WITH e AS (SELECT user_id, event_id, event_type, epoch_us(ts) AS ts_us,
-             value FROM events),
-         ne AS (SELECT * FROM e WHERE event_type <> 'purchase'),
-         chg AS (SELECT *, lag(event_type) OVER
-             (PARTITION BY user_id ORDER BY ts_us, event_id) AS prev FROM ne),
-         cp AS (SELECT user_id, event_id, event_type, ts_us FROM chg
-                WHERE prev IS NULL OR prev <> event_type),
-         v AS (SELECT user_id, event_type AS state, ts_us AS vf,
-             lead(ts_us) OVER (PARTITION BY user_id ORDER BY ts_us, event_id) AS vt
-           FROM cp),
-         live AS (SELECT * FROM v WHERE vt IS NULL OR vf <> vt),
-         p AS (SELECT event_id, user_id, ts_us,
-             CAST(round(value * 100, 0) AS BIGINT) AS rev_cents
-           FROM e WHERE event_type = 'purchase')
-         SELECT p.event_id, COALESCE(live.state, 'none') AS state, p.rev_cents
-         FROM p LEFT JOIN live ON p.user_id = live.user_id
-           AND live.vf <= p.ts_us AND (live.vt IS NULL OR p.ts_us < live.vt)
-         ORDER BY p.event_id""",
-    // identical total order; first/last/nth carry the explicit
-    // full-partition ROWS frame on both sides.
-    "q_window_conformance" ->
-      """WITH o AS (SELECT o_custkey, o_orderkey, o_orderdate,
-             CAST(round(o_totalprice * 100, 0) AS BIGINT) AS c FROM orders)
-         SELECT o_custkey, o_orderkey,
-           CAST(rank() OVER w AS BIGINT) AS rnk,
-           CAST(dense_rank() OVER w AS BIGINT) AS drnk,
-           percent_rank() OVER w AS prnk,
-           cume_dist() OVER w AS cdist,
-           CAST(ntile(4) OVER w AS BIGINT) AS quartile,
-           lag(c, 1) OVER w AS prev_c,
-           lead(c, 1) OVER w AS next_c,
-           first_value(c) OVER wf AS first_c,
-           last_value(c) OVER wf AS last_c,
-           nth_value(c, 2) OVER wf AS second_c
-         FROM o
-         WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey),
-           wf AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
-             ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
-         ORDER BY o_custkey, o_orderkey""",
-    // Spark `<=>` ≡ IS NOT DISTINCT FROM; aggregate/distinct/grouping
-    // null behaviors pinned as one metric table.
-    "q_null_semantics" ->
-      """WITH o AS (SELECT o_orderkey, nullif(o_orderpriority, '1-URGENT') AS prio,
-             CAST(round(o_totalprice * 100, 0) AS BIGINT) AS c FROM orders),
-         counts AS (
-           SELECT 'count_star' AS metric, CAST(COUNT(*) AS BIGINT) AS value FROM o
-           UNION ALL SELECT 'count_col', CAST(COUNT(prio) AS BIGINT) FROM o
-           UNION ALL SELECT 'count_distinct', CAST(COUNT(DISTINCT prio) AS BIGINT) FROM o
-           UNION ALL SELECT 'sum_null_slice_cents',
-             CAST(SUM(CASE WHEN prio IS NULL THEN c END) AS BIGINT) FROM o),
-         grp AS (SELECT 'group:' || COALESCE(prio, 'NULL') AS metric,
-             CAST(COUNT(*) AS BIGINT) AS value FROM o GROUP BY 1),
-         r AS (SELECT DISTINCT prio AS rp FROM o),
-         joins AS (
-           SELECT 'join_eq_rows' AS metric, CAST(COUNT(*) AS BIGINT) AS value
-           FROM o JOIN r ON o.prio = r.rp
-           UNION ALL
-           SELECT 'join_null_safe_rows', CAST(COUNT(*) AS BIGINT)
-           FROM o JOIN r ON o.prio IS NOT DISTINCT FROM r.rp)
-         SELECT * FROM counts UNION ALL SELECT * FROM grp
-         UNION ALL SELECT * FROM joins ORDER BY metric""",
-    // the same rollup from the ORIGINAL parquet table — a value that
-    // mutates crossing the ORC boundary cannot cancel out here.
-    "q_orc_roundtrip" ->
-      """WITH o AS (SELECT o_orderkey, o_custkey,
-             nullif(o_orderpriority, '1-URGENT') AS prio, o_orderdate,
-             CAST(round(o_totalprice * 100, 0) AS BIGINT) AS cents FROM orders)
-         SELECT CAST(year(o_orderdate) AS BIGINT) AS yr,
-           CAST(COUNT(*) AS BIGINT) AS n_orders,
-           CAST(SUM(cents) AS BIGINT) AS sum_cents,
-           CAST(SUM(CASE WHEN prio IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_null_prio,
-           CAST(COUNT(DISTINCT o_custkey) AS BIGINT) AS n_cust
-         FROM o GROUP BY 1 ORDER BY 1""",
-    // the plain unsalted join — equality proves the hot/cold split +
-    // salted-hot union loses and duplicates nothing.
-    "q_adaptive_salt" ->
-      """WITH probe AS (SELECT
-             CASE WHEN l_orderkey % 10 < 3 THEN 1 ELSE l_partkey END AS k,
-             CAST(round(l_extendedprice * 100, 0) AS BIGINT) AS c FROM lineitem)
-         SELECT p_brand, CAST(COUNT(*) AS BIGINT) AS n_items,
-           CAST(SUM(c) AS BIGINT) AS sum_cents
-         FROM probe JOIN part ON k = p_partkey GROUP BY 1 ORDER BY 1""",
-    // BIGINT // truncates toward zero exactly like Spark's `div`
-    // (verified on negative sums). The DOUBLE cast is load-bearing:
-    // DuckDB evaluates FLOAT * INT in FLOAT precision (Spark promotes
-    // to double), which shifts ~0.5% of element roundings by one micro.
-    "q_embedding_stats" ->
-      """SELECT label, CAST(u.i - 1 AS BIGINT) AS dim,
-           CAST(COUNT(*) AS BIGINT) AS n_vecs,
-           CAST(SUM(CAST(round(CAST(embedding[u.i] AS DOUBLE) * 1000000) AS BIGINT))
-             // COUNT(*) AS BIGINT) AS centroid_micro
-         FROM embeddings, UNNEST(range(1, len(embedding) + 1)) AS u(i)
-         GROUP BY 1, 2 ORDER BY 1, 2""",
-    "q_bitmap_distinct" ->
-      """SELECT l_returnflag,
-           CAST(COUNT(DISTINCT l_suppkey) AS BIGINT) AS n_supp,
-           CAST(COUNT(DISTINCT l_partkey) AS BIGINT) AS n_part,
-           CAST(COUNT(*) AS BIGINT) AS n_rows
-         FROM lineitem GROUP BY 1 ORDER BY 1""",
-    // the literal recursive CTE the operator replaces; ancestor-or-self
-    // closure then one rollup on the ancestor key.
-    "q_subtree_rollup" ->
-      """WITH RECURSIVE anc AS (
-           SELECT c_custkey AS v, c_custkey AS a FROM customer
-           UNION ALL
-           SELECT v, a // 10 FROM anc WHERE a >= 10),
-         cv AS (SELECT c_custkey,
-             CAST(round(c_acctbal * 100, 0) AS BIGINT) AS bal FROM customer)
-         SELECT a AS id, CAST(COUNT(*) AS BIGINT) AS n_nodes,
-           CAST(SUM(cv.bal) AS BIGINT) AS sum_value
-         FROM anc JOIN cv ON anc.v = cv.c_custkey
-         GROUP BY 1 ORDER BY 1""",
-    // presence of a drifting key == its deterministic conditional
-    // (to_json omits nulls), so the replay counts the conditionals.
-    "q_schema_drift" ->
-      """WITH u AS (
-           SELECT 'src_v2_field' AS key,
-             CAST(SUM(CASE WHEN o_orderkey % 37 = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_rows
-           FROM orders
-           UNION ALL
-           SELECT 'exp_tag',
-             CAST(SUM(CASE WHEN o_orderkey % 101 = 0 THEN 1 ELSE 0 END) AS BIGINT)
-           FROM orders)
-         SELECT key, n_rows FROM u WHERE n_rows > 0 ORDER BY key""",
-    // full string-space replay of every stage: the 1-in-89 corruption
-    // excludes rows from the join, the rest denorm and roll up.
-    "q_warehouse_pipeline" ->
-      """WITH good AS (SELECT o_custkey, o_orderpriority AS pr,
-             CAST(round(o_totalprice * 100, 0) AS BIGINT) AS cents
-           FROM orders WHERE o_orderkey % 89 <> 0),
-         rollup AS (SELECT c_mktsegment AS segment, pr,
-             CAST(COUNT(*) AS BIGINT) AS n_orders,
-             CAST(SUM(cents) AS BIGINT) AS rev_cents
-           FROM good JOIN customer ON o_custkey = c_custkey
-           GROUP BY 1, 2),
-         dead AS (SELECT '__quarantine' AS segment, '__quarantine' AS pr,
-             CAST(COUNT(*) AS BIGINT) AS n_orders, CAST(0 AS BIGINT) AS rev_cents
-           FROM orders WHERE o_orderkey % 89 = 0)
-         SELECT * FROM rollup UNION ALL SELECT * FROM dead
-         ORDER BY segment, pr""",
-    // DuckDB list functions replay the battery; arrays compare as csv
-    // strings (the harness gate is scalar-typed).
-    "q_array_funcs" ->
-      """WITH arrs AS (SELECT l_orderkey,
-             list_sort(list(CAST(l_quantity AS BIGINT))) AS qs
-           FROM lineitem GROUP BY 1)
-         SELECT l_orderkey,
-           array_to_string(qs, ',') AS qs,
-           array_to_string(list_sort(list_distinct(qs)), ',') AS dedup_sorted,
-           array_to_string(qs[1:3], ',') AS first3,
-           CAST(qs[-1] AS BIGINT) AS last_q,
-           CAST(list_sum(qs) AS BIGINT) AS fold_sum,
-           array_to_string(list_transform(range(1, len(qs) + 1),
-             i -> qs[i] + qs[len(qs) - i + 1]), ',') AS zip_sum,
-           array_to_string(flatten([qs, [1, 2, 3]]), ',') AS flat,
-           CAST(len(qs) AS BIGINT) AS n
-         FROM arrs ORDER BY 1""",
-    // the whole bigram model replayed: train-half counts, per-bigram
-    // CASE between the seen branch and the stupid-backoff branch.
-    "q_bigram_surprisal" ->
-      """WITH w AS (SELECT doc_id,
-             list_filter(string_split_regex(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[\x00-\x2f\x3a-\x40\x5b-\x5e\x60\x7b-\x7f]+'), t -> t <> '') AS ts
-           FROM documents),
-         pairs AS (SELECT doc_id, ts[i] AS w1, ts[i + 1] AS w2
-           FROM w, UNNEST(range(1, len(ts))) AS u(i)),
-         tr AS (SELECT * FROM w WHERE doc_id % 2 = 0),
-         trtok AS (SELECT unnest(ts) AS w FROM tr),
-         uni AS (SELECT w, COUNT(*) AS cu FROM trtok GROUP BY 1),
-         bic AS (SELECT ts[i] AS w1, ts[i + 1] AS w2, COUNT(*) AS cb
-           FROM tr, UNNEST(range(1, len(ts))) AS u(i) GROUP BY 1, 2),
-         tot AS (SELECT length(bin(COUNT(*))) AS bits_n FROM trtok),
-         scored AS (SELECT p.doc_id,
-             CASE WHEN bic.cb IS NOT NULL
-                  THEN length(bin(u1.cu)) - length(bin(bic.cb))
-                  ELSE 1 + tot.bits_n - COALESCE(length(bin(u2.cu)), 0) END AS s
-           FROM pairs p
-           LEFT JOIN uni u1 ON p.w1 = u1.w
-           LEFT JOIN bic ON p.w1 = bic.w1 AND p.w2 = bic.w2
-           LEFT JOIN uni u2 ON p.w2 = u2.w
-           CROSS JOIN tot)
-         SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_bigrams,
-           CAST(SUM(s) AS BIGINT) AS surprisal_sum,
-           CAST(SUM(s) * 1000 // COUNT(*) AS BIGINT) AS surprisal_milli
-         FROM scored GROUP BY 1 ORDER BY 1""",
-    // branch replay of Spark's lenient-cast rules (probed, not
-    // assumed): ' n ' trims, fraction strings → NULL as bigint
-    // (DuckDB's own TRY_CAST ROUNDS them — the divergence this row
-    // pins), out-of-range → NULL as bigint but 1e20 as double,
-    // garbage/empty → NULL, ISO dates parse.
-    "q_try_cast" ->
-      """SELECT o_orderkey,
-           CASE WHEN o_orderkey % 7 IN (0, 6) THEN o_orderkey
-                WHEN o_orderkey % 7 = 5 THEN -42 END AS as_long,
-           CASE WHEN o_orderkey % 7 IN (0, 6) THEN CAST(o_orderkey AS DOUBLE)
-                WHEN o_orderkey % 7 = 1 THEN CAST(o_orderkey AS DOUBLE) + 0.75
-                WHEN o_orderkey % 7 = 4 THEN 1e20
-                WHEN o_orderkey % 7 = 5 THEN CAST(-42 AS DOUBLE) END AS as_double,
-           CASE WHEN o_orderkey % 3 = 0 THEN '1995-07-16'
-                WHEN o_orderkey % 3 = 2 THEN '1999-02-28' END AS as_date
-         FROM orders ORDER BY o_orderkey""",
-    // same semantics in RE2's dialect: \1 backrefs and an explicit 'g'
-    // flag where Java regex writes $1 and replaces globally by default.
-    "q_regex_conformance" ->
-      """SELECT p_partkey,
-           regexp_extract(p_name, '([a-z]+)$', 1) AS last_word,
-           -- DuckDB's array_to_string of an EMPTY list is NULL where
-           -- Spark's array_join is '' — coalesce to Spark's semantics
-           COALESCE(array_to_string(regexp_extract_all(p_name, '[a-z]{5,}'), ','), '') AS long_words,
-           regexp_replace(p_name, '([aeiou])([a-z])', '\2\1', 'g') AS swapped,
-           regexp_matches(p_name, '^[a-z]+ (widget|bolt)$') AS is_two_word_part,
-           regexp_replace(p_type, '[AEIOU]', '_', 'g') AS devowel_type
-         FROM part ORDER BY p_partkey""",
-    // exact range-join count + the declared accuracy band asserted
-    // TRUE: a sketch drifting past ±10% flips the boolean and fails
-    // the value hash (deterministic sketches make this a hard gate).
-    "q_rolling_distinct_approx" ->
-      """WITH p AS (SELECT DISTINCT o_custkey AS c,
-             CAST(datediff('day', DATE '1970-01-01', CAST(o_orderdate AS DATE)) AS BIGINT) AS d
-           FROM orders),
-         lim AS (SELECT MIN(d) AS lo, MAX(d) AS hi FROM p),
-         days AS (SELECT UNNEST(generate_series(lo, hi)) AS day FROM lim)
-         SELECT day, CAST(COUNT(DISTINCT c) AS BIGINT) AS n_exact,
-           TRUE AS within_10pct
-         FROM days JOIN p ON p.d BETWEEN day - 6 AND day
-         GROUP BY 1 ORDER BY 1""",
-  )
+  private val specs: Seq[QuerySpec] =
+    ReferenceQueries.specs ++ AnalyticsQueries.specs ++ CorpusQueries.specs ++
+      StreamingQueries.specs
+  require(specs.map(_.name).distinct.size == specs.size,
+    "duplicate query names: " +
+      specs.groupBy(_.name).filter(_._2.size > 1).keys.toSeq.sorted.mkString(", "))
+
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    specs.map(q => q.name -> q.build).toMap
+
+  val oracleSql: Map[String, String] = specs.map(q => q.name -> q.oracleSql).toMap
 }

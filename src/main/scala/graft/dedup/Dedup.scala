@@ -29,21 +29,7 @@ object Dedup {
       .groupBy(md5(col(textCol).cast("binary")).as("text_md5"))
       .agg(min(col(idCol)).as("keep_id"), count(lit(1)).as("n_copies"))
 
-  /** Mark each doc with whether it survives exact dedup. */
-  def exactKeep(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(md5(col(textCol).cast("binary")))
-    docs.withColumn("keep", (col(idCol) === min(col(idCol)).over(w)).as("keep"))
-  }
-
   // --- MinHash + LSH ------------------------------------------------------
-
-  /** Per-doc MinHash signature column (array<long> of numPerm mins)
-   * over distinct word-shingle hashes. One codegen'd expression —
-   * higher-order-function formulations of this run interpreted and
-   * are ~100× slower per row. */
-  def minhashSignature(text: Column, shingleWords: Int = 3, numPerm: Int = 64): Column =
-    minhashSig(wordShingleHashes(text, shingleWords), numPerm)
 
   /** Spread rows across the cluster before a CPU-heavy per-row stage:
    * a few-file input must not serialize signature computation onto a
@@ -321,14 +307,6 @@ object Dedup {
     }
 
   // --- Containment (asymmetric near-dup: near-subset documents) -----------
-
-  /** Containment of textA's shingle set in textB's — |A∩B| / |A|.
-   * The asymmetric verify: a short doc quoted inside a long one scores
-   * ~1.0 here while its Jaccard is tiny (the union is dominated by the
-   * long side), so Jaccard-threshold dedup structurally misses it. */
-  def ngramContainment(textA: Column, textB: Column, n: Int = 3): Column =
-    graft.functions.expressions.hashContainment(
-      wordShingleHashes(textA, n), wordShingleHashes(textB, n))
 
   /**
    * Containment near-dup pairs: documents whose shingle set is

@@ -103,16 +103,4 @@ object TextFunctions {
    * crawled-data pipeline. */
   def extractDomain(text: Column): Column =
     regexp_extract(text, "https?://([^/ \\t\\n\\r]+)", 1)
-
-  /** Composite quality score in [0,1]: length, word-length sanity,
-   * punctuation/digit moderation, stopword presence. */
-  def qualityScore(text: Column): Column = {
-    val nWords = size(wsTokens(text))
-    val meanWordLen = when(nWords === 0, lit(0.0)).otherwise(length(text).cast("double") / nWords)
-    val lenOk   = when(length(text).between(200, 20000), 1.0).otherwise(0.5)
-    val wordOk  = when(meanWordLen.between(3.0, 12.0), 1.0).otherwise(0.5)
-    val punctOk = when(punctRatio(text) < 0.2, 1.0).otherwise(0.0)
-    val stopOk  = when(stopwordRatio(text) > 0.05, 1.0).otherwise(0.5)
-    round((lenOk + wordOk + punctOk + stopOk) / 4.0, 4)
-  }
 }

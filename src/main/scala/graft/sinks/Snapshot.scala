@@ -465,6 +465,7 @@ object Snapshot {
       root: String,
       refName: String,
       changed: Map[String, DataFrame]): (Long, Map[String, Long]) = {
+    recoveredTag(fs(spark, root), root, refName): Unit
     val base = tagVersion(spark, root, refName)
     val viol = schemaViolationsFrom(spark, root, base, changed)
     require(viol.isEmpty,
@@ -487,31 +488,20 @@ object Snapshot {
       from: String): Long = {
     require(!name.endsWith("-mergebase"),
       s"snapshot branch: '$name' collides with the merge-base tag namespace")
+    recoveredTag(fs(spark, root), root, from): Unit
     val base = tagVersion(spark, root, from)
     tag(spark, root, s"$name-mergebase", base)
     tag(spark, root, name, base)
     base
   }
 
-  /** Links-only publish (A36 primitive): a new version that serves
-   * EXACTLY the given table → physical-home-version map, writing no
-   * data at all — the version dir holds one `_LINKS` sidecar. This is
-   * what makes a branch MERGE a pure metadata operation: the merged
-   * version points each table at whichever side's physical home won.
-   * Every home must currently serve the table physically (homes come
-   * from link flattening, so callers composing from [[tables]] +
-   * link resolution always pass physical homes); a vanished home
-   * fails loudly BEFORE the manifest flips. */
-  def publishLinksOnly(spark: SparkSession, root: String,
-      links: Map[String, Long], op: String = "links",
-      ref: String = ""): Long =
-    publishMixed(spark, root, Map.empty, links, op, ref)
-
   /** Mixed publish (A38 primitive): a new version serving `written`
    * tables physically and `links` tables by reference — what a
    * row-level merge needs (the resolved table writes, everything else
-   * carries by its chosen home). The A36 links-only publish is the
-   * `written = ∅` special case. */
+   * carries by its chosen home). With `written = ∅` it is the A36
+   * links-only publish: the version dir holds one `_LINKS` sidecar
+   * and no data, and every home must still serve its table
+   * physically, checked before the manifest flips. */
   def publishMixed(spark: SparkSession, root: String,
       written: Map[String, DataFrame], links: Map[String, Long],
       op: String = "mixed", ref: String = ""): Long = {
@@ -609,6 +599,7 @@ object Snapshot {
       rowMerge: Map[String, Seq[String]]): (Long, Map[String, Long]) = {
     val baseTag = s"$fromRef-mergebase"
     val f = fs(spark, root)
+    Seq(baseTag, fromRef, intoRef).foreach(recoveredTag(f, root, _))
     require(f.exists(new org.apache.hadoop.fs.Path(s"$root/TAG.$baseTag")),
       s"snapshot mergeRef: '$fromRef' has no recorded merge base — create it with branch(), not tag()")
     val base = tagVersion(spark, root, baseTag)
@@ -1361,12 +1352,11 @@ object Snapshot {
    * falls — which is also what makes a tag [[publishToRef]] advances
    * a safe BRANCH head (A35). */
   def tag(spark: SparkSession, root: String, name: String, version: Long): Unit = {
-    require(name.matches("[A-Za-z0-9_-]+"), s"snapshot tag: unsafe name '$name'")
+    val p = tagPointer(root, name)
     val cur = headVersion(spark, root)
     require(version >= 1 && version <= cur,
       s"snapshot tag: v$version not published (head is v$cur)")
     val f = fs(spark, root)
-    val p = Pointer(root, s"TAG.$name")
     p.recover(f)
     p.flip(f, version)
   }
@@ -1416,16 +1406,18 @@ object Snapshot {
         "the next vacuum reclaim the chain it pins; pass force=true " +
         "(CLI --force=true) if that is really the intent")
     val f = fs(spark, root)
+    // every pointer looked at is recovered first: a ref caught
+    // mid-flip still deletes, and no residue survives to keep pinning
+    // its versions as a vacuum root
     if (name.endsWith("-mergebase"))
-      require(!f.exists(new org.apache.hadoop.fs.Path(
-          s"$root/TAG.${name.stripSuffix("-mergebase")}")),
+      require(!f.exists(recoveredTag(f, root, name.stripSuffix("-mergebase"))),
         s"snapshot deleteRef: '$name' is a live branch's merge-base tag — " +
           "delete the branch ref instead (the base is removed with it)")
-    val p = new org.apache.hadoop.fs.Path(s"$root/TAG.$name")
+    val p = recoveredTag(f, root, name)
     require(f.exists(p), s"snapshot deleteRef: no ref '$name' under $root")
     // companion first: a crash mid-verb must leave a state this verb
     // can still finish, never an unremovable orphan
-    val mb = new org.apache.hadoop.fs.Path(s"$root/TAG.$name-mergebase")
+    val mb = recoveredTag(f, root, s"$name-mergebase")
     if (f.exists(mb))
       require(f.delete(mb, false),
         s"snapshot deleteRef: failed to remove TAG.$name-mergebase")
@@ -1490,13 +1482,27 @@ object Snapshot {
     }
   }
 
-  /** The version a tag names; fails loudly on unknown tags. */
-  def tagVersion(spark: SparkSession, root: String, name: String): Long = {
+  private def tagPointer(root: String, name: String): Pointer = {
     require(name.matches("[A-Za-z0-9_-]+"), s"snapshot tag: unsafe name '$name'")
+    Pointer(root, s"TAG.$name")
+  }
+
+  /** The version a tag names; fails loudly on unknown tags. A reader:
+   * it never recovers a crashed flip. */
+  def tagVersion(spark: SparkSession, root: String, name: String): Long = {
+    val p = tagPointer(root, name).target
     val f = fs(spark, root)
-    val p = Pointer(root, s"TAG.$name").target
     require(f.exists(p), s"snapshot tag: no tag '$name' under $root")
     readPointer(f, p)
+  }
+
+  /** `TAG.<name>` with a crashed flip recovered, for a verb about to
+   * write: a tag left as only `TAG.<name>.bak` resolves again. */
+  private def recoveredTag(f: org.apache.hadoop.fs.FileSystem, root: String,
+      name: String): org.apache.hadoop.fs.Path = {
+    val p = tagPointer(root, name)
+    p.recover(f)
+    p.target
   }
 
   /** Read `table` at the version a tag names. */

@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.sinks.Commit
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /**
@@ -13,20 +14,25 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
  *
  *  - a file whose output directory EXISTS is already ingested —
  *    reruns skip it. Directory existence is the whole ledger: the
- *    published directory only ever appears via a rename performed
- *    AFTER the write completed, so it cannot be a partial output.
- *    (Deliberately NOT the committer's `_SUCCESS` marker, which only
- *    exists when `mapreduce.fileoutputcommitter.marksuccessfuljobs`
+ *    published directory only ever appears via a [[Commit]] swap
+ *    performed AFTER the write completed, so it cannot be a partial
+ *    output (deliberately NOT the committer's `_SUCCESS` marker, which
+ *    only exists when `mapreduce.fileoutputcommitter.marksuccessfuljobs`
  *    is on — keying on it would reprocess every arrival per run on
- *    clusters without it, r13 ADVICE);
- *  - a crashed attempt leaves either nothing or a staging directory
- *    (dot-prefixed — invisible to readers, see TableSink.compact's
- *    hidden-sibling rationale) — the rerun reprocesses the file and
- *    the atomic rename publishes it exactly once. The rename is
- *    atomic on HDFS and local filesystems; object stores emulate
+ *    clusters without it);
+ *  - each file's output is written to `.<out>_tmp`, moved whole to
+ *    `.<out>_ready`, and swapped in with [[Commit.replace]] through
+ *    `.<out>_bak` (all dot-prefixed — invisible to readers). A run
+ *    first recovers the residue one listing of the target shows: a
+ *    `_ready`/`_bak` pair goes through [[Commit.recover]], and a
+ *    `_tmp` write, possibly partial, is dropped and reprocessed, so
+ *    every arrival ends with exactly one output directory. Renames
+ *    are atomic on HDFS and local filesystems; object stores emulate
  *    directory rename as copy+delete, so deploy the target on a
  *    rename-atomic filesystem (the withBuiltIndex publication
- *    caveat) or front publication with a coordination service;
+ *    caveat) or front publication with a coordination service. One
+ *    run per target at a time: recovery takes any residue it finds
+ *    for dead;
  *  - reprocessing is IDEMPOTENT by construction: the same input file
  *    always maps to the same output name, so a double-run overwrites
  *    rather than duplicates.
@@ -59,6 +65,16 @@ object IngestLedger {
     val fs = inPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val target = new org.apache.hadoop.fs.Path(targetDir)
     fs.mkdirs(target)
+    def sibling(out: String, role: String) =
+      new org.apache.hadoop.fs.Path(target, s".${out}_$role")
+    val Residue = """\.(part_[0-9a-f]{16})_(?:tmp|ready|bak)""".r
+    fs.listStatus(target).map(_.getPath.getName)
+      .collect { case Residue(out) => out }.distinct
+      .foreach { out =>
+        Commit.recover(fs, new org.apache.hadoop.fs.Path(target, out),
+          sibling(out, "ready"), sibling(out, "bak")): Unit
+        fs.delete(sibling(out, "tmp"), true): Unit
+      }
     val arrivals = fs.listStatus(inPath).filter { e =>
       val n = e.getPath.getName
       e.isFile && !n.startsWith(".") && !n.startsWith("_") && n.endsWith(suffix)
@@ -84,16 +100,13 @@ object IngestLedger {
       val futures = pending.map { in =>
         pool.submit(new java.util.concurrent.Callable[Unit] {
           def call(): Unit = {
-            val done = new org.apache.hadoop.fs.Path(target, outName(in))
-            val staging = new org.apache.hadoop.fs.Path(target, "." + outName(in) + "_tmp")
+            val out = outName(in)
+            val (staging, ready) = (sibling(out, "tmp"), sibling(out, "ready"))
             transform(spark.read.format(format).load(in.toString))
               .write.mode("overwrite").parquet(staging.toString)
-            // normally absent (existence would have skipped this file);
-            // clears a concurrent run's publish so the rename below
-            // resolves the race by last-writer-wins on identical output
-            fs.delete(done, true)
-            if (!fs.rename(staging, done))
-              throw new java.io.IOException(s"ingest: rename $staging -> $done failed")
+            Commit.move(fs, staging, ready)
+            Commit.replace(fs, new org.apache.hadoop.fs.Path(target, out), ready,
+              sibling(out, "bak"))
           }
         })
       }

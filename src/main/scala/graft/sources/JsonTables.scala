@@ -51,15 +51,6 @@ object JsonTables {
     namespaced(spark.read.schema(widened(schema)).json(lines), name)
   }
 
-  /** Load a namespaced table and apply broadcast lookups in one call —
-   * the reference's `loadTable(p, name, keyName, mappers...)` shape
-   * (MusicBrainzTransforms.java:307-311). */
-  def loadTableWithLookups(
-      spark: SparkSession, path: String, name: String, schema: StructType,
-      lookups: graft.operators.Relational.Lookup*): DataFrame =
-    graft.operators.Relational.lookupReplace(
-      loadTable(spark, path, name, schema), lookups: _*)
-
   /** Load with schema inference (one extra pass), then the same
    * widening + namespacing — for ad-hoc tables without a declared
    * schema, matching the reference reader's dynamic typing. */

@@ -862,8 +862,7 @@ object EventStream {
             val tmp = s"$statePath/.ctmp_${id - 1}"
             s.read.parquet(statePaths: _*)
               .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(tmp)
-            require(f.rename(new org.apache.hadoop.fs.Path(tmp), target),
-              s"near-dup gate: state compaction rename failed for compact_${id - 1}")
+            graft.sinks.Commit.move(f, new org.apache.hadoop.fs.Path(tmp), target)
           }
           // idempotent cleanup of EVERYTHING the compact subsumes —
           // from a fresh listing, not just the dirs this batch's

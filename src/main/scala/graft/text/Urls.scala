@@ -27,20 +27,6 @@ import org.apache.spark.sql.functions._
  */
 object Urls {
 
-  /** Canonical form of `urlCol` appended as `canon_url`.
-   * `dropParams` is the tracking-param drop-list spec
-   * ([[graft.functions.UrlDropList]]) — parameterized because the
-   * default's `ref` entry over-merges on sites where `?ref=` is
-   * semantic. `foldHttp` (default ON) is the http→https scheme fold
-   * — parameterized for the same reason (r19): ports 80 and 443 CAN
-   * serve different content, and over-merge is the dangerous
-   * direction. */
-  def withCanonicalUrl(df: DataFrame, urlCol: String,
-      dropParams: String = graft.functions.UrlDropList.DefaultSpec,
-      foldHttp: Boolean = true): DataFrame =
-    df.withColumn("canon_url",
-      graft.functions.expressions.canonicalUrl(col(urlCol), dropParams, foldHttp))
-
   /** Canonical-URL dedup: (id, canon_url, rep_id, n_copies, keep) —
    * rep = lowest id per canonical form, every surface variant maps
    * onto it. NULL URLs carry no identity evidence: each null-URL row

@@ -76,6 +76,25 @@ class IngestSpec extends AnyFunSuite {
     assert(totals(out) == ((2L, 3L)))
   }
 
+  test("a publish crashed mid-swap recovers on rerun: one output per arrival, no residue") {
+    val base = java.nio.file.Files.createTempDirectory("ingest").toString
+    val (in, out) = (base + "/in", base + "/out")
+    writeArrival(in, "a.json", Seq((1L, "x"), (2L, "y")))
+    writeArrival(in, "b.json", Seq((3L, "z")))
+    assert(IngestLedger.ingestIncremental(spark, in, out, identity,
+      suffix = ".json") == 2)
+    val parts = new java.io.File(out).list().sorted
+    assert(parts.length == 2 && parts.forall(_.startsWith("part_")))
+    // the swap moved a's output aside and died before the new one
+    // landed: the output is absent, only its `.<out>_bak` remains
+    assert(new java.io.File(out, parts(0))
+      .renameTo(new java.io.File(out, s".${parts(0)}_bak")))
+    assert(IngestLedger.ingestIncremental(spark, in, out, identity,
+      suffix = ".json") == 0)
+    assert(new java.io.File(out).list().sorted.toSeq == parts.toSeq)
+    assert(totals(out) == ((3L, 6L)))
+  }
+
   test("transform runs per file and lands in the output schema") {
     val base = java.nio.file.Files.createTempDirectory("ingest").toString
     val (in, out) = (base + "/in", base + "/out")

@@ -367,7 +367,7 @@ class MaintenanceSpec extends AnyFunSuite {
     assert(full("id")._5 == "0" && full("id")._6 == "699")
   }
 
-  // --- Persisted-index publish protocol (SparkEntry.withBuiltIndex) ---------
+  // --- Persisted-index publish protocol (QuerySupport.withBuiltIndex) ---------
 
   /** Runs `body` with the durable scratch root pointed at a temp dir. */
   private def withScratchRoot[T](body: String => T): T = {
@@ -388,7 +388,7 @@ class MaintenanceSpec extends AnyFunSuite {
       writeMarker(target)
       new java.io.FileOutputStream(new java.io.File(target, "data.bin")).close()
       var built = 0
-      val idx = SparkEntry.withBuiltIndex(spark, "/x/corpus", "pub")(_ => built += 1)
+      val idx = QuerySupport.withBuiltIndex(spark, "/x/corpus", "pub")(_ => built += 1)
       assert(built == 0, "complete index must not be rebuilt")
       assert(new java.io.File(idx, "data.bin").exists(), "published payload must survive")
     }
@@ -399,7 +399,7 @@ class MaintenanceSpec extends AnyFunSuite {
       val target = new java.io.File(s"$root/pub_corpus")
       target.mkdirs() // remnant: no _GRAFT_COMPLETE
       new java.io.FileOutputStream(new java.io.File(target, "half.bin")).close()
-      val idx = SparkEntry.withBuiltIndex(spark, "/x/corpus", "pub") { staging =>
+      val idx = QuerySupport.withBuiltIndex(spark, "/x/corpus", "pub") { staging =>
         val d = new java.io.File(staging); d.mkdirs()
         new java.io.FileOutputStream(new java.io.File(d, "full.bin")).close()
       }
@@ -415,7 +415,7 @@ class MaintenanceSpec extends AnyFunSuite {
       // interleaved publish: while OUR build is running, a concurrent
       // application publishes a complete index at the shared target.
       // Our rename must lose gracefully and the rival's index survive.
-      val idx = SparkEntry.withBuiltIndex(spark, "/x/corpus", "pub") { staging =>
+      val idx = QuerySupport.withBuiltIndex(spark, "/x/corpus", "pub") { staging =>
         writeMarker(target)
         new java.io.FileOutputStream(new java.io.File(target, "rival.bin")).close()
         val d = new java.io.File(staging); d.mkdirs()

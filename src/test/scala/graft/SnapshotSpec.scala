@@ -971,4 +971,65 @@ class SnapshotSpec extends AnyFunSuite {
     assert(Snapshot.publish(spark, root, Map("t" -> Seq(3L).toDF("x"))) == 3L)
     assert(!hfs.exists(new org.apache.hadoop.fs.Path(s"$root/_CLAIM.v1")))
   }
+
+  /** Leave `TAG.<name>` as a flip that crashed between its renames:
+   * the old pointer moved to `.bak`; with `next`, the new pointer
+   * fully written to `.tmp` too. */
+  private def crashTagFlip(root: String, name: String, next: Option[Long] = None): Unit = {
+    val hfs = new org.apache.hadoop.fs.Path(root)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def p(rel: String) = new org.apache.hadoop.fs.Path(s"$root/$rel")
+    assert(hfs.rename(p(s"TAG.$name"), p(s"TAG.$name.bak")))
+    next.foreach { v =>
+      val out = hfs.create(p(s"TAG.$name.tmp"), true)
+      try out.write(v.toString.getBytes("UTF-8")) finally out.close()
+    }
+  }
+
+  private def tagFiles(root: String): Set[String] =
+    new java.io.File(root).listFiles().map(_.getName).filter(_.startsWith("TAG.")).toSet
+
+  test("writer verbs recover a tag caught mid-flip; readers do not") {
+    val root = freshRoot()
+    val t0 = Seq((1L, "a"), (2L, "b")).toDF("k", "s")
+    Snapshot.publish(spark, root, Map("t" -> t0))
+    Snapshot.tag(spark, root, "prod", 1L)
+    Snapshot.branch(spark, root, "dev", "prod")
+    // readers see a mid-flip tag as absent and leave its residue alone
+    crashTagFlip(root, "dev")
+    intercept[IllegalArgumentException](Snapshot.tagVersion(spark, root, "dev"))
+    intercept[IllegalArgumentException](Snapshot.readTag(spark, root, "t", "dev"))
+    assert(tagFiles(root).contains("TAG.dev.bak"))
+    // publishToRef rolls dev back to v1 and publishes from there
+    val (v2, _) = Snapshot.publishToRef(spark, root, "dev", Map("t" -> t0.filter($"k" === 1L)))
+    assert(v2 == 2L && Snapshot.tagVersion(spark, root, "dev") == 2L)
+    // branch rolls prod's flip to v2 forward before reading it
+    crashTagFlip(root, "prod", next = Some(2L))
+    assert(Snapshot.branch(spark, root, "exp", "prod") == 2L)
+    assert(Snapshot.tagVersion(spark, root, "prod") == 2L)
+    // mergeRef recovers the merge base and both heads
+    val (v3, _) = Snapshot.publishToRef(spark, root, "dev", Map("u" -> Seq(7L).toDF("x")))
+    Seq("dev-mergebase", "dev", "prod").foreach(crashTagFlip(root, _))
+    val (merged, homes) = Snapshot.mergeRef(spark, root, "dev", "prod")
+    assert(homes("u") == v3 && Snapshot.tagVersion(spark, root, "prod") == merged)
+    assert(tagFiles(root) == Set("prod", "dev", "dev-mergebase", "exp", "exp-mergebase")
+      .map("TAG." + _))
+  }
+
+  test("deleteRef removes a ref caught mid-flip and leaves no residue to pin its chain") {
+    val root = freshRoot()
+    val t0 = Seq((1L, "a"), (2L, "b")).toDF("k", "s")
+    Snapshot.publish(spark, root, Map("t" -> t0))
+    Snapshot.tag(spark, root, "prod", 1L)
+    Snapshot.branch(spark, root, "dev", "prod")
+    Snapshot.publishToRef(spark, root, "dev", Map("t" -> t0.filter($"k" === 1L)))
+    Snapshot.publishToRef(spark, root, "prod", Map("t" -> t0.filter($"k" === 2L)))
+    crashTagFlip(root, "dev")
+    crashTagFlip(root, "dev-mergebase", next = Some(2L))
+    Snapshot.deleteRef(spark, root, "dev")
+    assert(tagFiles(root) == Set("TAG.prod"))
+    assert(Snapshot.vacuum(spark, root, keepLast = 1).sorted == Seq(1L, 2L))
+    assert(Snapshot.readTag(spark, root, "t", "prod")
+      .as[(Long, String)].collect().toList == List((2L, "b")))
+  }
 }
