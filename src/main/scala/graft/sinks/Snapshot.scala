@@ -1,6 +1,9 @@
 package graft.sinks
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+
+import java.nio.charset.StandardCharsets.UTF_8
 
 /**
  * Atomic multi-table snapshot publish with version-pinned reads
@@ -14,10 +17,14 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
  * versions stay readable (time travel) until explicitly vacuumed.
  *
  * Protocol (the IngestLedger publication discipline):
- *  - tables write under `root/v<N>/<table>` where N = current manifest
- *    version + 1. The version dir is invisible to readers until the
- *    manifest names it, so a crashed publish leaves dead files, never
- *    a torn read;
+ *  - every version-creating verb commits through ONE private path:
+ *    `stageVersion` claims N = current manifest version + 1, clears
+ *    the dead orphan `v<N>`, and writes the tables under
+ *    `root/v<N>/<table>` plus the `_LINKS` sidecar; `sealVersion`
+ *    writes `_COMMIT`, flips the manifest (unless a gate refused) and
+ *    releases the claim. The version dir is invisible to readers until
+ *    the manifest names it, so a crashed publish leaves dead files,
+ *    never a torn read;
  *  - the manifest flip writes a fresh pointer file and swaps it in
  *    through [[Commit]]; a reader caught between its two renames sees
  *    no manifest (version 0), never a torn version, and every writer
@@ -40,61 +47,97 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 object Snapshot {
 
   private def fs(spark: SparkSession, root: String) =
-    new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  // --- namespace layout: the small-file, version-dir, table-name and
+  // residue-name rules the verbs share, each stated once --------------
+
+  /** A whole small text file: a pointer, `_COMMIT` or `_LINKS`. */
+  private def readText(f: FileSystem, p: Path): String = {
+    val in = f.open(p)
+    try new String(org.apache.commons.io.IOUtils.toByteArray(in), UTF_8)
+    finally in.close()
+  }
+
+  private def writeText(f: FileSystem, p: Path, text: String): Unit = {
+    val out = f.create(p, true)
+    try out.write(text.getBytes(UTF_8)) finally out.close()
+  }
+
+  private def subdirs(f: FileSystem, dir: String): Seq[String] =
+    f.listStatus(new Path(dir)).filter(_.isDirectory).map(_.getPath.getName).toSeq
+
+  private val VersionDir = """v(\d+)""".r
+
+  /** Every version dir on disk under `root`, ascending: orphans above
+   * the manifest included. */
+  private def versionDirs(f: FileSystem, root: String): Seq[Long] =
+    subdirs(f, root).collect { case VersionDir(v) => v.toLong }.sorted
+
+  private def isTableName(n: String): Boolean = n.matches("[A-Za-z0-9_]+")
+
+  private def requireTableNames(names: Iterable[String]): Unit =
+    names.foreach(n => require(isTableName(n), s"snapshot publish: unsafe table name '$n'"))
+
+  /** The tables version `v` physically writes, sorted. */
+  private def ownTables(f: FileSystem, root: String, v: Long): Seq[String] =
+    subdirs(f, s"$root/v$v").filter(isTableName).sorted
+
+  /** The hidden dirs beside a version's table `t` that a crashed
+   * [[eraseKeys]] swap (its [[Commit]] pair) or [[fsckRepair]] replica
+   * restore leaves behind. */
+  private def eraseTmp(t: String) = s".erase_tmp_$t"
+  private def eraseBak(t: String) = s".erase_bak_$t"
+  private def restoreTmp(t: String) = s".restore_tmp_$t"
+  private val TableResidue = """\.(erase_tmp|erase_bak|restore_tmp)_(.+)""".r
+
+  /** The tables with residue among a version's subdirs: (erase,
+   * restore), each distinct and sorted. */
+  private def residueTables(dirs: Seq[String]): (Seq[String], Seq[String]) = {
+    val (erase, restore) = dirs.collect { case TableResidue(kind, t) => (kind, t) }
+      .partition(_._1.startsWith("erase"))
+    (erase.map(_._2).distinct.sorted, restore.map(_._2).distinct.sorted)
+  }
 
   /** A pointer file holding one version number (`MANIFEST`,
    * `TAG.<name>`) and its fixed [[Commit]] residue pair. */
   private final case class Pointer(root: String, file: String) {
-    private def p(n: String) = new org.apache.hadoop.fs.Path(s"$root/$n")
+    private def p(n: String) = new Path(s"$root/$n")
     val (target, tmp, bak) = (p(file), p(s"$file.tmp"), p(s"$file.bak"))
-    def recover(f: org.apache.hadoop.fs.FileSystem): Unit =
+    def recover(f: FileSystem): Unit =
       Commit.recover(f, target, tmp, bak): Unit
     /** Write-then-replace: a reader never sees a half-written pointer. */
-    def flip(f: org.apache.hadoop.fs.FileSystem, version: Long): Unit = {
-      val out = f.create(tmp, true)
-      try out.write(version.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
+    def flip(f: FileSystem, version: Long): Unit = {
+      writeText(f, tmp, version.toString)
       Commit.replace(f, target, tmp, bak)
     }
   }
 
   private def manifest(root: String) = Pointer(root, "MANIFEST")
 
-  private def readPointer(f: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path): Long = {
-    val in = f.open(p)
-    try new String(org.apache.commons.io.IOUtils.toByteArray(in),
-      java.nio.charset.StandardCharsets.UTF_8).trim.toLong
-    finally in.close()
-  }
+  private def readPointer(f: FileSystem, p: Path): Long = readText(f, p).trim.toLong
+
+  private val TagName = "[A-Za-z0-9_-]+"
+  private val TagResidue = s"""TAG\\.($TagName)\\.(?:tmp|bak)""".r
 
   /** Tag names under `root`; a tag name has no dot, its residue does. */
-  private def refNames(f: org.apache.hadoop.fs.FileSystem, root: String): Seq[String] =
-    f.listStatus(new org.apache.hadoop.fs.Path(root)).map(_.getPath.getName)
+  private def refNames(f: FileSystem, root: String): Seq[String] =
+    f.listStatus(new Path(root)).map(_.getPath.getName)
       .collect { case n if n.startsWith("TAG.") && !n.drop(4).contains(".") => n.drop(4) }
       .toSeq
+
+  /** Recover every tag flip a crash left half done under `root`, for
+   * a writer verb about to list the refs. */
+  private def recoverRefs(f: FileSystem, root: String): Unit =
+    f.listStatus(new Path(root)).map(_.getPath.getName)
+      .collect { case TagResidue(n) => n }.distinct
+      .foreach(tagPointer(root, _).recover(f))
 
   /** The head for a verb about to write: a crashed flip recovered
    * first, so the next publish never reclaims (and clears) v1. */
   private def headVersion(spark: SparkSession, root: String): Long = {
     manifest(root).recover(fs(spark, root))
     currentVersion(spark, root)
-  }
-
-  /** Remove the ENTIRE dead orphan dir this publish is about to
-   * reuse. A crashed or gate-aborted predecessor (A24's abort path
-   * writes the candidate before refusing the flip) leaves tables —
-   * and, for a crashed LINKED publish, a `_LINKS` sidecar — under the
-   * same version number. Overwriting only the same-named tables would
-   * make the new version silently serve the dead candidate's OTHER
-   * tables and phantom links; a version must be exactly what its
-   * publish declared. The dir is dead by definition: the manifest
-   * never named it, and publishes are externally serialized (the A19
-   * single-publisher contract). */
-  private def clearDeadOrphan(f: org.apache.hadoop.fs.FileSystem,
-      root: String, v: Long): Unit = {
-    f.delete(new org.apache.hadoop.fs.Path(s"$root/v$v"), true): Unit
   }
 
   /** Version the manifest currently names, or 0 if never published. */
@@ -104,23 +147,119 @@ object Snapshot {
     if (!f.exists(mp)) 0L else readPointer(f, mp)
   }
 
-  /** Per-version commit metadata (`v<N>/_COMMIT`, A37): one
-   * tab-separated line `op  parent  written-csv  ref  epoch-ms`
-   * written BEFORE the manifest flip, so even a crashed publish's
-   * orphan dir records what was being attempted. Underscore-prefixed:
-   * invisible to Spark scans and the directory-listing surfaces. The
-   * wall-clock stamp is for operators; [[history]] callers composing
-   * cross-engine oracles project it away (the storageReport bytes
-   * precedent). */
-  private def writeCommitMeta(f: org.apache.hadoop.fs.FileSystem,
-      root: String, v: Long, op: String, written: Seq[String],
-      ref: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(s"$root/v$v/_COMMIT")
-    val out = f.create(p, true)
-    try out.write(Seq(op, (v - 1).toString, written.sorted.mkString(","),
-        ref, System.currentTimeMillis().toString)
-      .mkString("\t").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
+  private def claimPath(root: String, v: Long) = new Path(s"$root/_CLAIM.v$v")
+
+  /** Atomically CLAIM version `next` before any data write (r19,
+   * VERDICT r18 #2 — multi-writer fencing): an exclusive create of
+   * `_CLAIM.v<next>` (atomic on every Hadoop FS). Publishes are
+   * SERIALIZED per namespace — two publishers racing to the same
+   * `v<next>` would interleave Overwrite writes into one dir and flip
+   * a torn version with no error anywhere; the claim makes the loser fail HERE, loudly,
+   * before it has written a byte. Claims for versions the manifest
+   * already names are stale by construction (that publish completed;
+   * only its claim cleanup crashed) and are swept on entry. A claim
+   * for the version being attempted means either a LIVE concurrent
+   * publisher (the caller must back off) or a crashed one — only an
+   * operator can tell which, so recovery is the explicit
+   * [[releaseClaim]] ack, after which the normal dead-orphan clearing
+   * makes the rerun clean. */
+  private def claimVersion(f: FileSystem,
+      root: String, next: Long): Unit = {
+    val cur = next - 1
+    val rootP = new Path(root)
+    if (f.exists(rootP)) // first-ever publish: nothing to sweep
+      f.listStatus(rootP)
+        .map(_.getPath.getName)
+        .collect { case n if n.startsWith("_CLAIM.v") =>
+          n.stripPrefix("_CLAIM.v").toLong }
+        .filter(_ <= cur)
+        .foreach(v => f.delete(claimPath(root, v), false): Unit)
+    val p = claimPath(root, next)
+    // create-exclusive; a genuine transient IO error (claim file still
+    // absent) rethrows as itself rather than masquerading as a race
+    val out = try f.create(p, false)
+    catch {
+      case e: java.io.IOException =>
+        if (f.exists(p)) throw new IllegalStateException(
+          s"snapshot publish: v$next is already claimed under $root — " +
+            "another publisher is racing (back off and retry), or a " +
+            "previous one crashed mid-publish (verify it is dead, then " +
+            "Snapshot.releaseClaim to recover)")
+        else throw e
+    }
+    out.close()
+  }
+
+  /** Operator ack that a claim's publisher is DEAD: drop the pending
+   * claim so the next publish can fence, clear the orphan, and
+   * proceed. Only call after verifying no publisher is live — the
+   * claim cannot distinguish crashed from slow. Returns true when a
+   * claim was released. */
+  def releaseClaim(spark: SparkSession, root: String): Boolean = {
+    val f = fs(spark, root)
+    f.delete(claimPath(root, headVersion(spark, root) + 1), false)
+  }
+
+  /** The first half of the ONE version-commit path that every
+   * version-creating verb ([[publish]], [[publishLinkedFrom]],
+   * [[publishMixed]], [[publishChecked]]) takes: check the table
+   * names, recover the head, [[claimVersion]] N = head + 1, clear the
+   * dead orphan `v<N>`, write `written` into `v<N>/<table>` and the
+   * `links` sidecar. Returns N; nothing is visible to readers until
+   * [[sealVersion]] flips. A write that throws leaves the claim held:
+   * only the operator can tell a crashed publisher from a slow one
+   * ([[releaseClaim]]).
+   *
+   *  - The WHOLE orphan dir goes, not just the same-named tables: a
+   *    crashed or gate-aborted predecessor ([[publishChecked]]'s abort
+   *    writes the candidate before refusing the flip) leaves tables,
+   *    and for a linked attempt a `_LINKS` sidecar, that the new
+   *    version would otherwise silently serve as its own. The dir is
+   *    dead by definition: the manifest never named it, and publishes
+   *    are serialized by the claim.
+   *  - Tables write CONCURRENTLY from a small driver pool (r19, guide
+   *    §2.6 — overlap independent jobs), one independent job per
+   *    `v<N>/<table>` dir, so one table's commit/straggler tail
+   *    back-fills with the next table's tasks; every write is awaited
+   *    before this returns (see runUnitsCancelOnFailure for the
+   *    failure discipline), so the flip still comes after all of them. */
+  private def stageVersion(spark: SparkSession, root: String,
+      written: Map[String, DataFrame], links: Map[String, Long]): Long = {
+    requireTableNames(written.keys ++ links.keys)
+    val f = fs(spark, root)
+    val next = headVersion(spark, root) + 1
+    val dir = s"$root/v$next"
+    claimVersion(f, root, next)
+    f.delete(new Path(dir), true): Unit
+    runUnitsCancelOnFailure(spark, "publish", written.toSeq.map { case (name, df) =>
+      name -> (() => df.write.mode(SaveMode.Overwrite).parquet(s"$dir/$name"))
+    }): Unit
+    f.mkdirs(new Path(dir)): Unit
+    writeLinks(f, root, next, links)
+    next
+  }
+
+  private def commitPath(root: String, v: Long) = new Path(s"$root/v$v/_COMMIT")
+
+  /** The second half of the commit path: record the attempt in
+   * `v<N>/_COMMIT`, flip the manifest to N when `flip`, and release
+   * the claim — on both outcomes, since the attempt is finished (a
+   * refused flip leaves the orphan visible, the A31 rule, not
+   * claimed). The record (A37) is one tab-separated line
+   * `op  parent  written-csv  ref  epoch-ms`, written BEFORE the flip,
+   * so even a crashed or refused attempt's orphan dir says what was
+   * being attempted. Underscore-prefixed: invisible to Spark scans and
+   * the directory-listing surfaces. The wall-clock stamp is for
+   * operators; [[history]] callers composing cross-engine oracles
+   * project it away (the storageReport bytes precedent). */
+  private def sealVersion(spark: SparkSession, root: String, next: Long,
+      op: String, written: Iterable[String], ref: String, flip: Boolean): Unit = {
+    val f = fs(spark, root)
+    writeText(f, commitPath(root, next), Seq(op, (next - 1).toString,
+      written.toSeq.sorted.mkString(","), ref, System.currentTimeMillis().toString)
+      .mkString("\t"))
+    if (flip) manifest(root).flip(f, next)
+    f.delete(claimPath(root, next), false): Unit
   }
 
   /** Publish history (A37) — the `git log` of the namespace: one row
@@ -139,86 +278,17 @@ object Snapshot {
     import spark.implicits._
     val f = fs(spark, root)
     val cur = currentVersion(spark, root)
-    val versions = f.listStatus(new org.apache.hadoop.fs.Path(root))
-      .filter(_.isDirectory).map(_.getPath.getName)
-      .collect { case n if n.matches("v\\d+") => n.drop(1).toLong }
-      .sorted.toSeq
-    val rows = versions.map { v =>
-      val p = new org.apache.hadoop.fs.Path(s"$root/v$v/_COMMIT")
+    val rows = versionDirs(f, root).map { v =>
+      val p = commitPath(root, v)
       val (op, parent, written, ref, ts) =
         if (!f.exists(p)) ("unknown", v - 1, "", "", 0L)
-        else {
-          val in = f.open(p)
-          val line = try new String(
-            org.apache.commons.io.IOUtils.toByteArray(in),
-            java.nio.charset.StandardCharsets.UTF_8)
-          finally in.close()
-          line.split("\t", -1) match {
-            case Array(o, pa, w, r, t) => (o, pa.toLong, w, r, t.toLong)
-            case _ => ("corrupt", v - 1, "", "", 0L)
-          }
+        else readText(f, p).split("\t", -1) match {
+          case Array(o, pa, w, r, t) => (o, pa.toLong, w, r, t.toLong)
+          case _ => ("corrupt", v - 1, "", "", 0L)
         }
       (v, op, parent, written, ref, v <= cur, ts)
     }
     rows.toDF("version", "op", "parent", "written", "ref", "reachable", "ts_ms")
-  }
-
-  /** Atomically CLAIM version `next` before any data write (r19,
-   * VERDICT r18 #2 — multi-writer fencing): an exclusive create of
-   * `_CLAIM.v<next>` (atomic on every Hadoop FS). Publishes are
-   * SERIALIZED per namespace — two publishers racing to the same
-   * `v<next>` would interleave Overwrite writes into one dir and flip
-   * a torn version with no error anywhere; the claim makes the loser fail HERE, loudly,
-   * before it has written a byte. Claims for versions the manifest
-   * already names are stale by construction (that publish completed;
-   * only its claim cleanup crashed) and are swept on entry. A claim
-   * for the version being attempted means either a LIVE concurrent
-   * publisher (the caller must back off) or a crashed one — only an
-   * operator can tell which, so recovery is the explicit
-   * [[releaseClaim]] ack, after which the normal dead-orphan clearing
-   * makes the rerun clean. */
-  private def claimVersion(f: org.apache.hadoop.fs.FileSystem,
-      root: String, next: Long): Unit = {
-    val cur = next - 1
-    val rootP = new org.apache.hadoop.fs.Path(root)
-    if (f.exists(rootP)) // first-ever publish: nothing to sweep
-      f.listStatus(rootP)
-        .map(_.getPath.getName)
-        .collect { case n if n.startsWith("_CLAIM.v") =>
-          n.stripPrefix("_CLAIM.v").toLong }
-        .filter(_ <= cur)
-        .foreach(v => f.delete(
-          new org.apache.hadoop.fs.Path(s"$root/_CLAIM.v$v"), false): Unit)
-    val p = new org.apache.hadoop.fs.Path(s"$root/_CLAIM.v$next")
-    // create-exclusive; a genuine transient IO error (claim file still
-    // absent) rethrows as itself rather than masquerading as a race
-    val out = try f.create(p, false)
-    catch {
-      case e: java.io.IOException =>
-        if (f.exists(p)) throw new IllegalStateException(
-          s"snapshot publish: v$next is already claimed under $root — " +
-            "another publisher is racing (back off and retry), or a " +
-            "previous one crashed mid-publish (verify it is dead, then " +
-            "Snapshot.releaseClaim to recover)")
-        else throw e
-    }
-    out.close()
-  }
-
-  private def releaseVersionClaim(f: org.apache.hadoop.fs.FileSystem,
-      root: String, next: Long): Unit =
-    f.delete(new org.apache.hadoop.fs.Path(s"$root/_CLAIM.v$next"), false): Unit
-
-  /** Operator ack that a claim's publisher is DEAD: drop the pending
-   * claim so the next publish can fence, clear the orphan, and
-   * proceed. Only call after verifying no publisher is live — the
-   * claim cannot distinguish crashed from slow. Returns true when a
-   * claim was released. */
-  def releaseClaim(spark: SparkSession, root: String): Boolean = {
-    val f = fs(spark, root)
-    val next = headVersion(spark, root) + 1
-    val p = new org.apache.hadoop.fs.Path(s"$root/_CLAIM.v$next")
-    f.delete(p, false)
   }
 
   /** Publish all `tables` as one atomic version; returns the new
@@ -238,16 +308,8 @@ object Snapshot {
       root: String,
       tables: Map[String, DataFrame]): Long = {
     require(tables.nonEmpty, "snapshot publish: no tables")
-    tables.keys.foreach(n => require(n.matches("[A-Za-z0-9_]+"),
-      s"snapshot publish: unsafe table name '$n'"))
-    val f = fs(spark, root)
-    val next = headVersion(spark, root) + 1
-    claimVersion(f, root, next)
-    clearDeadOrphan(f, root, next)
-    writeTablesConcurrently(s"$root/v$next", tables)
-    writeCommitMeta(f, root, next, "publish", tables.keys.toSeq, "")
-    manifest(root).flip(f, next)
-    releaseVersionClaim(f, root, next)
+    val next = stageVersion(spark, root, tables, Map.empty)
+    sealVersion(spark, root, next, "publish", tables.keys, "", flip = true)
     next
   }
 
@@ -259,8 +321,8 @@ object Snapshot {
    * in-flight jobs are cancelled (best-effort fast-stop) and every
    * future — including the cancelled ones — is awaited before the
    * original failure rethrows, so NO unit's write can still be
-   * running when the caller's recovery (releaseClaim / retry /
-   * clearDeadOrphan) starts deleting and rewriting the version dir.
+   * running when the caller's recovery (releaseClaim / retry / the
+   * orphan clearing) starts deleting and rewriting the version dir.
    * Units that have not started when a sibling fails skip their work
    * entirely. On success, returns every unit's result in order. */
   private def runUnitsCancelOnFailure[T](spark: SparkSession, desc: String,
@@ -300,43 +362,33 @@ object Snapshot {
     } finally pool.shutdown()
   }
 
-  /** Write a version's tables CONCURRENTLY from a small driver thread
-   * pool (r19, guide §2.6 — overlap independent jobs): each table's
-   * write is an independent job into its own `v<N>/<table>` dir, so
-   * one table's commit/straggler tail back-fills with the next
-   * table's tasks. Bytes written, per-table layout, and the
-   * manifest-flip-last atomicity are unchanged — the flip still
-   * happens only after EVERY write completed (every future awaited —
-   * see runUnitsCancelOnFailure for the failure discipline). */
-  private def writeTablesConcurrently(dir: String,
-      tables: Iterable[(String, DataFrame)]): Unit = {
-    val seq = tables.toSeq
-    if (seq.nonEmpty)
-      runUnitsCancelOnFailure(seq.head._2.sparkSession, "publish",
-        seq.map { case (name, df) =>
-          name -> (() => df.write.mode(SaveMode.Overwrite).parquet(s"$dir/$name"))
-        }): Unit
-  }
-
   /** Per-version link sidecar (`v<N>/_LINKS`): `table<TAB>version`
    * lines naming the PHYSICAL home version of tables this version
    * carries by reference. Underscore-prefixed, so Spark and the
    * catalog's directory listing both ignore it as data. */
+  private def linksPath(root: String, v: Long) = new Path(s"$root/v$v/_LINKS")
+
   private def linksOf(spark: SparkSession, root: String, v: Long): Map[String, Long] = {
     val f = fs(spark, root)
-    val p = new org.apache.hadoop.fs.Path(s"$root/v$v/_LINKS")
+    val p = linksPath(root, v)
     if (!f.exists(p)) Map.empty
-    else {
-      val in = f.open(p)
-      try new String(org.apache.commons.io.IOUtils.toByteArray(in),
-          java.nio.charset.StandardCharsets.UTF_8)
-        .split("\n").iterator.map(_.trim).filter(_.nonEmpty)
-        .map { line =>
-          val Array(t, sv) = line.split("\t")
-          t -> sv.toLong
-        }.toMap
-      finally in.close()
-    }
+    else readText(f, p).split("\n").iterator.map(_.trim).filter(_.nonEmpty)
+      .map { line =>
+        val Array(t, sv) = line.split("\t")
+        t -> sv.toLong
+      }.toMap
+  }
+
+  private def writeLinks(f: FileSystem, root: String, v: Long,
+      links: Map[String, Long]): Unit =
+    if (links.nonEmpty) writeText(f, linksPath(root, v),
+      links.toSeq.sorted.map { case (t, sv) => s"$t\t$sv" }.mkString("\n"))
+
+  /** Every table version `v` serves mapped to its PHYSICAL home: the
+   * version itself, or the link target. */
+  private def homes(spark: SparkSession, root: String, v: Long): Map[String, Long] = {
+    val links = linksOf(spark, root, v)
+    tables(spark, root, v).map(t => t -> links.getOrElse(t, v)).toMap
   }
 
   /** The physical directory serving `table` at version `v`: the
@@ -346,7 +398,7 @@ object Snapshot {
   private def resolveTableDir(spark: SparkSession, root: String,
       v: Long, table: String): String = {
     val f = fs(spark, root)
-    val own = new org.apache.hadoop.fs.Path(s"$root/v$v/$table")
+    val own = new Path(s"$root/v$v/$table")
     if (f.exists(own)) own.toString
     else linksOf(spark, root, v).get(table) match {
       case Some(sv) => s"$root/v$sv/$table"
@@ -355,21 +407,12 @@ object Snapshot {
     }
   }
 
-  /** Tables a version serves: physically written dirs plus links. */
   /** Every table version `v` serves — physically written or
    * link-carried (A32). The existence probe a writer runs before
    * deciding merge-vs-bootstrap (D28: a table absent at the current
    * version is brand-new, not an error). */
   def tables(spark: SparkSession, root: String, v: Long): Seq[String] =
-    tablesOf(spark, root, v)
-
-  private def tablesOf(spark: SparkSession, root: String, v: Long): Seq[String] = {
-    val f = fs(spark, root)
-    val own = f.listStatus(new org.apache.hadoop.fs.Path(s"$root/v$v"))
-      .filter(_.isDirectory).map(_.getPath.getName)
-      .filter(_.matches("[A-Za-z0-9_]+")).toSeq
-    (own ++ linksOf(spark, root, v).keys).distinct.sorted
-  }
+    (ownTables(fs(spark, root), root, v) ++ linksOf(spark, root, v).keys).distinct.sorted
 
   /** Zero-copy incremental publish (A32) — write ONLY the changed
    * tables; every other table of the current version is carried
@@ -417,36 +460,15 @@ object Snapshot {
       changed: Map[String, DataFrame],
       ref: String = ""): (Long, Map[String, Long]) = {
     require(changed.nonEmpty, "snapshot publishLinked: no tables")
-    changed.keys.foreach(n => require(n.matches("[A-Za-z0-9_]+"),
-      s"snapshot publish: unsafe table name '$n'"))
-    val f = fs(spark, root)
     val cur = headVersion(spark, root)
     require(base >= 0L && base <= cur,
       s"snapshot publishLinkedFrom: base v$base not published (head is v$cur)")
-    val next = cur + 1
-    claimVersion(f, root, next)
-    clearDeadOrphan(f, root, next)
-    writeTablesConcurrently(s"$root/v$next", changed)
-    val carried: Map[String, Long] =
-      if (base == 0L) Map.empty
-      else {
-        val baseLinks = linksOf(spark, root, base)
-        tablesOf(spark, root, base)
-          .filterNot(changed.contains)
-          .map(t => t -> baseLinks.getOrElse(t, base)) // flatten to the home
-          .toMap
-      }
-    if (carried.nonEmpty) {
-      val p = new org.apache.hadoop.fs.Path(s"$root/v$next/_LINKS")
-      val out = f.create(p, true)
-      try out.write(carried.toSeq.sorted
-        .map { case (t, sv) => s"$t\t$sv" }.mkString("\n")
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-    }
-    writeCommitMeta(f, root, next, "linked", changed.keys.toSeq, ref)
-    manifest(root).flip(f, next)
-    releaseVersionClaim(f, root, next)
+    // read before the claim: a published version never changes, and the
+    // orphan the claim clears is above the head
+    val carried =
+      if (base == 0L) Map.empty[String, Long] else homes(spark, root, base) -- changed.keys
+    val next = stageVersion(spark, root, changed, carried)
+    sealVersion(spark, root, next, "linked", changed.keys, ref, flip = true)
     (next, carried)
   }
 
@@ -509,32 +531,16 @@ object Snapshot {
     require(written.keySet.intersect(links.keySet).isEmpty,
       s"snapshot publishMixed: tables both written and linked: " +
         written.keySet.intersect(links.keySet).mkString(", "))
-    (written.keys ++ links.keys).foreach(n => require(n.matches("[A-Za-z0-9_]+"),
-      s"snapshot publish: unsafe table name '$n'"))
     val f = fs(spark, root)
     val cur = headVersion(spark, root)
     links.foreach { case (t, h) =>
       require(h >= 1 && h <= cur,
         s"snapshot publishMixed: home v$h for '$t' not published (head is v$cur)")
-      require(f.exists(new org.apache.hadoop.fs.Path(s"$root/v$h/$t")),
+      require(f.exists(new Path(s"$root/v$h/$t")),
         s"snapshot publishMixed: v$h does not physically home '$t'")
     }
-    val next = cur + 1
-    claimVersion(f, root, next)
-    clearDeadOrphan(f, root, next)
-    writeTablesConcurrently(s"$root/v$next", written)
-    f.mkdirs(new org.apache.hadoop.fs.Path(s"$root/v$next")): Unit
-    if (links.nonEmpty) {
-      val p = new org.apache.hadoop.fs.Path(s"$root/v$next/_LINKS")
-      val out = f.create(p, true)
-      try out.write(links.toSeq.sorted
-        .map { case (t, sv) => s"$t\t$sv" }.mkString("\n")
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-    }
-    writeCommitMeta(f, root, next, op, written.keys.toSeq, ref)
-    manifest(root).flip(f, next)
-    releaseVersionClaim(f, root, next)
+    val next = stageVersion(spark, root, written, links)
+    sealVersion(spark, root, next, op, written.keys, ref, flip = true)
     next
   }
 
@@ -600,16 +606,14 @@ object Snapshot {
     val baseTag = s"$fromRef-mergebase"
     val f = fs(spark, root)
     Seq(baseTag, fromRef, intoRef).foreach(recoveredTag(f, root, _))
-    require(f.exists(new org.apache.hadoop.fs.Path(s"$root/TAG.$baseTag")),
+    require(f.exists(new Path(s"$root/TAG.$baseTag")),
       s"snapshot mergeRef: '$fromRef' has no recorded merge base — create it with branch(), not tag()")
     val base = tagVersion(spark, root, baseTag)
     val bHead = tagVersion(spark, root, fromRef)
     val tHead = tagVersion(spark, root, intoRef)
-    def homes(v: Long): Map[String, Long] = {
-      val links = linksOf(spark, root, v)
-      tablesOf(spark, root, v).map(t => t -> links.getOrElse(t, v)).toMap
-    }
-    val h0 = homes(base); val hb = homes(bHead); val ht = homes(tHead)
+    val h0 = homes(spark, root, base)
+    val hb = homes(spark, root, bHead)
+    val ht = homes(spark, root, tHead)
     val all = (h0.keySet ++ hb.keySet ++ ht.keySet).toSeq.sorted
     val contested = all.filter { t =>
       hb.get(t) != h0.get(t) && ht.get(t) != h0.get(t) && hb.get(t) != ht.get(t)
@@ -754,17 +758,10 @@ object Snapshot {
     val cur = currentVersion(spark, srcRoot)
     require(cur > 0, s"snapshot replicate: nothing published under $srcRoot")
     def copySmall(rel: String): Unit = {
-      val sp = new org.apache.hadoop.fs.Path(s"$srcRoot/$rel")
-      if (fsrc.exists(sp)) {
-        val in = fsrc.open(sp)
-        val bytes = try org.apache.commons.io.IOUtils.toByteArray(in)
-          finally in.close()
-        val out = fdst.create(new org.apache.hadoop.fs.Path(s"$dstRoot/$rel"), true)
-        try out.write(bytes) finally out.close()
-      }
+      val sp = new Path(s"$srcRoot/$rel")
+      if (fsrc.exists(sp)) writeText(fdst, new Path(s"$dstRoot/$rel"), readText(fsrc, sp))
     }
-    val versions = (1L to cur).filter(v =>
-      fsrc.exists(new org.apache.hadoop.fs.Path(s"$srcRoot/v$v")))
+    val versions = versionDirs(fsrc, srcRoot).filter(_ <= cur)
     // r19 (guide §1.2, §2.6): the source-side checksum rides the copy
     // write itself via an Observation — the source is read ONCE per
     // table (was: copy job + separate source-checksum job), and the
@@ -773,11 +770,7 @@ object Snapshot {
     // next unit's tasks. Checksums, the written bytes, and the
     // verify-before-flip contract are unchanged — the destination
     // checksum still reads the WRITTEN files.
-    val units = versions.map { v =>
-      v -> fsrc.listStatus(new org.apache.hadoop.fs.Path(s"$srcRoot/v$v"))
-        .filter(_.isDirectory).map(_.getPath.getName)
-        .filter(_.matches("[A-Za-z0-9_]+")).sorted.toSeq
-    }
+    val units = versions.map(v => v -> ownTables(fsrc, srcRoot, v))
     import org.apache.spark.sql.functions._
     val unitList = for ((v, own) <- units; t <- own) yield s"v$v/$t" -> { () =>
       val src = spark.read.parquet(s"$srcRoot/v$v/$t")
@@ -841,17 +834,11 @@ object Snapshot {
       tables: Map[String, DataFrame],
       checks: Seq[FkCheck]): (Long, Boolean, Seq[(String, Long)]) = {
     require(tables.nonEmpty, "snapshot publish: no tables")
-    tables.keys.foreach(n => require(n.matches("[A-Za-z0-9_]+"),
-      s"snapshot publish: unsafe table name '$n'"))
     checks.foreach { c =>
       require(tables.contains(c.factTable) && tables.contains(c.dimTable),
         s"publishChecked: rule references a table not being published: $c")
     }
-    val f = fs(spark, root)
-    val next = headVersion(spark, root) + 1
-    claimVersion(f, root, next)
-    clearDeadOrphan(f, root, next)
-    writeTablesConcurrently(s"$root/v$next", tables)
+    val next = stageVersion(spark, root, tables, Map.empty)
     import org.apache.spark.sql.functions.col
     val report = checks.map { c =>
       val fact = spark.read.parquet(s"$root/v$next/${c.factTable}")
@@ -862,13 +849,8 @@ object Snapshot {
       (s"${c.factTable}.${c.factCol}->${c.dimTable}.${c.dimCol}", bad)
     }
     val ok = report.forall(_._2 == 0L)
-    // the commit record lands even on the abort path: the orphan dir
-    // documents what was attempted (A37 / the A31 orphan-visibility rule)
-    writeCommitMeta(f, root, next, "checked", tables.keys.toSeq, "")
-    if (ok) manifest(root).flip(f, next)
-    // the claim releases on BOTH outcomes: the attempt is finished
-    // (abort leaves the orphan visible, the A31 rule — not claimed)
-    releaseVersionClaim(f, root, next)
+    // an abort still records the attempt and releases the claim
+    sealVersion(spark, root, next, "checked", tables.keys, "", flip = ok)
     (next, ok, report)
   }
 
@@ -945,15 +927,11 @@ object Snapshot {
     // with no error at vacuum time (the silent-wrongness class). The
     // tag set is tiny governance metadata; one listing reads it. A
     // crashed flip's residue pins too: either half may be the tag.
-    val protectedVersions = f.listStatus(new org.apache.hadoop.fs.Path(root))
+    val protectedVersions = f.listStatus(new Path(root))
       .filter(s => s.isFile && s.getPath.getName.startsWith("TAG."))
       .map(s => readPointer(f, s.getPath))
       .toSet
-    val allVersions = f.listStatus(new org.apache.hadoop.fs.Path(root))
-      .filter(_.isDirectory)
-      .map(_.getPath.getName)
-      .collect { case n if n.matches("v\\d+") => n.drop(1).toLong }
-      .sorted.toSeq
+    val allVersions = versionDirs(f, root)
     // LINK-PROTECTION (A32): a version that physically homes a table
     // some SURVIVING version carries by reference must stay — deleting
     // it breaks every linked read with no error at vacuum time, the
@@ -974,7 +952,7 @@ object Snapshot {
     }
     val doomedSorted = doomed.toSeq.sorted
     doomedSorted.foreach { v =>
-      require(f.delete(new org.apache.hadoop.fs.Path(s"$root/v$v"), true),
+      require(f.delete(new Path(s"$root/v$v"), true),
         s"snapshot vacuum: failed to delete v$v under $root")
     }
     doomedSorted
@@ -994,22 +972,18 @@ object Snapshot {
     import spark.implicits._
     val f = fs(spark, root)
     val cur = currentVersion(spark, root)
-    val rootPath = new org.apache.hadoop.fs.Path(root)
     val tagsByVersion = refNames(f, root)
       .map(t => tagVersion(spark, root, t) -> t)
       .groupBy(_._1).map { case (v, xs) => v -> xs.map(_._2).sorted.mkString(",") }
-    val rows = f.listStatus(rootPath).filter(_.isDirectory)
-      .map(_.getPath.getName)
-      .collect { case n if n.matches("v\\d+") => n.drop(1).toLong }
-      .sorted.toSeq.flatMap { v =>
-        // tablesOf includes link-carried tables (A32): the catalog
-        // reports the version's LOGICAL table set; counts resolve to
-        // the physical home dir either way
-        tablesOf(spark, root, v).map { tbl =>
-          val n = spark.read.parquet(resolveTableDir(spark, root, v, tbl)).count()
-          (v, tbl, n, v == cur, tagsByVersion.getOrElse(v, ""))
-        }
+    val rows = versionDirs(f, root).flatMap { v =>
+      // tables includes link-carried tables (A32): the catalog
+      // reports the version's LOGICAL table set; counts resolve to
+      // the physical home dir either way
+      tables(spark, root, v).map { tbl =>
+        val n = spark.read.parquet(resolveTableDir(spark, root, v, tbl)).count()
+        (v, tbl, n, v == cur, tagsByVersion.getOrElse(v, ""))
       }
+    }
     rows.toDF("version", "table_name", "n_rows", "is_current", "tags")
   }
 
@@ -1028,19 +1002,15 @@ object Snapshot {
   def storageReport(spark: SparkSession, root: String): DataFrame = {
     import spark.implicits._
     val f = fs(spark, root)
-    val rows = f.listStatus(new org.apache.hadoop.fs.Path(root))
-      .filter(_.isDirectory).map(_.getPath.getName)
-      .collect { case n if n.matches("v\\d+") => n.drop(1).toLong }
-      .sorted.toSeq.map { v =>
-        val links = linksOf(spark, root, v)
-        val tables = tablesOf(spark, root, v)
-        val counts = tables.map(t =>
-          t -> spark.read.parquet(resolveTableDir(spark, root, v, t)).count()).toMap
-        val bytes = f.getContentSummary(
-          new org.apache.hadoop.fs.Path(s"$root/v$v")).getLength
-        (v, (tables.size - links.size).toLong, links.size.toLong,
-          counts.values.sum, links.keys.map(counts).sum, bytes)
-      }
+    val rows = versionDirs(f, root).map { v =>
+      val links = linksOf(spark, root, v)
+      val served = tables(spark, root, v)
+      val counts = served.map(t =>
+        t -> spark.read.parquet(resolveTableDir(spark, root, v, t)).count()).toMap
+      val bytes = f.getContentSummary(new Path(s"$root/v$v")).getLength
+      (v, (served.size - links.size).toLong, links.size.toLong,
+        counts.values.sum, links.keys.map(counts).sum, bytes)
+    }
     rows.toDF("version", "n_physical", "n_linked", "logical_rows",
       "linked_rows", "phys_bytes")
   }
@@ -1065,30 +1035,21 @@ object Snapshot {
   def fsck(spark: SparkSession, root: String): DataFrame = {
     import spark.implicits._
     val f = fs(spark, root)
-    val versions = f.listStatus(new org.apache.hadoop.fs.Path(root))
-      .filter(_.isDirectory).map(_.getPath.getName)
-      .collect { case n if n.matches("v\\d+") => n.drop(1).toLong }
-      .sorted.toSeq
-    val rows = versions.flatMap { v =>
+    val rows = versionDirs(f, root).flatMap { v =>
       val links = linksOf(spark, root, v)
-      val dirs = f.listStatus(new org.apache.hadoop.fs.Path(s"$root/v$v"))
-        .filter(_.isDirectory).map(_.getPath.getName).toSeq
-      val own = dirs.filter(_.matches("[A-Za-z0-9_]+"))
-      val crashedRows = dirs
-        .collect { case n if n.startsWith(".erase_bak_") => n.drop(11)
-                   case n if n.startsWith(".erase_tmp_") => n.drop(11) }
-        .distinct.sorted.map { t =>
-          val live = own.contains(t)
-          (v, t, if (live) "stale-erase-residue" else "crashed-erase", v)
-        }
+      val dirs = subdirs(f, s"$root/v$v")
+      val own = dirs.filter(isTableName)
+      val (erased, restored) = residueTables(dirs)
+      val crashedRows = erased.map { t =>
+        (v, t, if (own.contains(t)) "stale-erase-residue" else "crashed-erase", v)
+      }
       val linkRows = links.toSeq.sorted.map { case (t, sv) =>
-        val target = new org.apache.hadoop.fs.Path(s"$root/v$sv/$t")
+        val target = new Path(s"$root/v$sv/$t")
         (v, t, if (f.exists(target)) "linked-ok" else "dangling-link", sv)
       }
       // a crashed replica restore ([[fsckRepair]] fromReplica) leaves
       // a hidden tmp: harmless to readers, garbage to report
-      val restoreRows = dirs.filter(_.startsWith(".restore_tmp_"))
-        .map(_.drop(13)).sorted.map(t => (v, t, "stale-restore-tmp", v))
+      val restoreRows = restored.map(t => (v, t, "stale-restore-tmp", v))
       val ownRows = own.sorted.map(t => (v, t, "ok", v))
       val all = ownRows ++ linkRows ++ crashedRows ++ restoreRows
       if (all.isEmpty) Seq((v, "", "empty-version", v)) else all
@@ -1140,41 +1101,33 @@ object Snapshot {
       fromReplica: Option[String] = None): DataFrame = {
     import spark.implicits._
     val f = fs(spark, root)
-    val versions = f.listStatus(new org.apache.hadoop.fs.Path(root))
-      .filter(_.isDirectory).map(_.getPath.getName)
-      .collect { case n if n.matches("v\\d+") => n.drop(1).toLong }
-      .sorted.toSeq
+    val versions = versionDirs(f, root)
     val rows = versions.flatMap { v =>
-      val dirs = f.listStatus(new org.apache.hadoop.fs.Path(s"$root/v$v"))
-        .filter(_.isDirectory).map(_.getPath.getName).toSeq
-      def p(rel: String) = new org.apache.hadoop.fs.Path(s"$root/v$v/$rel")
-      val repaired = dirs
-        .collect { case n if n.startsWith(".erase_tmp_") || n.startsWith(".erase_bak_") =>
-          n.drop(11) }
-        .distinct.sorted.flatMap { t =>
-          Commit.recover(f, p(t), p(s".erase_tmp_$t"), p(s".erase_bak_$t")) match {
-            case Commit.Outcome.Kept(droppedTmp, _) => Some((v, t, "stale-erase-residue",
-              if (droppedTmp) "deleted-stale-tmp-rerun-erase" else "deleted-stale-backup"))
-            case Commit.Outcome.RolledForward => Some((v, t, "crashed-erase", "restored-scrubbed"))
-            case Commit.Outcome.RolledBack => Some((v, t, "crashed-erase", "restored-backup"))
-            case Commit.Outcome.Absent => None
-          }
+      def p(rel: String) = new Path(s"$root/v$v/$rel")
+      val (erased, restored) = residueTables(subdirs(f, s"$root/v$v"))
+      val repaired = erased.flatMap { t =>
+        Commit.recover(f, p(t), p(eraseTmp(t)), p(eraseBak(t))) match {
+          case Commit.Outcome.Kept(droppedTmp, _) => Some((v, t, "stale-erase-residue",
+            if (droppedTmp) "deleted-stale-tmp-rerun-erase" else "deleted-stale-backup"))
+          case Commit.Outcome.RolledForward => Some((v, t, "crashed-erase", "restored-scrubbed"))
+          case Commit.Outcome.RolledBack => Some((v, t, "crashed-erase", "restored-backup"))
+          case Commit.Outcome.Absent => None
         }
+      }
       // a crash mid-replica-restore strands a hidden tmp next to
       // nothing a reader can reach: garbage, deleted (the restore
       // itself re-copies from the replica, never resumes a partial)
-      val staleRestores = dirs.filter(_.startsWith(".restore_tmp_"))
-        .map(_.drop(13)).sorted.map { t =>
-          f.delete(p(s".restore_tmp_$t"), true): Unit
-          (v, t, "stale-restore-tmp", "deleted-stale-restore-tmp")
-        }
+      val staleRestores = restored.map { t =>
+        f.delete(p(restoreTmp(t)), true): Unit
+        (v, t, "stale-restore-tmp", "deleted-stale-restore-tmp")
+      }
       repaired ++ staleRestores
     }
     // dangling links second, namespace-wide: several versions can
     // link to ONE missing home, which must restore exactly once
     val dangling = versions.flatMap { v =>
       linksOf(spark, root, v).toSeq.sorted.collect {
-        case (t, sv) if !f.exists(new org.apache.hadoop.fs.Path(s"$root/v$sv/$t")) =>
+        case (t, sv) if !f.exists(new Path(s"$root/v$sv/$t")) =>
           (v, t, sv)
       }
     }
@@ -1182,10 +1135,10 @@ object Snapshot {
     val linkRows = dangling.map { case (v, t, sv) =>
       val restored = restoredHome.getOrElseUpdate((sv, t), fromReplica.exists { rep =>
         val fr = fs(spark, rep)
-        if (!fr.exists(new org.apache.hadoop.fs.Path(s"$rep/v$sv/$t"))) false
+        if (!fr.exists(new Path(s"$rep/v$sv/$t"))) false
         else {
           val src = spark.read.parquet(s"$rep/v$sv/$t")
-          val tmp = new org.apache.hadoop.fs.Path(s"$root/v$sv/.restore_tmp_$t")
+          val tmp = new Path(s"$root/v$sv/${restoreTmp(t)}")
           f.delete(tmp, true): Unit
           src.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
           val cols = src.columns.sorted.toSeq
@@ -1194,7 +1147,7 @@ object Snapshot {
             .tableChecksum(spark.read.parquet(tmp.toString), cols).head()
           require(a == b, s"snapshot repair: replica restore checksum " +
             s"mismatch on v$sv/$t — restore NOT installed")
-          Commit.move(f, tmp, new org.apache.hadoop.fs.Path(s"$root/v$sv/$t"))
+          Commit.move(f, tmp, new Path(s"$root/v$sv/$t"))
           true
         }
       })
@@ -1240,15 +1193,10 @@ object Snapshot {
     import org.apache.spark.sql.functions.{broadcast, col}
     val f = fs(spark, root)
     val keyDf = keys.select(col(keyCol)).distinct()
-    val versions = f.listStatus(new org.apache.hadoop.fs.Path(root))
-      .filter(_.isDirectory)
-      .map(_.getPath.getName)
-      .collect { case n if n.matches("v\\d+") => n.drop(1).toLong }
-      .sorted.toSeq
-    val touched = versions.flatMap { v =>
-      val dirPath = new org.apache.hadoop.fs.Path(s"$root/v$v/$table")
-      val tmp = new org.apache.hadoop.fs.Path(s"$root/v$v/.erase_tmp_$table")
-      val bak = new org.apache.hadoop.fs.Path(s"$root/v$v/.erase_bak_$table")
+    val touched = versionDirs(f, root).flatMap { v =>
+      val dirPath = new Path(s"$root/v$v/$table")
+      val tmp = new Path(s"$root/v$v/${eraseTmp(table)}")
+      val bak = new Path(s"$root/v$v/${eraseBak(table)}")
       Commit.recover(f, dirPath, tmp, bak): Unit
       if (!f.exists(dirPath)) None
       else {
@@ -1286,8 +1234,7 @@ object Snapshot {
       root: String,
       tables: Map[String, DataFrame]): (Long, Boolean, Seq[String]) = {
     require(tables.nonEmpty, "snapshot publish: no tables")
-    tables.keys.foreach(n => require(n.matches("[A-Za-z0-9_]+"),
-      s"snapshot publish: unsafe table name '$n'"))
+    requireTableNames(tables.keys)
     val cur = headVersion(spark, root)
     val violations = schemaViolations(spark, root, tables)
     if (violations.nonEmpty) (cur + 1, false, violations)
@@ -1400,7 +1347,7 @@ object Snapshot {
    * call-time keepLast to be meaningful. */
   def deleteRef(spark: SparkSession, root: String, name: String,
       force: Boolean = false): Unit = {
-    require(name.matches("[A-Za-z0-9_-]+"), s"snapshot deleteRef: unsafe name '$name'")
+    require(name.matches(TagName), s"snapshot deleteRef: unsafe name '$name'")
     require(force || !isReleaseRef(name),
       s"snapshot deleteRef: '$name' is a release ref — deleting it lets " +
         "the next vacuum reclaim the chain it pins; pass force=true " +
@@ -1466,6 +1413,9 @@ object Snapshot {
       p.split("\\*", -1).map(java.util.regex.Pattern.quote).mkString(".*")))
     val tsByVersion = history(spark, root).select("version", "ts_ms")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    // a writer verb: a ref caught mid-flip is recovered and judged like
+    // any other, never left as residue that pins its chain for vacuum
+    recoverRefs(f, root)
     val refs = refNames(f, root)
       .filterNot(_.endsWith("-mergebase"))
       .filterNot(isReleaseRef)
@@ -1483,7 +1433,7 @@ object Snapshot {
   }
 
   private def tagPointer(root: String, name: String): Pointer = {
-    require(name.matches("[A-Za-z0-9_-]+"), s"snapshot tag: unsafe name '$name'")
+    require(name.matches(TagName), s"snapshot tag: unsafe name '$name'")
     Pointer(root, s"TAG.$name")
   }
 
@@ -1498,8 +1448,8 @@ object Snapshot {
 
   /** `TAG.<name>` with a crashed flip recovered, for a verb about to
    * write: a tag left as only `TAG.<name>.bak` resolves again. */
-  private def recoveredTag(f: org.apache.hadoop.fs.FileSystem, root: String,
-      name: String): org.apache.hadoop.fs.Path = {
+  private def recoveredTag(f: FileSystem, root: String,
+      name: String): Path = {
     val p = tagPointer(root, name)
     p.recover(f)
     p.target

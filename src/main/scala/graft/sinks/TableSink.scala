@@ -110,28 +110,14 @@ object TableSink {
         .agg(count(lit(1)).as("__n")).filter("__n > 1").limit(1).count()
       require(dup == 0, s"upsert: delta has duplicate keys on ${keyCols.mkString(",")}")
     }
-    val hPath = new org.apache.hadoop.fs.Path(path)
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recoverSwap(fs, hPath)
-    if (!fs.exists(hPath)) {
-      delta.write.mode(SaveMode.ErrorIfExists).format(format).save(path)
-      return
+    openTable(spark, path, format, "upsert", "upsert per partition directory instead") match {
+      case None => delta.write.mode(SaveMode.ErrorIfExists).format(format).save(path)
+      case Some(current) =>
+        val merged = evolveAdditively(current, delta, "upsert")
+          .join(delta.select(keyCols.map(delta(_)): _*), keyCols, "left_anti")
+          .unionByName(delta)
+        swapInto(spark, path, merged, format)
     }
-    // Hive-partitioned layouts are REJECTED for the same reason as
-    // compact: load() would infer the partition columns and the merged
-    // rewrite (no partitionBy) would silently flatten the directory
-    // layout — losing partition pruning and baking inferred
-    // partition-column types into the data files.
-    if (fs.listStatus(hPath).exists(e =>
-        e.isDirectory && e.getPath.getName.contains("=")))
-      throw new IllegalArgumentException(
-        s"upsert: $path is Hive-partitioned; upsert per partition directory instead")
-    val current = spark.read.format(format).load(path)
-    val evolved = evolveAdditively(current, delta, "upsert")
-    val merged = evolved
-      .join(delta.select(keyCols.map(delta(_)): _*), keyCols, "left_anti")
-      .unionByName(delta)
-    swapInto(fs, hPath, merged, format)
   }
 
   /**
@@ -171,19 +157,10 @@ object TableSink {
     require(!keyCols.contains(versionCol),
       s"upsertVersioned: version column $versionCol cannot be a key")
     import org.apache.spark.sql.functions.{col, max, min, struct, when}
-    val hPath = new org.apache.hadoop.fs.Path(path)
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recoverSwap(fs, hPath)
+    val current =
+      openTable(spark, path, format, "upsertVersioned", "merge per partition directory")
     val all =
-      if (!fs.exists(hPath)) delta
-      else {
-        if (fs.listStatus(hPath).exists(e =>
-            e.isDirectory && e.getPath.getName.contains("=")))
-          throw new IllegalArgumentException(
-            s"upsertVersioned: $path is Hive-partitioned; merge per partition directory")
-        val current = spark.read.format(format).load(path)
-        evolveAdditively(current, delta, "upsertVersioned").unionByName(delta)
-      }
+      current.fold(delta)(evolveAdditively(_, delta, "upsertVersioned").unionByName(delta))
     // ONE aggregate: per key, the whole row riding a (version, row)
     // struct max — versions compare in long space (epoch / LSN /
     // offset). Conflict detection at the WINNING version only (a
@@ -229,9 +206,8 @@ object TableSink {
     }
     val resolved = merged.select(
       keyCs ++ payload.map(c => col(s"__hi.__row.$c").as(c)): _*)
-    if (!fs.exists(hPath))
-      resolved.write.mode(SaveMode.ErrorIfExists).format(format).save(path)
-    else swapInto(fs, hPath, resolved, format)
+    if (current.isEmpty) resolved.write.mode(SaveMode.ErrorIfExists).format(format).save(path)
+    else swapInto(spark, path, resolved, format)
   }
 
   /**
@@ -309,27 +285,19 @@ object TableSink {
     else ups0.join(
       delta.filter(col(opCol) === "D").select(keyCols.map(col): _*).distinct(),
       keyCols, "left_anti")
-    val hPath = new org.apache.hadoop.fs.Path(path)
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recoverSwap(fs, hPath)
-    if (!fs.exists(hPath)) {
-      // First batch bootstraps the table from its upserts; a delete-only
-      // first batch has nothing to create and must not plant an empty
-      // table whose schema would then pin future evolution.
-      if (ups.limit(1).count() > 0)
-        ups.write.mode(SaveMode.ErrorIfExists).format(format).save(path)
-      return
+    openTable(spark, path, format, "applyCdc", "apply per partition directory instead") match {
+      case None =>
+        // First batch bootstraps the table from its upserts; a delete-only
+        // first batch has nothing to create and must not plant an empty
+        // table whose schema would then pin future evolution.
+        if (ups.limit(1).count() > 0)
+          ups.write.mode(SaveMode.ErrorIfExists).format(format).save(path)
+      case Some(current) =>
+        val merged = evolveAdditively(current, ups, "applyCdc")
+          .join(delta.select(keyCols.map(delta(_)): _*), keyCols, "left_anti")
+          .unionByName(ups)
+        swapInto(spark, path, merged, format)
     }
-    if (fs.listStatus(hPath).exists(e =>
-        e.isDirectory && e.getPath.getName.contains("=")))
-      throw new IllegalArgumentException(
-        s"applyCdc: $path is Hive-partitioned; apply per partition directory instead")
-    val current = spark.read.format(format).load(path)
-    val evolved = evolveAdditively(current, ups, "applyCdc")
-    val merged = evolved
-      .join(delta.select(keyCols.map(delta(_)): _*), keyCols, "left_anti")
-      .unionByName(ups)
-    swapInto(fs, hPath, merged, format)
   }
 
   /**
@@ -376,15 +344,37 @@ object TableSink {
     Commit.recover(fs, hPath, tmp, bak): Unit
   }
 
+  private def hivePartitioned(entries: Array[org.apache.hadoop.fs.FileStatus]): Boolean =
+    entries.exists(e => e.isDirectory && e.getPath.getName.contains("="))
+
+  /** The table at `path` as a merging mutation opens it: a crashed swap
+   * recovered first, then `None` when there is no table yet. A
+   * Hive-partitioned layout is refused with `who`'s `remedy`, for the
+   * same reason as in [[compact]]: load() would infer the partition
+   * columns and the merged rewrite (no partitionBy) would silently
+   * flatten the directory layout — losing partition pruning and baking
+   * inferred partition-column types into the data files. */
+  private def openTable(spark: org.apache.spark.sql.SparkSession, path: String,
+      format: String, who: String, remedy: String): Option[DataFrame] = {
+    val hPath = new org.apache.hadoop.fs.Path(path)
+    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    recoverSwap(fs, hPath)
+    if (!fs.exists(hPath)) None
+    else if (hivePartitioned(fs.listStatus(hPath)))
+      throw new IllegalArgumentException(s"$who: $path is Hive-partitioned; $remedy")
+    else Some(spark.read.format(format).load(path))
+  }
+
   /** Fully write `merged` to the table's tmp sibling, then swap it in. */
   private def swapInto(
-      fs: org.apache.hadoop.fs.FileSystem,
-      hPath: org.apache.hadoop.fs.Path,
+      spark: org.apache.spark.sql.SparkSession,
+      path: String,
       merged: DataFrame,
       format: String): Unit = {
+    val hPath = new org.apache.hadoop.fs.Path(path)
     val (tmp, bak) = swapPair(hPath)
     merged.write.mode(SaveMode.Overwrite).format(format).save(tmp.toString)
-    Commit.replace(fs, hPath, tmp, bak)
+    Commit.replace(hPath.getFileSystem(spark.sparkContext.hadoopConfiguration), hPath, tmp, bak)
   }
 
   /**
@@ -433,8 +423,7 @@ object TableSink {
           !e.getPath.getName.startsWith(".") && !e.getPath.getName.startsWith("_"))
       if (subs.isEmpty) Seq(p) else subs.toSeq.flatMap(e => leaves(e.getPath))
     }
-    require(fs.listStatus(hPath).exists(e =>
-        e.isDirectory && e.getPath.getName.contains("=")),
+    require(hivePartitioned(fs.listStatus(hPath)),
       s"compactPartitioned: $path has no col=value partition directories; use compact")
     val all = leaves(hPath)
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
@@ -486,7 +475,7 @@ object TableSink {
     val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     recoverSwap(fs, hPath)
     val entries = fs.listStatus(hPath)
-    if (entries.exists(e => e.isDirectory && e.getPath.getName.contains("=")))
+    if (hivePartitioned(entries))
       throw new IllegalArgumentException(
         s"compact: $path is Hive-partitioned; compact each partition directory instead")
     val curFiles = entries.count(e => e.isFile &&
@@ -496,7 +485,7 @@ object TableSink {
     val nFiles = ((bytes + targetFileBytes - 1) / targetFileBytes)
       .max(BigInt(1)).min(BigInt(Int.MaxValue)).toInt
     if (nFiles >= curFiles) return // nothing to merge
-    swapInto(fs, hPath, df.coalesce(nFiles), format)
+    swapInto(spark, path, df.coalesce(nFiles), format)
   }
 
   /** Outcome of [[deleteKeys]]: how surgical the delete was. */

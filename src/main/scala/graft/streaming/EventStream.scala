@@ -432,27 +432,6 @@ object EventStream {
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(fn)
   }
 
-  /** Incremental keyed upsert sink: each micro-batch MERGEs into a
-   * parquet table via [[graft.sinks.TableSink.upsert]] — the
-   * streaming companion of the batch truncate-and-load, for
-   * maintaining a continuously-updated serving table from an
-   * update-mode aggregation (update mode emits exactly the changed
-   * keys per trigger, which IS the upsert delta). Start with
-   * `.start()` on the returned writer.
-   *
-   * Cost model: while the anti join itself broadcasts a small delta
-   * (never shuffling the big table), plain-parquet MERGE still
-   * re-reads and fully REWRITES the serving table every trigger —
-   * O(table) I/O per micro-batch. That's the floor for a format
-   * without file-level deletes; size triggers accordingly (minutes,
-   * not seconds) and keep the serving table compact, or point the
-   * sink at a table format with transactional row-level merge.
-   * `checkUniqueKeys` defaults to false because update-mode
-   * aggregation output is unique per key per trigger by construction,
-   * making the per-batch duplicate-scan job pure overhead — but a
-   * caller WITHOUT that guarantee (e.g. flatMapGroupsWithState
-   * emitting several rows per key per batch) must pass true, or
-   * duplicate-key rows insert into the serving table permanently. */
   /** One epoch of [[appendSink]]: write a batch into its OWN
    * batch-id-keyed directory, overwriting any previous attempt of the
    * SAME epoch. Exposed so a crash replay is directly testable: the
@@ -483,6 +462,27 @@ object EventStream {
         appendEpoch(batch.toDF(), path, id)
       }
 
+  /** Incremental keyed upsert sink: each micro-batch MERGEs into a
+   * parquet table via [[graft.sinks.TableSink.upsert]] — the
+   * streaming companion of the batch truncate-and-load, for
+   * maintaining a continuously-updated serving table from an
+   * update-mode aggregation (update mode emits exactly the changed
+   * keys per trigger, which IS the upsert delta). Start with
+   * `.start()` on the returned writer.
+   *
+   * Cost model: while the anti join itself broadcasts a small delta
+   * (never shuffling the big table), plain-parquet MERGE still
+   * re-reads and fully REWRITES the serving table every trigger —
+   * O(table) I/O per micro-batch. That's the floor for a format
+   * without file-level deletes; size triggers accordingly (minutes,
+   * not seconds) and keep the serving table compact, or point the
+   * sink at a table format with transactional row-level merge.
+   * `checkUniqueKeys` defaults to false because update-mode
+   * aggregation output is unique per key per trigger by construction,
+   * making the per-batch duplicate-scan job pure overhead — but a
+   * caller WITHOUT that guarantee (e.g. flatMapGroupsWithState
+   * emitting several rows per key per batch) must pass true, or
+   * duplicate-key rows insert into the serving table permanently. */
   def upsertSink(updates: DataFrame, path: String, keyCols: Seq[String],
       checkUniqueKeys: Boolean = false)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =

@@ -183,4 +183,17 @@ class CommitSpec extends AnyFunSuite {
     assert(Snapshot.vacuum(spark, root, keepLast = 1) == Seq(1L, 2L))
     assert(!hfs.exists(p("TAG.prod.tmp")) && !hfs.exists(p("TAG.prod.bak")))
   }
+
+  test("no sink, similarity, source or streaming file renames except through Commit") {
+    val dirs = Seq("sinks", "similarity", "sources", "streaming")
+      .map(d => java.nio.file.Paths.get("src/main/scala/graft", d))
+    assert(dirs.forall(Files.isDirectory(_)), s"sources not found under ${dirs.head.toAbsolutePath}")
+    val renaming = dirs.flatMap { d =>
+      val walk = Files.walk(d)
+      try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      finally walk.close()
+    }.filterNot(_.getFileName.toString == "Commit.scala")
+      .filter(p => new String(Files.readAllBytes(p), UTF_8).contains(".rename("))
+    assert(renaming.isEmpty, renaming.mkString(", "))
+  }
 }

@@ -1032,4 +1032,49 @@ class SnapshotSpec extends AnyFunSuite {
     assert(Snapshot.readTag(spark, root, "t", "prod")
       .as[(Long, String)].collect().toList == List((2L, "b")))
   }
+
+  test("gcRefs recovers a ref caught mid-flip, sweeps it, and unpins its chain") {
+    val root = freshRoot()
+    Snapshot.publish(spark, root, Map("t" -> Seq(1L).toDF("x")))
+    Snapshot.tag(spark, root, "dev", 1L)
+    Snapshot.publish(spark, root, Map("t" -> Seq(2L).toDF("x")))
+    crashTagFlip(root, "dev")
+    assert(Snapshot.gcRefs(spark, root, olderThanMs = 0L) == Seq("dev" -> 1L))
+    assert(tagFiles(root).isEmpty, tagFiles(root))
+    assert(Snapshot.vacuum(spark, root, keepLast = 1) == Seq(1L))
+  }
+
+  test("every version-creating verb leaves one commit footprint: record, flip or not, no claim") {
+    val t0 = Seq((1L, "a"), (2L, "b")).toDF("k", "s")
+    val dim = Seq(1L, 2L).toDF("dk")
+    val rules = Seq(Snapshot.FkCheck("f", "fk", "d", "dk"))
+    def checked(root: String, fk: Long) =
+      Snapshot.publishChecked(spark, root, Map("f" -> Seq(fk).toDF("fk"), "d" -> dim), rules)._1
+    // each verb runs on a namespace whose v1 serves t and u
+    final case class Verb(label: String, run: String => Long, op: String,
+        written: String, serves: Seq[String], flips: Boolean = true)
+    val verbs = Seq(
+      Verb("publish", Snapshot.publish(spark, _, Map("t" -> t0)), "publish", "t", Seq("t")),
+      Verb("publishLinked", Snapshot.publishLinked(spark, _, Map("t" -> t0))._1,
+        "linked", "t", Seq("t", "u")),
+      Verb("publishMixed written+links",
+        Snapshot.publishMixed(spark, _, Map("t" -> t0), Map("u" -> 1L)), "mixed", "t", Seq("t", "u")),
+      Verb("publishMixed links-only",
+        Snapshot.publishMixed(spark, _, Map.empty, Map("t" -> 1L, "u" -> 1L)),
+        "mixed", "", Seq("t", "u")),
+      Verb("publishChecked pass", checked(_, 1L), "checked", "d,f", Seq("d", "f")),
+      Verb("publishChecked abort", checked(_, 9L), "checked", "d,f", Seq("d", "f"), flips = false))
+    verbs.foreach { verb =>
+      val root = freshRoot()
+      Snapshot.publish(spark, root, Map("t" -> t0, "u" -> t0))
+      assert(verb.run(root) == 2L, verb.label)
+      assert(!new java.io.File(root).list().exists(_.startsWith("_CLAIM.")), verb.label)
+      assert(Snapshot.currentVersion(spark, root) == (if (verb.flips) 2L else 1L), verb.label)
+      val record = Snapshot.history(spark, root).filter($"version" === 2L)
+        .select("op", "parent", "written", "ref", "reachable")
+        .as[(String, Long, String, String, Boolean)].collect().toList
+      assert(record == List((verb.op, 1L, verb.written, "", verb.flips)), s"${verb.label}: $record")
+      assert(Snapshot.tables(spark, root, 2L) == verb.serves, verb.label)
+    }
+  }
 }
