@@ -82,7 +82,7 @@ object CorpusQueries {
     val docs = t(s, dir, "documents")
     val dropped = graft.dedup.Dedup.simhashKeep(docs, "doc_id", "text")
       .filter(!col("keep")).select("doc_id")
-    // coalesce NULL text to '' to mirror keepFirstLayered's normalization
+    // coalesce NULL text to '' to mirror Dedup.keepFirst's normalization
     val base = docs.select(col("doc_id"),
       graft.dedup.Dedup.simhashOf(coalesce(col("text"), lit(""))).as("sim"))
     val a = base.repartition(s.sparkContext.defaultParallelism)

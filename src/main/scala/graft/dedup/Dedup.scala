@@ -7,18 +7,30 @@ import org.apache.spark.sql.functions._
 /**
  * Document deduplication operators for training-data pipelines.
  *
- * Every near-dup variant follows the same scale shape: a cheap per-row
- * signature (codegen'd, one scan), a candidate-generation step that
- * shuffles only (bucket-key, doc-id) pairs — never text — and an exact
- * verify that runs only inside buckets. The quadratic all-pairs
- * comparison is never materialized; worst-case bucket skew (many
- * identical docs) is bounded because identical signatures verify
- * trivially and the keep-rule only needs the min id per bucket.
+ * Every near-dup variant follows one scale shape, and each step of it
+ * is one private function here, shared with
+ * [[graft.pipelines.CorpusAssembly]], [[graft.operators.Linkage]] and
+ * [[graft.operators.Fuzzy]]:
+ *  1. a cheap per-row signature (codegen'd, one scan — [[spread]]
+ *     first, so a few-file input does not run it on a few cores);
+ *  2. blocking keys exploded per row (MinHash bands from
+ *     [[bandExplode]], shingle anchors, hyperplane bands, deletion
+ *     keys, bigrams) and ONE self-join on them, [[selfPairs]]: it
+ *     shuffles only (key, id) rows — never text — and dedups the
+ *     pairs before the verify;
+ *  3. the payload joined back once per deduped pair,
+ *     [[withPayload]], for an exact verify inside the blocks only;
+ *  4. keep-first, [[keepFirst]]: a document survives iff it has no
+ *     verified duplicate with a smaller id — one hop, not transitive
+ *     closure, the standard corpus-dedup semantics. Exact copies
+ *     collapse to their min-id representative first (one hash
+ *     aggregate) and only representatives reach steps 2–3, so mass
+ *     duplication — the dominant skew of crawled corpora — never
+ *     becomes a quadratic in-bucket pair blowup. An exact copy is a
+ *     jaccard-1.0 near-dup of its representative, so the layering
+ *     equals keep-first over the whole corpus.
  *
- * Keep rule everywhere: a document survives iff it has no verified
- * duplicate with a smaller id ("keep first occurrence") — this needs
- * one hop, not transitive closure, and is the standard corpus-dedup
- * semantics.
+ * The quadratic all-pairs comparison is never materialized.
  */
 object Dedup {
 
@@ -28,8 +40,6 @@ object Dedup {
     docs
       .groupBy(md5(col(textCol).cast("binary")).as("text_md5"))
       .agg(min(col(idCol)).as("keep_id"), count(lit(1)).as("n_copies"))
-
-  // --- MinHash + LSH ------------------------------------------------------
 
   /** Spread rows across the cluster before a CPU-heavy per-row stage:
    * a few-file input must not serialize signature computation onto a
@@ -76,115 +86,29 @@ object Dedup {
     }
   }
 
-  /**
-   * MinHash+LSH near-dup candidates: signature → bands → explode →
-   * self-join per (band index, band hash). Returns distinct candidate
-   * pairs (id_a < id_b) with their n-gram Jaccard similarity computed
-   * from the shingle-hash sets (the exact verify).
-   */
-  def minhashCandidates(
-      docs: DataFrame, idCol: String, textCol: String,
-      shingleWords: Int = 3, numPerm: Int = 64, bands: Int = 16): DataFrame = {
+  // --- The shared steps (object doc) --------------------------------------
+
+  /** Distinct pairs (id_a, id_b), id_a < id_b, of `keyed` rows that
+   * share every column of `keys` (step 2). The join shuffles whatever
+   * `keyed` carries, so it should hold only `id` and `keys`; a join
+   * hint on `keyed` applies to both sides. */
+  private[graft] def selfPairs(keyed: DataFrame, id: String, keys: Seq[String]): DataFrame =
+    keyed.as("a").join(keyed.as("b"),
+        keys.map(k => col(s"a.$k") === col(s"b.$k")).reduce(_ && _) &&
+          col(s"a.$id") < col(s"b.$id"))
+      .select(col(s"a.$id").as("id_a"), col(s"b.$id").as("id_b"))
+      .distinct() // a pair can share several keys
+
+  /** MinHash LSH keys of a (doc_id, sh) frame: (doc_id, band_idx,
+   * band_hash) rows, ids only. Shingle-less docs (fewer than the
+   * shingle width of tokens) band with nobody: they have no near-dup
+   * relation, and their all-sentinel signatures would otherwise collide
+   * every degenerate doc into one band bucket (a quadratic skew bomb
+   * on a crawled corpus). */
+  private def bandExplode(shingled: DataFrame, numPerm: Int, bands: Int): DataFrame = {
     require(numPerm % bands == 0, "bands must divide numPerm")
     val r = numPerm / bands
-    val base = spread(docs).select(col(idCol).as("doc_id"),
-      coalesce(col(textCol), lit("")).as("text"))
-    // candidate generation shuffles ONLY (band, hash, id) — the
-    // shingle sets would multiply shuffle volume by the band count.
-    // Shingle-less docs (< shingleWords tokens) are excluded up
-    // front: they have no near-dup relation, and their all-sentinel
-    // signatures would otherwise collide every degenerate doc into
-    // one band bucket (a quadratic skew bomb on a crawled corpus).
-    val banded = base
-      .filter(size(wordShingleHashes(col("text"), shingleWords)) > 0)
-      .select(col("doc_id"),
-        minhashSig(wordShingleHashes(col("text"), shingleWords), numPerm).as("sig"))
-      .select(col("doc_id"),
-        posexplode(transform(sequence(lit(0), lit(bands - 1)),
-          b => hash(slice(col("sig"), b * r + 1, lit(r))))))
-      .withColumnsRenamed(Map("pos" -> "band_idx", "col" -> "band_hash"))
-    val pairs = banded.as("a")
-      .join(banded.as("b"), Seq("band_idx", "band_hash"))
-      .filter(col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-      .distinct() // dedup across bands BEFORE the (heavier) verify
-    // verify: join the (few) candidate pairs back to their texts and
-    // compute the exact jaccard once per pair
-    pairs
-      .join(base.select(col("doc_id").as("id_a"),
-        wordShingleHashes(col("text"), shingleWords).as("sh_a")), Seq("id_a"))
-      .join(base.select(col("doc_id").as("id_b"),
-        wordShingleHashes(col("text"), shingleWords).as("sh_b")), Seq("id_b"))
-      .select(col("id_a"), col("id_b"),
-        hashJaccard(col("sh_a"), col("sh_b")).as("jaccard"))
-  }
-
-  /**
-   * Layered keep-first dedup: collapse EXACT duplicates to their
-   * min-id representative first (one hash aggregate), then run the
-   * near-dup pair generator only over representatives, and compose the
-   * keep rule. Equivalent to keep-first over the full corpus (an exact
-   * copy is a jaccard-1.0 near-dup of its representative) but immune
-   * to the quadratic in-bucket pair blowup that mass-duplicated
-   * documents cause — the dominant skew in real crawled corpora.
-   *
-   * `repPairs` receives the representatives as (doc_id, text) and
-   * returns verified duplicate pairs (id_a < id_b).
-   */
-  private def keepFirstLayered(
-      docs: DataFrame, idCol: String, textCol: String)(
-      repPairs: DataFrame => DataFrame): DataFrame = {
-    // NULL text → '' so null-text docs dedup against each other instead
-    // of silently vanishing (NULL never equi-joins back to its rep)
-    val keyed = docs.select(col(idCol).as("doc_id"),
-        coalesce(col(textCol), lit("")).as("text"))
-      .withColumn("__tkey", md5(col("text").cast("binary")))
-    val reps = keyed.groupBy("__tkey")
-      .agg(min("doc_id").as("rep_id"), first("text").as("text"))
-    val dead = repPairs(reps.select(col("rep_id").as("doc_id"), col("text")))
-      .groupBy(col("id_b").as("dead_rep"))
-      .agg(count(lit(1)).as("__n_near"))
-    keyed
-      .join(reps.select("__tkey", "rep_id"), Seq("__tkey"))
-      .join(dead, col("rep_id") === col("dead_rep"), "left")
-      .select(col("doc_id"),
-        // duplicate SOURCES with smaller id: the exact representative
-        // (if this is a copy) plus near-dup representatives
-        (when(col("doc_id") =!= col("rep_id"), 1L).otherwise(0L) +
-          coalesce(col("__n_near"), lit(0L))).as("n_dups_smaller"),
-        (col("doc_id") === col("rep_id") && col("__n_near").isNull).as("keep"))
-  }
-
-  /** Keep-table for MinHash near-dup dedup at a Jaccard threshold:
-   * (doc_id, n_dups_smaller, keep) — layered (exact collapse first). */
-  def minhashKeep(
-      docs: DataFrame, idCol: String, textCol: String,
-      threshold: Double = 0.8, shingleWords: Int = 3,
-      numPerm: Int = 64, bands: Int = 16): DataFrame =
-    keepFirstLayered(docs, idCol, textCol) { reps =>
-      minhashCandidates(reps, "doc_id", "text", shingleWords, numPerm, bands)
-        .filter(col("jaccard") >= threshold)
-    }
-
-  // --- Incremental (cross-batch) MinHash dedup ----------------------------
-
-  /** Text-free dedup state for incremental corpus assembly: one row
-   * per document EVER SEEN — survivors AND casualties, because the
-   * one-hop keep-first rule kills a later doc on a match with ANY
-   * smaller-id doc, dead or alive — holding only the shingle-hash
-   * set (the text never needs to be carried between increments).
-   * Union each increment's state onto the previous one. */
-  def minhashState(docs: DataFrame, idCol: String, textCol: String,
-      shingleWords: Int = 3): DataFrame =
-    spread(docs).select(col(idCol).as("doc_id"),
-      wordShingleHashes(coalesce(col(textCol), lit("")), shingleWords).as("sh"))
-
-  /** Band-explode a (doc_id, sh) state frame: (band_idx, band_hash,
-   * doc_id) rows — the LSH join key stream, ids only. */
-  private def bandExplode(state: DataFrame, numPerm: Int, bands: Int): DataFrame = {
-    val r = numPerm / bands
-    // shingle-less docs band with nobody (see minhashCandidates)
-    state.filter(size(col("sh")) > 0)
+    shingled.filter(size(col("sh")) > 0)
       .select(col("doc_id"), minhashSig(col("sh"), numPerm).as("sig"))
       .select(col("doc_id"),
         posexplode(transform(sequence(lit(0), lit(bands - 1)),
@@ -192,71 +116,141 @@ object Dedup {
       .withColumnsRenamed(Map("pos" -> "band_idx", "col" -> "band_hash"))
   }
 
+  /** Join the payload back onto deduped pairs for the verify (step 3):
+   * `payload` holds (`id`, `value`); adds `<value>_a` and `<value>_b`. */
+  private[graft] def withPayload(pairs: DataFrame, payload: DataFrame,
+      id: String, value: String): DataFrame =
+    pairs
+      .join(payload.select(col(id).as("id_a"), col(value).as(s"${value}_a")), Seq("id_a"))
+      .join(payload.select(col(id).as("id_b"), col(value).as(s"${value}_b")), Seq("id_b"))
+
+  /** Layered keep-first (step 4). `kills` receives the representatives
+   * as (doc_id, text, text_md5) and returns one `dead_rep` row per
+   * verified smaller-id duplicate of a representative. Returns
+   * (doc_id, `nCol`, keep): `nCol` counts the duplicate sources with a
+   * smaller id — the exact representative, if this doc is a copy, plus
+   * its representative's kills. NULL text counts as '', so NULL-text
+   * docs dedup against each other instead of silently vanishing (NULL
+   * never equi-joins back to its representative). */
+  private def keepFirst(docs: DataFrame, idCol: String, textCol: String, nCol: String)(
+      kills: DataFrame => DataFrame): DataFrame = {
+    val keyed = docs.select(col(idCol).as("doc_id"),
+        coalesce(col(textCol), lit("")).as("text"))
+      .withColumn("__tkey", md5(col("text").cast("binary")))
+    val reps = keyed.groupBy("__tkey")
+      .agg(min("doc_id").as("rep_id"), first("text").as("text"))
+    val dead = kills(reps.select(col("rep_id").as("doc_id"), col("text"),
+        col("__tkey").as("text_md5")))
+      .groupBy("dead_rep").agg(count(lit(1)).as("__n_kill"))
+    keyed
+      .join(reps.select("__tkey", "rep_id"), Seq("__tkey"))
+      .join(dead, col("rep_id") === col("dead_rep"), "left")
+      .select(col("doc_id"),
+        (when(col("doc_id") =!= col("rep_id"), 1L).otherwise(0L) +
+          coalesce(col("__n_kill"), lit(0L))).as(nCol),
+        (col("doc_id") === col("rep_id") && col("__n_kill").isNull).as("keep"))
+  }
+
+  // --- MinHash + LSH ------------------------------------------------------
+
+  /** MinHash+LSH near-dup candidates: bands self-joined, verified by
+   * the n-gram Jaccard of the shingle-hash sets. Returns distinct
+   * (id_a < id_b, jaccard). */
+  def minhashCandidates(
+      docs: DataFrame, idCol: String, textCol: String,
+      shingleWords: Int = 3, numPerm: Int = 64, bands: Int = 16): DataFrame = {
+    val sh = minhashState(docs, idCol, textCol, shingleWords)
+    withPayload(selfPairs(bandExplode(sh, numPerm, bands), "doc_id",
+        Seq("band_idx", "band_hash")), sh, "doc_id", "sh")
+      .select(col("id_a"), col("id_b"),
+        hashJaccard(col("sh_a"), col("sh_b")).as("jaccard"))
+  }
+
+  /** Keep-table for MinHash near-dup dedup at a Jaccard threshold:
+   * (doc_id, n_dups_smaller, keep). */
+  def minhashKeep(
+      docs: DataFrame, idCol: String, textCol: String,
+      threshold: Double = 0.8, shingleWords: Int = 3,
+      numPerm: Int = 64, bands: Int = 16): DataFrame =
+    keepFirst(docs, idCol, textCol, "n_dups_smaller") { reps =>
+      minhashCandidates(reps, "doc_id", "text", shingleWords, numPerm, bands)
+        .filter(col("jaccard") >= threshold)
+        .select(col("id_b").as("dead_rep"))
+    }
+
+  // --- Incremental (cross-batch) MinHash dedup ----------------------------
+
+  /** Text-free dedup state for incremental corpus assembly: one row
+   * per document EVER SEEN — survivors AND casualties, because the
+   * one-hop keep-first rule kills a later doc on a match with ANY
+   * smaller-id doc, dead or alive — holding the shingle-hash set `sh`
+   * and the exact-text key `text_md5` (NULL text counts as ''), never
+   * the text. Union each increment's state onto the previous one. The
+   * (doc_id, sh) columns are also the shingling of
+   * [[minhashCandidates]] and [[containmentPairs]]. */
+  def minhashState(docs: DataFrame, idCol: String, textCol: String,
+      shingleWords: Int = 3): DataFrame = {
+    val text = coalesce(col(textCol), lit(""))
+    spread(docs).select(col(idCol).as("doc_id"),
+      wordShingleHashes(text, shingleWords).as("sh"),
+      md5(text.cast("binary")).as("text_md5"))
+  }
+
   /**
    * Dedup a NEW batch against an existing corpus WITHOUT rescanning
    * it — the daily-increment shape of corpus assembly at 100 TB: the
-   * existing corpus is represented only by its [[minhashState]]
-   * (text-free shingle sets), the new batch is deduped within itself
-   * (keep-first, layered exact-collapse) AND against the state via
-   * the same banded LSH + exact-Jaccard verify.
+   * existing corpus is represented only by its [[minhashState]], and
+   * the new batch is deduped within itself AND against the state.
+   * Cross-generation candidates share a band or the exact-text key (a
+   * shingle-less doc never bands, yet [[minhashKeep]] kills its exact
+   * copies), and a candidate kills when its texts are equal or its
+   * Jaccard reaches the threshold. Only SMALLER-id state partners
+   * kill, so state and batch ids may interleave (an id-10 state doc
+   * must not kill an id-5 newcomer; under keep-first the newcomer wins
+   * that pair).
    *
-   * The result is EXACTLY the keep-table full-batch [[minhashKeep]]
-   * would assign the new docs if run over state ∪ batch — the
-   * equivalence `q_dedup_incremental` re-proves on every run. Cross-
-   * generation kills are filtered to smaller-id state partners, so
-   * this holds even when state and batch ids interleave (an id-10
-   * state doc must not kill an id-5 newcomer; under keep-first the
-   * newcomer wins that pair). What an increment can never do is
-   * revisit the STATE side's own keep decisions — retiring an old doc
-   * in favor of a smaller-id newcomer is a rebuild, by construction.
-   * Returns (doc_id, n_dups_smaller, keep) for the new batch.
+   * The `keep` column is EXACTLY what [[minhashKeep]] over state ∪
+   * batch assigns the new docs — the equivalence `q_dedup_incremental`
+   * re-proves on every run. `n_dups_smaller` counts each killing state
+   * doc, where the full run counts exact-collapsed representatives, so
+   * the counts can differ when the state holds exact copies. What an
+   * increment can never do is revisit the STATE side's own keep
+   * decisions — retiring an old doc in favor of a smaller-id newcomer
+   * is a rebuild, by construction. Returns (doc_id, n_dups_smaller,
+   * keep) for the new batch.
    */
   def minhashKeepIncremental(
       state: DataFrame, newDocs: DataFrame, idCol: String, textCol: String,
       threshold: Double = 0.8, shingleWords: Int = 3,
       numPerm: Int = 64, bands: Int = 16): DataFrame = {
-    require(numPerm % bands == 0, "bands must divide numPerm")
-    val keyed = newDocs.select(col(idCol).as("doc_id"),
-        coalesce(col(textCol), lit("")).as("text"))
-      .withColumn("__tkey", md5(col("text").cast("binary")))
-    val reps = keyed.groupBy("__tkey")
-      .agg(min("doc_id").as("rep_id"), first("text").as("text"))
-    val repSh = reps.select(col("rep_id").as("doc_id"),
-      wordShingleHashes(col("text"), shingleWords).as("sh"))
-
-    val nBand = bandExplode(repSh, numPerm, bands)
-    // cross-generation candidates: ids-only shuffle, sets join back
-    // per pair; only SMALLER-id state partners kill (keep-first), so
-    // id interleaving between generations cannot misdrop a newcomer
-    val crossCand = nBand.join(
-        bandExplode(state, numPerm, bands)
-          .withColumnsRenamed(Map("doc_id" -> "old_id")),
-        Seq("band_idx", "band_hash"))
-      .filter(col("old_id") < col("doc_id"))
-      .select(col("doc_id"), col("old_id")).distinct()
-    val crossKills = crossCand
-      .join(repSh.select(col("doc_id"), col("sh").as("sh_new")), Seq("doc_id"))
-      .join(state.select(col("doc_id").as("old_id"), col("sh").as("sh_old")), Seq("old_id"))
-      .filter(hashJaccard(col("sh_new"), col("sh_old")) >= threshold)
-      .groupBy(col("doc_id").as("dead_rep")).agg(count(lit(1)).as("n_cross"))
-    // within-batch keep-first over the representatives
-    val withinKills = minhashCandidates(
-        reps.select(col("rep_id").as("doc_id"), col("text")),
-        "doc_id", "text", shingleWords, numPerm, bands)
-      .filter(col("jaccard") >= threshold)
-      .groupBy(col("id_b").as("dead_rep")).agg(count(lit(1)).as("n_within"))
-    keyed
-      .join(reps.select("__tkey", "rep_id"), Seq("__tkey"))
-      .join(crossKills.select(col("dead_rep").as("xr"), col("n_cross")),
-        col("rep_id") === col("xr"), "left")
-      .join(withinKills.select(col("dead_rep").as("wr"), col("n_within")),
-        col("rep_id") === col("wr"), "left")
-      .select(col("doc_id"),
-        (when(col("doc_id") =!= col("rep_id"), 1L).otherwise(0L) +
-          coalesce(col("n_cross"), lit(0L)) +
-          coalesce(col("n_within"), lit(0L))).as("n_dups_smaller"),
-        (col("doc_id") === col("rep_id") &&
-          col("n_cross").isNull && col("n_within").isNull).as("keep"))
+    require(state.columns.contains("text_md5"),
+      "minhashKeepIncremental: the state has no text_md5 column, so exact copies of its " +
+        "shingle-less docs would survive — rebuild it with minhashState")
+    keepFirst(newDocs, idCol, textCol, "n_dups_smaller") { reps =>
+      val repSh = reps.select(col("doc_id"),
+        wordShingleHashes(col("text"), shingleWords).as("sh"), col("text_md5"))
+      val cand = bandExplode(repSh, numPerm, bands)
+        .join(bandExplode(state, numPerm, bands)
+          .withColumnsRenamed(Map("doc_id" -> "old_id")), Seq("band_idx", "band_hash"))
+        .select(col("doc_id"), col("old_id"))
+        .unionAll(repSh.join(state.select(col("doc_id").as("old_id"), col("text_md5")),
+            Seq("text_md5"))
+          .select(col("doc_id"), col("old_id")))
+        .filter(col("old_id") < col("doc_id"))
+        .distinct()
+      val crossKills = cand
+        .join(repSh.select(col("doc_id"), col("sh").as("sh_new"),
+          col("text_md5").as("md5_new")), Seq("doc_id"))
+        .join(state.select(col("doc_id").as("old_id"), col("sh").as("sh_old"),
+          col("text_md5").as("md5_old")), Seq("old_id"))
+        .filter(col("md5_new") === col("md5_old") ||
+          hashJaccard(col("sh_new"), col("sh_old")) >= threshold)
+        .select(col("doc_id").as("dead_rep"))
+      val withinKills = minhashCandidates(reps, "doc_id", "text", shingleWords, numPerm, bands)
+        .filter(col("jaccard") >= threshold)
+        .select(col("id_b").as("dead_rep"))
+      withinKills.unionAll(crossKills)
+    }
   }
 
   // --- SimHash ------------------------------------------------------------
@@ -298,12 +292,11 @@ object Dedup {
       .groupBy("id_a", "id_b").agg(first("hamming").as("hamming"))
   }
 
-  /** Keep-table for SimHash dedup: (doc_id, n_dups_smaller, keep) —
-   * layered (exact collapse first). */
+  /** Keep-table for SimHash dedup: (doc_id, n_dups_smaller, keep). */
   def simhashKeep(docs: DataFrame, idCol: String, textCol: String,
       maxHamming: Int = 3): DataFrame =
-    keepFirstLayered(docs, idCol, textCol) { reps =>
-      simhashPairs(reps, "doc_id", "text", maxHamming)
+    keepFirst(docs, idCol, textCol, "n_dups_smaller") { reps =>
+      simhashPairs(reps, "doc_id", "text", maxHamming).select(col("id_b").as("dead_rep"))
     }
 
   // --- Containment (asymmetric near-dup: near-subset documents) -----------
@@ -325,8 +318,7 @@ object Dedup {
    * quadratic in the bucket) and are pruned — the documented recall
    * trade, same df-bound pattern as the inverted index.
    *
-   * Shuffle shape: (anchor, id) rows only — |shingles|/rate per doc,
-   * never the text or the sets; sets join back per DEDUPED candidate.
+   * The key shuffle carries |shingles|/rate (anchor, id) rows per doc.
    * Output: ordered pairs (id_a contained in id_b) with the exact
    * containment and both set sizes.
    */
@@ -335,10 +327,7 @@ object Dedup {
       threshold: Double = 0.9, shingleWords: Int = 3,
       anchorRate: Int = 8, maxAnchorDf: Long = 1000L): DataFrame = {
     require(anchorRate >= 1, s"anchorRate must be >= 1, got $anchorRate")
-    val base = spread(docs).select(col(idCol).as("doc_id"),
-      coalesce(col(textCol), lit("")).as("text"))
-    val sh = base.select(col("doc_id"),
-      wordShingleHashes(col("text"), shingleWords).as("sh"))
+    val sh = minhashState(docs, idCol, textCol, shingleWords)
     // explode-then-filter stays codegen'd (Generate + codegen'd pmod);
     // a higher-order filter over the array would run interpreted
     val anchors = sh
@@ -347,26 +336,21 @@ object Dedup {
     val rare = anchors.groupBy("anchor")
       .agg(count(lit(1)).as("df")).filter(col("df") <= maxAnchorDf)
       .select("anchor")
-    val pruned = anchors.join(rare, Seq("anchor"))
-    val cand = pruned.as("a").join(pruned.as("b"), Seq("anchor"))
-      .filter(col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("id_x"), col("b.doc_id").as("id_y"))
-      .distinct() // dedup across anchors BEFORE the heavier set join
-    val verified = cand
-      .join(sh.select(col("doc_id").as("id_x"), col("sh").as("sh_x")), Seq("id_x"))
-      .join(sh.select(col("doc_id").as("id_y"), col("sh").as("sh_y")), Seq("id_y"))
-      .select(col("id_x"), col("id_y"),
-        graft.functions.expressions.hashContainment(col("sh_x"), col("sh_y")).as("c_xy"),
-        graft.functions.expressions.hashContainment(col("sh_y"), col("sh_x")).as("c_yx"),
-        size(col("sh_x")).cast("long").as("sz_x"), size(col("sh_y")).cast("long").as("sz_y"))
+    val verified = withPayload(
+        selfPairs(anchors.join(rare, Seq("anchor")), "doc_id", Seq("anchor")),
+        sh, "doc_id", "sh")
+      .select(col("id_a"), col("id_b"),
+        graft.functions.expressions.hashContainment(col("sh_a"), col("sh_b")).as("c_ab"),
+        graft.functions.expressions.hashContainment(col("sh_b"), col("sh_a")).as("c_ba"),
+        size(col("sh_a")).cast("long").as("sz_a"), size(col("sh_b")).cast("long").as("sz_b"))
     // containment is asymmetric: each unordered candidate can emit up
     // to two ordered (contained, container) rows
-    verified.filter(col("c_xy") >= threshold)
-      .select(col("id_x").as("id_a"), col("id_y").as("id_b"),
-        col("c_xy").as("containment"), col("sz_x").as("sz_a"), col("sz_y").as("sz_b"))
-      .unionAll(verified.filter(col("c_yx") >= threshold)
-        .select(col("id_y").as("id_a"), col("id_x").as("id_b"),
-          col("c_yx").as("containment"), col("sz_y").as("sz_a"), col("sz_x").as("sz_b")))
+    verified.filter(col("c_ab") >= threshold)
+      .select(col("id_a"), col("id_b"), col("c_ab").as("containment"),
+        col("sz_a"), col("sz_b"))
+      .unionAll(verified.filter(col("c_ba") >= threshold)
+        .select(col("id_b").as("id_a"), col("id_a").as("id_b"),
+          col("c_ba").as("containment"), col("sz_b").as("sz_a"), col("sz_a").as("sz_b")))
   }
 
   /**
@@ -376,36 +360,21 @@ object Dedup {
    * smaller id. The (size desc, id asc) order is total and strict, so
    * the kill relation is acyclic and every containment chain's maximal
    * document survives — "keep the superset", the containment analog of
-   * keep-first. Layered like [[minhashKeep]]: exact copies collapse to
-   * their min-id representative first (one hash aggregate), immune to
-   * mass-duplication bucket skew. Returns (doc_id, n_containers, keep).
+   * keep-first. An exact copy's container is its representative
+   * (containment 1.0, equal size, smaller id). Returns (doc_id,
+   * n_containers, keep).
    */
   def containmentKeep(
       docs: DataFrame, idCol: String, textCol: String,
       threshold: Double = 0.9, shingleWords: Int = 3,
-      anchorRate: Int = 8, maxAnchorDf: Long = 1000L): DataFrame = {
-    val keyed = docs.select(col(idCol).as("doc_id"),
-        coalesce(col(textCol), lit("")).as("text"))
-      .withColumn("__tkey", md5(col("text").cast("binary")))
-    val reps = keyed.groupBy("__tkey")
-      .agg(min("doc_id").as("rep_id"), first("text").as("text"))
-    val pairs = containmentPairs(
-      reps.select(col("rep_id").as("doc_id"), col("text")),
-      "doc_id", "text", threshold, shingleWords, anchorRate, maxAnchorDf)
-    val killed = pairs
-      .filter(col("sz_b") > col("sz_a") ||
-        (col("sz_b") === col("sz_a") && col("id_b") < col("id_a")))
-      .groupBy(col("id_a").as("dead_rep")).agg(count(lit(1)).as("__n_cont"))
-    keyed
-      .join(reps.select("__tkey", "rep_id"), Seq("__tkey"))
-      .join(killed, col("rep_id") === col("dead_rep"), "left")
-      .select(col("doc_id"),
-        // an exact copy's container is its representative (containment
-        // 1.0, equal size, smaller id) plus the rep's own containers
-        (when(col("doc_id") =!= col("rep_id"), 1L).otherwise(0L) +
-          coalesce(col("__n_cont"), lit(0L))).as("n_containers"),
-        (col("doc_id") === col("rep_id") && col("__n_cont").isNull).as("keep"))
-  }
+      anchorRate: Int = 8, maxAnchorDf: Long = 1000L): DataFrame =
+    keepFirst(docs, idCol, textCol, "n_containers") { reps =>
+      containmentPairs(reps, "doc_id", "text", threshold, shingleWords,
+          anchorRate, maxAnchorDf)
+        .filter(col("sz_b") > col("sz_a") ||
+          (col("sz_b") === col("sz_a") && col("id_b") < col("id_a")))
+        .select(col("id_a").as("dead_rep"))
+    }
 
   // --- n-gram Jaccard (direct pair verify) --------------------------------
 
@@ -455,20 +424,12 @@ object Dedup {
       threshold: Double = 0.95,
       numPlanes: Int = 16, bandBits: Int = 4): DataFrame = {
     val base = spread(vecs).select(col(idCol).as("vec_id"), col(vecCol).as("v"))
-    // band join carries ids only; vectors join back per deduped pair
     val banded = base
       .select(col("vec_id"),
         posexplode(signatureBands(
           hyperplaneSignature(col("v"), dim, numPlanes), numPlanes, bandBits)))
       .withColumnsRenamed(Map("pos" -> "band_idx", "col" -> "band_val"))
-    val pairs = banded.as("a")
-      .join(banded.as("b"), Seq("band_idx", "band_val"))
-      .filter(col("a.vec_id") < col("b.vec_id"))
-      .select(col("a.vec_id").as("id_a"), col("b.vec_id").as("id_b"))
-      .distinct()
-    pairs
-      .join(base.select(col("vec_id").as("id_a"), col("v").as("v_a")), Seq("id_a"))
-      .join(base.select(col("vec_id").as("id_b"), col("v").as("v_b")), Seq("id_b"))
+    withPayload(selfPairs(banded, "vec_id", Seq("band_idx", "band_val")), base, "vec_id", "v")
       .select(col("id_a"), col("id_b"), cosine(col("v_a"), col("v_b")).as("cos"))
       .filter(col("cos") >= threshold)
   }

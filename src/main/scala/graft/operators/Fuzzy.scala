@@ -52,12 +52,8 @@ object Fuzzy {
     val grams = names.select(col("name"),
       explode(when(length(col("name")) < minLen,
         concat(bigrams, array(lit(" short")))).otherwise(bigrams)).as("g"))
-    val cand = grams.as("a")
-      .join(grams.as("b"),
-        col("a.g") === col("b.g") && col("a.name") < col("b.name"))
-      .select(col("a.name").as("name_a"), col("b.name").as("name_b"))
-      .distinct()
-    cand
+    graft.dedup.Dedup.selfPairs(grams, "name", Seq("g"))
+      .select(col("id_a").as("name_a"), col("id_b").as("name_b"))
       .withColumn("dist", levenshtein(col("name_a"), col("name_b")).cast("long"))
       .filter(col("dist") <= maxDist)
   }

@@ -121,34 +121,9 @@ object Linkage {
     val base = graft.dedup.Dedup.spread(records)
       .filter(col(compareCol).isNotNull)
       .select(col(idCol).cast("long").as("id"), col(compareCol).as("s"))
-    val names = base.select(col("s")).distinct()
-    // r19: keys are 64-bit HASHES of the deletion variants (guide
-    // §2.3 — shuffle metadata, not payloads): the equi-join needs only
-    // key equality and the levenshtein verify below kills any
-    // hash-collision candidate, so the sorted/shuffled key column is
-    // 8 bytes instead of a ~len-char substring, with an identical
-    // final pair set. r20 note: a positions-aware variant (emit one
-    // key per deletion SET with its gap mask, prune incompatible gap
-    // sets in the join) was built, measured, and REVERTED — the
-    // per-set enumeration stops deduplicating equal-run deletions, and
-    // on run-heavy compare strings ("Customer#000000001": a digit run
-    // of length r turns 1 deduped two-deletion key into C(r,2) rows)
-    // the key multiplicity grows quadratically per matched pair,
-    // which cost far more than the filter saved (A/B: del2
-    // 9463 ms vs 7177 ms old — plans/r20, OPTIMIZATION_r20.md).
-    val keys = names
-      .select(col("s"), explode(graft.functions.expressions
-        .deletionNeighborhoodHashed(col("s"), maxDist)).as("k"))
-      .hint("shuffle_merge")
     // distinct name pairs at distance 1..maxDist (equal names never
     // meet here — the neighborhoods are keyed per DISTINCT string)
-    val namePairs = keys.as("a").join(keys.as("b"),
-        col("a.k") === col("b.k") && col("a.s") < col("b.s"))
-      .select(col("a.s").as("s1"), col("b.s").as("s2"))
-      .distinct() // a pair can share several keys
-      .withColumn("dist",
-        levenshtein(col("s1"), col("s2"), maxDist).cast("long"))
-      .filter(col("dist") >= 1L) // thresholded: -1 marks beyond maxDist
+    val namePairs = nearNames(base.select(col("s")).distinct(), maxDist)
     // equal-string record pairs: dist 0
     val within = base.as("x").join(base.as("y"),
         col("x.s") === col("y.s") && col("x.id") < col("y.id"))
@@ -161,6 +136,38 @@ object Linkage {
       .select(least(col("id_x"), col("id_y")).as("id_a"),
         greatest(col("id_x"), col("id_y")).as("id_b"), col("dist"))
     within.unionByName(cross)
+  }
+
+  /** Distinct compare-string pairs (s1 < s2, dist) at edit distance
+   * 1..maxDist among `names`, one row per distinct string `s`: every
+   * string's deletion-neighborhood keys self-join
+   * ([[graft.dedup.Dedup.selfPairs]]) and the thresholded levenshtein
+   * verifies (it returns -1 beyond maxDist).
+   *
+   * The keys are 64-bit HASHES of the deletion variants (r19, guide
+   * §2.3 — shuffle metadata, not payloads): the equi-join needs only
+   * key equality and the levenshtein verify kills any hash-collision
+   * candidate, so the sorted/shuffled key column is 8 bytes instead of
+   * a ~len-char substring, with an identical final pair set. r20 note:
+   * a positions-aware variant (emit one key per deletion SET with its
+   * gap mask, prune incompatible gap sets in the join) was built,
+   * measured, and REVERTED — the per-set enumeration stops
+   * deduplicating equal-run deletions, and on run-heavy compare
+   * strings ("Customer#000000001": a digit run of length r turns 1
+   * deduped two-deletion key into C(r,2) rows) the key multiplicity
+   * grows quadratically per matched pair, which cost far more than the
+   * filter saved (A/B: del2 9463 ms vs 7177 ms old — plans/r20,
+   * OPTIMIZATION_r20.md). The key self-join is pinned to sort-merge
+   * ([[linkByDeletion1]]). */
+  private def nearNames(names: DataFrame, maxDist: Int): DataFrame = {
+    val keys = names
+      .select(col("s"), explode(graft.functions.expressions
+        .deletionNeighborhoodHashed(col("s"), maxDist)).as("k"))
+      .hint("shuffle_merge")
+    graft.dedup.Dedup.selfPairs(keys, "s", Seq("k"))
+      .select(col("id_a").as("s1"), col("id_b").as("s2"))
+      .withColumn("dist", levenshtein(col("s1"), col("s2"), maxDist).cast("long"))
+      .filter(col("dist") >= 1L)
   }
 
   /** Entity-resolution CLUSTERS (r19, the composition SCALE_SF10.md
@@ -197,18 +204,7 @@ object Linkage {
     val star = base.join(reps, "s")
       .filter(col("id") =!= col("rep"))
       .select(col("id").as("id_a"), col("rep").as("id_b"))
-    // hashed keys: same identical-result argument as linkByDeletionK
-    // (the between(1, maxDist) verify below kills collision pairs)
-    val keys = reps
-      .select(col("s"), explode(graft.functions.expressions
-        .deletionNeighborhoodHashed(col("s"), maxDist)).as("k"))
-      .hint("shuffle_merge")
-    val namePairs = keys.as("a").join(keys.as("b"),
-        col("a.k") === col("b.k") && col("a.s") < col("b.s"))
-      .select(col("a.s").as("s1"), col("b.s").as("s2"))
-      .distinct()
-      .filter(levenshtein(col("s1"), col("s2"), maxDist)
-        .between(1, maxDist))
+    val namePairs = nearNames(reps.select(col("s")), maxDist)
     val nameEdges = namePairs
       .join(reps.select(col("s").as("s1"), col("rep").as("id_a")), "s1")
       .join(reps.select(col("s").as("s2"), col("rep").as("id_b")), "s2")

@@ -1,5 +1,6 @@
 package graft.pipelines
 
+import graft.dedup.Dedup
 import graft.functions.TextFunctions
 import graft.functions.expressions.{hashJaccard, wordNgrams, wordShingleHashes}
 import org.apache.spark.sql.DataFrame
@@ -119,7 +120,7 @@ object CorpusAssembly {
    * least one word shingle (an EQUI join on the shingle hash — any
    * pair at Jaccard ≥ threshold > 0 shares a shingle, so blocking
    * loses nothing), verified by exact hash-set Jaccard per deduped
-   * candidate. Ids-only shuffle; sets join back per candidate.
+   * candidate — the [[graft.dedup.Dedup]] pair shape.
    *
    * This variant is COMPLETE (no LSH miss probability), which is what
    * lets the `q_corpus_pipeline` oracle replay it in string space.
@@ -132,16 +133,11 @@ object CorpusAssembly {
     val base = docs.select(col(cfg.idCol).as("__nd_id"),
       wordShingleHashes(coalesce(col(cfg.textCol), lit("")), cfg.shingleWords).as("__sh"))
     val anchors = base.select(col("__nd_id"), explode(col("__sh")).as("__anchor"))
-    val cand = anchors.as("a").join(anchors.as("b"), Seq("__anchor"))
-      .filter(col("b.__nd_id") < col("a.__nd_id"))
-      .select(col("a.__nd_id").as("__id_a"), col("b.__nd_id").as("__id_b"))
-      .distinct() // dedup across shared shingles BEFORE the set verify
-    val dead = cand
-      .join(base.select(col("__nd_id").as("__id_a"), col("__sh").as("__sh_a")), Seq("__id_a"))
-      .join(base.select(col("__nd_id").as("__id_b"), col("__sh").as("__sh_b")), Seq("__id_b"))
+    val dead = Dedup.withPayload(Dedup.selfPairs(anchors, "__nd_id", Seq("__anchor")),
+        base, "__nd_id", "__sh")
       .filter(hashJaccard(col("__sh_a"), col("__sh_b")) >= cfg.jaccardThreshold)
-      .select(col("__id_a")).distinct()
-    docs.join(dead, col(cfg.idCol) === col("__id_a"), "left_anti")
+      .select(col("id_b").as("__nd_dead")).distinct()
+    docs.join(dead, col(cfg.idCol) === col("__nd_dead"), "left_anti")
   }
 
   /** Stage 3, production plug — MinHash+LSH near-dedup (C2): banded
@@ -153,8 +149,7 @@ object CorpusAssembly {
    * hedged by the standing `q_dedup_minhash_sound` gate. */
   def nearDedupMinhash(docs: DataFrame, cfg: Config = Config()): DataFrame =
     docs.join(
-      graft.dedup.Dedup
-        .minhashKeep(docs, cfg.idCol, cfg.textCol, cfg.jaccardThreshold, cfg.shingleWords)
+      Dedup.minhashKeep(docs, cfg.idCol, cfg.textCol, cfg.jaccardThreshold, cfg.shingleWords)
         .filter(col("keep")).select(col("doc_id").as("__nd_keep")),
       col(cfg.idCol) === col("__nd_keep"), "left_semi")
 

@@ -219,15 +219,7 @@ object TableSink {
    * delete for an absent key is a no-op, so replaying an
    * already-applied batch is idempotent. One op per key per batch
    * (checked — a key that is both updated and deleted in one batch is
-   * producer nondeterminism, refused loudly). With
-   * `checkUniqueKeys = false` that refusal is waived and intra-batch
-   * U+D on one key resolves deterministically: THE DELETE WINS (the
-   * U is dropped before the merge). Without that resolution the anti
-   * join would remove the row and the U re-insert it — the delete
-   * silently LOST, a data-loss mode, not mere nondeterminism (r13
-   * ADVICE). U+U on one key under the waived check remains
-   * nondeterministic (both rows land); keep the check on unless the
-   * producer guarantees per-key uniqueness.
+   * producer nondeterminism, refused loudly).
    *
    * Scale shape is identical to `upsert`: one anti join of the current
    * table against ALL delta keys (updates and deletes alike — a small
@@ -240,51 +232,33 @@ object TableSink {
       delta: DataFrame,
       keyCols: Seq[String],
       opCol: String = "_op",
-      format: String = "parquet",
-      checkUniqueKeys: Boolean = true): Unit = {
+      format: String = "parquet"): Unit = {
     require(keyCols.nonEmpty, "applyCdc needs at least one key column")
     require(delta.columns.contains(opCol), s"applyCdc: delta lacks op column $opCol")
     require(!keyCols.contains(opCol), s"applyCdc: op column $opCol cannot be a key")
-    import org.apache.spark.sql.functions.{coalesce, col, count, lit, sum, when}
-    // The op-domain check is UNCONDITIONAL (not gated by
-    // checkUniqueKeys): a row whose op is neither U nor D — a NULL op
-    // included — would otherwise be dropped by the U/D split below
-    // while its key still feeds the anti join, silently DELETING the
-    // current row: data loss, not a performance knob. `isin` is NULL
-    // for a NULL op, so the predicate flags only a TRUE membership as
-    // good.
-    //
+    import org.apache.spark.sql.functions.{col, count, lit, sum, when}
     // Both fail-loud guards run in ONE aggregate action: the shuffled
     // bytes are (key, n, badop) per distinct key, map-side combined,
     // and when both violations exist the op-domain error wins via the
     // badop-first ordering over the — normally empty — violating
-    // groups.
-    val goodOp = col(opCol).isin("U", "D")
-    val badOpFlag = sum(when(goodOp, 0).otherwise(1))
-    if (checkUniqueKeys) {
-      val viol = delta.groupBy(keyCols.map(delta(_)): _*)
-        .agg(count(lit(1)).as("__n"), badOpFlag.as("__badop"))
-        .filter(col("__n") > 1 || col("__badop") > 0)
-        .orderBy(col("__badop").desc)
-        .limit(1).collect()
-      viol.headOption.foreach { r =>
-        require(r.getLong(r.fieldIndex("__badop")) == 0,
-          s"applyCdc: $opCol values must be 'U' or 'D'")
-        throw new IllegalArgumentException(
-          s"requirement failed: applyCdc: delta has duplicate keys on ${keyCols.mkString(",")}")
-      }
-    } else {
-      val badOp = delta.filter(!coalesce(goodOp, lit(false))).limit(1).count()
-      require(badOp == 0, s"applyCdc: $opCol values must be 'U' or 'D'")
+    // groups. A row whose op is neither U nor D — a NULL op included —
+    // would otherwise be dropped by the U/D split below while its key
+    // still feeds the anti join, silently DELETING the current row.
+    // `isin` is NULL for a NULL op, so the flag counts only a TRUE
+    // membership as good.
+    val badOpFlag = sum(when(col(opCol).isin("U", "D"), 0).otherwise(1))
+    val viol = delta.groupBy(keyCols.map(delta(_)): _*)
+      .agg(count(lit(1)).as("__n"), badOpFlag.as("__badop"))
+      .filter(col("__n") > 1 || col("__badop") > 0)
+      .orderBy(col("__badop").desc)
+      .limit(1).collect()
+    viol.headOption.foreach { r =>
+      require(r.getLong(r.fieldIndex("__badop")) == 0,
+        s"applyCdc: $opCol values must be 'U' or 'D'")
+      throw new IllegalArgumentException(
+        s"requirement failed: applyCdc: delta has duplicate keys on ${keyCols.mkString(",")}")
     }
-    val ups0 = delta.filter(col(opCol) === "U").drop(opCol)
-    // D wins over a same-key U within one batch (class doc): only
-    // reachable when the unique-keys check is waived, and the anti
-    // join runs delta-vs-delta — broadcast-sized, never the table
-    val ups = if (checkUniqueKeys) ups0
-    else ups0.join(
-      delta.filter(col(opCol) === "D").select(keyCols.map(col): _*).distinct(),
-      keyCols, "left_anti")
+    val ups = delta.filter(col(opCol) === "U").drop(opCol)
     openTable(spark, path, format, "applyCdc", "apply per partition directory instead") match {
       case None =>
         // First batch bootstraps the table from its upserts; a delete-only

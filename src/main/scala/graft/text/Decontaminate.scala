@@ -28,21 +28,27 @@ object Decontaminate {
    */
   def markContaminated(train: DataFrame, bench: DataFrame,
       idCol: String, textCol: String, n: Int): DataFrame = {
-    def grams(df: DataFrame, out: String) = df.select(
-      col(idCol).as(out),
-      explode(graft.functions.expressions.wordNgrams(col(textCol), n)).as("__g"))
-      .select(col(out), xxhash64(col("__g")).as("__gh"))
-    val benchGrams = broadcast(grams(bench, "__bench_id").select("__gh").distinct())
-    val hits = grams(train, "__id")
-      .join(benchGrams, Seq("__gh"), "left_semi")
-      .groupBy("__id")
-      .agg(count_distinct(col("__gh")).as("n_hit_grams"))
+    val benchGrams = broadcast(grams(bench, idCol, textCol, n).select("__gh").distinct())
+    hitReport(train, idCol,
+      grams(train, idCol, textCol, n).join(benchGrams, Seq("__gh"), "left_semi"))
+  }
+
+  /** (__id, __gh): the xxhash64 of every word `n`-gram of each doc. */
+  private def grams(df: DataFrame, idCol: String, textCol: String, n: Int): DataFrame =
+    df.select(col(idCol).as("__id"),
+        explode(graft.functions.expressions.wordNgrams(col(textCol), n)).as("__g"))
+      .select(col("__id"), xxhash64(col("__g")).as("__gh"))
+
+  /** The contamination report over `hits` (__id, __gh): (id,
+   * n_hit_grams, contaminated) for every `train` row, counting
+   * DISTINCT hit grams. */
+  private def hitReport(train: DataFrame, idCol: String, hits: DataFrame): DataFrame =
     train.select(col(idCol))
-      .join(hits, col(idCol) === col("__id"), "left")
+      .join(hits.groupBy("__id").agg(count_distinct(col("__gh")).as("n_hit_grams")),
+        col(idCol) === col("__id"), "left")
       .select(col(idCol),
         coalesce(col("n_hit_grams"), lit(0L)).as("n_hit_grams"))
       .withColumn("contaminated", col("n_hit_grams") > 0)
-  }
 
   /**
    * SEMANTIC contamination (C54): flag training vectors whose
@@ -85,21 +91,6 @@ object Decontaminate {
   }
 
   /**
-   * [[markContaminated]] for the MANY-benchmark regime, where the
-   * combined gram set no longer broadcasts (dozens of eval suites ×
-   * millions of grams): a Bloom filter over the benchmark gram hashes
-   * (MBs regardless of gram count, built map-side partial —
-   * [[graft.operators.BloomJoin.buildFilter]]) prunes the corpus gram
-   * stream AT THE SCAN, and the exact confirmation is a SHUFFLE
-   * left-semi join (shuffle_hash-hinted: this path exists precisely
-   * because the bench side is too big to broadcast) that only ever
-   * sees the pruned slice — true hits plus ~fpp of the non-matching
-   * grams — instead of every gram of a 100 TB corpus. Bloom false
-   * positives die in the exact join, so the output is row-identical
-   * to [[markContaminated]] (the q_decontaminate_bloom row shares its
-   * oracle).
-   */
-  /**
    * Span-level decontamination: instead of DROPPING a contaminated
    * document ([[markContaminated]] flags it whole), EXCISE exactly the
    * tokens covered by any benchmark-overlapping n-gram and keep the
@@ -130,28 +121,31 @@ object Decontaminate {
     SpanExcision.excise(src, covered).withColumnRenamed("__id", idCol)
   }
 
+  /**
+   * [[markContaminated]] for the MANY-benchmark regime, where the
+   * combined gram set no longer broadcasts (dozens of eval suites ×
+   * millions of grams): a Bloom filter over the benchmark gram hashes
+   * (MBs regardless of gram count, built map-side partial —
+   * [[graft.operators.BloomJoin.buildFilter]]) prunes the corpus gram
+   * stream AT THE SCAN, and the exact confirmation is a SHUFFLE
+   * left-semi join (shuffle_hash-hinted: this path exists precisely
+   * because the bench side is too big to broadcast) that only ever
+   * sees the pruned slice — true hits plus ~fpp of the non-matching
+   * grams — instead of every gram of a 100 TB corpus. Bloom false
+   * positives die in the exact join, so the output is row-identical
+   * to [[markContaminated]] (the q_decontaminate_bloom row shares its
+   * oracle).
+   */
   def markContaminatedBig(train: DataFrame, bench: DataFrame,
       idCol: String, textCol: String, n: Int,
       expectedGrams: Long = 1L << 20,
       numBits: Long = 8L * 1024 * 1024): DataFrame = {
-    def grams(df: DataFrame, out: String) = df.select(
-      col(out),
-      explode(graft.functions.expressions.wordNgrams(col(textCol), n)).as("__g"))
-      .select(col(out), xxhash64(col("__g")).as("__gh"))
-    val benchGrams = grams(bench.select(col(idCol).as("__bench_id"), col(textCol)),
-      "__bench_id").select("__gh").distinct()
+    val benchGrams = grams(bench, idCol, textCol, n).select("__gh").distinct()
     val bf = graft.operators.BloomJoin.buildFilter(
       benchGrams, "__gh", expectedGrams, numBits)
-    val candidates = grams(train.select(col(idCol).as("__id"), col(textCol)), "__id")
+    val candidates = grams(train, idCol, textCol, n)
       .filter(graft.operators.BloomJoin.mightContain(bf, col("__gh")))
-    val hits = candidates
-      .join(benchGrams.hint("shuffle_hash"), Seq("__gh"), "left_semi")
-      .groupBy("__id")
-      .agg(count_distinct(col("__gh")).as("n_hit_grams"))
-    train.select(col(idCol))
-      .join(hits, col(idCol) === col("__id"), "left")
-      .select(col(idCol),
-        coalesce(col("n_hit_grams"), lit(0L)).as("n_hit_grams"))
-      .withColumn("contaminated", col("n_hit_grams") > 0)
+    hitReport(train, idCol,
+      candidates.join(benchGrams.hint("shuffle_hash"), Seq("__gh"), "left_semi"))
   }
 }

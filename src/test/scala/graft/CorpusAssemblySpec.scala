@@ -45,30 +45,7 @@ class CorpusAssemblySpec extends AnyFunSuite {
     if (u == 0) 0.0 else (a & b).size.toDouble / u
   }
 
-  private val docs = Seq(
-    // near-dup ASCII pair: only the smaller id survives
-    (1L, "the quick brown fox jumps over the lazy dog again and again", "en", "web"),
-    (2L, "the quick brown fox jumps over the lazy dog again and again today", "en", "web"),
-    // punctuation-only docs — identical, but with NO shingles neither
-    // may kill the other (the pre-r13 whole-text collapse would have)
-    (3L, "!!! ??? ... ---", "en", "web"),
-    (4L, "!!! ??? ... ---", "en", "web"),
-    // empty / NULL / sub-shingle-length docs: kept, no dup relation
-    (5L, "", "en", "web"),
-    (6L, null, "en", "web"),
-    (7L, "two words", "en", "web"),
-    (8L, "two words", "en", "web"),
-    // non-ASCII near-dups: CJK runs are word chars, so these DO
-    // shingle (via ASCII separators) and dedup like any other text
-    (9L, "中文甲 中文乙 中文丙 中文丁 中文戊", "zh", "cjk"),
-    (10L, "中文甲 中文乙 中文丙 中文丁 中文戊", "zh", "cjk"),
-    // accent-distinct pair: é vs è makes the first shingle differ —
-    // both survive at 0.8 (jaccard 1/3). A separator-treating
-    // tokenizer would have collapsed both to identical 'a b c' sets
-    (11L, "é alpha beta gamma", "fr", "web"),
-    (12L, "è alpha beta gamma", "fr", "web"),
-    // ASCII-case-folded copy of 1: dies against 1 (kernel lowers A-Z)
-    (13L, "THE QUICK BROWN FOX JUMPS OVER THE LAZY DOG AGAIN AND AGAIN", "en", "web"))
+  private val docs = CorpusAssemblySpec.edgeDocs
 
   test("nearDedupExact matches the string-space oracle replay on edge-case docs") {
     val df = docs.toDF("doc_id", "text", "lang", "source")
@@ -173,4 +150,32 @@ class CorpusAssemblySpec extends AnyFunSuite {
       .select("doc_id").as[Long].collect().toSet
     assert(kept == Set(1L, 2L, 3L), s"canon keep: $kept")
   }
+}
+
+object CorpusAssemblySpec {
+  /** The `q_corpus_pipeline` edge corpus: (doc_id, text, lang, source). */
+  val edgeDocs: Seq[(Long, String, String, String)] = Seq(
+    // near-dup ASCII pair: only the smaller id survives
+    (1L, "the quick brown fox jumps over the lazy dog again and again", "en", "web"),
+    (2L, "the quick brown fox jumps over the lazy dog again and again today", "en", "web"),
+    // punctuation-only docs — identical, but with NO shingles neither
+    // may kill the other (the pre-r13 whole-text collapse would have)
+    (3L, "!!! ??? ... ---", "en", "web"),
+    (4L, "!!! ??? ... ---", "en", "web"),
+    // empty / NULL / sub-shingle-length docs: kept, no dup relation
+    (5L, "", "en", "web"),
+    (6L, null, "en", "web"),
+    (7L, "two words", "en", "web"),
+    (8L, "two words", "en", "web"),
+    // non-ASCII near-dups: CJK runs are word chars, so these DO
+    // shingle (via ASCII separators) and dedup like any other text
+    (9L, "中文甲 中文乙 中文丙 中文丁 中文戊", "zh", "cjk"),
+    (10L, "中文甲 中文乙 中文丙 中文丁 中文戊", "zh", "cjk"),
+    // accent-distinct pair: é vs è makes the first shingle differ —
+    // both survive at 0.8 (jaccard 1/3). A separator-treating
+    // tokenizer would have collapsed both to identical 'a b c' sets
+    (11L, "é alpha beta gamma", "fr", "web"),
+    (12L, "è alpha beta gamma", "fr", "web"),
+    // ASCII-case-folded copy of 1: dies against 1 (kernel lowers A-Z)
+    (13L, "THE QUICK BROWN FOX JUMPS OVER THE LAZY DOG AGAIN AND AGAIN", "en", "web"))
 }

@@ -133,6 +133,95 @@ class DedupSpec extends AnyFunSuite {
     assert(keep == full, s"incremental $keep != full-batch $full")
   }
 
+  // --- the q_corpus_pipeline edge corpus through the rest of the family ---
+  // punctuation-only, empty, NULL, sub-shingle, CJK, accent-distinct and
+  // case-folded docs (CorpusAssemblySpec); the outputs below are pinned
+
+  private lazy val edge = CorpusAssemblySpec.edgeDocs
+    .map { case (id, text, _, _) => (id, text) }.toDF("doc_id", "text")
+
+  private def keepTable(df: org.apache.spark.sql.DataFrame): Map[Long, (Long, Boolean)] =
+    df.collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getBoolean(2)))).toMap
+
+  test("incremental equals full on the edge corpus: exact copies of shingle-less state docs die") {
+    // the state holds 1,3,5,7,9,11; 4, 6 (NULL) and 8 are exact copies of
+    // shingle-less state docs 3, 5 and 7, which never band
+    val state = Dedup.minhashState(edge.filter(col("doc_id").isin(1L, 3L, 5L, 7L, 9L, 11L)),
+      "doc_id", "text")
+    val batch = edge.filter(!col("doc_id").isin(1L, 3L, 5L, 7L, 9L, 11L))
+    val inc = Dedup.minhashKeepIncremental(state, batch, "doc_id", "text")
+      .collect().map(r => r.getLong(0) -> r.getBoolean(2)).toMap
+    val full = Dedup.minhashKeep(edge, "doc_id", "text")
+      .filter(!col("doc_id").isin(1L, 3L, 5L, 7L, 9L, 11L))
+      .collect().map(r => r.getLong(0) -> r.getBoolean(2)).toMap
+    assert(inc == full, s"incremental $inc != full-batch $full")
+    assert(!inc(4L) && !inc(6L) && !inc(8L), s"shingle-less exact copies must die: $inc")
+    assert(inc(12L), s"the accent-distinct doc survives: $inc")
+  }
+
+  test("incremental refuses a state without its text key") {
+    val keyless = Dedup.minhashState(edge, "doc_id", "text").drop("text_md5")
+    val e = intercept[IllegalArgumentException] {
+      Dedup.minhashKeepIncremental(keyless, edge, "doc_id", "text")
+    }
+    assert(e.getMessage.contains("text_md5"), e.getMessage)
+  }
+
+  test("edge corpus: simhashKeep keep-table") {
+    // every token-less doc (3, 4, 5, 6) has SimHash 0: 5 dies against 3
+    assert(keepTable(Dedup.simhashKeep(edge, "doc_id", "text")) == Map(
+      1L -> ((0L, true)), 2L -> ((0L, true)), 3L -> ((0L, true)), 4L -> ((1L, false)),
+      5L -> ((1L, false)), 6L -> ((2L, false)), 7L -> ((0L, true)), 8L -> ((1L, false)),
+      9L -> ((0L, true)), 10L -> ((1L, false)), 11L -> ((0L, true)), 12L -> ((1L, false)),
+      13L -> ((1L, false))))
+  }
+
+  test("edge corpus: containmentKeep keep-table") {
+    // 1 sits inside 2 (2 adds a word), so the superset 2 survives
+    assert(keepTable(Dedup.containmentKeep(edge, "doc_id", "text")) == Map(
+      1L -> ((1L, false)), 2L -> ((0L, true)), 3L -> ((0L, true)), 4L -> ((1L, false)),
+      5L -> ((0L, true)), 6L -> ((1L, false)), 7L -> ((0L, true)), 8L -> ((1L, false)),
+      9L -> ((0L, true)), 10L -> ((1L, false)), 11L -> ((0L, true)), 12L -> ((0L, true)),
+      13L -> ((2L, false))))
+  }
+
+  test("edge corpus: linkByDeletionK(1) pairs") {
+    // NULL links to nothing; '' has no partner; the case-folded copy is
+    // far beyond one edit
+    val got = graft.operators.Linkage.linkByDeletionK(edge, "doc_id", "text", 1)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    assert(got == Set((3L, 4L, 0L), (7L, 8L, 0L), (9L, 10L, 0L), (11L, 12L, 1L)), s"got $got")
+  }
+
+  test("edge corpus: fuzzyNamePairs") {
+    val got = graft.operators.Fuzzy.fuzzyNamePairs(edge, "text")
+      .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSet
+    assert(got == Set(("è alpha beta gamma", "é alpha beta gamma", 1L)), s"got $got")
+  }
+
+  test("the near-dup family self-joins candidate pairs only in Dedup.selfPairs") {
+    import java.nio.file.{Files, Path, Paths}
+    import scala.jdk.CollectionConverters._
+    val root = Paths.get("src/main/scala/graft")
+    def scalaFiles(d: Path): List[Path] = {
+      val walk = Files.walk(d)
+      try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      finally walk.close()
+    }
+    val files = Seq("dedup", "pipelines").map(root.resolve).flatMap(scalaFiles) ++
+      Seq("operators/Linkage.scala", "operators/Fuzzy.scala").map(root.resolve)
+    assert(files.forall(Files.exists(_)), s"sources not found under ${root.toAbsolutePath}")
+    val selfJoin = """\.as\("a"\)\s*\.join\(""".r
+    val joins = files.flatMap { f =>
+      val src = new String(Files.readAllBytes(f), java.nio.charset.StandardCharsets.UTF_8)
+      selfJoin.findAllMatchIn(src).map { m =>
+        val enclosing = "def \\w+".r.findAllIn(src.substring(0, m.start)).toSeq.lastOption
+        s"${f.getFileName}:${enclosing.getOrElse("?")}"
+      }.toList
+    }
+    assert(joins == Seq("Dedup.scala:def selfPairs"), joins.mkString(", "))
+  }
+
   test("ngramJaccard: 1.0 for identical, high for near-dup, 0 for disjoint") {
     val j = docs.as("a").join(docs.as("b"), $"a.doc_id" < $"b.doc_id")
       .select($"a.doc_id".as("ia"), $"b.doc_id".as("ib"),

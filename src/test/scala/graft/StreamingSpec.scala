@@ -1349,6 +1349,37 @@ class StreamingSpec extends AnyFunSuite {
     assert(dComp == Seq("b4", "compact_3"), s"got $dComp")
   }
 
+  test("nearDupGateSink kills exact copies of shingle-less docs; refuses a keyless state") {
+    import spark.implicits._
+    implicit val sql = spark.sqlContext
+    val root = s"${Scratch.root(spark)}/ndkey_${System.nanoTime()}"
+    val in = MemoryStream[(Long, String)]
+    val q = EventStream.nearDupGateSink(
+        in.toDF().toDF("doc_id", "text"), "doc_id", "text",
+        s"$root/accept", s"$root/state", s"$root/verdict")
+      .option("checkpointLocation", s"$root/ckpt").start()
+    try {
+      // under 3 words: no shingles, so only the text key can match them
+      in.addData(Seq((1L, "two words"), (2L, "")))
+      q.processAllAvailable()
+      in.addData(Seq((3L, "two words"), (4L, null.asInstanceOf[String])))
+      q.processAllAvailable()
+      val verdicts = spark.read.parquet(s"$root/verdict")
+        .select("doc_id", "keep").as[(Long, Boolean)].collect().toMap
+      assert(verdicts == Map(1L -> true, 2L -> true, 3L -> false, 4L -> false),
+        s"got $verdicts")
+      // a state dir as written before the text key was kept
+      Seq((1L, Array(1L), 1L)).toDF("doc_id", "sh", "batch")
+        .write.mode("overwrite").parquet(s"$root/state/b1")
+      in.addData(Seq((5L, "two words")))
+      val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+        q.processAllAvailable()
+      }
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(t => String.valueOf(t.getMessage).contains("no text_md5 column")), e.toString)
+    } finally q.stop()
+  }
+
   test("mediaRouteSink routes payloads by container format; garbage quarantines (D32)") {
     import spark.implicits._
     implicit val sql = spark.sqlContext

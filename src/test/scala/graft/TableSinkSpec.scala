@@ -282,13 +282,6 @@ class TableSinkSpec extends AnyFunSuite {
       TableSink.applyCdc(spark, dir,
         Seq((5L, "e", 1, "UPSERT")).toDF("k", "v", "extra", "_op"), Seq("k"))
     }
-    // the op-domain check must hold even with uniqueness checking off —
-    // an unknown op would otherwise vanish from the U/D split silently
-    intercept[IllegalArgumentException] {
-      TableSink.applyCdc(spark, dir,
-        Seq((5L, "e", 1, "X")).toDF("k", "v", "extra", "_op"), Seq("k"),
-        checkUniqueKeys = false)
-    }
     intercept[IllegalArgumentException] {
       TableSink.applyCdc(spark, dir,
         Seq((5L, "e", 1, "U"), (5L, "e", 1, "D")).toDF("k", "v", "extra", "_op"),
@@ -327,34 +320,12 @@ class TableSinkSpec extends AnyFunSuite {
     TableSink.writeTruncate(Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("k", "v"), dir)
     val delta = Seq[(Long, String, String)]((2L, "B", null), (4L, "d", "U"))
       .toDF("k", "v", "_op")
-    Seq(true, false).foreach { checkUniqueKeys =>
-      val e = intercept[IllegalArgumentException] {
-        TableSink.applyCdc(spark, dir, delta, Seq("k"), checkUniqueKeys = checkUniqueKeys)
-      }
-      assert(e.getMessage.contains("must be 'U' or 'D'"), e.getMessage)
-      val back = spark.read.parquet(dir).as[(Long, String)].collect().sortBy(_._1)
-      assert(back.toSeq == Seq((1L, "a"), (2L, "b"), (3L, "c")), s"$checkUniqueKeys")
+    val e = intercept[IllegalArgumentException] {
+      TableSink.applyCdc(spark, dir, delta, Seq("k"))
     }
-  }
-
-  test("applyCdc with the uniqueness check waived: intra-batch U+D, D wins") {
-    val dir = java.nio.file.Files.createTempDirectory("sink").toString + "/cdcd"
-    TableSink.applyCdc(spark, dir,
-      Seq((1L, "a", "U"), (2L, "b", "U")).toDF("k", "v", "_op"), Seq("k"))
-    // same batch updates AND deletes key 1: the delete must win —
-    // without the resolution the anti join removes the row and the U
-    // re-inserts it, silently losing the delete
-    TableSink.applyCdc(spark, dir,
-      Seq((1L, "A2", "U"), (1L, "a", "D"), (3L, "c", "U")).toDF("k", "v", "_op"),
-      Seq("k"), checkUniqueKeys = false)
+    assert(e.getMessage.contains("must be 'U' or 'D'"), e.getMessage)
     val back = spark.read.parquet(dir).as[(Long, String)].collect().sortBy(_._1)
-    assert(back.toSeq == Seq((2L, "b"), (3L, "c")))
-    // D-wins also guards the bootstrap batch
-    val dir2 = java.nio.file.Files.createTempDirectory("sink").toString + "/cdcd2"
-    TableSink.applyCdc(spark, dir2,
-      Seq((1L, "a", "U"), (1L, "a", "D"), (2L, "b", "U")).toDF("k", "v", "_op"),
-      Seq("k"), checkUniqueKeys = false)
-    assert(spark.read.parquet(dir2).as[(Long, String)].collect().toSeq == Seq((2L, "b")))
+    assert(back.toSeq == Seq((1L, "a"), (2L, "b"), (3L, "c")))
   }
 
   // --- compactPartitioned ---------------------------------------------------
