@@ -2093,8 +2093,8 @@ object CorpusQueries {
    * join on shared shingles; any ≥0.8-Jaccard pair shares one), which
    * is what makes the whole composition exactly SQL-replayable. The
    * banded MinHash plug (C2) slots in for boilerplate-heavy corpora;
-   * its keep contract is identical and its recall is hedged by the
-   * standing q_dedup_minhash_sound gate. */
+   * after the exact stage its keep contract is the same, and its
+   * recall is hedged by the standing q_dedup_minhash_sound gate. */
   private def qCorpusPipeline(s: SparkSession, dir: String): DataFrame =
     graft.pipelines.CorpusAssembly.assemble(
         t(s, dir, "documents").withColumn("url", expr("""

@@ -143,10 +143,14 @@ object CorpusAssembly {
   /** Stage 3, production plug — MinHash+LSH near-dedup (C2): banded
    * candidate generation bounds the pair count on boilerplate-heavy
    * corpora where [[nearDedupExact]]'s complete blocking goes
-   * quadratic. Same keep contract (drop iff a smaller-id ≥ threshold
-   * partner is found), so the two variants slot into [[assemble]]
-   * interchangeably; LSH recall is the probabilistic difference,
-   * hedged by the standing `q_dedup_minhash_sound` gate. */
+   * quadratic. Both drop a doc iff a smaller-id ≥ threshold partner
+   * is found, but they differ on docs too short to shingle: this one
+   * also drops an exact copy of a smaller-id short doc
+   * ([[Dedup.minhashKeep]]'s exact layer), while [[nearDedupExact]]
+   * keeps every short doc. In [[assembleStaged]] the [[exactDedup]]
+   * stage runs first and removes those copies, so there the two slot
+   * in interchangeably; LSH recall is then the probabilistic
+   * difference, hedged by the standing `q_dedup_minhash_sound` gate. */
   def nearDedupMinhash(docs: DataFrame, cfg: Config = Config()): DataFrame =
     docs.join(
       Dedup.minhashKeep(docs, cfg.idCol, cfg.textCol, cfg.jaccardThreshold, cfg.shingleWords)

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -37,7 +37,10 @@ private case class LastPayment(okey: Long, tsUs: Long)
 case class Session(user_id: Long, session_start: java.sql.Timestamp,
     session_end: java.sql.Timestamp, n_events: Long, sum_value: Double)
 
-private case class OpenSession(startMs: Long, lastMs: Long, n: Long, sum: Double)
+/** An open gap session: [[EventStream.sessionize]] reads `n` and `sum`,
+ * [[EventStream.patternSessions]] `seq` and `truncated`. */
+private case class OpenSession(startMs: Long, lastMs: Long, n: Long, sum: Double,
+    seq: String, truncated: Boolean)
 
 /** A purchase stamped with the user's latest prior view (D24). */
 case class AsofEnriched(user_id: Long, event_id: Long, ts_us: Long,
@@ -62,9 +65,6 @@ private case class RunningStats(n: Long, sum: Long, sumSq: Long)
 case class PatternSession(user_id: Long, session_start: java.sql.Timestamp,
     session_end: java.sql.Timestamp, seq: String, truncated: Boolean,
     matched: Boolean, n_matches: Long)
-
-private case class OpenPattern(startMs: Long, lastMs: Long, seq: String,
-    truncated: Boolean)
 
 /** One wallet movement for [[EventStream.clampedBalanceStream]]. */
 case class WalletDelta(user_id: Long, event_id: Long,
@@ -99,14 +99,35 @@ private case class FunnelState(vt: Long, ct: Long, pt: Long)
 /**
  * Structured Streaming operators over the event stream. The same
  * transformations run on a batch DataFrame (Spark's unified API), so
- * correctness is oracle-checked in batch (SparkEntry.q_sessionize /
- * q_hourly_events) while StreamingSpec drives them incrementally
- * through MemoryStream to verify watermark/state behavior.
+ * correctness is oracle-checked in batch (StreamingQueries'
+ * q_stream_sessionize, q_hourly_events and the other D queries) while
+ * StreamingSpec drives them incrementally through MemoryStream to
+ * verify watermark/state behavior.
+ *
+ * The eleven stateful operators (heavy hitters, sessions, pattern
+ * sessions, anomaly, clamped balance, rate cap, funnel, as-of,
+ * duplicate payment, reconciliation, concurrency) share one keyed state
+ * machine, `keyedState`. Each gives a state type, a zero state, a step
+ * that folds one key's rows of a call into its state and may emit
+ * rows, and optionally a `close` (the rows a finished group emits) and
+ * a deadline (the event time at which a group is finished). Per key:
+ *  - rows fold in the operator's (ts, id) order, starting from the
+ *    key's held state or the zero;
+ *  - batch input closes every group at end of input: the output is the
+ *    step's rows, then `close`;
+ *  - streaming input keeps the state; a group with a deadline emits
+ *    `close` and drops its state when the watermark passes the deadline;
+ *  - a deadline the watermark has already reached after the fold is
+ *    never registered: if the key held state, the group closes now
+ *    (step rows, then `close`); if it held none, its rows are late and
+ *    the call emits nothing.
+ * So a streaming run whose rows all arrive before their deadlines
+ * emits what the batch call emits on the same rows (StreamingSpec runs
+ * that twin for every operator).
  *
  * Scale: windowed aggregation state is bounded by the watermark
- * (late data beyond it is dropped, state evicted); sessionization
- * state is one OpenSession per active user, evicted by event-time
- * timeout.
+ * (late data beyond it is dropped, state evicted); keyed state with a
+ * deadline is evicted by event-time timeout.
  */
 object EventStream {
 
@@ -271,12 +292,10 @@ object EventStream {
    * SQL count oracle, with the over-capacity regime covered by
    * StreamingSpec's guarantee assertions.
    *
-   * Streaming: state is keyed by window start and emitted once the
-   * watermark passes the window end (event-time timeout), append
-   * mode. Batch: the same operator sees each window exactly once and
-   * emits its summary directly. Scale note: one window = one state
-   * group; [[heavyHittersWeightedStream]] is the throughput lever
-   * when a single window's arrival rate outgrows one task. */
+   * State is keyed by window start; a window is due at its end.
+   * Scale note: one window = one state group;
+   * [[heavyHittersWeightedStream]] is the throughput lever when a
+   * single window's arrival rate outgrows one task. */
   def heavyHittersStream(events: DataFrame, keyCol: String = "event_type",
       tsCol: String = "ts", windowLen: String = "1 hour",
       capacity: Int = 8, watermark: String = "10 minutes"): Dataset[HeavyHitter] = {
@@ -295,7 +314,7 @@ object EventStream {
         unix_micros(col("w.end")).as("wend"), col("item"),
         lit(1L).as("weight"), col("ts"))
       .as[(Long, Long, String, Long, java.sql.Timestamp)]
-    heavyHittersCore(rows, events.isStreaming, capacity)
+    heavyHittersCore(rows, capacity)
   }
 
   /**
@@ -367,7 +386,7 @@ object EventStream {
       // advances exactly as the raw path's would (no-op in batch)
       .withWatermark("ts", watermark)
       .as[(Long, Long, String, Long, java.sql.Timestamp)]
-    heavyHittersCore(rows, events.isStreaming, capacity)
+    heavyHittersCore(rows, capacity)
   }
 
   /** Weighted Misra-Gries add — the (item, weight) generalization
@@ -391,51 +410,68 @@ object EventStream {
       if (w > d) dec.updated(item, w - d) else dec
     }
 
+  /**
+   * The keyed state machine the eleven stateful operators run on, and
+   * the only caller of `flatMapGroupsWithState`. An operator gives its
+   * zero state, its `step` over one key's rows, and optionally a
+   * `close` and a `deadlineMs`; the contract is in the object doc.
+   * Without a deadline there is no timeout and, in streaming, no close.
+   */
+  private def keyedState[K: Encoder, V, S: Encoder, O: Encoder](rows: Dataset[V], zero: S)(
+      key: V => K, order: Option[V => (Long, Long)])(
+      step: (K, S, Iterator[V]) => (S, Seq[O]),
+      close: (K, S) => Seq[O] = (_: K, _: S) => Nil,
+      deadlineMs: Option[S => Long] = None): Dataset[O] = {
+    val streaming = rows.isStreaming
+    def fn(k: K, batch: Iterator[V], state: GroupState[S]): Iterator[O] =
+      if (state.hasTimedOut) {
+        val out = close(k, state.get)
+        state.remove()
+        out.iterator
+      } else {
+        val held = state.getOption
+        val (s, out) = step(k, held.getOrElse(zero),
+          order.fold(batch)(o => batch.toSeq.sortBy(o).iterator))
+        val deadline = deadlineMs.map(_(s))
+        if (!streaming) (out ++ close(k, s)).iterator
+        // Spark drops late rows by the previous batch's watermark, so
+        // rows can reach a group whose deadline the current watermark
+        // has already reached, where no timeout can be registered
+        else if (deadline.exists(_ <= state.getCurrentWatermarkMs())) {
+          state.remove()
+          if (held.isDefined) (out ++ close(k, s)).iterator else Iterator.empty
+        } else {
+          state.update(s)
+          deadline.foreach(d => state.setTimeoutTimestamp(d))
+          out.iterator
+        }
+      }
+    rows.groupByKey(key).flatMapGroupsWithState(OutputMode.Append,
+      if (deadlineMs.isDefined) GroupStateTimeout.EventTimeTimeout
+      else GroupStateTimeout.NoTimeout)(fn)
+  }
+
   private def heavyHittersCore(
       rows: Dataset[(Long, Long, String, Long, java.sql.Timestamp)],
-      streaming: Boolean, capacity: Int): Dataset[HeavyHitter] = {
+      capacity: Int): Dataset[HeavyHitter] = {
     import rows.sparkSession.implicits._
-    def fn(wstart: Long, batch: Iterator[(Long, Long, String, Long, java.sql.Timestamp)],
-        state: GroupState[MgSummary]): Iterator[HeavyHitter] = {
-      def emit(s: MgSummary): Iterator[HeavyHitter] =
-        s.counters.toSeq.sortBy { case (k, v) => (-v, k) }
-          .map { case (k, v) => HeavyHitter(wstart, k, v, s.n) }.iterator
-      if (state.hasTimedOut) {
-        val out = state.getOption.map(emit).getOrElse(Iterator.empty)
-        state.remove()
-        out
-      } else {
-        var s = state.getOption.getOrElse(MgSummary(Map.empty, 0L, 0L))
-        batch.foreach { case (_, wend, item, w, _) =>
-          s = MgSummary(mgAddWeighted(s.counters, item, w, capacity), s.n + w, wend)
-        }
-        if (streaming) {
-          // flatMapGroupsWithState does NOT drop late data for us: a
-          // straggler for an already-finalized window would register a
-          // timeout in the past, which THROWS and kills the query. If
-          // the watermark has passed this window's end, its state was
-          // already emitted and removed by the timeout in an earlier
-          // micro-batch (timeouts fire before the watermark advances
-          // past them), so the only correct move is to drop the rows.
-          if (s.wendUs / 1000L <= state.getCurrentWatermarkMs()) Iterator.empty
-          else {
-            state.update(s)
-            // finalize when the watermark passes the window end
-            state.setTimeoutTimestamp(s.wendUs / 1000L)
-            Iterator.empty
-          }
-        } else emit(s)
-      }
-    }
-
-    rows.groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(fn)
+    // arrival order: the rows carry no id, and below capacity the
+    // summary is the same in any order
+    keyedState(rows, MgSummary(Map.empty, 0L, 0L))(_._1, None)(
+      step = (_, s0, batch) => (batch.foldLeft(s0) { case (s, (_, wend, item, w, _)) =>
+        MgSummary(mgAddWeighted(s.counters, item, w, capacity), s.n + w, wend)
+      }, Nil),
+      close = (wstart, s) => s.counters.toSeq.sortBy { case (k, v) => (-v, k) }
+        .map { case (k, v) => HeavyHitter(wstart, k, v, s.n) },
+      deadlineMs = Some(_.wendUs / 1000L))
   }
 
   /** One epoch of [[appendSink]]: write a batch into its OWN
    * batch-id-keyed directory, overwriting any previous attempt of the
    * SAME epoch. Exposed so a crash replay is directly testable: the
-   * call is idempotent per (path, batchId) by construction. */
+   * call is idempotent per (path, batchId) by construction. Every sink
+   * here that writes a `batch=<id>` directory writes it through this
+   * call, except [[mediaRouteSink]]'s partitioned data write. */
   def appendEpoch(batch: DataFrame, path: String, batchId: Long): Unit =
     batch.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
       .parquet(s"$path/batch=$batchId")
@@ -696,12 +732,8 @@ object EventStream {
           .withColumn("accepted", org.apache.spark.sql.functions.coalesce(
             col("score") >= 0L && col("top2_ppm") <= top2PpmMax,
             org.apache.spark.sql.functions.lit(false)))
-        scored.filter(col("accepted"))
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .parquet(s"$acceptPath/batch=$id")
-        scored.filter(!col("accepted"))
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .parquet(s"$rejectPath/batch=$id")
+        appendEpoch(scored.filter(col("accepted")), acceptPath, id)
+        appendEpoch(scored.filter(!col("accepted")), rejectPath, id)
       }
 
   /** Streaming multimodal ingest router (D32, r17) — C12d's
@@ -746,12 +778,11 @@ object EventStream {
             .write.partitionBy("format")
             .mode(org.apache.spark.sql.SaveMode.Overwrite)
             .parquet(s"$basePath/batch=$id")
-          batch.sparkSession.read.parquet(s"$basePath/batch=$id")
+          appendEpoch(batch.sparkSession.read.parquet(s"$basePath/batch=$id")
             .groupBy("format")
             .agg(org.apache.spark.sql.functions.count(
-              org.apache.spark.sql.functions.lit(1)).as("n"))
-            .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-            .parquet(s"${basePath}_metrics/batch=$id")
+              org.apache.spark.sql.functions.lit(1)).as("n")),
+            s"${basePath}_metrics", id)
         }
       }
 
@@ -853,20 +884,17 @@ object EventStream {
           else s.read.parquet(statePaths: _*).select("doc_id", "sh", "text_md5")
         val verdict = graft.dedup.Dedup.minhashKeepIncremental(
           state, batch.toDF(), idCol, textCol, threshold)
-        verdict.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .parquet(s"$verdictPath/batch=$id")
+        appendEpoch(verdict, verdictPath, id)
         // r19 (guide §1.2): the accept filter reads the verdict JUST
         // WRITTEN above — consuming the unmaterialized `verdict` frame
         // here re-executed the whole incremental-dedup pipeline (state
         // read, LSH bands, verify joins) a second time per batch.
         // Same rows by construction (it is this batch's own output).
-        batch.toDF().join(
+        appendEpoch(batch.toDF().join(
             s.read.parquet(s"$verdictPath/batch=$id")
               .filter(col("keep")).select(col("doc_id").as("__kept")),
             col(idCol) === col("__kept"))
-          .drop("__kept")
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .parquet(s"$acceptPath/batch=$id")
+          .drop("__kept"), acceptPath, id)
         graft.dedup.Dedup.minhashState(batch.toDF(), idCol, textCol)
           .withColumn("batch", lit(id))
           .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
@@ -922,9 +950,9 @@ object EventStream {
       .outputMode("append")
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
         if (!batch.isEmpty)
-          graft.similarity.Ann
-            .ivfTopKIndexed(indexPath, batch.toDF(), idCol, vecCol, dim, k, nProbe)
-            .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
+          appendEpoch(graft.similarity.Ann
+            .ivfTopKIndexed(indexPath, batch.toDF(), idCol, vecCol, dim, k, nProbe),
+            outPath, batchId)
       }
 
   /** Streaming exact dedup: drop repeats of `keyCols` arriving within
@@ -946,66 +974,14 @@ object EventStream {
 
   /** Stateful gap-sessionization: close a user's session when no event
    * arrives within `gapSeconds` (by event time). Emits closed sessions
-   * (append mode); open sessions close via event-time timeout.
-   *
-   * On a BATCH input the trailing session of each user is emitted at
-   * end-of-input instead of waiting for a timeout that batch never
-   * fires: batch has the COMPLETE history, so end-of-input closes it
-   * (the same degeneration argument [[dedupStream]] makes), and the
-   * batch run becomes a full-history twin oracle-checkable against a
-   * lag/cumsum replay (`q_stream_sessionize`). */
+   * (append mode); open sessions close via event-time timeout, and a
+   * batch input closes each user's trailing session at end of input —
+   * the full-history twin `q_stream_sessionize` replays with lag/cumsum. */
   def sessionize(events: Dataset[Event], gapSeconds: Long = 1800): Dataset[Session] = {
     import events.sparkSession.implicits._
-    val gapMs = gapSeconds * 1000L
-    val streaming = events.isStreaming
-
-    def fn(userId: Long, batch: Iterator[Event],
-        state: GroupState[OpenSession]): Iterator[Session] = {
-      val sorted = batch.toSeq.sortBy(e => (e.ts.getTime, e.event_id))
-      val out = scala.collection.mutable.ArrayBuffer.empty[Session]
-      var open = state.getOption
-
-      if (sorted.isEmpty) {
-        if (state.hasTimedOut && open.isDefined) {
-          val s = open.get
-          out += Session(userId, new java.sql.Timestamp(s.startMs),
-            new java.sql.Timestamp(s.lastMs), s.n, s.sum)
-          state.remove()
-        }
-      } else {
-        for (e <- sorted) {
-          val ms = e.ts.getTime
-          open match {
-            case Some(s) if ms - s.lastMs <= gapMs =>
-              // max: a late (within-watermark) event from a later batch
-              // must not move the session end backwards
-              open = Some(OpenSession(math.min(s.startMs, ms), math.max(s.lastMs, ms),
-                s.n + 1, s.sum + e.value))
-            case Some(s) =>
-              out += Session(userId, new java.sql.Timestamp(s.startMs),
-                new java.sql.Timestamp(s.lastMs), s.n, s.sum)
-              open = Some(OpenSession(ms, ms, 1, e.value))
-            case None =>
-              open = Some(OpenSession(ms, ms, 1, e.value))
-          }
-        }
-        val s = open.get
-        if (streaming) {
-          state.update(s)
-          state.setTimeoutTimestamp(s.lastMs + gapMs)
-        } else {
-          // complete history: end-of-input closes the trailing session
-          out += Session(userId, new java.sql.Timestamp(s.startMs),
-            new java.sql.Timestamp(s.lastMs), s.n, s.sum)
-        }
-      }
-      out.iterator
-    }
-
-    events
-      .withWatermark("ts", "1 hour")
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(fn)
+    gapSessions(events, gapSeconds, maxSymbols = 0)((userId, s) =>
+      Session(userId, new java.sql.Timestamp(s.startMs),
+        new java.sql.Timestamp(s.lastMs), s.n, s.sum))
   }
 
   /** Streaming per-session pattern matching (D21) — B97's
@@ -1013,70 +989,57 @@ object EventStream {
    * chronological symbol string and the regex verdict the moment the
    * event-time timeout proves the session over ("alert when a session
    * ends in error-without-recovery", "count funnel completions as
-   * they close"). Session boundary semantics are EXACTLY
-   * [[sessionize]]'s (same gap, same timeout machinery); state per
-   * key = the open session's symbol string, CAPPED at `maxSymbols`
-   * (a runaway session truncates and says so via `truncated` —
-   * bounded state on an unbounded stream, never an OOM; the verdict
-   * then applies to the kept prefix, fail-visible). In batch the
-   * same code replays full histories and closes trailing sessions at
-   * end of input — the unified-API twin the oracle replays with
-   * windowed SQL. */
+   * they close"). Sessions are [[sessionize]]'s (one shared gap
+   * step); state per key = the open session's symbol string, CAPPED
+   * at `maxSymbols` (a runaway session truncates and says so via
+   * `truncated` — bounded state on an unbounded stream, never an OOM;
+   * the verdict then applies to the kept prefix, fail-visible). The
+   * batch twin is replayed with windowed SQL. */
   def patternSessions(events: Dataset[Event], pattern: String,
       gapSeconds: Long = 1800, maxSymbols: Int = 4096): Dataset[PatternSession] = {
     import events.sparkSession.implicits._
     require(maxSymbols > 0, "maxSymbols must be positive")
-    val gapMs = gapSeconds * 1000L
-    val streaming = events.isStreaming
     val rx = pattern.r
-
-    def close(userId: Long, s: OpenPattern): PatternSession = {
-      val ms = rx.findAllMatchIn(s.seq).size.toLong
+    gapSessions(events, gapSeconds, maxSymbols)((userId, s) =>
       PatternSession(userId, new java.sql.Timestamp(s.startMs),
         new java.sql.Timestamp(s.lastMs), s.seq, s.truncated,
-        rx.findFirstIn(s.seq).isDefined, ms)
-    }
-    def extend(s: OpenPattern, ms: Long, sym: String): OpenPattern =
-      if (s.seq.length >= maxSymbols)
-        OpenPattern(s.startMs, math.max(s.lastMs, ms), s.seq, truncated = true)
-      else OpenPattern(math.min(s.startMs, ms), math.max(s.lastMs, ms),
-        s.seq + sym, s.truncated)
+        rx.findFirstIn(s.seq).isDefined, rx.findAllMatchIn(s.seq).size.toLong))
+  }
 
-    def fn(userId: Long, batch: Iterator[Event],
-        state: GroupState[OpenPattern]): Iterator[PatternSession] = {
-      val sorted = batch.toSeq.sortBy(e => (e.ts.getTime, e.event_id))
-      val out = scala.collection.mutable.ArrayBuffer.empty[PatternSession]
-      var open = state.getOption
-      if (sorted.isEmpty) {
-        if (state.hasTimedOut && open.isDefined) {
-          out += close(userId, open.get)
-          state.remove()
-        }
-      } else {
-        for (e <- sorted) {
-          val ms = e.ts.getTime
-          val sym = e.event_type.take(1)
-          open match {
-            case Some(s) if ms - s.lastMs <= gapMs => open = Some(extend(s, ms, sym))
-            case Some(s) =>
-              out += close(userId, s)
-              open = Some(OpenPattern(ms, ms, sym, truncated = false))
-            case None => open = Some(OpenPattern(ms, ms, sym, truncated = false))
-          }
-        }
-        val s = open.get
-        if (streaming) {
-          state.update(s)
-          state.setTimeoutTimestamp(s.lastMs + gapMs)
-        } else out += close(userId, s)
-      }
-      out.iterator
+  /** The gap-session step [[sessionize]] and [[patternSessions]] share:
+   * an event more than `gapSeconds` after the open session's last event
+   * closes it and starts the next; the session keeps the first
+   * `maxSymbols` event-type initials. A session is due `gapSeconds`
+   * after its last event. */
+  private def gapSessions[O: Encoder](events: Dataset[Event],
+      gapSeconds: Long, maxSymbols: Int)(emit: (Long, OpenSession) => O): Dataset[O] = {
+    import events.sparkSession.implicits._
+    val gapMs = gapSeconds * 1000L
+    // -0.0 is the additive identity: a one-event session's sum is its
+    // value bit for bit
+    val none = OpenSession(Long.MaxValue, Long.MinValue, 0L, -0.0, "", truncated = false)
+    def add(s: OpenSession, e: Event): OpenSession = {
+      val ms = e.ts.getTime
+      val room = s.seq.length < maxSymbols
+      // min/max: a late (within-watermark) event from a later batch
+      // must not move the session's ends inwards
+      OpenSession(math.min(s.startMs, ms), math.max(s.lastMs, ms), s.n + 1,
+        s.sum + e.value, if (room) s.seq + e.event_type.take(1) else s.seq,
+        s.truncated || !room)
     }
-
-    events
-      .withWatermark("ts", "1 hour")
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(fn)
+    keyedState(events.withWatermark("ts", "1 hour"), none)(
+        _.user_id, Some(e => (e.ts.getTime, e.event_id)))(
+      step = (userId, open, batch) => {
+        var s = open
+        val out = Seq.newBuilder[O]
+        batch.foreach { e =>
+          if (s.n > 0 && e.ts.getTime - s.lastMs > gapMs) { out += emit(userId, s); s = none }
+          s = add(s, e)
+        }
+        (s, out.result())
+      },
+      close = (userId, s) => Seq(emit(userId, s)),
+      deadlineMs = Some(_.lastMs + gapMs))
   }
 
   /** D15: streaming per-key anomaly detection — flag each event whose
@@ -1099,15 +1062,12 @@ object EventStream {
    *
    * Scale: state is O(keys)·24 bytes regardless of stream length; the
    * running sums add without rescanning (Σv² overflow fails loudly at
-   * ~3e9 max-value events per key, never wraps). In batch the same
-   * code degenerates to a full-history replay in (ts, event_id) order
-   * — the deterministic twin `q_anomaly` oracle-checks row-for-row
-   * against a DuckDB prefix-window replay. */
+   * ~3e9 max-value events per key, never wraps). The batch twin
+   * `q_anomaly` is oracle-checked row-for-row against a DuckDB
+   * prefix-window replay. */
   def anomalyStream(events: Dataset[Event], minPrior: Long = 10L,
       zThreshold: Long = 3L): Dataset[AnomalyVerdict] = {
     import events.sparkSession.implicits._
-    val streaming = events.isStreaming
-
     def isAnomaly(st: RunningStats, cents: Long): Boolean =
       st.n >= minPrior && {
         val n = BigInt(st.n); val sv = BigInt(st.sum); val q = BigInt(st.sumSq)
@@ -1115,27 +1075,22 @@ object EventStream {
         dev * dev > BigInt(zThreshold * zThreshold) * (n * q - sv * sv)
       }
 
-    def fn(userId: Long, batch: Iterator[Event],
-        state: GroupState[RunningStats]): Iterator[AnomalyVerdict] = {
-      val sorted = batch.toSeq.sortBy(e => (e.ts.getTime, e.event_id))
-      var st = state.getOption.getOrElse(RunningStats(0L, 0L, 0L))
-      val out = scala.collection.mutable.ArrayBuffer.empty[AnomalyVerdict]
-      for (e <- sorted) {
-        val cents = Math.round(e.value * 100.0)
-        out += AnomalyVerdict(userId, e.event_id, cents, st.n,
-          isAnomaly(st, cents))
-        val c2 = cents * cents
-        require(st.sumSq <= Long.MaxValue - c2,
-          s"anomalyStream: sum-of-squares overflow for key $userId — " +
-            "widen the state before trusting another verdict")
-        st = RunningStats(st.n + 1, st.sum + cents, st.sumSq + c2)
-      }
-      if (streaming) state.update(st)
-      out.iterator
-    }
-
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(fn)
+    keyedState(events, RunningStats(0L, 0L, 0L))(
+        _.user_id, Some(e => (e.ts.getTime, e.event_id)))(
+      step = (userId, st0, batch) => {
+        var st = st0
+        val out = batch.map { e =>
+          val cents = Math.round(e.value * 100.0)
+          val verdict = AnomalyVerdict(userId, e.event_id, cents, st.n, isAnomaly(st, cents))
+          val c2 = cents * cents
+          require(st.sumSq <= Long.MaxValue - c2,
+            s"anomalyStream: sum-of-squares overflow for key $userId — " +
+              "widen the state before trusting another verdict")
+          st = RunningStats(st.n + 1, st.sum + cents, st.sumSq + c2)
+          verdict
+        }.toList
+        (st, out)
+      })
   }
 
   /** Streaming clamped balance (D20) — B94's floor-at-zero wallet as
@@ -1150,23 +1105,17 @@ object EventStream {
    * window, no history, the smallest possible stateful operator. */
   def clampedBalanceStream(moves: Dataset[WalletDelta]): Dataset[WalletMove] = {
     import moves.sparkSession.implicits._
-    val streaming = moves.isStreaming
-    def fn(userId: Long, batch: Iterator[WalletDelta],
-        state: GroupState[WalletState]): Iterator[WalletMove] = {
-      val sorted = batch.toSeq.sortBy(m => (m.ts.getTime, m.event_id))
-      var st = state.getOption.getOrElse(WalletState(0L, 0L))
-      val out = scala.collection.mutable.ArrayBuffer.empty[WalletMove]
-      for (m <- sorted) {
-        val raw = st.balance + m.delta_cents
-        val clamped = math.max(0L, raw)
-        st = WalletState(clamped, st.rejected + (clamped - raw))
-        out += WalletMove(userId, m.event_id, st.balance, st.rejected)
-      }
-      if (streaming) state.update(st)
-      out.iterator
-    }
-    moves.groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(fn)
+    keyedState(moves, WalletState(0L, 0L))(_.user_id, Some(m => (m.ts.getTime, m.event_id)))(
+      step = (userId, st0, batch) => {
+        var st = st0
+        val out = batch.map { m =>
+          val raw = st.balance + m.delta_cents
+          val clamped = math.max(0L, raw)
+          st = WalletState(clamped, st.rejected + (clamped - raw))
+          WalletMove(userId, m.event_id, st.balance, st.rejected)
+        }.toList
+        (st, out)
+      })
   }
 
   /**
@@ -1181,40 +1130,30 @@ object EventStream {
    * State is ONE counter per active (key, window) — bytes, not
    * events: the decision needs only the count so far, never the
    * retained events. Windows are derived arithmetically from event
-   * time (no window() explode). In batch the group call sees each
-   * slot's full history sorted by event time, so the verdict set
-   * equals the row_number() ≤ N twin the oracle replays; in streaming
-   * the counter carries across micro-batches and admission is by
-   * ARRIVAL order (the online rate-limiter semantics — an
-   * out-of-order straggler is judged on arrival, which is the only
-   * decision an online limiter can make; StreamingSpec pins the
-   * cross-batch counter continuity).
+   * time (no window() explode). The batch verdicts equal the
+   * row_number() ≤ N twin the oracle replays; in streaming admission
+   * is by ARRIVAL order (an out-of-order straggler is judged on
+   * arrival, the only decision an online limiter can make).
    */
   def rateCapStream(events: Dataset[Event], windowUs: Long,
       maxPerWindow: Int): Dataset[CapVerdict] = {
     import events.sparkSession.implicits._
     require(windowUs > 0 && maxPerWindow > 0,
       s"rateCapStream: need windowUs > 0 and maxPerWindow > 0")
-    val streaming = events.isStreaming
     val in = events.select(col("user_id"), col("event_id"),
         unix_micros(col("ts")).as("ts_us"),
         expr(s"unix_micros(ts) div ${windowUs}L * ${windowUs}L")
           .as("win_start_us"))
       .as[CapInput]
-    def fn(key: (Long, Long), batch: Iterator[CapInput],
-        state: GroupState[CapState]): Iterator[CapVerdict] = {
-      val sorted = batch.toSeq.sortBy(e => (e.ts_us, e.event_id))
-      var n = state.getOption.map(_.count).getOrElse(0L)
-      val out = sorted.map { e =>
-        n += 1
-        CapVerdict(e.user_id, e.event_id, e.win_start_us, n,
-          n <= maxPerWindow)
-      }
-      if (streaming) state.update(CapState(n))
-      out.iterator
-    }
-    in.groupByKey(e => (e.user_id, e.win_start_us))
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(fn)
+    keyedState(in, CapState(0L))(e => (e.user_id, e.win_start_us),
+        Some(e => (e.ts_us, e.event_id)))(
+      step = (_, st, batch) => {
+        val out = batch.zipWithIndex.map { case (e, i) =>
+          val n = st.count + i + 1
+          CapVerdict(e.user_id, e.event_id, e.win_start_us, n, n <= maxPerWindow)
+        }.toList
+        (CapState(st.count + out.size), out)
+      })
   }
 
   /**
@@ -1227,44 +1166,31 @@ object EventStream {
    * State per user is THREE timestamps (first view; first qualifying
    * click; first qualifying purchase) — bytes, never retained events.
    * Each micro-batch emits the user's current (stage, timestamps) row;
-   * the latest row per user is the live funnel position. In batch the
-   * group call sees the full history in event-time order, so the
-   * single emitted row per user equals the first-qualifying-event
-   * formulation the oracle replays. Users with no view yet emit
-   * nothing (a funnel starts at its first stage, not before).
+   * the latest row per user is the live funnel position, and the batch
+   * call's one row per user is the first-qualifying-event formulation
+   * the oracle replays. Users with no view yet emit nothing (a funnel
+   * starts at its first stage, not before).
    */
   def funnelStream(events: Dataset[Event], clickWithinUs: Long,
       purchaseWithinUs: Long): Dataset[FunnelUser] = {
     import events.sparkSession.implicits._
-    val streaming = events.isStreaming
     val in = events.select(col("user_id"), col("event_id"),
         unix_micros(col("ts")).as("ts_us"), col("event_type"))
       .as[(Long, Long, Long, String)]
-    def fn(userId: Long, batch: Iterator[(Long, Long, Long, String)],
-        state: GroupState[FunnelState]): Iterator[FunnelUser] = {
-      val sorted = batch.toSeq.sortBy(e => (e._3, e._2))
-      var st = state.getOption.getOrElse(FunnelState(-1L, -1L, -1L))
-      for ((_, _, ts, tpe) <- sorted) tpe match {
-        case "view" if st.vt < 0 => st = st.copy(vt = ts)
-        case "click" if st.vt >= 0 && st.ct < 0 &&
-            ts > st.vt && ts <= st.vt + clickWithinUs =>
-          st = st.copy(ct = ts)
-        case "purchase" if st.ct >= 0 && st.pt < 0 &&
-            ts > st.ct && ts <= st.ct + purchaseWithinUs =>
-          st = st.copy(pt = ts)
-        case _ => ()
-      }
-      if (streaming) state.update(st)
-      if (st.vt < 0) Iterator.empty
-      else {
+    keyedState(in, FunnelState(-1L, -1L, -1L))(_._1, Some(e => (e._3, e._2)))(
+      step = (userId, st0, batch) => {
+        val st = batch.foldLeft(st0) { case (st, (_, _, ts, tpe)) => tpe match {
+          case "view" if st.vt < 0 => st.copy(vt = ts)
+          case "click" if st.vt >= 0 && st.ct < 0 &&
+              ts > st.vt && ts <= st.vt + clickWithinUs => st.copy(ct = ts)
+          case "purchase" if st.ct >= 0 && st.pt < 0 &&
+              ts > st.ct && ts <= st.ct + purchaseWithinUs => st.copy(pt = ts)
+          case _ => st
+        } }
         val stage = if (st.pt >= 0) 2L else if (st.ct >= 0) 1L else 0L
-        Iterator.single(FunnelUser(userId, stage, Some(st.vt),
-          if (st.ct >= 0) Some(st.ct) else None,
-          if (st.pt >= 0) Some(st.pt) else None))
-      }
-    }
-    in.groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(fn)
+        (st, if (st.vt < 0) Nil else Seq(FunnelUser(userId, stage, Some(st.vt),
+          Some(st.ct).filter(_ >= 0), Some(st.pt).filter(_ >= 0))))
+      })
   }
 
   /** Streaming as-of enrichment (D24): every `purchase` event is
@@ -1277,37 +1203,27 @@ object EventStream {
    * cents (the latest view), never a buffer of events. Prior-ness is
    * the (ts, event_id) total order — a view at the same microsecond
    * with a smaller event_id counts as prior, so batch replay and the
-   * oracle agree on ties. Batch mode (isStreaming = false) sees the
-   * full history per user in event-time order, making the output the
-   * exact batch as-of relation the oracle replays; streaming mode
-   * carries the latest view across micro-batches (StreamingSpec pins
-   * a view in batch 1 enriching a purchase in batch 2, and a
-   * pre-view purchase staying bare). */
+   * oracle agree on ties. */
   def asofEnrichStream(events: Dataset[Event]): Dataset[AsofEnriched] = {
     import events.sparkSession.implicits._
-    val streaming = events.isStreaming
     val in = events.select(col("user_id"), col("event_id"),
         unix_micros(col("ts")).as("ts_us"), col("event_type"),
         round(col("value") * 100, 0).cast("long").as("cents"))
       .as[(Long, Long, Long, String, Long)]
-    def fn(userId: Long, batch: Iterator[(Long, Long, Long, String, Long)],
-        state: GroupState[AsofViewState]): Iterator[AsofEnriched] = {
-      val sorted = batch.toSeq.sortBy(e => (e._3, e._2))
-      var st = state.getOption.getOrElse(AsofViewState(-1L, -1L))
-      val out = Seq.newBuilder[AsofEnriched]
-      for ((_, eid, ts, tpe, cents) <- sorted) tpe match {
-        case "view" => st = AsofViewState(ts, cents)
-        case "purchase" =>
-          out += AsofEnriched(userId, eid, ts,
-            if (st.viewTs >= 0) Some(st.viewTs) else None,
-            if (st.viewTs >= 0) Some(st.viewCents) else None)
-        case _ => ()
-      }
-      if (streaming) state.update(st)
-      out.result().iterator
-    }
-    in.groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(fn)
+    keyedState(in, AsofViewState(-1L, -1L))(_._1, Some(e => (e._3, e._2)))(
+      step = (userId, st0, batch) => {
+        var st = st0
+        val out = Seq.newBuilder[AsofEnriched]
+        for ((_, eid, ts, tpe, cents) <- batch) tpe match {
+          case "view" => st = AsofViewState(ts, cents)
+          case "purchase" =>
+            out += AsofEnriched(userId, eid, ts,
+              if (st.viewTs >= 0) Some(st.viewTs) else None,
+              if (st.viewTs >= 0) Some(st.viewCents) else None)
+          case _ => ()
+        }
+        (st, out.result())
+      })
   }
 
   /** Stream-static enrichment: join each streaming event to a static
@@ -1453,16 +1369,16 @@ object EventStream {
    * event-time timeout EVICTS keys idle past the window (a prior
    * older than the window could never pair again, so eviction is
    * correctness-neutral and state is bounded by the window's active
-   * keys). Batch mode sees each key's full history in (ts, id) order
-   * — exactly the per-key lag relation the oracle replays. Streaming
-   * caveat (documented): an out-of-order arrival pairs against the
-   * latest ALREADY-SEEN payment; the batch twin is the reference. */
+   * keys). The batch call is the per-key lag relation the oracle
+   * replays. Streaming caveats: an out-of-order arrival pairs against
+   * the latest ALREADY-SEEN payment; and payments for a key with no
+   * state whose window the watermark has already passed are late —
+   * dropped, with any alarm between them. */
   def dupPaymentStream(events: DataFrame, custCol: String, keyCol: String,
       centsCol: String, tsCol: String, windowUs: Long,
       watermark: String = "2 hours"): Dataset[DupAlarm] = {
     require(windowUs > 0, "windowUs must be positive")
     import events.sparkSession.implicits._
-    val streaming = events.isStreaming
     val rows = events
       .withWatermark(tsCol, watermark) // no-op in batch
       .select(col(custCol).cast("long").as("cust"),
@@ -1470,34 +1386,21 @@ object EventStream {
         col(centsCol).cast("long").as("cents"),
         unix_micros(col(tsCol)).as("ts_us"), col(tsCol).as("ts"))
       .as[(Long, Long, Long, Long, java.sql.Timestamp)]
-    def fn(key: (Long, Long), batch: Iterator[(Long, Long, Long, Long, java.sql.Timestamp)],
-        state: GroupState[LastPayment]): Iterator[DupAlarm] = {
-      if (state.hasTimedOut) { state.remove(); Iterator.empty }
-      else {
-        val (cust, cents) = key
-        val sorted = batch.toSeq.sortBy(e => (e._4, e._2))
-        var last = state.getOption
+    // the zero is a prior payment at the end of time: it pairs with nothing
+    keyedState(rows, LastPayment(0L, Long.MaxValue))(r => (r._1, r._3),
+        Some(e => (e._4, e._2)))(
+      step = { case ((cust, cents), last0, batch) =>
+        var last = last0
         val out = Seq.newBuilder[DupAlarm]
-        for ((_, okey, _, tsUs, _) <- sorted) {
-          last.foreach { p =>
-            if (tsUs - p.tsUs <= windowUs && tsUs >= p.tsUs)
-              out += DupAlarm(cust, cents, p.okey, okey,
-                (tsUs - p.tsUs) / 86400000000L)
-          }
-          last = Some(LastPayment(okey, tsUs))
+        for ((_, okey, _, tsUs, _) <- batch) {
+          if (tsUs - last.tsUs <= windowUs && tsUs >= last.tsUs)
+            out += DupAlarm(cust, cents, last.okey, okey, (tsUs - last.tsUs) / 86400000000L)
+          last = LastPayment(okey, tsUs)
         }
-        if (streaming) last.foreach { p =>
-          val evictMs = (p.tsUs + windowUs) / 1000L
-          if (evictMs > state.getCurrentWatermarkMs()) {
-            state.update(p)
-            state.setTimeoutTimestamp(evictMs)
-          } else state.remove() // already past the window: nothing can pair
-        }
-        out.result().iterator
-      }
-    }
-    rows.groupByKey(r => (r._1, r._3))
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(fn)
+        (last, out.result())
+      },
+      // evict only: a prior older than the window can never pair again
+      deadlineMs = Some(p => (p.tsUs + windowUs) / 1000L))
   }
 
   /** Streaming order reconciliation (D26) — the online form of the
@@ -1513,14 +1416,15 @@ object EventStream {
    * event time (min ts — deterministic under replay); a headerless
    * order still reports (absence is a finding, None header), a
    * double-headered one withholds abs_diff rather than guessing
-   * (n_headers says why). Post-deadline stragglers drop like
-   * heavyHitters' (their verdict is already out). */
+   * (n_headers says why). A straggler line that reaches the operator
+   * before its order's verdict joins it — the verdict is emitted at
+   * once if the watermark has passed its deadline; one that arrives
+   * after the verdict is dropped. */
   def reconcileStream(events: DataFrame, keyCol: String, kindCol: String,
       centsCol: String, tsCol: String, horizonUs: Long,
       watermark: String = "2 hours"): Dataset[ReconVerdict] = {
     require(horizonUs > 0, "horizonUs must be positive")
     import events.sparkSession.implicits._
-    val streaming = events.isStreaming
     val rows = events
       .withWatermark(tsCol, watermark) // no-op in batch
       .select(col(keyCol).cast("long").as("okey"),
@@ -1533,37 +1437,16 @@ object EventStream {
         if (s.nHeaders > 0) Some(s.headerCents) else None,
         s.lineCents, s.nLines,
         if (s.nHeaders == 1) Some(math.abs(s.headerCents - s.lineCents)) else None)
-    def fn(okey: Long, batch: Iterator[(Long, String, Long, Long, java.sql.Timestamp)],
-        state: GroupState[ReconState]): Iterator[ReconVerdict] = {
-      if (state.hasTimedOut) {
-        val out = state.getOption.map(s => Iterator.single(verdict(okey, s)))
-          .getOrElse(Iterator.empty)
-        state.remove()
-        out
-      } else {
-        var s = state.getOption.getOrElse(ReconState(0L, 0L, 0L, 0L, Long.MaxValue))
-        batch.foreach { case (_, kind, cents, tsUs, _) =>
-          val deadline = math.min(s.deadlineUs, tsUs + horizonUs)
-          s = if (kind == "H")
-            ReconState(s.nHeaders + 1, s.headerCents + cents,
-              s.lineCents, s.nLines, deadline)
-          else
-            ReconState(s.nHeaders, s.headerCents,
-              s.lineCents + cents, s.nLines + 1, deadline)
-        }
-        if (streaming) {
-          if (s.deadlineUs / 1000L <= state.getCurrentWatermarkMs())
-            Iterator.empty // straggler: this order's verdict already shipped
-          else {
-            state.update(s)
-            state.setTimeoutTimestamp(s.deadlineUs / 1000L)
-            Iterator.empty
-          }
-        } else Iterator.single(verdict(okey, s))
-      }
-    }
-    rows.groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(fn)
+    keyedState(rows, ReconState(0L, 0L, 0L, 0L, Long.MaxValue))(_._1, None)(
+      step = (_, s0, batch) => (batch.foldLeft(s0) { case (s, (_, kind, cents, tsUs, _)) =>
+        val deadline = math.min(s.deadlineUs, tsUs + horizonUs)
+        if (kind == "H")
+          ReconState(s.nHeaders + 1, s.headerCents + cents, s.lineCents, s.nLines, deadline)
+        else
+          ReconState(s.nHeaders, s.headerCents, s.lineCents + cents, s.nLines + 1, deadline)
+      }, Nil),
+      close = (okey, s) => Seq(verdict(okey, s)),
+      deadlineMs = Some(_.deadlineUs / 1000L))
   }
 
   /** Live peak-concurrency gauge (D25) — the streaming twin of the
@@ -1587,17 +1470,14 @@ object EventStream {
    * batch sweep would shuffle to that bucket's task anyway); pieces
    * per interval are bounded by `maxSpanBuckets` (an interval longer
    * than that fails loudly at the decompose — never a silent explode).
-   * Late pieces after their bucket finalized are dropped on the
-   * floor like heavyHitters' stragglers (the timeout already fired;
-   * re-registering a past timeout kills the query). Batch mode: the
-   * same code path sweeps each group directly — the unified twin the
-   * oracle replays. */
+   * A late piece that reaches the operator before its bucket closes
+   * joins it — the bucket closes at once if the watermark has passed
+   * its end; a piece for a closed bucket is dropped. */
   def concurrencyStream(events: DataFrame, tsCol: String, lenUs: Long,
       bucketUs: Long, watermark: String = "2 hours",
       maxSpanBuckets: Int = 4): Dataset[BucketPeak] = {
     require(lenUs > 0 && bucketUs > 0, "lenUs and bucketUs must be positive")
     import events.sparkSession.implicits._
-    val streaming = events.isStreaming
     val pieces = events
       .withWatermark(tsCol, watermark) // no-op in batch
       .select(unix_micros(col(tsCol)).as("s"), col(tsCol).as("ts"))
@@ -1625,37 +1505,17 @@ object EventStream {
       for ((_, d) <- sorted) { run += d; if (run > peak) peak = run }
       BucketPeak(bucket, peak, buf.ts.size / 2)
     }
-    def fn(bucket: Long, batch: Iterator[(Long, Long, Long, Long, java.sql.Timestamp)],
-        state: GroupState[ConcBuf]): Iterator[BucketPeak] = {
-      if (state.hasTimedOut) {
-        val out = state.getOption.map(b => Iterator.single(sweep(bucket, b)))
-          .getOrElse(Iterator.empty)
-        state.remove()
-        out
-      } else {
-        val prev = state.getOption.getOrElse(ConcBuf(Nil, Nil, 0L))
+    keyedState(pieces, ConcBuf(Nil, Nil, 0L))(_._1, None)(
+      step = (_, prev, batch) => {
         // bulk concat once per micro-batch — a per-row :+ on immutable
         // Seqs is quadratic in the bucket's traffic
-        val (addT, addD, addEnd) = {
-          val tb = Array.newBuilder[Long]
-          val db = Array.newBuilder[Long]
-          var bend = prev.bucketEndUs
-          batch.foreach { case (_, t, d, be, _) => tb += t; db += d; bend = be }
-          (tb.result(), db.result(), bend)
-        }
-        val buf = ConcBuf(prev.ts ++ addT, prev.ds ++ addD, addEnd)
-        if (streaming) {
-          if (buf.bucketEndUs / 1000L <= state.getCurrentWatermarkMs())
-            Iterator.empty // straggler for an already-finalized bucket
-          else {
-            state.update(buf)
-            state.setTimeoutTimestamp(buf.bucketEndUs / 1000L)
-            Iterator.empty
-          }
-        } else Iterator.single(sweep(bucket, buf))
-      }
-    }
-    pieces.groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(fn)
+        val tb = Array.newBuilder[Long]
+        val db = Array.newBuilder[Long]
+        var bend = prev.bucketEndUs
+        batch.foreach { case (_, t, d, be, _) => tb += t; db += d; bend = be }
+        (ConcBuf(prev.ts ++ tb.result(), prev.ds ++ db.result(), bend), Nil)
+      },
+      close = (bucket, buf) => Seq(sweep(bucket, buf)),
+      deadlineMs = Some(_.bucketEndUs / 1000L))
   }
 }

@@ -1,7 +1,9 @@
 package graft
 
 import graft.streaming.{Event, EventStream}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.functions.{col, expr, lit}
 import org.scalatest.funsuite.AnyFunSuite
 
 class StreamingSpec extends AnyFunSuite {
@@ -9,6 +11,19 @@ class StreamingSpec extends AnyFunSuite {
 
   private def ts(minutes: Long): java.sql.Timestamp =
     new java.sql.Timestamp(1700000000000L + minutes * 60000L)
+
+  /** Starts `ds` into the memory table `name`. With `noDataBatches =
+   * false` this query runs no micro-batch without data, so its watermark
+   * moves only with data, and a row that the previous batch's watermark
+   * lets through can reach the state function in the batch whose
+   * watermark passes its group's deadline. */
+  private def toMemory(ds: Dataset[_], name: String,
+      noDataBatches: Boolean = true) = {
+    val key = "spark.sql.streaming.noDataMicroBatches.enabled"
+    spark.conf.set(key, noDataBatches)
+    try ds.writeStream.format("memory").queryName(name).outputMode("append").start()
+    finally spark.conf.unset(key)
+  }
 
   test("windowedAgg emits finalized windows under watermark (append mode)") {
     import spark.implicits._
@@ -144,26 +159,32 @@ class StreamingSpec extends AnyFunSuite {
   test("heavyHittersStream drops post-watermark stragglers without crashing or re-emitting") {
     import spark.implicits._
     implicit val sql = spark.sqlContext
-    val in = MemoryStream[Event]
-    val q = EventStream.heavyHittersStream(in.toDF(), "event_type", "ts", "5 minutes",
-        capacity = 8, watermark = "10 minutes")
-      .writeStream.format("memory").queryName("hhlate").outputMode("append").start()
-    try {
-      in.addData(Event(1, 1, ts(0), "a", 1.0))
-      q.processAllAvailable()
-      in.addData(Event(2, 2, ts(120), "c", 1.0)) // watermark past window 0 → finalize
-      q.processAllAvailable()
-      assert(spark.table("hhlate").filter($"item" === "a").count() == 1)
-      // a straggler for the finalized window: must neither throw (a
-      // past-timeout registration kills the query) nor mutate/re-emit
-      in.addData(Event(1, 3, ts(1), "a", 1.0))
-      q.processAllAvailable()
-      in.addData(Event(2, 4, ts(240), "c", 1.0))
-      q.processAllAvailable()
-      val aRows = spark.table("hhlate").filter($"item" === "a")
-        .select("mg_count").as[Long].collect().toSeq
-      assert(aRows == Seq(1L), s"straggler re-emitted or mutated the window: $aRows")
-    } finally q.stop()
+    // no-data batches on: the batch after the watermark moves closes
+    // window 0, and Spark's late filter drops the straggler. Off: the
+    // straggler reaches the operator in the batch whose watermark passes
+    // the window end, and the window closes there with it folded in.
+    for ((noData, wantA) <- Seq(true -> Seq(1L), false -> Seq(2L))) {
+      val name = s"hhlate_$noData"
+      val in = MemoryStream[Event]
+      val q = toMemory(EventStream.heavyHittersStream(in.toDF(), "event_type", "ts",
+        "5 minutes", capacity = 8, watermark = "10 minutes"), name, noData)
+      try {
+        in.addData(Event(1, 1, ts(0), "a", 1.0))
+        q.processAllAvailable()
+        in.addData(Event(2, 2, ts(120), "c", 1.0)) // watermark past window 0
+        q.processAllAvailable()
+        if (noData) assert(spark.table(name).filter($"item" === "a").count() == 1)
+        // a straggler for window 0: must neither throw (a past-timeout
+        // registration kills the query) nor re-emit the window
+        in.addData(Event(1, 3, ts(1), "a", 1.0))
+        q.processAllAvailable()
+        in.addData(Event(2, 4, ts(240), "c", 1.0))
+        q.processAllAvailable()
+        val aRows = spark.table(name).filter($"item" === "a")
+          .select("mg_count").as[Long].collect().toSeq
+        assert(aRows == wantA, s"no-data batches $noData: window 0 emitted $aRows")
+      } finally q.stop()
+    }
   }
 
   test("heavyHitters over capacity: MG presence + count-bound guarantees hold") {
@@ -1059,35 +1080,42 @@ class StreamingSpec extends AnyFunSuite {
   test("reconcileStream merges header and lines across micro-batches, finalizes at horizon") {
     import spark.implicits._
     implicit val sql = spark.sqlContext
-    val in = MemoryStream[(Long, String, Long, java.sql.Timestamp)]
-    val q = EventStream.reconcileStream(
-        in.toDF().toDF("okey", "kind", "cents", "ts"),
-        "okey", "kind", "cents", "ts",
-        horizonUs = 30L * 60000000L, watermark = "10 minutes")
-      .writeStream.format("memory").queryName("recon").outputMode("append").start()
-    try {
-      // order 1: lines arrive BEFORE the header, split across batches
-      in.addData((1L, "L", 600L, ts(0)), (1L, "L", 400L, ts(1)))
-      q.processAllAvailable()
-      in.addData((1L, "H", 1000L, ts(2)), (2L, "L", 50L, ts(2)))
-      q.processAllAvailable()
-      assert(spark.table("recon").isEmpty, "no verdict before the horizon closes")
-      // watermark to min 50 (60 − 10): past order 1's deadline (min 30),
-      // past order 2's (min 32) — order 2 is headerless, still reported
-      in.addData((9L, "L", 1L, ts(60)))
-      q.processAllAvailable()
-      val rows = spark.table("recon")
-        .as[graft.streaming.ReconVerdict].collect().map(r => r.okey -> r).toMap
-      assert(rows.keySet == Set(1L, 2L))
-      assert(rows(1L) == graft.streaming.ReconVerdict(1L, 1L, Some(1000L), 1000L, 2L, Some(0L)))
-      assert(rows(2L) == graft.streaming.ReconVerdict(2L, 0L, None, 50L, 1L, None))
-      // straggler line for the finalized order 1: dropped, no re-emit
-      in.addData((1L, "L", 7L, ts(3)))
-      q.processAllAvailable()
-      in.addData((9L, "L", 1L, ts(120)))
-      q.processAllAvailable()
-      assert(spark.table("recon").filter($"okey" === 1L).count() == 1)
-    } finally q.stop()
+    // no-data batches off: the verdicts are due in the batch after the
+    // watermark passes them, where the straggler line for order 1
+    // arrives too and is folded into its verdict
+    for ((noData, (lines1, n1)) <- Seq(true -> (1000L, 2L), false -> (1007L, 3L))) {
+      val name = s"recon_$noData"
+      val in = MemoryStream[(Long, String, Long, java.sql.Timestamp)]
+      val q = toMemory(EventStream.reconcileStream(
+          in.toDF().toDF("okey", "kind", "cents", "ts"),
+          "okey", "kind", "cents", "ts",
+          horizonUs = 30L * 60000000L, watermark = "10 minutes"), name, noData)
+      try {
+        // order 1: lines arrive BEFORE the header, split across batches
+        in.addData((1L, "L", 600L, ts(0)), (1L, "L", 400L, ts(1)))
+        q.processAllAvailable()
+        in.addData((1L, "H", 1000L, ts(2)), (2L, "L", 50L, ts(2)))
+        q.processAllAvailable()
+        assert(spark.table(name).isEmpty, "no verdict before the horizon closes")
+        // watermark to min 50 (60 − 10): past order 1's deadline (min 30),
+        // past order 2's (min 32) — order 2 is headerless, still reported
+        in.addData((9L, "L", 1L, ts(60)))
+        q.processAllAvailable()
+        if (noData) assert(spark.table(name).count() == 2)
+        // straggler line for order 1
+        in.addData((1L, "L", 7L, ts(3)))
+        q.processAllAvailable()
+        in.addData((9L, "L", 1L, ts(120)))
+        q.processAllAvailable()
+        val rows = spark.table(name).filter($"okey" < 9L)
+          .as[graft.streaming.ReconVerdict].collect()
+        assert(rows.map(_.okey).sorted.toSeq == Seq(1L, 2L), s"no-data batches $noData")
+        val byKey = rows.map(r => r.okey -> r).toMap
+        assert(byKey(1L) == graft.streaming.ReconVerdict(1L, 1L, Some(1000L), lines1, n1,
+          Some(lines1 - 1000L)))
+        assert(byKey(2L) == graft.streaming.ReconVerdict(2L, 0L, None, 50L, 1L, None))
+      } finally q.stop()
+    }
   }
 
   test("reconcileStream batch twin flags drift, double headers, and headerless orders") {
@@ -1473,5 +1501,137 @@ class StreamingSpec extends AnyFunSuite {
     assert((accept ++ reject) == Set(1L, 2L) && accept.intersect(reject).isEmpty,
       s"accept=$accept reject=$reject")
     assert(reject.contains(2L), s"NULL-text doc must be rejected, not dropped: reject=$reject")
+  }
+
+  // A late row for every operator with a deadline: user 1 opens a
+  // group at minute 0, user 2's row at minute 600 moves the watermark
+  // (1 hour) past its deadline, and user 1's straggler at minute 1
+  // comes in the next batch. With no-data batches off, Spark's late
+  // filter still uses the previous batch's watermark, so the straggler
+  // reaches the state function after the deadline has passed. The group
+  // must close there with the straggler folded in, as the batch call
+  // closes it.
+  private val stragglerRun = Seq(Event(1, 1, ts(0), "a", 1.0), Event(2, 2, ts(600), "c", 1.0),
+    Event(1, 3, ts(1), "a", 2.0), Event(2, 4, ts(1200), "c", 1.0),
+    Event(2, 5, ts(1800), "c", 1.0))
+
+  for ((op, build, group) <- Seq[(String, Dataset[Event] => DataFrame, String)](
+      ("sessionize", ev => EventStream.sessionize(ev).toDF(), "user_id = 1"),
+      ("patternSessions", ev => EventStream.patternSessions(ev, "a+").toDF(), "user_id = 1"),
+      ("heavyHittersStream",
+        ev => EventStream.heavyHittersStream(ev.toDF(), watermark = "1 hour").toDF(),
+        "item = 'a'"),
+      ("reconcileStream", ev => EventStream.reconcileStream(
+          ev.select(col("user_id"), lit("L").as("kind"),
+            expr("CAST(round(value * 100) AS BIGINT)").as("cents"), col("ts")),
+          "user_id", "kind", "cents", "ts", horizonUs = 30L * 60000000L,
+          watermark = "1 hour").toDF(), "okey = 1"),
+      ("concurrencyStream", ev => EventStream.concurrencyStream(ev.toDF(), "ts",
+          lenUs = 30L * 60000000L, bucketUs = 3600000000L, watermark = "1 hour").toDF(),
+        s"bucket = ${ts(0).getTime / 3600000L}")))
+    test(s"$op closes a group whose deadline passes in its straggler's micro-batch") {
+      import spark.implicits._
+      implicit val sql = spark.sqlContext
+      val want = build(stragglerRun.toDS()).filter(group)
+        .collect().map(_.toString).sorted.toSeq
+      val in = MemoryStream[Event]
+      val q = toMemory(build(in.toDS()), s"straggler_$op", noDataBatches = false)
+      try stragglerRun.foreach { e => in.addData(e); q.processAllAvailable() }
+      finally q.stop()
+      val got = spark.table(s"straggler_$op").filter(group)
+        .collect().map(_.toString).sorted.toSeq
+      assert(want.nonEmpty && got == want)
+    }
+
+  test("every keyed-state operator: a streaming run in event order equals its batch call") {
+    import spark.implicits._
+    implicit val sql = spark.sqlContext
+    val types = Seq("view", "click", "purchase", "error")
+    // users 1-3, one event each every 6 minutes, stepping through
+    // view, click, purchase, error; a user's value repeats every 24
+    // minutes, with two spikes; a 45-minute pause splits every session
+    val evs = (0 until 45).map { i =>
+      Event(1L + i % 3, i + 1L, ts(2L * i + (if (i >= 24) 45L else 0L)),
+        types(i / 3 % 4), 1.0 + i % 4 + (if (i % 17 == 16) 40.0 else 0.0))
+    }
+    // user 99's event moves every operator's watermark past every
+    // other group's deadline; its own group stays open
+    val closing = Event(99, 1000, ts(600), "close", 1.0)
+    val cents = expr("CAST(round(value * 100) AS BIGINT)")
+    val ops = Seq[(String, Dataset[Event] => DataFrame, String)](
+      ("heavyHittersStream",
+        ev => EventStream.heavyHittersStream(ev.toDF()).toDF(), "item <> 'close'"),
+      ("heavyHittersWeightedStream",
+        ev => EventStream.heavyHittersWeightedStream(ev.toDF()).toDF(), "item <> 'close'"),
+      ("sessionize", ev => EventStream.sessionize(ev).toDF(), "user_id <> 99"),
+      ("patternSessions", ev => EventStream.patternSessions(ev, "vc*p").toDF(),
+        "user_id <> 99"),
+      ("anomalyStream", ev => EventStream.anomalyStream(ev, minPrior = 3).toDF(),
+        "user_id <> 99"),
+      ("clampedBalanceStream", ev => EventStream.clampedBalanceStream(
+          ev.select(col("user_id"), col("event_id"), col("ts"),
+            (cents * expr("CASE WHEN event_type = 'purchase' THEN -3 ELSE 1 END"))
+              .as("delta_cents")).as[graft.streaming.WalletDelta]).toDF(),
+        "user_id <> 99"),
+      ("rateCapStream", ev => EventStream.rateCapStream(ev, windowUs = 20L * 60000000L,
+          maxPerWindow = 2).toDF(), "user_id <> 99"),
+      ("funnelStream", ev => EventStream.funnelStream(ev, clickWithinUs = 10L * 60000000L,
+          purchaseWithinUs = 30L * 60000000L).toDF(), "user_id <> 99"),
+      ("asofEnrichStream", ev => EventStream.asofEnrichStream(ev).toDF(), "user_id <> 99"),
+      ("dupPaymentStream", ev => EventStream.dupPaymentStream(
+          ev.withColumn("cents", cents), "user_id", "event_id", "cents", "ts",
+          windowUs = 30L * 60000000L).toDF(), "cust <> 99"),
+      ("reconcileStream", ev => EventStream.reconcileStream(
+          ev.select(expr("user_id * 1000 + event_id div 4").as("okey"),
+            expr("CASE WHEN event_type = 'view' THEN 'H' ELSE 'L' END").as("kind"),
+            cents.as("cents"), col("ts")),
+          "okey", "kind", "cents", "ts", horizonUs = 30L * 60000000L).toDF(),
+        "okey < 99000"),
+      ("concurrencyStream", ev => EventStream.concurrencyStream(ev.toDF(), "ts",
+          lenUs = 30L * 60000000L, bucketUs = 3600000000L).toDF(),
+        s"bucket <> ${closing.ts.getTime / 3600000L}"))
+    for ((op, build, keep) <- ops) {
+      val want = build((evs :+ closing).toDS()).filter(keep)
+        .collect().map(_.toString).sorted.toSeq
+      val in = MemoryStream[Event]
+      val q = toMemory(build(in.toDS()), s"twin_$op")
+      try (evs.grouped(15).toSeq :+ Seq(closing)).foreach { b =>
+        in.addData(b); q.processAllAvailable()
+      } finally q.stop()
+      val streamed = spark.table(s"twin_$op").filter(keep)
+      // funnelStream emits each user's current row once per micro-batch;
+      // the stage only grows, so the last row is the highest stage
+      val last =
+        if (op != "funnelStream") streamed
+        else streamed.withColumn("r", org.apache.spark.sql.functions.row_number().over(
+            org.apache.spark.sql.expressions.Window.partitionBy("user_id")
+              .orderBy(col("stage").desc))).filter("r = 1").drop("r")
+      val got = last.collect().map(_.toString).sorted.toSeq
+      assert(want.nonEmpty && got == want, s"$op: streamed $got, batch $want")
+    }
+  }
+
+  test("only the keyed-state driver calls flatMapGroupsWithState or touches timeouts") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val dir = Paths.get("src/main/scala/graft/streaming")
+    assert(Files.isDirectory(dir), s"sources not found under ${dir.toAbsolutePath}")
+    val files = {
+      val walk = Files.walk(dir)
+      try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      finally walk.close()
+    }
+    val calls = """\b(flatMapGroupsWithState|setTimeoutTimestamp|hasTimedOut|getCurrentWatermarkMs)\b""".r
+    val comments = """(?s)/\*.*?\*/|//[^\n]*""".r
+    val member = """(?m)^  (?:private )?def (\w+)""".r
+    val sites = files.flatMap { f =>
+      val src = comments.replaceAllIn(
+        new String(Files.readAllBytes(f), java.nio.charset.StandardCharsets.UTF_8), "")
+      calls.findAllMatchIn(src).map { m =>
+        val enclosing = member.findAllMatchIn(src.substring(0, m.start)).toSeq.lastOption
+        s"${f.getFileName}:${enclosing.map(_.group(1)).getOrElse("?")}"
+      }.toList
+    }.distinct
+    assert(sites == Seq("EventStream.scala:keyedState"), sites.mkString(", "))
   }
 }
