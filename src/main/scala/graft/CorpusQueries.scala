@@ -2897,13 +2897,16 @@ object CorpusQueries {
     QuerySpec("q_dedup_minhash_sound", qDedupMinhashSound,
       """SELECT doc_id FROM documents WHERE 1 = 0 ORDER BY doc_id"""),
     // FULL keep-table replay of the layered SimHash dedup: exact text
-    // collapse, then Hamming<=3 pairs among rep signatures. Unlike
-    // MinHash banding, the pigeonhole blocking is COMPLETE (4 blocks
-    // of 16 bits; <=3 differing bits leave >=1 block identical), so
-    // the engine's keep-table provably equals this brute-force
-    // all-pairs replay — the oracle recomputes the 64-bit signature
-    // itself (FNV-1a votes, mod-2^64 CTEs above) and a hash mismatch
-    // is a signature or blocking bug, never banding recall noise.
+    // collapse, then Hamming<=3 pairs among the signatures of reps
+    // that have a word token (`sims` keeps only reps with votes; a
+    // token-less rep has no signature and only the exact layer applies
+    // to it). Unlike MinHash banding, the pigeonhole blocking is
+    // COMPLETE (4 blocks of 16 bits; <=3 differing bits leave >=1
+    // block identical), so the engine's keep-table provably equals
+    // this brute-force all-pairs replay — the oracle recomputes the
+    // 64-bit signature itself (FNV-1a votes, mod-2^64 CTEs above) and
+    // a hash mismatch is a signature or blocking bug, never banding
+    // recall noise.
     QuerySpec("q_dedup_simhash", qDedupSimhash,
       ("""WITH keyed AS MATERIALIZED (SELECT doc_id, COALESCE(text, '') AS text FROM documents),
          reps AS MATERIALIZED (SELECT MIN(doc_id) AS rep_id, text FROM keyed GROUP BY text),
@@ -2918,8 +2921,7 @@ object CorpusQueries {
          simv AS MATERIALIZED (SELECT rep_id,
              SUM(CASE WHEN v > 0 THEN CAST(1 AS HUGEINT) << bit ELSE 0 END) AS s
            FROM votes GROUP BY rep_id),
-         sims AS MATERIALIZED (SELECT r.rep_id, CAST(COALESCE(v.s, 0) AS UBIGINT) AS sim
-           FROM reps r LEFT JOIN simv v USING (rep_id)),
+         sims AS MATERIALIZED (SELECT rep_id, CAST(s AS UBIGINT) AS sim FROM simv),
          dead AS (SELECT b.rep_id AS dead_rep, CAST(COUNT(*) AS BIGINT) AS n_near
            FROM sims a JOIN sims b ON a.rep_id < b.rep_id
              AND bit_count(xor(a.sim, b.sim)) <= 3

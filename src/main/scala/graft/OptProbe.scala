@@ -121,18 +121,38 @@ object OptProbe {
           println(s"PROBE jobcount $q: ${jobs.get() - before} jobs")
         }
       case "aqeplan" =>
-        // r20: print the AQE FINAL plan (post-execution) of a named
-        // query — `explain` shows only the initial plan, and exchange
-        // reuse materializes at runtime. Usage:
+        // print the AQE FINAL plan (post-execution) of EVERY execution a
+        // named query runs, with its ReusedExchange count — `explain`
+        // shows only the initial plan, exchange reuse materializes at
+        // runtime, and for an iterative operator the returned
+        // DataFrame's plan is only a scan of its result snapshot: the
+        // round joins run in the write executions before it. The plan
+        // with the most exchanges is printed in full. Usage:
         //   runMain graft.OptProbe <sfDir> aqeplan <query>
+        val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+        spark.listenerManager.register(new org.apache.spark.sql.util.QueryExecutionListener {
+          override def onSuccess(funcName: String,
+              qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit =
+            plans.add(qe.executedPlan.toString): Unit
+          override def onFailure(funcName: String,
+              qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+        })
         args.drop(2).foreach { q =>
-          val df = SparkEntry.queries(q)(spark, dir)
-          df.collect(): Unit
-          val plan = df.queryExecution.executedPlan.toString
-          val reused = "ReusedExchange".r.findAllIn(plan).length
-          val scans = "Scan parquet".r.findAllIn(plan).length
-          println(s"PROBE aqeplan $q: ReusedExchange=$reused scans=$scans")
-          println(plan.linesIterator.take(120).mkString("\n"))
+          Bus.drain(spark.sparkContext)
+          plans.clear()
+          SparkEntry.queries(q)(spark, dir).collect(): Unit
+          Bus.drain(spark.sparkContext)
+          val all = plans.toArray(Array.empty[String]).toSeq
+          def n(pat: String, plan: String) = pat.r.findAllIn(plan).length
+          all.zipWithIndex.foreach { case (plan, i) =>
+            println(s"PROBE aqeplan $q exec $i: ReusedExchange=${n("ReusedExchange", plan)} " +
+              s"Exchange=${n("Exchange", plan)} scans=${n("Scan parquet", plan)}")
+          }
+          println(s"PROBE aqeplan $q: ${all.size} executions, " +
+            s"ReusedExchange=${all.map(n("ReusedExchange", _)).sum}")
+          all.maxByOption(n("Exchange", _)).foreach { plan =>
+            println(plan.linesIterator.take(120).mkString("\n"))
+          }
         }
       case "nest" =>
         // nest with and without the child sort, against the shipped

@@ -3,8 +3,9 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /**
- * Scratch storage for iterative operators ([[graft.operators.Graph]]
- * pageRank round snapshots, [[graft.operators.Components]] reliable
+ * Scratch storage for iterative operators (the round snapshots of
+ * every scratch-using [[graft.operators.Graph]] operator, each call in
+ * its own [[callDir]]; [[graft.operators.Components]] reliable
  * checkpoints). Resolution:
  *
  *   1. `spark.graft.scratchDir`, if set — the CLUSTER deployment knob.
@@ -39,8 +40,8 @@ object Scratch {
     * input mid-read) as well as across calls within one application.
     * Residue lifecycle is the class-doc rule: the local default root
     * dies with the JVM hook; a configured (durable) root keeps one
-    * result-sized artifact per call for the deployment to expire,
-    * exactly as Graph's per-call round snapshots do. */
+    * result-sized artifact per call for the deployment to expire: a
+    * Graph call leaves only its result snapshot there. */
   def callDir(spark: SparkSession, op: String, seq: Int): String =
     s"${root(spark)}/${op}_${spark.sparkContext.applicationId}_$seq"
 

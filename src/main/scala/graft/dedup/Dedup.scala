@@ -267,6 +267,11 @@ object Dedup {
    * most maxHamming bits must agree exactly on at least one block
    * (even with diffs in the uncovered high bits, which only reduces
    * diffs among covered blocks). Verify is a popcount on the XOR.
+   * A doc with no word token (empty, NULL, punctuation-only) has no
+   * signature to compare — SimHash 0 would pair every such doc with
+   * every other at Hamming 0 — so it stays out of the block join and
+   * pairs with nothing, as MinHash bands no shingle-less doc; in
+   * [[simhashKeep]] only the exact layer applies to it.
    */
   def simhashPairs(
       docs: DataFrame, idCol: String, textCol: String,
@@ -275,7 +280,11 @@ object Dedup {
     val nBlocks = maxHamming + 1
     val blockBits = math.max(64 / nBlocks, 1)
     val mask = if (blockBits >= 64) -1L else (1L << blockBits) - 1
-    val sig = spread(docs).select(col(idCol).as("doc_id"), simhashOf(col(textCol)).as("sim"))
+    // a word token exists iff some char is outside the tokenizer's
+    // ASCII separator class (the oracle's split class)
+    val sig = spread(docs)
+      .filter(col(textCol).rlike("[^\\x00-\\x2f\\x3a-\\x40\\x5b-\\x5e\\x60\\x7b-\\x7f]"))
+      .select(col(idCol).as("doc_id"), simhashOf(col(textCol)).as("sim"))
     val blocked = sig.select(col("doc_id"), col("sim"),
       posexplode(array((0 until nBlocks).map(i =>
         shiftrightunsigned(col("sim"), i * blockBits).bitwiseAND(lit(mask))): _*)))

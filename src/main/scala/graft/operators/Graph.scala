@@ -1,172 +1,229 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 /**
- * Iterative graph scoring: PageRank in FIXED-POINT INTEGER arithmetic
- * (ppm scale). Link-graph centrality is a standard corpus-quality
- * signal for web-scale training data (rank pages by the link graph,
- * weight or filter documents by it); the fixed-point formulation
- * exists because float PageRank is not reproducible — a double sum
- * over thousands of partitions depends on reduction order, while an
- * integer sum does not, so this variant is bit-identical across
- * engines, partitionings, and retries, and therefore oracle-checkable
- * (`q_pagerank` unrolls the same integer recurrence in DuckDB).
+ * Graph operators over edge lists and parent-pointer forests: PageRank,
+ * triangle counting, BFS, subtree rollup, bill-of-materials explosion,
+ * critical path, path counting and the functional-graph cycle census.
  *
- * Recurrence (damping 85/100, rank_0 = 1_000_000 for every node):
- *   contrib(u)   = rank_i(u) div outdeg(u)          (integer div)
- *   rank_{i+1}(v) = 150_000 + (85 · Σ_{u→v} contrib(u)) div 100
- * Dangling-node mass is dropped (the simplified variant) — documented
- * rather than redistributed, and mirrored identically in the oracle.
- *
- * Scale shape: the edge list (with out-degrees attached once, up
- * front) is the only large state; each iteration is one
- * (edge ⋈ ranks) equi-join shuffle + one dst-keyed sum + a left join
- * back to the node universe. Each round materializes to PARQUET in a
- * scratch dir and reads back — a file-based lineage truncation.
- * Measured against the alternatives on the 105-query bench session:
- * as one giant unmaterialized DAG the repeated edge/degree subtrees
- * re-execute per iteration (59 s for 3 rounds at sf0.1); with
- * `localCheckpoint` the round is fast but the cached round blocks
- * pinned in the block manager degraded every LATER query of the
+ * Scratch. Every iterative operator materializes its rounds to PARQUET
+ * in a scratch dir and reads them back — a file-based lineage
+ * truncation. Measured against the alternatives on the 105-query bench
+ * session: as one giant unmaterialized DAG the repeated edge/degree
+ * subtrees re-execute per iteration (59 s for 3 pageRank rounds at
+ * sf0.1); with `localCheckpoint` the round is fast but the cached round
+ * blocks pinned in the block manager degraded every LATER query of the
  * long-lived session 3-5× (partially recovered by unpersist, not
- * fully); the parquet round-trip keeps the query at seconds with
- * ZERO block-manager state — and is exactly what a cluster run wants
- * anyway (a restartable, executor-loss-safe round snapshot). Scratch
- * location: [[graft.Scratch]] — set `spark.graft.scratchDir` to a
- * durable shared filesystem on a cluster; the local default is a
- * per-application temp dir deleted by one JVM-exit hook. Each call
- * additionally drops its own intermediate round snapshots before
- * returning (keeping only the final snapshot the result reads), so a
- * long-lived session's scratch holds one result-sized artifact per
- * call, not the whole iteration history (r13 ADVICE).
+ * fully); the parquet round-trip keeps the query at seconds with ZERO
+ * block-manager state — and is exactly what a cluster run wants anyway
+ * (a restartable, executor-loss-safe round snapshot). Scratch location:
+ * [[graft.Scratch]] — set `spark.graft.scratchDir` to a durable shared
+ * filesystem on a cluster; the local default is a per-application temp
+ * dir deleted by one JVM-exit hook.
+ *
+ * Residue. Each such call runs in one [[Scope]], its own call dir. The
+ * call's body returns its result lazily; the scope writes it as the
+ * call's one `result` snapshot, drops every other snapshot of the call
+ * (also when the body throws), and returns a DataFrame reading the
+ * snapshot. A long-lived session's scratch thus holds one result-sized
+ * artifact per call, not the iteration history.
+ *
+ * Frontier driver. shortestPaths, subtreeRollup, bomExplode,
+ * criticalPath and pathCounts are the Pregel frontier loop (Malewicz et
+ * al., SIGMOD 2010) run by one driver, [[Scope.frontier]]. An operator
+ * gives only:
+ *   - a seed: round 0's frontier, written with its row count in one job;
+ *   - a step (frontier, shellsSoFar, round) => next frontier, with
+ *     step(empty) = empty. Only BFS reads `shellsSoFar` (the union of
+ *     every earlier shell, for its anti join) and `round` (its `dist`);
+ *     for the others that union is never built;
+ *   - a round cap;
+ *   - a truncation rule: when the cap is reached with a live frontier,
+ *     the driver probes one more step, and the cap counts as exceeded
+ *     only if that step yields rows; the operator then refuses with its
+ *     own message. shortestPaths gives no refusal: it keeps the
+ *     documented cut at maxHops, and no probe runs;
+ *   - a fold over the union of the non-empty shells, round 0 included,
+ *     which is the scope's result.
+ * Rounds run [[ChunkRounds]] to a write job, and each round's row count
+ * rides that write, so seeing the frontier drain costs no extra job.
  */
 object Graph {
 
   private val callSeq = new java.util.concurrent.atomic.AtomicInteger(0)
 
-  /** Materialize a round snapshot AND report its row count from the
-   * SAME action (an `Observation` on the write job): the iterative
-   * operators below need each round's count only to decide loop
-   * termination, and a separate `isEmpty`/`count` probe was a second
-   * full job per round — at 100 TB a second full pass over the
-   * frontier, locally ~half of every round's fixed job overhead
-   * (optimization guide §1.2: remove unnecessary passes first). */
-  private def materializeCounted(spark: org.apache.spark.sql.SparkSession,
-      scratch: String)(df: DataFrame, name: String): (DataFrame, Long) = {
-    val obs = org.apache.spark.sql.Observation()
-    df.observe(obs, count(lit(1)).as("n"))
-      .write.mode("overwrite").parquet(s"$scratch/$name")
-    (spark.read.parquet(s"$scratch/$name"),
-      obs.get("n").asInstanceOf[Long])
-  }
-
-  /** Materialize up to `steps` successive frontier rounds in ONE write
-   * job (r20, VERDICT r19 #4 — the cycleStats `t % 3` pattern applied
-   * to the frontier loops): the chunk unions the lazily-chained rounds
-   * `step(f)`, `step(step(f))`, … tagged with a `__r` partition column,
-   * writes them `partitionBy("__r")`, and each round's exact row count
-   * rides the SAME action as its own `Observation` — so K rounds cost
-   * one job instead of K write jobs (plus K probe jobs before r19).
-   * Round results are bit-identical: the per-round plans are the same
-   * joins/aggregates, only the action boundaries moved. Within the
-   * chunk, round r's subtree appears under every later branch; the
-   * branches below the observe nodes are identical, so exchange reuse
-   * dedups the shuffled work wherever the rounds shuffle (the cluster
-   * regime — locally the frontiers broadcast and the recompute is an
-   * in-memory join over rows the job already holds). A round past the
-   * frontier's drain writes zero rows (step(empty) = empty for every
-   * loop below), contributing nothing to the round union — callers
-   * skip the empty partitions via the returned counts.
-   *
-   * Returns (per-round counts, per-round partition paths — only rounds
-   * that produced rows have a physical dir, so callers must filter by
-   * count before reading). */
-  private def materializeChunkCounted(spark: org.apache.spark.sql.SparkSession,
-      scratch: String)(frontier0: DataFrame, step: DataFrame => DataFrame,
-      steps: Int, name: String): (Array[Long], Array[String]) = {
-    val obs = Array.fill(steps)(org.apache.spark.sql.Observation())
-    val chain = new Array[DataFrame](steps)
-    var cur = frontier0
-    for (s <- 0 until steps) { cur = step(cur); chain(s) = cur }
-    (0 until steps).map { s =>
-      chain(s).observe(obs(s), count(lit(1)).as("n")).withColumn("__r", lit(s))
-    }.reduce(_.unionByName(_))
-      .write.mode("overwrite").partitionBy("__r").parquet(s"$scratch/$name")
-    (obs.map(_.get("n").asInstanceOf[Long]),
-      Array.tabulate(steps)(s => s"$scratch/$name/__r=$s"))
-  }
-
   /** Rounds per chunk for the frontier loops — 3, the cycleStats
    * ratio: deep enough to cut the job count ~3×, shallow enough that
-   * the chained per-chunk plan stays a few joins deep. */
+   * the chained per-chunk plan stays a few joins deep. Exchange reuse
+   * does fire across a chunk's branches: `OptProbe aqeplan q_bfs` at
+   * sf0.01 shows 10 ReusedExchange in the chunk write (round 1's expand
+   * shuffle serves the round-2 and round-3 branches, round 2's serves
+   * round 3's), though the round-1 branch itself plans with one more
+   * inferred null filter and so computes its expand shuffle again. */
   private val ChunkRounds = 3
 
-  /** Drop every per-round snapshot under this call's scratch dir
-   * except `keep` (the final materialized result the returned
-   * DataFrame reads). Without this, every call leaks closure-sized
-   * frontier/round snapshots for the life of the scratch root (r13
-   * ADVICE); after it, a call's residue is exactly its result
-   * snapshot — freed by the app-exit hook for the local default, and
-   * the one artifact a durable-scratch deployment actually wants to
-   * keep (the restartable round snapshot doc below). Hadoop FS API so
-   * a remote scratch scheme resolves the same way the writes do. */
-  private def dropAllBut(spark: org.apache.spark.sql.SparkSession,
-      scratch: String, keep: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    val root = new Path(scratch)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(root))
-      fs.listStatus(root).foreach { st =>
-        if (st.getPath.getName != keep) fs.delete(st.getPath, true): Unit
-      }
+  /** Run one call in its own scratch dir: the residue rule of the
+   * object doc. */
+  private def scoped(spark: SparkSession, op: String)(body: Scope => DataFrame): DataFrame = {
+    val dir = graft.Scratch.callDir(spark, op, callSeq.incrementAndGet())
+    val scope = new Scope(spark, dir)
+    try scope.snapshot(body(scope), "result")
+    finally {
+      // Hadoop FS API so a remote scratch scheme resolves the same way
+      // the writes do
+      val root = new org.apache.hadoop.fs.Path(dir)
+      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      if (fs.exists(root))
+        fs.listStatus(root).foreach { st =>
+          if (st.getPath.getName != "result") fs.delete(st.getPath, true): Unit
+        }
+    }
   }
 
+  private final class Scope(spark: SparkSession, dir: String) {
+
+    def snapshot(df: DataFrame, name: String): DataFrame = {
+      df.write.mode("overwrite").parquet(s"$dir/$name")
+      spark.read.parquet(s"$dir/$name")
+    }
+
+    /** Materialize a snapshot AND report its row count from the SAME
+     * action (an `Observation` on the write job): a separate
+     * `isEmpty`/`count` probe was a second full job per round — at
+     * 100 TB a second full pass over the frontier, locally ~half of
+     * every round's fixed job overhead (optimization guide §1.2:
+     * remove unnecessary passes first). */
+    def counted(df: DataFrame, name: String): (DataFrame, Long) = {
+      val obs = Observation()
+      df.observe(obs, count(lit(1)).as("n"))
+        .write.mode("overwrite").parquet(s"$dir/$name")
+      (spark.read.parquet(s"$dir/$name"), obs.get("n").asInstanceOf[Long])
+    }
+
+    /** Materialize up to `steps` successive frontier rounds in ONE write
+     * job: the chunk unions the lazily-chained rounds `step(f)`,
+     * `step(step(f))`, … tagged with a `__r` partition column, writes
+     * them `partitionBy("__r")`, and each round's exact row count rides
+     * the SAME action as its own `Observation` — so K rounds cost one
+     * job instead of K write jobs. Round results are bit-identical: the
+     * per-round plans are the same joins/aggregates, only the action
+     * boundaries moved. Within the chunk, round r's subtree appears
+     * under every later branch; the branches below the observe nodes
+     * are identical, so exchange reuse can dedup the shuffled work
+     * wherever the rounds shuffle (locally the frontiers broadcast and
+     * the recompute is an in-memory join over rows the job already
+     * holds). A round past the frontier's drain writes zero rows.
+     *
+     * Returns (per-round counts, per-round partition paths — only rounds
+     * that produced rows have a physical dir, so callers must filter by
+     * count before reading). */
+    private def materializeChunkCounted(frontier0: DataFrame, step: DataFrame => DataFrame,
+        steps: Int, name: String): (Array[Long], Array[String]) = {
+      val obs = Array.fill(steps)(Observation())
+      val chain = new Array[DataFrame](steps)
+      var cur = frontier0
+      for (s <- 0 until steps) { cur = step(cur); chain(s) = cur }
+      (0 until steps).map { s =>
+        chain(s).observe(obs(s), count(lit(1)).as("n")).withColumn("__r", lit(s))
+      }.reduce(_.unionByName(_))
+        .write.mode("overwrite").partitionBy("__r").parquet(s"$dir/$name")
+      (obs.map(_.get("n").asInstanceOf[Long]),
+        Array.tabulate(steps)(s => s"$dir/$name/__r=$s"))
+    }
+
+    /** The frontier driver (contract in the object doc): returns the
+     * union of the non-empty shells for the operator's fold, or throws
+     * `refusal` when a step past `cap` still yields rows. */
+    def frontier(seed: DataFrame, cap: Int, refusal: Option[String])(
+        step: (DataFrame, () => DataFrame, Long) => DataFrame): DataFrame = {
+      var shells = List(s"$dir/frontier_0") // newest first
+      val allShells = () => spark.read.parquet(shells.reverse: _*)
+      var (front, live) = counted(seed, "frontier_0")
+      var round = 0
+      while (round < cap && live > 0L) {
+        val steps = math.min(ChunkRounds, cap - round)
+        // within a chunk, round r's shellsSoFar is the on-disk shells
+        // (read at most once) unioned with the chunk's earlier rounds
+        lazy val onDisk = allShells()
+        var soFar: () => DataFrame = () => onDisk
+        var r = round.toLong
+        val (ns, paths) = materializeChunkCounted(front, { f =>
+          r += 1
+          val before = soFar
+          val next = step(f, before, r)
+          soFar = () => before().unionByName(next)
+          next
+        }, steps, s"chunk_${round + 1}")
+        shells :::= paths.zip(ns).filter(_._2 > 0L).map(_._1).reverse.toList
+        round += steps
+        live = ns.last
+        if (live > 0L) front = spark.read.parquet(paths.last)
+      }
+      refusal.foreach { msg =>
+        require(live == 0L || step(front, allShells, round + 1L).isEmpty, msg)
+      }
+      allShells()
+    }
+  }
+
+  /**
+   * Iterative graph scoring: PageRank in FIXED-POINT INTEGER arithmetic
+   * (ppm scale). Link-graph centrality is a standard corpus-quality
+   * signal for web-scale training data (rank pages by the link graph,
+   * weight or filter documents by it); the fixed-point formulation
+   * exists because float PageRank is not reproducible — a double sum
+   * over thousands of partitions depends on reduction order, while an
+   * integer sum does not, so this variant is bit-identical across
+   * engines, partitionings, and retries, and therefore oracle-checkable
+   * (`q_pagerank` unrolls the same integer recurrence in DuckDB).
+   *
+   * Recurrence (damping 85/100, rank_0 = 1_000_000 for every node):
+   *   contrib(u)   = rank_i(u) div outdeg(u)          (integer div)
+   *   rank_{i+1}(v) = 150_000 + (85 · Σ_{u→v} contrib(u)) div 100
+   * Dangling-node mass is dropped (the simplified variant) — documented
+   * rather than redistributed, and mirrored identically in the oracle.
+   *
+   * Scale shape: the edge list (with out-degrees attached once, up
+   * front) is the only large state; each iteration is one
+   * (edge ⋈ ranks) equi-join shuffle + one dst-keyed sum + a left join
+   * back to the node universe.
+   */
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
                iters: Int = 3): DataFrame = {
     require(iters >= 1, s"pageRank needs iters >= 1, got $iters")
-    val spark = edges.sparkSession
-    val scratch = graft.Scratch.callDir(spark, "pagerank", callSeq.incrementAndGet())
-    def materialize(df: DataFrame, name: String): DataFrame = {
-      df.write.mode("overwrite").parquet(s"$scratch/$name")
-      spark.read.parquet(s"$scratch/$name")
-    }
+    scoped(edges.sparkSession, "pagerank") { s =>
+      val e = s.snapshot(edges
+        .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
+        .filter(col("src").isNotNull && col("dst").isNotNull)
+        .distinct(), "edges")
+      val nodes = s.snapshot(
+        e.select(col("src").as("node")).union(e.select(col("dst").as("node"))).distinct(),
+        "nodes")
+      // out-degrees ride WITH the edges from the start — never recomputed
+      // inside the loop
+      val edgesDeg = s.snapshot(
+        e.join(e.groupBy("src").agg(count(lit(1)).as("outdeg")), "src"), "edges_deg")
 
-    val e = materialize(edges
-      .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
-      .filter(col("src").isNotNull && col("dst").isNotNull)
-      .distinct(), "edges")
-    val nodes = materialize(
-      e.select(col("src").as("node")).union(e.select(col("dst").as("node"))).distinct(),
-      "nodes")
-    // out-degrees ride WITH the edges from the start — never recomputed
-    // inside the loop
-    val edgesDeg = materialize(
-      e.join(e.groupBy("src").agg(count(lit(1)).as("outdeg")), "src"), "edges_deg")
-
-    var ranks = nodes.withColumn("rank", lit(1000000L))
-    for (i <- 1 to iters) {
-      val sums = edgesDeg.join(ranks, edgesDeg("src") === ranks("node"))
-        .select(col("dst"), expr("rank div outdeg").as("contrib"))
-        .groupBy("dst").agg(sum("contrib").as("in_sum"))
-      val next = nodes.join(sums, nodes("node") === sums("dst"), "left")
-        .select(col("node"),
-          (lit(150000L) + expr("85 * coalesce(in_sum, 0L) div 100")).as("rank"))
-      // r20 (the cycleStats `t % 3` pattern, VERDICT r19 #5): truncate
-      // lineage every THIRD iteration, not every one — the chained
-      // plan is a linear join/agg recurrence over the parquet-backed
-      // edgesDeg/nodes leaves (no branch duplication), so skipping a
-      // materialization removes a whole write+read round-trip of the
-      // node-sized rank relation; the final iteration always
-      // materializes for the result read.
-      ranks = if (i % 3 == 0 || i == iters) materialize(next, s"ranks_$i")
-        else next
+      var ranks = nodes.withColumn("rank", lit(1000000L))
+      for (i <- 1 to iters) {
+        val sums = edgesDeg.join(ranks, edgesDeg("src") === ranks("node"))
+          .select(col("dst"), expr("rank div outdeg").as("contrib"))
+          .groupBy("dst").agg(sum("contrib").as("in_sum"))
+        val next = nodes.join(sums, nodes("node") === sums("dst"), "left")
+          .select(col("node"),
+            (lit(150000L) + expr("85 * coalesce(in_sum, 0L) div 100")).as("rank"))
+        // truncate lineage every THIRD iteration, not every one (the
+        // cycleStats pattern): the chained plan is a linear join/agg
+        // recurrence over the parquet-backed edgesDeg/nodes leaves (no
+        // branch duplication), so skipping a materialization removes a
+        // whole write+read round-trip of the node-sized rank relation;
+        // the final iteration is the scope's result snapshot.
+        ranks = if (i % 3 == 0 && i < iters) s.snapshot(next, s"ranks_$i") else next
+      }
+      ranks
     }
-    // the final round is already on disk; earlier rounds + edge/degree
-    // snapshots are dead weight from here on
-    dropAllBut(spark, scratch, s"ranks_$iters")
-    ranks
   }
 
   /**
@@ -247,14 +304,13 @@ object Graph {
    * Multi-source BFS shortest paths (hop distance), the Pregel
    * frontier shape: each round expands the CURRENT frontier through
    * one (frontier ⋈ edges) equi-join shuffle, drops already-settled
-   * nodes with one anti join, and settles the remainder at distance
-   * d. Work per round is proportional to the frontier's out-edges —
-   * never the whole graph — and rounds are bounded by `maxHops`, so
-   * the 100 TB story is the CC/PageRank one: edge list as the only
-   * large state, per-round parquet materialization as a restartable,
-   * executor-loss-safe lineage truncation (same trade-off measured in
-   * the pageRank doc above — localCheckpoint pins block-manager state
-   * that degrades a long-lived session).
+   * nodes with one anti join against every earlier shell, and settles
+   * the remainder at distance d. Work per round is proportional to the
+   * frontier's out-edges — never the whole graph — and rounds are
+   * bounded by `maxHops`, so the 100 TB story is the CC/PageRank one:
+   * edge list as the only large state, per-round parquet
+   * materialization as a restartable, executor-loss-safe lineage
+   * truncation (the trade-off measured in the object doc).
    *
    * `edges` is DIRECTED; pass both orientations for an undirected
    * graph. Unreachable nodes (within maxHops) are absent from the
@@ -288,57 +344,22 @@ object Graph {
       sources: DataFrame, sourceCol: String,
       maxHops: Int): DataFrame = {
     require(maxHops >= 0, s"maxHops must be >= 0, got $maxHops")
-    val spark = edges.sparkSession
-    val scratch = graft.Scratch.callDir(spark, "bfs", callSeq.incrementAndGet())
-    def materialize(df: DataFrame, name: String): DataFrame = {
-      df.write.mode("overwrite").parquet(s"$scratch/$name")
-      spark.read.parquet(s"$scratch/$name")
-    }
-    val e = materialize(edges
-      .select(col(srcCol).cast("long").as("a"), col(dstCol).cast("long").as("b"))
-      .filter(col("a").isNotNull && col("b").isNotNull)
-      .distinct(), "edges")
-    // Frontier shells are disjoint by construction (the anti join),
-    // so `settled` is just the lazy union of the frontier snapshots
-    // already on disk — no extra settled_k write+read per round.
-    // Rounds materialize in CHUNKS of ChunkRounds per write job (r20 —
-    // see materializeChunkCounted): within a chunk, round t+1's anti
-    // join runs against the on-disk shells UNIONED with the chunk's
-    // earlier (lazily chained) shells, so the shells stay disjoint and
-    // each node still settles at its first-reached hop — bit-identical
-    // rounds, one job per chunk instead of one per round.
-    var frontierPaths = List(s"$scratch/frontier_0")
-    var (frontier, fN) = materializeCounted(spark, scratch)(
-      sources.select(col(sourceCol).cast("long").as("node")).distinct()
-        .withColumn("dist", lit(0L)), "frontier_0")
-    def settled = spark.read.parquet(frontierPaths.reverse: _*)
-    val eIn = e.select(col("a").as("node"), col("b"))
-    var d = 0L
-    while (d < maxHops && fN > 0L) {
-      val steps = math.min(ChunkRounds.toLong, maxHops - d).toInt
-      var settledChain = settled
-      var dd = d
-      val step = (f: DataFrame) => {
-        dd += 1
-        val nxt = f.join(eIn, Seq("node"))
+    scoped(edges.sparkSession, "bfs") { s =>
+      val e = s.snapshot(edges
+        .select(col(srcCol).cast("long").as("a"), col(dstCol).cast("long").as("b"))
+        .filter(col("a").isNotNull && col("b").isNotNull)
+        .distinct(), "edges")
+      val eIn = e.select(col("a").as("node"), col("b"))
+      // the shells are disjoint by construction (the anti join), so
+      // their union is the result, each node at its first-reached hop
+      s.frontier(sources.select(col(sourceCol).cast("long").as("node")).distinct()
+          .withColumn("dist", lit(0L)), maxHops, refusal = None) { (f, settled, d) =>
+        f.join(eIn, Seq("node"))
           .select(col("b").as("node")).distinct()
-          .join(settledChain, Seq("node"), "left_anti")
-          .withColumn("dist", lit(dd))
-        settledChain = settledChain.unionByName(nxt)
-        nxt
+          .join(settled(), Seq("node"), "left_anti")
+          .withColumn("dist", lit(d))
       }
-      val (ns, paths) = materializeChunkCounted(spark, scratch)(
-        frontier, step, steps, s"chunk_${d + 1}")
-      frontierPaths :::= paths.zip(ns).filter(_._2 > 0L).map(_._1).reverse.toList
-      d += steps
-      fN = ns.last
-      if (fN > 0L) frontier = spark.read.parquet(paths.last)
     }
-    // collapse the frontier shells into ONE result snapshot, then drop
-    // them — the call's residue is its result, not its whole history
-    val result = materialize(settled, "settled")
-    dropAllBut(spark, scratch, "settled")
-    result
   }
 
   /**
@@ -356,7 +377,8 @@ object Graph {
    * rollup is then a single map-side-combined aggregate on the
    * ancestor key. Depth is log-branching-factor of the id space —
    * 7 rounds cover 10^7 nodes at 10-ary fan-in — so the round count
-   * is a calendar-like constant, not data-sized.
+   * is a calendar-like constant, not data-sized. A chain deeper than
+   * `maxDepth` refuses instead of undercounting.
    *
    * `nodes`: (`id`, `parent`, `value`) with parent NULL at roots;
    * ids non-negative longs. Output: (`id`, `n_nodes`, `sum_value`).
@@ -365,60 +387,22 @@ object Graph {
       nodes: DataFrame, idCol: String, parentCol: String, valueCol: String,
       maxDepth: Int): DataFrame = {
     require(maxDepth >= 1, s"maxDepth must be >= 1, got $maxDepth")
-    val spark = nodes.sparkSession
-    val scratch = graft.Scratch.callDir(spark, "subtree", callSeq.incrementAndGet())
-    def materialize(df: DataFrame, name: String): DataFrame = {
-      df.write.mode("overwrite").parquet(s"$scratch/$name")
-      spark.read.parquet(s"$scratch/$name")
-    }
-    val base = nodes.select(col(idCol).cast("long").as("id"),
-      col(parentCol).cast("long").as("parent"),
-      col(valueCol).cast("long").as("value"))
-    val parents = materialize(base.select(col("id").as("c"), col("parent").as("p"))
-      .filter(col("p").isNotNull), "parents")
-    // closure rows (v, a): a is an ancestor-or-self of v. Ancestor
-    // chains are strictly shrinking, so the frontiers never repeat a
-    // pair and their union IS the closure. Each frontier materializes
-    // to scratch (the shortestPaths pattern): the isEmpty probe, the
-    // next hop, and the final rollup each read a parquet snapshot
-    // instead of re-executing the growing join chain — O(depth)
-    // executed joins, not O(depth²).
-    // hops materialize in chunks of ChunkRounds per write job (r20 —
-    // see materializeChunkCounted), same one-equi-join hop per round
-    val pIn = parents.select(col("c").as("a"), col("p"))
-    val step = (f: DataFrame) => f.join(pIn, Seq("a"))
-      .select(col("v"), col("p").as("a"))
-    var frontierPaths = List(s"$scratch/frontier_0")
-    var (frontier, fN) = materializeCounted(spark, scratch)(
-      base.select(col("id").as("v"), col("id").as("a")), "frontier_0")
-    var hops = 0
-    while (hops < maxDepth && fN > 0L) {
-      val steps = math.min(ChunkRounds, maxDepth - hops)
-      val (ns, paths) = materializeChunkCounted(spark, scratch)(
-        frontier, step, steps, s"chunk_${hops + 1}")
-      frontierPaths :::= paths.zip(ns).filter(_._2 > 0L).map(_._1).reverse.toList
-      hops += steps
-      fN = ns.last
-      if (fN > 0L) frontier = spark.read.parquet(paths.last)
-    }
-    // completeness probe: a chain of EXACTLY maxDepth leaves its last
-    // frontier non-empty — only a further step still finding parents
-    // means the closure is truncated (silent undercount otherwise).
-    // fN == 0 (the common exit, known from the write's own metrics)
-    // short-circuits the probe join entirely.
-    require(fN == 0L ||
-      frontier.join(parents, frontier("a") === parents("c")).isEmpty,
-      s"subtreeRollup: ancestor chains longer than maxDepth=$maxDepth — raise it")
-    // materialize the (node-sized) rollup, then drop the closure-sized
-    // frontier snapshots — the call's residue is its result
-    val result = materialize(
-      spark.read.parquet(frontierPaths.reverse: _*)
-        .join(base.select(col("id").as("v"), col("value")), "v")
+    scoped(nodes.sparkSession, "subtree") { s =>
+      val base = nodes.select(col(idCol).cast("long").as("id"),
+        col(parentCol).cast("long").as("parent"),
+        col(valueCol).cast("long").as("value"))
+      val pIn = s.snapshot(base.select(col("id").as("c"), col("parent").as("p"))
+        .filter(col("p").isNotNull), "parents").select(col("c").as("a"), col("p"))
+      // closure rows (v, a): a is an ancestor-or-self of v. Ancestor
+      // chains are strictly shrinking, so the shells never repeat a
+      // pair and their union IS the closure.
+      s.frontier(base.select(col("id").as("v"), col("id").as("a")), maxDepth,
+          Some(s"subtreeRollup: ancestor chains longer than maxDepth=$maxDepth — raise it")) {
+        (f, _, _) => f.join(pIn, Seq("a")).select(col("v"), col("p").as("a"))
+      }.join(base.select(col("id").as("v"), col("value")), "v")
         .groupBy(col("a").as("id"))
-        .agg(count(lit(1)).as("n_nodes"), sum("value").as("sum_value")),
-      "result")
-    dropAllBut(spark, scratch, "result")
-    result
+        .agg(count(lit(1)).as("n_nodes"), sum("value").as("sum_value"))
+    }
   }
 
   /**
@@ -428,13 +412,11 @@ object Graph {
    * part in an assembly is the PRODUCT of quantities along the path
    * ("how many screws per aircraft" through sub-assemblies) — the
    * recursive-CTE-with-arithmetic workload, sixth leg of the graph
-   * family. Same materialized-frontier closure as subtreeRollup
-   * (frontiers never repeat a pair on a forest; O(depth) executed
-   * joins), with the running product carried per closure row; the
-   * same one-extra-hop completeness probe fails loudly on truncation.
-   * Products and sums run under ANSI: a multiplier that would wrap a
-   * long THROWS instead of silently corrupting the requirement (the
-   * B55 rule, delegated to the engine).
+   * family. Same closure frontier as subtreeRollup, with the running
+   * product carried per closure row, and the same refusal of a chain
+   * deeper than `maxDepth`. Products and sums run under ANSI: a
+   * multiplier that would wrap a long THROWS instead of silently
+   * corrupting the requirement (the B55 rule, delegated to the engine).
    *
    * Output per assembly (ancestor): `n_components` (strict
    * descendants), `total_units` (Σ path products — total component
@@ -444,48 +426,21 @@ object Graph {
       nodes: DataFrame, idCol: String, parentCol: String, qtyCol: String,
       maxDepth: Int): DataFrame = {
     require(maxDepth >= 1, s"maxDepth must be >= 1, got $maxDepth")
-    val spark = nodes.sparkSession
-    val scratch = graft.Scratch.callDir(spark, "bom", callSeq.incrementAndGet())
-    def materialize(df: DataFrame, name: String): DataFrame = {
-      df.write.mode("overwrite").parquet(s"$scratch/$name")
-      spark.read.parquet(s"$scratch/$name")
-    }
-    val base = nodes.select(col(idCol).cast("long").as("id"),
-      col(parentCol).cast("long").as("parent"),
-      col(qtyCol).cast("long").as("q"))
-    val parents = materialize(base
-      .select(col("id").as("c"), col("parent").as("p"), col("q"))
-      .filter(col("p").isNotNull), "parents")
-    // hops materialize in chunks of ChunkRounds per write job (r20 —
-    // see materializeChunkCounted), same multiply-and-hop per round
-    val pIn = parents.select(col("c").as("a"), col("p"), col("q"))
-    val step = (f: DataFrame) => f.join(pIn, Seq("a"))
-      .select(col("v"), col("p").as("a"), (col("m") * col("q")).as("m"))
-    var frontierPaths = List(s"$scratch/frontier_0")
-    var (frontier, fN) = materializeCounted(spark, scratch)(
-      base.select(col("id").as("v"), col("id").as("a"), lit(1L).as("m")),
-      "frontier_0")
-    var hops = 0
-    while (hops < maxDepth && fN > 0L) {
-      val steps = math.min(ChunkRounds, maxDepth - hops)
-      val (ns, paths) = materializeChunkCounted(spark, scratch)(
-        frontier, step, steps, s"chunk_${hops + 1}")
-      frontierPaths :::= paths.zip(ns).filter(_._2 > 0L).map(_._1).reverse.toList
-      hops += steps
-      fN = ns.last
-      if (fN > 0L) frontier = spark.read.parquet(paths.last)
-    }
-    require(fN == 0L ||
-      frontier.join(parents, frontier("a") === parents("c")).isEmpty,
-      s"bomExplode: chains longer than maxDepth=$maxDepth — raise it")
-    val result = materialize(
-      spark.read.parquet(frontierPaths.reverse: _*)
-        .filter(col("v") =!= col("a"))
+    scoped(nodes.sparkSession, "bom") { s =>
+      val base = nodes.select(col(idCol).cast("long").as("id"),
+        col(parentCol).cast("long").as("parent"),
+        col(qtyCol).cast("long").as("q"))
+      val pIn = s.snapshot(base
+        .select(col("id").as("c"), col("parent").as("p"), col("q"))
+        .filter(col("p").isNotNull), "parents").select(col("c").as("a"), col("p"), col("q"))
+      s.frontier(base.select(col("id").as("v"), col("id").as("a"), lit(1L).as("m")), maxDepth,
+          Some(s"bomExplode: chains longer than maxDepth=$maxDepth — raise it")) {
+        (f, _, _) => f.join(pIn, Seq("a"))
+          .select(col("v"), col("p").as("a"), (col("m") * col("q")).as("m"))
+      }.filter(col("v") =!= col("a"))
         .groupBy(col("a").as("id"))
-        .agg(count(lit(1)).as("n_components"), sum("m").as("total_units")),
-      "result")
-    dropAllBut(spark, scratch, "result")
-    result
+        .agg(count(lit(1)).as("n_components"), sum("m").as("total_units"))
+    }
   }
 
   /** Critical path (longest weighted path ending at each node) over a
@@ -495,70 +450,37 @@ object Graph {
    * family (B29/B49/B55/B58/B74/B107), the MAX-PLUS semiring where
    * B107 is product-sum.
    *
-   * Bellman-Ford-style relaxation restricted to IMPROVEMENTS: every
-   * node starts at 0; each round joins only the nodes whose value
-   * improved last round against the edge list and keeps strict
-   * improvements as the next frontier, so per-round work is
-   * frontier-proportional (on a DAG the frontier drains in at most
-   * longest-chain rounds — log-depth for the multiplicative DAGs
-   * here). Rounds materialize to scratch parquet (the pageRank
-   * lineage-truncation trade, measured there).
+   * frontier_t = (node, best path of EXACTLY t edges ending there):
+   * one equi-join + per-node max per round, so per-round work is
+   * frontier-proportional. The frontier drains in longest-chain rounds
+   * (a node with no outgoing edge extends nothing — log-depth for the
+   * multiplicative DAGs here); the answer is the per-node max across
+   * all rounds.
    *
-   * A graph with a REACHABLE CYCLE never converges (a positive-weight
-   * cycle improves forever): `maxRounds` exhaustion with a non-empty
-   * frontier THROWS rather than returning a truncated answer — the
-   * fail-loud cycle guard, never an undercount (B55/B107 rule).
+   * A graph with a REACHABLE CYCLE never drains: a path deeper than
+   * `maxRounds` edges THROWS rather than returning a truncated answer
+   * — the fail-loud cycle guard, never an undercount (B55/B107 rule).
+   * A DAG whose longest chain is exactly `maxRounds` edges returns.
    *
    * Output: (id, critical_len) for every node, sources at 0. */
   def criticalPath(edges: DataFrame, srcCol: String, dstCol: String,
       wCol: String, maxRounds: Int = 64): DataFrame = {
     require(maxRounds >= 1, s"maxRounds must be >= 1, got $maxRounds")
-    val spark = edges.sparkSession
-    val scratch = graft.Scratch.callDir(spark, "cpath", callSeq.incrementAndGet())
-    def materialize(df: DataFrame, name: String): DataFrame = {
-      df.write.mode("overwrite").parquet(s"$scratch/$name")
-      spark.read.parquet(s"$scratch/$name")
+    scoped(edges.sparkSession, "cpath") { s =>
+      val e = s.snapshot(edges.select(col(srcCol).cast("long").as("u"),
+        col(dstCol).cast("long").as("v"), col(wCol).cast("long").as("w")), "edges")
+      val nodes = e.select(col("u").as("id"))
+        .union(e.select(col("v").as("id"))).distinct()
+      val eIn = e.select(col("u").as("id"), col("v"), col("w"))
+      s.frontier(nodes.withColumn("len", lit(0L)), maxRounds,
+          Some(s"criticalPath: a path deeper than maxRounds=$maxRounds — " +
+            "a cycle is reachable, or the DAG is deeper than maxRounds; " +
+            "this operator refuses to undercount")) {
+        (f, _, _) => f.join(eIn, Seq("id"))
+          .groupBy(col("v").as("id"))
+          .agg(max(col("len") + col("w")).as("len"))
+      }.groupBy("id").agg(max("len").as("critical_len"))
     }
-    val e = materialize(edges.select(col(srcCol).cast("long").as("u"),
-      col(dstCol).cast("long").as("v"), col(wCol).cast("long").as("w")), "edges")
-    val nodes = e.select(col("u").as("id"))
-      .union(e.select(col("v").as("id"))).distinct()
-    // frontier_t = (node, best path of EXACTLY t edges): one equi-join
-    // + per-node max per round, and rounds materialize in CHUNKS of
-    // ChunkRounds per write job (r20 — see materializeChunkCounted;
-    // one job per chunk where r19 paid one per round and r18 two).
-    // The frontier drains in longest-chain rounds because a node with
-    // no outgoing edge extends nothing; the final answer is the
-    // per-node max across all round snapshots.
-    val eIn = e.select(col("u").as("id"), col("v"), col("w"))
-    val step = (f: DataFrame) => f.join(eIn, Seq("id"))
-      .groupBy(col("v").as("id"))
-      .agg(max(col("len") + col("w")).as("len"))
-    var frontierPaths = List(s"$scratch/frontier_0")
-    var (frontier, fN) = materializeCounted(spark, scratch)(
-      nodes.withColumn("len", lit(0L)), "frontier_0")
-    var round = 0
-    while (round < maxRounds && fN > 0L) {
-      val steps = math.min(ChunkRounds, maxRounds - round)
-      val (ns, paths) = materializeChunkCounted(spark, scratch)(
-        frontier, step, steps, s"chunk_${round + 1}")
-      // rounds past the drain are empty (step(empty) = empty): they
-      // wrote no partition dir and contribute nothing to the result
-      frontierPaths :::= paths.zip(ns).filter(_._2 > 0L).map(_._1).reverse.toList
-      round += steps
-      fN = ns.last
-      if (fN > 0L) frontier = spark.read.parquet(paths.last)
-    }
-    require(fN == 0L,
-      s"criticalPath: still improving after maxRounds=$maxRounds — " +
-        "a cycle is reachable, or the DAG is deeper than maxRounds; " +
-        "this operator refuses to undercount")
-    val result = materialize(
-      spark.read.parquet(frontierPaths.reverse: _*)
-        .groupBy("id").agg(max("len").as("critical_len")),
-      "result")
-    dropAllBut(spark, scratch, "result")
-    result
   }
 
   /** Path counting over a DAG (B121) — the COUNTING semiring,
@@ -576,50 +498,27 @@ object Graph {
    * decimal(38,0): path counts grow combinatorially and a silently
    * wrapped long is the B55 failure class (ANSI throws on decimal
    * overflow — fail-loud delegated to the engine). Same fail-loud
-   * cycle guard as criticalPath. */
+   * guard as criticalPath: a path deeper than `maxRounds` edges (a
+   * reachable cycle, or a deeper DAG) throws. */
   def pathCounts(edges: DataFrame, srcCol: String, dstCol: String,
       maxRounds: Int = 64): DataFrame = {
     require(maxRounds >= 1, s"maxRounds must be >= 1, got $maxRounds")
-    val spark = edges.sparkSession
-    val scratch = graft.Scratch.callDir(spark, "pcount", callSeq.incrementAndGet())
-    def materialize(df: DataFrame, name: String): DataFrame = {
-      df.write.mode("overwrite").parquet(s"$scratch/$name")
-      spark.read.parquet(s"$scratch/$name")
+    scoped(edges.sparkSession, "pcount") { s =>
+      val d38 = org.apache.spark.sql.types.DecimalType(38, 0)
+      val e = s.snapshot(edges.select(col(srcCol).cast("long").as("u"),
+        col(dstCol).cast("long").as("v")), "edges")
+      val nodes = e.select(col("u").as("id"))
+        .union(e.select(col("v").as("id"))).distinct()
+      val eIn = e.select(col("u").as("id"), col("v"))
+      s.frontier(nodes.withColumn("n", lit(1L).cast(d38)), maxRounds,
+          Some(s"pathCounts: a path deeper than maxRounds=$maxRounds — " +
+            "a cycle is reachable, or the DAG is deeper than maxRounds")) {
+        (f, _, _) => f.join(eIn, Seq("id"))
+          .groupBy(col("v").as("id"))
+          .agg(sum(col("n")).as("n"))
+      }.groupBy("id")
+        .agg((sum("n") - lit(1L)).cast(d38).as("n_paths"))
     }
-    val d38 = org.apache.spark.sql.types.DecimalType(38, 0)
-    val e = materialize(edges.select(col(srcCol).cast("long").as("u"),
-      col(dstCol).cast("long").as("v")), "edges")
-    val nodes = e.select(col("u").as("id"))
-      .union(e.select(col("v").as("id"))).distinct()
-    // rounds materialize in chunks of ChunkRounds per write job (r20 —
-    // see materializeChunkCounted), same SUM recurrence per round
-    val eIn = e.select(col("u").as("id"), col("v"))
-    val step = (f: DataFrame) => f.join(eIn, Seq("id"))
-      .groupBy(col("v").as("id"))
-      .agg(sum(col("n")).as("n"))
-    var frontierPaths = List(s"$scratch/frontier_0")
-    var (frontier, fN) = materializeCounted(spark, scratch)(
-      nodes.withColumn("n", lit(1L).cast(d38)), "frontier_0")
-    var round = 0
-    while (round < maxRounds && fN > 0L) {
-      val steps = math.min(ChunkRounds, maxRounds - round)
-      val (ns, paths) = materializeChunkCounted(spark, scratch)(
-        frontier, step, steps, s"chunk_${round + 1}")
-      frontierPaths :::= paths.zip(ns).filter(_._2 > 0L).map(_._1).reverse.toList
-      round += steps
-      fN = ns.last
-      if (fN > 0L) frontier = spark.read.parquet(paths.last)
-    }
-    require(fN == 0L,
-      s"pathCounts: still growing after maxRounds=$maxRounds — " +
-        "a cycle is reachable, or the DAG is deeper than maxRounds")
-    val result = materialize(
-      spark.read.parquet(frontierPaths.reverse: _*)
-        .groupBy("id")
-        .agg((sum("n") - lit(1L)).cast(d38).as("n_paths")),
-      "result")
-    dropAllBut(spark, scratch, "result")
-    result
   }
 
   /** Cycle census of a FUNCTIONAL graph (every node has exactly one
@@ -628,9 +527,10 @@ object Graph {
    * each cycle, labeled by its minimum member.
    *
    * Pointer doubling, the scale-correct formulation: T = ⌈log₂ n⌉
-   * rounds of self-joins carry (jump 2^t steps ahead, min id seen in
-   * those 2^t steps). After T rounds every walk of length 2^T ≥ n has
-   * entered its terminal cycle and wrapped it at least once, so:
+   * rounds (n the counted node rows) of self-joins carry (jump 2^t
+   * steps ahead, min id seen in those 2^t steps). After T rounds every
+   * walk of length 2^T ≥ n has entered its terminal cycle and wrapped
+   * it at least once, so:
    *   - the IMAGE of jump_T is exactly the on-cycle set: any
    *     2^T-step walk ends on a cycle (2^T exceeds every tail), and
    *     every on-cycle node is hit (a cycle maps onto itself — walk
@@ -641,45 +541,34 @@ object Graph {
    * step-by-step O(n · cycle-length) walk.
    *
    * Output: one row per cycle — (cycle_id = min member, size). */
-  def cycleStats(next: DataFrame, idCol: String, nextCol: String,
-      maxNodesLog2: Int = 48): DataFrame = {
-    val spark = next.sparkSession
-    val scratch = graft.Scratch.callDir(spark, "cyc", callSeq.incrementAndGet())
-    def materialize(df: DataFrame, name: String): DataFrame = {
-      df.write.mode("overwrite").parquet(s"$scratch/$name")
-      spark.read.parquet(s"$scratch/$name")
-    }
-    // node count rides the round-0 write (one action, not write+count)
-    val (cur0, n) = materializeCounted(spark, scratch)(
-      next.select(col(idCol).cast("long").as("id"),
-        col(nextCol).cast("long").as("jump"),
-        least(col(idCol).cast("long"), col(nextCol).cast("long")).as("mn")),
-      "round_0")
-    var cur = cur0
-    val rounds = math.min(maxNodesLog2,
-      math.max(1, 64 - java.lang.Long.numberOfLeadingZeros(math.max(1L, n - 1)))).toInt
-    for (t <- 1 to rounds) {
-      val hop = cur.select(col("id").as("jid"), col("jump").as("j2"),
-        col("mn").as("mn2"))
-      val doubled = cur.join(hop, cur("jump") === hop("jid"))
-        .select(col("id"), col("j2").as("jump"),
-          least(col("mn"), col("mn2")).as("mn"))
-      // truncate lineage every THIRD doubling, not every one: the
-      // node-sized relation rewrites to parquet a third as often
-      // (measured 51 s → the plan stays ≤ 3 self-joins deep, well
-      // under the depth that stresses analysis), while the final
-      // round always materializes for the result read
-      cur = if (t % 3 == 0 || t == rounds) materialize(doubled, s"round_$t")
-        else doubled
-    }
-    // image of jump_T = the on-cycle set; mn there = the cycle min
-    val result = materialize(
+  def cycleStats(next: DataFrame, idCol: String, nextCol: String): DataFrame =
+    scoped(next.sparkSession, "cyc") { s =>
+      // node count rides the round-0 write (one action, not write+count)
+      val (cur0, n) = s.counted(
+        next.select(col(idCol).cast("long").as("id"),
+          col(nextCol).cast("long").as("jump"),
+          least(col(idCol).cast("long"), col(nextCol).cast("long")).as("mn")),
+        "round_0")
+      var cur = cur0
+      val rounds = math.max(1, 64 - java.lang.Long.numberOfLeadingZeros(math.max(1L, n - 1)))
+      for (t <- 1 to rounds) {
+        val hop = cur.select(col("id").as("jid"), col("jump").as("j2"),
+          col("mn").as("mn2"))
+        val doubled = cur.join(hop, cur("jump") === hop("jid"))
+          .select(col("id"), col("j2").as("jump"),
+            least(col("mn"), col("mn2")).as("mn"))
+        // truncate lineage every THIRD doubling, not every one: the
+        // node-sized relation rewrites to parquet a third as often
+        // (measured 51 s → the plan stays ≤ 3 self-joins deep, well
+        // under the depth that stresses analysis), while the final
+        // round always materializes: the result reads it twice
+        cur = if (t % 3 == 0 || t == rounds) s.snapshot(doubled, s"round_$t")
+          else doubled
+      }
+      // image of jump_T = the on-cycle set; mn there = the cycle min
       cur.select(col("jump").as("id")).distinct()
         .join(cur, Seq("id"))
         .groupBy(col("mn").as("cycle_id"))
-        .agg(count(lit(1)).as("size")),
-      "result")
-    dropAllBut(spark, scratch, "result")
-    result
-  }
+        .agg(count(lit(1)).as("size"))
+    }
 }

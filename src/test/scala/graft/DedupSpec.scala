@@ -168,12 +168,19 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("edge corpus: simhashKeep keep-table") {
-    // every token-less doc (3, 4, 5, 6) has SimHash 0: 5 dies against 3
+    // token-less docs (3, 4, 5, 6) skip the block join: only the exact
+    // layer kills them (4 = 3, NULL 6 = '' 5)
     assert(keepTable(Dedup.simhashKeep(edge, "doc_id", "text")) == Map(
       1L -> ((0L, true)), 2L -> ((0L, true)), 3L -> ((0L, true)), 4L -> ((1L, false)),
-      5L -> ((1L, false)), 6L -> ((2L, false)), 7L -> ((0L, true)), 8L -> ((1L, false)),
+      5L -> ((0L, true)), 6L -> ((1L, false)), 7L -> ((0L, true)), 8L -> ((1L, false)),
       9L -> ((0L, true)), 10L -> ((1L, false)), 11L -> ((0L, true)), 12L -> ((1L, false)),
       13L -> ((1L, false))))
+  }
+
+  test("simhashKeep keeps distinct token-less texts apart: only the exact layer applies") {
+    val tokenless = Seq((1L, ""), (2L, "!!! ???"), (3L, "!!! ???")).toDF("doc_id", "text")
+    assert(keepTable(Dedup.simhashKeep(tokenless, "doc_id", "text")) == Map(
+      1L -> ((0L, true)), 2L -> ((0L, true)), 3L -> ((1L, false))))
   }
 
   test("edge corpus: containmentKeep keep-table") {

@@ -282,4 +282,146 @@ class GraphSpec extends AnyFunSuite {
       .orderBy("cycle_id").as[(Long, Long)].collect().toSeq
     assert(got == Seq((10L, 3L), (40L, 2L)))
   }
+
+  // --- the frontier operators on a 7-deep chain plus a small forest ---
+  // Caps 7 and 8 are not multiples of the 3-round chunk, so the rounds
+  // cross chunk boundaries and the last chunk is short. Expected values
+  // come from a direct walk of the same structure.
+
+  // parent pointers: chain 1 <- 2 <- ... <- 8 (node 8 is 7 hops deep),
+  // tree 20 <- 21, 20 <- 22 <- 23; value = id, qty 2 on the chain
+  private val forest: Seq[(Long, Option[Long], Long)] =
+    (1L to 8L).map(i => (i, if (i == 1L) None else Some(i - 1), if (i == 1L) 1L else 2L)) ++
+      Seq((20L, None, 1L), (21L, Some(20L), 3L), (22L, Some(20L), 2L), (23L, Some(22L), 5L))
+  private lazy val forestDf = forest.toDF("id", "parent", "q")
+
+  /** (a, d, m) for every node d and each ancestor-or-self a of d, with
+   * m the product of q from d up to but excluding a. */
+  private def closure: Seq[(Long, Long, Long)] = {
+    val parent = forest.collect { case (i, Some(p), _) => i -> p }.toMap
+    val qty = forest.map(r => r._1 -> r._3).toMap
+    forest.flatMap { case (d, _, _) =>
+      Iterator.iterate(Option((d, 1L))) {
+        case Some((a, m)) => parent.get(a).map(p => (p, m * qty(a)))
+        case None => None
+      }.takeWhile(_.isDefined).map(_.get).map { case (a, m) => (a, d, m) }
+    }
+  }
+
+  // DAG edges: the chain 1→…→8 with weight i on i→i+1, and a diamond
+  // 20→21→23, 20→22→23
+  private val dag: Seq[(Long, Long, Long)] =
+    (1L to 7L).map(i => (i, i + 1, i)) ++
+      Seq((20L, 21L, 4L), (20L, 22L, 1L), (22L, 23L, 2L), (21L, 23L, 1L))
+  private lazy val dagDf = dag.toDF("u", "v", "w")
+  private lazy val dagNodes = dag.flatMap(e => Seq(e._1, e._2)).distinct
+
+  private def longestInto(v: Long): Long =
+    dag.filter(_._2 == v).map(e => longestInto(e._1) + e._3).maxOption.getOrElse(0L)
+  private def pathsInto(v: Long): Long =
+    dag.filter(_._2 == v).map(e => pathsInto(e._1) + 1L).sum
+
+  private def criticalOf(maxRounds: Int): Map[Long, Long] =
+    Graph.criticalPath(dagDf, "u", "v", "w", maxRounds)
+      .as[(Long, Long)].collect().toMap
+  private def pathCountOf(maxRounds: Int): Map[Long, Long] =
+    Graph.pathCounts(dagDf, "u", "v", maxRounds)
+      .selectExpr("id", "cast(n_paths as long)").as[(Long, Long)].collect().toMap
+
+  test("frontier operators across chunk boundaries: 7-deep chain and forest at caps 7 and 8") {
+    val hops = Map(1L -> 0L, 2L -> 1L, 3L -> 2L, 4L -> 3L, 5L -> 4L, 6L -> 5L, 7L -> 6L,
+      8L -> 7L, 20L -> 0L, 21L -> 1L, 22L -> 1L, 23L -> 2L)
+    val rollup = closure.groupBy(_._1).map { case (a, rows) =>
+      a -> ((rows.size.toLong, rows.map(_._2).sum)) }
+    val bom = closure.filter(r => r._1 != r._2).groupBy(_._1).map { case (a, rows) =>
+      a -> ((rows.size.toLong, rows.map(_._3).sum)) }
+    assert(rollup(1L) == ((8L, 36L)) && bom(1L) == ((7L, 254L)) && bom(20L) == ((3L, 15L)))
+    for (cap <- Seq(7, 8)) {
+      assert(bfs(dag.map(e => (e._1, e._2)), Seq(1L, 20L), cap) == hops, s"bfs cap $cap")
+      assert(Graph.subtreeRollup(forestDf, "id", "parent", "id", cap)
+        .as[(Long, Long, Long)].collect().map(r => r._1 -> ((r._2, r._3))).toMap == rollup,
+        s"subtreeRollup cap $cap")
+      assert(Graph.bomExplode(forestDf, "id", "parent", "q", cap)
+        .as[(Long, Long, Long)].collect().map(r => r._1 -> ((r._2, r._3))).toMap == bom,
+        s"bomExplode cap $cap")
+    }
+    assert(bfs(dag.map(e => (e._1, e._2)), Seq(1L, 20L), 6) == hops - 8L,
+      "shortestPaths keeps the cut at maxHops")
+    assert(criticalOf(8) == dagNodes.map(v => v -> longestInto(v)).toMap)
+    assert(pathCountOf(8) == dagNodes.map(v => v -> pathsInto(v)).toMap)
+  }
+
+  test("criticalPath and pathCounts return on a chain of exactly maxRounds edges, refuse one deeper") {
+    val one = Seq((1L, 2L, 5L)).toDF("u", "v", "w")
+    assert(Graph.criticalPath(one, "u", "v", "w", maxRounds = 1)
+      .as[(Long, Long)].collect().toMap == Map(1L -> 0L, 2L -> 5L))
+    assert(Graph.pathCounts(one, "u", "v", maxRounds = 1)
+      .selectExpr("id", "cast(n_paths as long)").as[(Long, Long)].collect().toMap ==
+      Map(1L -> 0L, 2L -> 1L))
+    assert(criticalOf(7) == dagNodes.map(v => v -> longestInto(v)).toMap)
+    assert(pathCountOf(7) == dagNodes.map(v => v -> pathsInto(v)).toMap)
+    val cp = intercept[IllegalArgumentException](criticalOf(6))
+    assert(cp.getMessage.contains("deeper than maxRounds"), cp.getMessage)
+    val pc = intercept[IllegalArgumentException](pathCountOf(6))
+    assert(pc.getMessage.contains("deeper than maxRounds"), pc.getMessage)
+  }
+
+  test("cycleStats labels only the cycle at the end of a long tail") {
+    // tail 1→2→…→6 into the 2-cycle 6↔7: no tail node is on a cycle
+    val nxt = ((1L to 6L).map(i => (i, i + 1)) :+ ((7L, 6L))).toDF("id", "n")
+    assert(Graph.cycleStats(nxt, "id", "n").as[(Long, Long)].collect().toSeq ==
+      Seq((6L, 2L)))
+  }
+
+  test("each scratch-using operator leaves one snapshot dir, and its result reads it") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft_residue_test").toFile
+    spark.conf.set("spark.graft.scratchDir", tmp.toString)
+    try {
+      val runs: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
+        "pagerank" -> (() => Graph.pageRank(dagDf, "u", "v", iters = 4)),
+        "bfs" -> (() => Graph.shortestPaths(dagDf, "u", "v", Seq(1L).toDF("s"), "s", 4)),
+        "subtree" -> (() => Graph.subtreeRollup(forestDf, "id", "parent", "id", 8)),
+        "bom" -> (() => Graph.bomExplode(forestDf, "id", "parent", "q", 8)),
+        "cpath" -> (() => Graph.criticalPath(dagDf, "u", "v", "w")),
+        "pcount" -> (() => Graph.pathCounts(dagDf, "u", "v")),
+        "cyc" -> (() => Graph.cycleStats(Seq((1L, 2L), (2L, 1L), (3L, 1L)).toDF("id", "n"),
+          "id", "n")))
+      for ((op, run) <- runs) {
+        val df = run()
+        val calls = tmp.listFiles().filter(_.getName.startsWith(op + "_"))
+        assert(calls.length == 1, s"$op: call dirs ${calls.map(_.getName).toSeq}")
+        val kept = calls.head.listFiles()
+        assert(kept.length == 1 && kept.head.isDirectory,
+          s"$op residue: ${kept.map(_.getName).toSeq}")
+        val files = df.inputFiles
+        assert(files.nonEmpty && files.forall(_.contains(s"/${calls.head.getName}/${kept.head.getName}/")),
+          s"$op reads ${files.toSeq}")
+        assert(df.count() > 0L, op)
+      }
+    } finally spark.conf.unset("spark.graft.scratchDir")
+  }
+
+  test("a refused call leaves no snapshot in its call dir") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft_refusal_test").toFile
+    spark.conf.set("spark.graft.scratchDir", tmp.toString)
+    try {
+      intercept[IllegalArgumentException](criticalOf(6))
+      val calls = tmp.listFiles().filter(_.getName.startsWith("cpath_"))
+      assert(calls.length == 1 && calls.head.listFiles().isEmpty,
+        s"residue: ${calls.map(c => c.getName -> c.listFiles().map(_.getName).toSeq).toSeq}")
+    } finally spark.conf.unset("spark.graft.scratchDir")
+  }
+
+  test("Graph.scala has one scratch scope and one chunk loop") {
+    import java.nio.file.{Files, Paths}
+    val path = Paths.get("src/main/scala/graft/operators/Graph.scala")
+    assert(Files.exists(path), s"source not found at ${path.toAbsolutePath}")
+    val src = new String(Files.readAllBytes(path), java.nio.charset.StandardCharsets.UTF_8)
+    assert("""Scratch\.callDir\(""".r.findAllIn(src).length == 1, "more than one Scratch.callDir")
+    assert("""def materialize\(""".r.findAllIn(src).isEmpty, "a local def materialize")
+    val chunkCalls = """(?<!def )materializeChunkCounted\(""".r.findAllMatchIn(src).map { m =>
+      "def \\w+".r.findAllIn(src.substring(0, m.start)).toSeq.lastOption.getOrElse("?")
+    }.toList
+    assert(chunkCalls == List("def frontier"), chunkCalls.mkString(", "))
+  }
 }
