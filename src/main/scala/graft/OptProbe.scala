@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 /** Stage-by-stage cost probes for the heavy paths (ad-hoc; not part of
   * the driver contract). Usage: runMain graft.OptProbe [sfDir] [probe],
   * probe one of linkage, triangles, kernelbench, jobcount, aqeplan,
-  * nest, interp, obscheck. */
+  * explain, nest, interp, obscheck. */
 object OptProbe {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
@@ -150,9 +150,17 @@ object OptProbe {
           }
           println(s"PROBE aqeplan $q: ${all.size} executions, " +
             s"ReusedExchange=${all.map(n("ReusedExchange", _)).sum}")
-          all.maxByOption(n("Exchange", _)).foreach { plan =>
-            println(plan.linesIterator.take(120).mkString("\n"))
-          }
+          all.maxByOption(n("Exchange", _)).foreach(println)
+        }
+      case "explain" =>
+        // the formatted physical plan of the named queries (all when
+        // none is named), to audit pushdown, broadcast and shuffle
+        // shape. Usage: runMain graft.OptProbe <sfDir> explain [query...]
+        val names =
+          if (args.length > 2) args.drop(2).toSeq else SparkEntry.queries.keys.toSeq.sorted
+        names.foreach { q =>
+          println(s"\n===== $q =====")
+          SparkEntry.queries(q)(spark, dir).explain("formatted")
         }
       case "nest" =>
         // nest with and without the child sort, against the shipped

@@ -21,7 +21,7 @@ import org.apache.spark.sql.functions._
  * documents/embeddings replicate with UNCHANGED payloads: every doc
  * gains 9 exact copies — deliberately the mass-duplication regime the
  * layered dedup stack is designed for (exact-collapse first, so LSH
- * candidate structure stays bounded; ScaleProbe's 20× drift gates pin
+ * candidate structure stays bounded; ReplicationSpec's 20× drift gates pin
  * the keep-set semantics under exactly this transform).
  *
  * Timestamp columns pass through untouched (event streams get denser

@@ -58,10 +58,10 @@ object Graph {
    * ratio: deep enough to cut the job count ~3×, shallow enough that
    * the chained per-chunk plan stays a few joins deep. Exchange reuse
    * does fire across a chunk's branches: `OptProbe aqeplan q_bfs` at
-   * sf0.01 shows 10 ReusedExchange in the chunk write (round 1's expand
-   * shuffle serves the round-2 and round-3 branches, round 2's serves
-   * round 3's), though the round-1 branch itself plans with one more
-   * inferred null filter and so computes its expand shuffle again. */
+   * sf0.01 shows the chunk write computing round 1's expand shuffle
+   * once and reusing it under the later branches (9 ReusedExchange in
+   * all). That needs every round to plan the edge scan identically,
+   * which is why shortestPaths filters it explicitly. */
   private val ChunkRounds = 3
 
   /** Run one call in its own scratch dir: the residue rule of the
@@ -328,14 +328,14 @@ object Graph {
    * the hub's oversized shuffle partition splits into advisory-sized
    * slices, each joined against a replica of the matching frontier
    * rows — no salting needed because the expand is a plain inner
-   * equi-join. ScaleProbe plants a 2M-edge hub, forces the shuffle
-   * regime, and asserts via task metrics that no task read even half
-   * the hub block (measured ~0.47M of 2M). Deployment note: AQE's
-   * defaults only call a partition skewed past 256 MB; at cluster
-   * scale that is the right floor, but tighter per-task bounds come
-   * from lowering `skewedPartitionThresholdInBytes` /
-   * `advisoryPartitionSizeInBytes` together, exactly as the probe
-   * does in scaled-down proportion.
+   * equi-join. A GraphSpec case plants a 20000-edge hub, forces the
+   * shuffle regime, and asserts via task metrics that no task read
+   * even half the hub block (with the split off, one task reads all
+   * of it). Deployment note: AQE's defaults only call a partition
+   * skewed past 256 MB; at cluster scale that is the right floor, but
+   * tighter per-task bounds come from lowering
+   * `skewedPartitionThresholdInBytes` / `advisoryPartitionSizeInBytes`
+   * together, exactly as that case does in scaled-down proportion.
    *
    * Output: (node, dist) for every node reachable in <= maxHops hops.
    */
@@ -349,7 +349,12 @@ object Graph {
         .select(col(srcCol).cast("long").as("a"), col(dstCol).cast("long").as("b"))
         .filter(col("a").isNotNull && col("b").isNotNull)
         .distinct(), "edges")
-      val eIn = e.select(col("a").as("node"), col("b"))
+      // the explicit both-not-null filter (a no-op on the snapshot)
+      // makes every round plan this scan identically: otherwise round
+      // 1's copy under a later round gains an inferred isnotnull(b)
+      // and its expand shuffle no longer matches round 1's own
+      val eIn = e.filter(col("a").isNotNull && col("b").isNotNull)
+        .select(col("a").as("node"), col("b"))
       // the shells are disjoint by construction (the anti join), so
       // their union is the result, each node at its first-reached hop
       s.frontier(sources.select(col(sourceCol).cast("long").as("node")).distinct()

@@ -34,8 +34,8 @@ object Linkage {
    * once (at the a-side's salt), so the pair SET is identical to the
    * unsalted join while the giant block's verify work spreads across
    * `salts` reducers. Cost: the b-side shuffle replicates ×salts —
-   * worth it exactly when one block dominates (ScaleProbe measures
-   * the 50%-giant-block shape). */
+   * worth it exactly when one block dominates (SkewSpec checks the
+   * pair set on the 50%-giant-block shape in the shuffle regime). */
   def candidatePairs(records: DataFrame, idCol: String, compareCol: String,
                      blockCols: Seq[String], salts: Int = 1): DataFrame = {
     require(salts >= 1, s"salts must be >= 1, got $salts")

@@ -137,7 +137,7 @@ object Ann {
   /** The `k` lowest-min-id DISTINCT-VALUE corpus vectors — the
    * deterministic quantizer init seed. Grouping by VALUE (not id)
    * makes the init immune to mass duplication: a corpus where every
-   * vector has 20 exact copies (the ScaleProbe shape, and what real
+   * vector has 20 exact copies (the ReplicationSpec shape, and what real
    * crawled embeddings look like before dedup) would otherwise seed
    * all k centroids with copies of the same few vectors, collapsing
    * the trained quantizer and with it recall (the r13 probe caught

@@ -15,6 +15,9 @@ class ComponentsSpec extends AnyFunSuite {
     // 5—4—3—2—1—0 forces multiple star rounds (worst-case diameter)
     val got = cc(Seq((5L, 4L), (4L, 3L), (3L, 2L), (2L, 1L), (1L, 0L)))
     assert(got == (0L to 5L).map(_ -> 0L).toMap)
+    val path = spark.range(999L).toDF("s").select($"s", ($"s" + 1).as("d"))
+    assert(Components.connectedComponents(path, "s", "d")
+      .select("component").distinct().as[Long].collect().toSeq == Seq(0L))
   }
 
   test("separate components keep separate labels") {
@@ -32,6 +35,12 @@ class ComponentsSpec extends AnyFunSuite {
     assert(star == Map(7L -> 1L, 1L -> 1L, 2L -> 1L, 3L -> 1L))
     val ring = cc(Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 1L)))
     assert(ring == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L))
+    // 20 disjoint 100-node stars, each labeled by its center
+    val stars = spark.range(2000L).toDF("i")
+      .select(($"i" - $"i" % 100).as("s"), $"i".as("d")).filter($"s" =!= $"d")
+    assert(Components.connectedComponents(stars, "s", "d")
+      .groupBy("component").count().as[(Long, Long)].collect().toMap ==
+      (0L until 2000L by 100L).map(_ -> 100L).toMap)
   }
 
   test("empty edge list yields empty labeling") {

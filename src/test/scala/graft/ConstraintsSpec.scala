@@ -54,4 +54,20 @@ class ConstraintsSpec extends AnyFunSuite {
       .as[(String, Long, Long)].collect().toSet
     assert(out == Set(("not_null(s)", 0L, 2L), ("unique(id)", 0L, 2L)))
   }
+
+  test("five constraints over 10k rows count exactly the planted violations") {
+    import org.apache.spark.sql.functions.{lit, when}
+    // NULL s on i % 10 == 0; 'bad' on i % 100 == 7; x out of range on
+    // i % 1000 == 0; every key of 5000 twice; the dimension holds the
+    // even keys, so each odd key is an orphan twice
+    val df = spark.range(10000L).select(($"id" % 5000L).as("k"),
+      when($"id" % 10L =!= 0L,
+        when($"id" % 100L === 7L, lit("bad")).otherwise(lit("ok"))).as("s"),
+      when($"id" % 1000L === 0L, lit(-5L)).otherwise($"id" % 50L).as("x"))
+    val dim = spark.range(2500L).select(($"id" * 2L).as("pk"))
+    assert(auditMap(df, Seq(NotNull("s"), AcceptedValues("s", Seq("ok")), InRange("x", 0L, 49L),
+        Unique(Seq("k")), RefIntegrity("k", dim, "pk", broadcastDim = false))) == Map(
+      "not_null(s)" -> 1000L, "accepted_values(s)" -> 100L, "in_range(x)" -> 10L,
+      "unique(k)" -> 5000L, "ref_integrity(k)" -> 5000L))
+  }
 }

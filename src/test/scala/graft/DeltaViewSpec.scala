@@ -77,6 +77,14 @@ class DeltaViewSpec extends AnyFunSuite {
       val want = byV.find { case (_, w) => cum += w; cum >= r }.get._1
       assert(got(p) == want, s"q_ppm=$p got=${got(p)} want=$want")
     }
+    // unit weights over 10k hash-spread values: the weighted definition
+    // collapses to percentile_disc
+    val unit = spark.range(10000L).select((($"id" * 2654435761L) % 10000L).as("v"), lit(1L).as("w"))
+    val qs = Seq(250000L, 500000L, 900000L, 990000L)
+    val disc = unit.select(qs.map(q =>
+      expr(s"percentile_disc(${q / 1e6}) within group (order by v)").cast("long")): _*).head()
+    assert(WeightedQuantile.weightedQuantiles(unit, "v", "w", qs, 100L).as[(Long, Long)]
+      .collect().toMap == qs.zipWithIndex.map { case (q, i) => q -> disc.getLong(i) }.toMap)
   }
 
   test("weightedQuantiles: heavy single value dominates every mid quantile") {

@@ -22,6 +22,11 @@ class FifoSpec extends AnyFunSuite {
       ("p", 1L, 10L, false, 5L), ("p", 2L, 10L, false, 9L),
       ("p", 3L, 15L, true, 0L)))
     assert(got("p") == ((95L, 15L, 20L, 15L, 0L)))
+    // 100 keys: 70 buys of 10 at unit cost = lot index, then 30 sells
+    // of 10 consume the first 30 lots whole: cogs 10 * (0 + ... + 29)
+    val lots = run(for (k <- 0 until 100; o <- 0L until 100L)
+      yield (s"k$k", o, 10L, o >= 70L, if (o < 70L) o else 0L))
+    assert(lots.size == 100 && lots.values.forall(_ == ((4350L, 300L, 700L, 300L, 0L))))
   }
 
   test("oversell surfaces as unmatched, never costed; sell-before-buy still FIFO") {

@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.Graph
+import org.apache.spark.sql.functions.{array, col, explode, expr, lit, struct, when}
 import org.scalatest.funsuite.AnyFunSuite
 
 class GraphSpec extends AnyFunSuite {
@@ -87,6 +88,15 @@ class GraphSpec extends AnyFunSuite {
     val k4 = (for { a <- 1L to 4L; b <- 1L to 4L if a < b }
       yield (a + off, b + off)).toDF("s", "d")
     assert(Graph.triangleCount(k4, "s", "d").as[Long].head() == 4L)
+    // 200 disjoint triangles at ids near 1e9, past any packable domain
+    val triOff = 1000000000L
+    val tris = spark.range(200L).toDF("t").select(explode(array(
+        struct((col("t") * 3 + triOff).as("s"), (col("t") * 3 + 1 + triOff).as("d")),
+        struct((col("t") * 3 + 1 + triOff).as("s"), (col("t") * 3 + 2 + triOff).as("d")),
+        struct((col("t") * 3 + 2 + triOff).as("s"), (col("t") * 3 + triOff).as("d"))))
+        .as("e"))
+      .select(col("e.s").as("s"), col("e.d").as("d"))
+    assert(Graph.triangleCount(tris, "s", "d").as[Long].head() == 200L)
   }
 
   test("triangleCount matches brute force on random graphs at random huge id offsets") {
@@ -165,6 +175,40 @@ class GraphSpec extends AnyFunSuite {
     assert(bfs(comp, Seq(1L), 5) == Map(1L -> 0L, 2L -> 1L))
   }
 
+  test("shortestPaths: a planted hub settles in one hop, and AQE splits its block") {
+    // the shuffle regime of an at-scale frontier: broadcast and
+    // partition coalescing off, and AQE's skew thresholds scaled down
+    // with the data (100x below a 2M-edge hub at 4m/2m). With the skew
+    // split off, the hub's reducer reads all 20000 hub edges
+    val hubDeg = 20000L
+    val others = 5000L
+    val edges = spark.range(hubDeg).select(lit(0L).as("a"), (col("id") + 10000000L).as("b"))
+      .unionAll(spark.range(1L, others + 1L).select(col("id").as("a"),
+        (col("id") + 20000000L).as("b")))
+    val maxTask = new java.util.concurrent.atomic.AtomicLong(0L)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        Option(te.taskMetrics).foreach(m =>
+          maxTask.accumulateAndGet(m.shuffleReadMetrics.recordsRead, math.max): Unit)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val byDist = try TestSpark.withConf(
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+        "spark.sql.adaptive.coalescePartitions.enabled" -> "false",
+        "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2.0",
+        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "40k",
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "20k") {
+      Graph.shortestPaths(edges, "a", "b", spark.range(0L, others + 1L).toDF("node"), "node",
+        maxHops = 1).groupBy("dist").count().as[(Long, Long)].collect().toMap
+    } finally {
+      org.apache.spark.graftglue.Bus.drain(spark.sparkContext)
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(byDist == Map(0L -> (others + 1L), 1L -> (hubDeg + others)))
+    assert(maxTask.get() < hubDeg / 2,
+      s"one task read ${maxTask.get()} shuffle records of a $hubDeg-edge hub")
+  }
+
   test("subtreeRollup sums whole subtrees, forest roots independent") {
     import spark.implicits._
     //      1(10)           6(1)
@@ -181,6 +225,16 @@ class GraphSpec extends AnyFunSuite {
     assert(out == Map(
       1L -> ((4L, 100L)), 2L -> ((2L, 60L)), 3L -> ((1L, 30L)),
       4L -> ((1L, 40L)), 6L -> ((1L, 1L))))
+    // a 10-ary forest over 1..1000 (roots 1..9, three levels below):
+    // the root subtrees partition it, and a leaf rolls up only itself
+    val size = 1000L
+    val wide = spark.range(1L, size + 1).toDF("id").select(col("id"),
+      when(col("id") >= 10L, expr("id div 10")).as("parent"), (col("id") % 7L).as("v"))
+    val roll = Graph.subtreeRollup(wide, "id", "parent", "v", maxDepth = 7)
+      .as[(Long, Long, Long)].collect()
+    val roots = roll.filter(_._1 < 10L)
+    assert(roots.map(_._2).sum == size && roots.map(_._3).sum == (1L to size).map(_ % 7L).sum)
+    assert(roll.filter(_._1 * 10L > size).forall(_._2 == 1L))
   }
 
   test("subtreeRollup refuses chains deeper than maxDepth instead of undercounting") {
@@ -239,6 +293,16 @@ class GraphSpec extends AnyFunSuite {
     val got = Graph.criticalPath(edges, "u", "v", "w")
       .orderBy("id").as[(Long, Long)].collect().toSeq
     assert(got == Seq((1L, 0L), (2L, 3L), (3L, 2L), (4L, 12L)))
+    // the x2/x3 divisor DAG over 1..2000, weight v % 7 + 1: the only
+    // path into 2^k is 1 -> 2 -> ... -> 2^k, so its length has a closed form
+    val keys = spark.range(1L, 2001L).toDF("n")
+    def by(k: Int) = keys.filter(col("n") % k === 0L)
+      .select(expr(s"n div $k").as("u"), col("n").as("v"), (col("n") % 7L + 1L).as("w"))
+    val pow2 = (1 to 10).scanLeft(0L)((len, i) => len + (1L << i) % 7L + 1L).drop(1)
+      .zipWithIndex.map { case (len, i) => (1L << (i + 1)) -> len }.toMap
+    val cp = Graph.criticalPath(by(2).unionByName(by(3)), "u", "v", "w")
+      .filter(col("id").isin(pow2.keys.toSeq: _*)).as[(Long, Long)].collect().toMap
+    assert(cp == pow2)
   }
 
   test("criticalPath fails loudly on a reachable cycle instead of undercounting") {
@@ -272,6 +336,17 @@ class GraphSpec extends AnyFunSuite {
     val got = Graph.cycleStats(nxt, "id", "n")
       .orderBy("cycle_id").as[(Long, Long)].collect().toSeq
     assert(got == Seq((1L, 3L), (6L, 1L)))
+    // the functional graph x -> x*x + 1 mod m: every reported cycle,
+    // re-walked from its label, returns in exactly `size` steps and
+    // never passes a smaller node
+    val m = 2000L
+    val sq = spark.range(0L, m).toDF("id").select(col("id"), ((col("id") * col("id") + 1L) % m).as("n"))
+    val cycles = Graph.cycleStats(sq, "id", "n").as[(Long, Long)].collect().toSeq
+    assert(cycles.nonEmpty)
+    cycles.foreach { case (c, size) =>
+      val walk = Iterator.iterate(c)(v => (v * v + 1L) % m).drop(1).take(size.toInt).toSeq
+      assert(walk.last == c && walk.init.forall(_ > c), s"cycle $c size $size: $walk")
+    }
   }
 
   test("cycleStats on a pure permutation reports every node on a cycle") {

@@ -22,6 +22,13 @@ class LayersSpec extends AnyFunSuite {
       ("k", 0L, 20L, 1L, 1L, 10L),
       ("k", 20L, 40L, 2L, 2L, 7L),
       ("k", 40L, 100L, 1L, 1L, 10L)))
+    // 100 keys: a base [0, 1000) under 19 overrides [50j, 50j + 20):
+    // 19 override segments and 20 base pieces tile the base exactly
+    val tiled = run(for (k <- 0 until 100; j <- 0L until 20L) yield
+      if (j == 0L) (s"k$k", 0L, 1000L, 1L, 0L, 0L)
+      else (s"k$k", 50L * j, 50L * j + 20L, 2L, j, 7L * j)).groupBy(_._1)
+    assert(tiled.size == 100 && tiled.values.forall(segs =>
+      segs.size == 39 && segs.toSeq.map(r => r._3 - r._2).sum == 1000L))
   }
 
   test("uncovered gaps produce no row; disjoint same-rule spans stay separate") {

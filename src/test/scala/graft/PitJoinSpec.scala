@@ -27,6 +27,16 @@ class PitJoinSpec extends AnyFunSuite {
     assert(out(103L).contains("b"), "valid_to is exclusive: boundary flips to next state")
     assert(out(104L).contains("b"), "open current interval covers the future")
     assert(out(105L).isEmpty, "key with no dimension rows")
+    // 1000 keys x states [0, 1000), [1000, 2000), [2000, open): each of
+    // 5000 facts lands in state min(ts div 1000, 2)
+    val states = spark.range(1000L).select($"id".as("k"), explode(sequence(lit(0L), lit(2L))).as("s"))
+      .select($"k", concat(lit("st"), $"s").as("state"), ($"s" * 1000L).as("valid_from"),
+        when($"s" < 2L, ($"s" + 1L) * 1000L).as("valid_to"))
+    val spread = spark.range(5000L).select($"id".as("fid"), ($"id" % 1000L).as("k"),
+      (($"id" * 2654435761L) % 3000L).as("ts"))
+    val pit = Scd.pitJoin(spread, states, "k", "k", "ts", Seq("state"))
+    assert(pit.count() == 5000L && pit.filter($"pit_state".isNull ||
+      $"pit_state" =!= concat(lit("st"), least(expr("ts div 1000"), lit(2L)))).isEmpty)
   }
 
   test("pitJoin: coverage gaps yield null, zero-width intervals never match") {

@@ -52,6 +52,17 @@ class SeriesOpsSpec extends AnyFunSuite {
       .select(col("v"), graft.functions.expressions.searchSortedLong(col("v"), breaks).as("b"))
       .as[(Long, Int)].collect().toMap
     assert(out == Map(5L -> 0, 10L -> 1, 11L -> 1, 20L -> 2, 29L -> 2, 30L -> 3, 99L -> 3))
+    // 20k hash-spread values over 100 bands: the per-band counts equal
+    // the BETWEEN join's that the binary search replaces
+    val bands = Array.tabulate(100)(i => i * 10000L)
+    val facts = spark.range(20000L).select((($"id" * 2654435761L) % 1000000L).as("v"))
+    val viaSearch = facts.groupBy(graft.functions.expressions.searchSortedLong(col("v"), bands)
+      .cast("long").as("b")).count()
+    val bandTable = (0 until 100).map(i => (bands(i),
+      if (i == 99) Long.MaxValue else bands(i + 1), i + 1L)).toDF("lo", "hi", "b")
+    val viaJoin = facts.join(broadcast(bandTable), $"v" >= $"lo" && $"v" < $"hi")
+      .groupBy("b").count()
+    assert(viaSearch.as[(Long, Long)].collect().toMap == viaJoin.as[(Long, Long)].collect().toMap)
   }
 
   test("searchSortedLong rejects unsorted breaks") {
@@ -77,6 +88,10 @@ class SeriesOpsSpec extends AnyFunSuite {
     assert(out == List((0L, 1L, 2L)), "only the complete interval participates")
   }
 
+  /** 20k (entity, day) rows: 500 entities over 365 days. */
+  private lazy val activity = spark.range(20000L)
+    .select(($"id" % 500L).as("e"), (($"id" * 1103515245L + $"id" % 97) % 365L).as("d"))
+
   test("rollingDistinctApprox: deterministic across runs, within band of exact") {
     val rnd = new scala.util.Random(0x40110)
     val rows = Seq.fill(3000)((rnd.nextInt(400).toLong, rnd.nextInt(60).toLong))
@@ -89,6 +104,14 @@ class SeriesOpsSpec extends AnyFunSuite {
     run().foreach { case (day, approx) =>
       val e = exact(day)
       assert(math.abs(approx - e) * 10 <= e, s"day $day: approx $approx vs exact $e")
+    }
+    // a 28-day window over a year of activity
+    val exact28 = Rolling.rollingDistinct(activity, "e", "d", 28).as[(Long, Long)].collect().toMap
+    val approx28 = Rolling.rollingDistinctApprox(activity, "e", "d", 28)
+      .as[(Long, Double)].collect()
+    assert(approx28.length == 365)
+    approx28.foreach { case (day, approx) =>
+      assert(math.abs(approx - exact28(day)) * 10 <= exact28(day), s"w=28 day $day: $approx")
     }
   }
 
@@ -136,6 +159,15 @@ class SeriesOpsSpec extends AnyFunSuite {
     val out = Rolling.rollingDistinct(df, "e", "d", 7)
       .as[(Long, Long)].collect().sortBy(_._1).toList
     assert(out == List((10L, 1L), (11L, 1L), (12L, 2L)))
+    // a year of activity: every day of windows 1 and 7 equals the
+    // distinct count recomputed directly from the rows
+    val rows = activity.as[(Long, Long)].collect()
+    for (w <- Seq(1, 7)) {
+      val want = (0L until 365L).map(day =>
+        day -> rows.collect { case (e, d) if d > day - w && d <= day => e }.distinct.length.toLong)
+      assert(Rolling.rollingDistinct(activity, "e", "d", w).as[(Long, Long)].collect()
+        .sortBy(_._1).toSeq == want, s"w=$w")
+    }
   }
 
   test("unionCoverage merges overlaps once, splits on gaps, keeps keys apart") {
@@ -151,6 +183,17 @@ class SeriesOpsSpec extends AnyFunSuite {
       .as[(Long, Long, Long, Long, Long, Long)].collect().toSet
     // key 1: [0,15) (adjacent intervals chain: covered 15) + [20,25) = 20
     assert(out == Set((1L, 4L, 2L, 20L, 25L, 0L), (2L, 1L, 1L, 1L, 1L, 0L)))
+    // 100 keys x 100 width-15 intervals: even keys step 10 and chain
+    // into one segment covering 99*10 + 15; odd keys step 20 and leave
+    // 100 segments covering 100*15
+    val regimes = spark.range(10000L).select(($"id" % 100L).as("k"), expr("id div 100").as("j"))
+      .withColumn("step", when($"k" % 2 === 0, 10L).otherwise(20L))
+      .select($"k", ($"j" * $"step").as("s"), ($"j" * $"step" + 15L).as("e"))
+    val byKey = Intervals.unionCoverage(regimes, "k", "s", "e")
+      .select("k", "n_segments", "covered", "n_invalid").as[(Long, Long, Long, Long)].collect()
+    assert(byKey.length == 100 && byKey.forall { case (k, segs, covered, invalid) =>
+      invalid == 0L && (if (k % 2 == 0) segs == 1L && covered == 1005L
+                        else segs == 100L && covered == 1500L) })
   }
 
   test("unionCoverage: contained intervals never shrink the running max") {
@@ -229,6 +272,15 @@ class SeriesOpsSpec extends AnyFunSuite {
       (1L, 10L, 100L, 3L, 7L),
       (2L, 8L, 30L, 0L, -1L),
       (3L, 8L, 0L, 0L, -1L)))
+    // 100 keys, each flat at ref for 50 points then ref + 40 (slack 10,
+    // h 500): S = 30*(o - 49) from o = 50, so the first alarm is o = 66
+    // (S = 510), 34 points alarm and the max is 1500
+    val shift = spark.range(10000L).select(($"id" % 100L).as("k"), expr("id div 100").as("o"))
+      .select($"k", $"o", when($"o" < 50L, 100L).otherwise(140L).as("x"),
+        lit(100L).as("ref"), lit(10L).as("slack"), lit(500L).as("h"))
+    val profiles = Balance.cusumAlarms(shift, "k", "o", "x", "ref", "slack", "h")
+      .select("max_cusum", "n_alarm", "first_alarm_ord").as[(Long, Long, Long)].collect()
+    assert(profiles.length == 100 && profiles.forall(_ == ((1500L, 34L, 66L))))
   }
 
   test("cusumAlarms equals the sequential CUSUM fold on seeded random series") {

@@ -13,6 +13,12 @@ class SkewSpec extends AnyFunSuite {
     (1 to 100).map(i => (i.toLong % 7 + 2, s"cold$i"))).toDF("k", "payload")
   private lazy val dims = (1L to 9L).map(i => (i, s"dim$i")).toDF("dk", "label")
 
+  /** Broadcast and partition coalescing off: every join shuffles on its
+   * key, as one whose build side is too large to broadcast does. */
+  private def shuffleRegime[T](f: => T): T = TestSpark.withConf(
+    "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+    "spark.sql.adaptive.coalescePartitions.enabled" -> "false")(f)
+
   test("saltedJoin equals the unsalted join") {
     val plain = facts.join(dims, $"k" === $"dk").select("k", "payload", "label")
     val salted = Skew.saltedJoin(facts, dims, "k", "dk", saltFactor = 8)
@@ -80,6 +86,21 @@ class SkewSpec extends AnyFunSuite {
       .withColumn("__salt", pmod(xxhash64($"rec_id"), lit(8L)))
       .groupBy("__salt").count().count()
     assert(spreadBuckets >= 6, s"giant block should spread over salts, got $spreadBuckets")
+    // the shape salting is for: one block holds half the records, the
+    // join shuffles on the block key, and 160-char names at maxDist 8
+    // make the verify the dominant cost
+    val rnd = new scala.util.Random(0x11)
+    val bases = Seq.fill(40)(rnd.alphanumeric.take(160).mkString)
+    val records = (0L until 400L).map { i =>
+      val chars = bases((i % 40).toInt).toCharArray
+      (1 to rnd.nextInt(6)).foreach(_ => chars(rnd.nextInt(160)) = rnd.nextPrintableChar())
+      (i, new String(chars), if (i % 2 == 0) "giant" else s"b${i % 64}")
+    }.toDF("rec_id", "name", "blk")
+    def links(salts: Int) = shuffleRegime(Linkage.linkByEditDistance(records, "rec_id", "name",
+      Seq("blk"), maxDist = 8, salts = salts).as[(Long, Long, Long)].collect().toSeq)
+    val blocked = links(1)
+    assert(blocked.nonEmpty && blocked.distinct == blocked)
+    assert(links(32).sorted == blocked.sorted, "salted pairs drifted from blocked")
   }
 
   test("adaptiveSaltedJoin equals the unsalted join and salts only the hot slice") {
@@ -108,6 +129,20 @@ class SkewSpec extends AnyFunSuite {
         .select("k", "pv", "bv").as[(Long, Long, Long)].collect().sorted.toList
       assert(adaptive == plain, s"threshold $thr")
     }
+  }
+
+  test("plain, full-salt and adaptive-salt joins agree per group under a 30% hot key") {
+    val probe = spark.range(10000L).select(
+      when($"id" % 10 < 3, 500L).otherwise(($"id" * 2654435761L) % 2000L).as("k"),
+      ($"id" % 1000L).as("w"))
+    val build = spark.range(2000L).select($"id".as("bk"), ($"id" % 97L).as("grp"))
+    def rollup(j: org.apache.spark.sql.DataFrame) = shuffleRegime(
+      j.groupBy("grp").agg(count(lit(1)), sum("w")).as[(Long, Long, Long)].collect().toSet)
+    val plain = rollup(probe.join(build, $"k" === $"bk"))
+    assert(plain.toSeq.map(_._2).sum == 10000L)
+    assert(rollup(Skew.saltedJoin(probe, build, "k", "bk", saltFactor = 16)) == plain)
+    assert(rollup(Skew.adaptiveSaltedJoin(probe, build, "k", "bk",
+      saltFactor = 16, hotThreshold = 100L)) == plain)
   }
 
   test("adaptiveSaltedJoin preserves probe rows under left outer") {

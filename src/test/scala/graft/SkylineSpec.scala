@@ -39,6 +39,16 @@ class SkylineSpec extends AnyFunSuite {
     // strictly increasing x, DECREASING y: only the cheapest survives
     val anti = (1L to 20L).map(i => ("t", i, i * 10L, 1000L - i))
     assert(run(anti, 4) == Set(("t", 1L)))
+    // 2000 rows in 64 buckets: a staircase keeps every row; a plateau
+    // of 100 points per x keeps only the global (0, 99); a comb keeps
+    // exactly the top-y row of each of its 20 x values
+    def big(x: String, y: String) = Skyline.frontier(
+      spark.range(2000L).selectExpr("'g' AS g", "id", s"$x AS x", s"$y AS y"),
+      Seq("g"), "x", "y", 64).select("x", "y").as[(Long, Long)].collect()
+    assert(big("id", "id").length == 2000)
+    assert(big("id div 100", "id % 100").toSet == Set((0L, 99L)))
+    val comb = big("id div 100", "id div 100 + id % 100")
+    assert(comb.length == 20 && comb.forall { case (x, y) => y == x + 99L })
   }
 
   test("x spans wider than Long.MaxValue do not wrap the bucket width (ADVICE r16)") {

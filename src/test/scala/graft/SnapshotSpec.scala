@@ -595,6 +595,29 @@ class SnapshotSpec extends AnyFunSuite {
       e2.getMessage)
   }
 
+  test("mergeRefRows over 5000 keys with disjoint change classes lands on the closed form") {
+    // branch: k % 3 == 0 gets v + 1, k % 21 == 2 is deleted; target:
+    // k % 3 == 1 gets v + 100, 1000 new keys. 21m + 2 is 2 mod 3, so
+    // the change sets never meet and the merge is conflict-free
+    val n = 5000L
+    val root = freshRoot()
+    val base = spark.range(n).select($"id".as("k"), $"id".as("v"))
+    Snapshot.publish(spark, root, Map("t" -> base))
+    Snapshot.tag(spark, root, "prod", 1L)
+    Snapshot.branch(spark, root, "dev", "prod")
+    Snapshot.publishToRef(spark, root, "dev", Map("t" -> base.filter(!($"k" % 21 === 2))
+      .selectExpr("k", "CASE WHEN k % 3 = 0 THEN v + 1 ELSE v END AS v")))
+    Snapshot.publishToRef(spark, root, "prod", Map("t" -> base
+      .selectExpr("k", "CASE WHEN k % 3 = 1 THEN v + 100 ELSE v END AS v")
+      .unionAll(spark.range(n, n + 1000).select($"id".as("k"), ($"id" + 7L).as("v")))))
+    Snapshot.mergeRefRows(spark, root, "dev", "prod", Map("t" -> Seq("k")))
+    val merged = Snapshot.readTag(spark, root, "t", "prod").as[(Long, Long)].collect().toMap
+    val want = (0L until n).filter(_ % 21 != 2).map(k =>
+        k -> (if (k % 3 == 0) k + 1 else if (k % 3 == 1) k + 100 else k)) ++
+      (n until n + 1000).map(k => k -> (k + 7L))
+    assert(merged == want.toMap)
+  }
+
   test("history (A37): ops, parents, refs, orphan attempts; sidecar-less versions read as unknown") {
     val root = freshRoot()
     val t0 = Seq((1L, "a"), (2L, "b")).toDF("k", "s")

@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.{Concentration, Contingency, Correlation, Interpolate, Mode, Regression}
+import org.apache.spark.sql.functions.{array, concat, explode, expr, lit, when}
 import org.scalatest.funsuite.AnyFunSuite
 
 class StatsOpsSpec extends AnyFunSuite {
@@ -13,6 +14,13 @@ class StatsOpsSpec extends AnyFunSuite {
     val r = Regression.groupedOls(df, Seq("g"), "x", "y")
       .as[(String, Long, Long, Long)].collect().toList
     assert(r == List(("g", 21L, 3000000L, 7L)))
+    // 100 groups of 100 points on y = 7x + g
+    val lines = spark.range(10000L).select(($"id" % 100L).as("g"), expr("id div 100").as("x"))
+      .withColumn("y", $"x" * 7L + $"g")
+    val fits = Regression.groupedOls(lines, Seq("g"), "x", "y")
+      .as[(Long, Long, Long, Long)].collect()
+    assert(fits.length == 100 && fits.forall { case (g, n, slope, icpt) =>
+      n == 100L && slope == 7000000L && icpt == g })
   }
 
   test("groupedOls matches the closed form on a non-linear group") {
@@ -50,6 +58,11 @@ class StatsOpsSpec extends AnyFunSuite {
       .as[(String, Long, Long, Boolean)].collect().sortBy(_._2).toList
     assert(r == List(("a", 0L, 10L, false), ("a", 1L, 15L, true),
       ("a", 2L, 20L, true), ("a", 3L, 25L, true), ("a", 4L, 30L, false)))
+    // 10 keys from (0, 0) to (1000, 1000): every filled value is its day
+    val spans = spark.range(10L).select($"id".as("k"), explode(array(lit(0L), lit(1000L))).as("d"))
+      .withColumn("v", $"d")
+    val filled = Interpolate.linearFill(spans, Seq("k"), "d", "v")
+    assert(filled.count() == 10010L && filled.filter($"v" =!= $"d").isEmpty)
   }
 
   test("linearFill truncates a negative slope toward zero (div semantics)") {
@@ -75,6 +88,13 @@ class StatsOpsSpec extends AnyFunSuite {
     val r = Mode.groupedMode(df, Seq("k"), "v")
       .as[(String, String, Long, Long)].collect().toList
     assert(r == List(("g", "a", 2L, 3L)))
+    // a 9000-row hot key with ten values tied at 900, plus 15 cold keys
+    val hot = spark.range(9045L).select(
+      when($"id" < 9000L, lit("hot")).otherwise(concat(lit("c"), $"id" % 15L)).as("k"),
+      when($"id" < 9000L, concat(lit("v"), $"id" % 10L))
+        .otherwise(concat(lit("w"), $"id" % 2L)).as("v"))
+    assert(Mode.groupedMode(hot, Seq("k"), "v").filter($"k" === "hot")
+      .as[(String, String, Long, Long)].collect().toList == List(("hot", "v0", 900L, 10L)))
   }
 
   test("groupedMode is partitioning-invariant on skewed data") {
@@ -152,6 +172,11 @@ class StatsOpsSpec extends AnyFunSuite {
       .toDF("g", "v", "id")
     assert(Concentration.giniPpm(df, Seq("g"), "v", "id")
       .select("gini_ppm").as[Long].head() == 250000L)
+    // 10 groups holding 1..1000: G = (m - 1) / (3m) = 333000 ppm
+    val ramps = spark.range(10000L)
+      .select(($"id" % 10L).as("g"), expr("id div 10 + 1").as("v"), $"id")
+    assert(Concentration.giniPpm(ramps, Seq("g"), "v", "id").select("gini_ppm", "n")
+      .as[(Long, Long)].collect().toSeq == Seq.fill(10)((333000L, 1000L)))
     // duplicated value block: internal order of the tie cannot matter
     val tied = Seq(("g", 2L, 1L), ("g", 2L, 2L), ("g", 2L, 3L), ("g", 6L, 4L))
     val a = Concentration.giniPpm(tied.toDF("g", "v", "id"), Seq("g"), "v", "id")

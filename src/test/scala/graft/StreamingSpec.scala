@@ -3,7 +3,7 @@ package graft
 import graft.streaming.{Event, EventStream}
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.functions.{col, expr, lit}
+import org.apache.spark.sql.functions.{col, expr, lit, timestamp_micros}
 import org.scalatest.funsuite.AnyFunSuite
 
 class StreamingSpec extends AnyFunSuite {
@@ -1016,6 +1016,14 @@ class StreamingSpec extends AnyFunSuite {
       q.processAllAvailable()
       assert(spark.table("anom").where($"user_id" === 8 && $"is_anomaly").isEmpty)
     } finally q.stop()
+    // batch, 20 keys x 600 steady 1.00 events with a 100.00 spike at
+    // position 500: exactly one flag per key
+    val spikes = spark.range(12000L).select(($"id" % 20L).as("user_id"), $"id".as("event_id"),
+        expr("timestamp_micros((id div 20) * 1000000)").as("ts"), lit("m").as("event_type"),
+        expr("CASE WHEN id div 20 = 500 THEN 100.0D ELSE 1.0D END").as("value"))
+      .as[Event]
+    assert(EventStream.anomalyStream(spikes).filter($"is_anomaly")
+      .select("user_id").as[Long].collect().sorted.toSeq == (0L until 20L))
   }
 
   test("anomalyStream streaming verdicts equal the batch full-history twin") {
@@ -1190,6 +1198,37 @@ class StreamingSpec extends AnyFunSuite {
     val covered = iv.flatMap { case (s, e) =>
       (s / hourUs) to ((e - 1) / hourUs) }.toSet
     assert(got.keySet == covered)
+    // a 1440 s day, 4 intervals of 30 s starting at every second, 60 s
+    // buckets: each bucket of the day peaks at 30 * 4 open intervals;
+    // the spill bucket 24 peaks at its start with 29 * 4 still open
+    val day = spark.range(1440L * 4).select(timestamp_micros(($"id" % 1440L) * 1000000L).as("ts"))
+    val peaks = EventStream.concurrencyStream(day, "ts", 30L * 1000000L, 60L * 1000000L)
+      .collect().map(p => p.bucket -> p.peak).toMap
+    assert(peaks == ((0L to 23L).map(_ -> 120L) :+ (24L -> 116L)).toMap)
+  }
+
+  test("sessionize and dedupStream over a parquet file source agree with their batch answers") {
+    import spark.implicits._
+    // the file source reads a directory: stage one events file in one
+    val dir = java.nio.file.Files.createTempDirectory("events_stream").toString + "/events"
+    val events = (1L to 300L).map(i =>
+      Event(i % 7, i, ts(i * 37 % 900 + (if (i % 5 == 0) 2000 else 0)), "click", (i % 11).toDouble))
+    events.toDS().coalesce(1).write.parquet(dir)
+    val source = spark.readStream.schema(spark.read.parquet(dir).schema).parquet(dir)
+    val sq = toMemory(EventStream.sessionize(source.as[Event], 1800), "file_sessions")
+    val dq = toMemory(EventStream.dedupStream(source.select("event_id", "ts"), Seq("event_id")),
+      "file_dedup")
+    try {
+      sq.processAllAvailable()
+      dq.processAllAvailable()
+      // sessions still open when the file is drained never close, so the
+      // stream's sessions are a subset of the batch call's
+      val streamed = spark.table("file_sessions").as[graft.streaming.Session].collect()
+      val batch = EventStream.sessionize(events.toDS(), 1800).collect().toSet
+      assert(streamed.nonEmpty && streamed.forall(batch.contains),
+        s"${streamed.filterNot(batch.contains).toSeq} not among the batch sessions")
+      assert(spark.table("file_dedup").count() == events.size)
+    } finally { sq.stop(); dq.stop() }
   }
 
   test("snapshotPublishSink: per-batch gated versions, time travel, duplicate keys refused") {

@@ -1,7 +1,7 @@
 package graft
 
 import graft.sinks.TableSink
-import org.apache.spark.sql.functions.{input_file_name, max, min, sum}
+import org.apache.spark.sql.functions.{input_file_name, max, min, sum, when}
 import org.scalatest.funsuite.AnyFunSuite
 
 class TableSinkSpec extends AnyFunSuite {
@@ -256,6 +256,24 @@ class TableSinkSpec extends AnyFunSuite {
     assert(back.toSeq == Seq((1L, "A2"), (2L, "B3"), (3L, "c"), (4L, "d")))
     assert(!spark.read.parquet(dir).columns.contains("_op"),
       "op marker must not leak into the table")
+    // 10 batches over 3000 keys: batch b deletes k % 97 == b and
+    // upserts k % 31 == b (both: upsert), so a later batch can bring a
+    // deleted key back; the table is the changelog replayed per key
+    val steady = dir + "_steady"
+    val base = spark.range(3000L).select($"id".as("k"), ($"id" % 1000L).as("v"))
+    TableSink.writeTruncate(base, steady)
+    for (b <- 1 to 10)
+      TableSink.applyCdc(spark, steady, base.filter($"k" % 97 === b || $"k" % 31 === b)
+        .select($"k", ($"v" + b).as("v"), when($"k" % 97 === b && $"k" % 31 =!= b, "D")
+          .otherwise("U").as("_op")), Seq("k"))
+    val replayed = (0L until 3000L).flatMap { k =>
+      (1 to 10).filter(b => k % 97 == b || k % 31 == b).lastOption match {
+        case None => Some(k -> k % 1000L)
+        case Some(b) if k % 97 == b && k % 31 != b => None
+        case Some(b) => Some(k -> (k % 1000L + b))
+      }
+    }
+    assert(spark.read.parquet(steady).as[(Long, Long)].collect().sorted.toSeq == replayed)
   }
 
   test("applyCdc: delete-only first batch does not plant an empty table") {

@@ -118,6 +118,17 @@ class TemporalJoinSpec extends AnyFunSuite {
     assert(got(3L) == ((None, None)))
     // lid 4: key with no right rows -> nulls
     assert(got(4L) == ((None, None)))
+    // 1000 keys quoted at 0, 1000 and 2000; 5000 facts: the nearest is
+    // ts rounded to a thousand, remainder 500 backward, capped at 2000
+    val quotes = spark.range(1000L).select($"id".as("rk"),
+      explode(sequence(lit(0L), lit(2000L), lit(1000L))).as("rt"))
+    val facts = spark.range(5000L).select($"id".as("fid"), ($"id" % 1000L).as("k"),
+      (($"id" * 2654435761L) % 3000L).as("ts"))
+    val nearest = graft.operators.AsOf.asofNearest(facts, quotes, "k", "rk", "ts", "rt",
+      Seq("rt"), outPrefix = "m_")
+    val want = when($"ts" % 1000L <= 500L, expr("ts div 1000") * 1000L)
+      .otherwise(least(lit(2000L), (expr("ts div 1000") + 1L) * 1000L))
+    assert(nearest.count() == 5000L && nearest.filter($"m_rt".isNull || $"m_rt" =!= want).isEmpty)
   }
 
   test("asofNearest equals the quadratic argmin on random data") {
