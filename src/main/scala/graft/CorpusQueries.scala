@@ -609,7 +609,7 @@ object CorpusQueries {
   private def qAnnIvfDelete(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val emb = t(s, dir, "embeddings")
-    val idx = s"${graft.Scratch.root(s)}/ivf_delete_${sinkSeq.incrementAndGet()}"
+    val idx = graft.Scratch.callDir(s, "ivf_delete")
     val mid = emb.agg(((min("vec_id") + max("vec_id")) / 2).cast("long"))
       .head().getLong(0)
     graft.similarity.Ann.buildIvfIndex(

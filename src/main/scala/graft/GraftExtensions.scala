@@ -116,7 +116,10 @@ object GraftExtensions {
     ("lang_id", "lang_id(text) - heuristic language code (marker-word profile)",
       arity("lang_id", 1)(args => LangId(args.head, TextFunctions.langMarkers))),
     ("word_chunks", "word_chunks(text, k) - non-overlapping k-word chunks (short tail kept)",
-      arity("word_chunks", 2)(args => WordChunks(args.head, intArg("word_chunks", args, 1, 8)))),
+      arity("word_chunks", 2)(args => {
+        val k = intArg("word_chunks", args, 1, 8)
+        WordChunksStrided(args.head, k, k)
+      })),
     ("hash_containment", "hash_containment(a, b) - |A∩B|/|A| over sorted distinct hash arrays",
       arity("hash_containment", 2)(args => HashContainment(args.head, args(1)))),
     ("word_chunks_strided", "word_chunks_strided(text, window, stride) - overlapping window-word chunks every stride words",

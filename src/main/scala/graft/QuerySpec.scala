@@ -122,8 +122,6 @@ private[graft] object QuerySupport {
       lit(" via https://site"), pmod(col("doc_id"), lit(50)).cast("string"),
       lit(".example.org/u?id="), col("doc_id").cast("string")))
 
-  private[graft] val sinkSeq = new java.util.concurrent.atomic.AtomicInteger(0)
-
   /** The C12d/D32 shared corpus: per doc one payload with REAL header
    * bytes built in pure SQL (constructor and parser share no code) —
    * PNG / WAV (planted JUNK chunk every 8th) / JPEG (planted APP1

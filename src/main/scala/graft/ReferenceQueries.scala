@@ -134,7 +134,7 @@ object ReferenceQueries {
    * fidelity AND that v1 stayed intact after v2's publish (version
    * immutability is what makes time travel trustworthy). */
   private def qSnapshotPublish(s: SparkSession, dir: String): DataFrame = {
-    val root = s"${graft.Scratch.root(s)}/snap_${sinkSeq.incrementAndGet()}"
+    val root = graft.Scratch.callDir(s, "snap")
     def rollup(onlyPositive: Boolean) = {
       val c = t(s, dir, "customer")
       (if (onlyPositive) c.filter(col("c_acctbal") > 0) else c)
@@ -168,7 +168,7 @@ object ReferenceQueries {
    * At 100 TB this is the nightly-view shape: delta-sized aggregation
    * + view-sized merge + one pointer flip, never a history rescan. */
   private def qMvRefresh(s: SparkSession, dir: String): DataFrame = {
-    val root = s"${graft.Scratch.root(s)}/mv_${sinkSeq.incrementAndGet()}"
+    val root = graft.Scratch.callDir(s, "mv")
     val o = t(s, dir, "orders").select(col("o_orderkey"),
       col("o_orderpriority"), cents(col("o_totalprice")).as("rev"))
     def rollup(m: Long) = o.filter(col("o_orderkey") % 3 === m)
@@ -201,7 +201,7 @@ object ReferenceQueries {
    * touched SOME but not ALL files — the efficiency claim as a
    * machine-checked boolean rather than prose. */
   private def qTargetedDelete(s: SparkSession, dir: String): DataFrame = {
-    val root = s"${graft.Scratch.root(s)}/tdel_${sinkSeq.incrementAndGet()}"
+    val root = graft.Scratch.callDir(s, "tdel")
     val o = t(s, dir, "orders").select(col("o_custkey"),
       col("o_orderpriority"), cents(col("o_totalprice")).as("rev"))
     graft.sinks.TableSink.writeSorted(o, root, Seq("o_custkey"),
@@ -225,7 +225,7 @@ object ReferenceQueries {
    * The oracle computes the same diff directly from the source
    * table's two slices. */
   private def qSnapshotChanges(s: SparkSession, dir: String): DataFrame = {
-    val root = s"${graft.Scratch.root(s)}/chg_${sinkSeq.incrementAndGet()}"
+    val root = graft.Scratch.callDir(s, "chg")
     def rollup(onlyPositive: Boolean) = {
       val c = t(s, dir, "customer")
       (if (onlyPositive) c.filter(col("c_acctbal") > 0) else c)
@@ -248,7 +248,7 @@ object ReferenceQueries {
    * a publish (tag still serves v1 after v2 lands) and that promotion
    * re-points without data movement. */
   private def qSnapshotTag(s: SparkSession, dir: String): DataFrame = {
-    val root = s"${graft.Scratch.root(s)}/tag_${sinkSeq.incrementAndGet()}"
+    val root = graft.Scratch.callDir(s, "tag")
     def rollup(onlyPositive: Boolean) = {
       val c = t(s, dir, "customer")
       (if (onlyPositive) c.filter(col("c_acctbal") > 0) else c)
@@ -285,7 +285,7 @@ object ReferenceQueries {
    * previous one's claim. */
   private def qGovernedRelease(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val root = s"${graft.Scratch.root(s)}/release_${sinkSeq.incrementAndGet()}"
+    val root = graft.Scratch.callDir(s, "release")
     val qis = Seq("c_nationkey", "c_mktsegment", "bal_band")
     def projected(bandCents: Long) = t(s, dir, "customer")
       .withColumn("bal_cents", cents(col("c_acctbal")))
@@ -330,7 +330,7 @@ object ReferenceQueries {
    * feed that dropped or invented any row fails the row, not a log
    * line. */
   private def qChangeApply(s: SparkSession, dir: String): DataFrame = {
-    val root = s"${graft.Scratch.root(s)}/chgapply_${sinkSeq.incrementAndGet()}"
+    val root = graft.Scratch.callDir(s, "chgapply")
     def rollup(maxNation: Int) = t(s, dir, "customer")
       .filter(col("c_nationkey") < maxNation)
       .groupBy("c_nationkey")
@@ -361,7 +361,7 @@ object ReferenceQueries {
    * fact; this is the gate that stops the flip up front. */
   private def qSchemaGuard(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val root = s"${graft.Scratch.root(s)}/schguard_${sinkSeq.incrementAndGet()}"
+    val root = graft.Scratch.callDir(s, "schguard")
     val base = t(s, dir, "customer").groupBy("c_nationkey")
       .agg(count(lit(1)).as("n_cust"),
         sum(cents(col("c_acctbal"))).as("bal_cents"))
@@ -391,7 +391,7 @@ object ReferenceQueries {
    * metadata (no data read), oldest-first so a crash leaves a
    * contiguous suffix. */
   private def qSnapshotVacuum(s: SparkSession, dir: String): DataFrame = {
-    val root = s"${graft.Scratch.root(s)}/vac_${sinkSeq.incrementAndGet()}"
+    val root = graft.Scratch.callDir(s, "vac")
     def rollup(minBal: Double) = t(s, dir, "customer")
       .filter(col("c_acctbal") > minBal)
       .groupBy("c_nationkey")
@@ -421,7 +421,7 @@ object ReferenceQueries {
    * reads the head back through the link for a segment rollup the
    * oracle recomputes from source. */
   private def qLinkedPublish(s: SparkSession, dir: String): DataFrame = {
-    val root = s"${graft.Scratch.root(s)}/linked_${sinkSeq.incrementAndGet()}"
+    val root = graft.Scratch.callDir(s, "linked")
     val facts = t(s, dir, "orders").select(col("o_orderkey"), col("o_custkey"),
       cents(col("o_totalprice")).as("c"))
     val dims = t(s, dir, "customer").select(col("c_custkey"), col("c_mktsegment"))
@@ -449,7 +449,7 @@ object ReferenceQueries {
    * and report the emptied version. Pure namespace metadata — no
    * data read. */
   private def qFsck(s: SparkSession, dir: String): DataFrame = {
-    val root = s"${graft.Scratch.root(s)}/fsck_${sinkSeq.incrementAndGet()}"
+    val root = graft.Scratch.callDir(s, "fsck")
     val cust = t(s, dir, "customer").select("c_custkey", "c_nationkey")
     val nat = t(s, dir, "nation").select("n_nationkey", "n_name")
     graft.sinks.Snapshot.publish(s, root, Map("cust" -> cust))
@@ -483,7 +483,7 @@ object ReferenceQueries {
    * recomputed by DuckDB from source tables. */
   private def qFsckRepair(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val root = s"${graft.Scratch.root(s)}/fsck_repair_${sinkSeq.incrementAndGet()}"
+    val root = graft.Scratch.callDir(s, "fsck_repair")
     val cust = t(s, dir, "customer").select("c_custkey", "c_nationkey")
     val nat = t(s, dir, "nation").select("n_nationkey", "n_name")
     graft.sinks.Snapshot.publish(s, root, Map("cust" -> cust, "nat" -> nat))
@@ -532,9 +532,8 @@ object ReferenceQueries {
    * the oracle recomputes from source. */
   private def qFsckRestore(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val seq = sinkSeq.incrementAndGet()
-    val root = s"${graft.Scratch.root(s)}/fsck_restore_$seq"
-    val rep = s"${graft.Scratch.root(s)}/fsck_restore_rep_$seq"
+    val root = graft.Scratch.callDir(s, "fsck_restore")
+    val rep = graft.Scratch.callDir(s, "fsck_restore_rep")
     val cust = t(s, dir, "customer").select("c_custkey", "c_nationkey")
     val nat = t(s, dir, "nation").select("n_nationkey", "n_name")
     graft.sinks.Snapshot.publish(s, root, Map("cust" -> cust, "nat" -> nat))
@@ -580,7 +579,7 @@ object ReferenceQueries {
    * recomputes from source. */
   private def qRefGc(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val root = s"${graft.Scratch.root(s)}/ref_gc_${sinkSeq.incrementAndGet()}"
+    val root = graft.Scratch.callDir(s, "ref_gc")
     val nat = t(s, dir, "nation").select("n_nationkey", "n_name")
     graft.sinks.Snapshot.publish(s, root, Map("nat" -> nat))
     graft.sinks.Snapshot.tag(s, root, "prod", 1L)
@@ -621,7 +620,7 @@ object ReferenceQueries {
    * Physical bytes are codec-dependent and stay out of the oracle
    * (SnapshotSpec asserts them). */
   private def qStorageReport(s: SparkSession, dir: String): DataFrame = {
-    val root = s"${graft.Scratch.root(s)}/storage_${sinkSeq.incrementAndGet()}"
+    val root = graft.Scratch.callDir(s, "storage")
     val cust = t(s, dir, "customer").select("c_custkey", "c_nationkey")
     val nat = t(s, dir, "nation").select("n_nationkey", "n_name")
     graft.sinks.Snapshot.publish(s, root, Map("cust" -> cust, "nat" -> nat))
@@ -642,7 +641,7 @@ object ReferenceQueries {
    * counts), currency and tags resolved from the live manifest/tag
    * files — the oracle recomputes every count from the source. */
   private def qSnapshotCatalog(s: SparkSession, dir: String): DataFrame = {
-    val root = s"${graft.Scratch.root(s)}/cat_${sinkSeq.incrementAndGet()}"
+    val root = graft.Scratch.callDir(s, "cat")
     val cust = t(s, dir, "customer").select("c_custkey", "c_nationkey")
     val nat = t(s, dir, "nation").select("n_nationkey", "n_name")
     graft.sinks.Snapshot.publish(s, root, Map("cust" -> cust, "nat" -> nat))
@@ -661,7 +660,7 @@ object ReferenceQueries {
    * back from disk, not echoed) alongside the surviving row/balance
    * totals the oracle recomputes independently. */
   private def qEraseHistory(s: SparkSession, dir: String): DataFrame = {
-    val root = s"${graft.Scratch.root(s)}/erase_${sinkSeq.incrementAndGet()}"
+    val root = graft.Scratch.callDir(s, "erase")
     def cust(minBal: Double) = t(s, dir, "customer")
       .filter(col("c_acctbal") > minBal)
       .select(col("c_custkey"), col("c_nationkey"),
@@ -696,7 +695,7 @@ object ReferenceQueries {
    * carries the pinned version (the D18 lineage stamp rule); the
    * oracle recomputes the v1 derivation directly. */
   private def qSnapshotReadAll(s: SparkSession, dir: String): DataFrame = {
-    val root = s"${graft.Scratch.root(s)}/readall_${sinkSeq.incrementAndGet()}"
+    val root = graft.Scratch.callDir(s, "readall")
     def facts(mod: Long) = t(s, dir, "orders")
       .filter(col("o_orderkey") % mod === 0)
       .select(col("o_orderkey"), col("o_custkey"),
@@ -749,7 +748,7 @@ object ReferenceQueries {
    * overwritten by the next publish. */
   private def qPublishGate(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val root = s"${graft.Scratch.root(s)}/gate_${sinkSeq.incrementAndGet()}"
+    val root = graft.Scratch.callDir(s, "gate")
     val facts = t(s, dir, "orders").filter(col("o_orderkey") % 7 === 0)
       .select(col("o_orderkey"), col("o_custkey"),
         cents(col("o_totalprice")).as("rev_cents"))
@@ -949,7 +948,7 @@ object ReferenceQueries {
    * actual on-disk artifact, not the in-plan projection (the
    * q_cli_run write→read-back pattern). */
   private def qCliMask(s: SparkSession, dir: String): DataFrame = {
-    val out = s"${graft.Scratch.root(s)}/cli_mask_${sinkSeq.incrementAndGet()}"
+    val out = graft.Scratch.callDir(s, "cli_mask")
     graft.pipelines.Run.maskTable(s, dir, "customer",
       "c_custkey:keep,c_name:sha256,c_mktsegment:prefix:3", out): Unit
     s.read.parquet(out).orderBy("c_custkey")
@@ -968,7 +967,7 @@ object ReferenceQueries {
    * tables, so isolation BOTH ways and the promote flip are
    * value-checked, not smoke-counted. */
   private def qSnapshotBranch(s: SparkSession, dir: String): DataFrame = {
-    val root = s"${graft.Scratch.root(s)}/branch_${sinkSeq.incrementAndGet()}"
+    val root = graft.Scratch.callDir(s, "branch")
     val cust = t(s, dir, "customer").select("c_custkey", "c_mktsegment")
     val nat = t(s, dir, "nation").select("n_nationkey", "n_name")
     graft.sinks.Snapshot.publish(s, root, Map("cust" -> cust, "nat" -> nat))
@@ -1011,7 +1010,7 @@ object ReferenceQueries {
    * source tables. Conflict refusal, schema-gate refusal, and
    * nothing-to-merge refusal are SnapshotSpec's. */
   private def qBranchMerge(s: SparkSession, dir: String): DataFrame = {
-    val root = s"${graft.Scratch.root(s)}/branch_merge_${sinkSeq.incrementAndGet()}"
+    val root = graft.Scratch.callDir(s, "branch_merge")
     val cust = t(s, dir, "customer").select("c_custkey", "c_mktsegment")
     val nat = t(s, dir, "nation").select("n_nationkey", "n_name")
     val ord = t(s, dir, "orders").select("o_orderkey", "o_custkey")
@@ -1058,7 +1057,7 @@ object ReferenceQueries {
    * the copy report PLUS serve-side proof rows — counts read back
    * through the REPLICA's own manifest, tag, and copied links. */
   private def qReplicate(s: SparkSession, dir: String): DataFrame = {
-    val base = s"${graft.Scratch.root(s)}/replicate_${sinkSeq.incrementAndGet()}"
+    val base = graft.Scratch.callDir(s, "replicate")
     val (src, dst) = (s"$base/src", s"$base/dst")
     val cust = t(s, dir, "customer").select("c_custkey", "c_mktsegment")
     val nat = t(s, dir, "nation").select("n_nationkey", "n_name")
@@ -1091,7 +1090,7 @@ object ReferenceQueries {
    * source table. Conflict refusal (update/update and delete/update
    * races) is SnapshotSpec's. */
   private def qRowMerge(s: SparkSession, dir: String): DataFrame = {
-    val root = s"${graft.Scratch.root(s)}/row_merge_${sinkSeq.incrementAndGet()}"
+    val root = graft.Scratch.callDir(s, "row_merge")
     val baseT = t(s, dir, "customer").select(col("c_custkey").as("k"),
       col("c_mktsegment").as("seg"), cents(col("c_acctbal")).as("bal"))
     graft.sinks.Snapshot.publish(s, root, Map("accts" -> baseT))
@@ -1132,7 +1131,7 @@ object ReferenceQueries {
    * reaches was harmed. */
   private def qBranchGc(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val root = s"${graft.Scratch.root(s)}/branch_gc_${sinkSeq.incrementAndGet()}"
+    val root = graft.Scratch.callDir(s, "branch_gc")
     val cust = t(s, dir, "customer").select("c_custkey", "c_mktsegment")
     val nat = t(s, dir, "nation").select("n_nationkey", "n_name")
     graft.sinks.Snapshot.publish(s, root, Map("cust" -> cust, "nat" -> nat))
@@ -1170,7 +1169,7 @@ object ReferenceQueries {
    * bytes rule); the oracle is the fully-determined literal relation
    * the construction implies. */
   private def qSnapshotHistory(s: SparkSession, dir: String): DataFrame = {
-    val root = s"${graft.Scratch.root(s)}/history_${sinkSeq.incrementAndGet()}"
+    val root = graft.Scratch.callDir(s, "history")
     val cust = t(s, dir, "customer").select("c_custkey", "c_mktsegment")
     val nat = t(s, dir, "nation").select("n_nationkey", "n_name")
     graft.sinks.Snapshot.publish(s, root, Map("cust" -> cust, "nat" -> nat))
@@ -1206,7 +1205,7 @@ object ReferenceQueries {
    * the oracle (q_storage_report precedent); every row/table count is
    * recomputed by DuckDB from the source tables. */
   private def qCliStorage(s: SparkSession, dir: String): DataFrame = {
-    val root = s"${graft.Scratch.root(s)}/cli_storage_${sinkSeq.incrementAndGet()}"
+    val root = graft.Scratch.callDir(s, "cli_storage")
     val denorm = Denorm.flatDenorm(s, dir, performLookups = true)
     val (v1, ok1, _) = graft.sinks.Snapshot.publishCompatible(
       s, root, Map("denorm" -> denorm))
@@ -1246,7 +1245,7 @@ object ReferenceQueries {
    * precisely this call (refusals smoke-verified: published
    * destination, checksum mismatch aborts before the flip). */
   private def qCliReplicate(s: SparkSession, dir: String): DataFrame = {
-    val base = s"${graft.Scratch.root(s)}/cli_repl_${sinkSeq.incrementAndGet()}"
+    val base = graft.Scratch.callDir(s, "cli_repl")
     val (src, dst) = (s"$base/src", s"$base/dst")
     val denorm = Denorm.flatDenorm(s, dir, performLookups = true)
       .filter(col("c_mktsegment") === "BUILDING")

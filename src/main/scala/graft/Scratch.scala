@@ -33,17 +33,21 @@ object Scratch {
   def configured(spark: SparkSession): Option[String] =
     spark.conf.getOption("spark.graft.scratchDir").filter(_.nonEmpty)
 
-  /** A per-call scratch subdirectory that is unique across CONCURRENT
-    * APPLICATIONS sharing one configured scratch root (r20, ADVICE
-    * r19: a per-JVM sequence number alone let two applications write
-    * and read the same `<op>_1` path, overwriting each other's live
-    * input mid-read) as well as across calls within one application.
+  private val callSeq = new java.util.concurrent.atomic.AtomicInteger(0)
+
+  /** A per-call scratch subdirectory `<op>_<applicationId>_<seq>`, the
+    * one naming rule for operator and query scratch. It is unique
+    * across CONCURRENT APPLICATIONS sharing one configured scratch root
+    * (r20, ADVICE r19: a per-JVM sequence number alone let two
+    * applications write and read the same `<op>_1` path, overwriting
+    * each other's live input mid-read) as well as across calls within
+    * one application, drawing `seq` from one JVM-wide counter.
     * Residue lifecycle is the class-doc rule: the local default root
     * dies with the JVM hook; a configured (durable) root keeps one
     * result-sized artifact per call for the deployment to expire: a
     * Graph call leaves only its result snapshot there. */
-  def callDir(spark: SparkSession, op: String, seq: Int): String =
-    s"${root(spark)}/${op}_${spark.sparkContext.applicationId}_$seq"
+  def callDir(spark: SparkSession, op: String): String =
+    s"${root(spark)}/${op}_${spark.sparkContext.applicationId}_${callSeq.incrementAndGet()}"
 
   /** The scratch root for this application (see class doc). Registers
     * the cleanup hook exactly once per local default root; configured

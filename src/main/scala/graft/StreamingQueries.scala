@@ -24,7 +24,7 @@ object StreamingQueries {
       .select(col("o_orderkey").as("k"), cents(col("o_totalprice")).as("v"))
       .as[(Long, Long)].collect().sortBy(_._1)
     val (b1, b2) = slice.splitAt(slice.length / 2)
-    val base = s"${graft.Scratch.root(s)}/append_${sinkSeq.incrementAndGet()}"
+    val base = graft.Scratch.callDir(s, "append")
     val (table, ckpt) = (s"$base/table", s"$base/ckpt")
     val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long)]
     val q = graft.streaming.EventStream.appendSink(in.toDF.toDF("k", "v"), table)
@@ -193,7 +193,7 @@ object StreamingQueries {
       graft.similarity.Ann.buildIvfIndex(emb, "vec_id", "embedding", 64, _))
     val probes = emb.filter(col("vec_id") < 3).select("vec_id", "embedding")
     val probeRows = probes.as[(Long, Array[Float])].collect().sortBy(_._1)
-    val base = s"${graft.Scratch.root(s)}/vss_${sinkSeq.incrementAndGet()}"
+    val base = graft.Scratch.callDir(s, "vss")
     val (out, ckpt) = (s"$base/out", s"$base/ckpt")
     val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Array[Float])]
     val q = graft.streaming.EventStream.vectorSearchSink(
@@ -243,11 +243,11 @@ object StreamingQueries {
     import s.implicits._
     implicit val sql: org.apache.spark.sql.SQLContext = s.sqlContext
     val emb = t(s, dir, "embeddings")
-    val idx = s"${graft.Scratch.root(s)}/stream_ann_del_${sinkSeq.incrementAndGet()}"
+    val idx = graft.Scratch.callDir(s, "stream_ann_del")
     graft.similarity.Ann.buildIvfIndex(emb, "vec_id", "embedding", 64, idx)
     val probes = emb.filter(col("vec_id") < 3).select("vec_id", "embedding")
     val probeRows = probes.as[(Long, Array[Float])].collect().sortBy(_._1)
-    val base = s"${graft.Scratch.root(s)}/sad_${sinkSeq.incrementAndGet()}"
+    val base = graft.Scratch.callDir(s, "sad")
     val (out, ckpt) = (s"$base/out", s"$base/ckpt")
     val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Array[Float])]
     val q = graft.streaming.EventStream.vectorSearchSink(
@@ -305,7 +305,7 @@ object StreamingQueries {
       case (k, v) if k % 2 == 0 => (k, v + 7L, "U")
       case (k, _) if k % 3 == 0 => (k, 0L, "D")
     }
-    val base = s"${graft.Scratch.root(s)}/cdc_sink_${sinkSeq.incrementAndGet()}"
+    val base = graft.Scratch.callDir(s, "cdc_sink")
     val (table, ckpt) = (s"$base/table", s"$base/ckpt")
     val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long, String)]
     val q = graft.streaming.EventStream.cdcSink(
@@ -337,7 +337,7 @@ object StreamingQueries {
       .as[(Long, Long)].collect().sortBy(_._1)
     val batch1 = slice.toSeq
     val batch2 = slice.collect { case (k, v) if k % 2 == 0 => (k, v + 7L) }.toSeq
-    val base = s"${graft.Scratch.root(s)}/snap_sink_${sinkSeq.incrementAndGet()}"
+    val base = graft.Scratch.callDir(s, "snap_sink")
     val (root, ckpt) = (s"$base/root", s"$base/ckpt")
     val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long)]
     val q = graft.streaming.EventStream.snapshotPublishSink(
@@ -376,7 +376,7 @@ object StreamingQueries {
       .as[(Long, Long)].collect().sortBy(_._1)
     val batch1 = slice.toSeq
     val batch2 = slice.collect { case (k, v) if k % 2 == 0 => (k, v + 7L) }.toSeq
-    val base = s"${graft.Scratch.root(s)}/branch_sink_${sinkSeq.incrementAndGet()}"
+    val base = graft.Scratch.callDir(s, "branch_sink")
     val (root, ckpt) = (s"$base/root", s"$base/ckpt")
     val dim = t(s, dir, "nation").select("n_nationkey", "n_name")
     graft.sinks.Snapshot.publish(s, root, Map("dim" -> dim))       // v1
@@ -423,7 +423,7 @@ object StreamingQueries {
       .select("doc_id", "rtext").as[(Long, String)].collect().sortBy(_._1)
     val b1 = slice.filter(_._1 % 2 == 0).toSeq
     val b2 = slice.filter(_._1 % 2 == 1).toSeq
-    val base = s"${graft.Scratch.root(s)}/qgate_${sinkSeq.incrementAndGet()}"
+    val base = graft.Scratch.callDir(s, "qgate")
     val (accept, reject, ckpt) = (s"$base/accept", s"$base/reject", s"$base/ckpt")
     val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)]
     val q = graft.streaming.EventStream.qualityGateSink(
@@ -463,7 +463,7 @@ object StreamingQueries {
     val mid = (slice.head._1 + slice.last._1) / 2
     val b1 = slice.filter(_._1 <= mid).toSeq
     val b2 = slice.filter(_._1 > mid).toSeq
-    val base = s"${graft.Scratch.root(s)}/ndgate_${sinkSeq.incrementAndGet()}"
+    val base = graft.Scratch.callDir(s, "ndgate")
     val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)]
     val q = graft.streaming.EventStream.nearDupGateSink(
         in.toDF.toDF("doc_id", "text"), "doc_id", "text",
@@ -505,7 +505,7 @@ object StreamingQueries {
       .as[(Long, Long)].collect().sortBy(_._1)
     val newer = slice.collect { case (k, v) if k % 3 == 0 => (k, v, 2L) }
     val older = slice.map { case (k, v) => (k, v + 5L, 1L) }
-    val base = s"${graft.Scratch.root(s)}/vup_sink_${sinkSeq.incrementAndGet()}"
+    val base = graft.Scratch.callDir(s, "vup_sink")
     val (table, ckpt) = (s"$base/table", s"$base/ckpt")
     val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long, Long)]
     val q = graft.streaming.EventStream.versionedUpsertSink(
@@ -531,7 +531,7 @@ object StreamingQueries {
   private def qSnapshotEnrichStream(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     implicit val sql: org.apache.spark.sql.SQLContext = s.sqlContext
-    val base = s"${graft.Scratch.root(s)}/snap_enrich_${sinkSeq.incrementAndGet()}"
+    val base = graft.Scratch.callDir(s, "snap_enrich")
     val (root, out, ckpt) = (s"$base/dim", s"$base/out", s"$base/ckpt")
     val nation = t(s, dir, "nation").select(col("n_nationkey"), col("n_name"))
     graft.sinks.Snapshot.publish(s, root, Map("nation" -> nation))
@@ -938,7 +938,7 @@ object StreamingQueries {
     val mid = (slice.head._1 + slice.last._1) / 2
     val b1 = slice.filter(_._1 <= mid).toSeq
     val b2 = slice.filter(_._1 > mid).toSeq
-    val base = s"${graft.Scratch.root(s)}/mroute_${sinkSeq.incrementAndGet()}"
+    val base = graft.Scratch.callDir(s, "mroute")
     val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Array[Byte])]
     val q = graft.streaming.EventStream.mediaRouteSink(
         in.toDF.toDF("media_id", "p"), "p", s"$base/out")

@@ -279,6 +279,32 @@ object HashOps {
     if (rn == 0.0) 0.0 else dot / math.sqrt(rn)
   }
 
+  /** The lowered word rule, the one tokenizer of [[langId]],
+   * [[simhashText]], [[wordShingleHashes]] and [[hashedLinearScore]]
+   * (replayed by `QuerySupport.sqlTokenCtes`): a token is a maximal run
+   * of bytes in [A-Za-z0-9_] or >= 0x80, ASCII letters lowered, hashed
+   * with FNV-1a. A cursor over the bytes: each `next()` steps to the
+   * following token and leaves its hash in `hash`. */
+  private final class LoweredWords(bytes: Array[Byte]) {
+    private var i = 0
+    var hash = 0L
+    def next(): Boolean = {
+      var h = 0xcbf29ce484222325L
+      var inTok = false
+      while (i < bytes.length) {
+        val c = bytes(i) & 0xff
+        i += 1
+        if ((c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z') ||
+            (c >= '0' && c <= '9') || c == '_' || c >= 0x80) {
+          h = (h ^ (if (c >= 'A' && c <= 'Z') c + 32 else c)) * 0x100000001b3L
+          inTok = true
+        } else if (inTok) { hash = h; return true }
+      }
+      hash = h
+      inTok
+    }
+  }
+
   private val LangZh = org.apache.spark.unsafe.types.UTF8String.fromString("zh")
   private val LangUnd = org.apache.spark.unsafe.types.UTF8String.fromString("und")
 
@@ -287,10 +313,10 @@ object HashOps {
    * dominant text → "zh"; otherwise the language (row of `markers`,
    * each a SORTED array of per-marker-word FNV hashes) with the most
    * marker-word hits, earliest row winning ties; no hits → "und".
-   * Tokens are lowered alnum/underscore/non-ASCII runs hashed exactly
-   * like [[wordShingleHashes]], so marker hashes are fnv64 of the
-   * (lowercase) marker words. Matching by 64-bit hash differs from
-   * string equality only on an FNV collision with a marker (~2⁻⁶⁴).
+   * Tokens follow the lowered word rule ([[LoweredWords]]), so marker
+   * hashes are fnv64 of the (lowercase) marker words. Matching by
+   * 64-bit hash differs from string equality only on an FNV collision
+   * with a marker (~2⁻⁶⁴).
    */
   def langId(s: org.apache.spark.unsafe.types.UTF8String,
       markers: Array[Array[Long]],
@@ -315,25 +341,13 @@ object HashOps {
     if (cjk * 2 > chars) return LangZh
     // pass 2: tokenize + marker-hash membership counting
     val hits = new Array[Int](markers.length)
-    var h = 0xcbf29ce484222325L
-    var inTok = false
-    i = 0
-    while (i <= bytes.length) {
-      val c = if (i < bytes.length) bytes(i) & 0xff else ' '
-      val isWord = (c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z') ||
-        (c >= '0' && c <= '9') || c == '_' || c >= 0x80
-      if (isWord) {
-        val lc = if (c >= 'A' && c <= 'Z') c + 32 else c
-        h ^= lc.toLong; h *= 0x100000001b3L; inTok = true
-      } else if (inTok) {
-        var l = 0
-        while (l < markers.length) {
-          if (java.util.Arrays.binarySearch(markers(l), h) >= 0) hits(l) += 1
-          l += 1
-        }
-        h = 0xcbf29ce484222325L; inTok = false
+    val words = new LoweredWords(bytes)
+    while (words.next()) {
+      var l = 0
+      while (l < markers.length) {
+        if (java.util.Arrays.binarySearch(markers(l), words.hash) >= 0) hits(l) += 1
+        l += 1
       }
-      i += 1
     }
     var best = -1; var bestHits = 0
     var l = 0
@@ -365,6 +379,26 @@ object HashOps {
     x ^ (x >>> 31)
   }
 
+  /** One SimHash token: each bit of `h` votes +1/-1 in `votes`. */
+  private def simhashVote(votes: Array[Int], h: Long): Unit = {
+    var b = 0
+    while (b < 64) {
+      if (((h >>> b) & 1L) == 1L) votes(b) += 1 else votes(b) -= 1
+      b += 1
+    }
+  }
+
+  /** The SimHash output: bit b is set iff its vote total is positive. */
+  private def simhashSign(votes: Array[Int]): Long = {
+    var out = 0L
+    var b = 0
+    while (b < 64) {
+      if (votes(b) > 0) out |= (1L << b)
+      b += 1
+    }
+    out
+  }
+
   /** SimHash-64 over an array of token strings: per-token 64-bit hash,
    * each bit votes +1/-1, sign of the vote is the output bit. */
   def simhash64(tokens: org.apache.spark.sql.catalyst.util.ArrayData): Long = {
@@ -372,112 +406,70 @@ object HashOps {
     val n = tokens.numElements()
     var i = 0
     while (i < n) {
-      if (!tokens.isNullAt(i)) {
-        val h = fnv64(tokens.getUTF8String(i))
-        var b = 0
-        while (b < 64) {
-          if (((h >>> b) & 1L) == 1L) votes(b) += 1 else votes(b) -= 1
-          b += 1
-        }
-      }
+      if (!tokens.isNullAt(i)) simhashVote(votes, fnv64(tokens.getUTF8String(i)))
       i += 1
     }
-    var out = 0L
-    var b = 0
-    while (b < 64) {
-      if (votes(b) > 0) out |= (1L << b)
-      b += 1
-    }
-    out
+    simhashSign(votes)
   }
 
-  /** SimHash-64 straight from raw text: tokenize (lowered alnum runs,
-   * as in wordShingleHashes), hash each token, bit-vote — one pass,
-   * no intermediate token array. */
+  /** SimHash-64 straight from raw text: tokenize (the lowered word
+   * rule), hash each token, bit-vote — one pass, no intermediate token
+   * array. */
   def simhashText(s: org.apache.spark.unsafe.types.UTF8String): Long = {
-    val bytes = s.getBytes
     val votes = new Array[Int](64)
-    var h = 0xcbf29ce484222325L
-    var inTok = false
-    var i = 0
-    while (i <= bytes.length) {
-      val c = if (i < bytes.length) bytes(i) & 0xff else ' '
-      val isWord = (c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z') ||
-        (c >= '0' && c <= '9') || c == '_' || c >= 0x80
-      if (isWord) {
-        val lc = if (c >= 'A' && c <= 'Z') c + 32 else c
-        h ^= lc.toLong; h *= 0x100000001b3L; inTok = true
-      } else if (inTok) {
-        var b = 0
-        while (b < 64) {
-          if (((h >>> b) & 1L) == 1L) votes(b) += 1 else votes(b) -= 1
-          b += 1
-        }
-        h = 0xcbf29ce484222325L; inTok = false
-      }
-      i += 1
-    }
-    var out = 0L
-    var b = 0
-    while (b < 64) {
-      if (votes(b) > 0) out |= (1L << b)
-      b += 1
-    }
-    out
+    val words = new LoweredWords(s.getBytes)
+    while (words.next()) simhashVote(votes, words.hash)
+    simhashSign(votes)
   }
 
   /**
    * Distinct sorted hashes of word n-gram shingles, computed in one
-   * pass over the raw text: ASCII-lowered alnum tokens → per-token
-   * FNV-1a → rolling n-gram combine. Replaces a
+   * pass over the raw text: the lowered word rule's per-token FNV-1a
+   * ([[LoweredWords]]) → rolling n-gram combine. Replaces a
    * split→filter→transform→concat_ws→xxhash64 tree of higher-order
    * functions, which Spark always evaluates interpreted (no codegen)
    * and re-evaluates per lambda reference — the difference is ~100×
    * on the dedup hot path.
    */
   def wordShingleHashes(s: org.apache.spark.unsafe.types.UTF8String, n: Int): Array[Long] = {
-    val bytes = s.getBytes
-    // per-token FNV-1a over lowered alnum runs (word = [A-Za-z0-9_]+)
-    val tokens = new scala.collection.mutable.ArrayBuffer[Long](64)
-    var h = 0xcbf29ce484222325L
-    var inTok = false
-    var i = 0
-    while (i <= bytes.length) {
-      val c = if (i < bytes.length) bytes(i) & 0xff else ' '
-      val isWord = (c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z') ||
-        (c >= '0' && c <= '9') || c == '_' || c >= 0x80
-      if (isWord) {
-        val lc = if (c >= 'A' && c <= 'Z') c + 32 else c
-        h ^= lc.toLong; h *= 0x100000001b3L; inTok = true
-      } else if (inTok) {
-        tokens += h; h = 0xcbf29ce484222325L; inTok = false
-      }
-      i += 1
+    var tokens = new Array[Long](64)
+    var m = 0
+    val words = new LoweredWords(s.getBytes)
+    while (words.next()) {
+      if (m == tokens.length) tokens = java.util.Arrays.copyOf(tokens, m * 2)
+      tokens(m) = words.hash
+      m += 1
     }
-    val m = tokens.length
     // A doc with fewer than n tokens (or none) yields the EMPTY set:
     // it participates in no near-dup relation, and candidate
     // generation (explode/banding) naturally skips it. This matches
     // the string-space oracles' range()-based shingling, and avoids
     // the skew bomb of every degenerate doc colliding on one
     // sentinel shingle at corpus scale (ADVICE r12).
-    val out =
-      if (m < n) Array.emptyLongArray
-      else {
-        val res = new Array[Long](m - n + 1)
-        var j = 0
-        while (j + n <= m) {
-          var acc = 0xcbf29ce484222325L
-          var k = 0
-          while (k < n) { acc = mix64(acc ^ tokens(j + k)); k += 1 }
-          res(j) = acc
-          j += 1
-        }
-        res
-      }
-    val set = scala.collection.mutable.TreeSet.empty[Long]
-    out.foreach(set += _)
-    set.toArray
+    if (m < n) return Array.emptyLongArray
+    val out = new Array[Long](m - n + 1)
+    var j = 0
+    while (j + n <= m) {
+      var acc = 0xcbf29ce484222325L
+      var k = 0
+      while (k < n) { acc = mix64(acc ^ tokens(j + k)); k += 1 }
+      out(j) = acc
+      j += 1
+    }
+    sortedDistinct(out)
+  }
+
+  /** `xs` sorted ascending with duplicates dropped — the set form of
+   * [[wordShingleHashes]] and [[winnow]]. Sorts `xs` in place. */
+  private def sortedDistinct(xs: Array[Long]): Array[Long] = {
+    java.util.Arrays.sort(xs)
+    var k = 0
+    var i = 0
+    while (i < xs.length) {
+      if (k == 0 || xs(i) != xs(k - 1)) { xs(k) = xs(i); k += 1 }
+      i += 1
+    }
+    if (k == xs.length) xs else java.util.Arrays.copyOf(xs, k)
   }
 
   /** MinHash signature over a shingle-hash set: min over re-keyed
@@ -503,13 +495,6 @@ object HashOps {
     sig
   }
 
-  /** Jaccard similarity of two sorted distinct long arrays (merge).
-   * Empty∪empty → 0.0, NOT the conventional 1.0 (ADVICE r12 family):
-   * a shingle-less document participates in no near-dup relation, so
-   * two degenerate docs must not count as duplicates — the brute-force
-   * exact-dedup queries apply this predicate to ALL pairs with no
-   * candidate-blocking step to shield them, and their string-space
-   * oracles emit no shingle rows for such docs. */
   /** URL canonicalization (C93, r17; completed r18) — the
    * normalization a crawl pipeline runs BEFORE any dedup: the same
    * page arrives as `HTTP://u@WWW.Site.COM:80/a//./b/../a/?b=2&a=1
@@ -956,6 +941,13 @@ object HashOps {
     new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
   }
 
+  /** Jaccard similarity of two sorted distinct long arrays (merge).
+   * Empty∪empty → 0.0, NOT the conventional 1.0 (ADVICE r12 family):
+   * a shingle-less document participates in no near-dup relation, so
+   * two degenerate docs must not count as duplicates — the brute-force
+   * exact-dedup queries apply this predicate to ALL pairs with no
+   * candidate-blocking step to shield them, and their string-space
+   * oracles emit no shingle rows for such docs. */
   def hashJaccard(a: org.apache.spark.sql.catalyst.util.ArrayData,
       b: org.apache.spark.sql.catalyst.util.ArrayData): Double = {
     val na = a.numElements(); val nb = b.numElements()
@@ -1073,153 +1065,91 @@ object HashOps {
     new org.apache.spark.sql.catalyst.util.GenericArrayData(rows.asInstanceOf[Array[Any]])
   }
 
-  /**
-   * Word n-grams of raw text in one pass: split on runs of the four
-   * literal whitespace bytes (space, tab, LF, CR — NOT \s, whose
-   * definition varies across regex engines), drop empties, join each
-   * n consecutive tokens with a single space. Texts shorter than n
-   * words yield no grams. Byte-preserving (no lowering), so the output
-   * is exactly reproducible against any engine that splits the same
-   * way. Replaces a split→filter→transform→slice→concat_ws tree of
-   * higher-order functions that Spark always evaluates interpreted.
-   */
-  def wordNgrams(s: org.apache.spark.unsafe.types.UTF8String, n: Int): Array[org.apache.spark.unsafe.types.UTF8String] = {
-    val bytes = s.getBytes
-    val starts = new scala.collection.mutable.ArrayBuffer[Int](64)
-    val ends = new scala.collection.mutable.ArrayBuffer[Int](64)
-    var i = 0
-    var tokStart = -1
-    while (i <= bytes.length) {
-      val ws = i == bytes.length || {
-        val c = bytes(i)
-        c == ' ' || c == '\t' || c == '\n' || c == '\r'
+  /** The whitespace span rule, the one tokenizer of [[wordNgrams]],
+   * [[wordChunksStrided]] and [[gopherTopNgramPpm]]: tokens are the
+   * maximal runs of bytes other than the four literal whitespace bytes
+   * (space, tab, LF, CR — NOT \s, whose definition varies across regex
+   * engines), kept byte for byte (no lowering), so any engine that
+   * splits on `[ \t\n\r]+` reproduces them exactly. Token t is
+   * bytes [bounds(2t), bounds(2t+1)). */
+  private final class WhitespaceSpans(s: org.apache.spark.unsafe.types.UTF8String) {
+    private val bytes = s.getBytes
+    private var bounds = new Array[Int](128) // start, end pairs
+    var count = 0
+    locally {
+      var i = 0
+      var tokStart = -1
+      while (i <= bytes.length) {
+        val ws = i == bytes.length || {
+          val c = bytes(i)
+          c == ' ' || c == '\t' || c == '\n' || c == '\r'
+        }
+        if (!ws && tokStart < 0) tokStart = i
+        else if (ws && tokStart >= 0) {
+          if (2 * count == bounds.length) bounds = java.util.Arrays.copyOf(bounds, 4 * count)
+          bounds(2 * count) = tokStart; bounds(2 * count + 1) = i
+          count += 1; tokStart = -1
+        }
+        i += 1
       }
-      if (!ws && tokStart < 0) tokStart = i
-      else if (ws && tokStart >= 0) { starts += tokStart; ends += i; tokStart = -1 }
-      i += 1
     }
-    val m = starts.length
-    if (m < n) return EmptyUtf8Array
-    val out = new Array[org.apache.spark.unsafe.types.UTF8String](m - n + 1)
-    var j = 0
-    while (j + n <= m) {
-      var len = n - 1
-      var k = 0
-      while (k < n) { len += ends(j + k) - starts(j + k); k += 1 }
-      val buf = new Array[Byte](len)
-      var off = 0
-      k = 0
-      while (k < n) {
-        if (k > 0) { buf(off) = ' '; off += 1 }
-        val tl = ends(j + k) - starts(j + k)
-        System.arraycopy(bytes, starts(j + k), buf, off, tl)
-        off += tl
-        k += 1
+
+    /** `n` windows of up to `window` tokens, window c starting at token
+     * c·stride and cut short at the last token; each window's tokens
+     * joined by single spaces. */
+    def windows(window: Int, stride: Int, n: Int): Array[org.apache.spark.unsafe.types.UTF8String] = {
+      if (n <= 0) return EmptyUtf8Array
+      val out = new Array[org.apache.spark.unsafe.types.UTF8String](n)
+      var c = 0
+      while (c < n) {
+        val lo = c * stride
+        val hi = math.min(lo + window, count)
+        var len = hi - lo - 1
+        var t = lo
+        while (t < hi) { len += bounds(2 * t + 1) - bounds(2 * t); t += 1 }
+        val buf = new Array[Byte](len)
+        var off = 0
+        t = lo
+        while (t < hi) {
+          if (t > lo) { buf(off) = ' '; off += 1 }
+          val tl = bounds(2 * t + 1) - bounds(2 * t)
+          System.arraycopy(bytes, bounds(2 * t), buf, off, tl)
+          off += tl
+          t += 1
+        }
+        out(c) = org.apache.spark.unsafe.types.UTF8String.fromBytes(buf)
+        c += 1
       }
-      out(j) = org.apache.spark.unsafe.types.UTF8String.fromBytes(buf)
-      j += 1
+      out
     }
-    out
+
+    /** Every full window of `n` consecutive tokens, at stride 1. */
+    def ngrams(n: Int): Array[org.apache.spark.unsafe.types.UTF8String] =
+      windows(n, 1, count - n + 1)
   }
 
   /**
-   * Non-overlapping k-word chunks (space-joined), INCLUDING the short
-   * tail chunk — the segment unit for segment-level dedup (the
-   * fixed-width stand-in for line/paragraph granularity on corpora
-   * without line structure). Same literal-whitespace tokenizer as
-   * wordNgrams, so a `regexp_split_to_array(text,'[ \t\n\r]+')` SQL
-   * mirror reproduces it exactly.
+   * Word n-grams of raw text in one pass: the whitespace span rule
+   * ([[WhitespaceSpans]]), each n consecutive tokens joined with a
+   * single space. Texts shorter than n words yield no grams. Replaces
+   * a split→filter→transform→slice→concat_ws tree of higher-order
+   * functions that Spark always evaluates interpreted.
    */
-  def wordChunks(s: org.apache.spark.unsafe.types.UTF8String, k: Int): Array[org.apache.spark.unsafe.types.UTF8String] = {
-    val bytes = s.getBytes
-    val starts = new scala.collection.mutable.ArrayBuffer[Int](64)
-    val ends = new scala.collection.mutable.ArrayBuffer[Int](64)
-    var i = 0
-    var tokStart = -1
-    while (i <= bytes.length) {
-      val ws = i == bytes.length || {
-        val c = bytes(i)
-        c == ' ' || c == '\t' || c == '\n' || c == '\r'
-      }
-      if (!ws && tokStart < 0) tokStart = i
-      else if (ws && tokStart >= 0) { starts += tokStart; ends += i; tokStart = -1 }
-      i += 1
-    }
-    val m = starts.length
-    if (m == 0) return EmptyUtf8Array
-    val nChunks = (m + k - 1) / k
-    val out = new Array[org.apache.spark.unsafe.types.UTF8String](nChunks)
-    var c = 0
-    while (c < nChunks) {
-      val lo = c * k
-      val hi = math.min(lo + k, m)
-      var len = hi - lo - 1
-      var j = lo
-      while (j < hi) { len += ends(j) - starts(j); j += 1 }
-      val buf = new Array[Byte](len)
-      var off = 0
-      j = lo
-      while (j < hi) {
-        if (j > lo) { buf(off) = ' '; off += 1 }
-        val tl = ends(j) - starts(j)
-        System.arraycopy(bytes, starts(j), buf, off, tl)
-        off += tl
-        j += 1
-      }
-      out(c) = org.apache.spark.unsafe.types.UTF8String.fromBytes(buf)
-      c += 1
-    }
-    out
-  }
+  def wordNgrams(s: org.apache.spark.unsafe.types.UTF8String, n: Int): Array[org.apache.spark.unsafe.types.UTF8String] =
+    new WhitespaceSpans(s).ngrams(n)
 
   /** Overlapping (strided) word windows: chunks of `window` tokens
    * starting every `stride` tokens (stride < window ⇒ consecutive
    * chunks share window−stride tokens — the context-window chunker
    * for training/RAG pipelines, where overlap preserves boundary
-   * context; contrast [[wordChunks]]' disjoint segments for dedup).
-   * Same whitespace tokenization as wordChunks; the short tail window
-   * is included. */
+   * context; stride == window gives the disjoint segments of
+   * segment-level dedup). The whitespace span rule, so a
+   * `regexp_split_to_array(text,'[ \t\n\r]+')` SQL mirror
+   * reproduces it exactly; the short tail window is included. */
   def wordChunksStrided(s: org.apache.spark.unsafe.types.UTF8String,
       window: Int, stride: Int): Array[org.apache.spark.unsafe.types.UTF8String] = {
-    val bytes = s.getBytes
-    val starts = new scala.collection.mutable.ArrayBuffer[Int](64)
-    val ends = new scala.collection.mutable.ArrayBuffer[Int](64)
-    var i = 0
-    var tokStart = -1
-    while (i <= bytes.length) {
-      val ws = i == bytes.length || {
-        val c = bytes(i)
-        c == ' ' || c == '\t' || c == '\n' || c == '\r'
-      }
-      if (!ws && tokStart < 0) tokStart = i
-      else if (ws && tokStart >= 0) { starts += tokStart; ends += i; tokStart = -1 }
-      i += 1
-    }
-    val m = starts.length
-    if (m == 0) return EmptyUtf8Array
-    val nChunks = (m + stride - 1) / stride
-    val out = new Array[org.apache.spark.unsafe.types.UTF8String](nChunks)
-    var c = 0
-    while (c < nChunks) {
-      val lo = c * stride
-      val hi = math.min(lo + window, m)
-      var len = hi - lo - 1
-      var j = lo
-      while (j < hi) { len += ends(j) - starts(j); j += 1 }
-      val buf = new Array[Byte](len)
-      var off = 0
-      j = lo
-      while (j < hi) {
-        if (j > lo) { buf(off) = ' '; off += 1 }
-        val tl = ends(j) - starts(j)
-        System.arraycopy(bytes, starts(j), buf, off, tl)
-        off += tl
-        j += 1
-      }
-      out(c) = org.apache.spark.unsafe.types.UTF8String.fromBytes(buf)
-      c += 1
-    }
-    out
+    val spans = new WhitespaceSpans(s)
+    spans.windows(window, stride, (spans.count + stride - 1) / stride)
   }
 
   /**
@@ -1247,16 +1177,16 @@ object HashOps {
       i += 1
     }
     if (n <= w) return Array(grams.min)
-    val picked = scala.collection.mutable.TreeSet.empty[Long]
+    val picked = new Array[Long](n - w + 1)
     i = 0
     while (i + w <= n) {
       var m = grams(i)
       var j = i + 1
       while (j < i + w) { if (grams(j) < m) m = grams(j); j += 1 }
-      picked += m
+      picked(i) = m
       i += 1
     }
-    picked.toArray
+    sortedDistinct(picked)
   }
 
   // Unicode corpus normalization kernel. One static per-row call so
@@ -1445,8 +1375,8 @@ object HashOps {
   /** Gopher-style "fraction of characters in the most frequent word
    * n-gram", for every n in [minN, maxN], as truncating ppm:
    * topCount(n) × charLen(topGram(n)) × 10⁶ / charLen(text). One
-   * pass per row — tokenize once (the wordNgrams literal-whitespace
-   * tokenizer, byte-preserving), then one hash-count per n over
+   * pass per row — tokenize once (the whitespace span rule,
+   * byte-preserving), then one hash-count per n over
    * sliding space-joined grams. Tie-break among equal counts =
    * lexicographically smallest gram (UTF8String binary order ==
    * SQL lexicographic for ASCII — the C4b corpus precondition).
@@ -1456,9 +1386,10 @@ object HashOps {
     val totalChars = s.numChars().toLong
     val out = new Array[Long](maxN - minN + 1)
     if (totalChars == 0L) return out
+    val spans = new WhitespaceSpans(s)
     var n = minN
     while (n <= maxN) {
-      val grams = wordNgrams(s, n)
+      val grams = spans.ngrams(n)
       if (grams.nonEmpty) {
         val counts = new java.util.HashMap[
           org.apache.spark.unsafe.types.UTF8String, Int](grams.length * 2)
@@ -1496,28 +1427,15 @@ object HashOps {
    * function stands in for a trained weight array (swapping trained
    * weights in = replacing this function with an array lookup; the
    * hashing, folding, and scoring plumbing is identical and is what
-   * the cross-engine oracle checks). Same lowered-alnum tokenizer as
-   * [[wordShingleHashes]], so the sqlTokenCtes replay applies. */
+   * the cross-engine oracle checks). Tokens follow the lowered word
+   * rule ([[LoweredWords]]), so the sqlTokenCtes replay applies. */
   def hashedLinearScore(s: org.apache.spark.unsafe.types.UTF8String,
       buckets: Long, seed: Long): Long = {
-    val bytes = s.getBytes
-    var h = 0xcbf29ce484222325L
-    var inTok = false
     var score = 0L
-    var i = 0
-    while (i <= bytes.length) {
-      val c = if (i < bytes.length) bytes(i) & 0xff else ' '
-      val isWord = (c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z') ||
-        (c >= '0' && c <= '9') || c == '_' || c >= 0x80
-      if (isWord) {
-        val lc = if (c >= 'A' && c <= 'Z') c + 32 else c
-        h ^= lc.toLong; h *= 0x100000001b3L; inTok = true
-      } else if (inTok) {
-        val b = java.lang.Long.remainderUnsigned(h, buckets)
-        score += java.lang.Long.remainderUnsigned(mix64(b ^ seed), 2001L) - 1000L
-        h = 0xcbf29ce484222325L; inTok = false
-      }
-      i += 1
+    val words = new LoweredWords(s.getBytes)
+    while (words.next()) {
+      val b = java.lang.Long.remainderUnsigned(words.hash, buckets)
+      score += java.lang.Long.remainderUnsigned(mix64(b ^ seed), 2001L) - 1000L
     }
     score
   }

@@ -237,21 +237,6 @@ case class HashedLinearScore(child: Expression, buckets: Long, seed: Long)
     copy(child = newChild)
 }
 
-/** word_chunks(text, k) → array<string> of NON-overlapping k-word
- * chunks (short tail included) — the segment unit for segment-level
- * dedup (see HashOps.wordChunks). */
-case class WordChunks(child: Expression, k: Int) extends UnaryExpression {
-  require(k >= 1, s"word_chunks requires k >= 1, got $k")
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override protected def nullSafeEval(input: Any): Any =
-    new GenericArrayData(HashOps.wordChunks(input.asInstanceOf[UTF8String], k))
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"new org.apache.spark.sql.catalyst.util.GenericArrayData(graft.functions.HashOps.wordChunks($c, $k))")
-  override protected def withNewChildInternal(newChild: Expression): WordChunks =
-    copy(child = newChild)
-}
-
 /** word_chunks_strided(text, window, stride) → array<string> of
  * OVERLAPPING window-word chunks every stride words (the
  * context-window chunker; see HashOps.wordChunksStrided). */
@@ -826,7 +811,7 @@ object expressions {
     column(GopherTopPpm(expression(c), minN, maxN))
   def hashedLinearScore(c: Column, buckets: Long, seed: Long): Column =
     column(HashedLinearScore(expression(c), buckets, seed))
-  def wordChunks(c: Column, k: Int): Column = column(WordChunks(expression(c), k))
+  def wordChunks(c: Column, k: Int): Column = wordChunksStrided(c, k, k)
   def wordChunksStrided(c: Column, window: Int, stride: Int): Column =
     column(WordChunksStrided(expression(c), window, stride))
   def sortStructArray(c: Column): Column = column(SortStructArray(expression(c)))

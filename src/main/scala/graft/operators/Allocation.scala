@@ -35,8 +35,6 @@ import org.apache.spark.sql.functions._
  */
 object Allocation {
 
-  private val callSeq = new java.util.concurrent.atomic.AtomicInteger(0)
-
   /**
    * `df`: one row per key with an integral `cap` column. `budget`: a
    * 1-row DataFrame with an integral `budget` column (derived from
@@ -120,7 +118,7 @@ object Allocation {
     // it once to scratch and let every pass read the snapshot; the
     // 100 TB upstream aggregate then runs exactly once.
     val sparkIn = df.sparkSession
-    val inPath = graft.Scratch.callDir(sparkIn, "prorata", callSeq.incrementAndGet())
+    val inPath = graft.Scratch.callDir(sparkIn, "prorata")
     df.select(col(key).cast("long").as("k"),
       col(weight).cast("long").as("w"))
       .write.mode("overwrite").parquet(inPath)

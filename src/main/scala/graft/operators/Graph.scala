@@ -52,8 +52,6 @@ import org.apache.spark.sql.functions._
  */
 object Graph {
 
-  private val callSeq = new java.util.concurrent.atomic.AtomicInteger(0)
-
   /** Rounds per chunk for the frontier loops — 3, the cycleStats
    * ratio: deep enough to cut the job count ~3×, shallow enough that
    * the chained per-chunk plan stays a few joins deep. Exchange reuse
@@ -67,7 +65,7 @@ object Graph {
   /** Run one call in its own scratch dir: the residue rule of the
    * object doc. */
   private def scoped(spark: SparkSession, op: String)(body: Scope => DataFrame): DataFrame = {
-    val dir = graft.Scratch.callDir(spark, op, callSeq.incrementAndGet())
+    val dir = graft.Scratch.callDir(spark, op)
     val scope = new Scope(spark, dir)
     try scope.snapshot(body(scope), "result")
     finally {

@@ -506,20 +506,6 @@ object Ann {
       .write.mode("append").partitionBy("cell").parquet(path)
   }
 
-  /**
-   * Small-file compaction for a cell-partitioned index (IVF or
-   * IVFADC): every [[appendToIvfIndex]]/[[appendToIvfPqIndex]] call
-   * accretes its own small files inside each touched `cell=N`
-   * partition, and after enough daily increments scan planning +
-   * open() overhead dominates the pruned-cell reads. Composes
-   * [[graft.sinks.TableSink.compact]] per cell directory — the
-   * quantizer sidecars (`_graft_*`) are untouched, already-compact
-   * cells no-op, and each cell rewrites independently with compact's
-   * crash-safe rename swap (a maintenance cycle can batch cells or
-   * resume after interruption; queries and appends stay valid because
-   * neither the layout nor any row changes). Returns the number of
-   * cell partitions examined.
-   */
   /** Tombstones of a [[buildIvfIndex]]/[[buildIvfPqIndex]] index, as
    * a one-column (`id`) frame — empty when none. The `_graft_`-
    * prefixed sidecar is invisible to the index's own partition
@@ -549,27 +535,6 @@ object Ann {
       col(idCol) === col("__tomb_id"), "left_anti")
   }
 
-  /**
-   * Delete vectors from a persisted IVF(-PQ) index (C7h, r18) — the
-   * erasure half of index maintenance: an A30 [[graft.sinks.Snapshot
-   * .eraseKeys]] of a document whose embedding is indexed would
-   * otherwise leave the subject RETRIEVABLE by similarity search.
-   * Deletes are TOMBSTONES: the ids append to a `_graft_tombstones`
-   * sidecar (one tiny write — the ingest-path cost a delete should
-   * have) and every indexed read ([[ivfTopKIndexed]],
-   * [[ivfPqTopKIndexed]]) masks them with a broadcast anti join, so
-   * a delete is effective the moment the sidecar lands, with zero
-   * data rewritten. Physical reclamation is [[vacuumIvfIndex]]'s
-   * job, triggered here automatically once tombstones exceed
-   * `compactThreshold` of the index's live rows (footer-only counts
-   * — no data read). Returns true when the call vacuumed.
-   *
-   * Semantics: tombstones mask BY ID — an id deleted and later
-   * re-appended stays masked until a vacuum clears the sidecar, so
-   * delete-then-reinsert workflows must vacuum between (re-ingesting
-   * an erased subject is itself the anti-pattern erasure exists to
-   * prevent). Ids absent from the index tombstone harmlessly.
-   */
   /** Exact row count of the parquet files under `dir` (one directory
    * level, or `dir/cell=N/...` when `cells` is set) read from file
    * FOOTERS driver-side — no Spark job. Equals `spark.read.parquet`
@@ -595,6 +560,27 @@ object Ann {
     }.sum
   }
 
+  /**
+   * Delete vectors from a persisted IVF(-PQ) index (C7h, r18) — the
+   * erasure half of index maintenance: an A30 [[graft.sinks.Snapshot
+   * .eraseKeys]] of a document whose embedding is indexed would
+   * otherwise leave the subject RETRIEVABLE by similarity search.
+   * Deletes are TOMBSTONES: the ids append to a `_graft_tombstones`
+   * sidecar (one tiny write — the ingest-path cost a delete should
+   * have) and every indexed read ([[ivfTopKIndexed]],
+   * [[ivfPqTopKIndexed]]) masks them with a broadcast anti join, so
+   * a delete is effective the moment the sidecar lands, with zero
+   * data rewritten. Physical reclamation is [[vacuumIvfIndex]]'s
+   * job, triggered here automatically once tombstones exceed
+   * `compactThreshold` of the index's live rows (footer-only counts
+   * — no data read). Returns true when the call vacuumed.
+   *
+   * Semantics: tombstones mask BY ID — an id deleted and later
+   * re-appended stays masked until a vacuum clears the sidecar, so
+   * delete-then-reinsert workflows must vacuum between (re-ingesting
+   * an erased subject is itself the anti-pattern erasure exists to
+   * prevent). Ids absent from the index tombstone harmlessly.
+   */
   def deleteFromIvfIndex(path: String, ids: DataFrame, idCol: String,
       compactThreshold: Double = 0.25): Boolean = {
     val spark = ids.sparkSession
@@ -718,6 +704,20 @@ object Ann {
     doomedCells.length
   }
 
+  /**
+   * Small-file compaction for a cell-partitioned index (IVF or
+   * IVFADC): every [[appendToIvfIndex]]/[[appendToIvfPqIndex]] call
+   * accretes its own small files inside each touched `cell=N`
+   * partition, and after enough daily increments scan planning +
+   * open() overhead dominates the pruned-cell reads. Composes
+   * [[graft.sinks.TableSink.compact]] per cell directory — the
+   * quantizer sidecars (`_graft_*`) are untouched, already-compact
+   * cells no-op, and each cell rewrites independently with compact's
+   * crash-safe rename swap (a maintenance cycle can batch cells or
+   * resume after interruption; queries and appends stay valid because
+   * neither the layout nor any row changes). Returns the number of
+   * cell partitions examined.
+   */
   def compactIvfIndex(spark: org.apache.spark.sql.SparkSession, path: String,
       targetFileBytes: Long = 128L * 1024 * 1024): Int = {
     val root = new org.apache.hadoop.fs.Path(path)

@@ -50,13 +50,13 @@ class PropertySpec extends AnyFunSuite {
       val t = randText()
       val toks = t.split(" ").filter(_.nonEmpty)
       val k = rnd.nextInt(8) + 1
-      val chunks = HashOps.wordChunks(UTF8String.fromString(t), k).map(_.toString)
+      val chunks = HashOps.wordChunksStrided(UTF8String.fromString(t), k, k).map(_.toString)
       assert(chunks.length == (toks.length + k - 1) / k)
       assert(chunks.mkString(" ") == toks.mkString(" "))
       chunks.dropRight(1).foreach(c => assert(c.split(" ").length == k))
       // messy whitespace normalizes to the same chunks
       val messy = "  " + t.replace(" ", " \t ") + "\n"
-      assert(HashOps.wordChunks(UTF8String.fromString(messy), k).map(_.toString).toSeq
+      assert(HashOps.wordChunksStrided(UTF8String.fromString(messy), k, k).map(_.toString).toSeq
         == chunks.toSeq)
     }
   }
@@ -94,9 +94,6 @@ class PropertySpec extends AnyFunSuite {
         val expect = toks.slice(i * st, math.min(i * st + w, toks.length))
         assert(c.split(" ").toSeq == expect.toSeq, s"chunk $i mismatch")
       }
-      // stride == window degenerates exactly to the disjoint chunker
-      assert(HashOps.wordChunksStrided(UTF8String.fromString(t), st, st).map(_.toString).toSeq
-        == HashOps.wordChunks(UTF8String.fromString(t), st).map(_.toString).toSeq)
     }
   }
 
@@ -239,6 +236,132 @@ class PropertySpec extends AnyFunSuite {
       // separators carry no weight
       assert(score("  ,. " + a + " ;;") == score(a))
     }
+  }
+
+  // Texts for the two token rules: mixed-case ASCII, digits, `_`,
+  // punctuation, 2/3/4-byte characters, and every whitespace byte either
+  // rule could be confused about (\f and \x0B are NOT span separators).
+  private object TokenTexts {
+    val r = new scala.util.Random(0x70CE5)
+    val pieces = Vector("The", "AND", "der", "Und", "le", "et", "Spark", "x_1",
+      "42", "café", "ÉTÉ", "中文", "中", "😀", "a😀b", "_", "MiXeD9", "é")
+    val seps = Vector(" ", "  ", "\t", "\n", "\r", "\r\n", "\f", "\u000B",
+      ", ", ".", "-", "!?", "'", "/", " \f ", "\u000B\t")
+    def text(): String = {
+      val sb = new StringBuilder
+      if (r.nextInt(4) == 0) sb ++= seps(r.nextInt(seps.size))
+      for (_ <- 0 until r.nextInt(30)) {
+        sb ++= pieces(r.nextInt(pieces.size))
+        sb ++= seps(r.nextInt(seps.size))
+      }
+      sb.toString
+    }
+    val all: Seq[String] = Seq("", " ", "\f", "a\fb c\u000Bd", "中文中文中文 the", "中文 中") ++ Seq.fill(300)(text())
+  }
+
+  private def fnv(bytes: Array[Byte]): Long =
+    bytes.foldLeft(0xcbf29ce484222325L)((h, b) => (h ^ (b & 0xffL)) * 0x100000001b3L)
+
+  /** Lowered word rule, test-local: split the UTF-8 bytes on non-word
+   * bytes (word = [A-Za-z0-9_] or >= 0x80), lower ASCII letters. */
+  private def loweredWords(t: String): Seq[Array[Byte]] = {
+    def word(b: Int) = Character.isLetterOrDigit(b) && b < 0x80 || b == '_' || b >= 0x80
+    val out = Seq.newBuilder[Array[Byte]]
+    var cur = Array.newBuilder[Byte]; var len = 0
+    for (b0 <- t.getBytes("UTF-8") :+ ' '.toByte) {
+      val b = b0 & 0xff
+      if (word(b)) { cur += (if (b >= 'A' && b <= 'Z') b + 32 else b).toByte; len += 1 }
+      else if (len > 0) { out += cur.result(); cur = Array.newBuilder[Byte]; len = 0 }
+    }
+    out.result()
+  }
+
+  test("lowered word rule: simhash, classifier, shingles and langId agree with one reference") {
+    val markers = Seq("en" -> Seq("the", "and"), "de" -> Seq("der", "und"), "fr" -> Seq("le", "et"))
+    val markerHashes = markers.map(_._2.map(w => fnv(w.getBytes("UTF-8"))).sorted.toArray).toArray
+    val codes = markers.map(m => UTF8String.fromString(m._1)).toArray
+    val (buckets, seed) = (65536L, 1442695040888963407L)
+    var zh, und, hit = 0
+    for (t <- TokenTexts.all) {
+      val s = UTF8String.fromString(t)
+      val toks = loweredWords(t)
+      val hs = toks.map(fnv)
+      val tokArr = new GenericArrayData(toks.map(b => UTF8String.fromBytes(b): Any).toArray)
+      assert(HashOps.simhashText(s) == HashOps.simhash64(tokArr), t)
+      val want = hs.map { h =>
+        java.lang.Long.remainderUnsigned(
+          HashOps.mix64(java.lang.Long.remainderUnsigned(h, buckets) ^ seed), 2001L) - 1000L
+      }.sum
+      assert(HashOps.hashedLinearScore(s, buckets, seed) == want, t)
+      for (n <- 1 to 4) {
+        val sh = if (hs.length < n) Seq.empty[Long]
+          else hs.sliding(n).map(_.foldLeft(0xcbf29ce484222325L)((a, h) => HashOps.mix64(a ^ h))).toSeq
+        assert(HashOps.wordShingleHashes(s, n).toSeq == sh.distinct.sorted, s"n=$n $t")
+      }
+      val cps = t.codePoints().toArray
+      val lang =
+        if (cps.count(c => c >= 0x4E00 && c <= 0x9FFF) * 2 > cps.length) "zh"
+        else {
+          val hits = markerHashes.map(m => hs.count(h => m.contains(h)))
+          if (hits.max == 0) "und" else markers(hits.indexOf(hits.max))._1
+        }
+      lang match { case "zh" => zh += 1; case "und" => und += 1; case _ => hit += 1 }
+      assert(HashOps.langId(s, markerHashes, codes).toString == lang, t)
+    }
+    assert(zh > 0 && und > 0 && hit > 0, s"zh=$zh und=$und hit=$hit")
+  }
+
+  test("whitespace span rule: n-grams, strided chunks and Gopher ppm agree with one reference") {
+    def strs(a: Array[UTF8String]) = a.map(_.toString).toSeq
+    assert(strs(HashOps.wordNgrams(UTF8String.fromString("a\fb c\u000Bd"), 1)) == Seq("a\fb", "c\u000Bd"))
+    for (t <- TokenTexts.all) {
+      val s = UTF8String.fromString(t)
+      val toks = t.split("[ \t\n\r]+").filter(_.nonEmpty).toSeq
+      val m = toks.length
+      for (n <- 1 to 4) {
+        val grams = if (m < n) Seq.empty else toks.sliding(n).map(_.mkString(" ")).toSeq
+        assert(strs(HashOps.wordNgrams(s, n)) == grams, s"n=$n $t")
+      }
+      for (st <- 1 to 4; w <- st to st + 3) {
+        val chunks = (0 until (m + st - 1) / st).map(i => toks.slice(i * st, i * st + w).mkString(" "))
+        assert(strs(HashOps.wordChunksStrided(s, w, st)) == chunks, s"w=$w st=$st $t")
+      }
+      val chars = t.codePointCount(0, t.length).toLong
+      val ppm = (1 to 4).map { n =>
+        if (m < n || chars == 0L) 0L
+        else {
+          val counts = toks.sliding(n).map(_.mkString(" ")).toSeq.groupBy(identity).map {
+            case (g, gs) => (g, gs.size) }
+          val best = counts.toSeq.sortWith { case ((ga, ca), (gb, cb)) =>
+            ca > cb || ca == cb &&
+              java.util.Arrays.compareUnsigned(ga.getBytes("UTF-8"), gb.getBytes("UTF-8")) < 0
+          }.head
+          best._2.toLong * best._1.codePointCount(0, best._1.length) * 1000000L / chars
+        }
+      }
+      assert(HashOps.gopherTopNgramPpm(s, 1, 4).toSeq == ppm, t)
+    }
+  }
+
+  test("src/main holds one copy of each token rule, in HashOps") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val root = Paths.get("src/main/scala")
+    val walk = Files.walk(root)
+    val files =
+      try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      finally walk.close()
+    assert(files.nonEmpty, s"sources not found under ${root.toAbsolutePath}")
+    val srcs = files.map(f =>
+      f.getFileName.toString -> new String(Files.readAllBytes(f), java.nio.charset.StandardCharsets.UTF_8))
+    def sites(rule: scala.util.matching.Regex) =
+      srcs.flatMap { case (name, src) => rule.findAllIn(src).map(_ => name) }
+    val wordByte = """(\w+)\s*==\s*'_'\s*\|\|\s*\1\s*>=\s*0x80""".r
+    val wsByte = """(\w+)\s*==\s*' '\s*\|\|\s*\1\s*==\s*'\\t'\s*\|\|\s*\1\s*==\s*'\\n'\s*\|\|\s*\1\s*==\s*'\\r'""".r
+    assert(sites(wordByte) == List("HashOps.scala"), s"lowered word rule at: ${sites(wordByte)}")
+    assert(sites(wsByte) == List("HashOps.scala"), s"whitespace span rule at: ${sites(wsByte)}")
+    val hashOps = srcs.collect { case ("HashOps.scala", src) => src }
+    assert(hashOps.length == 1 && !hashOps.head.contains("TreeSet"), "a TreeSet in HashOps")
   }
 
   test("luhnValid: appending the computed check digit always validates (C88)") {

@@ -11,7 +11,7 @@ class SegmentIndexSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def chunks(s: String, k: Int): Seq[String] =
-    HashOps.wordChunks(UTF8String.fromString(s), k).toSeq.map(_.toString)
+    HashOps.wordChunksStrided(UTF8String.fromString(s), k, k).toSeq.map(_.toString)
 
   test("wordChunks splits non-overlapping with short tail, whitespace-robust") {
     assert(chunks("a b c d e", 2) == Seq("a b", "c d", "e"))
@@ -29,8 +29,6 @@ class SegmentIndexSpec extends AnyFunSuite {
     // window 4, stride 2 over 7 tokens: starts at 0, 2, 4, 6
     assert(strided("a b c d e f g", 4, 2) ==
       Seq("a b c d", "c d e f", "e f g", "g"))
-    // stride == window degenerates to the disjoint chunker
-    assert(strided("a b c d e", 2, 2) == chunks("a b c d e", 2))
     assert(strided("  a \t b\nc  ", 2, 1) == Seq("a b", "b c", "c"))
     assert(strided("one", 8, 4) == Seq("one"))
     assert(strided("", 4, 2) == Seq.empty)
